@@ -232,10 +232,16 @@ object Bench {
     // again depends on a driver artifact keeping only a truncated stdout
     // tail (PERF_r15 had prev_bench_ok=false for exactly that reason).
     // Purely additive evidence: the stdout contract is unchanged.
-    val localOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(localOut),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
+    // The default resolves against the working directory of the (possibly
+    // forked) JVM, so the absolute path goes to stderr: the line is always
+    // findable, wherever it landed.
+    val localOut = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")).toAbsolutePath
+    try {
+      java.nio.file.Files.write(localOut,
+        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      System.err.println(s"[bench] bench line written to $localOut")
+    } catch { case e: Throwable =>
       System.err.println(s"[bench] local bench write to $localOut failed: $e")
     }
     spark.stop()

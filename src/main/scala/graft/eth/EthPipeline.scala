@@ -2,6 +2,7 @@ package graft.eth
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.eth.EthTransforms.{BinaryDialect, CsvDialect, Dialect}
 
@@ -54,6 +55,19 @@ object EthPipeline {
       col("contract_address").as("receipt_contract_address"),
       col("status").as("receipt_status"))
 
+  private def bucketsOf(lo: Long, hi: Long): IndexedSeq[Long] =
+    ((lo / 1000L) to (hi / 1000L)).toIndexedSeq
+
+  /** The rows of one bucketed sink table in `[lo, hi]`, read from the
+    * range's bucket directories only and with the table's known schema:
+    * no listing of the whole table and no schema-inference job. None when
+    * none of those buckets exists. */
+  private[graft] def readRange(spark: SparkSession, path: String,
+                               schema: StructType,
+                               lo: Long, hi: Long): Option[DataFrame] =
+    Sinks.readBuckets(spark, path, "block_id_group", bucketsOf(lo, hi), Some(schema))
+      .map(_.filter(col("block_id").between(lo, hi)))
+
   /** Ingest `[startBlock, endBlock]` into `sinkDir/<table>` as
     * bucket-partitioned parquet. Idempotent: re-running a range overwrites
     * its partitions with identical bytes. */
@@ -101,8 +115,7 @@ object EthPipeline {
       "trace" -> Seq("block_id", "trace_index"))
 
     // touched buckets are pure range arithmetic — no plan evaluation needed
-    val buckets = Some((startBlock / 1000L) to (endBlock / 1000L))
-      .map(_.toIndexedSeq)
+    val buckets = bucketsOf(startBlock, endBlock)
 
     // Write order matters for resume correctness: `transaction` first, then
     // validate J1 from the observation that write already paid for. On a
@@ -112,13 +125,14 @@ object EthPipeline {
     // bad rows.
     //
     // INVARIANT (J1 observation completeness): the Observation node sits
-    // below any filtering the sink applies, and CollectMetrics is a
-    // pushdown barrier — Catalyst does not push predicates through it — so
-    // even when upsertBucketedParquet's first action evaluates only the
-    // *overlap* slice, the metrics cover EVERY joined row. Locked by
-    // PipelineSpec "J1 observation covers non-overlap rows in a mid-bucket
-    // upsert re-ingest": a missing receipt planted in a non-overlap bucket
-    // must still raise.
+    // below everything the sink does with the batch, and CollectMetrics is
+    // a pushdown barrier — Catalyst does not push predicates through it.
+    // A mid-bucket upsert evaluates the batch exactly once, inside its
+    // single write (the batch ∪ the stored overlap buckets through one PK
+    // merge), so the metrics cover EVERY joined row, in the overlap buckets
+    // and outside them. Locked by PipelineSpec "J1 observation covers
+    // non-overlap rows in a mid-bucket upsert re-ingest": a missing receipt
+    // planted in a non-overlap bucket must still raise.
     val writeOrder = Seq("transaction", "block", "log", "trace")
     def writeAndCount(table: String): (String, Long) = {
       val df = formatted(table)
@@ -126,10 +140,10 @@ object EthPipeline {
       // already in that bucket (dynamic overwrite replaces whole bucket dirs)
       Sinks.upsertBucketedParquet(df, s"$sinkDir/$table",
         pkCols = sortKeys(table), sortCols = sortKeys(table),
-        newBuckets = buckets)
+        newBuckets = Some(buckets))
       if (table == "transaction") Enrich.assertNoMissingReceipts(j1Obs)
-      table -> spark.read.parquet(s"$sinkDir/$table")
-        .filter(col("block_id").between(startBlock, endBlock)).count()
+      table -> readRange(spark, s"$sinkDir/$table", df.schema, startBlock, endBlock)
+        .fold(0L)(_.count())
     }
     // `transaction` ALWAYS writes (and J1-validates) first — resume
     // correctness (comment above). The three remaining tables are
@@ -294,16 +308,20 @@ object EthPipeline {
                       source: SourceConf = SourceConf(),
                       dialect: Dialect = CsvDialect,
                       watermark: Option[Long] = None): Option[IngestReport] = {
-    // "sink absent" is decided by an explicit existence probe, NOT by
-    // swallowing read errors: a transient/permission/corrupt-footer failure
-    // must propagate — treating it as "empty sink" would silently restart
-    // ingest from block 0 (a full re-ingest at 100 TB scale).
-    val blockPath = new org.apache.hadoop.fs.Path(s"$sinkDir/block")
-    val fs = blockPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing =
-      if (fs.exists(blockPath)) Some(spark.read.parquet(s"$sinkDir/block"))
-      else None
-    val start = existing.flatMap(Ingest.maxIngestedBlock(_)).map(_ + 1).getOrElse(0L)
+    // "sink absent" is decided by an explicit existence probe (the bucket
+    // listing of an absent sink is empty), NOT by swallowing read errors: a
+    // transient/permission/corrupt-footer failure must propagate — treating
+    // it as "empty sink" would silently restart ingest from block 0 (a full
+    // re-ingest at 100 TB scale). Buckets are block ranges, so the max block
+    // lives in the highest bucket: the probe reads that one directory, and
+    // only a bucket holding no rows sends it on to the next one down.
+    val blockPath = s"$sinkDir/block"
+    val probeSchema = StructType(Seq(StructField("block_id", LongType)))
+    val start = Sinks.existingBuckets(spark, blockPath, "block_id_group").toSeq
+      .sorted(Ordering[Long].reverse).iterator
+      .flatMap(b => Sinks.readBuckets(spark, blockPath, "block_id_group", Seq(b),
+        Some(probeSchema)).flatMap(Ingest.maxIngestedBlock(_)))
+      .nextOption().map(_ + 1).getOrElse(0L)
     val end = watermark.fold(chainTip)(math.min(chainTip, _))
     if (end < start) None
     else Some(ingestRange(spark, sinkDir, start, end, source, dialect))

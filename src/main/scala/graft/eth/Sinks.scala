@@ -35,7 +35,16 @@ object Sinks {
   def writeBucketedParquetSorted(df: DataFrame, path: String,
                                  bucketCol: String,
                                  sortExprs: Seq[org.apache.spark.sql.Column]): Unit =
-    df.repartition(col(bucketCol))
+    writeClustered(df.repartition(col(bucketCol)), path, bucketCol, sortExprs)
+
+  /** The write recipe after its exchange: `clustered` is already
+    * hash-partitioned on `bucketCol` (one task per bucket), so only the
+    * clustering sort and the write remain. The upsert merge enters here
+    * with its window planted between the exchange and the sort. */
+  private def writeClustered(clustered: DataFrame, path: String,
+                             bucketCol: String,
+                             sortExprs: Seq[org.apache.spark.sql.Column]): Unit =
+    clustered
       .sortWithinPartitions((col(bucketCol) +: sortExprs).toIndexedSeq: _*)
       .write
       .mode("overwrite")
@@ -74,16 +83,22 @@ object Sinks {
     * wall (SCALE_r14 §2). `basePath` keeps the partition column in the
     * schema (it reads back as INT; callers cast, as with the whole-sink
     * read). Buckets absent on disk are skipped (a replay may name a
-    * bucket the crashed run never wrote); None when nothing exists. */
+    * bucket the crashed run never wrote); None when nothing exists.
+    *
+    * @param schema read with this schema instead of inferring one from a
+    *   footer (inference is a Spark job of its own). Columns the files
+    *   lack read back as null — the upsert reads a bucket written before
+    *   a schema evolution this way — and a given partition column takes
+    *   the schema's type instead of the inferred INT. */
   def readBuckets(spark: SparkSession, path: String, bucketCol: String,
                   buckets: Seq[Long],
-                  mergeSchema: Boolean = false): Option[DataFrame] = {
+                  schema: Option[StructType] = None): Option[DataFrame] = {
     val present = existingBuckets(spark, path, bucketCol)
     val dirs = buckets.distinct.filter(present).map(b => s"$path/$bucketCol=$b")
     if (sys.env.contains("GRAFT_TRACE_READS"))
       System.err.println(s"[readBuckets] $path asked=${buckets.distinct.size} present=${present.size} reading=${dirs.size}")
     if (dirs.isEmpty) None
-    else Some(spark.read.option("mergeSchema", mergeSchema.toString)
+    else Some(schema.foldLeft(spark.read)(_.schema(_))
       .option("basePath", path).parquet(dirs: _*))
   }
 
@@ -98,13 +113,17 @@ object Sinks {
     *
     * Cost model: `newBuckets` is pure arithmetic on the caller's range
     * (pass it to avoid an extra evaluation of `df`'s plan); the overlap with
-    * existing buckets comes from the sink's directory listing; only the
-    * overlap partitions (steady state: one boundary bucket) are read back,
-    * merged, and pinned with `localCheckpoint` to break lineage from the
-    * files being overwritten — the non-overlapping bulk of the batch streams
-    * straight through.
-    */
-  /** @param dropOldWhere optional predicate over STORED rows: matching
+    * existing buckets comes from the sink's directory listing. A batch that
+    * overlaps nothing is the plain bucketed write. Otherwise the write is
+    * ONE SQL execution that evaluates the batch once: batch ∪ the stored
+    * overlap buckets (steady state: one boundary bucket) go through the
+    * writer's own bucket exchange, the PK merge ([[mergeOverlap]]) rides
+    * the clustering sort, and the write follows. No pin is needed to break
+    * lineage from the files being overwritten: a dynamic overwrite stages
+    * its task output and swaps the bucket directories in at job commit,
+    * after every task has finished reading the old files.
+    *
+    * @param dropOldWhere optional predicate over STORED rows: matching
     *   rows in the overlap bucket(s) are dropped before the PK merge even
     *   if the incoming batch carries no colliding PK. The replay-scope
     *   eraser for writers whose row KEYS are state-dependent (a replayed
@@ -128,17 +147,18 @@ object Sinks {
                             sortCols: Seq[String] = Seq("block_id"),
                             newBuckets: Option[Seq[Long]] = None,
                             dropOldWhere: Option[Column] = None,
-                            dropOldKeys: Option[DataFrame] = None): Unit = {
-    upsertBucketedParquetReturning(df, path, pkCols, bucketCol, sortCols,
-      newBuckets, dropOldWhere, dropOldKeys)
-    ()
-  }
+                            dropOldKeys: Option[DataFrame] = None): Unit =
+    writeClustered(
+      mergeOverlap(df, path, pkCols, bucketCol, newBuckets, dropOldWhere, dropOldKeys)
+        .getOrElse(df.repartition(col(bucketCol))),
+      path, bucketCol, sortCols.map(col))
 
   /** [[upsertBucketedParquet]] that also RETURNS what it wrote:
     * (writtenFrame, writtenBuckets). The frame is exactly the write's
-    * input — checkpoint-backed on both sides (the caller's pinned batch
-    * and the merged-overlap localCheckpoint), so reading it AFTER the
-    * overwrite never touches the replaced files. The bucket list is the
+    * input — checkpoint-backed on both sides (the caller's pinned batch,
+    * or the localCheckpoint of the one merge expression when the batch
+    * overlaps stored buckets), so reading it AFTER the overwrite never
+    * touches the replaced files. The bucket list is the
     * distinct bucket values that actually received rows, captured by an
     * `observe` on the write action itself — zero extra jobs. Consumers
     * (the mutable-index maintainers, r15): the flag pass joins against
@@ -155,6 +175,43 @@ object Sinks {
                                      dropOldWhere: Option[Column] = None,
                                      dropOldKeys: Option[DataFrame] = None)
       : (DataFrame, IndexedSeq[Long]) = {
+    val merged = mergeOverlap(df, path, pkCols, bucketCol, newBuckets,
+      dropOldWhere, dropOldKeys).map(_.localCheckpoint(true))
+    val out = merged.getOrElse(df)
+    val obs = org.apache.spark.sql.Observation()
+    val observed = out.observe(obs, collect_set(col(bucketCol).cast("long")).as("__kbs"))
+    // the pinned merge is already clustered by its own exchange
+    writeClustered(if (merged.isDefined) observed else observed.repartition(col(bucketCol)),
+      path, bucketCol, sortCols.map(col))
+    val written = obs.get.get("__kbs") match {
+      case Some(s: scala.collection.Seq[_]) =>
+        s.map(_.asInstanceOf[Long]).toIndexedSeq
+      case _ =>
+        // a zero-row write runs zero tasks, so the CollectMetrics node
+        // never reports and the observation map comes back empty — fall
+        // back to one small job over the checkpoint-backed frame (rare:
+        // only all-erase / empty batches hit this)
+        out.select(col(bucketCol).cast("long")).distinct()
+          .collect().map(_.getLong(0)).toIndexedSeq
+    }
+    (out, written)
+  }
+
+  /** The upsert's merge, defined once for both entry points: incoming rows
+    * (`__pri` 1) ∪ the stored rows of the overlap buckets that survive the
+    * erasers (`__pri` 0), hash-clustered on `bucketCol` — the write
+    * recipe's own exchange — then one row per (bucket, PK), incoming first.
+    * Partitioning the window by the bucket as well as the PK lets it reuse
+    * that exchange, and with `sortCols` = `pkCols` its sort is the
+    * clustering sort too. None when the batch overlaps no stored bucket.
+    *
+    * The stored buckets are read with the batch's schema: a bucket written
+    * before a schema evolution reads the columns it lacks as null, with no
+    * schema-merge job. */
+  private def mergeOverlap(df: DataFrame, path: String, pkCols: Seq[String],
+                           bucketCol: String, newBuckets: Option[Seq[Long]],
+                           dropOldWhere: Option[Column],
+                           dropOldKeys: Option[DataFrame]): Option[DataFrame] = {
     val spark = df.sparkSession
     val incoming = newBuckets.getOrElse {
       // fallback: derive from the batch (one extra evaluation of df's plan).
@@ -171,61 +228,27 @@ object Sinks {
     }
     val overlap = existingBuckets(spark, path, bucketCol)
       .intersect(incoming.toSet).toIndexedSeq
-    val out: DataFrame = if (overlap.isEmpty) df else {
-      // null-safe: isin(...) is NULL for a null bucket, which would drop the
-      // row from BOTH branches — coalesce routes null-bucket rows through the
-      // non-overlap branch (and the fallback path above rejects them before
-      // they can clobber a stored null partition)
-      val inOverlap = coalesce(col(bucketCol).cast("long").isin(overlap: _*), lit(false))
-      // mergeSchema: an overlap bucket written before a schema evolution may
-      // lack columns the batch now carries — read the union schema and
-      // null-fill what no file has, so mid-bucket re-ingest survives the
-      // evolution instead of failing to resolve the new column. Scoped
-      // read ([[readBuckets]]): only the overlap dirs are listed — the
-      // overlap set came from existingBuckets, so get is total.
-      val oldRaw = readBuckets(spark, path, bucketCol, overlap,
-        mergeSchema = true).get.filter(inOverlap)
-      val aligned = oldRaw.select(df.columns.map { c =>
-        if (oldRaw.columns.contains(c)) col(c)
-        else lit(null).cast(df.schema(c).dataType).as(c)
-      }.toIndexedSeq: _*)
+    // scoped read: only the overlap dirs are listed; None exactly when the
+    // batch overlaps no stored bucket
+    readBuckets(spark, path, bucketCol, overlap, Some(df.schema)).map { stored =>
       // null-safe negation: a null predicate value must KEEP the row
       val afterPred = dropOldWhere
-        .map(p => aligned.filter(!coalesce(p, lit(false))))
-        .getOrElse(aligned)
+        .map(p => stored.filter(!coalesce(p, lit(false))))
+        .getOrElse(stored)
       val old = dropOldKeys
         .map(keys => afterPred.join(keys, keys.columns.toSeq, "left_anti"))
         .getOrElse(afterPred)
       // precedence: incoming rows win over stored rows on PK collision
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(pkCols.map(col).toIndexedSeq: _*)
+        .partitionBy((bucketCol +: pkCols).map(col).toIndexedSeq: _*)
         .orderBy(col("__pri").desc)
-      val mergedOverlap = df.filter(inOverlap).withColumn("__pri", lit(1))
+      df.withColumn("__pri", lit(1))
         .unionByName(old.withColumn("__pri", lit(0)))
+        .repartition(col(bucketCol))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .drop("__pri", "__rn")
-        // break lineage from the files we are about to overwrite; bounded:
-        // overlap buckets only
-        .localCheckpoint(true)
-      df.filter(!inOverlap).unionByName(mergedOverlap)
     }
-    val obs = org.apache.spark.sql.Observation()
-    writeBucketedParquet(
-      out.observe(obs, collect_set(col(bucketCol).cast("long")).as("__kbs")),
-      path, bucketCol, sortCols)
-    val written = obs.get.get("__kbs") match {
-      case Some(s: scala.collection.Seq[_]) =>
-        s.map(_.asInstanceOf[Long]).toIndexedSeq
-      case _ =>
-        // a zero-row write runs zero tasks, so the CollectMetrics node
-        // never reports and the observation map comes back empty — fall
-        // back to one small job over the checkpoint-backed frame (rare:
-        // only all-erase / empty batches hit this)
-        out.select(col(bucketCol).cast("long")).distinct()
-          .collect().map(_.getLong(0)).toIndexedSeq
-    }
-    (out, written)
   }
 
   /** General MERGE semantics over a keyed frame — matched-update /

@@ -641,8 +641,10 @@ object Graph {
     * Returns (node, hops) for every node within `maxHops` of a seed,
     * seeds included at hops 0. Scale shape: each round is one equi-join
     * shuffle on the node id plus one anti-join against the reached set
-    * (both key on the id); frontier and reached sets are pinned per
-    * round; no driver state. Hub fan-out is bounded by the real
+    * (both key on the id); each hop's newly reached frame is pinned once,
+    * and the reached set is the lazy union of those pinned per-hop frames
+    * (the returned frame re-reads that union on each action, never a
+    * re-pin of the growing set); no driver state. Hub fan-out is bounded by the real
     * out-degree — the analyst caps it upstream (cap/sample hub edges) if
     * exchanges must not explode the frontier. */
   def khopReach(edges: DataFrame, seeds: DataFrame, maxHops: Int = 3,

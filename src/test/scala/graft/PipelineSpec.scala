@@ -202,11 +202,13 @@ class PipelineSpec extends SparkSpec {
 
   test("J1 observation covers non-overlap rows in a mid-bucket upsert re-ingest") {
     // Locks the invariant EthPipeline.ingestRange relies on: the Observation
-    // attached by enrichTransactions must see EVERY joined row even when the
-    // first action inside upsertBucketedParquet is the localCheckpoint of the
-    // *filtered* overlap slice. If Catalyst ever started pushing the overlap
-    // filter below CollectMetrics, the missing receipt planted in the
-    // NON-overlap bucket would go unobserved and this test would fail.
+    // attached by enrichTransactions must see EVERY joined row when the
+    // batch only partly overlaps stored buckets, where upsertBucketedParquet
+    // merges the batch with the stored overlap inside its one write. If the
+    // sink ever evaluated only part of the batch below CollectMetrics (or
+    // Catalyst pushed a bucket filter through it), the missing receipt
+    // planted in the NON-overlap bucket would go unobserved and this test
+    // would fail.
     import spark.implicits._
     import graft.functions.ColumnFns
     val sink = Files.createTempDirectory("pipeline_j1obs").toString + "/tx"
@@ -249,5 +251,46 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$sink/block").count() == 751)
     assert(Ingest.maxIngestedBlock(
       spark.read.parquet(s"$sink/block")).contains(750L))
+  }
+
+  test("ingest read-back counts scan only the range's bucket dirs") {
+    val sink = Files.createTempDirectory("pipeline_readback").toString
+    val rep = EthPipeline.ingestRange(spark, sink, 0, 2099)
+    val path = s"$sink/block"
+    val schema = spark.read.parquet(path).schema
+    // the read-back of a later range [1500, 2099] touches buckets 1 and 2
+    // only — never the sink root, whose listing grows with the sink
+    val df = EthPipeline.readRange(spark, path, schema, 1500, 2099).get
+    val roots = df.queryExecution.analyzed.collect {
+      case org.apache.spark.sql.execution.datasources.LogicalRelationWithTable(
+          fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _) =>
+        fs.location.rootPaths.map(_.getName)
+    }.flatten
+    assert(roots.toSet == Set("block_id_group=1", "block_id_group=2"),
+      s"read-back roots must be the touched bucket dirs, got $roots")
+    assert(df.count() == 600)
+    // the report's counts are exactly the rows of the range on disk
+    assert(rep.rowCounts("block") == 2100)
+    assert(rep.rowCounts("transaction") == expectedTxs(0, 2099))
+    assert(EthPipeline.readRange(spark, path, schema, 5000, 5999).isEmpty)
+  }
+
+  test("resume position from the top bucket equals the whole-sink max + 1") {
+    import spark.implicits._
+    import graft.functions.ColumnFns
+    val sink = Files.createTempDirectory("pipeline_resume_top").toString
+    // four buckets, the top one (3) partially filled up to block 3456
+    val blocks = (0 to 3456).toDF("block_id")
+      .withColumn("block_id_group", ColumnFns.blockIdGroup(col("block_id")))
+    Sinks.writeBucketedParquet(blocks, s"$sink/block")
+    val wholeMax = Ingest.maxIngestedBlock(spark.read.parquet(s"$sink/block")).get
+    assert(wholeMax == 3456L)
+    val r = EthPipeline.resumeAndIngest(spark, sink, chainTip = wholeMax + 3)
+    assert(r.exists(rep => rep.startBlock == wholeMax + 1 && rep.endBlock == wholeMax + 3))
+    // a higher bucket directory that holds no rows is skipped: the probe
+    // falls back to the next bucket down
+    assert(new java.io.File(s"$sink/block/block_id_group=9").mkdirs())
+    val r2 = EthPipeline.resumeAndIngest(spark, sink, chainTip = wholeMax + 5)
+    assert(r2.exists(_.startBlock == wholeMax + 4))
   }
 }

@@ -99,6 +99,122 @@ class SinksSpec extends SparkSpec {
     assert(Sinks.readBuckets(spark, path, "kb", Seq(7L, 9L)).isEmpty)
   }
 
+  /** The SQL executions `body` runs, in order. Listener events arrive
+    * asynchronously but in posting order, so a marker action run before
+    * and after `body` brackets exactly its executions. */
+  private def executionsOf(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    def until(marker: QueryExecution): Seq[QueryExecution] = {
+      val out = Seq.newBuilder[QueryExecution]
+      var qe = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (qe != null && (qe ne marker)) {
+        out += qe
+        qe = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(qe != null, "marker execution never reported")
+      out.result()
+    }
+    def mark(): QueryExecution = {
+      val m = spark.range(1); m.collect(); m.queryExecution
+    }
+    spark.listenerManager.register(listener)
+    try {
+      until(mark())
+      body
+      until(mark())
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("mid-bucket upsert is one SQL execution: one exchange, one sort, no pin") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.{LogicalRDD, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val path = Files.createTempDirectory("sink_onepass").toString + "/t"
+    val v1 = (0L until 1500L).map(i => (i, (i / 1000).toInt, s"a$i"))
+      .toDF("block_id", "block_id_group", "v")
+    Sinks.writeBucketedParquet(v1, path)
+    // 1200..2499: bucket 1 overlaps the stored rows, bucket 2 is new
+    val batch = (1200L until 2500L).map(i => (i, (i / 1000).toInt, s"b$i"))
+      .toDF("block_id", "block_id_group", "v")
+    val execs = executionsOf {
+      Sinks.upsertBucketedParquet(batch, path, pkCols = Seq("block_id"),
+        newBuckets = Some(Seq(1L, 2L)))
+    }
+    assert(execs.size == 1, s"expected one SQL execution, got ${execs.size}")
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val plan: SparkPlan = execs.head.executedPlan
+    assert(helper.find(plan)(_.isInstanceOf[DataWritingCommandExec]).isDefined,
+      s"not the write:\n$plan")
+    val exchanges = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+    val sorts = helper.collect(plan) { case s: SortExec => s }
+    assert(exchanges.size == 1 && sorts.size == 1,
+      s"expected one exchange and one sort:\n$plan")
+    val pinned = execs.head.optimizedPlan.collect { case r: LogicalRDD => r }
+    assert(pinned.isEmpty && !plan.toString.contains("localCheckpoint"),
+      s"the write must not read a pin:\n$plan")
+    // and the merge is right: stored rows below 1200 kept, 1200.. replaced
+    val back = spark.read.parquet(path).select("block_id", "v").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(back.size == 2500)
+    assert((0L until 1200L).forall(i => back(i) == s"a$i"))
+    assert((1200L until 2500L).forall(i => back(i) == s"b$i"))
+  }
+
+  test("self-read upsert: a batch derived from the overlap bucket it overwrites") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val path = Files.createTempDirectory("sink_selfread").toString + "/t"
+    val v1 = (0L until 1500L).map(i => (i, (i / 1000).toInt, s"a$i"))
+      .toDF("block_id", "block_id_group", "v")
+    Sinks.writeBucketedParquet(v1, path)
+    // read bucket 1 back, change every other row, upsert it into bucket 1:
+    // the batch and the stored overlap are the same files, all replaced at
+    // the write's commit — a missing file would fail the read
+    val changed = Sinks.readBuckets(spark, path, "block_id_group", Seq(1L)).get
+      .filter(col("block_id") % 2 === 0)
+      .withColumn("v", concat(col("v"), lit("!")))
+    Sinks.upsertBucketedParquet(changed, path, pkCols = Seq("block_id"),
+      newBuckets = Some(Seq(1L)))
+    val back = spark.read.parquet(path).select("block_id", "v").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(back.size == 1500)
+    assert((0L until 1500L).forall { i =>
+      back(i) == (if (i >= 1000 && i % 2 == 0) s"a$i!" else s"a$i")
+    })
+  }
+
+  test("replaying a mid-bucket upsert leaves identical bucket contents") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("sink_replay").toString + "/t"
+    val v1 = (0L until 1500L).map(i => (i, (i / 1000).toInt, s"a$i"))
+      .toDF("block_id", "block_id_group", "v")
+    Sinks.writeBucketedParquet(v1, path)
+    val batch = (1250L until 2250L).map(i => (i, (i / 1000).toInt, s"b$i"))
+      .toDF("block_id", "block_id_group", "v")
+    def contents(): Map[String, Seq[(Long, String)]] =
+      new java.io.File(path).listFiles().filter(_.getName.startsWith("block_id_group="))
+        .map(d => d.getName -> spark.read.parquet(d.getPath)
+          .select("block_id", "v").collect()
+          .map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted)
+        .toMap
+    Sinks.upsertBucketedParquet(batch, path, pkCols = Seq("block_id"),
+      newBuckets = Some(Seq(1L, 2L)))
+    val once = contents()
+    Sinks.upsertBucketedParquet(batch, path, pkCols = Seq("block_id"),
+      newBuckets = Some(Seq(1L, 2L)))
+    assert(contents() == once)
+    assert(once.keySet == Set("block_id_group=0", "block_id_group=1", "block_id_group=2"))
+    assert(once.values.map(_.size).sum == 2250)
+  }
+
   test("upsert rejects a batch carrying null buckets (fallback bucket discovery)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, when}
