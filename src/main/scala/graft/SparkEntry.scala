@@ -10,6 +10,24 @@ import graft.queries.Registry
 /** Driver contract — see SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
+  /** The engine's one session configuration, shared by Bench, Verify and
+    * the test suite: `local[cpus]` with as many shuffle partitions, UTC,
+    * no UI, log level WARN. */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // object-hash aggregates (bottom-k sketch, uint256, percentile) keep
+      // tiny per-group buffers; the 128-group fallback would sort whole
+      // pair streams for no memory benefit
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query (SURVEY §7.1 end-to-end slice): pseudo-transactions with
     * derived tx_hash_prefix + block_id_group, enriched with their "receipts"
     * via the J1 broadcast join, filtered to a pruned block range. */

@@ -68,22 +68,14 @@ object EthPipeline {
     Sinks.readBuckets(spark, path, "block_id_group", bucketsOf(lo, hi), Some(schema))
       .map(_.filter(col("block_id").between(lo, hi)))
 
-  /** Ingest `[startBlock, endBlock]` into `sinkDir/<table>` as
-    * bucket-partitioned parquet. Idempotent: re-running a range overwrites
-    * its partitions with identical bytes. */
-  def ingestRange(spark: SparkSession, sinkDir: String,
-                  startBlock: Long, endBlock: Long,
-                  source: SourceConf = SourceConf(),
-                  dialect: Dialect = CsvDialect,
-                  overlapTailWrites: Boolean = true): IngestReport = {
-    require(endBlock >= startBlock, s"empty range [$startBlock, $endBlock]")
-
-    val blocks = readStream(spark, source, "block", startBlock, endBlock)
-    val txs = readStream(spark, source, "transaction", startBlock, endBlock)
-    val receipts = readStream(spark, source, "receipt", startBlock, endBlock)
-    val logs = readStream(spark, source, "log", startBlock, endBlock)
-    val traces = readStream(spark, source, "trace", startBlock, endBlock)
-
+  /** The four sink tables of `[lo, hi]` read from `source`, formatted in
+    * `dialect` and bucketed on `block_id_group`, with the J1 observation
+    * that the first evaluation of `transaction` fills. */
+  private def formattedBatch(spark: SparkSession, source: SourceConf,
+                             lo: Long, hi: Long, dialect: Dialect)
+      : (Map[String, DataFrame], org.apache.spark.sql.Observation) = {
+    def stream(name: String) = readStream(spark, source, name, lo, hi)
+    val blocks = stream("block")
     // J1 on the RAW hex hashes (both sides string — encoding to binary
     // happens in the formatter afterwards, so the join key never mixes
     // representations), single-pass contract validation via Observation.
@@ -91,22 +83,32 @@ object EthPipeline {
     val j1Obs = new org.apache.spark.sql.Observation()
     // receipts are deduped by PK upfront (replay-safe, T4) instead of the
     // eager duplicate scan inside enrichTransactions
-    val enrichedRaw = Enrich.withBlockTimestamp(
-      Enrich.enrichTransactions(txs,
-        receiptSide(receipts.drop("type")).dropDuplicates("transaction_hash"),
-        txHashCol = "hash", requireReceipt = false, missingObs = Some(j1Obs),
-        checkDuplicates = false),
-      blocks.select(col("number").as("block_number"), col("timestamp")),
-      blockIdCol = "block_number")
-    val enriched = EthTransforms.formatTransactions(enrichedRaw, dialect)
-
-    val formatted = Map(
+    val enriched = EthTransforms.formatTransactions(
+      Enrich.withBlockTimestamp(
+        Enrich.enrichTransactions(stream("transaction"),
+          receiptSide(stream("receipt").drop("type")).dropDuplicates("transaction_hash"),
+          txHashCol = "hash", requireReceipt = false, missingObs = Some(j1Obs),
+          checkDuplicates = false),
+        blocks.select(col("number").as("block_number"), col("timestamp")),
+        blockIdCol = "block_number"),
+      dialect)
+    (Map(
       "block" -> EthTransforms.formatBlocks(blocks, dialect),
-      "transaction" -> enriched
-        .withColumn("block_id_group",
-          graft.functions.ColumnFns.blockIdGroup(col("block_id"))),
-      "log" -> EthTransforms.formatLogs(logs, dialect),
-      "trace" -> EthTransforms.formatTraces(traces, dialect))
+      "transaction" -> enriched.withColumn("block_id_group",
+        graft.functions.ColumnFns.blockIdGroup(col("block_id"))),
+      "log" -> EthTransforms.formatLogs(stream("log"), dialect),
+      "trace" -> EthTransforms.formatTraces(stream("trace"), dialect)), j1Obs)
+  }
+
+  /** Ingest `[startBlock, endBlock]` into `sinkDir/<table>` as
+    * bucket-partitioned parquet. Idempotent: re-running a range overwrites
+    * its partitions with identical bytes. */
+  def ingestRange(spark: SparkSession, sinkDir: String,
+                  startBlock: Long, endBlock: Long,
+                  source: SourceConf = SourceConf(),
+                  dialect: Dialect = CsvDialect): IngestReport = {
+    require(endBlock >= startBlock, s"empty range [$startBlock, $endBlock]")
+    val (formatted, j1Obs) = formattedBatch(spark, source, startBlock, endBlock, dialect)
 
     val sortKeys = Map(
       "block" -> Seq("block_id"),
@@ -148,35 +150,29 @@ object EthPipeline {
     // `transaction` ALWAYS writes (and J1-validates) first — resume
     // correctness (comment above). The three remaining tables are
     // independent and COMMUTE (distinct sink dirs, per-write options, no
-    // session conf mutation); `overlapTailWrites` submits them from a
-    // small pool so each write's straggler tail back-fills with the next
-    // write's tasks and the three read-back counts overlap too (guide
-    // §2.6). Default ON since r16: the interleaved IngestOverlapProbe
-    // measured sequential-vs-overlap medians 3.53 -> 2.06 s on local[32],
-    // 2.62 -> 1.76 s on local[8], and 3.92 -> 2.84 s on
-    // local-cluster[2,8] (real multi-executor scheduling) — the r15
-    // flat reading (3.63 -> 3.56) overlapped only the writes, not the
-    // count read-backs, and ran un-interleaved on a drifting box.
-    // Failure ordering among the tail is unchanged in the way that
-    // matters: resume reads `block`'s max, and a tail write failing
-    // after `block` landed forces the same manual re-ingest whether the
-    // others ran before it sequentially or beside it concurrently.
+    // session conf mutation), so they are submitted from a small pool:
+    // each write's straggler tail back-fills with the next write's tasks
+    // and the three read-back counts overlap too (guide §2.6). Measured in
+    // r16 against running them one after another (interleaved medians,
+    // OPTIMIZATION_r16.md §7): 3.53 -> 2.06 s on local[32], 2.62 -> 1.76 s
+    // on local[8], 3.92 -> 2.84 s on local-cluster[2,8].
+    // Failure ordering among the tail does not matter for resume: it
+    // reads `block`'s max, and a tail write failing after `block` landed
+    // forces the same manual re-ingest whether the others ran before it
+    // or beside it.
     val counts = (writeAndCount(writeOrder.head) +: {
       val tail = writeOrder.tail
-      if (!overlapTailWrites) tail.map(writeAndCount)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(tail.size)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val fs = tail.map(t => scala.concurrent.Future(writeAndCount(t)))
-          val inf = scala.concurrent.duration.Duration.Inf
-          // ready ALL before any rethrow: a failing write must not leave
-          // siblings running detached against the same sink
-          val rs = fs.map(f => scala.concurrent.Await.ready(f, inf).value.get)
-          rs.map(_.get)
-        } finally pool.shutdown()
-      }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(tail.size)
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      try {
+        val fs = tail.map(t => scala.concurrent.Future(writeAndCount(t)))
+        val inf = scala.concurrent.duration.Duration.Inf
+        // ready ALL before any rethrow: a failing write must not leave
+        // siblings running detached against the same sink
+        val rs = fs.map(f => scala.concurrent.Await.ready(f, inf).value.get)
+        rs.map(_.get)
+      } finally pool.shutdown()
     }).toMap
 
     // K3: persist the partitioning contract next to the data.
@@ -217,28 +213,8 @@ object EthPipeline {
     // over the rounded range, not the caller's possibly-unaligned start,
     // or blocks [roundedStart, startBlock) would be missing from a window
     // file that a later resume (last covered block + 1) never revisits.
-    val blocks = readStream(spark, source, "block", roundedStart, roundedEnd)
-    val txs = readStream(spark, source, "transaction", roundedStart, roundedEnd)
-    val receipts = readStream(spark, source, "receipt", roundedStart, roundedEnd)
-    val logs = readStream(spark, source, "log", roundedStart, roundedEnd)
-    val traces = readStream(spark, source, "trace", roundedStart, roundedEnd)
-
-    val j1Obs = new org.apache.spark.sql.Observation()
-    val enriched = EthTransforms.formatTransactions(
-      Enrich.withBlockTimestamp(
-        Enrich.enrichTransactions(txs,
-          receiptSide(receipts.drop("type")).dropDuplicates("transaction_hash"),
-          txHashCol = "hash", requireReceipt = false, missingObs = Some(j1Obs),
-          checkDuplicates = false),
-        blocks.select(col("number").as("block_number"), col("timestamp")),
-        blockIdCol = "block_number"),
-      EthTransforms.CsvDialect)
-
-    val formatted = Map(
-      "block" -> EthTransforms.formatBlocks(blocks, EthTransforms.CsvDialect),
-      "transaction" -> enriched,
-      "log" -> EthTransforms.formatLogs(logs, EthTransforms.CsvDialect),
-      "trace" -> EthTransforms.formatTraces(traces, EthTransforms.CsvDialect))
+    val (formatted, j1Obs) = formattedBatch(spark, source, roundedStart,
+      roundedEnd, EthTransforms.CsvDialect)
     val columnOrders = Map(
       "block" -> EthSchemas.csvBlockColumns,
       "transaction" -> EthSchemas.csvTransactionColumns,

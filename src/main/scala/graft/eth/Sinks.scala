@@ -95,8 +95,6 @@ object Sinks {
                   schema: Option[StructType] = None): Option[DataFrame] = {
     val present = existingBuckets(spark, path, bucketCol)
     val dirs = buckets.distinct.filter(present).map(b => s"$path/$bucketCol=$b")
-    if (sys.env.contains("GRAFT_TRACE_READS"))
-      System.err.println(s"[readBuckets] $path asked=${buckets.distinct.size} present=${present.size} reading=${dirs.size}")
     if (dirs.isEmpty) None
     else Some(schema.foldLeft(spark.read)(_.schema(_))
       .option("basePath", path).parquet(dirs: _*))

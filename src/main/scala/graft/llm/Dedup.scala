@@ -659,8 +659,9 @@ object Dedup {
     // NOTE (r16, measured): `sets` re-evaluates ~4x through this lazy DAG
     // (both sides of the dfreq join + both verify sides) and the ranking
     // window twice (the candidate self-join) — pinning either stage with
-    // localCheckpoint was A/B'd (PairedBench "jaccard_prefix_pins") and
-    // LOST: both pins +32%, prefixes-only +54% (medians, spreads <20%).
+    // localCheckpoint was A/B'd and LOST: both pins +32%, prefixes-only
+    // +54% (medians, spreads <20%; OPTIMIZATION_r16.md "Tried, measured,
+    // rejected").
     // The recomputations run concurrently inside one DAG while a pin
     // serializes a full materialization job before any consumer starts;
     // page cache absorbs the repeated scans. Kept lazy deliberately.

@@ -48,7 +48,7 @@ object GlobalRank {
     * forms below run — the plans that survive a low-cardinality group
     * key (or a global order) at 100 TB. Both branches return identical
     * rows; pass `smallInputBytes = 0` to pin the two-phase plan (the
-    * scale gates, PairedBench variants and PropertiesSpec do). The check
+    * scale gates and PropertiesSpec do). The check
     * costs no job: `optimizedPlan.stats` is pure Catalyst estimation,
     * and for an already-materialized localCheckpoint input the actual
     * block-manager footprint is read instead (driver-side metadata). */
@@ -578,9 +578,9 @@ object GlobalRank {
     // eager pin, house style (see globalRowNumber): the local window and
     // the boundary aggregate must see the SAME slice boundaries, and the
     // pin also keeps the range sample pass from re-running the upstream
-    // plan. Measured both ways at sf10 (PairedBench r13): the pinned
-    // form is faster (12.4 vs 14.0 s on graph_betweenness) because the
-    // checkpoint read outruns a second parquet scan + dedup.
+    // plan. Measured both ways at sf10 in r13, interleaved in one JVM:
+    // the pinned form is faster (12.4 vs 14.0 s on graph_betweenness)
+    // because the checkpoint read outruns a second parquet scan + dedup.
     // NOTE (r14 khop profile, SCALE_r14.md §1): the range sampler still
     // runs the UPSTREAM plan once more than strictly needed (sample pass
     // + exchange input both execute `df`). Pinning the input below the
@@ -641,8 +641,9 @@ object GlobalRank {
     // checkpoint the INPUT, not the exchange output: repartitionByRange
     // SAMPLES its child to pick range bounds, so an un-pinned input plan
     // (typically a corpus-sized collapse) would execute twice — once for
-    // the sample pass, once for the real exchange (measured 2.2 s → 1.5 s
-    // on agg_weighted_median at sf0.1, PairedBench r13). The two
+    // the sample pass, once for the real exchange (paired medians at sf0.1:
+    // 1.40 vs 2.51 s, PERF.md "Weighted median: input pinned before the
+    // range exchange"). The two
     // downstream reads of `ranged` (offsets aggregate, crossing-slice
     // join) each re-run the exchange over the pinned rows (column
     // pruning pushes different projections below it, so ReuseExchange

@@ -999,8 +999,6 @@ object Graph {
         }
         if (!converged) throw new IllegalStateException(
           s"scc color propagation did not converge in $maxPropIter iterations")
-        if (sys.env.contains("GRAFT_SCC_DEBUG"))
-          System.err.println(s"[scc] round=$round colorIters=$it live=$remaining")
 
         // 4. backward BFS from roots within the same color class — each
         // hop is ONE job: the frontier size rides the checkpoint's own

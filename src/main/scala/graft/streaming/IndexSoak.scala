@@ -3,30 +3,21 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Long-horizon + scale evidence harness for the mutable-corpus index
-  * maintainers (VERDICT r13 tasks 2 and 5). Two modes, one engine under
-  * test — `StreamingOps.maintainWinnowIndexAndFlag`, the heaviest
-  * consumer of `upsertMutableIndex` (set-shrink erase, wholesale
-  * replace, emptied-bucket deletion all reachable from text edits):
+/** Long-horizon + scale evidence for the mutable-corpus index
+  * maintainers (VERDICT r13 tasks 2 and 5): the soaks, the index seeds and
+  * the rebuild-equivalence checks behind `graft.Bench`'s `soak`,
+  * `mediaSoak`, `scale` and `mediaScale` modes. The text engine under test
+  * is `StreamingOps.maintainWinnowIndexAndFlag`, the heaviest consumer of
+  * `upsertMutableIndex` (set-shrink erase, wholesale replace,
+  * emptied-bucket deletion all reachable from text edits).
   *
-  *  - `scale <sfDir> <workDir> <keyBuckets> <nBatches> <batchSize>`:
-  *    seeds the index from the CORPUS documents table (batch path,
-  *    layout-identical to the maintainer's own writes), then drives
-  *    `nBatches` constant-size edit batches through the live maintainer
-  *    and reports per-batch wall + bytes read. Run at sf0.1/sf1/sf10
-  *    with keyBuckets scaled ∝ corpus (constant bucket SIZE — the 100 TB
-  *    deployment posture): per-batch cost must stay ~flat across
-  *    decades, proving the maintainer pays O(batch × bucket) per batch,
-  *    never O(corpus).
-  *
-  *  - `soak <workDir> <nBatches>`: from an empty index, a deterministic
-  *    schedule of ingests, edits, shrink-below-window erasures,
-  *    restores, new docs, and byte-identical replays; at the end the
-  *    maintained index and pk side map are compared row-exactly against
-  *    a from-scratch rebuild of the final expected corpus state, and
-  *    the report carries per-batch walls + data-file counts so creep
-  *    (file-count growth or per-batch slowdown) is visible. The
-  *    StreamingSpec mini-soak runs the same method.
+  * A soak starts from an empty index and runs a deterministic schedule of
+  * ingests, edits, shrink-below-window erasures, restores, new docs, and
+  * byte-identical replays; at the end the maintained index and pk side map
+  * are compared row-exactly against a from-scratch rebuild of the final
+  * expected corpus state, and the report carries per-batch walls +
+  * data-file counts so creep (file-count growth or per-batch slowdown) is
+  * visible. The StreamingSpec mini-soaks run the same methods.
   */
 object IndexSoak {
 
@@ -220,8 +211,19 @@ object IndexSoak {
         (v, v, v)
       })
 
-  private def mediaMime(video: Boolean) =
+  def mediaMime(video: Boolean): String =
     if (video) "video/x-msvideo" else "image/jpeg"
+
+  /** The image or video-frame maintainer over a `(media_id, payload, mime)`
+    * stream, writing under `workDir`. */
+  def mediaMaintainer(stream: DataFrame, workDir: String, keyBuckets: Int,
+                      video: Boolean): org.apache.spark.sql.streaming.StreamingQuery =
+    if (video) StreamingOps.maintainVideoFrameIndexAndFlag(stream,
+      s"$workDir/index", s"$workDir/flags", s"$workDir/ckpt",
+      keyBuckets = keyBuckets)
+    else StreamingOps.maintainImageIndexAndFlag(stream,
+      s"$workDir/index", s"$workDir/flags", s"$workDir/ckpt",
+      keyBuckets = keyBuckets)
 
   /** Expected index rows for a corpus state — MUST replicate the
     * maintainers' derivations (aHash / videoFrameHashes with the
@@ -307,14 +309,8 @@ object IndexSoak {
     var nextNewId = 1000000L
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Byte], String)]
-    val stream = input.toDF().toDF("media_id", "payload", "mime")
-    val q =
-      if (video) StreamingOps.maintainVideoFrameIndexAndFlag(stream,
-        s"$workDir/index", s"$workDir/flags", s"$workDir/ckpt",
-        keyBuckets = keyBuckets)
-      else StreamingOps.maintainImageIndexAndFlag(stream,
-        s"$workDir/index", s"$workDir/flags", s"$workDir/ckpt",
-        keyBuckets = keyBuckets)
+    val q = mediaMaintainer(input.toDF().toDF("media_id", "payload", "mime"),
+      workDir, keyBuckets, video)
     val walls = scala.collection.mutable.ArrayBuffer.empty[Double]
     var filesMid = 0
     var lastBatch: Seq[(Long, (Int, Int))] = Seq.empty
@@ -365,191 +361,5 @@ object IndexSoak {
       finalMedia, keyBuckets, video)
     SoakReport(walls.toSeq, idxDiff, mapDiff, filesMid, filesEnd,
       state.size.toLong, spark.read.parquet(s"$workDir/index").count())
-  }
-
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    args.toList match {
-      case "scale" :: sfDir :: workDir :: kb :: nb :: bs :: Nil =>
-        val keyBuckets = kb.toInt; val nBatches = nb.toInt; val batchSize = bs.toInt
-        implicit val sqlCtx = spark.sqlContext
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        val corpusN = docs.count()
-        val inBytes = new java.util.concurrent.atomic.AtomicLong()
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(
-                te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-              val m = te.taskMetrics
-              if (m != null) inBytes.addAndGet(m.inputMetrics.bytesRead)
-            }
-          })
-        val t0 = System.nanoTime()
-        // reuse an existing seeded index (same workDir, varying batch
-        // size): edits replace rows wholesale, so the index stays
-        // corpus-shaped across measurement runs
-        val already = new org.apache.hadoop.fs.Path(s"$workDir/index")
-        val fs0 = already.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs0.exists(already))
-          seedWinnowIndex(docs, s"$workDir/index", keyBuckets = keyBuckets)
-        fs0.delete(new org.apache.hadoop.fs.Path(s"$workDir/ckpt"), true)
-        val seedS = (System.nanoTime() - t0) / 1e9
-        // constant-size edit batches: doc ids stride the corpus so every
-        // batch touches distinct docs; text edits re-derive fingerprints
-        val baseIds = docs.select(col("doc_id")).orderBy(col("doc_id"))
-          .limit(nBatches * batchSize).collect().map(_.getLong(0))
-        val texts = docs.join(
-            baseIds.toSeq.toDF("doc_id"), Seq("doc_id"), "left_semi")
-          .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, String)]
-        val q = StreamingOps.maintainWinnowIndexAndFlag(
-          input.toDF().toDF("doc_id", "text"),
-          s"$workDir/index", s"$workDir/flags", s"$workDir/ckpt",
-          minShared = 2, keyBuckets = keyBuckets)
-        val walls = scala.collection.mutable.ArrayBuffer.empty[Double]
-        val bytes = scala.collection.mutable.ArrayBuffer.empty[Long]
-        try {
-          for (b <- 0 until nBatches) {
-            val ids = baseIds.slice(b * batchSize, (b + 1) * batchSize)
-            val batch = ids.map(id => (id, texts(id) + s" edited in pass $b"))
-            val b0 = inBytes.get(); val t1 = System.nanoTime()
-            input.addData(batch.toIndexedSeq: _*)
-            q.processAllAvailable()
-            walls += (System.nanoTime() - t1) / 1e9
-            Thread.sleep(200) // listener drain
-            bytes += inBytes.get() - b0
-          }
-        } finally q.stop()
-        def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
-        println(s"""{"mode":"scale","sf_dir":"$sfDir","corpus_docs":$corpusN,""" +
-          s""""key_buckets":$keyBuckets,"batch_size":$batchSize,"seed_s":$seedS,""" +
-          s""""batch_walls_s":[${walls.map(w => f"$w%.2f").mkString(",")}],""" +
-          s""""batch_read_mb":[${bytes.map(x => (x / 1e6).round).mkString(",")}],""" +
-          s""""median_wall_s":${f"${med(walls.toSeq)}%.2f"},""" +
-          s""""median_read_mb":${(bytes.sorted.apply(bytes.size / 2) / 1e6).round}}""")
-
-      // media scale gate: synthesize a JPEG/AVI corpus of `corpusMedia`
-      // records, batch-seed the image or video-frame index, then drive
-      // constant-size RE-ENCODE batches (changed pixels — real decodes in
-      // the batch path) through the live maintainer. Decade posture like
-      // the winnow gate: keyBuckets ∝ corpus, bucket size constant.
-      case "mediaScale" :: workDir :: kind :: kb :: nb :: bs :: cm :: Nil =>
-        val video = kind == "video"
-        require(video || kind == "image", s"kind must be image|video: $kind")
-        val keyBuckets = kb.toInt; val nBatches = nb.toInt
-        val batchSize = bs.toInt; val corpusMedia = cm.toInt
-        implicit val sqlCtx = spark.sqlContext
-        val inBytes = new java.util.concurrent.atomic.AtomicLong()
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(
-                te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-              val m = te.taskMetrics
-              if (m != null) inBytes.addAndGet(m.inputMetrics.bytesRead)
-            }
-          })
-        val t0 = System.nanoTime()
-        val already = new org.apache.hadoop.fs.Path(s"$workDir/index")
-        val fs0 = already.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs0.exists(already)) {
-          // distributed synthesis: payloads are a pure function of id
-          val corpus = spark.range(0, corpusMedia).mapPartitions(_.map(id =>
-            Multimodal.MediaRecord(id, mediaPayload(id, 0, video),
-              mediaMime(video))))
-          seedMediaIndex(corpus, s"$workDir/index", keyBuckets, video)
-        }
-        fs0.delete(new org.apache.hadoop.fs.Path(s"$workDir/ckpt"), true)
-        val seedS = (System.nanoTime() - t0) / 1e9
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Array[Byte], String)]
-        val stream = input.toDF().toDF("media_id", "payload", "mime")
-        val q =
-          if (video) StreamingOps.maintainVideoFrameIndexAndFlag(stream,
-            s"$workDir/index", s"$workDir/flags", s"$workDir/ckpt",
-            keyBuckets = keyBuckets)
-          else StreamingOps.maintainImageIndexAndFlag(stream,
-            s"$workDir/index", s"$workDir/flags", s"$workDir/ckpt",
-            keyBuckets = keyBuckets)
-        val walls = scala.collection.mutable.ArrayBuffer.empty[Double]
-        val bytes = scala.collection.mutable.ArrayBuffer.empty[Long]
-        try {
-          for (b <- 0 until nBatches) {
-            // stride the corpus so every batch re-encodes DISTINCT media
-            val ids = (0 until batchSize)
-              .map(j => ((b.toLong * batchSize + j) * 37) % corpusMedia)
-              .distinct
-            val batch = ids.map(id =>
-              (id, mediaPayload(id, b + 1, video), mediaMime(video)))
-            val b0 = inBytes.get(); val t1 = System.nanoTime()
-            input.addData(batch: _*)
-            q.processAllAvailable()
-            walls += (System.nanoTime() - t1) / 1e9
-            Thread.sleep(200) // listener drain
-            bytes += inBytes.get() - b0
-          }
-        } finally q.stop()
-        def medD(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
-        println(s"""{"mode":"mediaScale","kind":"$kind","corpus_media":$corpusMedia,""" +
-          s""""key_buckets":$keyBuckets,"batch_size":$batchSize,"seed_s":${f"$seedS%.1f"},""" +
-          s""""batch_walls_s":[${walls.map(w => f"$w%.2f").mkString(",")}],""" +
-          s""""batch_read_mb":[${bytes.map(x => (x / 1e6).round).mkString(",")}],""" +
-          s""""median_wall_s":${f"${medD(walls.toSeq)}%.2f"},""" +
-          s""""median_read_mb":${(bytes.sorted.apply(bytes.size / 2) / 1e6).round}}""")
-
-      // media soak: image or video-frame maintainer through the full
-      // mutation schedule, closing with rebuild-equivalence on BOTH the
-      // index and the pk side map
-      case "mediaSoak" :: workDir :: kind :: nb :: rest if rest.size <= 2 =>
-        val video = kind == "video"
-        require(video || kind == "image", s"kind must be image|video: $kind")
-        val r = runMediaSoak(spark, workDir, nb.toInt, video,
-          baseMedia = rest.headOption.map(_.toInt).getOrElse(120),
-          opMedia = rest.lift(1).map(_.toInt).getOrElse(10))
-        def medD(xs: Seq[Double]) = if (xs.isEmpty) 0.0 else xs.sorted.apply(xs.size / 2)
-        val headW = r.walls.take(10); val tailW = r.walls.takeRight(10)
-        println(s"""{"mode":"mediaSoak","kind":"$kind","batches":${r.walls.size},""" +
-          s""""idx_diff":${r.idxDiff},"map_diff":${r.mapDiff},""" +
-          s""""files_mid":${r.filesMid},"files_end":${r.filesEnd},""" +
-          s""""final_media":${r.finalDocsN},"final_index_rows":${r.finalIndexRows},""" +
-          s""""wall_med_first10_s":${f"${medD(headW)}%.2f"},""" +
-          s""""wall_med_last10_s":${f"${medD(tailW)}%.2f"},""" +
-          s""""walls_s":[${r.walls.map(w => f"$w%.2f").mkString(",")}]}""")
-        if (r.idxDiff != 0 || r.mapDiff != 0) sys.exit(1)
-
-      case "soak" :: workDir :: nb :: rest if rest.size <= 2 =>
-        val r = runSoak(spark, workDir, nb.toInt,
-          baseDocs = rest.headOption.map(_.toInt).getOrElse(300),
-          opDocs = rest.lift(1).map(_.toInt).getOrElse(20))
-        def med(xs: Seq[Double]) = if (xs.isEmpty) 0.0 else xs.sorted.apply(xs.size / 2)
-        val head = r.walls.take(10); val tail = r.walls.takeRight(10)
-        println(s"""{"mode":"soak","batches":${r.walls.size},""" +
-          s""""idx_diff":${r.idxDiff},"map_diff":${r.mapDiff},""" +
-          s""""files_mid":${r.filesMid},"files_end":${r.filesEnd},""" +
-          s""""final_docs":${r.finalDocsN},"final_index_rows":${r.finalIndexRows},""" +
-          s""""wall_med_first10_s":${f"${med(head)}%.2f"},""" +
-          s""""wall_med_last10_s":${f"${med(tail)}%.2f"},""" +
-          s""""walls_s":[${r.walls.map(w => f"$w%.2f").mkString(",")}]}""")
-        if (r.idxDiff != 0 || r.mapDiff != 0) sys.exit(1)
-
-      case other =>
-        System.err.println(s"usage: scale <sfDir> <workDir> <keyBuckets> " +
-          s"<nBatches> <batchSize> | soak <workDir> <nBatches> [base op] | " +
-          s"mediaScale <workDir> image|video <keyBuckets> <nBatches> " +
-          s"<batchSize> <corpusMedia> | " +
-          s"mediaSoak <workDir> image|video <nBatches> [base op]; got: $other")
-        sys.exit(2)
-    }
-    spark.stop()
   }
 }

@@ -293,4 +293,23 @@ class PipelineSpec extends SparkSpec {
     val r2 = EthPipeline.resumeAndIngest(spark, sink, chainTip = wholeMax + 5)
     assert(r2.exists(_.startBlock == wholeMax + 4))
   }
+
+  test("a failing tail write rethrows only after its sibling writes finished") {
+    val sink = Files.createTempDirectory("pipeline_tail_fail").toString
+    // a regular file where the `block` table's directory belongs: that
+    // write fails as soon as it starts, while `log` and `trace` beside it
+    // are still running
+    Files.writeString(java.nio.file.Paths.get(sink, "block"), "not a directory")
+    intercept[org.apache.hadoop.fs.ParentNotDirectoryException](
+      EthPipeline.ingestRange(spark, sink, 0, 1999))
+    // job-end events reach the status store through the async listener
+    // bus: flush it, so a job still listed as running really is running
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty,
+      "a sibling tail write is still running against the sink")
+    // `transaction` writes (and J1-validates) before the pooled tail starts
+    assert(spark.read.parquet(s"$sink/transaction").count() == expectedTxs(0, 1999))
+  }
 }

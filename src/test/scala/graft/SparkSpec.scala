@@ -6,16 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all specs (one JVM per `sbt test` run). */
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      // engine default: object-hash aggregates (bottom-k sketch, uint256,
-      // percentile) keep tiny per-group buffers; the 128-group fallback
-      // would sort whole pair streams for no memory benefit
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -868,7 +868,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("mutable-index mini-soak: mixed edit/erase/restore/add/replay batches end bit-identical to a from-scratch rebuild") {
-    // the spec-sized twin of `graft.streaming.IndexSoak soak` (the 100-
+    // the spec-sized twin of `graft.Bench soak` (the 100-
     // batch run is SCALE_r14 §3 evidence): 13 micro-batches cycle every
     // mutation class twice, then the maintained index AND the pk side
     // map must equal a fresh fingerprinting of the final corpus state
@@ -887,7 +887,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("media mini-soak: image and video-frame maintainers end bit-identical to a from-scratch rebuild") {
-    // the spec-sized twin of `IndexSoak mediaSoak` (the 100-batch runs
+    // the spec-sized twin of `graft.Bench mediaSoak` (the 100-batch runs
     // are SCALE_r15 evidence): both media maintainers pay REAL
     // JPEG/AVI decodes per batch through the full mutation schedule —
     // re-encode, undecodable erase, SHORTER video re-ingest (frame-tail
