@@ -2,7 +2,7 @@ package graft.eth
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.eth.EthTransforms.{BinaryDialect, CsvDialect, Dialect}
 
@@ -278,26 +278,13 @@ object EthPipeline {
   }
 
   /** Incremental run: resume from the sink's own max block (T2 — "the data
-    * is the checkpoint"), cap at `chainTip` or the completeness watermark.
+    * is the checkpoint"; [[Ingest.maxStoredBlock]]'s top-bucket probe), cap at `chainTip` or the completeness watermark.
     * Returns None if there is nothing to do. */
   def resumeAndIngest(spark: SparkSession, sinkDir: String, chainTip: Long,
                       source: SourceConf = SourceConf(),
                       dialect: Dialect = CsvDialect,
                       watermark: Option[Long] = None): Option[IngestReport] = {
-    // "sink absent" is decided by an explicit existence probe (the bucket
-    // listing of an absent sink is empty), NOT by swallowing read errors: a
-    // transient/permission/corrupt-footer failure must propagate — treating
-    // it as "empty sink" would silently restart ingest from block 0 (a full
-    // re-ingest at 100 TB scale). Buckets are block ranges, so the max block
-    // lives in the highest bucket: the probe reads that one directory, and
-    // only a bucket holding no rows sends it on to the next one down.
-    val blockPath = s"$sinkDir/block"
-    val probeSchema = StructType(Seq(StructField("block_id", LongType)))
-    val start = Sinks.existingBuckets(spark, blockPath, "block_id_group").toSeq
-      .sorted(Ordering[Long].reverse).iterator
-      .flatMap(b => Sinks.readBuckets(spark, blockPath, "block_id_group", Seq(b),
-        Some(probeSchema)).flatMap(Ingest.maxIngestedBlock(_)))
-      .nextOption().map(_ + 1).getOrElse(0L)
+    val start = Ingest.maxStoredBlock(spark, s"$sinkDir/block").map(_ + 1).getOrElse(0L)
     val end = watermark.fold(chainTip)(math.min(chainTip, _))
     if (end < start) None
     else Some(ingestRange(spark, sinkDir, start, end, source, dialect))

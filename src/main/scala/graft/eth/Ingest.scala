@@ -2,6 +2,7 @@ package graft.eth
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Incremental-ingest semantics (SURVEY §2.6): range planning, resume
   * ("the data is the checkpoint"), and the previous-day completeness
@@ -55,6 +56,26 @@ object Ingest {
     if (maxGroup.isNullAt(0)) None
     else maxIngestedBlock(
       sink.filter(col(bucketCol) === maxGroup.get(0)), blockIdCol)
+  }
+
+  /** A1 against a bucketed sink on disk: the highest stored block, or None
+    * for an absent or empty sink. "Absent" is decided by the bucket
+    * listing (an absent sink lists no buckets), NOT by swallowing read
+    * errors: a transient/permission/corrupt-footer failure must propagate
+    * — treating it as "empty sink" would silently restart ingest from
+    * block 0 (a full re-ingest at 100 TB scale). Buckets are block ranges,
+    * so the max block lives in the highest bucket: the probe reads that
+    * one directory (one job), and only a bucket holding no rows sends it
+    * on to the next one down. */
+  private[eth] def maxStoredBlock(spark: SparkSession, path: String,
+                                  blockIdCol: String = "block_id",
+                                  bucketCol: String = "block_id_group"): Option[Long] = {
+    val probeSchema = StructType(Seq(StructField(blockIdCol, LongType)))
+    Sinks.existingBuckets(spark, path, bucketCol).toSeq
+      .sorted(Ordering[Long].reverse).iterator
+      .flatMap(b => Sinks.readBuckets(spark, path, bucketCol, Seq(b), Some(probeSchema))
+        .flatMap(maxIngestedBlock(_, blockIdCol)))
+      .nextOption()
   }
 
   /** S7: resume position recovered from sink *file names* — the CSV path's
@@ -127,20 +148,22 @@ object Ingest {
     * `source` frame and, when they diverge, invalidates-and-rewrites the
     * sink from the fork point:
     *
-    *   1. tail check — the last `checkDepth` stored blocks (a
-    *      partition-pruned read of the tail bucket(s) only) are equi-joined
+    *   1. tail check — the last `checkDepth` stored blocks (a scoped
+    *      read of the tail bucket directories only) are equi-joined
     *      to the source on block id; the FORK POINT is the smallest checked
     *      block whose hash differs (or that the source no longer has).
     *      `checkDepth` must exceed the maximum credible reorg depth — the
     *      same finality assumption every chain ingester makes.
-    *   2. rewrite — affected buckets (fork bucket and above) are rebuilt as
-    *      stored-rows-below-fork + source-rows-from-fork and flushed through
-    *      [[Sinks.writeBucketedParquet]]'s dynamic partition overwrite (the
-    *      T4/T5 upsert machinery), so untouched buckets are never rewritten
-    *      and the fork bucket keeps its pre-fork rows. Stored buckets
-    *      ABOVE the last replacement bucket (a reorg to a shorter chain)
-    *      are orphaned wholesale and deleted at the directory level.
+    *   2. rewrite — the replacement (source rows from the fork on) is
+    *      upserted by block id into the stored buckets from the fork
+    *      bucket to the tip's, with the eraser `block_id >= fork`
+    *      ([[Sinks.upsertBucketedParquet]]'s `dropOldWhere`): the fork
+    *      bucket keeps its pre-fork rows, untouched buckets are never
+    *      rewritten, and a stored bucket ABOVE the last replacement bucket
+    *      (a reorg to a shorter chain) ends the merge empty and is deleted
+    *      by the same write.
     *
+    * The tip before and after the rewrite comes from [[maxStoredBlock]].
     * Everything driver-side is bounded metadata (tip, fork scalar, bucket
     * lists); hash comparison and the rewrite are DataFrame plans. Returns
     * `(resumeFrom, forkPoint)`: the next block to ingest and the fork
@@ -155,16 +178,14 @@ object Ingest {
                            checkDepth: Long = 64,
                            bucketSize: Long = 1000): (Long, Option[Long]) = {
     require(checkDepth > 0, "checkDepth must be positive")
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return (0L, None)
-    val stored = spark.read.parquet(path)
-    val tip = maxIngestedBlockPruned(stored, blockIdCol, bucketCol)
+    val tip = maxStoredBlock(spark, path, blockIdCol, bucketCol)
       .getOrElse(return (0L, None))
     val lo = math.max(0L, tip - checkDepth + 1)
-    // tail read prunes to the checked buckets via the partition column
-    val tail = stored
-      .filter(col(bucketCol) >= lo / bucketSize && col(blockIdCol) >= lo)
+    // the tip's bucket exists, so the scoped read of the checked buckets
+    // is never empty; it takes the source's types, as the rewrite does
+    val tail = Sinks.readBuckets(spark, path, bucketCol, lo / bucketSize to tip / bucketSize,
+        Some(StructType(Seq(source.schema(blockIdCol), source.schema(hashCol))))).get
+      .filter(col(blockIdCol) >= lo)
       .select(col(blockIdCol), col(hashCol).as("__stored_hash"))
     val srcTail = source.filter(col(blockIdCol).between(lo, tip))
       .select(col(blockIdCol), col(hashCol).as("__src_hash"))
@@ -174,37 +195,18 @@ object Ingest {
       .agg(min(col(blockIdCol)).cast("long")).collect()(0)
     if (forkRow.isNullAt(0)) return (tip + 1, None)
     val fork = forkRow.getLong(0)
-    val forkBucket = fork / bucketSize
     // replacement = authoritative rows from the fork point on (the caller
     // bounds `source`; anything it carries beyond the old tip is ingested
     // in the same pass), bucket derived if the source does not carry it
-    val srcCols = source.columns.toSet
     val replacement0 = source.filter(col(blockIdCol) >= fork)
     val replacement =
-      if (srcCols.contains(bucketCol)) replacement0
+      if (source.columns.contains(bucketCol)) replacement0
       else replacement0.withColumn(bucketCol, floor(col(blockIdCol) / bucketSize))
-    val keepBelowFork = stored
-      .filter(col(bucketCol) === forkBucket && col(blockIdCol) < fork)
-      .select(replacement.columns.map(col).toIndexedSeq: _*)
-    val merged = keepBelowFork.unionByName(replacement)
-      // the plan reads the very partitions the write replaces — pin the
-      // bounded merged set (affected buckets only) before overwriting
-      .localCheckpoint(true)
-    val mergedBuckets = merged.select(col(bucketCol).cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    Sinks.writeBucketedParquet(merged, path, bucketCol, sortCols)
-    // a reorg to a SHORTER chain leaves whole stored buckets above the
-    // last replacement bucket with no successor — dynamic overwrite never
-    // touches them, so they are deleted explicitly (directory-level,
-    // bounded by the reorg depth)
-    Sinks.existingBuckets(spark, path, bucketCol)
-      .filter(b => b >= forkBucket && !mergedBuckets.contains(b))
-      .foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, s"$bucketCol=$b"), true)
-      }
-    val newTip = maxIngestedBlockPruned(spark.read.parquet(path),
-      blockIdCol, bucketCol).getOrElse(-1L)
-    (newTip + 1, Some(fork))
+    Sinks.upsertBucketedParquet(replacement, path, pkCols = Seq(blockIdCol),
+      bucketCol = bucketCol, sortCols = sortCols,
+      newBuckets = Some(fork / bucketSize to tip / bucketSize),
+      dropOldWhere = Some(col(blockIdCol) >= fork))
+    (maxStoredBlock(spark, path, blockIdCol, bucketCol).getOrElse(-1L) + 1, Some(fork))
   }
 
   /** Ingest-completeness audit: the MISSING block ranges of a partially

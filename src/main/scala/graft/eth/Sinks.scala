@@ -110,16 +110,23 @@ object Sinks {
     * at block 1500 would silently drop blocks 1000-1499.
     *
     * Cost model: `newBuckets` is pure arithmetic on the caller's range
-    * (pass it to avoid an extra evaluation of `df`'s plan); the overlap with
-    * existing buckets comes from the sink's directory listing. A batch that
-    * overlaps nothing is the plain bucketed write. Otherwise the write is
-    * ONE SQL execution that evaluates the batch once: batch ∪ the stored
-    * overlap buckets (steady state: one boundary bucket) go through the
-    * writer's own bucket exchange, the PK merge ([[mergeOverlap]]) rides
-    * the clustering sort, and the write follows. No pin is needed to break
-    * lineage from the files being overwritten: a dynamic overwrite stages
-    * its task output and swaps the bucket directories in at job commit,
-    * after every task has finished reading the old files.
+    * (pass it to avoid an extra evaluation of `df`'s plan); only those
+    * bucket directories are listed and read. A batch that overlaps nothing
+    * is the plain bucketed write. Otherwise the write is ONE SQL execution
+    * that evaluates the batch once: batch ∪ the stored overlap buckets
+    * (steady state: one boundary bucket) go through the writer's own
+    * bucket exchange, the PK merge ([[mergeOverlap]]) rides the clustering
+    * sort, and the write follows. No pin is needed to break lineage from
+    * the files being overwritten: a dynamic overwrite stages its task
+    * output and swaps the bucket directories in at job commit, after every
+    * task has finished reading the old files.
+    *
+    * With an eraser (either parameter below) a stored overlap bucket can
+    * end the merge with no row at all; the write then goes through
+    * [[rewriteBuckets]], which deletes every such bucket, so no row the
+    * eraser matched can be read afterwards. Without one every stored row
+    * is kept or replaced, no bucket can empty, and the write carries no
+    * observation.
     *
     * @param dropOldWhere optional predicate over STORED rows: matching
     *   rows in the overlap bucket(s) are dropped before the PK merge even
@@ -129,6 +136,7 @@ object Sinks {
     *   see StreamingOps.maintainCentroids): pass the batch-scope
     *   predicate (e.g. batch_id === current) so the replay REPLACES the
     *   original batch's rows wholesale instead of merging beside them.
+    *   The reorg repair passes `block_id >= fork` ([[Ingest.resumeWithReorgCheck]]).
     * @param dropOldKeys the DISTRIBUTED form of the same eraser: stored
     *   overlap rows whose values on this frame's columns MATCH ANY of its
     *   rows are dropped before the merge (left-anti join — the PLANNER
@@ -145,26 +153,27 @@ object Sinks {
                             sortCols: Seq[String] = Seq("block_id"),
                             newBuckets: Option[Seq[Long]] = None,
                             dropOldWhere: Option[Column] = None,
-                            dropOldKeys: Option[DataFrame] = None): Unit =
-    writeClustered(
-      mergeOverlap(df, path, pkCols, bucketCol, newBuckets, dropOldWhere, dropOldKeys)
-        .getOrElse(df.repartition(col(bucketCol))),
-      path, bucketCol, sortCols.map(col))
+                            dropOldKeys: Option[DataFrame] = None): Unit = {
+    val sortExprs = sortCols.map(col)
+    mergeOverlap(df, path, pkCols, bucketCol, newBuckets, dropOldWhere, dropOldKeys) match {
+      case None => writeClustered(df.repartition(col(bucketCol)), path, bucketCol, sortExprs)
+      case Some((merged, _)) if dropOldWhere.isEmpty && dropOldKeys.isEmpty =>
+        writeClustered(merged, path, bucketCol, sortExprs)
+      case Some((merged, read)) => rewriteBuckets(merged, path, bucketCol, sortExprs, read)
+    }
+  }
 
   /** [[upsertBucketedParquet]] that also RETURNS what it wrote:
     * (writtenFrame, writtenBuckets). The frame is exactly the write's
     * input — checkpoint-backed on both sides (the caller's pinned batch,
     * or the localCheckpoint of the one merge expression when the batch
     * overlaps stored buckets), so reading it AFTER the overwrite never
-    * touches the replaced files. The bucket list is the
-    * distinct bucket values that actually received rows, captured by an
-    * `observe` on the write action itself — zero extra jobs. Consumers
-    * (the mutable-index maintainers, r15): the flag pass joins against
-    * the returned frame instead of re-listing + re-reading the buckets
-    * it just wrote, and emptied-bucket detection is `touched` minus
-    * `writtenBuckets` instead of a survivor re-scan — together those
-    * re-reads were ~half of the fixed per-batch maintenance cost at
-    * corpus-scaled bucket counts. */
+    * touches the replaced files. The bucket list is the distinct bucket
+    * values that actually received rows, observed on the write itself
+    * ([[rewriteBuckets]], which also deletes the stored buckets the
+    * erasers emptied) — zero extra jobs. Consumers (the mutable-index
+    * maintainers, r15): the flag pass joins against the returned frame
+    * instead of re-listing + re-reading the buckets it just wrote. */
   def upsertBucketedParquetReturning(df: DataFrame, path: String,
                                      pkCols: Seq[String],
                                      bucketCol: String = "block_id_group",
@@ -172,27 +181,43 @@ object Sinks {
                                      newBuckets: Option[Seq[Long]] = None,
                                      dropOldWhere: Option[Column] = None,
                                      dropOldKeys: Option[DataFrame] = None)
-      : (DataFrame, IndexedSeq[Long]) = {
-    val merged = mergeOverlap(df, path, pkCols, bucketCol, newBuckets,
-      dropOldWhere, dropOldKeys).map(_.localCheckpoint(true))
-    val out = merged.getOrElse(df)
-    val obs = org.apache.spark.sql.Observation()
-    val observed = out.observe(obs, collect_set(col(bucketCol).cast("long")).as("__kbs"))
-    // the pinned merge is already clustered by its own exchange
-    writeClustered(if (merged.isDefined) observed else observed.repartition(col(bucketCol)),
-      path, bucketCol, sortCols.map(col))
-    val written = obs.get.get("__kbs") match {
-      case Some(s: scala.collection.Seq[_]) =>
-        s.map(_.asInstanceOf[Long]).toIndexedSeq
-      case _ =>
-        // a zero-row write runs zero tasks, so the CollectMetrics node
-        // never reports and the observation map comes back empty — fall
-        // back to one small job over the checkpoint-backed frame (rare:
-        // only all-erase / empty batches hit this)
-        out.select(col(bucketCol).cast("long")).distinct()
-          .collect().map(_.getLong(0)).toIndexedSeq
+      : (DataFrame, IndexedSeq[Long]) =
+    mergeOverlap(df, path, pkCols, bucketCol, newBuckets, dropOldWhere, dropOldKeys) match {
+      case None =>
+        (df, rewriteBuckets(df.repartition(col(bucketCol)), path, bucketCol,
+          sortCols.map(col), read = Nil))
+      case Some((merged, read)) =>
+        // the pinned merge is already clustered by its own exchange
+        val out = merged.localCheckpoint(true)
+        (out, rewriteBuckets(out, path, bucketCol, sortCols.map(col), read))
     }
-    (out, written)
+
+  /** The one bucket rewrite that can leave a stored bucket empty. Writes
+    * `clustered` (already hash-partitioned on `bucketCol`) through
+    * [[writeClustered]], observing on that same write which buckets
+    * receive rows, then deletes every bucket of `read` — the buckets whose
+    * stored rows the rewrite read — that received none: a dynamic
+    * overwrite replaces only the buckets present in its output, so an
+    * emptied bucket would otherwise keep serving its old files. A name in
+    * `read` with no directory is a no-op. The deletes follow the commit,
+    * so a crash between the two leaves the stale bucket for the replay,
+    * which reads it, empties it and deletes it again. Returns the written
+    * buckets. */
+  private def rewriteBuckets(clustered: DataFrame, path: String,
+                             bucketCol: String, sortExprs: Seq[Column],
+                             read: Seq[Long]): IndexedSeq[Long] = {
+    val obs = org.apache.spark.sql.Observation()
+    writeClustered(
+      clustered.observe(obs, collect_set(col(bucketCol).cast("long")).as("__kbs")),
+      path, bucketCol, sortExprs)
+    // a write with no rows still reports the metric, as an empty set
+    val written = obs.get("__kbs").asInstanceOf[scala.collection.Seq[Long]].toIndexedSeq
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(clustered.sparkSession.sparkContext.hadoopConfiguration)
+    read.filterNot(written.toSet).foreach { b =>
+      fs.delete(new org.apache.hadoop.fs.Path(root, s"$bucketCol=$b"), true)
+    }
+    written
   }
 
   /** The upsert's merge, defined once for both entry points: incoming rows
@@ -201,7 +226,8 @@ object Sinks {
     * recipe's own exchange — then one row per (bucket, PK), incoming first.
     * Partitioning the window by the bucket as well as the PK lets it reuse
     * that exchange, and with `sortCols` = `pkCols` its sort is the
-    * clustering sort too. None when the batch overlaps no stored bucket.
+    * clustering sort too. Returns the merge with the batch's buckets (the
+    * ones read), or None when the batch overlaps no stored bucket.
     *
     * The stored buckets are read with the batch's schema: a bucket written
     * before a schema evolution reads the columns it lacks as null, with no
@@ -209,8 +235,8 @@ object Sinks {
   private def mergeOverlap(df: DataFrame, path: String, pkCols: Seq[String],
                            bucketCol: String, newBuckets: Option[Seq[Long]],
                            dropOldWhere: Option[Column],
-                           dropOldKeys: Option[DataFrame]): Option[DataFrame] = {
-    val spark = df.sparkSession
+                           dropOldKeys: Option[DataFrame])
+      : Option[(DataFrame, Seq[Long])] = {
     val incoming = newBuckets.getOrElse {
       // fallback: derive from the batch (one extra evaluation of df's plan).
       // A null bucket is NOT upsert-addressable (dynamic overwrite would
@@ -224,11 +250,9 @@ object Sinks {
           " not upsert-addressable (see scaladoc)")
       vals.map(_.getLong(0)).toIndexedSeq
     }
-    val overlap = existingBuckets(spark, path, bucketCol)
-      .intersect(incoming.toSet).toIndexedSeq
-    // scoped read: only the overlap dirs are listed; None exactly when the
-    // batch overlaps no stored bucket
-    readBuckets(spark, path, bucketCol, overlap, Some(df.schema)).map { stored =>
+    // scoped read: only the batch's bucket dirs are listed; None exactly
+    // when the batch overlaps no stored bucket
+    readBuckets(df.sparkSession, path, bucketCol, incoming, Some(df.schema)).map { stored =>
       // null-safe negation: a null predicate value must KEEP the row
       val afterPred = dropOldWhere
         .map(p => stored.filter(!coalesce(p, lit(false))))
@@ -240,12 +264,12 @@ object Sinks {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy((bucketCol +: pkCols).map(col).toIndexedSeq: _*)
         .orderBy(col("__pri").desc)
-      df.withColumn("__pri", lit(1))
+      (df.withColumn("__pri", lit(1))
         .unionByName(old.withColumn("__pri", lit(0)))
         .repartition(col(bucketCol))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
-        .drop("__pri", "__rn")
+        .drop("__pri", "__rn"), incoming)
     }
   }
 
@@ -312,53 +336,27 @@ object Sinks {
   /** K10: [[applyCdc]] against a bucketed-parquet sink — the bucket-
     * granular CDC apply. Touched buckets = the changeset's buckets (the
     * PK→bucket map must be stable, same contract as the upsert); only
-    * those partitions are read back, merged through the one-window CDC
-    * pass, and rewritten via dynamic partition overwrite — untouched
-    * buckets keep their files byte-for-byte. A bucket whose merge result
-    * is EMPTY (everything deleted) is rewritten empty-but-present via an
-    * explicit directory cleanup, not left stale. Replaying the same
-    * changeset is idempotent. */
+    * those bucket directories are read back (with the changeset's data
+    * schema), merged through the one-window CDC pass, and rewritten by
+    * [[rewriteBuckets]]'s dynamic partition overwrite — untouched buckets
+    * keep their files byte-for-byte, and a bucket whose merge result is
+    * EMPTY (everything deleted) is deleted after the write instead of
+    * left stale. Replaying the same changeset is idempotent. */
   def mergeCdcBucketedParquet(changes: DataFrame, path: String,
                               pkCols: Seq[String],
                               opCol: String = "op", seqCol: String = "seq",
                               bucketCol: String = "block_id_group",
                               sortCols: Seq[String] = Seq("block_id")): Unit = {
-    val spark = changes.sparkSession
     val touchedRows = changes.select(col(bucketCol).cast("long")).distinct().collect()
     require(!touchedRows.exists(_.isNullAt(0)),
       s"mergeCdcBucketedParquet: null $bucketCol in changeset — null buckets" +
         " are not merge-addressable")
     val touched = touchedRows.map(_.getLong(0)).toIndexedSeq
-    val overlap = existingBuckets(spark, path, bucketCol)
-      .intersect(touched.toSet).toIndexedSeq
-    val dataCols = changes.columns.filterNot(c => c == opCol || c == seqCol)
-      .toIndexedSeq
-    val base =
-      if (overlap.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(changes.schema.fields.filterNot(f =>
-            f.name == opCol || f.name == seqCol)))
-      else spark.read.parquet(path)
-        .filter(coalesce(col(bucketCol).cast("long").isin(overlap: _*), lit(false)))
-        .select(dataCols.map(col): _*)
-    val merged = applyCdc(base, changes, pkCols, opCol, seqCol)
-      // break lineage from the files about to be overwritten; bounded:
-      // touched buckets only
-      .localCheckpoint(true)
-    // dynamic overwrite only rewrites partitions PRESENT in the output —
-    // a fully-deleted bucket produces no rows, so its stale directory
-    // must be dropped explicitly
-    val live = merged.select(col(bucketCol).cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    val emptied = touched.filterNot(live)
-    if (emptied.nonEmpty) {
-      val hPath = new org.apache.hadoop.fs.Path(path)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(hPath, s"$bucketCol=$b"), true)
-      }
-    }
-    if (live.nonEmpty) writeBucketedParquet(merged, path, bucketCol, sortCols)
+    val data = changes.drop(opCol, seqCol)
+    val base = readBuckets(changes.sparkSession, path, bucketCol, touched, Some(data.schema))
+      .getOrElse(data.limit(0))
+    rewriteBuckets(applyCdc(base, changes, pkCols, opCol, seqCol).repartition(col(bucketCol)),
+      path, bucketCol, sortCols.map(col), touched)
   }
 
   /** Small-files compaction for a bucketed sink — the table maintenance a
@@ -369,11 +367,12 @@ object Sinks {
     * exceeds `maxFilesPerBucket`, coalescing each to a single clustered
     * file in the sink's sort order via the same dynamic-partition-
     * overwrite discipline as the upsert path (untouched buckets keep
-    * their files byte-for-byte). Idempotent: a second run finds nothing
-    * oversized and rewrites nothing. The directory listing is bounded
-    * driver-side metadata (#buckets, not #rows); the rewrite itself is
-    * one pruned scan + one partitioned write. Returns the compacted
-    * bucket values. */
+    * their files byte-for-byte; the oversized buckets are read and
+    * replaced in one write, no pin). Idempotent: a second run finds
+    * nothing oversized and rewrites nothing. The directory listing is
+    * bounded driver-side metadata (#buckets, not #rows); the rewrite
+    * itself is one scoped scan + one partitioned write. Returns the
+    * compacted bucket values. */
   def compactBuckets(spark: SparkSession, path: String,
                      bucketCol: String = "block_id_group",
                      sortCols: Seq[String] = Seq("block_id"),
@@ -391,11 +390,7 @@ object Sinks {
         if (nFiles > maxFilesPerBucket) scala.util.Try(v.toLong).toOption
         else None
       }
-    if (oversized.nonEmpty) {
-      // pin the rows before overwriting the files they come from
-      val rows = spark.read.parquet(path)
-        .filter(col(bucketCol).isin(oversized: _*)) // partition-pruned
-        .localCheckpoint(true)
+    readBuckets(spark, path, bucketCol, oversized).foreach { rows =>
       zorderCols match {
         case None => writeBucketedParquet(rows, path, bucketCol, sortCols)
         case Some((cx, cy)) =>
@@ -610,16 +605,30 @@ object Sinks {
     * (ref: scripts/eth_csv_export.py:574-580); all other tables use `,`. */
   def csvDelimiter(table: String): String = if (table == "log") "|" else ","
 
-  /** K2: gzipped CSV with header and the table's delimiter
-    * (ref: scripts/eth_csv_export.py:352-370). */
-  def writeCsv(df: DataFrame, path: String, table: String): Unit =
+  /** The CSV dialect's writer, shared by both exports: gzip, header, the
+    * table's delimiter, a null written as an empty field. */
+  private def csvWriter(df: DataFrame, table: String) =
     df.write
       .mode("overwrite")
       .option("compression", "gzip")
       .option("header", "true")
       .option("delimiter", csvDelimiter(table))
       .option("emptyValue", "")
-      .csv(path)
+
+  /** The CSV dialect's reader, shared by both read-backs: explicit schema
+    * (CSV carries no types), header, the table's delimiter, an empty field
+    * read as null. */
+  private def csvReader(spark: SparkSession, table: String, schema: StructType) =
+    spark.read
+      .schema(schema)
+      .option("header", "true")
+      .option("delimiter", csvDelimiter(table))
+      .option("nullValue", "")
+
+  /** K2: gzipped CSV with header and the table's delimiter
+    * (ref: scripts/eth_csv_export.py:352-370). */
+  def writeCsv(df: DataFrame, path: String, table: String): Unit =
+    csvWriter(df, table).csv(path)
 
   /** Reference file-name prefix per table: the reference names transaction
     * files `tx_*` and log files `logs_*` (ref: scripts/eth_csv_export.py:
@@ -671,16 +680,11 @@ object Sinks {
     val header = df.columns.mkString(csvDelimiter(table))
 
     val id = col(blockIdCol).cast("long")
-    df.filter(id.between(roundedStart, roundedEnd))
-      .withColumn("__file_lo", (id - pmod(id, lit(fileBatchSize))))
-      .repartition(col("__file_lo"))
-      .sortWithinPartitions(("__file_lo" +: sortCols).map(col).toIndexedSeq: _*)
-      .write
-      .mode("overwrite")
-      .option("compression", "gzip")
-      .option("header", "true")
-      .option("delimiter", csvDelimiter(table))
-      .option("emptyValue", "")
+    csvWriter(df.filter(id.between(roundedStart, roundedEnd))
+        .withColumn("__file_lo", (id - pmod(id, lit(fileBatchSize))))
+        .repartition(col("__file_lo"))
+        .sortWithinPartitions(("__file_lo" +: sortCols).map(col).toIndexedSeq: _*),
+        table)
       .partitionBy("__file_lo")
       .csv(tmp)
 
@@ -717,15 +721,6 @@ object Sinks {
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
 
-  /** K4 over the reference tree, partition-pruned: read only the file
-    * windows a block range can touch. The tree's layout is pure arithmetic
-    * (`%08d-%08d` dirs, `<prefix>_%08d-%08d.csv.gz` files), so the touched
-    * paths are COMPUTED, never discovered — a point read from a
-    * 100k-file tree lists nothing and opens one file, the CSV-tree analog
-    * of parquet partition pruning. Windows absent on disk (sparse exports)
-    * are skipped via one existence probe per candidate window — bounded by
-    * the range, not the tree. The row-level `between` filter then trims the
-    * window edges. */
   /** The computed per-window file paths of a block range in the reference
     * tree — pure arithmetic over the `%08d-%08d` naming, no listing. Shared
     * by [[readReferenceCsvRange]] and the export read-back count (which must
@@ -742,6 +737,15 @@ object Sinks {
     }
   }
 
+  /** K4 over the reference tree, partition-pruned: read only the file
+    * windows a block range can touch. The tree's layout is pure arithmetic
+    * (`%08d-%08d` dirs, `<prefix>_%08d-%08d.csv.gz` files), so the touched
+    * paths are COMPUTED, never discovered — a point read from a
+    * 100k-file tree lists nothing and opens one file, the CSV-tree analog
+    * of parquet partition pruning. Windows absent on disk (sparse exports)
+    * are skipped via one existence probe per candidate window — bounded by
+    * the range, not the tree. The row-level `between` filter then trims the
+    * window edges. */
   def readReferenceCsvRange(spark: SparkSession, dir: String, table: String,
                             lo: Long, hi: Long,
                             schema: StructType,
@@ -756,11 +760,7 @@ object Sinks {
       .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
     if (paths.isEmpty) spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read
-      .schema(schema)
-      .option("header", "true")
-      .option("delimiter", csvDelimiter(table))
-      .option("nullValue", "")
+    else csvReader(spark, table, schema)
       .csv(paths: _*)
       .filter(col(blockIdCol).between(lo, hi))
   }
@@ -769,10 +769,5 @@ object Sinks {
     * empty-string nulls, explicit schema (CSV carries no types). */
   def readCsv(spark: SparkSession, path: String, table: String,
               schema: StructType): DataFrame =
-    spark.read
-      .schema(schema)
-      .option("header", "true")
-      .option("delimiter", csvDelimiter(table))
-      .option("nullValue", "")
-      .csv(path)
+    csvReader(spark, table, schema).csv(path)
 }

@@ -223,13 +223,13 @@ object StreamingOps {
     * one partition) supplies the old buckets; the index upsert then
     * runs over new ∪ old buckets with `dropOldWhere(id ∈ batch)`, which
     * replaces every old row of a batch id WHOLESALE — correct whatever
-    * the new row shape (changed keys, fewer rows, none). Buckets whose
-    * merge ends EMPTY are deleted explicitly (dynamic partition
-    * overwrite cannot rewrite a partition the output has no rows for);
-    * the map is maintained the same way. Crash-replay safe in every
-    * gap: the index is updated BEFORE the map, so a replay re-widens
-    * `touched` from the not-yet-updated map and re-applies an
-    * idempotent replace; bucket-dir deletes are idempotent.
+    * the new row shape (changed keys, fewer rows, none). A bucket whose
+    * merge ends EMPTY is deleted by the upsert itself
+    * ([[graft.eth.Sinks.upsertBucketedParquet]]'s eraser contract); the
+    * map is maintained the same way. Crash-replay safe in every gap: the
+    * index is updated BEFORE the map, so a replay re-widens `touched`
+    * from the not-yet-updated map and re-applies an idempotent replace;
+    * bucket-dir deletes are idempotent.
     *
     * Driver-side metadata per batch: the bucket lists only (≤
     * keyBuckets longs each) — the batch id set stays a DataFrame
@@ -266,10 +266,6 @@ object StreamingOps {
       .map(_.getLong(0)).toIndexedSeq
     val touchedPk = meta.filter(_.getInt(1) == 1)
       .map(_.getLong(0)).toIndexedSeq
-    val hPath = new org.apache.hadoop.fs.Path(pkMapDir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def del(dir: String, bucketCol: String, b: Long): Unit =
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$bucketCol=$b"), true)
     // Every index/map read below is SCOPED to its named bucket dirs
     // ([[graft.eth.Sinks.readBuckets]]) — the whole-sink read listed
     // every partition dir per call, which at corpus-scaled bucket counts
@@ -286,33 +282,22 @@ object StreamingOps {
           .collect().map(_.getLong(0)).toIndexedSeq)
         .getOrElse(IndexedSeq.empty)
     val touched = (newTouched ++ oldBuckets).distinct
-    // the upsert returns what it WROTE (checkpoint-backed frame + the
-    // observed bucket list): the flag pass reads the returned frame
-    // instead of re-listing + re-reading the buckets just written, and
-    // the zero-survivor edge (old buckets whose every stored row belongs
-    // to a batch id end the merge EMPTY — dynamic overwrite cannot
-    // rewrite a partition the output has no rows for) is `touched` minus
-    // the written set instead of a survivor re-scan. r15: this replaced
-    // three scoped disk reads + two collects per batch with zero.
-    val (writtenIdx, writtenKb) =
+    // the upsert returns the frame it wrote (checkpoint-backed): the flag
+    // pass reads it instead of re-listing + re-reading the buckets just
+    // written. Old buckets whose every stored row belongs to a batch id
+    // end the merge empty and are deleted by the upsert. r15: this
+    // replaced three scoped disk reads + two collects per batch with zero.
+    val (writtenIdx, _) =
       graft.eth.Sinks.upsertBucketedParquetReturning(pinned.drop("pkb"),
         indexDir, pkCols = pkCols, bucketCol = "kb", sortCols = sortCols,
         newBuckets = Some(touched), dropOldKeys = Some(ids.select(col(idCol))))
-    // newTouched buckets always carry incoming rows, so the difference
-    // is exactly the emptied old-only buckets; deleting a dir a crashed
-    // run already removed is an idempotent no-op
-    touched.filterNot(writtenKb.toSet).foreach(del(indexDir, "kb", _))
     // side map AFTER the index (the crash-replay ordering above): one
     // (id, kb) row per bucket the id now lives in, replaced wholesale
-    val mapRows = pinned.select(col(idCol), col("kb"), col("pkb")).distinct()
-    val (_, writtenPkb) =
-      graft.eth.Sinks.upsertBucketedParquetReturning(mapRows, pkMapDir,
-        pkCols = Seq(idCol, "kb"), bucketCol = "pkb",
-        sortCols = Seq(idCol), newBuckets = Some(touchedPk),
-        dropOldKeys = Some(ids.select(col(idCol))))
-    // zero-survivor edge, map side: a pk bucket with neither new map
-    // rows nor surviving old ids wrote nothing — delete its stale dir
-    touchedPk.filterNot(writtenPkb.toSet).foreach(del(pkMapDir, "pkb", _))
+    graft.eth.Sinks.upsertBucketedParquet(
+      pinned.select(col(idCol), col("kb"), col("pkb")).distinct(), pkMapDir,
+      pkCols = Seq(idCol, "kb"), bucketCol = "pkb",
+      sortCols = Seq(idCol), newBuckets = Some(touchedPk),
+      dropOldKeys = Some(ids.select(col(idCol))))
     // post-upsert content of the batch's content buckets — the callers'
     // flag read, served from memory
     val flagIdx =

@@ -100,8 +100,14 @@ class IngestSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("reorg_fork").toString + "/b"
     // stored 0..2499 with 2300+ orphaned; canonical source extends to 2799
     graft.eth.Sinks.writeBucketedParquet(chain(0, 2499, orphanFrom = 2300), path)
-    val (resume, fork) = Ingest.resumeWithReorgCheck(spark, path, chain(0, 2799),
-      checkDepth = 400)
+    var (resume, fork) = (0L, Option.empty[Long])
+    // tip probe, fork search, the rewrite, tip probe: no pin
+    val execs = executionsOf {
+      val r = Ingest.resumeWithReorgCheck(spark, path, chain(0, 2799), checkDepth = 400)
+      resume = r._1; fork = r._2
+    }
+    assert(execs.size == 4 && pinsIn(execs).isEmpty,
+      s"${execs.size} executions, pins ${pinsIn(execs)}")
     assert(fork.contains(2300L) && resume == 2800L)
     val out = spark.read.parquet(path)
     assert(out.count() == 2800L)

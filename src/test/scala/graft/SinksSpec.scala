@@ -41,8 +41,7 @@ class SinksSpec extends SparkSpec {
     Sinks.writeBucketedParquet(v1, path, "kb", Seq("id"))
     // upsert rows into bucket 1 while dropOldKeys erases bucket 0's only
     // ids: the write must produce rows for bucket 1 ONLY — the returned
-    // bucket list is {1}, and bucket 0 (merged empty) is NOT in it, so a
-    // caller's touched-minus-written delete targets exactly bucket 0
+    // bucket list is {1}, and bucket 0 (merged empty) is NOT in it
     val batch = Seq((11L, 1L, "d")).toDF("id", "kb", "v")
     val (written, kbs) = Sinks.upsertBucketedParquetReturning(batch, path,
       pkCols = Seq("id"), bucketCol = "kb", sortCols = Seq("id"),
@@ -55,19 +54,41 @@ class SinksSpec extends SparkSpec {
     val mem = written.filter(col("kb") === 1L)
       .select(col("id"), col("v")).collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(mem == disk && disk == Set((10L, "c"), (11L, "d")))
-    // bucket 0's dir still exists on disk (dynamic overwrite can't
-    // rewrite an empty partition) — the caller deletes it via the delta;
-    // its stored rows were all dropOldKeys-erased from the MERGE frame
+    // bucket 0 merged empty: the upsert deleted its directory, and its
+    // stored rows were all dropOldKeys-erased from the MERGE frame
+    assert(!new java.io.File(s"$path/kb=0").exists())
     assert(written.filter(col("kb") === 0L).count() == 0)
     // EMPTY write: a batch with zero rows whose dropOldKeys erases the
-    // remaining bucket-1 ids -> zero-task write, observation comes back
-    // empty, the fallback collect must still report no written buckets
+    // remaining bucket-1 ids -> the write has no rows and no observed
+    // bucket, and bucket 1, read and emptied, is deleted too
     val empty = batch.limit(0)
     val (w2, kbs2) = Sinks.upsertBucketedParquetReturning(empty, path,
       pkCols = Seq("id"), bucketCol = "kb", sortCols = Seq("id"),
       newBuckets = Some(Seq(1L)),
       dropOldKeys = Some(Seq(10L, 11L).toDF("id")))
     assert(kbs2.isEmpty && w2.count() == 0)
+    assert(!new java.io.File(s"$path/kb=1").exists())
+  }
+
+  test("an eraser that empties a stored bucket deletes it (dropOldWhere, dropOldKeys)") {
+    import spark.implicits._
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.col
+    // each eraser matches all of bucket 0 and no incoming row lands there
+    val erasers: Seq[(String, Option[Column], Option[org.apache.spark.sql.DataFrame])] = Seq(
+      ("dropOldWhere", Some(col("kb") === 0L), None),
+      ("dropOldKeys", None, Some(Seq(1L, 2L).toDF("id"))))
+    erasers.foreach { case (name, where, keys) =>
+      val path = Files.createTempDirectory("sink_erase").toString + "/t"
+      Sinks.writeBucketedParquet(Seq((1L, 0L, "a"), (2L, 0L, "b"), (10L, 1L, "c"))
+        .toDF("id", "kb", "v"), path, "kb", Seq("id"))
+      Sinks.upsertBucketedParquet(Seq((11L, 1L, "d")).toDF("id", "kb", "v"), path,
+        pkCols = Seq("id"), bucketCol = "kb", sortCols = Seq("id"),
+        newBuckets = Some(Seq(0L, 1L)), dropOldWhere = where, dropOldKeys = keys)
+      assert(!new java.io.File(s"$path/kb=0").exists(), s"$name: emptied bucket left on disk")
+      val back = spark.read.parquet(path).select("id", "kb").as[(Long, Long)].collect().toSet
+      assert(back == Set((10L, 1L), (11L, 1L)), s"$name: $back")
+    }
   }
 
   test("readBuckets: scoped listing reads named buckets only, skips absent ones, None on empty sink") {
@@ -97,38 +118,6 @@ class SinksSpec extends SparkSpec {
       s"scan roots must be the named bucket dirs, got $roots")
     // all-absent request: None (replay may name buckets a crash deleted)
     assert(Sinks.readBuckets(spark, path, "kb", Seq(7L, 9L)).isEmpty)
-  }
-
-  /** The SQL executions `body` runs, in order. Listener events arrive
-    * asynchronously but in posting order, so a marker action run before
-    * and after `body` brackets exactly its executions. */
-  private def executionsOf(body: => Unit)
-      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
-    import org.apache.spark.sql.execution.QueryExecution
-    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
-    }
-    def until(marker: QueryExecution): Seq[QueryExecution] = {
-      val out = Seq.newBuilder[QueryExecution]
-      var qe = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      while (qe != null && (qe ne marker)) {
-        out += qe
-        qe = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      assert(qe != null, "marker execution never reported")
-      out.result()
-    }
-    def mark(): QueryExecution = {
-      val m = spark.range(1); m.collect(); m.queryExecution
-    }
-    spark.listenerManager.register(listener)
-    try {
-      until(mark())
-      body
-      until(mark())
-    } finally spark.listenerManager.unregister(listener)
   }
 
   test("mid-bucket upsert is one SQL execution: one exchange, one sort, no pin") {
@@ -396,7 +385,12 @@ class SinksSpec extends SparkSpec {
     }
     assert(filesPerBucket.values.forall(_ > 1))
     val before = spark.read.parquet(out).collect().toSet
-    val compacted = Sinks.compactBuckets(spark, out)
+    var compacted = Seq.empty[Long]
+    // the rewrite reads the buckets it replaces in its own write: one SQL
+    // execution, no pin
+    val execs = executionsOf { compacted = Sinks.compactBuckets(spark, out) }
+    assert(execs.size == 1 && pinsIn(execs).isEmpty,
+      s"${execs.size} executions, pins ${pinsIn(execs)}")
     assert(compacted.toSet == Set(0L, 1L, 2L, 3L))
     assert(filesPerBucket.values.forall(_ == 1), s"$filesPerBucket")
     // same rows, clustered order inside each file, and a re-run is a no-op
@@ -659,8 +653,13 @@ class SinksSpec extends SparkSpec {
       (8L, 0L, 808L, "U", 2L)     // ...reinsert at a later CDC offset
     ) ++ (20L until 30L).map(i => (i, 2L, 0L, "D", 1L)) // empty out bucket 2
     val ch = changes.toDF("id", "bkt", "v", "op", "seq")
-    Sinks.mergeCdcBucketedParquet(ch, dir, Seq("id"), bucketCol = "bkt",
-      sortCols = Seq("id"))
+    // the touched-bucket collect, then the merge inside the write: no pin
+    val execs = executionsOf {
+      Sinks.mergeCdcBucketedParquet(ch, dir, Seq("id"), bucketCol = "bkt",
+        sortCols = Seq("id"))
+    }
+    assert(execs.size == 2 && pinsIn(execs).isEmpty,
+      s"${execs.size} executions, pins ${pinsIn(execs)}")
     def state() = spark.read.parquet(dir)
       .select(col("id"), col("v")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

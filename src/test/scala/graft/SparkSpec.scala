@@ -14,4 +14,44 @@ object SparkSpec {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** The SQL executions `body` runs, in order. Listener events arrive
+    * asynchronously but in posting order, so a marker action run before
+    * and after `body` brackets exactly its executions. */
+  protected def executionsOf(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    def until(marker: QueryExecution): Seq[QueryExecution] = {
+      val out = Seq.newBuilder[QueryExecution]
+      var qe = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (qe != null && (qe ne marker)) {
+        out += qe
+        qe = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(qe != null, "marker execution never reported")
+      out.result()
+    }
+    def mark(): QueryExecution = {
+      val m = spark.range(1); m.collect(); m.queryExecution
+    }
+    spark.listenerManager.register(listener)
+    try {
+      until(mark())
+      body
+      until(mark())
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The pins (`LogicalRDD` leaves: localCheckpoint or an RDD-backed
+    * frame) the optimized plans of `execs` read. */
+  protected def pinsIn(execs: Seq[org.apache.spark.sql.execution.QueryExecution])
+      : Seq[org.apache.spark.sql.execution.LogicalRDD] =
+    execs.flatMap(_.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    })
 }
