@@ -36,7 +36,8 @@ import graft.streaming.{IndexSoak, StreamingOps}
   *    `mediaSoak <workDir> image|video <nBatches> [base op]`: the
   *    mutable-index soaks ([[IndexSoak.runSoak]],
   *    [[IndexSoak.runMediaSoak]]); exit 1 unless the maintained index and
-  *    pk map equal a from-scratch rebuild.
+  *    pk map equal a from-scratch rebuild. The line also reports the
+  *    persisted RDDs (and their block bytes) left after the last batch.
   *  - `scale <sfDir> <workDir> <keyBuckets> <nBatches> <batchSize>` and
   *    `mediaScale <workDir> image|video <keyBuckets> <nBatches> <batchSize>
   *    <corpusMedia>`: the maintainer scale gates. Each seeds an index at
@@ -357,6 +358,7 @@ object Bench {
                        r: IndexSoak.SoakReport): String =
     s"""{$head,"batches":${r.walls.size},""" +
       s""""idx_diff":${r.idxDiff},"map_diff":${r.mapDiff},""" +
+      s""""persistent_rdds":${r.persistentRdds},"storage_bytes":${r.storageBytes},""" +
       s""""files_mid":${r.filesMid},"files_end":${r.filesEnd},""" +
       s""""$finalKey":${r.finalDocsN},"final_index_rows":${r.finalIndexRows},""" +
       s""""wall_med_first10_s":${f"${median(r.walls.take(10))}%.2f"},""" +

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.Pin
+
 /** Sinks (SURVEY §2.7): bucket-partitioned parquet (the engine's primary
   * layout, mirroring the reference's 1,000-block files / Cassandra
   * partitions) and the gzipped-CSV dialect with per-table delimiters.
@@ -72,9 +74,10 @@ object Sinks {
       .toSet
   }
 
-  /** Read ONLY the named buckets of a bucketed-parquet sink: the paths
-    * handed to the reader are the touched bucket DIRECTORIES, so the
-    * file-index listing costs O(|buckets|) — never O(total buckets). A
+  /** Read ONLY the named buckets of a bucketed-parquet sink: each named
+    * `<bucketCol>=<b>` directory is probed for existence and the present
+    * ones are handed to the reader, so both the probe and the file-index
+    * listing cost O(|buckets|) — the sink root is never listed. A
     * whole-sink `read.parquet(path).filter(bucket isin ...)` prunes the
     * DATA but still lists every partition dir up front; at the 100 TB
     * posture (bucket count scales with the corpus so bucket SIZE stays
@@ -93,8 +96,10 @@ object Sinks {
   def readBuckets(spark: SparkSession, path: String, bucketCol: String,
                   buckets: Seq[Long],
                   schema: Option[StructType] = None): Option[DataFrame] = {
-    val present = existingBuckets(spark, path, bucketCol)
-    val dirs = buckets.distinct.filter(present).map(b => s"$path/$bucketCol=$b")
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = buckets.distinct.map(b => s"$path/$bucketCol=$b")
+      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
     if (dirs.isEmpty) None
     else Some(schema.foldLeft(spark.read)(_.schema(_))
       .option("basePath", path).parquet(dirs: _*))
@@ -166,9 +171,11 @@ object Sinks {
   /** [[upsertBucketedParquet]] that also RETURNS what it wrote:
     * (writtenFrame, writtenBuckets). The frame is exactly the write's
     * input — checkpoint-backed on both sides (the caller's pinned batch,
-    * or the localCheckpoint of the one merge expression when the batch
+    * or a [[graft.Pin]] of the one merge expression when the batch
     * overlaps stored buckets), so reading it AFTER the overwrite never
-    * touches the replaced files. The bucket list is the distinct bucket
+    * touches the replaced files. The merge pin is never released here:
+    * called inside a [[graft.Pin.scope]] (as the mutable-index
+    * maintainers do), it is freed when the scope closes. The bucket list is the distinct bucket
     * values that actually received rows, observed on the write itself
     * ([[rewriteBuckets]], which also deletes the stored buckets the
     * erasers emptied) — zero extra jobs. Consumers (the mutable-index
@@ -188,7 +195,7 @@ object Sinks {
           sortCols.map(col), read = Nil))
       case Some((merged, read)) =>
         // the pinned merge is already clustered by its own exchange
-        val out = merged.localCheckpoint(true)
+        val out = Pin(merged)
         (out, rewriteBuckets(out, path, bucketCol, sortCols.map(col), read))
     }
 

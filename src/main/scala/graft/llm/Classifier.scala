@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Distributed training of the quality classifier — the learned upgrade of
   * the fixed-weight heuristics in [[TextAnalysis]] (reference context: the
   * fastText-style quality classifier every large-scale corpus pipeline
@@ -68,14 +70,12 @@ object Classifier {
 
   private def pinFeatures(features: DataFrame, idCol: String,
                           featCol: String, xCol: String): DataFrame =
-    features.select(col(idCol).as("__id"),
-        col(featCol).cast("long").as("__f"), col(xCol).cast("long").as("__x"))
-      .localCheckpoint(true)
+    Pin(features.select(col(idCol).as("__id"),
+      col(featCol).cast("long").as("__f"), col(xCol).cast("long").as("__x")))
 
   private def pinLabels(labels: DataFrame, idCol: String,
                         yCol: String): DataFrame =
-    labels.select(col(idCol).as("__id"),
-      col(yCol).cast("long").as("__y")).localCheckpoint(true)
+    Pin(labels.select(col(idCol).as("__id"), col(yCol).cast("long").as("__y")))
 
   /** The fixed-round gradient loop over the PINNED projections; returns
     * the weight vector as (__f, __w) in micro-units. */
@@ -85,8 +85,8 @@ object Classifier {
     require(lrMilli > 0, s"lrMilli must be > 0, got $lrMilli")
     // n as a 1-row broadcast — the gradient scale; never collected
     val n = lab.agg(count(lit(1)).as("__n"))
-    var w = feat.select(col("__f")).distinct()
-      .withColumn("__w", lit(0L)).localCheckpoint(true)
+    var w = Pin(feat.select(col("__f")).distinct()
+      .withColumn("__w", lit(0L)))
     var r = 0
     while (r < rounds) {
       // exact integer margin per doc; docs with no features score 0
@@ -105,14 +105,13 @@ object Classifier {
         .agg(sum(col("__x").cast("decimal(38,0)") * col("__e")).as("__g"))
       // w ← w − (lr·g) div (1000·n), sign-split truncating div so Spark
       // `div` and DuckDB `//` agree on negative gradients
-      w = w.join(grad, Seq("__f"), "left")
+      w = Pin(w.join(grad, Seq("__f"), "left")
         .crossJoin(broadcast(n))
         .select(col("__f"), (col("__w") - expr(
           s"""CASE WHEN coalesce(__g, 0) < 0
              |     THEN -cast(((-__g) * $lrMilli) div (1000 * __n) as bigint)
              |     ELSE cast((coalesce(__g, 0) * $lrMilli) div (1000 * __n) as bigint)
-             |END""".stripMargin)).as("__w"))
-        .localCheckpoint(true)
+             |END""".stripMargin)).as("__w")))
       r += 1
     }
     w

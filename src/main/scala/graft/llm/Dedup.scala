@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.functions.ColumnFns._
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -67,11 +68,6 @@ object Dedup {
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.MinhashSigExpr(
         org.apache.spark.sql.GraftColumnBridge.expression(basesCol), numHashes))
-
-  /** MinHash signature straight from shingles (convenience; prefer
-    * [[minhashSignatureFromBases]] behind a projection in pipelines). */
-  def minhashSignature(shingleCol: Column, numHashes: Int): Column =
-    minhashSignatureFromBases(transform(shingleCol, minhashBase(_)), numHashes)
 
   /** MinHash-LSH band assignment: split the signature into `bands` bands of
     * `rowsPerBand` rows; a band key is the concatenated minhash values.
@@ -153,9 +149,8 @@ object Dedup {
     * the collapse must not invent pairs the raw operator cannot emit. */
   private[graft] def collapseByKey(df: DataFrame, idCol: String,
                                    keyCols: Seq[Column]): (DataFrame, DataFrame) = {
-    val nonNull = df.filter(keyCols.map(_.isNotNull).reduce(_ && _))
-      .withColumn("__rep", min(col(idCol)).over(Window.partitionBy(keyCols: _*)))
-      .localCheckpoint()
+    val nonNull = Pin(df.filter(keyCols.map(_.isNotNull).reduce(_ && _))
+      .withColumn("__rep", min(col(idCol)).over(Window.partitionBy(keyCols: _*))))
     val members = nonNull.select(col("__rep"), col(idCol).as("__member"))
     val reps = nonNull.filter(col(idCol) === col("__rep")).drop("__rep")
     (members, reps)
@@ -307,10 +302,9 @@ object Dedup {
     // all-pairs contract). The (id, sig) table is localCheckpointed: one
     // per-token md5 pass total, reused by the intra-join and both
     // expansion joins without recomputing the scan.
-    val sigs = docs
+    val sigs = Pin(docs
       .select(col(idCol), transform(tokens(col(textCol)), base60(_, fastHash)).as("__tb"))
-      .select(col(idCol), simhashFromBases(col("__tb"), bits).as("__sig"))
-      .localCheckpoint()
+      .select(col(idCol), simhashFromBases(col("__tb"), bits).as("__sig")))
     // identical signature => hamming 0, no bucket pass needed: stream the
     // pairs from an equi-join on the sig (never a per-sig collected array
     // — an all-identical corpus degrades to a big join output, not a
@@ -836,10 +830,9 @@ object Dedup {
     val numCoarse = math.ceil(math.sqrt(k.toDouble)).toInt
     val (members, reps) = collapseByKey(
       vectors.select(col(idCol), col(vecCol)), idCol, Seq(col(vecCol)))
-    val assigned = Similarity
+    val assigned = Pin(Similarity
       .ivfAssignHier(reps, centroids, numCoarse, idCol, vecCol)
-      .select(col(idCol), col(vecCol), col("centroid_id"))
-      .localCheckpoint()
+      .select(col(idCol), col(vecCol), col("centroid_id")))
     val a = assigned.select(col("centroid_id"), col(idCol).as("__ida"),
       col(vecCol).as("__va"))
     val b = assigned.select(col("centroid_id"), col(idCol).as("__idb"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.functions.ColumnFns._
 import graft.functions.GraftFunctions
 
@@ -477,8 +478,7 @@ object Similarity {
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val corpus = vectors.select(col(idCol), milliVec(vecCol).as("__vm"))
-      .localCheckpoint(true) // reused every round
+    val corpus = Pin(vectors.select(col(idCol), milliVec(vecCol).as("__vm"))) // reused every round
     var cents = centroids.select(col(idCol).cast("long").as("cid"),
       microVec(vecCol).as("__cm"))
     var out: DataFrame = null
@@ -486,14 +486,13 @@ object Similarity {
     while (r < rounds) {
       val assigned = quantizedAssign(corpus, cents)
         .select(col("__vm"), col("cid"))
-      val means = assigned
+      val means = Pin(assigned
         .select(col("cid"), posexplode(col("__vm")).as(Seq("__p0", "__v")))
         .select(col("cid"), (col("__p0") + 1).as("pos"), col("__v"))
         .groupBy(col("cid"), col("pos"))
         .agg(sum(col("__v")).as("__s"), count(lit(1)).as("n_members"))
         .select(col("cid"), col("pos"),
-          meanMicro("__s", "n_members").as("mean_micro"), col("n_members"))
-        .localCheckpoint(true)
+          meanMicro("__s", "n_members").as("mean_micro"), col("n_members")))
       out = means
       cents = means.groupBy(col("cid"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, mean_micro)))," +
@@ -1120,8 +1119,7 @@ object Similarity {
     // prior rounds' full d² scans in one lazy plan — O(k²) corpus folds.
     // With the milli corpus pinned, each round is one fold + top-1 over
     // the checkpointed rows (same discipline as [[kmeansPpInit]]).
-    val m = df.select(col(idCol).as("vid"), milliVec(vecCol).as("__m"))
-      .localCheckpoint(true)
+    val m = Pin(df.select(col(idCol).as("vid"), milliVec(vecCol).as("__m")))
     var chosen = m.orderBy(col("vid")).limit(1)
       .select(col("vid").as("cid"), col("__m").as("__cm"),
         lit(1L).as("round"), lit(0L).as("d2_at_pick"))
@@ -1173,8 +1171,7 @@ object Similarity {
     // job. Pinned, each round is one d²+prefix-sum pass (ΣD² read off
     // the LAST prefix value: d² >= 0 makes __cum monotone, so
     // max(__cum) = sum(__d2) exactly — no second pass over `scored`).
-    val m = df.select(col(idCol).as("vid"), milliVec(vecCol).as("__m"))
-      .localCheckpoint(true)
+    val m = Pin(df.select(col(idCol).as("vid"), milliVec(vecCol).as("__m")))
     var chosen = m.orderBy(col("vid")).limit(1)
       .select(col("vid").as("cid"), col("__m").as("__cm"),
         lit(1L).as("round"), lit(0L).as("d2_at_pick"))
@@ -1187,9 +1184,8 @@ object Similarity {
             |  aggregate(zip_with(__m, c.__cm, (a, b) -> (a - b) * (a - b)),
             |            cast(0 as bigint), (s, x) -> s + x)))""".stripMargin))
         .select(col("vid"), col("__m"), col("__d2"))
-      val cum = graft.operators.GlobalRank
-        .globalPrefixSum(scored, Seq(col("vid")), "__d2", "__cum")
-        .localCheckpoint(true)
+      val cum = Pin(graft.operators.GlobalRank
+        .globalPrefixSum(scored, Seq(col("vid")), "__d2", "__cum"))
       val tot = cum.agg(max(col("__cum")).as("__tw"))
       val next = cum.crossJoin(broadcast(tot))
         .withColumn("__p",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.functions.ColumnFns._
 
 /** Text-analysis operators for training-data pipelines: language ID
@@ -519,10 +520,9 @@ object TextAnalysis {
     val toks = tokens(col(textCol))
     // pinned: the tokenizer runs ONCE — the threshold pass and the gate
     // pass both read the fixed-width per-doc scores from the checkpoint
-    val m = df.select(col(idCol),
+    val m = Pin(df.select(col(idCol),
         stopwordHits(toks).cast("long").as("__swh"), size(toks).as("n_tokens"))
-      .withColumn("swr_milli", expr("(__swh * 1000) div n_tokens"))
-      .localCheckpoint(true)
+      .withColumn("swr_milli", expr("(__swh * 1000) div n_tokens")))
     // r15: distributed rank selection (bit-identical to the `percentile`
     // aggregate, whose merge buffer holds every corpus score in one task)
     val thr = graft.operators.GlobalRank.exactPercentile(m, Seq.empty,
@@ -662,10 +662,9 @@ object TextAnalysis {
     * replay the merge's effect on the corpus (Σ freq·n_merges symbols
     * saved) and feed the next iteration. */
   def bpeTrainStep(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val words = df.select(explode(tokens(col(textCol))).as("__w"))
+    val words = Pin(df.select(explode(tokens(col(textCol))).as("__w"))
       .filter(length(col("__w")) >= 2)
-      .groupBy(col("__w")).agg(count(lit(1)).as("freq"))
-      .localCheckpoint(true) // reused: pair election + greedy apply
+      .groupBy(col("__w")).agg(count(lit(1)).as("freq"))) // reused: pair election + greedy apply
     val top = words
       .select(col("freq"), explode(expr(
         "transform(sequence(1, length(__w) - 1), i -> substring(__w, i, 2))"))
@@ -720,15 +719,14 @@ object TextAnalysis {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val W = org.apache.spark.sql.expressions.Window
     val wnd = W.partitionBy(col("word")).orderBy(col("i"))
-    var syms = df.select(explode(tokens(col(textCol))).as("word"))
+    var syms = Pin(df.select(explode(tokens(col(textCol))).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("word"), col("freq"), posexplode(expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
         .as(Seq("__p0", "s")))
       .select(col("word"), col("freq"),
-        (col("__p0") + 1).cast("long").as("i"), col("s"))
-      .localCheckpoint(true)
+        (col("__p0") + 1).cast("long").as("i"), col("s")))
 
     var out: DataFrame = null
     var r = 1
@@ -744,19 +742,18 @@ object TextAnalysis {
       // island of consecutive starts keep the odd-ranked ones
       val cand = pairs.join(broadcast(top.select(col("pair"))), Seq("pair"))
         .select(col("word"), col("freq"), col("i"))
-      val kept = cand
+      val kept = Pin(cand
         .withColumn("grp", col("i") - row_number().over(wnd))
         .withColumn("__rr",
           row_number().over(W.partitionBy(col("word"), col("grp")).orderBy(col("i"))))
         .filter(col("__rr") % 2 === 1)
-        .select(col("word"), col("freq"), col("i"))
-        .localCheckpoint(true)
+        .select(col("word"), col("freq"), col("i")))
       val stats = kept.agg(
         coalesce(sum(col("freq")), lit(0L)).as("n_merges_applied"),
         countDistinct(col("word")).as("n_words_affected"))
       // rebuild: kept starts absorb their successor symbol; consumed
       // successors drop; positions renumber in original order
-      val merged = withNext
+      val merged = Pin(withNext
         .join(kept.select(col("word"), col("i"), lit(1).as("__st")),
           Seq("word", "i"), "left")
         .join(kept.select(col("word"), (col("i") + 1).as("i"), lit(1).as("__cons")),
@@ -767,8 +764,7 @@ object TextAnalysis {
             .otherwise(col("s")).as("s"))
         .withColumn("i", row_number()
           .over(W.partitionBy(col("word")).orderBy(col("__oi"))).cast("long"))
-        .select(col("word"), col("freq"), col("i"), col("s"))
-        .localCheckpoint(true)
+        .select(col("word"), col("freq"), col("i"), col("s")))
       val after = merged.agg(
         coalesce(sum(col("freq")), lit(0L)).as("n_symbols_after"))
       val row = top.withColumn("round", lit(r))
@@ -898,9 +894,8 @@ object TextAnalysis {
     // pinned: the corpus-LM scoring pass runs ONCE — the threshold pass
     // and the gate pass both read the fixed-width per-doc scores from
     // the checkpoint
-    val scored = bigramLogProbScores(df, idCol, textCol, lambdaMilli)
-      .withColumn("nll_micro", expr("(-logprob_bi) div n_bigrams"))
-      .localCheckpoint(true)
+    val scored = Pin(bigramLogProbScores(df, idCol, textCol, lambdaMilli)
+      .withColumn("nll_micro", expr("(-logprob_bi) div n_bigrams")))
     // r15: distributed rank selection (see [[globalQualityGate]])
     val thr = graft.operators.GlobalRank.exactPercentile(scored, Seq.empty,
       "nll_micro", Seq(col(idCol)), pct, "__p")
@@ -935,15 +930,14 @@ object TextAnalysis {
     require(merges.nonEmpty, "need at least one merge")
     val W = org.apache.spark.sql.expressions.Window
     val wnd = W.partitionBy(col("word")).orderBy(col("i"))
-    var syms = df.select(explode(tokens(col(textCol))).as("word"))
+    var syms = Pin(df.select(explode(tokens(col(textCol))).as("word"))
       .filter(length(col("word")) >= 1)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("word"), col("freq"), posexplode(expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
         .as(Seq("__p0", "s")))
       .select(col("word"), col("freq"),
-        (col("__p0") + 1).cast("long").as("i"), col("s"))
-      .localCheckpoint(true)
+        (col("__p0") + 1).cast("long").as("i"), col("s")))
     merges.foreach { case (left, right) =>
       val withNext = syms.withColumn("nxt", lead(col("s"), 1).over(wnd))
       val cand = withNext
@@ -955,7 +949,7 @@ object TextAnalysis {
           .over(W.partitionBy(col("word"), col("grp")).orderBy(col("i"))))
         .filter(col("__rr") % 2 === 1)
         .select(col("word"), col("i"))
-      syms = withNext
+      syms = Pin(withNext
         .join(kept.select(col("word"), col("i"), lit(1).as("__st")),
           Seq("word", "i"), "left")
         .join(kept.select(col("word"), (col("i") + 1).as("i"), lit(1).as("__cons")),
@@ -966,8 +960,7 @@ object TextAnalysis {
             .otherwise(col("s")).as("s"))
         .withColumn("i", row_number()
           .over(W.partitionBy(col("word")).orderBy(col("__oi"))).cast("long"))
-        .select(col("word"), col("freq"), col("i"), col("s"))
-        .localCheckpoint(true)
+        .select(col("word"), col("freq"), col("i"), col("s")))
     }
     syms.groupBy(col("s")).agg(sum(col("freq")).as("n_occurrences"))
       .select(col("s").as("token"), col("n_occurrences"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Association-rule mining over per-key item baskets (Agrawal & Srikant
   * 1994, restricted to the 1-item ⇒ 1-item rules that cover most
   * production uses — "users who did A also did B"): support, confidence,
@@ -47,11 +49,11 @@ object Associations {
   def sequenceRules(df: DataFrame, keyCol: String, itemCol: String,
                     tsCol: String, minPairCount: Long = 2L): DataFrame = {
     require(minPairCount >= 1, s"minPairCount must be >= 1, got $minPairCount")
-    val firsts = df.select(col(keyCol).as("__k"), col(itemCol).as("__i"),
+    // reused by both pair sides + item counts
+    val firsts = Pin(df.select(col(keyCol).as("__k"), col(itemCol).as("__i"),
         col(tsCol).as("__t"))
       .filter(col("__i").isNotNull && col("__t").isNotNull)
-      .groupBy(col("__k"), col("__i")).agg(min(col("__t")).as("__t"))
-      .localCheckpoint(true) // reused by both pair sides + item counts
+      .groupBy(col("__k"), col("__i")).agg(min(col("__t")).as("__t")))
     val itemCounts = firsts.groupBy(col("__i")).agg(count(lit(1)).as("c"))
     val nBaskets = firsts.select(col("__k")).distinct()
       .agg(count(lit(1)).as("n_baskets"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Connected components over an edge list — the clustering step that turns
   * verified near-duplicate PAIRS into duplicate GROUPS (pick one survivor
   * per component). Spark has no built-in; this is iterative min-label
@@ -14,14 +16,13 @@ import org.apache.spark.sql.functions._
   * edges) plus one aggregation; the driver loop carries only ONE long per
   * iteration (the label-sum convergence check — labels only ever decrease,
   * so an unchanged sum IS the fixpoint, no row-wise diff join needed).
-  * `localCheckpoint` truncates the growing lineage each round.
+  * Each round's labels are pinned ([[graft.Pin]]), which truncates the
+  * growing lineage, and the previous round's pin is released.
   *
   * Converges in O(diameter) iterations. Near-dup components are tiny
-  * (pairs/triples), so 2-3 rounds in practice; for adversarial
-  * long-diameter graphs at 100 TB the production upgrade is the
-  * large-star/small-star algorithm (Kiveris et al.), which is the same
-  * join-aggregate shape with a different update rule — the plan properties
-  * (shuffle on node id, map-side combine, bounded driver state) carry over.
+  * (pairs/triples), so 2-3 rounds in practice; long-diameter graphs take
+  * [[runStarContraction]] (large-star/small-star, Kiveris et al.): the same
+  * join-aggregate shape with a different update rule, in O(log n) rounds.
   */
 object ConnectedComponents {
 
@@ -31,17 +32,15 @@ object ConnectedComponents {
           maxIter: Int = 15): DataFrame = {
     // both directions from ONE evaluation of the (possibly expensive) edge
     // plan: a union of two selects would run it twice before the checkpoint
-    val sym = edges
+    val sym = Pin(edges
       .select(explode(array(
         struct(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b")),
         struct(col(dstCol).cast("long").as("a"), col(srcCol).cast("long").as("b"))))
         .as("__e"))
-      .select(col("__e.a").as("a"), col("__e.b").as("b"))
-      .localCheckpoint(true) // reused every iteration: pin it once
+      .select(col("__e.a").as("a"), col("__e.b").as("b"))) // reused every iteration: pin it once
 
-    var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("component", col("node"))
-      .localCheckpoint(true)
+    var labels = Pin(sym.select(col("a").as("node")).distinct()
+      .withColumn("component", col("node")))
     // sum over an EMPTY edge list is null — return the empty labeling
     // instead of dereferencing it
     val first = labels.agg(sum(col("component"))).collect()(0)
@@ -58,12 +57,12 @@ object ConnectedComponents {
       // evaluation — one job per iteration, not a checkpoint job plus a
       // separate aggregate job over the checkpointed data
       val obs = new org.apache.spark.sql.Observation()
-      val updated = labels.select(col("node"), col("component"))
+      val updated = Pin(labels.select(col("node"), col("component"))
         .union(incoming)
         .groupBy(col("node")).agg(min(col("component")).as("component"))
-        .observe(obs, sum(col("component")).as("label_sum"))
-        .localCheckpoint(true)
+        .observe(obs, sum(col("component")).as("label_sum")))
       val newSum = obs.get("label_sum").asInstanceOf[Number].longValue()
+      Pin.release(labels) // superseded by the materialized update
       labels = updated
       converged = newSum == prevSum // labels are monotone non-increasing
       prevSum = newSum
@@ -86,7 +85,7 @@ object ConnectedComponents {
     *
     * Each round is the same admissible plan shape as a [[run]] iteration —
     * a fixed-width groupBy(node) min-aggregate plus one equi-join back to
-    * the (shrinking) edge list, `localCheckpoint` truncating lineage — and
+    * the (shrinking) edge list, a per-round pin truncating lineage — and
     * the driver carries only the convergence observations. Convergence is
     * detected by a cheap monotone signature (edge count + id sums) and
     * then PROVEN before returning: the final labeling must label every
@@ -95,17 +94,17 @@ object ConnectedComponents {
     */
   def runStarContraction(edges: DataFrame, srcCol: String, dstCol: String,
                          maxIter: Int = 30): DataFrame = {
-    val symAll = edges
+    val symAll = Pin(edges
       .select(explode(array(
         struct(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b")),
         struct(col(dstCol).cast("long").as("a"), col(srcCol).cast("long").as("b"))))
         .as("__e"))
-      .select(col("__e.a").as("a"), col("__e.b").as("b"))
-      .localCheckpoint(true)
+      .select(col("__e.a").as("a"), col("__e.b").as("b")))
     // the node set keeps self-loop-only nodes (they label themselves, as
     // in [[run]]); only the EDGE set drops the degenerate self-edges
-    val nodes = symAll.select(col("a").as("node")).distinct().localCheckpoint(true)
-    val sym0 = symAll.filter(col("a") =!= col("b")).localCheckpoint(true)
+    val nodes = Pin(symAll.select(col("a").as("node")).distinct())
+    val sym0 = Pin(symAll.filter(col("a") =!= col("b")))
+    Pin.release(symAll)
     if (nodes.isEmpty) return nodes.withColumn("component", col("node"))
 
     // large-star: every neighbor u > v points to m(v) = min(Γ(v) ∪ {v})
@@ -150,18 +149,18 @@ object ConnectedComponents {
       viol == 0L
     }
 
-    var e = sym0.filter(col("a") > col("b")).distinct().localCheckpoint(true)
+    var e = Pin(sym0.filter(col("a") > col("b")).distinct())
     var prevSig: (Long, Long, Long) = null
     var i = 0
     while (i < maxIter) {
       val obs = new org.apache.spark.sql.Observation()
-      val next = smallStar(largeStar(e))
+      val next = Pin(smallStar(largeStar(e))
         .observe(obs, count(lit(1)).as("n"),
-          sum(col("a")).as("sa"), sum(col("b")).as("sb"))
-        .localCheckpoint(true)
+          sum(col("a")).as("sa"), sum(col("b")).as("sb")))
       def num(k: String) = Option(obs.get(k).asInstanceOf[Number])
         .map(_.longValue()).getOrElse(0L)
       val sig = (num("n"), num("sa"), num("sb"))
+      Pin.release(e)
       e = next
       if (sig == prevSig) { // stable signature -> prove, don't trust
         val lab = labelsOf(e)

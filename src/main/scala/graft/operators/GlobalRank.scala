@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Scale-safe EXACT global ranking: the two-phase alternative to
   * `row_number().over(Window.orderBy(...))`, which Spark executes by
   * moving the ENTIRE input through one task (WindowExec warns exactly
@@ -15,7 +17,7 @@ import org.apache.spark.sql.functions._
   *   1. `repartitionByRange(orderCols)` — range-shuffle so partition i
   *      holds a contiguous slice of the total order (RangePartitioner
   *      boundaries from a deterministic-seed sample; slice boundaries
-  *      don't affect the result, only balance). `localCheckpoint(true)`
+  *      don't affect the result, only balance). A [[graft.Pin]]
   *      pins the partitioning so the two consumers below can NEVER see
   *      different boundaries (cheaper and stricter than relying on
   *      exchange reuse).
@@ -195,9 +197,8 @@ object GlobalRank {
       return df.withColumn(rnCol,
         row_number().over(Window.orderBy(orderCols: _*)).cast("long"))
     val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(nParts, orderCols: _*)
-      .withColumn("__gr_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Pin(df.repartitionByRange(nParts, orderCols: _*)
+      .withColumn("__gr_pid", spark_partition_id()))
     val local = ranged.withColumn("__gr_lrn", row_number()
       .over(Window.partitionBy(col("__gr_pid")).orderBy(orderCols: _*))
       .cast("long"))
@@ -245,9 +246,8 @@ object GlobalRank {
           .orderBy(orderCols: _*)).cast("long"))
     val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
     val gCols = groupCols.map(col)
-    val ranged = df.repartitionByRange(nParts, gCols ++ orderCols: _*)
-      .withColumn("__gg_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Pin(df.repartitionByRange(nParts, gCols ++ orderCols: _*)
+      .withColumn("__gg_pid", spark_partition_id()))
     val local = ranged.withColumn("__gg_lrn", row_number()
       .over(Window.partitionBy(col("__gg_pid") +: gCols: _*).orderBy(orderCols: _*))
       .cast("long"))
@@ -290,7 +290,7 @@ object GlobalRank {
     * Shape: one range shuffle on (group ++ orderCols); per-(pid, group)
     * windows compute the local row number, local rank (rank() over the
     * peer-order prefix — equal peers tie) and local dense rank IN THE
-    * SAME sort, pinned by a single `localCheckpoint(true)` AFTER the
+    * SAME sort, pinned by a single [[graft.Pin]] AFTER the
     * windows (both consumers need the local ranks — pinning upstream
     * would run the window pass twice); a dimension-sized offsets table
     * (≤ nParts + Σ|groups| rows) carries per-slice row and distinct-peer
@@ -362,8 +362,7 @@ object GlobalRank {
     // checkpoint AFTER the windows: both consumers (offsets aggregate and
     // the add-back join) need the local ranks, so pinning upstream would
     // run the window pass twice
-    val local = groupedRankDenseLocal(df, groupCols, peerCols, orderCols)
-      .localCheckpoint(true)
+    val local = Pin(groupedRankDenseLocal(df, groupCols, peerCols, orderCols))
     val peerStruct = struct(pCols: _*)
     val offsets0 = local.groupBy(col("__gd_pid") +: gCols: _*)
       .agg(count(lit(1)).as("__gd_cnt"),
@@ -424,9 +423,8 @@ object GlobalRank {
           .rowsBetween(Window.unboundedPreceding, 0)))
     val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
     val gCols = groupCols.map(col)
-    val ranged = df.repartitionByRange(nParts, gCols ++ orderCols: _*)
-      .withColumn("__gs_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Pin(df.repartitionByRange(nParts, gCols ++ orderCols: _*)
+      .withColumn("__gs_pid", spark_partition_id()))
     val local = ranged.withColumn("__gs_lcs",
       sum(col(valueCol).cast("decimal(38,0)"))
         .over(Window.partitionBy(col("__gs_pid") +: gCols: _*)
@@ -468,9 +466,8 @@ object GlobalRank {
         .over(Window.orderBy(orderCols: _*)
           .rowsBetween(Window.unboundedPreceding, 0)))
     val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(nParts, orderCols: _*)
-      .withColumn("__gp_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Pin(df.repartitionByRange(nParts, orderCols: _*)
+      .withColumn("__gp_pid", spark_partition_id()))
     val local = ranged.withColumn("__gp_lcs",
       sum(col(valueCol).cast("decimal(38,0)"))
         .over(Window.partitionBy(col("__gp_pid")).orderBy(orderCols: _*)
@@ -517,9 +514,8 @@ object GlobalRank {
           .over(w.rowsBetween(Window.unboundedPreceding, 0)))
     }
     val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(nParts, orderCols: _*)
-      .withColumn("__gb_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Pin(df.repartitionByRange(nParts, orderCols: _*)
+      .withColumn("__gb_pid", spark_partition_id()))
     val w = Window.partitionBy(col("__gb_pid")).orderBy(orderCols: _*)
     val local = ranged
       .withColumn("__gb_lrn", row_number().over(w).cast("long"))
@@ -588,12 +584,11 @@ object GlobalRank {
     // at sf10 and did NOT win locally — the page cache absorbs the
     // second scan, while the extra checkpoint pays real materialization
     // + executor storage. On a cluster whose upstream is cold
-    // object-store IO, revisit: add `df.localCheckpoint(true)` before
+    // object-store IO, revisit: pin `df` ([[graft.Pin]]) before
     // the repartitionByRange (pids stay deterministic over the pinned
     // multiset, so correctness is unaffected).
-    val ranged = df.repartitionByRange(nParts, gCols ++ orderCols: _*)
-      .withColumn("__lg_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Pin(df.repartitionByRange(nParts, gCols ++ orderCols: _*)
+      .withColumn("__lg_pid", spark_partition_id()))
     val w = Window.partitionBy(col("__lg_pid") +: gCols: _*)
       .orderBy(orderCols: _*)
     val local = ranged
@@ -651,7 +646,7 @@ object GlobalRank {
     // is DETERMINISTIC over the identical pinned key multiset — which is
     // exactly why the pin must sit BELOW the exchange (PlanSpec locks
     // that every range exchange here roots on the checkpoint scan).
-    val ranged = df.localCheckpoint(true)
+    val ranged = Pin(df)
       .repartitionByRange(nParts, gCols :+ col(orderCol): _*)
       .withColumn("__wm_pid", spark_partition_id())
     val wg = Window.partitionBy(gCols: _*).orderBy(col("__wm_pid"))
@@ -715,9 +710,8 @@ object GlobalRank {
     }
     val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
     val gCols = groupCols.map(col)
-    val ranged = df.repartitionByRange(nParts, gCols ++ orderCols: _*)
-      .withColumn("__gs_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Pin(df.repartitionByRange(nParts, gCols ++ orderCols: _*)
+      .withColumn("__gs_pid", spark_partition_id()))
     val local = ranged.withColumn("__gs_lcs",
       sum(col(valueCol).cast("decimal(38,0)"))
         .over(Window.partitionBy(col("__gs_pid") +: gCols: _*)

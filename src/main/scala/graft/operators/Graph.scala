@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Graph analytics over a weighted edge list — the graphsense-downstream
   * primitives the reference's exported tables feed (reference context:
   * `graphsense-ethereum-etl` produces the raw blocks/txs/traces that the
@@ -15,8 +17,9 @@ import org.apache.spark.sql.functions._
   * Both operators are pure DataFrame programs in the same admissible
   * shapes as [[ConnectedComponents]]: per-iteration cost is one equi-join
   * shuffle on the node id plus one fixed-width aggregate with map-side
-  * combine; driver state is zero (fixed iteration count); lineage is
-  * truncated every round with `localCheckpoint`. All rank arithmetic is
+  * combine; driver state is zero (fixed iteration count); each round's
+  * frame is pinned ([[graft.Pin.rounds]]), which truncates lineage, and
+  * the previous round's pin is released. All rank arithmetic is
   * integer micro-units with truncating division of non-negative operands
   * (Spark `div` ≡ DuckDB `//` there), so results are bit-deterministic
   * across engines, retries, and partitionings.
@@ -61,26 +64,21 @@ object Graph {
       .filter(col("w") > 0)
     val outw = ew.groupBy(col("src")).agg(sum(col("w")).as("ow"))
     // reused every iteration: pin the joined edge+denominator table once
-    val e = ew.join(outw, "src").localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
+    val e = Pin(ew.join(outw, "src"))
+    val nodes = Pin(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
+      .distinct())
 
     val base = (1000L - dampMilli) * 1000L
-    var ranks = nodes.withColumn("rank_micro", lit(1000000L))
-    var i = 0
-    while (i < iters) {
+    Pin.rounds(nodes.withColumn("rank_micro", lit(1000000L)), iters) { (ranks, _) =>
       val sums = ranks.join(e, ranks("node") === e("src"))
         .select(col("dst"), expr("(rank_micro * w) div ow").as("__c"))
         .groupBy(col("dst")).agg(sum(col("__c")).as("__m"))
-      ranks = nodes.join(sums, nodes("node") === sums("dst"), "left")
+      nodes.join(sums, nodes("node") === sums("dst"), "left")
         .select(col("node"),
           (lit(base) + expr(s"(coalesce(__m, 0) * $dampMilli) div 1000"))
             .as("rank_micro"))
-        .localCheckpoint(true)
-      i += 1
     }
-    ranks
   }
 
   /** Seeded (semi-supervised) label spreading — the classification twin
@@ -105,17 +103,14 @@ object Graph {
                   seedLabelCol: String = "label"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val wc = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    val ew = edges
+    val ew = Pin(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"), wc.as("__w"))
       .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("w"))
-      .filter(col("w") > 0)
-      .localCheckpoint(true)
+      .filter(col("w") > 0))
     val seed = seeds.select(col(seedNodeCol).cast("long").as("node"),
       col(seedLabelCol).cast("long").as("label"), lit(0L).as("labeled_round"))
-    var labels = seed
-    var t = 1
-    while (t <= rounds) {
+    Pin.rounds(seed, rounds) { (labels, r) =>
       val votes = labels.join(ew, labels("node") === ew("src"))
         .groupBy(col("dst"), col("label"))
         .agg(sum(col("w")).as("__m"))
@@ -123,13 +118,10 @@ object Graph {
         .groupBy(col("dst"))
         .agg(min(struct((col("__m") * -1L).as("__neg"), col("label"))).as("__b"))
         .select(col("dst").as("node"), col("__b.label").as("label"),
-          lit(t.toLong).as("labeled_round"))
-      labels = labels.unionAll(
-          picked.join(labels.select(col("node")), Seq("node"), "left_anti"))
-        .localCheckpoint(true)
-      t += 1
+          lit(r + 1L).as("labeled_round"))
+      labels.unionAll(
+        picked.join(labels.select(col("node")), Seq("node"), "left_anti"))
     }
-    labels
   }
 
   /** Deterministic weighted random walks — the DeepWalk/node2vec corpus
@@ -158,11 +150,10 @@ object Graph {
       .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("w"))
       .filter(col("w") > 0)
     val perSrc = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-    val ec = ew
+    val ec = Pin(ew
       .withColumn("cw", sum(col("w")).over(perSrc.orderBy(col("dst"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .withColumn("ow", sum(col("w")).over(perSrc))
-      .localCheckpoint(true)
+      .withColumn("ow", sum(col("w")).over(perSrc)))
     val nodes = ec.select(col("src").as("node"))
       .union(ec.select(col("dst").as("node"))).distinct()
     var frontier = nodes.select(col("node").as("walker"), col("node").as("cur"))
@@ -201,37 +192,30 @@ object Graph {
                       weightCol: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    val ew = edges
+    val ew = Pin(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"), w.as("__w"))
       .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("w"))
-      .filter(col("w") > 0)
-      .localCheckpoint(true)
-    val nodes = ew.select(col("src").as("node"))
+      .filter(col("w") > 0))
+    val nodes = Pin(ew.select(col("src").as("node"))
       .union(ew.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
-    var r = nodes.withColumn("cm", lit(1000000L))
-    var i = 0
-    while (i < rounds) {
+      .distinct())
+    Pin.rounds(nodes.withColumn("cm", lit(1000000L)), rounds) { (r, _) =>
       // pinned: both the 1-row max and the update join read `sums`; an
       // unpinned plan would run the round's dominant join+aggregate TWICE
       // (measured at the 10x scale gate before this checkpoint)
-      val sums = r.join(ew, r("node") === ew("src"))
+      val sums = Pin(r.join(ew, r("node") === ew("src"))
         .select(col("dst"),
           (col("cm").cast("decimal(38,0)") * col("w")).as("__c"))
-        .groupBy(col("dst")).agg(sum(col("__c")).as("__m"))
-        .localCheckpoint(true)
+        .groupBy(col("dst")).agg(sum(col("__c")).as("__m")))
       val mx = sums.agg(max(col("__m")).as("__mx"))
-      r = nodes.join(sums, nodes("node") === sums("dst"), "left")
+      nodes.join(sums, nodes("node") === sums("dst"), "left")
         .crossJoin(broadcast(mx))
         .select(col("node"), expr(
           """CASE WHEN __mx IS NULL OR __mx = 0 THEN cast(0 as bigint)
             |     ELSE cast((coalesce(__m, 0) * 1000000) div __mx as bigint)
             |END""".stripMargin).as("cm"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    r.select(col("node"), col("cm").as("centrality_micro"))
+    }.select(col("node"), col("cm").as("centrality_micro"))
   }
 
   /** Personalized PageRank with a FIXED iteration count — [[pagerank]]'s
@@ -270,27 +254,20 @@ object Graph {
         col(dstCol).cast("long").as("dst"), w.as("__w"))
       .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("w"))
       .filter(col("w") > 0) // zero/negative collapsed weights carry no flow
-    val e = ew.join(ew.groupBy(col("src")).agg(sum(col("w")).as("ow")), "src")
-      .localCheckpoint(true)
-    val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-      .localCheckpoint(true)
+    val e = Pin(ew.join(ew.groupBy(col("src")).agg(sum(col("w")).as("ow")), "src"))
+    val sd = Pin(seeds.select(col(seedCol).cast("long").as("node")).distinct())
     val base = (1000L - dampMilli) * 1000L
 
-    var ranks = sd.withColumn("rank_micro", lit(1000000L))
-    var i = 0
-    while (i < iters) {
+    Pin.rounds(sd.withColumn("rank_micro", lit(1000000L)), iters) { (ranks, _) =>
       val pushed = ranks.join(e, ranks("node") === e("src"))
         .select(col("dst"), expr("(rank_micro * w) div ow").as("__c"))
         .groupBy(col("dst")).agg(sum(col("__c")).as("__m"))
         .select(col("dst").as("node"),
           expr(s"(__m * $dampMilli) div 1000").as("__part"))
-      ranks = sd.select(col("node"), lit(base).as("__part"))
+      sd.select(col("node"), lit(base).as("__part"))
         .union(pushed)
         .groupBy(col("node")).agg(sum(col("__part")).as("rank_micro"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    ranks.filter(col("rank_micro") > 0)
+    }.filter(col("rank_micro") > 0)
   }
 
   /** Two-hop in-neighborhood aggregate — "what reaches this address
@@ -323,12 +300,12 @@ object Graph {
                   dstCol: String = "dst",
                   weightCol: Option[String] = None): DataFrame = {
     val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    val ew = edges
+    // reused: inflow agg + both join sides
+    val ew = Pin(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"), w.as("__w"))
       .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("w"))
-      .filter(col("w") > 0) // non-positive collapsed weights carry no paths
-      .localCheckpoint(true) // reused: inflow agg + both join sides
+      .filter(col("w") > 0)) // non-positive collapsed weights carry no paths
     val inflow = ew.groupBy(col("dst")).agg(sum(col("w")).as("iw"))
       .select(col("dst").as("mid"), col("iw"))
     val pathAgg = ew.select(col("src").as("mid"), col("dst").as("node"), col("w"))
@@ -386,7 +363,7 @@ object Graph {
     * Pinned (eager localCheckpoint) because every caller reuses it at
     * least twice. */
   private def orient(und: DataFrame, deg: DataFrame): DataFrame =
-    und
+    Pin(und
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
       .select(
@@ -394,8 +371,7 @@ object Graph {
             || (col("du") === col("dv") && col("u") < col("v")),
           struct(col("u").as("s"), col("v").as("t")))
           .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"))
-      .localCheckpoint(true)
+      .select(col("e.s").as("s"), col("e.t").as("t")))
 
   /** Closed triangles of the oriented edge set, one row (s, x, y) per
     * triangle — s is the order-minimal apex, x < y its out-pair. */
@@ -435,9 +411,8 @@ object Graph {
     * the closing probe. */
   def triangleCount(edges: DataFrame, srcCol: String = "src",
                     dstCol: String = "dst"): DataFrame = {
-    val und = undirected(edges, srcCol, dstCol)
-      .localCheckpoint(true) // reused: degrees + orient
-    val deg = degrees(und).localCheckpoint(true) // reused: orient + census
+    val und = Pin(undirected(edges, srcCol, dstCol)) // reused: degrees + orient
+    val deg = Pin(degrees(und)) // reused: orient + census
     val tri = closedTriangles(orient(und, deg))
       .agg(count(lit(1)).as("n_triangles"))
     val wedges = deg
@@ -477,14 +452,8 @@ object Graph {
           struct(col("x").as("u"), col("y").as("v")))).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"))
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
-    var live = undirected(edges, srcCol, dstCol).localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
-      live = live
-        .join(supportOf(live).filter(col("support") >= k - 2),
-          Seq("u", "v"), "left_semi")
-        .localCheckpoint(true)
-      r += 1
+    val live = Pin.rounds(Pin(undirected(edges, srcCol, dstCol)), rounds) { (cur, _) =>
+      cur.join(supportOf(cur).filter(col("support") >= k - 2), Seq("u", "v"), "left_semi")
     }
     live.join(supportOf(live), Seq("u", "v"), "left")
       .select(col("u"), col("v"),
@@ -500,9 +469,8 @@ object Graph {
     * [[triangleCount]] plus one |V|-row left join. */
   def localClustering(edges: DataFrame, srcCol: String = "src",
                       dstCol: String = "dst"): DataFrame = {
-    val und = undirected(edges, srcCol, dstCol)
-      .localCheckpoint(true) // reused: degrees + orient
-    val deg = degrees(und).localCheckpoint(true) // reused: orient + output
+    val und = Pin(undirected(edges, srcCol, dstCol)) // reused: degrees + orient
+    val deg = Pin(degrees(und)) // reused: orient + output
     val perNode = closedTriangles(orient(und, deg))
       .select(explode(array(col("s"), col("x"), col("y"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
@@ -547,25 +515,19 @@ object Graph {
            srcCol: String = "src", dstCol: String = "dst",
            weightCol: String = "w"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col(srcCol).cast("long").as("__s"),
+    val e = Pin(edges.select(col(srcCol).cast("long").as("__s"),
         col(dstCol).cast("long").as("__d"),
         col(weightCol).cast("long").as("__w"))
-      .filter(col("__w") >= 0)
-      .localCheckpoint(true) // reused every round
-    var dist = seeds.select(col("node").cast("long").as("node"),
+      .filter(col("__w") >= 0)) // reused every round
+    val dist0 = Pin(seeds.select(col("node").cast("long").as("node"),
         lit(0L).as("dist"))
-      .distinct()
-      .localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
+      .distinct())
+    Pin.rounds(dist0, rounds) { (dist, _) =>
       val relaxed = dist.join(e, col("node") === col("__s"))
         .select(col("__d").as("node"), (col("dist") + col("__w")).as("dist"))
-      dist = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-      r += 1
     }
-    dist
   }
 
   /** Landmark distance sketch (Potamias et al., "Fast shortest path
@@ -587,26 +549,21 @@ object Graph {
                         rounds: Int = 3,
                         srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col(srcCol).cast("long").as("__s"),
+    val e = Pin(edges.select(col(srcCol).cast("long").as("__s"),
         col(dstCol).cast("long").as("__d"))
       .filter(col("__s").isNotNull && col("__d").isNotNull)
-      .distinct().localCheckpoint(true)
-    var dist = landmarks.select(col("node").cast("long").as("node"))
+      .distinct())
+    val dist0 = Pin(landmarks.select(col("node").cast("long").as("node"))
       .distinct()
-      .select(col("node"), col("node").as("landmark"), lit(0).as("hops"))
-      .localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
+      .select(col("node"), col("node").as("landmark"), lit(0).as("hops")))
+    Pin.rounds(dist0, rounds) { (dist, _) =>
       val relaxed = dist.join(e, col("node") === col("__s"))
         .select(col("__d").as("node"), col("landmark"),
           (col("hops") + 1).as("hops"))
-      dist = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy(col("node"), col("landmark"))
         .agg(min(col("hops")).as("hops"))
-        .localCheckpoint(true)
-      r += 1
     }
-    dist
   }
 
   /** Distance estimation from a [[landmarkDistances]] sketch: for each
@@ -651,21 +608,20 @@ object Graph {
                 srcCol: String = "src", dstCol: String = "dst",
                 seedCol: String = "node"): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val e = edges
+    val e = Pin(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint(true)
-    var reached = seeds.select(col(seedCol).cast("long").as("node"))
-      .distinct().withColumn("hops", lit(0)).localCheckpoint(true)
+      .distinct())
+    var reached = Pin(seeds.select(col(seedCol).cast("long").as("node"))
+      .distinct().withColumn("hops", lit(0)))
     var frontier = reached.select(col("node"))
     var h = 1
     while (h <= maxHops) {
-      val next = frontier.join(e, frontier("node") === e("src"))
+      val next = Pin(frontier.join(e, frontier("node") === e("src"))
         .select(col("dst").as("node")).distinct()
         .join(reached.select(col("node")), Seq("node"), "left_anti")
-        .withColumn("hops", lit(h))
-        .localCheckpoint(true)
+        .withColumn("hops", lit(h)))
       // lazy union of the pinned per-hop frames (r16): re-checkpointing
       // the growing reached set materialized |reached| rows per hop —
       // quadratic total bytes and one extra blocking job per round — for
@@ -712,24 +668,20 @@ object Graph {
       .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("w"))
       .filter(col("w") > 0)
     val outw = ew.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val e = ew.join(outw, "src").localCheckpoint(true)
-    val srcs = e.select(col("src")).distinct().localCheckpoint(true)
+    val e = Pin(ew.join(outw, "src"))
+    val srcs = Pin(e.select(col("src")).distinct())
 
-    var taint = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-      .withColumn("taint_micro", lit(1000000L)).localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
+    val taint0 = Pin(seeds.select(col(seedCol).cast("long").as("node")).distinct()
+      .withColumn("taint_micro", lit(1000000L)))
+    Pin.rounds(taint0, iters) { (taint, _) =>
       val pushed = taint.join(e, taint("node") === e("src"))
         .select(col("dst"), expr("(taint_micro * w) div ow").as("__c"))
         .groupBy(col("dst")).agg(sum(col("__c")).as("taint_micro"))
         .select(col("dst").as("node"), col("taint_micro"))
       val absorbed = taint.join(srcs, taint("node") === srcs("src"), "left_anti")
-      taint = pushed.union(absorbed)
+      pushed.union(absorbed)
         .groupBy(col("node")).agg(sum(col("taint_micro")).as("taint_micro"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    taint.filter(col("taint_micro") > 0)
+    }.filter(col("taint_micro") > 0)
   }
 
   /** K-core membership via FIXED-ROUND peeling — the dense-subgraph
@@ -752,18 +704,13 @@ object Graph {
             srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var live = undirected(edges, srcCol, dstCol).localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
+    degrees(Pin.rounds(Pin(undirected(edges, srcCol, dstCol)), rounds) { (live, _) =>
       val keep = degrees(live).filter(col("deg") >= k).select(col("node"))
-      live = live
+      live
         .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-        .localCheckpoint(true)
-      r += 1
-    }
-    degrees(live)
+    })
   }
 
   /** Community detection by synchronous label propagation (Raghavan et al.
@@ -806,15 +753,14 @@ object Graph {
                                         dstCol: String,
                                         weightCol: Option[String]): DataFrame = {
     val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    edges
+    Pin(edges
       .select(explode(array(
         struct(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"), w.as("__w")),
         struct(col(dstCol).cast("long").as("a"), col(srcCol).cast("long").as("b"), w.as("__w"))))
         .as("__e"))
       .select(col("__e.a").as("a"), col("__e.b").as("b"), col("__e.__w").as("__w"))
       .groupBy(col("a"), col("b")).agg(sum(col("__w")).as("w"))
-      .filter(col("w") > 0)
-      .localCheckpoint(true)
+      .filter(col("w") > 0))
   }
 
   /** [[labelPropagation]] over a pre-built [[symmetrizeWeighted]] frame
@@ -822,10 +768,8 @@ object Graph {
   private[graft] def labelPropagationSym(sym: DataFrame,
                                          rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val nodes = sym.select(col("a").as("node")).distinct().localCheckpoint(true)
-    var labels = nodes.withColumn("label", col("node"))
-    var r = 0
-    while (r < rounds) {
+    val nodes = Pin(sym.select(col("a").as("node")).distinct())
+    Pin.rounds(nodes.withColumn("label", col("node")), rounds) { (labels, _) =>
       val votes = sym.join(labels, sym("b") === labels("node"))
         .groupBy(col("a"), col("label")).agg(sum(col("w")).as("__s"))
         .groupBy(col("a"))
@@ -834,12 +778,9 @@ object Graph {
       // every node in `nodes` has >= 1 neighbor by construction, but the
       // left join + coalesce keeps the contract total if callers pass a
       // pre-filtered label frame in a future variant
-      labels = nodes.join(votes, Seq("node"), "left")
+      nodes.join(votes, Seq("node"), "left")
         .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-        .localCheckpoint(true)
-      r += 1
     }
-    labels
   }
 
   /** Graph coarsening: contract a weighted digraph by a node→community
@@ -928,15 +869,15 @@ object Graph {
   def scc(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
           maxRounds: Int = 10, maxPropIter: Int = 50,
           localThreshold: Long = 200000L): DataFrame = {
-    val e0 = edges
+    val e0 = Pin(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull
         && col("src") =!= col("dst"))
-      .distinct().localCheckpoint(true)
-    var nodes = e0.select(col("src").as("node"))
+      .distinct())
+    var nodes = Pin(e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
+      .distinct())
     var live = e0
     val spark = edges.sparkSession
     import spark.implicits._
@@ -949,19 +890,22 @@ object Graph {
       // 1. trim: no in-edges or no out-edges -> singleton SCC
       val srcs = live.select(col("src").as("node")).distinct()
       val dsts = live.select(col("dst").as("node")).distinct()
-      val trimmed = nodes.join(srcs, Seq("node"), "left_anti")
+      val trimmed = Pin(nodes.join(srcs, Seq("node"), "left_anti")
         .union(nodes.join(dsts, Seq("node"), "left_anti"))
         .distinct()
-        .select(col("node"), col("node").as("scc"))
-        .localCheckpoint(true)
-      assigned = assigned.union(trimmed).localCheckpoint(true)
-      nodes = nodes.join(trimmed, Seq("node"), "left_anti").localCheckpoint(true)
+        .select(col("node"), col("node").as("scc")))
+      // each state pin is released once its successor is materialized
+      val trimSuperseded = Seq(assigned, nodes, trimmed)
+      assigned = Pin(assigned.union(trimmed))
+      nodes = Pin(nodes.join(trimmed, Seq("node"), "left_anti"))
+      trimSuperseded.foreach(Pin.release)
       remaining = nodes.count()
       if (remaining > 0) {
-        live = live
+        val live0 = live
+        live = Pin(live
           .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .localCheckpoint(true)
+          .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+        Pin.release(live0)
 
         // 2. Multistep local finish: the remnant fits — stop paying
         // scheduler round-trips per hop and solve it serially
@@ -970,15 +914,16 @@ object Graph {
             .map(r => (r.getLong(0), r.getLong(1)))
           val ns = nodes.select(col("node")).collect().map(_.getLong(0))
           val labeled = tarjanScc(ns, es)
-          assigned = assigned
-            .union(spark.createDataFrame(labeled).toDF("node", "scc"))
-            .localCheckpoint(true)
+          val assigned0 = assigned
+          assigned = Pin(assigned
+            .union(spark.createDataFrame(labeled).toDF("node", "scc")))
+          Pin.release(assigned0)
           remaining = 0
           round += 1
         } else {
 
         // 3. color to fixpoint: color(v) = max id that reaches v
-        var colors = nodes.withColumn("color", col("node")).localCheckpoint(true)
+        var colors = Pin(nodes.withColumn("color", col("node")))
         var prevSum = colors.agg(sum(col("color"))).collect()(0).getLong(0)
         var converged = false
         var it = 0
@@ -986,12 +931,12 @@ object Graph {
           val incoming = live.join(colors, live("src") === colors("node"))
             .select(live("dst").as("node"), col("color"))
           val obs = new org.apache.spark.sql.Observation()
-          val updated = colors.select(col("node"), col("color"))
+          val updated = Pin(colors.select(col("node"), col("color"))
             .union(incoming)
             .groupBy(col("node")).agg(max(col("color")).as("color"))
-            .observe(obs, sum(col("color")).as("color_sum"))
-            .localCheckpoint(true)
+            .observe(obs, sum(col("color")).as("color_sum")))
           val newSum = obs.get("color_sum").asInstanceOf[Number].longValue()
+          Pin.release(colors)
           colors = updated
           converged = newSum == prevSum // colors are monotone non-decreasing
           prevSum = newSum
@@ -1004,35 +949,36 @@ object Graph {
         // hop is ONE job: the frontier size rides the checkpoint's own
         // Observation, and the visited set is a union of already-
         // checkpointed frontiers (no per-hop re-checkpoint of it)
-        var members = colors.filter(col("color") === col("node"))
-          .select(col("node"), col("node").as("scc"))
-          .localCheckpoint(true)
+        var members = Pin(colors.filter(col("color") === col("node"))
+          .select(col("node"), col("node").as("scc")))
         var frontier = members
+        val memberPins = scala.collection.mutable.ArrayBuffer(members)
         var fc = 1L
         while (fc > 0) {
           val obs = new org.apache.spark.sql.Observation()
-          val preds = live.join(frontier, live("dst") === frontier("node"))
+          val preds = Pin(live.join(frontier, live("dst") === frontier("node"))
             .select(live("src").as("node"), col("scc"))
             .distinct()
             .join(colors, Seq("node"))
             .filter(col("color") === col("scc"))
             .select(col("node"), col("scc"))
             .join(members, Seq("node"), "left_anti")
-            .observe(obs, count(lit(1)).as("n"))
-            .localCheckpoint(true)
+            .observe(obs, count(lit(1)).as("n")))
           fc = Option(obs.get("n").asInstanceOf[Number])
             .map(_.longValue()).getOrElse(0L)
           members = members.union(preds) // inputs both checkpointed
+          memberPins += preds
           frontier = preds
         }
 
         // 5. retire the assigned SCCs from the live subgraph
-        assigned = assigned.union(members).localCheckpoint(true)
-        nodes = nodes.join(members, Seq("node"), "left_anti").localCheckpoint(true)
-        live = live
+        val superseded = Seq(assigned, nodes, live, colors) ++ memberPins
+        assigned = Pin(assigned.union(members))
+        nodes = Pin(nodes.join(members, Seq("node"), "left_anti"))
+        live = Pin(live
           .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .localCheckpoint(true)
+          .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+        superseded.foreach(Pin.release)
         remaining = nodes.count()
         }
       }
@@ -1151,16 +1097,15 @@ object Graph {
            weightCol: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    val ew = edges
+    val ew = Pin(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"), w.as("__w"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .groupBy(col("src"), col("dst"))
       .agg(sum(col("__w")).cast("decimal(38,0)").as("w"))
-      .filter(col("w") > 0)
-      .localCheckpoint(true)
-    val nodes = ew.select(col("src").as("node"))
-      .union(ew.select(col("dst").as("node"))).distinct().localCheckpoint(true)
+      .filter(col("w") > 0))
+    val nodes = Pin(ew.select(col("src").as("node"))
+      .union(ew.select(col("dst").as("node"))).distinct())
     val one = lit(1L).cast("decimal(38,0)")
     var hub = nodes.withColumn("hub_score", one)
     var auth = nodes.withColumn("auth_score", one)
@@ -1169,17 +1114,19 @@ object Graph {
       val a = hub.join(ew, hub("node") === ew("src"))
         .select(col("dst"), (col("w") * col("hub_score")).as("__c"))
         .groupBy(col("dst")).agg(sum(col("__c")).as("__s"))
-      auth = nodes.join(a, nodes("node") === a("dst"), "left")
+      // each score frame is read only by the other's next update, so the
+      // previous round's pin is dead once that update is materialized
+      Pin.release(auth)
+      auth = Pin(nodes.join(a, nodes("node") === a("dst"), "left")
         .select(col("node"),
-          coalesce(col("__s"), lit(0)).cast("decimal(38,0)").as("auth_score"))
-        .localCheckpoint(true)
+          coalesce(col("__s"), lit(0)).cast("decimal(38,0)").as("auth_score")))
       val h = auth.join(ew, auth("node") === ew("dst"))
         .select(col("src"), (col("w") * col("auth_score")).as("__c"))
         .groupBy(col("src")).agg(sum(col("__c")).as("__s"))
-      hub = nodes.join(h, nodes("node") === h("src"), "left")
+      Pin.release(hub)
+      hub = Pin(nodes.join(h, nodes("node") === h("src"), "left")
         .select(col("node"),
-          coalesce(col("__s"), lit(0)).cast("decimal(38,0)").as("hub_score"))
-        .localCheckpoint(true)
+          coalesce(col("__s"), lit(0)).cast("decimal(38,0)").as("hub_score")))
       r += 1
     }
     hub.join(auth, Seq("node"))
@@ -1214,7 +1161,7 @@ object Graph {
                      topK: Int = 20, srcCol: String = "src",
                      dstCol: String = "dst"): DataFrame = {
     require(maxCenterDeg >= 2, s"maxCenterDeg must be >= 2, got $maxCenterDeg")
-    val und = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    val und = Pin(undirected(edges, srcCol, dstCol))
     val deg = degrees(und)
     // adjacency of eligible centers: (z, neighbor), deg(z) <= cap
     val adj = und.select(col("u").as("z"), col("v").as("n"))
@@ -1317,7 +1264,7 @@ object Graph {
     * Returns ONE row: (m, n_comm, sum_e_in, q_num, q_den, q_milli). */
   def modularity(edges: DataFrame, labels: DataFrame,
                  srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val und = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    val und = Pin(undirected(edges, srcCol, dstCol))
     val deg = degrees(und)
     val l = labels.select(col("node"), col("label"))
     // intra-community edge count per label: both endpoints carry the label
@@ -1362,7 +1309,7 @@ object Graph {
     * equi-shuffles on node id / label. */
   def conductance(edges: DataFrame, labels: DataFrame,
                   srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val und = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    val und = Pin(undirected(edges, srcCol, dstCol))
     val deg = degrees(und)
     val l = labels.select(col("node"), col("label"))
     val cut = und
@@ -1431,13 +1378,10 @@ object Graph {
     * `sym`, and Σ_i k_i = 2m exactly. */
   private[graft] def louvainMoveSym(sym: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val deg = sym.groupBy(col("a")).agg(sum(col("w")).as("k"))
-      .localCheckpoint(true)
+    val deg = Pin(sym.groupBy(col("a")).agg(sum(col("w")).as("k")))
     // 2m as a 1-row broadcast — the only "global" the gain needs
     val m2 = deg.agg(sum(col("k")).as("__m2"))
-    var labels = deg.select(col("a").as("node"), col("a").as("label"))
-    var r = 0
-    while (r < rounds) {
+    Pin.rounds(deg.select(col("a").as("node"), col("a").as("label")), rounds) { (labels, r) =>
       val par = r % 2
       // k_{i,in}(c): weight from MOVER node a into community c among its
       // neighbors; the union row (a, own, 0) keeps the STAY candidate
@@ -1467,13 +1411,10 @@ object Graph {
         .groupBy(col("a"))
         .agg(max(struct(col("__gain"), (-col("label")).as("__nl"))).as("__m"))
         .select(col("a").as("node"), (-col("__m.__nl")).as("label"))
-      labels = labels
+      labels
         .filter(pmod(col("node"), lit(2L)) =!= lit(par.toLong))
         .unionByName(moved)
-        .localCheckpoint(true)
-      r += 1
     }
-    labels
   }
 
   /** Pivot-sampled harmonic centrality (Boldi & Vigna 2014, "Axioms for
@@ -1504,25 +1445,19 @@ object Graph {
     require(hops >= 1, s"hops must be >= 1, got $hops")
     // undirected hop adjacency (distances ignore direction and weight);
     // the distinct-pair projection runs ONCE, both directions union it
-    val und0 = undirected(edges, srcCol, dstCol).localCheckpoint(true)
-    val adj = und0.select(col("u").as("a"), col("v").as("b"))
-      .unionByName(und0.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(true)
-    var dist = pivots.select(col(pivotCol).cast("long").as("p"))
+    val und0 = Pin(undirected(edges, srcCol, dstCol))
+    val adj = Pin(und0.select(col("u").as("a"), col("v").as("b"))
+      .unionByName(und0.select(col("v").as("a"), col("u").as("b"))))
+    val dist0 = Pin(pivots.select(col(pivotCol).cast("long").as("p"))
       .distinct()
-      .select(col("p"), col("p").as("v"), lit(0L).as("d"))
-      .localCheckpoint(true)
-    var h = 0
-    while (h < hops) {
-      val expanded = dist
+      .select(col("p"), col("p").as("v"), lit(0L).as("d")))
+    Pin.rounds(dist0, hops) { (dist, _) =>
+      dist
         .join(adj, dist("v") === adj("a"))
         .select(col("p"), col("b").as("v"), (col("d") + 1L).as("d"))
         .unionByName(dist)
         .groupBy(col("p"), col("v")).agg(min(col("d")).as("d"))
-      dist = expanded.localCheckpoint(true)
-      h += 1
-    }
-    dist.filter(col("d") > 0)
+    }.filter(col("d") > 0)
       .groupBy(col("v").as("node"))
       .agg(sum(expr("1000000 div d")).as("harmonic_micro"),
         count(lit(1)).as("n_reached"))
@@ -1556,13 +1491,11 @@ object Graph {
                        pivotCol: String = "node"): DataFrame = {
     require(hops >= 1, s"hops must be >= 1, got $hops")
     val und0 = undirected(edges, srcCol, dstCol)
-    val adj = und0.select(col("u").as("a"), col("v").as("b"))
-      .unionByName(und0.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(true)
+    val adj = Pin(und0.select(col("u").as("a"), col("v").as("b"))
+      .unionByName(und0.select(col("v").as("a"), col("u").as("b"))))
     // forward: levels[h] = (p, v, sigma) for nodes FIRST reached at hop h
-    val l0 = pivots.select(col(pivotCol).cast("long").as("p")).distinct()
-      .select(col("p"), col("p").as("v"), lit(1L).as("sigma"))
-      .localCheckpoint(true)
+    val l0 = Pin(pivots.select(col(pivotCol).cast("long").as("p")).distinct()
+      .select(col("p"), col("p").as("v"), lit(1L).as("sigma")))
     // r16 (r15 verdict #8): the visited set is a LAZY union of the pinned
     // level frames — the r15 form re-checkpointed the growing union every
     // level, materializing |seen| rows per hop (quadratic total bytes) and
@@ -1576,11 +1509,10 @@ object Graph {
       val cand = frontier.join(adj, frontier("v") === adj("a"))
         .groupBy(col("p"), col("b").as("w"))
         .agg(sum(col("sigma")).as("sigma"))
-      val next = cand
+      val next = Pin(cand
         .join(seen.select(col("p"), col("v").as("w")),
           Seq("p", "w"), "left_anti")
-        .select(col("p"), col("w").as("v"), col("sigma"))
-        .localCheckpoint(true)
+        .select(col("p"), col("w").as("v"), col("sigma")))
       levels += next
       seen = seen.unionByName(next.select(col("p"), col("v")))
       frontier = next
@@ -1609,11 +1541,10 @@ object Graph {
         .select(col("p"), col("__vprev").as("v"),
           expr("(__sv * (1000000 + __dw)) div __sw").as("__c"))
         .groupBy(col("p"), col("v")).agg(sum(col("__c")).as("delta_micro"))
-      val curDelta = cur.select(col("p"), col("v"))
+      val curDelta = Pin(cur.select(col("p"), col("v"))
         .join(contrib, Seq("p", "v"), "left")
         .select(col("p"), col("v"),
-          coalesce(col("delta_micro"), lit(0L)).as("delta_micro"))
-        .localCheckpoint(true)
+          coalesce(col("delta_micro"), lit(0L)).as("delta_micro")))
       acc = if (acc == null) curDelta.filter(col("v") =!= col("p"))
         else acc.unionByName(curDelta.filter(col("v") =!= col("p")))
       delta = curDelta

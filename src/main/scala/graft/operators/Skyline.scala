@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Skyline (Pareto-frontier) query (Börzsönyi et al. 2001): the rows not
   * dominated by any other row — `s` dominates `r` iff `s.x <= r.x` and
   * `s.y <= r.y` with at least one strict. The multi-criteria "best
@@ -55,9 +57,8 @@ object Skyline {
         && (col(xCol) > col("__px") || col(yCol) > col("__py"))))
       .drop("__px", "__py")
     val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val sliced = pruned.repartitionByRange(nParts, col(xCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+    val sliced = Pin(pruned.repartitionByRange(nParts, col(xCol))
+      .withColumn("__pid", spark_partition_id()))
     val bySlice = Window.partitionBy(col("__pid")).orderBy(col(xCol))
     val strictMin = bySlice.rangeBetween(Window.unboundedPreceding, -1)
     val inclMin = bySlice.rangeBetween(Window.unboundedPreceding, 0)

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.functions.ColumnFns._
 import graft.llm.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
 import graft.streaming.StreamingOps
@@ -1733,8 +1734,7 @@ object LlmQueries {
         val norm = Tables(s, d, "documents")
           .select(col("doc_id"), col("source"),
             TextAnalysis.normalizeText(col("text")).as("t"))
-        val gated = norm.filter(size(tokens(col("t"))) >= 10)
-          .localCheckpoint(true)
+        val gated = Pin(norm.filter(size(tokens(col("t"))) >= 10))
         val survivors = Dedup.exact(gated, "doc_id", "t").select(col("doc_id"))
         val h = pmod(md5Long(col("doc_id").cast("string")), lit(100))
         gated.join(survivors, "doc_id")
@@ -1777,17 +1777,14 @@ object LlmQueries {
         // normalize ~8x through the chain — measured 27 s -> ~11 s at
         // the 10x gate from these three checkpoints alone. This is what
         // a real pipeline does anyway: materialize stage boundaries.
-        val norm = Tables(s, d, "documents")
+        val norm = Pin(Tables(s, d, "documents")
           .select(col("doc_id"), col("source"),
-            TextAnalysis.normalizeText(col("text")).as("t"))
-          .localCheckpoint(true)
-        val gated = norm.join(
+            TextAnalysis.normalizeText(col("text")).as("t")))
+        val gated = Pin(norm.join(
           TextAnalysis.globalQualityGate(norm, "doc_id", "t", pct = 0.5)
-            .select(col("doc_id")), "doc_id")
-          .localCheckpoint(true)
-        val survivors = gated.join(
-          Dedup.exact(gated, "doc_id", "t").select(col("doc_id")), "doc_id")
-          .localCheckpoint(true)
+            .select(col("doc_id")), "doc_id"))
+        val survivors = Pin(gated.join(
+          Dedup.exact(gated, "doc_id", "t").select(col("doc_id")), "doc_id"))
         val cleaned = Dedup.removeDuplicateSpans(survivors, "doc_id", "t", k = 5)
         survivors.join(cleaned, "doc_id")
           .select(col("source"), col("n_spans").cast("long").as("n_spans"),
@@ -4037,14 +4034,13 @@ object LlmQueries {
         // identical rows). The dispatch then sees the pinned frame's
         // ACTUAL bytes instead of a corpus⋈broadcast join estimate —
         // native window at spec scale, two-phase above the bound.
-        val deduped = gated
+        val deduped = Pin(gated
           .withColumn("__h", md5(col("text")))
           .withColumn("__rn", row_number().over(
             Window.partitionBy("__h").orderBy("doc_id")))
           .filter(col("__rn") === 1)
           .select(col("doc_id"), col("source"),
-            length(col("text")).cast("long").as("len"))
-          .localCheckpoint(true)
+            length(col("text")).cast("long").as("len")))
         val alloc = Sampling.neymanAllocation(deduped, "source", "len", n = 50)
           .select(col("stratum").as("source"), col("n_alloc"))
         // the per-source hash-rank draw rides the grouped two-phase row
@@ -4700,8 +4696,7 @@ object LlmQueries {
     // output (the pair-level stream never leaves the aggregate).
     Q("graph_triad_motifs", "GRAPH",
       (s, d) => {
-        val e = transitionEdges(s, d).select(col("src"), col("dst")).distinct()
-          .localCheckpoint(true)
+        val e = Pin(transitionEdges(s, d).select(col("src"), col("dst")).distinct())
         // ONE evaluation of the path explosion with PACKED-LONG closure
         // probes: both closures look up the SAME edge set, keyed
         // (src, dst) packed into one long (ids < 2^31 by domain; packing
@@ -4713,8 +4708,7 @@ object LlmQueries {
         // original three-action form re-ran the explosion per count).
         val K = 1L << 31
         val edgeKeys = broadcast(
-          e.select((col("src") * K + col("dst")).as("__k"), lit(1L).as("__hit"))
-            .localCheckpoint(true))
+          Pin(e.select((col("src") * K + col("dst")).as("__k"), lit(1L).as("__hit"))))
         val paths = e.select(col("src").as("u"), col("dst").as("m"))
           .join(e.select(col("src").as("m"), col("dst").as("w")), "m")
           .filter(col("u") =!= col("w"))
@@ -4907,9 +4901,9 @@ object LlmQueries {
     Q("graph_two_hop_sketch", "GRAPH",
       (s, d) => {
         val k = 32
-        val ew = transitionEdges(s, d)
-          .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-          .localCheckpoint(true) // reused: inflow + mid sketch + out-edges
+        // reused: inflow + mid sketch + out-edges
+        val ew = Pin(transitionEdges(s, d)
+          .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")))
         val inflow = ew.groupBy(col("dst")).agg(sum(col("w")).as("iw"))
           .select(col("dst").as("mid"), col("iw"))
         val pathAgg = ew
@@ -5021,7 +5015,7 @@ object LlmQueries {
     // both engines, so hop labels match exactly.
     Q("graph_khop_taint", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val nodes = ew.select(col("src").as("node"))
           .union(ew.select(col("dst").as("node"))).distinct()
         graft.operators.Graph.khopReach(ew,
@@ -5119,7 +5113,7 @@ object LlmQueries {
     // distances a hop counter cannot express.
     Q("graph_sssp", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val seeds = ew.agg(min(col("src")).as("node"))
         graft.operators.Graph.sssp(ew, seeds, rounds = 3).orderBy("node")
       },
@@ -5145,7 +5139,7 @@ object LlmQueries {
     // unrolls the same relax rounds keyed on (node, landmark).
     Q("graph_landmark_dist", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val sym = ew.select(col("src"), col("dst"))
           .unionByName(ew.select(col("dst").as("src"), col("src").as("dst")))
         val lms = sym.select(col("src").as("node")).distinct()
@@ -5178,7 +5172,7 @@ object LlmQueries {
     // L linear BFS passes once, then O(L) per query forever.
     Q("graph_landmark_estimate", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val sym = ew.select(col("src"), col("dst"))
           .unionByName(ew.select(col("dst").as("src"), col("src").as("dst")))
         val nodes = sym.select(col("src").as("node")).distinct()
@@ -5276,7 +5270,7 @@ object LlmQueries {
     // stage.
     Q("graph_supergraph", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val labels = graft.operators.Graph.labelPropagation(
           ew, rounds = 2, weightCol = Some("w"))
         graft.operators.Graph.coarsen(ew, labels, weightCol = Some("w"))
@@ -6709,7 +6703,7 @@ object LlmQueries {
           val ry = Await.ready(fy, inf).value.get
           (rx.get, ry.get)
         } finally pool.shutdown()
-        val j = x.join(y, "node").localCheckpoint(true)
+        val j = Pin(x.join(y, "node"))
         val nij = j.groupBy(col("lx"), col("ly")).agg(count(lit(1)).as("nij"))
         val ni = j.groupBy(col("lx")).agg(count(lit(1)).as("ni"))
         val nj = j.groupBy(col("ly")).agg(count(lit(1)).as("nj"))
@@ -6748,7 +6742,7 @@ object LlmQueries {
     // leak. Cut edges charged to both sides via a 2-element explode.
     Q("graph_conductance", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val labels = graft.operators.Graph.labelPropagation(
           ew, rounds = 2, weightCol = Some("w"))
         graft.operators.Graph.conductance(ew, labels)
@@ -6790,7 +6784,7 @@ object LlmQueries {
     // bounded audit columns and the milli read-out stay BIGINT.
     Q("graph_modularity", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val labels = graft.operators.Graph.labelPropagation(
           ew, rounds = 2, weightCol = Some("w"))
         graft.operators.Graph.modularity(ew, labels)
@@ -6854,7 +6848,7 @@ object LlmQueries {
     // this number; it should not lose to LPA's).
     Q("graph_louvain_modularity", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val labels = graft.operators.Graph.louvainMove(
           ew, rounds = 2, weightCol = Some("w"))
         graft.operators.Graph.modularity(ew, labels)
@@ -6903,7 +6897,7 @@ object LlmQueries {
     // |pivots|·|V|-bounded state; the oracle unrolls the same hops.
     Q("graph_harmonic", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val und = ew.filter(col("src") =!= col("dst"))
           .select(least(col("src"), col("dst")).as("u"),
             greatest(col("src"), col("dst")).as("v")).distinct()
@@ -6943,7 +6937,7 @@ object LlmQueries {
     // forensics ranking.
     Q("graph_betweenness", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val und = ew.filter(col("src") =!= col("dst"))
           .select(least(col("src"), col("dst")).as("u"),
             greatest(col("src"), col("dst")).as("v")).distinct()
@@ -7015,7 +7009,7 @@ object LlmQueries {
     // Integer milli ratio, truncating division.
     Q("graph_reciprocity", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
           .select(col("src"), col("dst"))
         val rec = ew.join(
           ew.select(col("dst").as("src"), col("src").as("dst")),
@@ -7085,7 +7079,7 @@ object LlmQueries {
     // cannot hide.
     Q("graph_entity_relations", "GRAPH",
       (s, d) => {
-        val ew = backboneEdges(s, d).localCheckpoint(true)
+        val ew = Pin(backboneEdges(s, d))
         val sl = graft.operators.ConnectedComponents.run(
           ew.filter(col("w") >= 4), "src", "dst")
         val nodes = ew.select(col("src").as("node"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.eth.{Enrich, EthTransforms, Ingest, Sinks}
 import graft.functions.ColumnFns._
 
@@ -433,11 +434,10 @@ object RefQueries {
         s.experimental.extraOptimizations =
           prev :+ graft.plans.BucketPredicateInference()
         try
-          s.read.parquet(path)
+          Pin(s.read.parquet(path)
             .filter(col("block_id").between(3000, 4999)) // no bucket predicate!
             .select(col("block_id"), col("l_linenumber"), col("l_quantity"))
-            .orderBy("block_id", "l_linenumber", "l_quantity")
-            .localCheckpoint(true)
+            .orderBy("block_id", "l_linenumber", "l_quantity"))
         finally s.experimental.extraOptimizations = prev
       },
       Some("""SELECT l_orderkey AS block_id, l_linenumber, l_quantity FROM lineitem

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Long-horizon + scale evidence for the mutable-corpus index
   * maintainers (VERDICT r13 tasks 2 and 5): the soaks, the index seeds and
   * the rebuild-equivalence checks behind `graft.Bench`'s `soak`,
@@ -45,8 +47,7 @@ object IndexSoak {
   def seedWinnowIndex(docs: DataFrame, indexDir: String,
                       idCol: String = "doc_id", textCol: String = "text",
                       keyBuckets: Int = 64): Unit = {
-    val fps = expectedIndex(docs, idCol, textCol, keyBuckets)
-      .localCheckpoint(true)
+    val fps = Pin(expectedIndex(docs, idCol, textCol, keyBuckets))
     graft.eth.Sinks.upsertBucketedParquet(fps, indexDir,
       pkCols = Seq(idCol, "fp_hash"), bucketCol = "kb",
       sortCols = Seq("fp_hash", idCol))
@@ -62,8 +63,7 @@ object IndexSoak {
   def rebuildDiff(spark: SparkSession, indexDir: String, finalDocs: DataFrame,
                   idCol: String = "doc_id", textCol: String = "text",
                   keyBuckets: Int = 64): (Long, Long) = {
-    val want = expectedIndex(finalDocs, idCol, textCol, keyBuckets)
-      .localCheckpoint(true)
+    val want = Pin(expectedIndex(finalDocs, idCol, textCol, keyBuckets))
     val got = spark.read.parquet(indexDir)
       .select(col(idCol), col("fp_hash"), col("kb").cast("long").as("kb"))
     val idxDiff = got.exceptAll(want).count() + want.exceptAll(got).count()
@@ -89,9 +89,18 @@ object IndexSoak {
     }
   }
 
+  /** `persistentRdds`/`storageBytes`: the RDDs the session still holds
+    * persisted after the last batch, and their block bytes (memory +
+    * disk) — what a long-running maintainer would keep. */
   case class SoakReport(walls: Seq[Double], idxDiff: Long, mapDiff: Long,
                         filesMid: Int, filesEnd: Int, finalDocsN: Long,
-                        finalIndexRows: Long)
+                        finalIndexRows: Long, persistentRdds: Int,
+                        storageBytes: Long)
+
+  private def heldBlocks(spark: SparkSession): (Int, Long) = {
+    val sc = spark.sparkContext
+    (sc.getPersistentRDDs.size, sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum)
+  }
 
   /** Deterministic soak: `nBatches` micro-batches against one live
     * maintainer. Schedule (k docs per op, ids arithmetic — no RNG):
@@ -159,13 +168,14 @@ object IndexSoak {
         if (b == nBatches / 2) filesMid = dataFileCount(spark, s"$workDir/index")
       }
     } finally q.stop()
+    val (persistentRdds, storageBytes) = heldBlocks(spark)
     val filesEnd = dataFileCount(spark, s"$workDir/index")
     val finalDocs = state.toSeq.toDF("doc_id", "text")
     val (idxDiff, mapDiff) = rebuildDiff(spark, s"$workDir/index", finalDocs,
       keyBuckets = keyBuckets)
     SoakReport(walls.toSeq, idxDiff, mapDiff, filesMid, filesEnd,
       state.size.toLong,
-      spark.read.parquet(s"$workDir/index").count())
+      spark.read.parquet(s"$workDir/index").count(), persistentRdds, storageBytes)
   }
 
   /** Deterministic doc pick: k ids from the live set, rotated by batch. */
@@ -258,8 +268,7 @@ object IndexSoak {
   def seedMediaIndex(media: org.apache.spark.sql.Dataset[MediaRecord],
                      indexDir: String, keyBuckets: Int,
                      video: Boolean): Unit = {
-    val rows = expectedMediaIndex(media, keyBuckets, video)
-      .localCheckpoint(true)
+    val rows = Pin(expectedMediaIndex(media, keyBuckets, video))
     graft.eth.Sinks.upsertBucketedParquet(rows, indexDir,
       pkCols = mediaPk(video), bucketCol = "kb",
       sortCols = if (video) Seq("band_key", "media_id", "frame_idx")
@@ -276,8 +285,7 @@ object IndexSoak {
   def mediaRebuildDiff(spark: SparkSession, indexDir: String,
                        finalMedia: org.apache.spark.sql.Dataset[MediaRecord],
                        keyBuckets: Int, video: Boolean): (Long, Long) = {
-    val want = expectedMediaIndex(finalMedia, keyBuckets, video)
-      .localCheckpoint(true)
+    val want = Pin(expectedMediaIndex(finalMedia, keyBuckets, video))
     val cols = (mediaPk(video) :+ "band_key" :+ "ahash").map(col) :+
       col("kb").cast("long").as("kb")
     val got = spark.read.parquet(indexDir).select(cols: _*)
@@ -353,6 +361,7 @@ object IndexSoak {
         if (b == nBatches / 2) filesMid = dataFileCount(spark, s"$workDir/index")
       }
     } finally q.stop()
+    val (persistentRdds, storageBytes) = heldBlocks(spark)
     val filesEnd = dataFileCount(spark, s"$workDir/index")
     val finalMedia = state.toSeq.map { case (id, (ver, nf)) =>
       MediaRecord(id, mediaPayload(id, ver, video, nf), mediaMime(video))
@@ -360,6 +369,7 @@ object IndexSoak {
     val (idxDiff, mapDiff) = mediaRebuildDiff(spark, s"$workDir/index",
       finalMedia, keyBuckets, video)
     SoakReport(walls.toSeq, idxDiff, mapDiff, filesMid, filesEnd,
-      state.size.toLong, spark.read.parquet(s"$workDir/index").count())
+      state.size.toLong, spark.read.parquet(s"$workDir/index").count(),
+      persistentRdds, storageBytes)
   }
 }

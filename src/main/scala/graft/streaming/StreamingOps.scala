@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
+import graft.Pin
+
 /** Streaming / incremental operators (SURVEY §2.6) in Structured-Streaming
   * form. Each transform is written against a plain DataFrame so the *same
   * function* runs in batch (oracle-checkable) and on `readStream` inputs —
@@ -168,42 +170,6 @@ object StreamingOps {
       .select(col(idCol), col("band"), col("matched_id"))
   }
 
-  /** The full incremental-dedup ingest loop in streaming form: per
-    * micro-batch, (1) fold the batch's bands into the index via the
-    * idempotent bucketed upsert (`pk = (id, band)` — an at-least-once
-    * replay rewrites the same rows), then (2) flag the batch against the
-    * updated index, writing match edges to a per-batch overwrite dir
-    * (replay-idempotent). Upsert-BEFORE-flag means two near-duplicates
-    * arriving in the SAME micro-batch still flag each other (the
-    * self-match filter only drops `id == id`); flag-first would leave a
-    * permanent recall hole for same-batch pairs.
-    *
-    * The index is laid out in `keyBuckets` hash buckets of the band key
-    * (not the 4 raw band ids): per-batch index IO — the upsert's
-    * read-merge-write AND the flag join's read — is proportional to the
-    * touched fraction, not the whole corpus, and write parallelism is not
-    * capped at the band count. The batch's touched-bucket list (bounded
-    * by `keyBuckets`) is computed once and drives both sides: it is
-    * passed to the upsert as `newBuckets` (skipping its fallback
-    * derivation) and filters the flag read down to the touched partitions
-    * — kb is a pure function of (band, band_key), so pruning the read to
-    * the batch's kb values loses no candidate match. Index read errors
-    * surface loudly — only the very first batch (no index yet) skips the
-    * pre-existence check, by writing before flagging.
-    */
-  /** Streaming PARTIAL-OVERLAP ingest — [[maintainBandIndexAndFlag]]'s
-    * loop over winnowing fingerprints instead of MinHash bands: per
-    * micro-batch, winnow the batch ([[graft.llm.TextAnalysis
-    * .winnowFingerprints]] — shared token runs ≥ w+k−1 share a
-    * fingerprint), fold the (id, fp_hash) postings into a hash-bucketed
-    * index (idempotent pk upsert, replay rewrites the same rows), then
-    * flag batch docs sharing ≥ `minShared` fingerprints with ANY indexed
-    * doc. Upsert-before-flag keeps same-batch overlaps visible both
-    * ways. The MOSS boilerplate rule rides the flag read: fingerprints
-    * whose pruned-index posting exceeds `maxDf` are dropped before
-    * pairing, so a license-header fingerprint every doc carries can
-    * never pay df² pair work at flag time. Index IO prunes to the
-    * batch's touched key buckets on both the upsert and the flag read. */
   /** One micro-batch of MUTABLE-CORPUS index maintenance — the shared
     * engine of the exact/band/winnow/image maintainers (r13). Inputs:
     * `rows` = the batch's CURRENT index rows, already carrying the
@@ -237,10 +203,13 @@ object StreamingOps {
     * when the pinned id set is small and a shuffled anti-join when it
     * is not, so a multi-million-row catch-up batch never materializes
     * as a driver-side literal or a forced broadcast). Returns
-    * (content buckets for the flag read, the PINNED batch rows) — the
-    * caller's flag join reads the returned frame instead of re-running
-    * the derivation (shingling / MinHash / image decode) a second
-    * time. */
+    * (content buckets for the flag read, the PINNED batch rows, the
+    * post-upsert rows of those buckets) — the caller's flag join reads
+    * the returned frames instead of re-running the derivation
+    * (shingling / MinHash / image decode) or re-reading the buckets just
+    * written. The returned frames are pins (the upsert's included) that
+    * live for one micro-batch: every caller runs inside a
+    * [[graft.Pin.scope]], which frees them once the flags are written. */
   private def upsertMutableIndex(rows: DataFrame, batchIds: DataFrame,
                                  idCol: String, pkCols: Seq[String],
                                  sortCols: Seq[String], indexDir: String,
@@ -251,11 +220,9 @@ object StreamingOps {
     def pkb(c: org.apache.spark.sql.Column) =
       pmod(graft.functions.ColumnFns.md5Long(c.cast("string")),
         lit(keyBuckets.toLong))
-    val pinned = rows.withColumn("pkb", pkb(col(idCol)))
-      .localCheckpoint(true) // ≤ batch-rows; read 4x below
-    val ids = batchIds.select(col(idCol)).distinct()
-      .withColumn("pkb", pkb(col(idCol)))
-      .localCheckpoint(true)
+    val pinned = Pin(rows.withColumn("pkb", pkb(col(idCol)))) // ≤ batch-rows; read 4x below
+    val ids = Pin(batchIds.select(col(idCol)).distinct()
+      .withColumn("pkb", pkb(col(idCol))))
     // bounded metadata (≤ keyBuckets longs each), ONE job for both
     // bucket sets (r15: was two collect jobs — the fixed per-batch
     // constant is scheduler overhead × job count, so fold)
@@ -306,6 +273,19 @@ object StreamingOps {
     (newTouched, pinned.drop("pkb"), flagIdx)
   }
 
+  /** Streaming PARTIAL-OVERLAP ingest — [[maintainBandIndexAndFlag]]'s
+    * loop over winnowing fingerprints instead of MinHash bands: per
+    * micro-batch, winnow the batch ([[graft.llm.TextAnalysis
+    * .winnowFingerprints]] — shared token runs ≥ w+k−1 share a
+    * fingerprint), fold the (id, fp_hash) postings into a hash-bucketed
+    * index (idempotent pk upsert, replay rewrites the same rows), then
+    * flag batch docs sharing ≥ `minShared` fingerprints with ANY indexed
+    * doc. Upsert-before-flag keeps same-batch overlaps visible both
+    * ways. The MOSS boilerplate rule rides the flag read: fingerprints
+    * whose pruned-index posting exceeds `maxDf` are dropped before
+    * pairing, so a license-header fingerprint every doc carries can
+    * never pay df² pair work at flag time. Index IO prunes to the
+    * batch's touched key buckets on both the upsert and the flag read. */
   def maintainWinnowIndexAndFlag(docs: DataFrame, indexDir: String,
                                  flagsDir: String, checkpointDir: String,
                                  idCol: String = "doc_id",
@@ -315,49 +295,74 @@ object StreamingOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // MUTABLE-CORPUS SAFE (r13): a changed text can DROP fingerprints
-        // whose (doc, fp_hash) pks then collide with nothing — exactly
-        // the wholesale-replace case [[upsertMutableIndex]] exists for
-        // (a doc that shrinks below the winnow window erases its rows
-        // entirely: `batchIds` comes from the RAW batch, not from fps).
-        val fps = graft.llm.TextAnalysis.winnowFingerprints(
-            batch.toDF(), idCol, textCol)
-          .select(col(idCol), col("fp_hash")).distinct()
-          .withColumn("kb", pmod(graft.functions.ColumnFns.md5Long(
-            col("fp_hash").cast("string")), lit(keyBuckets.toLong)))
-        val (newTouched, pinnedFps, flagIdx) = upsertMutableIndex(fps,
-          batch.toDF().select(col(idCol)), idCol,
-          pkCols = Seq(idCol, "fp_hash"), sortCols = Seq("fp_hash", idCol),
-          indexDir, keyBuckets)
-        val flags =
-          if (newTouched.isEmpty) {
-            // every batch doc was shorter than the winnow window: the
-            // batch indexes nothing and can overlap nothing (any STALE
-            // rows of these docs were just erased) — write the empty
-            // (typed) flags so replay stays shape-consistent
-            fps.limit(0).select(col(idCol),
-              col(idCol).as("matched_id"), lit(0L).as("n_shared"))
-          } else {
-            val wFp = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("fp_hash"))
-            // the post-upsert bucket content, served from the upsert's
-            // returned frame — no re-listing, no re-read (r15)
-            val idx = flagIdx
-              .withColumn("__df", count(lit(1)).over(wFp))
-              .filter(col("__df") <= maxDf) // MOSS boilerplate rule
-              .select(col("fp_hash"), col(idCol).as("matched_id"))
-            pinnedFps.join(idx, "fp_hash")
-              .filter(col(idCol) =!= col("matched_id"))
-              .groupBy(col(idCol), col("matched_id"))
-              .agg(count(lit(1)).as("n_shared"))
-              .filter(col("n_shared") >= minShared)
-          }
-        flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        Pin.scope {
+          val spark = batch.sparkSession
+          // MUTABLE-CORPUS SAFE (r13): a changed text can DROP fingerprints
+          // whose (doc, fp_hash) pks then collide with nothing — exactly
+          // the wholesale-replace case [[upsertMutableIndex]] exists for
+          // (a doc that shrinks below the winnow window erases its rows
+          // entirely: `batchIds` comes from the RAW batch, not from fps).
+          val fps = graft.llm.TextAnalysis.winnowFingerprints(
+              batch.toDF(), idCol, textCol)
+            .select(col(idCol), col("fp_hash")).distinct()
+            .withColumn("kb", pmod(graft.functions.ColumnFns.md5Long(
+              col("fp_hash").cast("string")), lit(keyBuckets.toLong)))
+          val (newTouched, pinnedFps, flagIdx) = upsertMutableIndex(fps,
+            batch.toDF().select(col(idCol)), idCol,
+            pkCols = Seq(idCol, "fp_hash"), sortCols = Seq("fp_hash", idCol),
+            indexDir, keyBuckets)
+          val flags =
+            if (newTouched.isEmpty) {
+              // every batch doc was shorter than the winnow window: the
+              // batch indexes nothing and can overlap nothing (any STALE
+              // rows of these docs were just erased) — write the empty
+              // (typed) flags so replay stays shape-consistent
+              fps.limit(0).select(col(idCol),
+                col(idCol).as("matched_id"), lit(0L).as("n_shared"))
+            } else {
+              val wFp = org.apache.spark.sql.expressions.Window
+                .partitionBy(col("fp_hash"))
+              // the post-upsert bucket content, served from the upsert's
+              // returned frame — no re-listing, no re-read (r15)
+              val idx = flagIdx
+                .withColumn("__df", count(lit(1)).over(wFp))
+                .filter(col("__df") <= maxDf) // MOSS boilerplate rule
+                .select(col("fp_hash"), col(idCol).as("matched_id"))
+              pinnedFps.join(idx, "fp_hash")
+                .filter(col(idCol) =!= col("matched_id"))
+                .groupBy(col(idCol), col("matched_id"))
+                .agg(count(lit(1)).as("n_shared"))
+                .filter(col("n_shared") >= minShared)
+            }
+          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .start()
 
+  /** The full incremental-dedup ingest loop in streaming form: per
+    * micro-batch, (1) fold the batch's bands into the index via the
+    * idempotent bucketed upsert (`pk = (id, band)` — an at-least-once
+    * replay rewrites the same rows), then (2) flag the batch against the
+    * updated index, writing match edges to a per-batch overwrite dir
+    * (replay-idempotent). Upsert-BEFORE-flag means two near-duplicates
+    * arriving in the SAME micro-batch still flag each other (the
+    * self-match filter only drops `id == id`); flag-first would leave a
+    * permanent recall hole for same-batch pairs.
+    *
+    * The index is laid out in `keyBuckets` hash buckets of the band key
+    * (not the 4 raw band ids): per-batch index IO — the upsert's
+    * read-merge-write AND the flag join's read — is proportional to the
+    * touched fraction, not the whole corpus, and write parallelism is not
+    * capped at the band count. The batch's touched-bucket list (bounded
+    * by `keyBuckets`) is computed once and drives both sides: it is
+    * passed to the upsert as `newBuckets` (skipping its fallback
+    * derivation) and filters the flag read down to the touched partitions
+    * — kb is a pure function of (band, band_key), so pruning the read to
+    * the batch's kb values loses no candidate match. Index read errors
+    * surface loudly — only the very first batch (no index yet) skips the
+    * pre-existence check, by writing before flagging.
+    */
   def maintainBandIndexAndFlag(docs: DataFrame, indexDir: String,
                                flagsDir: String, checkpointDir: String,
                                idCol: String = "doc_id",
@@ -366,32 +371,34 @@ object StreamingOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // MUTABLE-CORPUS SAFE (r13): [[upsertMutableIndex]] replaces a
-        // re-ingested doc's band rows wholesale via the pk→bucket side
-        // map, whatever the new band keys.
-        val bands = graft.llm.Dedup.minhashBands(batch.toDF(), idCol, textCol)
-          .withColumn("kb", pmod(graft.functions.ColumnFns.md5Long(
-            concat_ws("|", col("band"), col("band_key"))), lit(keyBuckets.toLong)))
-        val (newTouched, pinnedBands, flagIdx) = upsertMutableIndex(bands,
-          batch.toDF().select(col(idCol)), idCol,
-          pkCols = Seq(idCol, "band"), sortCols = Seq("band_key", idCol),
-          indexDir, keyBuckets)
-        val flags =
-          if (newTouched.isEmpty) {
-            // empty batch: nothing indexed, nothing to flag — typed
-            // empty so replay stays shape-consistent
-            bands.limit(0)
-              .select(col(idCol), col("band"), col(idCol).as("matched_id"))
-          } else {
-            // post-upsert bucket content from the upsert's returned frame
-            val idx = flagIdx
-              .select(col("band"), col("band_key"), col(idCol).as("matched_id"))
-            pinnedBands.join(idx, Seq("band", "band_key"))
-              .filter(col(idCol) =!= col("matched_id"))
-              .select(col(idCol), col("band"), col("matched_id"))
-          }
-        flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        Pin.scope {
+          val spark = batch.sparkSession
+          // MUTABLE-CORPUS SAFE (r13): [[upsertMutableIndex]] replaces a
+          // re-ingested doc's band rows wholesale via the pk→bucket side
+          // map, whatever the new band keys.
+          val bands = graft.llm.Dedup.minhashBands(batch.toDF(), idCol, textCol)
+            .withColumn("kb", pmod(graft.functions.ColumnFns.md5Long(
+              concat_ws("|", col("band"), col("band_key"))), lit(keyBuckets.toLong)))
+          val (newTouched, pinnedBands, flagIdx) = upsertMutableIndex(bands,
+            batch.toDF().select(col(idCol)), idCol,
+            pkCols = Seq(idCol, "band"), sortCols = Seq("band_key", idCol),
+            indexDir, keyBuckets)
+          val flags =
+            if (newTouched.isEmpty) {
+              // empty batch: nothing indexed, nothing to flag — typed
+              // empty so replay stays shape-consistent
+              bands.limit(0)
+                .select(col(idCol), col("band"), col(idCol).as("matched_id"))
+            } else {
+              // post-upsert bucket content from the upsert's returned frame
+              val idx = flagIdx
+                .select(col("band"), col("band_key"), col(idCol).as("matched_id"))
+              pinnedBands.join(idx, Seq("band", "band_key"))
+                .filter(col(idCol) =!= col("matched_id"))
+                .select(col(idCol), col("band"), col("matched_id"))
+            }
+          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .start()
@@ -424,28 +431,30 @@ object StreamingOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val keyed = batch.toDF().select(col(idCol),
-            graft.functions.ColumnFns.md5Long(col(textCol)).as("content_key"))
-          .withColumn("kb", pmod(col("content_key"), lit(keyBuckets.toLong)))
-        val (newTouched, pinnedKeyed, flagIdx) = upsertMutableIndex(keyed,
-          batch.toDF().select(col(idCol)), idCol,
-          pkCols = Seq(idCol), sortCols = Seq("content_key", idCol),
-          indexDir, keyBuckets)
-        val flags =
-          if (newTouched.isEmpty) {
-            // empty batch: typed empty flags, shape-consistent on replay
-            keyed.limit(0)
-              .select(col(idCol), col("content_key"), col(idCol).as("matched_id"))
-          } else {
-            // post-upsert bucket content from the upsert's returned frame
-            val idx = flagIdx
-              .select(col("content_key"), col(idCol).as("matched_id"))
-            pinnedKeyed.join(idx, "content_key")
-              .filter(col(idCol) =!= col("matched_id"))
-              .select(col(idCol), col("content_key"), col("matched_id"))
-          }
-        flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        Pin.scope {
+          val spark = batch.sparkSession
+          val keyed = batch.toDF().select(col(idCol),
+              graft.functions.ColumnFns.md5Long(col(textCol)).as("content_key"))
+            .withColumn("kb", pmod(col("content_key"), lit(keyBuckets.toLong)))
+          val (newTouched, pinnedKeyed, flagIdx) = upsertMutableIndex(keyed,
+            batch.toDF().select(col(idCol)), idCol,
+            pkCols = Seq(idCol), sortCols = Seq("content_key", idCol),
+            indexDir, keyBuckets)
+          val flags =
+            if (newTouched.isEmpty) {
+              // empty batch: typed empty flags, shape-consistent on replay
+              keyed.limit(0)
+                .select(col(idCol), col("content_key"), col(idCol).as("matched_id"))
+            } else {
+              // post-upsert bucket content from the upsert's returned frame
+              val idx = flagIdx
+                .select(col("content_key"), col(idCol).as("matched_id"))
+              pinnedKeyed.join(idx, "content_key")
+                .filter(col(idCol) =!= col("matched_id"))
+                .select(col(idCol), col("content_key"), col("matched_id"))
+            }
+          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .start()
@@ -483,52 +492,54 @@ object StreamingOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     media.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val hashes = graft.llm.Multimodal.aHash(batch.toDF()
-            .select(col("media_id").cast("long").as("media_id"),
-              col("payload"), col("mime").cast("string").as("mime"))
-            .as[graft.llm.Multimodal.MediaRecord]).toDF()
-        val banded = hashes
-          .select(col("media_id"), col("ahash"),
-            explode(sequence(lit(0), lit(5))).as("band"))
-          .withColumn("band_key",
-            expr("shiftrightunsigned(ahash, band * 8) & 255"))
-          .withColumn("kb", mediaKb(keyBuckets, idShards,
-            pmod(graft.functions.ColumnFns.md5Long(
-              col("media_id").cast("string")), lit(idShards.toLong))))
-        // MUTABLE-CORPUS SAFE (r13): batchIds come from the RAW batch —
-        // a media id re-ingested with changed bytes replaces its six
-        // band rows wholesale, and one re-ingested as an UNDECODABLE
-        // payload (which yields no aHash rows at all) erases them.
-        val (touched, pinnedBanded, _) = upsertMutableIndex(banded,
-          batch.toDF().select(col("media_id").cast("long").as("media_id")),
-          "media_id",
-          pkCols = Seq("media_id", "band"), sortCols = Seq("band_key", "media_id"),
-          indexDir, keyBuckets)
-        val flags =
-          if (touched.isEmpty) {
-            // nothing decodable this batch (stale rows of its ids were
-            // still erased): typed empty flags, shape-consistent
-            banded.limit(0)
-              .select(col("media_id"), col("media_id").as("matched_id"),
-                lit(0).cast("int").as("hamming"))
-          } else {
-            // candidate fetch across ALL id shards of the batch's combos
-            // (scoped read; bounded by keyBuckets after the modulus)
-            val idx = mediaCandidates(spark, indexDir, pinnedBanded,
-                keyBuckets, idShards)
-              .select(col("band"), col("band_key"),
-                col("media_id").as("matched_id"), col("ahash").as("matched_hash"))
-            pinnedBanded.join(idx, Seq("band", "band_key"))
-              .filter(col("media_id") =!= col("matched_id"))
-              .withColumn("hamming",
-                bit_count(col("ahash").bitwiseXOR(col("matched_hash"))))
-              .filter(col("hamming") <= maxHamming)
-              .select(col("media_id"), col("matched_id"), col("hamming"))
-              .distinct()
-          }
-        flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        Pin.scope {
+          val spark = batch.sparkSession
+          import spark.implicits._
+          val hashes = graft.llm.Multimodal.aHash(batch.toDF()
+              .select(col("media_id").cast("long").as("media_id"),
+                col("payload"), col("mime").cast("string").as("mime"))
+              .as[graft.llm.Multimodal.MediaRecord]).toDF()
+          val banded = hashes
+            .select(col("media_id"), col("ahash"),
+              explode(sequence(lit(0), lit(5))).as("band"))
+            .withColumn("band_key",
+              expr("shiftrightunsigned(ahash, band * 8) & 255"))
+            .withColumn("kb", mediaKb(keyBuckets, idShards,
+              pmod(graft.functions.ColumnFns.md5Long(
+                col("media_id").cast("string")), lit(idShards.toLong))))
+          // MUTABLE-CORPUS SAFE (r13): batchIds come from the RAW batch —
+          // a media id re-ingested with changed bytes replaces its six
+          // band rows wholesale, and one re-ingested as an UNDECODABLE
+          // payload (which yields no aHash rows at all) erases them.
+          val (touched, pinnedBanded, _) = upsertMutableIndex(banded,
+            batch.toDF().select(col("media_id").cast("long").as("media_id")),
+            "media_id",
+            pkCols = Seq("media_id", "band"), sortCols = Seq("band_key", "media_id"),
+            indexDir, keyBuckets)
+          val flags =
+            if (touched.isEmpty) {
+              // nothing decodable this batch (stale rows of its ids were
+              // still erased): typed empty flags, shape-consistent
+              banded.limit(0)
+                .select(col("media_id"), col("media_id").as("matched_id"),
+                  lit(0).cast("int").as("hamming"))
+            } else {
+              // candidate fetch across ALL id shards of the batch's combos
+              // (scoped read; bounded by keyBuckets after the modulus)
+              val idx = mediaCandidates(spark, indexDir, pinnedBanded,
+                  keyBuckets, idShards)
+                .select(col("band"), col("band_key"),
+                  col("media_id").as("matched_id"), col("ahash").as("matched_hash"))
+              pinnedBanded.join(idx, Seq("band", "band_key"))
+                .filter(col("media_id") =!= col("matched_id"))
+                .withColumn("hamming",
+                  bit_count(col("ahash").bitwiseXOR(col("matched_hash"))))
+                .filter(col("hamming") <= maxHamming)
+                .select(col("media_id"), col("matched_id"), col("hamming"))
+                .distinct()
+            }
+          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .start()
@@ -591,56 +602,58 @@ object StreamingOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     media.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val hashes = graft.llm.Multimodal.videoFrameHashes(batch.toDF()
-            .select(col("media_id").cast("long").as("media_id"),
-              col("payload"), col("mime").cast("string").as("mime"))
-            .as[graft.llm.Multimodal.MediaRecord],
-          every = every, strideX = strideX, strideY = strideY,
-          fallbackStride1 = true).toDF()
-        // id-sharded kb (see maintainImageIndexAndFlag): the raw
-        // (band, band_key) domain caps at 1,536 values — without the
-        // shard, bucket size grows with the corpus and small-batch
-        // merges rewrite a constant fraction of the index
-        val banded = hashes
-          .select(col("media_id"), col("frame_idx"), col("ahash"),
-            explode(sequence(lit(0), lit(5))).as("band"))
-          .withColumn("band_key",
-            expr("shiftrightunsigned(ahash, band * 8) & 255"))
-          .withColumn("kb", mediaKb(keyBuckets, idShards,
-            pmod(graft.functions.ColumnFns.md5Long(
-              col("media_id").cast("string")), lit(idShards.toLong))))
-        val (touched, pinnedBanded, _) = upsertMutableIndex(banded,
-          batch.toDF().select(col("media_id").cast("long").as("media_id")),
-          "media_id",
-          pkCols = Seq("media_id", "frame_idx", "band"),
-          sortCols = Seq("band_key", "media_id", "frame_idx"),
-          indexDir, keyBuckets)
-        val flags =
-          if (touched.isEmpty) {
-            banded.limit(0)
-              .select(col("media_id"), col("frame_idx"),
-                col("media_id").as("matched_id"),
-                col("frame_idx").as("matched_frame"),
-                lit(0).cast("int").as("hamming"))
-          } else {
-            val idx = mediaCandidates(spark, indexDir, pinnedBanded,
-                keyBuckets, idShards)
-              .select(col("band"), col("band_key"),
-                col("media_id").as("matched_id"),
-                col("frame_idx").as("matched_frame"),
-                col("ahash").as("matched_hash"))
-            pinnedBanded.join(idx, Seq("band", "band_key"))
-              .filter(col("media_id") =!= col("matched_id")) // cross-video only
-              .withColumn("hamming",
-                bit_count(col("ahash").bitwiseXOR(col("matched_hash"))))
-              .filter(col("hamming") <= maxHamming)
-              .select(col("media_id"), col("frame_idx"),
-                col("matched_id"), col("matched_frame"), col("hamming"))
-              .distinct()
-          }
-        flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        Pin.scope {
+          val spark = batch.sparkSession
+          import spark.implicits._
+          val hashes = graft.llm.Multimodal.videoFrameHashes(batch.toDF()
+              .select(col("media_id").cast("long").as("media_id"),
+                col("payload"), col("mime").cast("string").as("mime"))
+              .as[graft.llm.Multimodal.MediaRecord],
+            every = every, strideX = strideX, strideY = strideY,
+            fallbackStride1 = true).toDF()
+          // id-sharded kb (see maintainImageIndexAndFlag): the raw
+          // (band, band_key) domain caps at 1,536 values — without the
+          // shard, bucket size grows with the corpus and small-batch
+          // merges rewrite a constant fraction of the index
+          val banded = hashes
+            .select(col("media_id"), col("frame_idx"), col("ahash"),
+              explode(sequence(lit(0), lit(5))).as("band"))
+            .withColumn("band_key",
+              expr("shiftrightunsigned(ahash, band * 8) & 255"))
+            .withColumn("kb", mediaKb(keyBuckets, idShards,
+              pmod(graft.functions.ColumnFns.md5Long(
+                col("media_id").cast("string")), lit(idShards.toLong))))
+          val (touched, pinnedBanded, _) = upsertMutableIndex(banded,
+            batch.toDF().select(col("media_id").cast("long").as("media_id")),
+            "media_id",
+            pkCols = Seq("media_id", "frame_idx", "band"),
+            sortCols = Seq("band_key", "media_id", "frame_idx"),
+            indexDir, keyBuckets)
+          val flags =
+            if (touched.isEmpty) {
+              banded.limit(0)
+                .select(col("media_id"), col("frame_idx"),
+                  col("media_id").as("matched_id"),
+                  col("frame_idx").as("matched_frame"),
+                  lit(0).cast("int").as("hamming"))
+            } else {
+              val idx = mediaCandidates(spark, indexDir, pinnedBanded,
+                  keyBuckets, idShards)
+                .select(col("band"), col("band_key"),
+                  col("media_id").as("matched_id"),
+                  col("frame_idx").as("matched_frame"),
+                  col("ahash").as("matched_hash"))
+              pinnedBanded.join(idx, Seq("band", "band_key"))
+                .filter(col("media_id") =!= col("matched_id")) // cross-video only
+                .withColumn("hamming",
+                  bit_count(col("ahash").bitwiseXOR(col("matched_hash"))))
+                .filter(col("hamming") <= maxHamming)
+                .select(col("media_id"), col("frame_idx"),
+                  col("matched_id"), col("matched_frame"), col("hamming"))
+                .distinct()
+            }
+          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .start()
@@ -911,36 +924,38 @@ object StreamingOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     blocks.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val hPath = new org.apache.hadoop.fs.Path(logDir)
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bdf = batch.toDF()
-          .select(col("block_id").cast("long").as("block_id"),
-            col("block_hash"), col("parent_hash"))
-          .withColumn("block_id_group", expr(s"block_id div $bucketSize"))
-          .localCheckpoint(true) // consumed three times below; bounded (one batch)
-        val loRow = bdf.agg(min(col("block_id"))).collect()(0)
-        if (!loRow.isNullAt(0)) {
-          val lo = loRow.getLong(0)
-          val pred = if (fs.exists(hPath))
-            spark.read.parquet(logDir) // pruned to ONE bucket, ONE block
-              .filter(col("block_id_group") === (lo - 1) / bucketSize
-                && col("block_id") === lo - 1)
-              .select(col("block_id"), col("block_hash"), col("parent_hash"),
-                col("block_id_group"))
-          else bdf.limit(0)
-          val signals = graft.eth.Ingest
-            .detectReorgs(pred.unionByName(bdf), bucketSize = bucketSize)
-            .withColumn("block_id_group", expr(s"block_id div $bucketSize"))
-          // clean batches are the common case — don't leave an empty
-          // signal table behind (consumers poll for the dir's existence)
-          if (!signals.isEmpty)
-            graft.eth.Sinks.upsertBucketedParquet(signals, signalDir,
+        Pin.scope {
+          val spark = batch.sparkSession
+          val hPath = new org.apache.hadoop.fs.Path(logDir)
+          val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          // consumed three times below; bounded (one batch)
+          val bdf = Pin(batch.toDF()
+            .select(col("block_id").cast("long").as("block_id"),
+              col("block_hash"), col("parent_hash"))
+            .withColumn("block_id_group", expr(s"block_id div $bucketSize")))
+          val loRow = bdf.agg(min(col("block_id"))).collect()(0)
+          if (!loRow.isNullAt(0)) {
+            val lo = loRow.getLong(0)
+            val pred = if (fs.exists(hPath))
+              spark.read.parquet(logDir) // pruned to ONE bucket, ONE block
+                .filter(col("block_id_group") === (lo - 1) / bucketSize
+                  && col("block_id") === lo - 1)
+                .select(col("block_id"), col("block_hash"), col("parent_hash"),
+                  col("block_id_group"))
+            else bdf.limit(0)
+            val signals = graft.eth.Ingest
+              .detectReorgs(pred.unionByName(bdf), bucketSize = bucketSize)
+              .withColumn("block_id_group", expr(s"block_id div $bucketSize"))
+            // clean batches are the common case — don't leave an empty
+            // signal table behind (consumers poll for the dir's existence)
+            if (!signals.isEmpty)
+              graft.eth.Sinks.upsertBucketedParquet(signals, signalDir,
+                pkCols = Seq("block_id"), bucketCol = "block_id_group",
+                sortCols = Seq("block_id"))
+            graft.eth.Sinks.upsertBucketedParquet(bdf, logDir,
               pkCols = Seq("block_id"), bucketCol = "block_id_group",
               sortCols = Seq("block_id"))
-          graft.eth.Sinks.upsertBucketedParquet(bdf, logDir,
-            pkCols = Seq("block_id"), bucketCol = "block_id_group",
-            sortCols = Seq("block_id"))
+          }
         }
       }
       .option("checkpointLocation", checkpointDir)

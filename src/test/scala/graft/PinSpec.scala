@@ -1,0 +1,117 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+import graft.operators.{ConnectedComponents, Graph}
+import graft.streaming.StreamingOps
+
+/** The pin primitive: every pin in `src/main` goes through [[Pin]], and the
+  * iterative operators and streaming maintainers release what they no
+  * longer read. Pins are counted by the session's persisted RDD ids. */
+class PinSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Persisted RDDs `body` leaves behind that were not there before it.
+    * Driver GC also drops a pin once its frame is unreachable, so a
+    * poller holds every RDD persisted meanwhile: only an explicit release
+    * can then remove one, and the count does not depend on GC timing. A
+    * pin is persisted for at least its own job, far longer than a poll. */
+  private def pinsAdded(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val before = persisted()
+    val held = new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val poller = new Thread(() => while (running.get) {
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before(id)) held.putIfAbsent(id, rdd)
+      }
+      Thread.sleep(1)
+    })
+    poller.start()
+    try body
+    finally { running.set(false); poller.join() }
+    (persisted() -- before).size
+  }
+
+  private def rddId(pin: DataFrame): Int =
+    pin.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+
+  test("source lock: localCheckpoint is called only inside Pin.scala") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root (no ${root.getAbsolutePath})")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val offenders = files(root).filter(_.getName.endsWith(".scala"))
+      .filter(_.getName != "Pin.scala")
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().zipWithIndex.collect {
+          case (line, i) if line.contains("localCheckpoint(") => s"${f.getPath}:${i + 1}"
+        }.toList
+        finally src.close()
+      }
+    assert(offenders.isEmpty, s"pin through graft.Pin instead: ${offenders.mkString(", ")}")
+  }
+
+  test("Pin.rounds: pagerank over five rounds keeps its two prologue pins plus the last round") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L)).toDF("src", "dst")
+    var ranks: DataFrame = null
+    assert(pinsAdded { ranks = Graph.pagerank(edges, iters = 5) } == 3)
+    // the surviving pin is the one the result reads
+    assert(ranks.count() == 4L)
+  }
+
+  test("ConnectedComponents.run on a long chain keeps two pins, whatever the round count") {
+    // a 12-node path labels its far end only after 11 rounds (plus one to
+    // see the fixpoint)
+    val chain = (0L until 11L).map(i => (i, i + 1)).toDF("src", "dst")
+    var labels: DataFrame = null
+    assert(pinsAdded { labels = ConnectedComponents.run(chain, "src", "dst") } == 2)
+    assert(labels.select("component").distinct().as[Long].collect().toSeq == Seq(0L))
+  }
+
+  test("Pin.scope: a mutable-index maintainer frees every batch pin it makes") {
+    val root = java.nio.file.Files.createTempDirectory("graft_pin_scope").toString
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, String)]
+    val added = pinsAdded {
+      val q = StreamingOps.maintainExactDupIndexAndFlag(
+        input.toDF().toDF("doc_id", "text"),
+        s"$root/index", s"$root/flags", s"$root/ckpt", keyBuckets = 4)
+      try {
+        Seq(Seq((1L, "alpha"), (2L, "beta")), Seq((3L, "alpha"), (1L, "gamma")),
+            Seq((4L, "beta"), (2L, "delta"))).foreach { batch =>
+          input.addData(batch: _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    }
+    assert(added == 0, s"$added pins outlived their micro-batch")
+    // the batches did run: four docs, one content-key row each
+    assert(spark.read.parquet(s"$root/index").count() == 4L)
+  }
+
+  test("Pin.scope frees pins made on its own thread only, also when its body throws") {
+    var mine: DataFrame = null
+    var other: DataFrame = null
+    val err = intercept[IllegalStateException] {
+      Pin.scope {
+        mine = Pin(spark.range(5).toDF())
+        val t = new Thread(() => other = Pin(spark.range(10).toDF()))
+        t.start()
+        t.join()
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(err.getMessage == "body failed")
+    assert(!persisted().contains(rddId(mine)), "the scope's own pin must be released")
+    assert(persisted().contains(rddId(other)), "another thread's pin must survive the scope")
+    assert(other.count() == 10L)
+    Pin.release(other)
+    assert(!persisted().contains(rddId(other)))
+  }
+}
