@@ -165,7 +165,7 @@ object Bench {
 
     // untimed warm-up: JVM/codegen/parquet-reader startup must not be
     // attributed to whichever query happens to run first
-    try spark.read.parquet(s"$sfDir/lineitem.parquet")
+    try graft.queries.Tables(spark, sfDir, "lineitem")
       .groupBy("l_returnflag").count().count()
     catch { case _: Throwable => }
     // touch every input table once (cold page-cache IO is a property of
@@ -186,17 +186,16 @@ object Bench {
     try {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$sfDir/region.parquet")
+      graft.queries.Tables(spark, sfDir, "region")
         .withColumn("rn", row_number().over(Window.orderBy("r_regionkey")))
         .orderBy(col("rn").desc).queryExecution.toRdd.count()
     } catch { case _: Throwable => }
     // exercise the ObjectHashAggregate / percentile-digest machinery once
     // untimed — its class-loading + JIT otherwise bills to whichever
     // approx_percentile/median query runs first
-    try spark.sql(
-      """SELECT approx_percentile(r_regionkey, array(0.25, 0.5, 0.95)),
-        |       percentile(r_regionkey, 0.5), median(r_regionkey)
-        |FROM parquet.`""".stripMargin + sfDir + "/region.parquet`")
+    try graft.queries.Tables(spark, sfDir, "region")
+      .selectExpr("approx_percentile(r_regionkey, array(0.25, 0.5, 0.95))",
+        "percentile(r_regionkey, 0.5)", "median(r_regionkey)")
       .queryExecution.toRdd.count()
     catch { case _: Throwable => }
     // pre-create the bucketed tables so j_bucketed_colocated times the
@@ -412,7 +411,7 @@ object Bench {
   private def textScale(spark: SparkSession, sfDir: String, workDir: String,
                         keyBuckets: Int, nBatches: Int, batchSize: Int): String = {
     import spark.implicits._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.queries.Tables(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val corpusN = docs.count()
     // constant-size edit batches: doc ids stride the corpus so every

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.eth.Enrich
 import graft.functions.ColumnFns._
-import graft.queries.Registry
+import graft.queries.{Registry, Tables}
 
 /** Driver contract — see SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -33,8 +33,8 @@ object SparkEntry {
     * via the J1 broadcast join, filtered to a pruned block range. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
-    val ord = spark.read.parquet(s"$dir/orders.parquet")
+    val li = Tables(spark, dir, "lineitem")
+    val ord = Tables(spark, dir, "orders")
     val txs = li.select(
         col("l_orderkey"), col("l_linenumber"),
         concat(lit("0x"), md5(concat_ws("-", col("l_orderkey"), col("l_linenumber")))).as("tx_hash"))

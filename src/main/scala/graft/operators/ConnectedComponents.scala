@@ -39,16 +39,24 @@ object ConnectedComponents {
         .as("__e"))
       .select(col("__e.a").as("a"), col("__e.b").as("b"))) // reused every iteration: pin it once
 
-    var labels = Pin(sym.select(col("a").as("node")).distinct()
-      .withColumn("component", col("node")))
-    // sum over an EMPTY edge list is null — return the empty labeling
-    // instead of dereferencing it
-    val first = labels.agg(sum(col("component"))).collect()(0)
-    if (first.isNullAt(0)) return labels
-    var prevSum = first.getLong(0)
+    // the seed IS round 1, one aggregate over sym: every node takes the
+    // least of itself and its neighbours. Its Observation carries the
+    // identity labels' sum (one group per node) for round 1's convergence
+    // check, and the node count: 0 = an empty edge list, whose labeling
+    // is empty
+    val seed = new org.apache.spark.sql.Observation()
+    var labels = Pin(sym.groupBy(col("a"))
+      .agg(least(col("a"), min(col("b"))).as("component"))
+      .select(col("a").as("node"), col("component"))
+      .observe(seed, count(lit(1)).as("n"), sum(col("node")).as("node_sum"),
+        sum(col("component")).as("label_sum")))
+    def long(o: org.apache.spark.sql.Observation, k: String): Long =
+      o.get(k).asInstanceOf[Number].longValue()
+    if (long(seed, "n") == 0L) return labels
+    var prevSum = long(seed, "label_sum")
 
-    var i = 0
-    var converged = false
+    var i = 1
+    var converged = prevSum == long(seed, "node_sum")
     while (i < maxIter && !converged) {
       // labels flowing across edges: b's label arrives at a
       val incoming = sym.join(labels, sym("b") === labels("node"))
@@ -61,7 +69,7 @@ object ConnectedComponents {
         .union(incoming)
         .groupBy(col("node")).agg(min(col("component")).as("component"))
         .observe(obs, sum(col("component")).as("label_sum")))
-      val newSum = obs.get("label_sum").asInstanceOf[Number].longValue()
+      val newSum = long(obs, "label_sum")
       Pin.release(labels) // superseded by the materialized update
       labels = updated
       converged = newSum == prevSum // labels are monotone non-increasing

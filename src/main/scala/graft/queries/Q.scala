@@ -1,6 +1,11 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** One named, oracle-checkable query: the unit of the driver's correctness
   * gate. `oracle` is equivalent ANSI SQL runnable by DuckDB over the same
@@ -15,26 +20,61 @@ final case class Q(
     oracle: Option[String])
 
 object Tables {
-  /** Load one driver testdata table (TESTDATA.md).
+  /** Load one driver testdata table (TESTDATA.md): `<dir>/<name>.parquet`,
+    * a flat file or a directory of part files.
+    *
+    * The schema comes from ONE parquet footer read on the driver — the
+    * footer Spark's own inference would read: a flat file as is; in a
+    * directory `_common_metadata`, else `_metadata`, else the first data
+    * file by path (`_`/`.` files skipped). It goes through Spark's own
+    * footer conversion (the stored Spark row schema when the writer left
+    * one), so the frame is the inferred one, but building it starts no
+    * Spark job: a schema-less `spark.read.parquet` runs one inference job
+    * per read. A missing table throws here, naming the path.
     *
     * `events.ts` has shipped as either parquet TIMESTAMP(NANOS) (which
-    * Spark reads only as a nanos long, via the legacy conf) or plain
+    * Spark reads only as a nanos long, via the legacy `nanosAsLong` conf —
+    * set before the footer conversion, which reads it) or plain
     * TIMESTAMP(MICROS) (isAdjustedToUTC=false → TIMESTAMP_NTZ), depending
     * on the generator run. Normalize BOTH to a session-zone (UTC)
     * microsecond TIMESTAMP — exactly what DuckDB's `CAST(ts AS TIMESTAMP)`
     * yields for either layout, so oracle comparisons agree. */
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      df.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          // integer div, not `/` (double loses bits on ~1.7e18 nanos)
-          df.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
-        case _ => // micros: NTZ -> session-zone timestamp, value preserved
-          df.withColumn("ts",
-            org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-      }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
+    if (name != "events") df
+    else df.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        // integer div, not `/` (double loses bits on ~1.7e18 nanos)
+        df.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
+          org.apache.spark.sql.functions.expr("ts div 1000")))
+      case _ => // micros: NTZ -> session-zone timestamp, value preserved
+        df.withColumn("ts",
+          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
+    }
+  }
+
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val status = fs.getFileStatus(root) // FileNotFoundException naming the path
+    val file = if (!status.isDirectory) status else {
+      val files = fs.listStatus(root).filter(_.isFile).sortBy(_.getPath.toString)
+      def named(n: String) = files.find(_.getPath.getName == n)
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(files.find { f =>
+          val n = f.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".")
+        })
+        .getOrElse(throw new java.io.FileNotFoundException(
+          s"no parquet data file in $path"))
+    }
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 }

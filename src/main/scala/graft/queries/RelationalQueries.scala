@@ -937,40 +937,39 @@ object RelationalQueries {
     // rewrite used here is strictly better at scale: per-order DISTINCT
     // supplier counts replace both quantifiers (EXISTS other supplier ⟺
     // n_supp ≥ 2; NOT EXISTS other LATE supplier ⟺ n_late_supp = 1,
-    // since the probe row itself is late), so the fact is shuffled once
-    // as map-side-deduped (orderkey, suppkey) pairs and every
-    // subsequent join keys on l_orderkey — order-sized, AQE-coalesced —
-    // instead of re-shuffling lineitem twice. The late-line multiplicity
-    // the original counts per supplier survives as sum(n_lines).
+    // since the probe row itself is late), so the fact is scanned once
+    // and shuffled once as map-side-deduped (orderkey, suppkey) pairs,
+    // and the window rides that orderkey-keyed exchange. The late-line
+    // multiplicity the original counts per supplier survives as
+    // sum(n_lines).
     // This schema has no receipt/commit dates; "late" is
     // l_shipdate > o_orderdate + 60 days.
     Q("tpch_q21_waiting", "TPCH",
       (s, d) => {
-        val li = Tables(s, d, "lineitem")
+        // every line of an F order, ONE lineitem scan: one row per
+        // (order, supplier) with its late-line multiplicity (0 = on time).
+        // Both quantifiers only look at lines of l1's own order, which is
+        // an F order, so no line outside this join can change them.
+        val pairs = Tables(s, d, "lineitem")
           .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-        // distinct suppliers per order over ALL lineitem: two-phase
-        // (partial distinct map-side), one orderkey-keyed exchange
-        val nSupp = li.groupBy(col("l_orderkey"))
-          .agg(countDistinct(col("l_suppkey")).as("n_supp"))
-        val late = li
           .join(Tables(s, d, "orders")
               .filter(col("o_orderstatus") === "F")
               .select(col("o_orderkey"), col("o_orderdate")),
             col("l_orderkey") === col("o_orderkey"))
-          .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-          .select(col("l_orderkey"), col("l_suppkey"))
-        // one row per late (order, supplier) with its line multiplicity;
-        // the orderkey window then counts DISTINCT late suppliers per
-        // order without ever re-joining the fact
-        val latePairs = late.groupBy(col("l_orderkey"), col("l_suppkey"))
-          .agg(count(lit(1)).as("n_lines"))
+          .groupBy(col("l_orderkey"), col("l_suppkey"))
+          .agg(count(when(col("l_shipdate") >
+            col("o_orderdate") + expr("INTERVAL 60 DAYS"), lit(1))).as("n_lines"))
+        // the orderkey window counts DISTINCT (late) suppliers per order
+        // without re-joining the fact; count() skips a null supplier, as
+        // the oracle's `<>` never matches one
         val wOrd = org.apache.spark.sql.expressions.Window
           .partitionBy(col("l_orderkey"))
-        latePairs
-          .withColumn("n_late_supp", count(lit(1)).over(wOrd))
-          .filter(col("n_late_supp") === 1)
-          .join(nSupp.filter(col("n_supp") >= 2).select(col("l_orderkey")),
-            "l_orderkey")
+        pairs
+          .withColumn("n_supp", count(col("l_suppkey")).over(wOrd))
+          .withColumn("n_late_supp",
+            count(when(col("n_lines") > 0, col("l_suppkey"))).over(wOrd))
+          .filter(col("n_lines") > 0 && col("n_supp") >= 2 &&
+            col("n_late_supp") === 1)
           .join(broadcast(Tables(s, d, "supplier")),
             col("l_suppkey") === col("s_suppkey"))
           .groupBy(col("s_name"))

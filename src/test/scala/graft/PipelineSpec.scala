@@ -304,10 +304,8 @@ class PipelineSpec extends SparkSpec {
       EthPipeline.ingestRange(spark, sink, 0, 1999))
     // job-end events reach the status store through the async listener
     // bus: flush it, so a job still listed as running really is running
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    assert(sc.statusTracker.getActiveJobIds().isEmpty,
+    flushListenerBus()
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
       "a sibling tail write is still running against the sink")
     // `transaction` writes (and J1-validates) before the pooled tail starts
     assert(spark.read.parquet(s"$sink/transaction").count() == expectedTxs(0, 1999))

@@ -15,6 +15,14 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** Waits until every listener event posted so far has been delivered
+    * (the bus is asynchronous; its flush is package-private to Spark). */
+  protected def flushListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   /** The SQL executions `body` runs, in order. Listener events arrive
     * asynchronously but in posting order, so a marker action run before
     * and after `body` brackets exactly its executions. */
