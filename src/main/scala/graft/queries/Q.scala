@@ -5,7 +5,8 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** One named, oracle-checkable query: the unit of the driver's correctness
   * gate. `oracle` is equivalent ANSI SQL runnable by DuckDB over the same
@@ -46,13 +47,10 @@ object Tables {
     val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
     if (name != "events") df
     else df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        // integer div, not `/` (double loses bits on ~1.7e18 nanos)
-        df.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts div 1000")))
+      case LongType => // integer div, not `/` (double loses bits on ~1.7e18 nanos)
+        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _ => // micros: NTZ -> session-zone timestamp, value preserved
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
+        df.withColumn("ts", col("ts").cast("timestamp"))
     }
   }
 
