@@ -163,45 +163,51 @@ object Bench {
     if (metricsOut.isDefined) totals.attach(spark.sparkContext)
     def drainListener(): Unit = if (metricsOut.isDefined) totals.drain()
 
-    // untimed warm-up: JVM/codegen/parquet-reader startup must not be
-    // attributed to whichever query happens to run first
-    try graft.queries.Tables(spark, sfDir, "lineitem")
-      .groupBy("l_returnflag").count().count()
-    catch { case _: Throwable => }
+    // untimed warm-up steps each swallow their failure LOUDLY: a warm-up
+    // that stops working would otherwise silently shift its cold-IO/JIT
+    // cost onto the first timed query
+    def warmUp(step: String)(body: => Any): Unit =
+      try body catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $step failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
+    // JVM/codegen/parquet-reader startup must not be attributed to
+    // whichever query happens to run first
+    warmUp("lineitem aggregate") {
+      graft.queries.Tables(spark, sfDir, "lineitem").groupBy("l_returnflag").count().count()
+    }
     // touch every input table once (cold page-cache IO is a property of
     // the box, not of whichever query reads the table first) and exercise
     // the sort/exchange/window machinery so its JIT cost is not billed to
     // the first window query in alphabetical order
-    // per-table try (not one blanket try: events needs Tables' nanos
+    // per-table step (not one blanket try: events needs Tables' nanos
     // legacy conf — a throw there must not abort the remaining touches)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "events", "documents", "embeddings").foreach { t =>
-      try graft.queries.Tables(spark, sfDir, t).queryExecution.toRdd.count()
-      catch { case e: Throwable =>
-        // loud swallow: a permanently unreadable table would otherwise
-        // silently shift its cold-IO cost onto the first query touching it
-        System.err.println(s"[bench] warm-up of table '$t' failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      warmUp(s"of table '$t'") {
+        graft.queries.Tables(spark, sfDir, t).queryExecution.toRdd.count()
       }
     }
-    try {
+    warmUp("region window") {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions._
       graft.queries.Tables(spark, sfDir, "region")
         .withColumn("rn", row_number().over(Window.orderBy("r_regionkey")))
         .orderBy(col("rn").desc).queryExecution.toRdd.count()
-    } catch { case _: Throwable => }
+    }
     // exercise the ObjectHashAggregate / percentile-digest machinery once
     // untimed — its class-loading + JIT otherwise bills to whichever
     // approx_percentile/median query runs first
-    try graft.queries.Tables(spark, sfDir, "region")
-      .selectExpr("approx_percentile(r_regionkey, array(0.25, 0.5, 0.95))",
-        "percentile(r_regionkey, 0.5)", "median(r_regionkey)")
-      .queryExecution.toRdd.count()
-    catch { case _: Throwable => }
+    warmUp("percentile aggregate") {
+      graft.queries.Tables(spark, sfDir, "region")
+        .selectExpr("approx_percentile(r_regionkey, array(0.25, 0.5, 0.95))",
+          "percentile(r_regionkey, 0.5)", "median(r_regionkey)")
+        .queryExecution.toRdd.count()
+    }
     // pre-create the bucketed tables so j_bucketed_colocated times the
     // zero-shuffle join, not the one-time DDL+write that backs it
-    try graft.queries.RelationalQueries.ensureBucketedTables(spark, sfDir)
-    catch { case _: Throwable => }
+    warmUp("bucketed tables") {
+      graft.queries.RelationalQueries.ensureBucketedTables(spark, sfDir)
+    }
 
     val names = selected(onlyFromEnv)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()

@@ -12,7 +12,7 @@ import org.apache.spark.sql.DataFrame
   * Three ways to pin, by who frees the blocks:
   *  - [[apply]] alone: the caller (or driver GC) does;
   *  - [[rounds]]: a fixed-round loop frees each round once the next one is
-  *    materialized;
+  *    materialized, and the pins a round's step made once that round is;
   *  - inside [[scope]]: everything pinned on the thread is freed when the
   *    scope's body exits.
   * Convergence loops whose round count is data-dependent call [[release]]
@@ -44,11 +44,14 @@ object Pin {
   /** `n` rounds of `step` (called with the previous state and the 0-based
     * round index), each round's frame pinned. A round's pin is released
     * once the next round's is materialized, so at most two round pins are
-    * live at a time and only the last survives. `init` is never released:
-    * the loop did not pin it. */
+    * live at a time and only the last survives. Pins the step makes itself
+    * are released as soon as its round's pin is materialized, so a step
+    * must not hand one to a later round. Round pins register with an
+    * enclosing [[scope]]. `init` is never released: the loop did not pin
+    * it. */
   def rounds(init: DataFrame, n: Int)(step: (DataFrame, Int) => DataFrame): DataFrame =
     (0 until n).foldLeft(init) { (prev, r) =>
-      val next = Pin(step(prev, r))
+      val next = releasing(step(prev, r))(apply)
       if (r > 0) release(prev)
       next
     }
@@ -56,14 +59,16 @@ object Pin {
   /** Run `body`, then release every pin this thread made inside it, also
     * when it throws. For bodies whose results leave as side effects (a
     * micro-batch's sink writes), never for ones returning a frame. */
-  def scope(body: => Unit): Unit = {
+  def scope(body: => Unit): Unit = releasing(body)(identity)
+
+  /** Run `body` with this thread's pins collected, then `finish` on its
+    * result outside the collection (its pins go to the enclosing scope),
+    * then release the collected pins — also when either throws. */
+  private def releasing[A, B](body: => A)(finish: A => B): B = {
     val outer = open.get
     val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     open.set(mine)
-    try body
-    finally {
-      open.set(outer)
-      mine.foreach(release)
-    }
+    try finish(try body finally open.set(outer))
+    finally mine.foreach(release)
   }
 }

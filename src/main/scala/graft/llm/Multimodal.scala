@@ -1047,8 +1047,39 @@ object Multimodal {
     aviFromJpegFrames(width, height,
       Array.tabulate(nFrames)(f => encodeJpeg420(width, height, pixel(f))))
 
+  /** Write an INTERLEAVED MJPEG + 16-bit mono PCM AVI — the classic
+    * capture layout (DV/webcam: one '00dc' JFIF frame then its '01wb'
+    * audio slice, per frame). Stream 0 = vids/MJPG, stream 1 = auds
+    * PCM (strf = WAVEFORMATEX: tag 1, mono, 16-bit); avih dwStreams=2;
+    * idx1 covers both streams. `sample(frame)(i)` gives the i-th 16-bit
+    * sample of that frame's audio slice (taken as Short). */
+  def encodeAviMjpegPcm(width: Int, height: Int, nFrames: Int,
+                        pixel: Int => (Int, Int) => (Int, Int, Int),
+                        sampleRate: Int, samplesPerFrame: Int,
+                        sample: Int => Int => Int): Array[Byte] = {
+    require(width > 0 && height > 0 && nFrames > 0,
+      s"need positive dims/frames, got $width x $height x $nFrames")
+    require(sampleRate > 0 && samplesPerFrame > 0,
+      s"need positive audio params, got $sampleRate Hz x $samplesPerFrame")
+    val frames = Array.tabulate(nFrames)(f => encodeJpeg(width, height, pixel(f)))
+    val audio = Array.tabulate(nFrames) { f =>
+      val s = sample(f)
+      val b = java.nio.ByteBuffer.allocate(samplesPerFrame * 2)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      var i = 0
+      while (i < samplesPerFrame) { b.putShort(s(i).toShort); i += 1 }
+      b.array()
+    }
+    aviFromJpegFrames(width, height, frames, Some((sampleRate, audio)))
+  }
+
+  /** The one RIFF/AVI writer behind the encoders above: stream 0 is the
+    * MJPEG video, and `audio` = (sample rate, per-frame 16-bit mono PCM
+    * slices) adds stream 1, each slice's '01wb' chunk following its
+    * frame's '00dc' chunk in 'movi' and in idx1. */
   private def aviFromJpegFrames(width: Int, height: Int,
-                                frames: Array[Array[Byte]]): Array[Byte] = {
+                                frames: Array[Array[Byte]],
+                                audio: Option[(Int, Array[Array[Byte]])] = None): Array[Byte] = {
     require(width > 0 && height > 0 && frames.nonEmpty,
       s"need positive dims/frames, got $width x $height x ${frames.length}")
     val nFrames = frames.length
@@ -1061,7 +1092,7 @@ object Multimodal {
     putU32le(avih, 0x10L)            // dwFlags: AVIF_HASINDEX
     putU32le(avih, nFrames.toLong)   // dwTotalFrames
     putU32le(avih, 0L)               // dwInitialFrames
-    putU32le(avih, 1L)               // dwStreams
+    putU32le(avih, if (audio.isEmpty) 1L else 2L) // dwStreams: video (+ audio)
     putU32le(avih, maxFrame.toLong)  // dwSuggestedBufferSize
     putU32le(avih, width.toLong)
     putU32le(avih, height.toLong)
@@ -1093,21 +1124,51 @@ object Multimodal {
     putU32le(strf, 0L); putU32le(strf, 0L)    // biXPels, biYPels
     putU32le(strf, 0L); putU32le(strf, 0L)    // biClrUsed, biClrImportant
 
+    val audioStrl = audio.fold(Array.emptyByteArray) { case (sampleRate, slices) =>
+      val samplesPerFrame = slices(0).length / 2
+      val strhA = new java.io.ByteArrayOutputStream(56)
+      strhA.write("auds".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      putU32le(strhA, 0L)              // fccHandler: 0 for PCM
+      putU32le(strhA, 0L); putU16le(strhA, 0); putU16le(strhA, 0)
+      putU32le(strhA, 0L)
+      putU32le(strhA, 1L)              // dwScale
+      putU32le(strhA, sampleRate.toLong) // dwRate (samples/sec)
+      putU32le(strhA, 0L)
+      putU32le(strhA, nFrames.toLong * samplesPerFrame) // dwLength (samples)
+      putU32le(strhA, samplesPerFrame.toLong * 2)
+      putU32le(strhA, 0L)
+      putU32le(strhA, 2L)              // dwSampleSize: bytes per sample
+      putU16le(strhA, 0); putU16le(strhA, 0); putU16le(strhA, 0); putU16le(strhA, 0)
+      val strfA = new java.io.ByteArrayOutputStream(16) // WAVEFORMATEX (PCM core)
+      putU16le(strfA, 1)               // wFormatTag: PCM
+      putU16le(strfA, 1)               // nChannels: mono
+      putU32le(strfA, sampleRate.toLong)
+      putU32le(strfA, sampleRate.toLong * 2) // nAvgBytesPerSec
+      putU16le(strfA, 2)               // nBlockAlign
+      putU16le(strfA, 16)              // wBitsPerSample
+      riffList("strl",
+        riffChunk("strh", strhA.toByteArray) ++ riffChunk("strf", strfA.toByteArray))
+    }
+
     val strl = riffList("strl",
       riffChunk("strh", strh.toByteArray) ++ riffChunk("strf", strf.toByteArray))
-    val hdrl = riffList("hdrl", riffChunk("avih", avih.toByteArray) ++ strl)
+    val hdrl = riffList("hdrl", riffChunk("avih", avih.toByteArray) ++ strl ++ audioStrl)
 
     val moviBody = new java.io.ByteArrayOutputStream()
     // idx1 offsets: from the start of the 'movi' list data (the 'movi'
     // fourcc itself is offset 0 — the spec's preferred convention)
     val idx1 = new java.io.ByteArrayOutputStream(16 * nFrames)
-    var f = 0
-    while (f < nFrames) {
-      idx1.write("00dc".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    def chunk(id: String, body: Array[Byte]): Unit = {
+      idx1.write(id.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
       putU32le(idx1, 0x10L) // AVIIF_KEYFRAME: every MJPEG frame stands alone
       putU32le(idx1, 4L + moviBody.size()) // +4: past the 'movi' fourcc
-      putU32le(idx1, frames(f).length.toLong)
-      moviBody.write(riffChunk("00dc", frames(f)))
+      putU32le(idx1, body.length.toLong)
+      moviBody.write(riffChunk(id, body))
+    }
+    var f = 0
+    while (f < nFrames) {
+      chunk("00dc", frames(f))
+      audio.foreach { case (_, slices) => chunk("01wb", slices(f)) }
       f += 1
     }
     val movi = riffList("movi", moviBody.toByteArray)
@@ -1116,111 +1177,6 @@ object Multimodal {
     form.write("AVI ".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     form.write(hdrl)
     form.write(movi)
-    form.write(riffChunk("idx1", idx1.toByteArray))
-    val body = form.toByteArray
-    val out = new java.io.ByteArrayOutputStream(8 + body.length)
-    out.write("RIFF".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    putU32le(out, body.length.toLong)
-    out.write(body)
-    out.toByteArray
-  }
-
-  /** Write an INTERLEAVED MJPEG + 16-bit mono PCM AVI — the classic
-    * capture layout (DV/webcam: one '00dc' JFIF frame then its '01wb'
-    * audio slice, per frame). Stream 0 = vids/MJPG, stream 1 = auds
-    * PCM (strf = WAVEFORMATEX: tag 1, mono, 16-bit); avih dwStreams=2;
-    * idx1 covers both streams. `sample(frame)(i)` gives the i-th 16-bit
-    * sample of that frame's audio slice (taken as Short). */
-  def encodeAviMjpegPcm(width: Int, height: Int, nFrames: Int,
-                        pixel: Int => (Int, Int) => (Int, Int, Int),
-                        sampleRate: Int, samplesPerFrame: Int,
-                        sample: Int => Int => Int): Array[Byte] = {
-    require(width > 0 && height > 0 && nFrames > 0,
-      s"need positive dims/frames, got $width x $height x $nFrames")
-    require(sampleRate > 0 && samplesPerFrame > 0,
-      s"need positive audio params, got $sampleRate Hz x $samplesPerFrame")
-    val frames = Array.tabulate(nFrames)(f => encodeJpeg(width, height, pixel(f)))
-    val audio = Array.tabulate(nFrames) { f =>
-      val s = sample(f)
-      val b = java.nio.ByteBuffer.allocate(samplesPerFrame * 2)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      var i = 0
-      while (i < samplesPerFrame) { b.putShort(s(i).toShort); i += 1 }
-      b.array()
-    }
-    val maxFrame = frames.map(_.length).max
-
-    val avih = new java.io.ByteArrayOutputStream(56)
-    putU32le(avih, 40000L); putU32le(avih, 0L); putU32le(avih, 0L)
-    putU32le(avih, 0x10L)            // AVIF_HASINDEX
-    putU32le(avih, nFrames.toLong); putU32le(avih, 0L)
-    putU32le(avih, 2L)               // dwStreams: video + audio
-    putU32le(avih, maxFrame.toLong)
-    putU32le(avih, width.toLong); putU32le(avih, height.toLong)
-    for (_ <- 0 until 4) putU32le(avih, 0L)
-
-    val strhV = new java.io.ByteArrayOutputStream(56)
-    strhV.write("vids".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    strhV.write("MJPG".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    putU32le(strhV, 0L); putU16le(strhV, 0); putU16le(strhV, 0)
-    putU32le(strhV, 0L); putU32le(strhV, 1L); putU32le(strhV, 25L)
-    putU32le(strhV, 0L); putU32le(strhV, nFrames.toLong)
-    putU32le(strhV, maxFrame.toLong); putU32le(strhV, 0L); putU32le(strhV, 0L)
-    putU16le(strhV, 0); putU16le(strhV, 0)
-    putU16le(strhV, width); putU16le(strhV, height)
-    val strfV = new java.io.ByteArrayOutputStream(40)
-    putU32le(strfV, 40L); putU32le(strfV, width.toLong); putU32le(strfV, height.toLong)
-    putU16le(strfV, 1); putU16le(strfV, 24)
-    strfV.write("MJPG".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    putU32le(strfV, width.toLong * height * 3)
-    putU32le(strfV, 0L); putU32le(strfV, 0L); putU32le(strfV, 0L); putU32le(strfV, 0L)
-
-    val strhA = new java.io.ByteArrayOutputStream(56)
-    strhA.write("auds".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    putU32le(strhA, 0L)              // fccHandler: 0 for PCM
-    putU32le(strhA, 0L); putU16le(strhA, 0); putU16le(strhA, 0)
-    putU32le(strhA, 0L)
-    putU32le(strhA, 1L)              // dwScale
-    putU32le(strhA, sampleRate.toLong) // dwRate (samples/sec)
-    putU32le(strhA, 0L)
-    putU32le(strhA, nFrames.toLong * samplesPerFrame) // dwLength (samples)
-    putU32le(strhA, samplesPerFrame.toLong * 2)
-    putU32le(strhA, 0L)
-    putU32le(strhA, 2L)              // dwSampleSize: bytes per sample
-    putU16le(strhA, 0); putU16le(strhA, 0); putU16le(strhA, 0); putU16le(strhA, 0)
-    val strfA = new java.io.ByteArrayOutputStream(16) // WAVEFORMATEX (PCM core)
-    putU16le(strfA, 1)               // wFormatTag: PCM
-    putU16le(strfA, 1)               // nChannels: mono
-    putU32le(strfA, sampleRate.toLong)
-    putU32le(strfA, sampleRate.toLong * 2) // nAvgBytesPerSec
-    putU16le(strfA, 2)               // nBlockAlign
-    putU16le(strfA, 16)              // wBitsPerSample
-
-    val hdrl = riffList("hdrl",
-      riffChunk("avih", avih.toByteArray) ++
-        riffList("strl", riffChunk("strh", strhV.toByteArray) ++
-          riffChunk("strf", strfV.toByteArray)) ++
-        riffList("strl", riffChunk("strh", strhA.toByteArray) ++
-          riffChunk("strf", strfA.toByteArray)))
-
-    val moviBody = new java.io.ByteArrayOutputStream()
-    val idx1 = new java.io.ByteArrayOutputStream(32 * nFrames)
-    def idxEntry(id: String, off: Long, len: Int): Unit = {
-      idx1.write(id.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      putU32le(idx1, 0x10L); putU32le(idx1, off); putU32le(idx1, len.toLong)
-    }
-    var f = 0
-    while (f < nFrames) {
-      idxEntry("00dc", 4L + moviBody.size(), frames(f).length)
-      moviBody.write(riffChunk("00dc", frames(f)))
-      idxEntry("01wb", 4L + moviBody.size(), audio(f).length)
-      moviBody.write(riffChunk("01wb", audio(f)))
-      f += 1
-    }
-    val form = new java.io.ByteArrayOutputStream()
-    form.write("AVI ".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    form.write(hdrl)
-    form.write(riffList("movi", moviBody.toByteArray))
     form.write(riffChunk("idx1", idx1.toByteArray))
     val body = form.toByteArray
     val out = new java.io.ByteArrayOutputStream(8 + body.length)

@@ -62,6 +62,30 @@ object LlmQueries {
         (0 until 8).map(h => s"[${Dedup.minhashA(h)}, ${Dedup.minhashB(h)}]")
           .mkString("[", ", ", "]"))
 
+  /** LSH candidates over [[minhashSigCte]]'s bands — `cand(id_a, id_b)`,
+    * distinct, id_a < id_b — and each doc's distinct shingles
+    * `ds(doc_id, dsh)`. */
+  private val lshCandCte =
+    """cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
+      |         FROM bands a JOIN bands b2 ON a.band = b2.band AND a.band_key = b2.band_key
+      |         WHERE a.doc_id < b2.doc_id),
+      |ds AS (SELECT doc_id, list_distinct(s) AS dsh FROM sh)""".stripMargin
+
+  /** DuckDB twin of `Dedup.nearDupEdges` and the closure its connected
+    * components replay: [[lshCandCte]] kept at exact Jaccard >= 0.8
+    * (`edges`), symmetrized (`e`) and transitively closed
+    * (`reach(a, b)`, so the enclosing WITH must be RECURSIVE). */
+  private val nearDupReachCte =
+    s"""$lshCandCte,
+       |edges AS (SELECT id_a, id_b FROM cand
+       |          JOIN ds x ON x.doc_id = id_a JOIN ds y ON y.doc_id = id_b
+       |          WHERE CAST(len(list_intersect(x.dsh, y.dsh)) AS DOUBLE)
+       |                / (len(x.dsh) + len(y.dsh) - len(list_intersect(x.dsh, y.dsh))) >= 0.8),
+       |e AS (SELECT id_a AS a, id_b AS b FROM edges UNION SELECT id_b, id_a FROM edges),
+       |reach(a, b) AS (SELECT a, b FROM e
+       |                UNION
+       |                SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)""".stripMargin
+
   /** User-transition edge list for the graph operators: A → B when B's
     * event directly follows A's within the same event-type stream
     * (deterministic order: ts, event_id), self-loops dropped. The same
@@ -144,17 +168,20 @@ object LlmQueries {
       |       WHERE src IS NOT NULL AND src <> user_id GROUP BY 1, 2
       |       HAVING count(*) >= 2)""".stripMargin
 
+  /** `und(u, v)` and `dg(node, deg)` over any `ew(src, dst, ...)` in
+    * scope — the DuckDB twin of `Graph.undirected` + `Graph.degrees`. */
+  private val undDegCte =
+    """und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
+      |        FROM ew WHERE src <> dst),
+      |dg AS (SELECT node, count(*) AS deg FROM
+      |         (SELECT u AS node FROM und UNION ALL SELECT v FROM und)
+      |       GROUP BY 1)""".stripMargin
+
   /** Shared topology prologue over [[backboneEdges]] — the DuckDB twin of
     * `Graph.undirected` + `Graph.degrees`: `und(u, v)` distinct canonical
     * pairs, `dg(node, deg)`. Every graph-topology oracle builds on this
     * ONE definition so the engines can never desynchronize per query. */
-  private val backboneUndirectedCte =
-    s"""$backboneEdgesCte,
-       |und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-       |        FROM ew WHERE src <> dst),
-       |dg AS (SELECT node, count(*) AS deg FROM
-       |         (SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-       |       GROUP BY 1)""".stripMargin
+  private val backboneUndirectedCte = s"$backboneEdgesCte,\n$undDegCte"
 
   /** DuckDB twin of `Graph.labelPropagation(rounds = 2, weighted)` over
     * [[backboneEdges]]: `l2(node, label)`. Shared by the community query
@@ -324,8 +351,54 @@ object LlmQueries {
        |               THEN 1.0 ELSE -1.0 END))) > 0
        |       THEN CAST(2**p AS BIGINT) ELSE 0 END)) AS BIGINT)""".stripMargin
 
-  private val dotSql =
-    "list_sum(list_transform(range(1, 65), i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))"
+  /** DuckDB dot product of the first `dim` elements of list columns `x`
+    * and `y`, each element widened to DOUBLE. */
+  private def dotSql(x: String, y: String, dim: Int = 64): String =
+    s"list_sum(list_transform(range(1, ${dim + 1}), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
+
+  /** DuckDB twin of the PQ encoder (`Similarity.pqCodes`, m = 8
+    * subspaces of 8 dims, codebook = vec_id < 16): `c(code, subspace,
+    * cs)` codewords and `codes(neighbor_id, subspace, code)`, each corpus
+    * subvector's nearest codeword by micro-quantized squared L2. */
+  private val pqCodesCte =
+    s"""sub AS (SELECT CAST(s AS BIGINT) AS s FROM (SELECT unnest(range(0, 8)) AS s)),
+       |v AS (SELECT vec_id, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS sv
+       |      FROM embeddings, sub s WHERE vec_id >= 21),
+       |c AS (SELECT vec_id AS code, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS cs
+       |      FROM embeddings, sub s WHERE vec_id < 16),
+       |codes AS (SELECT vec_id AS neighbor_id, subspace, code FROM (
+       |            SELECT v.vec_id, v.subspace, c.code,
+       |                   row_number() OVER (PARTITION BY v.vec_id, v.subspace
+       |                     ORDER BY CAST(round((${dotSql("v.sv", "v.sv", 8)} - 2 * ${dotSql("v.sv", "c.cs", 8)} + ${dotSql("c.cs", "c.cs", 8)}) * 1000000) AS BIGINT), c.code) AS rn
+       |            FROM v JOIN c ON v.subspace = c.subspace) WHERE rn = 1)""".stripMargin
+
+  /** The IVF top-5 tail over `sc(query_id, neighbor_id, centroid_id,
+    * score_micro)`: rank by score (neighbor_id breaks ties), keep 5. */
+  private val ivfTop5Sql =
+    """r AS (SELECT query_id, neighbor_id, centroid_id, score_micro,
+      |             CAST(row_number() OVER (PARTITION BY query_id ORDER BY score_micro DESC, neighbor_id) AS INTEGER) AS rnk
+      |      FROM sc)
+      |SELECT query_id, neighbor_id, centroid_id, rnk, score_micro FROM r WHERE rnk <= 5
+      |ORDER BY query_id, rnk""".stripMargin
+
+  /** DuckDB twin of the hierarchical IVF coarse stage (16 centroids
+    * vec_id < 16, the first 4 as coarse cells): `fc(cid, cv, gid)` each
+    * fine centroid's coarse cell, `va(vec_id, embedding, gid)` each
+    * vector's (vec_id >= 16) nearest live coarse cell. */
+  private val ivfHierCte =
+    s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
+       |g AS (SELECT cid AS gid, cv AS gv FROM cent ORDER BY cid LIMIT 4),
+       |fc AS (SELECT cid, cv, gid FROM (
+       |         SELECT f.cid, f.cv, g.gid,
+       |                row_number() OVER (PARTITION BY f.cid
+       |                                   ORDER BY ${dotSql("f.cv", "g.gv")} DESC, g.gid) AS rn
+       |         FROM cent f, g) WHERE rn = 1),
+       |live AS (SELECT gid, gv FROM g WHERE gid IN (SELECT gid FROM fc)),
+       |va AS (SELECT vec_id, embedding, gid FROM (
+       |         SELECT v.vec_id, v.embedding, l.gid,
+       |                row_number() OVER (PARTITION BY v.vec_id
+       |                                   ORDER BY ${dotSql("v.embedding", "l.gv")} DESC, l.gid) AS rn
+       |         FROM embeddings v, live l WHERE v.vec_id >= 16) WHERE rn = 1)""".stripMargin
 
   /** Merge table for `bpe_encode`: common English pairs, in priority
     * order; entry 2 ("th","e") consumes round-0 products — the
@@ -545,6 +618,236 @@ object LlmQueries {
     graft.operators.EntityResolution.Field("phone", 0, 300, -200),
     graft.operators.EntityResolution.Field("city", 0, 150, -150))
 
+  // ------------------------------------------------------------------
+  // Synthetic-media fixtures of the multimodal_* queries. Each generator
+  // sits next to its DuckDB twin, which re-derives the same formulas in
+  // SQL: the oracle never reads a payload byte, it replays the algebra.
+  // ------------------------------------------------------------------
+
+  /** `n` synthetic media records of one mime type, record `m` carrying
+    * `payload(m)` — generated in-engine, map-only. */
+  private def mediaFixture(s: org.apache.spark.sql.SparkSession, n: Int, mime: String)(
+      payload: Long => Array[Byte]): org.apache.spark.sql.Dataset[Multimodal.MediaRecord] = {
+    import s.implicits._
+    s.range(0, n).map(m => Multimodal.MediaRecord(m, payload(m), mime))
+  }
+
+  /** The pixel-grid prologue of the synthetic-image oracles: media ids
+    * `0 until n` (`m`), their dims (`dims` defines `w` and `h`), and one
+    * `pix(id, w, h, x, y)` row per pixel of the `xs` x `ys` window — the
+    * whole image unless a fixed hash window is given. */
+  private def pixelGridSql(n: Int, dims: String, xs: String = "w", ys: String = "h"): String =
+    s"""WITH m AS (SELECT unnest(range(0, $n)) AS id),
+       |dims AS (SELECT id, $dims FROM m),
+       |xs AS (SELECT id, w, h, unnest(range($xs)) AS x FROM dims),
+       |pix AS (SELECT id, w, h, x, unnest(range($ys)) AS y FROM xs)""".stripMargin
+
+  /** DuckDB twin of `Multimodal.imageStats` over `from(id, w, h, ...)`:
+    * the exact sums of the channel expressions `r`, `g`, `b`. */
+  private def imageStatsSql(from: String, r: String, g: String, b: String): String =
+    s"""sums AS (SELECT id, w, h,
+       |           sum($r) AS r_sum,
+       |           sum($g) AS g_sum,
+       |           sum($b) AS b_sum
+       |         FROM $from GROUP BY 1, 2, 3)
+       |SELECT id AS media_id, CAST(w AS INTEGER) AS width,
+       |  CAST(h AS INTEGER) AS height, CAST(3 AS INTEGER) AS channels,
+       |  CAST(r_sum AS BIGINT) AS r_sum, CAST(g_sum AS BIGINT) AS g_sum,
+       |  CAST(b_sum AS BIGINT) AS b_sum, CAST(w * h AS BIGINT) AS n_pixels
+       |FROM sums ORDER BY media_id""".stripMargin
+
+  /** The near-dup tail over `from(id, sig)`: identical fingerprints
+    * collapse to their min-id rep, then every rep pair within Hamming 5
+    * — the brute force `Dedup.sigBandPairs` bands. */
+  private def repPairsSql(from: String, sig: String): String =
+    s"""reps AS (SELECT CAST(min(id) AS BIGINT) AS rep_id, CAST($sig AS BIGINT) AS $sig
+       |         FROM $from GROUP BY $sig)
+       |SELECT a.rep_id AS id_a, b.rep_id AS id_b,
+       |  CAST(bit_count(xor(a.$sig, b.$sig)) AS INTEGER) AS hamming
+       |FROM reps a JOIN reps b ON a.rep_id < b.rep_id
+       |WHERE bit_count(xor(a.$sig, b.$sig)) <= 5
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** The gradient stills: 200 images of (8 + m % 5) x (6 + m % 4), RGB
+    * (x*7 + y*13 + m, x*3 + y*5, x + y*2 + m*11) mod 256, written by
+    * `encode` — the BMP and PNG boards share the pixels, so only the
+    * container differs. */
+  private def gradientImages(s: org.apache.spark.sql.SparkSession,
+                             encode: (Int, Int, (Int, Int) => (Int, Int, Int)) => Array[Byte],
+                             mime: String) =
+    mediaFixture(s, 200, mime) { m =>
+      encode(8 + (m % 5).toInt, 6 + (m % 4).toInt, (x, y) =>
+        (((x * 7 + y * 13 + m) % 256).toInt,
+          ((x * 3 + y * 5) % 256).toInt,
+          ((x + y * 2 + m * 11) % 256).toInt))
+    }
+
+  /** DuckDB twin of [[gradientImages]]: its dims, its r, g, b over the
+    * grid's (id, x, y), and the gray (channel mean) the hashes read. */
+  private val gradientDims = "8 + id % 5 AS w, 6 + id % 4 AS h"
+  private val gradientRgbSql =
+    Seq("(x * 7 + y * 13 + id) % 256", "(x * 3 + y * 5) % 256", "(x + y * 2 + id * 11) % 256")
+  private val gradientGraySql = gradientRgbSql.mkString("(", " + ", ") // 3")
+
+  /** `Multimodal.aHash` of [[gradientImages]] in DuckDB: the 8x6 window
+    * thresholded against its mean, `hb(id, w, h, ahash, n_set)`. */
+  private val gradientAhashCte =
+    s"""${pixelGridSql(200, gradientDims, "8", "6")},
+       |g AS (SELECT id, w, h, x, y, $gradientGraySql AS gray FROM pix),
+       |mn AS (SELECT id, sum(gray) // 48 AS mean FROM g GROUP BY 1),
+       |hb AS (SELECT g.id, g.w, g.h,
+       |         sum(CASE WHEN gray > mean
+       |             THEN (CAST(1 AS BIGINT) << (y * 8 + x)) ELSE 0 END) AS ahash,
+       |         sum(CASE WHEN gray > mean THEN 1 ELSE 0 END) AS n_set
+       |       FROM g JOIN mn USING (id) GROUP BY 1, 2, 3)""".stripMargin
+  private val gradientAhashOracle =
+    s"""$gradientAhashCte
+       |SELECT id AS media_id, CAST(w AS INTEGER) AS width,
+       |  CAST(h AS INTEGER) AS height, CAST(ahash AS BIGINT) AS ahash,
+       |  CAST(n_set AS BIGINT) AS n_set
+       |FROM hb ORDER BY media_id""".stripMargin
+
+  /** Block-constant RGB of the JPEG/MJPEG fixtures: channels constant per
+    * `b` x `b` block (8 = one JPEG block, 16 = one 4:2:0 MCU), so the DCT
+    * path round-trips bit-exactly; frame `f` (0 for stills) shifts every
+    * block. */
+  private def blockRgb(b: Int, m: Long, f: Int): (Int, Int) => (Int, Int, Int) = (x, y) =>
+    (((m * 13 + (x / b) * 57 + (y / b) * 23 + f * 19) % 256).toInt,
+      ((m * 7 + (x / b) * 31 + (y / b) * 11 + f * 5) % 256).toInt,
+      ((m * 11 + (x / b) * 17 + (y / b) * 29 + f * 3) % 256).toInt)
+
+  /** DuckDB twin of [[blockRgb]] carried through the codec's integer
+    * color chain: `src` (the block formula over `pix`), the fixed-point
+    * RGB -> YCbCr forward transform `ycc` and the decoder's inverse
+    * `rgb(cols, r, g, b)`, each clamped to 0..255. `cols` are the grid
+    * columns carried along; `frames` adds the per-frame term. */
+  private def blockRgbChainSql(cols: String, b: Int, frames: Boolean): String = {
+    def ft(k: Int) = if (frames) s" + f * $k" else ""
+    s"""src AS (SELECT $cols,
+       |          (id * 13 + (x // $b) * 57 + (y // $b) * 23${ft(19)}) % 256 AS r0,
+       |          (id * 7 + (x // $b) * 31 + (y // $b) * 11${ft(5)}) % 256 AS g0,
+       |          (id * 11 + (x // $b) * 17 + (y // $b) * 29${ft(3)}) % 256 AS b0
+       |        FROM pix),
+       |ycc AS (SELECT $cols,
+       |          LEAST(255, GREATEST(0, (19595 * r0 + 38470 * g0 + 7471 * b0 + 32768) // 65536)) AS yy,
+       |          LEAST(255, GREATEST(0, 128 + (-11059 * r0 - 21709 * g0 + 32768 * b0 + 32768 + 16777216) // 65536 - 256)) AS cb,
+       |          LEAST(255, GREATEST(0, 128 + (32768 * r0 - 27439 * g0 - 5329 * b0 + 32768 + 16777216) // 65536 - 256)) AS cr
+       |        FROM src),
+       |rgb AS (SELECT $cols,
+       |          LEAST(255, GREATEST(0, yy + (91881 * (cr - 128) + 32768 + 16777216) // 65536 - 256)) AS r,
+       |          LEAST(255, GREATEST(0, yy - ((22554 * (cb - 128) + 46802 * (cr - 128) + 32768 + 16777216) // 65536 - 256))) AS g,
+       |          LEAST(255, GREATEST(0, yy + (116130 * (cb - 128) + 32768 + 16777216) // 65536 - 256)) AS b
+       |        FROM ycc)""".stripMargin
+  }
+
+  /** [[blockRgb]] stills: 200 JPEGs, `dims(m)` = (w, h), written by
+    * `encode` (baseline, progressive or 4:2:0). */
+  private def blockColorImages(s: org.apache.spark.sql.SparkSession, b: Int,
+                               dims: Long => (Int, Int),
+                               encode: (Int, Int, (Int, Int) => (Int, Int, Int)) => Array[Byte]) =
+    mediaFixture(s, 200, "image/jpeg") { m =>
+      val (w, h) = dims(m)
+      encode(w, h, blockRgb(b, m, 0))
+    }
+
+  /** DuckDB twin of `imageStats` over [[blockColorImages]]. */
+  private def blockColorStatsOracle(b: Int, dims: String): String =
+    s"""${pixelGridSql(200, dims)},
+       |${blockRgbChainSql("id, w, h", b, frames = false)},
+       |${imageStatsSql("rgb", "r", "g", "b")}""".stripMargin
+
+  /** [[blockRgb]] MJPEG clips: 60 AVIs, `dims(m)` = (w, h, n_frames),
+    * written by `encode` (4:4:4 or 4:2:0 frames). */
+  private def blockColorClips(s: org.apache.spark.sql.SparkSession, b: Int,
+                              dims: Long => (Int, Int, Int),
+                              encode: (Int, Int, Int, Int => (Int, Int) => (Int, Int, Int)) => Array[Byte]) =
+    mediaFixture(s, 60, "video/x-msvideo") { m =>
+      val (w, h, nf) = dims(m)
+      encode(w, h, nf, f => blockRgb(b, m, f))
+    }
+
+  /** DuckDB twin of `videoFrameStats(every = 2)` over [[blockColorClips]]
+    * (`dims` defines `w`, `h` and `nf`). */
+  private def blockColorClipStatsOracle(b: Int, dims: String): String =
+    s"""WITH m AS (SELECT unnest(range(0, 60)) AS id),
+       |v AS (SELECT id, $dims FROM m),
+       |fr AS (SELECT id, w, h, nf, unnest(range(0, nf, 2)) AS f FROM v),
+       |xs AS (SELECT id, w, h, nf, f, unnest(range(w)) AS x FROM fr),
+       |pix AS (SELECT id, w, h, nf, f, x, unnest(range(h)) AS y FROM xs),
+       |${blockRgbChainSql("id, w, h, nf, f", b, frames = true)},
+       |sums AS (SELECT id, w, h, nf, f, sum(r) AS r_sum, sum(g) AS g_sum,
+       |           sum(b) AS b_sum FROM rgb GROUP BY 1, 2, 3, 4, 5)
+       |SELECT id AS media_id, CAST(nf AS INTEGER) AS n_frames,
+       |  CAST(f AS INTEGER) AS frame_idx, CAST(w AS INTEGER) AS width,
+       |  CAST(h AS INTEGER) AS height, CAST(r_sum AS BIGINT) AS r_sum,
+       |  CAST(g_sum AS BIGINT) AS g_sum, CAST(b_sum AS BIGINT) AS b_sum
+       |FROM sums ORDER BY media_id, frame_idx""".stripMargin
+
+  /** Interleaved MJPEG + PCM AVIs: 60 clips of (9 + m % 6) x (7 + m % 5)
+    * x (5 + m % 4) frames of 8x8 [[blockRgb]], each frame with a
+    * 400-sample 8 kHz slice of the ramp (i*a + m*17) mod 2048 - 1024,
+    * a = m % 7 + 3, i counted across the clip. Each oracle replays the
+    * stream it reads. */
+  private def avClips(s: org.apache.spark.sql.SparkSession) =
+    mediaFixture(s, 60, "video/x-msvideo") { m =>
+      val a = (m % 7).toInt + 3
+      Multimodal.encodeAviMjpegPcm(9 + (m % 6).toInt, 7 + (m % 5).toInt, 5 + (m % 4).toInt,
+        f => blockRgb(8, m, f),
+        sampleRate = 8000, samplesPerFrame = 400,
+        f => i => (((f * 400 + i).toLong * a + m * 17) % 2048 - 1024).toInt)
+    }
+
+  /** Gray Y4M clips: 60 of (8 + m % 5) x (6 + m % 4), `nf(m)` frames of
+    * `gray(m, f)(x, y)`; each oracle replays its own gray formula. */
+  private def y4mClips(s: org.apache.spark.sql.SparkSession, nf: Long => Int,
+                       gray: (Long, Int) => (Int, Int) => Int) =
+    mediaFixture(s, 60, "video/x-yuv4mpeg") { m =>
+      Multimodal.encodeY4m(8 + (m % 5).toInt, 6 + (m % 4).toInt, nf(m), f => gray(m, f))
+    }
+
+  /** The PCM ramp: 200 mono 16-bit 8 kHz WAVs, media m playing the ramp
+    * of `seed(m)` — (2000 + seed % 5 * 400) samples of
+    * (i*a + seed*17) mod 2048 - 1024, a = seed % 7 + 3. */
+  private def rampWavs(s: org.apache.spark.sql.SparkSession, seed: Long => Long = m => m) =
+    mediaFixture(s, 200, "audio/wav") { m =>
+      val sd = seed(m)
+      val n = 2000 + (sd % 5).toInt * 400
+      val a = (sd % 7).toInt + 3
+      Multimodal.encodeWavPcm16(8000, Array.tabulate(n)(i =>
+        (((i.toLong * a + sd * 17) % 2048) - 1024).toShort))
+    }
+
+  /** DuckDB twin of [[rampWavs]] seeded by id: `smp(id, n, a, i)`, one row
+    * per sample. */
+  private val rampSamplesSql =
+    """WITH m AS (SELECT unnest(range(0, 200)) AS id),
+      |par AS (SELECT id, 2000 + (id % 5) * 400 AS n, id % 7 + 3 AS a FROM m),
+      |smp AS (SELECT id, n, a, unnest(range(n)) AS i FROM par)""".stripMargin
+
+  /** DuckDB twin of `Multimodal.audioStats` over `s(id, n, i, v)` — or of
+    * `audioChannelStats` over `s(id, n, c, i, v)` when `nChannels` > 0:
+    * peak, floor-sqrt RMS and sign-change zero crossings, all integer. */
+  private def pcmStatsSql(rate: Int, nChannels: Int = 0): String = {
+    val ch = nChannels > 0
+    val key = if (ch) "id, c" else "id"
+    val chCols = if (ch) s" CAST(c AS INTEGER) AS channel,\n  CAST($nChannels AS INTEGER) AS n_channels," else ""
+    s"""sgn AS (SELECT id, n,${if (ch) " c," else ""} i, v,
+       |          lag(v) OVER (PARTITION BY $key ORDER BY i) AS pv FROM s),
+       |st AS (SELECT $key, any_value(n) AS n, max(abs(v)) AS peak,
+       |         sum(CAST(v AS BIGINT) * v) AS sum_sq,
+       |         sum(CASE WHEN pv IS NOT NULL AND (pv < 0) <> (v < 0)
+       |             THEN 1 ELSE 0 END) AS zc
+       |       FROM sgn GROUP BY $key)
+       |SELECT id AS media_id,$chCols
+       |  CAST($rate AS INTEGER) AS sample_rate,
+       |  CAST(n AS BIGINT) AS n_samples,
+       |  CAST(n * 1000 // $rate AS BIGINT) AS duration_ms,
+       |  CAST(peak AS INTEGER) AS peak,
+       |  CAST(floor(sqrt(sum_sq // n)) AS BIGINT) AS rms,
+       |  CAST(zc AS BIGINT) AS zero_crossings
+       |FROM st ORDER BY media_id${if (ch) ", channel" else ""}""".stripMargin
+  }
+
   val all: Seq[Q] = Seq(
 
     // Exact dedup: one survivor (min id) per distinct content hash.
@@ -678,18 +981,7 @@ object LlmQueries {
           "id_a", "id_b")
         .orderBy("node"),
       Some(s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-              |         FROM bands a JOIN bands b2 ON a.band = b2.band AND a.band_key = b2.band_key
-              |         WHERE a.doc_id < b2.doc_id),
-              |ds AS (SELECT doc_id, list_distinct(s) AS dsh FROM sh),
-              |edges AS (SELECT id_a, id_b FROM cand
-              |          JOIN ds x ON x.doc_id = id_a JOIN ds y ON y.doc_id = id_b
-              |          WHERE CAST(len(list_intersect(x.dsh, y.dsh)) AS DOUBLE)
-              |                / (len(x.dsh) + len(y.dsh) - len(list_intersect(x.dsh, y.dsh))) >= 0.8),
-              |e AS (SELECT id_a AS a, id_b AS b FROM edges UNION SELECT id_b, id_a FROM edges),
-              |reach(a, b) AS (SELECT a, b FROM e
-              |                UNION
-              |                SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)
+              |$nearDupReachCte
               |SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
               |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach)
               |GROUP BY n ORDER BY node""".stripMargin)),
@@ -703,18 +995,7 @@ object LlmQueries {
           "id_a", "id_b")
         .orderBy("node"),
       Some(s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-              |         FROM bands a JOIN bands b2 ON a.band = b2.band AND a.band_key = b2.band_key
-              |         WHERE a.doc_id < b2.doc_id),
-              |ds AS (SELECT doc_id, list_distinct(s) AS dsh FROM sh),
-              |edges AS (SELECT id_a, id_b FROM cand
-              |          JOIN ds x ON x.doc_id = id_a JOIN ds y ON y.doc_id = id_b
-              |          WHERE CAST(len(list_intersect(x.dsh, y.dsh)) AS DOUBLE)
-              |                / (len(x.dsh) + len(y.dsh) - len(list_intersect(x.dsh, y.dsh))) >= 0.8),
-              |e AS (SELECT id_a AS a, id_b AS b FROM edges UNION SELECT id_b, id_a FROM edges),
-              |reach(a, b) AS (SELECT a, b FROM e
-              |                UNION
-              |                SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)
+              |$nearDupReachCte
               |SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
               |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach)
               |GROUP BY n ORDER BY node""".stripMargin)),
@@ -753,18 +1034,7 @@ object LlmQueries {
                   "dd AS (SELECT text, min(doc_id) AS rep FROM hotdocs GROUP BY text),\n" +
                   "grp AS (SELECT h.doc_id, r.rep FROM hotdocs h JOIN dd r USING (text)),\n" +
                   "repdocs AS (SELECT rep AS doc_id, text FROM dd),\n")},
-              |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-              |         FROM bands a JOIN bands b2 ON a.band = b2.band AND a.band_key = b2.band_key
-              |         WHERE a.doc_id < b2.doc_id),
-              |ds AS (SELECT doc_id, list_distinct(s) AS dsh FROM sh),
-              |edges AS (SELECT id_a, id_b FROM cand
-              |          JOIN ds x ON x.doc_id = id_a JOIN ds y ON y.doc_id = id_b
-              |          WHERE CAST(len(list_intersect(x.dsh, y.dsh)) AS DOUBLE)
-              |                / (len(x.dsh) + len(y.dsh) - len(list_intersect(x.dsh, y.dsh))) >= 0.8),
-              |e AS (SELECT id_a AS a, id_b AS b FROM edges UNION SELECT id_b, id_a FROM edges),
-              |reach(a, b) AS (SELECT a, b FROM e
-              |                UNION
-              |                SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+              |$nearDupReachCte,
               |repcomp AS (SELECT n AS rep, CAST(min(m) AS BIGINT) AS component FROM (
               |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach) GROUP BY n),
               |gsz AS (SELECT rep, count(*) AS sz FROM grp GROUP BY rep)
@@ -797,18 +1067,7 @@ object LlmQueries {
           .orderBy("component")
       },
       Some(s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-              |         FROM bands a JOIN bands b2 ON a.band = b2.band AND a.band_key = b2.band_key
-              |         WHERE a.doc_id < b2.doc_id),
-              |ds AS (SELECT doc_id, list_distinct(s) AS dsh FROM sh),
-              |edges AS (SELECT id_a, id_b FROM cand
-              |          JOIN ds x ON x.doc_id = id_a JOIN ds y ON y.doc_id = id_b
-              |          WHERE CAST(len(list_intersect(x.dsh, y.dsh)) AS DOUBLE)
-              |                / (len(x.dsh) + len(y.dsh) - len(list_intersect(x.dsh, y.dsh))) >= 0.8),
-              |e AS (SELECT id_a AS a, id_b AS b FROM edges UNION SELECT id_b, id_a FROM edges),
-              |reach(a, b) AS (SELECT a, b FROM e
-              |                UNION
-              |                SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+              |$nearDupReachCte,
               |comp AS (SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
               |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach) GROUP BY n),
               |grp AS (SELECT d.doc_id, d.n_chars, coalesce(c.component, d.doc_id) AS component
@@ -839,18 +1098,7 @@ object LlmQueries {
           .orderBy("source")
       },
       Some(s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-              |         FROM bands a JOIN bands b2 ON a.band = b2.band AND a.band_key = b2.band_key
-              |         WHERE a.doc_id < b2.doc_id),
-              |ds AS (SELECT doc_id, list_distinct(s) AS dsh FROM sh),
-              |edges AS (SELECT id_a, id_b FROM cand
-              |          JOIN ds x ON x.doc_id = id_a JOIN ds y ON y.doc_id = id_b
-              |          WHERE CAST(len(list_intersect(x.dsh, y.dsh)) AS DOUBLE)
-              |                / (len(x.dsh) + len(y.dsh) - len(list_intersect(x.dsh, y.dsh))) >= 0.8),
-              |e AS (SELECT id_a AS a, id_b AS b FROM edges UNION SELECT id_b, id_a FROM edges),
-              |reach(a, b) AS (SELECT a, b FROM e
-              |                UNION
-              |                SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+              |$nearDupReachCte,
               |comp AS (SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
               |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach) GROUP BY n)
               |SELECT d.source, count(*) AS n_docs,
@@ -1074,10 +1322,7 @@ object LlmQueries {
           "doc_id", "text", shingleLen = 3, bands = 4, rowsPerBand = 2)
         .orderBy("id_a", "id_b"),
       Some(s"""$minhashSigCte,
-              |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-              |         FROM bands a JOIN bands b2 ON a.band = b2.band AND a.band_key = b2.band_key
-              |         WHERE a.doc_id < b2.doc_id),
-              |ds AS (SELECT doc_id, list_distinct(s) AS dsh FROM sh)
+              |$lshCandCte
               |SELECT id_a, id_b,
               |       CAST(len(list_intersect(x.dsh, y.dsh)) AS INTEGER) AS n_intersect,
               |       CAST(len(x.dsh) + len(y.dsh) - len(list_intersect(x.dsh, y.dsh)) AS INTEGER) AS n_union,
@@ -1096,10 +1341,7 @@ object LlmQueries {
           thresholdMilli = 800)
         .orderBy("id_a", "id_b"),
       Some(s"""$minhashSigCte,
-              |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-              |         FROM bands a JOIN bands b2 ON a.band = b2.band AND a.band_key = b2.band_key
-              |         WHERE a.doc_id < b2.doc_id),
-              |ds AS (SELECT doc_id, list_distinct(s) AS dsh FROM sh),
+              |$lshCandCte,
               |sc AS (SELECT id_a, id_b,
               |         CAST(len(list_intersect(x.dsh, y.dsh)) AS INTEGER) AS n_intersect,
               |         CAST(len(x.dsh) AS INTEGER) AS n_a,
@@ -1121,7 +1363,7 @@ object LlmQueries {
       },
       Some(s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
               |c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings WHERE vec_id >= 5),
-              |sc AS (SELECT query_id, neighbor_id, CAST(round(($dotSql) * 1000000) AS BIGINT) AS score_micro FROM q, c),
+              |sc AS (SELECT query_id, neighbor_id, CAST(round((${dotSql("qe", "ce")}) * 1000000) AS BIGINT) AS score_micro FROM q, c),
               |r AS (SELECT query_id, neighbor_id, score_micro,
               |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY score_micro DESC, neighbor_id) AS INTEGER) AS rnk
               |      FROM sc)
@@ -1151,7 +1393,7 @@ object LlmQueries {
               |        qe, ce, row_number() OVER (PARTITION BY query_id
               |                                   ORDER BY bit_count(xor(qc, cc)), neighbor_id) AS cr
               |      FROM q, c),
-              |sc AS (SELECT query_id, neighbor_id, hamming, CAST(round(($dotSql) * 1000000) AS BIGINT) AS score_micro
+              |sc AS (SELECT query_id, neighbor_id, hamming, CAST(round((${dotSql("qe", "ce")}) * 1000000) AS BIGINT) AS score_micro
               |       FROM h WHERE cr <= 20),
               |r AS (SELECT query_id, neighbor_id, hamming, score_micro,
               |        CAST(row_number() OVER (PARTITION BY query_id
@@ -1180,7 +1422,7 @@ object LlmQueries {
               |c AS (SELECT vec_id AS neighbor_id, embedding AS ce, lang AS neg_lang
               |      FROM e WHERE vec_id >= 5),
               |sc AS (SELECT query_id, neighbor_id, neg_lang,
-              |         CAST(round(($dotSql) * 1000000) AS BIGINT) AS score_micro
+              |         CAST(round((${dotSql("qe", "ce")}) * 1000000) AS BIGINT) AS score_micro
               |       FROM q, c WHERE neg_lang <> ql),
               |r AS (SELECT query_id, neighbor_id, neg_lang, score_micro,
               |        CAST(row_number() OVER (PARTITION BY query_id
@@ -1200,7 +1442,7 @@ object LlmQueries {
       Some(s"""WITH b AS (SELECT vec_id, embedding, ${lshBucketSql("embedding")} AS bucket FROM embeddings),
               |q AS (SELECT bucket, vec_id AS query_id, embedding AS qe FROM b WHERE vec_id < 5),
               |c AS (SELECT bucket, vec_id AS neighbor_id, embedding AS ce FROM b WHERE vec_id >= 5),
-              |sc AS (SELECT q.query_id, c.neighbor_id, q.bucket, CAST(round(($dotSql) * 1000000) AS BIGINT) AS score_micro
+              |sc AS (SELECT q.query_id, c.neighbor_id, q.bucket, CAST(round((${dotSql("qe", "ce")}) * 1000000) AS BIGINT) AS score_micro
               |       FROM q JOIN c ON q.bucket = c.bucket),
               |r AS (SELECT query_id, neighbor_id, bucket, score_micro,
               |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY score_micro DESC, neighbor_id) AS INTEGER) AS rnk
@@ -1236,7 +1478,7 @@ object LlmQueries {
               |           UNION ALL
               |           SELECT qr.query_id, xor(q.bucket, CAST(2**qr.p AS BIGINT))
               |           FROM qr JOIN q USING (query_id) WHERE qr.rn <= 2),
-              |sc AS (SELECT q.query_id, c.neighbor_id, c.bucket, CAST(round(($dotSql) * 1000000) AS BIGINT) AS score_micro
+              |sc AS (SELECT q.query_id, c.neighbor_id, c.bucket, CAST(round((${dotSql("qe", "ce")}) * 1000000) AS BIGINT) AS score_micro
               |       FROM probes pr JOIN q ON q.query_id = pr.query_id
               |            JOIN c ON c.bucket = pr.bucket),
               |r AS (SELECT query_id, neighbor_id, bucket, score_micro,
@@ -1267,7 +1509,7 @@ object LlmQueries {
       },
       Some(s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
               |c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings WHERE vec_id >= 5),
-              |sc AS (SELECT query_id, neighbor_id, CAST(round(($dotSql) * 1000000) AS BIGINT) AS score_micro FROM q, c),
+              |sc AS (SELECT query_id, neighbor_id, CAST(round((${dotSql("qe", "ce")}) * 1000000) AS BIGINT) AS score_micro FROM q, c),
               |bf AS (SELECT query_id, neighbor_id FROM (
               |         SELECT query_id, neighbor_id,
               |                row_number() OVER (PARTITION BY query_id ORDER BY score_micro DESC, neighbor_id) AS rnk
@@ -1275,7 +1517,7 @@ object LlmQueries {
               |bk AS (SELECT vec_id, embedding, ${lshBucketSql("embedding")} AS bucket FROM embeddings),
               |lq AS (SELECT bucket, vec_id AS query_id, embedding AS qe FROM bk WHERE vec_id < 5),
               |lc AS (SELECT bucket, vec_id AS neighbor_id, embedding AS ce FROM bk WHERE vec_id >= 5),
-              |lsc AS (SELECT lq.query_id, lc.neighbor_id, CAST(round(($dotSql) * 1000000) AS BIGINT) AS score_micro
+              |lsc AS (SELECT lq.query_id, lc.neighbor_id, CAST(round((${dotSql("qe", "ce")}) * 1000000) AS BIGINT) AS score_micro
               |        FROM lq JOIN lc ON lq.bucket = lc.bucket),
               |lsh AS (SELECT query_id, neighbor_id FROM (
               |          SELECT query_id, neighbor_id,
@@ -1293,10 +1535,8 @@ object LlmQueries {
       (s, d) => Dedup.embeddingNearDupPairs(Tables(s, d, "embeddings"),
         dim = 64, threshold = 0.1).orderBy("id_a", "id_b"),
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
         def cosMicro(x: String, y: String) =
-          cosineMicroSql(dot(x, y), dot(x, x), dot(y, y))
+          cosineMicroSql(dotSql(x, y), dotSql(x, x), dotSql(y, y))
         s"""WITH b AS (SELECT vec_id, embedding, ${lshBucketSql("embedding")} AS bucket FROM embeddings)
            |SELECT a.vec_id AS id_a, b2.vec_id AS id_b,
            |       ${cosMicro("a.embedding", "b2.embedding")} AS cosine_micro
@@ -1318,27 +1558,21 @@ object LlmQueries {
           .orderBy("query_id", "rnk")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
         s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
            |qa AS (SELECT vec_id, embedding, cid FROM (
            |         SELECT v.vec_id, v.embedding, c.cid,
            |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dot("v.embedding", "c.cv")} DESC, c.cid) AS rn
+           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
            |         FROM embeddings v, cent c WHERE v.vec_id BETWEEN 16 AND 20) WHERE rn = 1),
            |ca AS (SELECT vec_id, embedding, cid FROM (
            |         SELECT v.vec_id, v.embedding, c.cid,
            |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dot("v.embedding", "c.cv")} DESC, c.cid) AS rn
+           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
            |         FROM embeddings v, cent c WHERE v.vec_id >= 21) WHERE rn = 1),
            |sc AS (SELECT qa.vec_id AS query_id, ca.vec_id AS neighbor_id, qa.cid AS centroid_id,
-           |              CAST(round((${dot("qa.embedding", "ca.embedding")}) * 1000000) AS BIGINT) AS score_micro
+           |              CAST(round((${dotSql("qa.embedding", "ca.embedding")}) * 1000000) AS BIGINT) AS score_micro
            |       FROM qa JOIN ca ON qa.cid = ca.cid),
-           |r AS (SELECT query_id, neighbor_id, centroid_id, score_micro,
-           |             CAST(row_number() OVER (PARTITION BY query_id ORDER BY score_micro DESC, neighbor_id) AS INTEGER) AS rnk
-           |      FROM sc)
-           |SELECT query_id, neighbor_id, centroid_id, rnk, score_micro FROM r WHERE rnk <= 5
-           |ORDER BY query_id, rnk""".stripMargin
+           |$ivfTop5Sql""".stripMargin
       }),
 
     // IVF with multi-cell probing (nprobe=2): the recall/cost knob — each
@@ -1354,27 +1588,21 @@ object LlmQueries {
           .orderBy("query_id", "rnk")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
         s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
            |qa AS (SELECT vec_id, embedding, cid FROM (
            |         SELECT v.vec_id, v.embedding, c.cid,
            |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dot("v.embedding", "c.cv")} DESC, c.cid) AS rn
+           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
            |         FROM embeddings v, cent c WHERE v.vec_id BETWEEN 16 AND 20) WHERE rn <= 2),
            |ca AS (SELECT vec_id, embedding, cid FROM (
            |         SELECT v.vec_id, v.embedding, c.cid,
            |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dot("v.embedding", "c.cv")} DESC, c.cid) AS rn
+           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
            |         FROM embeddings v, cent c WHERE v.vec_id >= 21) WHERE rn = 1),
            |sc AS (SELECT qa.vec_id AS query_id, ca.vec_id AS neighbor_id, ca.cid AS centroid_id,
-           |              CAST(round((${dot("qa.embedding", "ca.embedding")}) * 1000000) AS BIGINT) AS score_micro
+           |              CAST(round((${dotSql("qa.embedding", "ca.embedding")}) * 1000000) AS BIGINT) AS score_micro
            |       FROM qa JOIN ca ON qa.cid = ca.cid),
-           |r AS (SELECT query_id, neighbor_id, centroid_id, score_micro,
-           |             CAST(row_number() OVER (PARTITION BY query_id ORDER BY score_micro DESC, neighbor_id) AS INTEGER) AS rnk
-           |      FROM sc)
-           |SELECT query_id, neighbor_id, centroid_id, rnk, score_micro FROM r WHERE rnk <= 5
-           |ORDER BY query_id, rnk""".stripMargin
+           |$ivfTop5Sql""".stripMargin
       }),
 
     // Hierarchical IVF assignment (coarse quantizer -> within-cell argmax):
@@ -1390,25 +1618,11 @@ object LlmQueries {
           .orderBy("vec_id")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-        s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
-           |g AS (SELECT cid AS gid, cv AS gv FROM cent ORDER BY cid LIMIT 4),
-           |fc AS (SELECT cid, cv, gid FROM (
-           |         SELECT f.cid, f.cv, g.gid,
-           |                row_number() OVER (PARTITION BY f.cid
-           |                                   ORDER BY ${dot("f.cv", "g.gv")} DESC, g.gid) AS rn
-           |         FROM cent f, g) WHERE rn = 1),
-           |live AS (SELECT gid, gv FROM g WHERE gid IN (SELECT gid FROM fc)),
-           |va AS (SELECT vec_id, embedding, gid FROM (
-           |         SELECT v.vec_id, v.embedding, l.gid,
-           |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dot("v.embedding", "l.gv")} DESC, l.gid) AS rn
-           |         FROM embeddings v, live l WHERE v.vec_id >= 16) WHERE rn = 1)
+        s"""$ivfHierCte
            |SELECT vec_id, gid AS coarse_id, cid AS centroid_id FROM (
            |  SELECT va.vec_id, va.gid, fc.cid,
            |         row_number() OVER (PARTITION BY va.vec_id
-           |                            ORDER BY ${dot("va.embedding", "fc.cv")} DESC, fc.cid) AS rn
+           |                            ORDER BY ${dotSql("va.embedding", "fc.cv")} DESC, fc.cid) AS rn
            |  FROM va JOIN fc ON va.gid = fc.gid) WHERE rn = 1
            |ORDER BY vec_id""".stripMargin
       }),
@@ -1426,36 +1640,18 @@ object LlmQueries {
           .orderBy("query_id", "rnk")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-        s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
-           |g AS (SELECT cid AS gid, cv AS gv FROM cent ORDER BY cid LIMIT 4),
-           |fc AS (SELECT cid, cv, gid FROM (
-           |         SELECT f.cid, f.cv, g.gid,
-           |                row_number() OVER (PARTITION BY f.cid
-           |                                   ORDER BY ${dot("f.cv", "g.gv")} DESC, g.gid) AS rn
-           |         FROM cent f, g) WHERE rn = 1),
-           |live AS (SELECT gid, gv FROM g WHERE gid IN (SELECT gid FROM fc)),
-           |va AS (SELECT vec_id, embedding, gid FROM (
-           |         SELECT v.vec_id, v.embedding, l.gid,
-           |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dot("v.embedding", "l.gv")} DESC, l.gid) AS rn
-           |         FROM embeddings v, live l WHERE v.vec_id >= 16) WHERE rn = 1),
+        s"""$ivfHierCte,
            |fa AS (SELECT vec_id, embedding, cid FROM (
            |        SELECT va.vec_id, va.embedding, fc.cid,
            |               row_number() OVER (PARTITION BY va.vec_id
-           |                                  ORDER BY ${dot("va.embedding", "fc.cv")} DESC, fc.cid) AS rn
+           |                                  ORDER BY ${dotSql("va.embedding", "fc.cv")} DESC, fc.cid) AS rn
            |        FROM va JOIN fc ON va.gid = fc.gid) WHERE rn = 1),
            |qa AS (SELECT vec_id AS query_id, embedding AS qe, cid FROM fa WHERE vec_id BETWEEN 16 AND 20),
            |ca AS (SELECT vec_id AS neighbor_id, embedding AS ce, cid FROM fa WHERE vec_id >= 21),
            |sc AS (SELECT qa.query_id, ca.neighbor_id, qa.cid AS centroid_id,
-           |              CAST(round((${dot("qa.qe", "ca.ce")}) * 1000000) AS BIGINT) AS score_micro
+           |              CAST(round((${dotSql("qa.qe", "ca.ce")}) * 1000000) AS BIGINT) AS score_micro
            |       FROM qa JOIN ca ON qa.cid = ca.cid),
-           |r AS (SELECT query_id, neighbor_id, centroid_id, score_micro,
-           |             CAST(row_number() OVER (PARTITION BY query_id ORDER BY score_micro DESC, neighbor_id) AS INTEGER) AS rnk
-           |      FROM sc)
-           |SELECT query_id, neighbor_id, centroid_id, rnk, score_micro FROM r WHERE rnk <= 5
-           |ORDER BY query_id, rnk""".stripMargin
+           |$ivfTop5Sql""".stripMargin
       }),
 
     // Embedding mean-pooling (chunk embeddings -> document embedding): the
@@ -1486,13 +1682,11 @@ object LlmQueries {
           .orderBy("centroid_id", "pos")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
         s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
            |a AS (SELECT vec_id, embedding, cid FROM (
            |        SELECT v.vec_id, v.embedding, c.cid,
            |               row_number() OVER (PARTITION BY v.vec_id
-           |                                  ORDER BY ${dot("v.embedding", "c.cv")} DESC, c.cid) AS rn
+           |                                  ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
            |        FROM embeddings v, cent c WHERE v.vec_id >= 16) WHERE rn = 1),
            |e AS (SELECT cid, i AS pos,
            |             CAST(round(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS mv
@@ -2294,32 +2488,10 @@ object LlmQueries {
     // real file format, value-checked cross-engine without the oracle
     // touching a byte.
     Q("multimodal_decode_bmp", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val w = 8 + (m % 5).toInt
-          val h = 6 + (m % 4).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeBmp(w, h, (x, y) =>
-            (((x * 7 + y * 13 + m) % 256).toInt,
-              ((x * 3 + y * 5) % 256).toInt,
-              ((x + y * 2 + m * 11) % 256).toInt)), "image/bmp")
-        }
-        Multimodal.imageStats(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |dims AS (SELECT id, 8 + id % 5 AS w, 6 + id % 4 AS h FROM m),
-             |xs AS (SELECT id, w, h, unnest(range(w)) AS x FROM dims),
-             |pix AS (SELECT id, w, h, x, unnest(range(h)) AS y FROM xs),
-             |sums AS (SELECT id, w, h,
-             |           sum((x * 7 + y * 13 + id) % 256) AS r_sum,
-             |           sum((x * 3 + y * 5) % 256) AS g_sum,
-             |           sum((x + y * 2 + id * 11) % 256) AS b_sum
-             |         FROM pix GROUP BY 1, 2, 3)
-             |SELECT id AS media_id, CAST(w AS INTEGER) AS width,
-             |  CAST(h AS INTEGER) AS height, CAST(3 AS INTEGER) AS channels,
-             |  CAST(r_sum AS BIGINT) AS r_sum, CAST(g_sum AS BIGINT) AS g_sum,
-             |  CAST(b_sum AS BIGINT) AS b_sum, CAST(w * h AS BIGINT) AS n_pixels
-             |FROM sums ORDER BY media_id""".stripMargin)),
+      (s, d) => Multimodal.imageStats(gradientImages(s, Multimodal.encodeBmp, "image/bmp"))
+        .toDF().orderBy("media_id"),
+      Some(s"""${pixelGridSql(200, gradientDims)},
+              |${imageStatsSql("pix", gradientRgbSql(0), gradientRgbSql(1), gradientRgbSql(2))}""".stripMargin)),
 
     // Perceptual average-hash over the REAL decoded pixels: gray window
     // thresholded against its mean, packed into a 48-bit fingerprint —
@@ -2327,36 +2499,9 @@ object LlmQueries {
     // map-only decode boundary as the stats query; the oracle replays
     // the generator's pixel algebra and the identical hash packing.
     Q("multimodal_ahash", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val w = 8 + (m % 5).toInt
-          val h = 6 + (m % 4).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeBmp(w, h, (x, y) =>
-            (((x * 7 + y * 13 + m) % 256).toInt,
-              ((x * 3 + y * 5) % 256).toInt,
-              ((x + y * 2 + m * 11) % 256).toInt)), "image/bmp")
-        }
-        Multimodal.aHash(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |dims AS (SELECT id, 8 + id % 5 AS w, 6 + id % 4 AS h FROM m),
-             |xs AS (SELECT id, w, h, unnest(range(8)) AS x FROM dims),
-             |pix AS (SELECT id, w, h, x, unnest(range(6)) AS y FROM xs),
-             |g AS (SELECT id, w, h, x, y,
-             |        ((x * 7 + y * 13 + id) % 256 + (x * 3 + y * 5) % 256
-             |         + (x + y * 2 + id * 11) % 256) // 3 AS gray
-             |      FROM pix),
-             |mn AS (SELECT id, sum(gray) // 48 AS mean FROM g GROUP BY 1),
-             |hb AS (SELECT g.id, g.w, g.h,
-             |         sum(CASE WHEN gray > mean
-             |             THEN (CAST(1 AS BIGINT) << (y * 8 + x)) ELSE 0 END) AS ahash,
-             |         sum(CASE WHEN gray > mean THEN 1 ELSE 0 END) AS n_set
-             |       FROM g JOIN mn USING (id) GROUP BY 1, 2, 3)
-             |SELECT id AS media_id, CAST(w AS INTEGER) AS width,
-             |  CAST(h AS INTEGER) AS height, CAST(ahash AS BIGINT) AS ahash,
-             |  CAST(n_set AS BIGINT) AS n_set
-             |FROM hb ORDER BY media_id""".stripMargin)),
+      (s, d) => Multimodal.aHash(gradientImages(s, Multimodal.encodeBmp, "image/bmp"))
+        .toDF().orderBy("media_id"),
+      Some(gradientAhashOracle)),
 
     // PNG REAL decode: the same contract as multimodal_decode_bmp but
     // through a COMPRESSED container — encodePng writes spec-conformant
@@ -2367,32 +2512,15 @@ object LlmQueries {
     // arithmetically. Green here means a real compressed image format
     // round-trips byte→pixels in-engine with values proven cross-engine.
     Q("multimodal_decode_png", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val w = 9 + (m % 6).toInt
-          val h = 7 + (m % 5).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodePng(w, h, (x, y) =>
+      (s, d) => Multimodal.imageStats(mediaFixture(s, 200, "image/png") { m =>
+          Multimodal.encodePng(9 + (m % 6).toInt, 7 + (m % 5).toInt, (x, y) =>
             (((x * 11 + y * 3 + m) % 256).toInt,
               ((x * 5 + y * 7 + m * 2) % 256).toInt,
-              ((x * 2 + y + m * 13) % 256).toInt)), "image/png")
-        }
-        Multimodal.imageStats(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |dims AS (SELECT id, 9 + id % 6 AS w, 7 + id % 5 AS h FROM m),
-             |xs AS (SELECT id, w, h, unnest(range(w)) AS x FROM dims),
-             |pix AS (SELECT id, w, h, x, unnest(range(h)) AS y FROM xs),
-             |sums AS (SELECT id, w, h,
-             |           sum((x * 11 + y * 3 + id) % 256) AS r_sum,
-             |           sum((x * 5 + y * 7 + id * 2) % 256) AS g_sum,
-             |           sum((x * 2 + y + id * 13) % 256) AS b_sum
-             |         FROM pix GROUP BY 1, 2, 3)
-             |SELECT id AS media_id, CAST(w AS INTEGER) AS width,
-             |  CAST(h AS INTEGER) AS height, CAST(3 AS INTEGER) AS channels,
-             |  CAST(r_sum AS BIGINT) AS r_sum, CAST(g_sum AS BIGINT) AS g_sum,
-             |  CAST(b_sum AS BIGINT) AS b_sum, CAST(w * h AS BIGINT) AS n_pixels
-             |FROM sums ORDER BY media_id""".stripMargin)),
+              ((x * 2 + y + m * 13) % 256).toInt))
+        }).toDF().orderBy("media_id"),
+      Some(s"""${pixelGridSql(200, "9 + id % 6 AS w, 7 + id % 5 AS h")},
+              |${imageStatsSql("pix", "(x * 11 + y * 3 + id) % 256",
+                  "(x * 5 + y * 7 + id * 2) % 256", "(x * 2 + y + id * 13) % 256")}""".stripMargin)),
 
     // REAL video container: Y4M (YUV4MPEG2, Cmono) frame sampling — every
     // 2nd frame decoded from real container bytes and aHashed with the
@@ -2400,19 +2528,10 @@ object LlmQueries {
     // one dedup index). The oracle replays the generator algebra per
     // sampled frame, mirroring the multimodal_ahash SQL with a frame axis.
     Q("multimodal_video_framesample", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 60).map { m =>
-          val w = 8 + (m % 5).toInt
-          val h = 6 + (m % 4).toInt
-          val nf = 5 + (m % 6).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeY4m(w, h, nf,
-            f => (x, y) => (x * 7 + y * 13 + m.toInt + f * 31) % 256),
-            "video/x-yuv4mpeg")
-        }
-        Multimodal.videoFrameHashes(media, every = 2).toDF()
-          .orderBy("media_id", "frame_idx")
-      },
+      (s, d) => Multimodal.videoFrameHashes(
+          y4mClips(s, m => 5 + (m % 6).toInt,
+            (m, f) => (x, y) => (x * 7 + y * 13 + m.toInt + f * 31) % 256), every = 2).toDF()
+        .orderBy("media_id", "frame_idx"),
       Some("""WITH m AS (SELECT unnest(range(0, 60)) AS id),
              |v AS (SELECT id, 5 + id % 6 AS nf FROM m),
              |fr AS (SELECT id, nf, unnest(range(0, nf, 2)) AS f FROM v),
@@ -2442,16 +2561,8 @@ object LlmQueries {
     // hashes + lag + xor/bit_count arithmetically.
     Q("multimodal_video_shots", "LLM",
       (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 60).map { m =>
-          val w = 8 + (m % 5).toInt
-          val h = 6 + (m % 4).toInt
-          val nf = 8 + (m % 5).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeY4m(w, h, nf,
-            f => (x, y) => (x * (3 + ((f / 4) % 5) * 2)
-              + y * (7 + ((f / 4) % 3) * 4) + m.toInt) % 256),
-            "video/x-yuv4mpeg")
-        }
+        val media = y4mClips(s, m => 8 + (m % 5).toInt, (m, f) => (x, y) =>
+          (x * (3 + ((f / 4) % 5) * 2) + y * (7 + ((f / 4) % 3) * 4) + m.toInt) % 256)
         val wm = org.apache.spark.sql.expressions.Window
           .partitionBy(col("media_id")).orderBy(col("frame_idx"))
         Multimodal.videoFrameHashes(media, every = 1).toDF()
@@ -2492,50 +2603,12 @@ object LlmQueries {
     // values proven cross-engine — the last decodeStub class (inter-frame
     // codecs excepted, which need an external library by nature).
     Q("multimodal_decode_video_mjpeg", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 60).map { m =>
-          val w = 9 + (m % 6).toInt
-          val h = 7 + (m % 5).toInt
-          val nf = 5 + (m % 6).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeAviMjpeg(w, h, nf,
-            f => (x, y) =>
-              (((m * 13 + (x / 8) * 57 + (y / 8) * 23 + f * 19) % 256).toInt,
-                ((m * 7 + (x / 8) * 31 + (y / 8) * 11 + f * 5) % 256).toInt,
-                ((m * 11 + (x / 8) * 17 + (y / 8) * 29 + f * 3) % 256).toInt)),
-            "video/x-msvideo")
-        }
-        Multimodal.videoFrameStats(media, every = 2).toDF()
-          .orderBy("media_id", "frame_idx")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 60)) AS id),
-             |v AS (SELECT id, 9 + id % 6 AS w, 7 + id % 5 AS h,
-             |        5 + id % 6 AS nf FROM m),
-             |fr AS (SELECT id, w, h, nf, unnest(range(0, nf, 2)) AS f FROM v),
-             |xs AS (SELECT id, w, h, nf, f, unnest(range(w)) AS x FROM fr),
-             |pix AS (SELECT id, w, h, nf, f, x, unnest(range(h)) AS y FROM xs),
-             |src AS (SELECT id, w, h, nf, f,
-             |          (id * 13 + (x // 8) * 57 + (y // 8) * 23 + f * 19) % 256 AS r0,
-             |          (id * 7 + (x // 8) * 31 + (y // 8) * 11 + f * 5) % 256 AS g0,
-             |          (id * 11 + (x // 8) * 17 + (y // 8) * 29 + f * 3) % 256 AS b0
-             |        FROM pix),
-             |ycc AS (SELECT id, w, h, nf, f,
-             |          LEAST(255, GREATEST(0, (19595 * r0 + 38470 * g0 + 7471 * b0 + 32768) // 65536)) AS yy,
-             |          LEAST(255, GREATEST(0, 128 + (-11059 * r0 - 21709 * g0 + 32768 * b0 + 32768 + 16777216) // 65536 - 256)) AS cb,
-             |          LEAST(255, GREATEST(0, 128 + (32768 * r0 - 27439 * g0 - 5329 * b0 + 32768 + 16777216) // 65536 - 256)) AS cr
-             |        FROM src),
-             |rgb AS (SELECT id, w, h, nf, f,
-             |          LEAST(255, GREATEST(0, yy + (91881 * (cr - 128) + 32768 + 16777216) // 65536 - 256)) AS r,
-             |          LEAST(255, GREATEST(0, yy - ((22554 * (cb - 128) + 46802 * (cr - 128) + 32768 + 16777216) // 65536 - 256))) AS g,
-             |          LEAST(255, GREATEST(0, yy + (116130 * (cb - 128) + 32768 + 16777216) // 65536 - 256)) AS b
-             |        FROM ycc),
-             |sums AS (SELECT id, w, h, nf, f, sum(r) AS r_sum, sum(g) AS g_sum,
-             |           sum(b) AS b_sum FROM rgb GROUP BY 1, 2, 3, 4, 5)
-             |SELECT id AS media_id, CAST(nf AS INTEGER) AS n_frames,
-             |  CAST(f AS INTEGER) AS frame_idx, CAST(w AS INTEGER) AS width,
-             |  CAST(h AS INTEGER) AS height, CAST(r_sum AS BIGINT) AS r_sum,
-             |  CAST(g_sum AS BIGINT) AS g_sum, CAST(b_sum AS BIGINT) AS b_sum
-             |FROM sums ORDER BY media_id, frame_idx""".stripMargin)),
+      (s, d) => Multimodal.videoFrameStats(blockColorClips(s, 8,
+          m => (9 + (m % 6).toInt, 7 + (m % 5).toInt, 5 + (m % 6).toInt),
+          Multimodal.encodeAviMjpeg), every = 2).toDF()
+        .orderBy("media_id", "frame_idx"),
+      Some(blockColorClipStatsOracle(8,
+        "9 + id % 6 AS w, 7 + id % 5 AS h, 5 + id % 6 AS nf"))),
 
     // 4:2:0-subsampled MJPEG video — the dominant webcam/capture flavor
     // (quarter-resolution chroma): same frame-axis analytic contract as
@@ -2543,50 +2616,12 @@ object LlmQueries {
     // so the chroma downsample-average, DCT, and replication upsample
     // are all exact (the multimodal_decode_jpeg420 contract per frame).
     Q("multimodal_decode_video_mjpeg420", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 60).map { m =>
-          val w = 18 + (m % 8).toInt
-          val h = 17 + (m % 5).toInt
-          val nf = 4 + (m % 3).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeAviMjpeg420(w, h, nf,
-            f => (x, y) =>
-              (((m * 13 + (x / 16) * 57 + (y / 16) * 23 + f * 19) % 256).toInt,
-                ((m * 7 + (x / 16) * 31 + (y / 16) * 11 + f * 5) % 256).toInt,
-                ((m * 11 + (x / 16) * 17 + (y / 16) * 29 + f * 3) % 256).toInt)),
-            "video/x-msvideo")
-        }
-        Multimodal.videoFrameStats(media, every = 2).toDF()
-          .orderBy("media_id", "frame_idx")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 60)) AS id),
-             |v AS (SELECT id, 18 + id % 8 AS w, 17 + id % 5 AS h,
-             |        4 + id % 3 AS nf FROM m),
-             |fr AS (SELECT id, w, h, nf, unnest(range(0, nf, 2)) AS f FROM v),
-             |xs AS (SELECT id, w, h, nf, f, unnest(range(w)) AS x FROM fr),
-             |pix AS (SELECT id, w, h, nf, f, x, unnest(range(h)) AS y FROM xs),
-             |src AS (SELECT id, w, h, nf, f,
-             |          (id * 13 + (x // 16) * 57 + (y // 16) * 23 + f * 19) % 256 AS r0,
-             |          (id * 7 + (x // 16) * 31 + (y // 16) * 11 + f * 5) % 256 AS g0,
-             |          (id * 11 + (x // 16) * 17 + (y // 16) * 29 + f * 3) % 256 AS b0
-             |        FROM pix),
-             |ycc AS (SELECT id, w, h, nf, f,
-             |          LEAST(255, GREATEST(0, (19595 * r0 + 38470 * g0 + 7471 * b0 + 32768) // 65536)) AS yy,
-             |          LEAST(255, GREATEST(0, 128 + (-11059 * r0 - 21709 * g0 + 32768 * b0 + 32768 + 16777216) // 65536 - 256)) AS cb,
-             |          LEAST(255, GREATEST(0, 128 + (32768 * r0 - 27439 * g0 - 5329 * b0 + 32768 + 16777216) // 65536 - 256)) AS cr
-             |        FROM src),
-             |rgb AS (SELECT id, w, h, nf, f,
-             |          LEAST(255, GREATEST(0, yy + (91881 * (cr - 128) + 32768 + 16777216) // 65536 - 256)) AS r,
-             |          LEAST(255, GREATEST(0, yy - ((22554 * (cb - 128) + 46802 * (cr - 128) + 32768 + 16777216) // 65536 - 256))) AS g,
-             |          LEAST(255, GREATEST(0, yy + (116130 * (cb - 128) + 32768 + 16777216) // 65536 - 256)) AS b
-             |        FROM ycc),
-             |sums AS (SELECT id, w, h, nf, f, sum(r) AS r_sum, sum(g) AS g_sum,
-             |           sum(b) AS b_sum FROM rgb GROUP BY 1, 2, 3, 4, 5)
-             |SELECT id AS media_id, CAST(nf AS INTEGER) AS n_frames,
-             |  CAST(f AS INTEGER) AS frame_idx, CAST(w AS INTEGER) AS width,
-             |  CAST(h AS INTEGER) AS height, CAST(r_sum AS BIGINT) AS r_sum,
-             |  CAST(g_sum AS BIGINT) AS g_sum, CAST(b_sum AS BIGINT) AS b_sum
-             |FROM sums ORDER BY media_id, frame_idx""".stripMargin)),
+      (s, d) => Multimodal.videoFrameStats(blockColorClips(s, 16,
+          m => (18 + (m % 8).toInt, 17 + (m % 5).toInt, 4 + (m % 3).toInt),
+          Multimodal.encodeAviMjpeg420), every = 2).toDF()
+        .orderBy("media_id", "frame_idx"),
+      Some(blockColorClipStatsOracle(16,
+        "18 + id % 8 AS w, 17 + id % 5 AS h, 4 + id % 3 AS nf"))),
 
     // Shot-boundary detection over COMPRESSED video: the MJPEG twin of
     // multimodal_video_shots, through the same videoFrameHashes entry
@@ -2599,15 +2634,13 @@ object LlmQueries {
     // block gray -> window threshold -> packed hash -> lag arithmetic.
     Q("multimodal_video_shots_mjpeg", "LLM",
       (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 60).map { m =>
-          val nf = 8 + (m % 5).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeAviMjpeg(64, 48, nf,
+        val media = mediaFixture(s, 60, "video/x-msvideo") { m =>
+          Multimodal.encodeAviMjpeg(64, 48, 8 + (m % 5).toInt,
             f => (x, y) => {
               val v = ((x / 8) * (3 + ((f / 4) % 5) * 2)
                 + (y / 8) * (7 + ((f / 4) % 3) * 4) + m.toInt) % 256
               (v, v, v)
-            }), "video/x-msvideo")
+            })
         }
         val wm = org.apache.spark.sql.expressions.Window
           .partitionBy(col("media_id")).orderBy(col("frame_idx"))
@@ -2648,42 +2681,12 @@ object LlmQueries {
     // contract as multimodal_wav_stats, proven on container-demuxed
     // samples). The oracle replays the sample algebra arithmetically.
     Q("multimodal_decode_avi_audio", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 60).map { m =>
-          val w = 9 + (m % 6).toInt
-          val h = 7 + (m % 5).toInt
-          val nf = 5 + (m % 4).toInt
-          val a = (m % 7).toInt + 3
-          Multimodal.MediaRecord(m, Multimodal.encodeAviMjpegPcm(w, h, nf,
-            f => (x, y) =>
-              (((m * 13 + (x / 8) * 57 + (y / 8) * 23 + f * 19) % 256).toInt,
-                ((m * 7 + (x / 8) * 31 + (y / 8) * 11 + f * 5) % 256).toInt,
-                ((m * 11 + (x / 8) * 17 + (y / 8) * 29 + f * 3) % 256).toInt),
-            sampleRate = 8000, samplesPerFrame = 400,
-            f => i => (((f * 400 + i).toLong * a + m * 17) % 2048 - 1024).toInt),
-            "video/x-msvideo")
-        }
-        Multimodal.audioStats(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 60)) AS id),
-             |par AS (SELECT id, (5 + id % 4) * 400 AS n, id % 7 + 3 AS a FROM m),
-             |smp AS (SELECT id, n, a, unnest(range(n)) AS i FROM par),
-             |s AS (SELECT id, n, i, (i * a + id * 17) % 2048 - 1024 AS v FROM smp),
-             |sgn AS (SELECT id, n, i, v,
-             |          lag(v) OVER (PARTITION BY id ORDER BY i) AS pv FROM s),
-             |st AS (SELECT id, any_value(n) AS n, max(abs(v)) AS peak,
-             |         sum(CAST(v AS BIGINT) * v) AS sum_sq,
-             |         sum(CASE WHEN pv IS NOT NULL AND (pv < 0) <> (v < 0)
-             |             THEN 1 ELSE 0 END) AS zc
-             |       FROM sgn GROUP BY id)
-             |SELECT id AS media_id, CAST(8000 AS INTEGER) AS sample_rate,
-             |  CAST(n AS BIGINT) AS n_samples,
-             |  CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-             |  CAST(peak AS INTEGER) AS peak,
-             |  CAST(floor(sqrt(sum_sq // n)) AS BIGINT) AS rms,
-             |  CAST(zc AS BIGINT) AS zero_crossings
-             |FROM st ORDER BY media_id""".stripMargin)),
+      (s, d) => Multimodal.audioStats(avClips(s)).toDF().orderBy("media_id"),
+      Some(s"""WITH m AS (SELECT unnest(range(0, 60)) AS id),
+              |par AS (SELECT id, (5 + id % 4) * 400 AS n, id % 7 + 3 AS a FROM m),
+              |smp AS (SELECT id, n, a, unnest(range(n)) AS i FROM par),
+              |s AS (SELECT id, n, i, (i * a + id * 17) % 2048 - 1024 AS v FROM smp),
+              |${pcmStatsSql(8000)}""".stripMargin)),
 
     // Full A/V demux from ONE payload: frame-0 channel sums (through the
     // MJPEG stream) joined with the PCM stream's stats — the capability
@@ -2692,21 +2695,7 @@ object LlmQueries {
     // joined with the sample algebra, both per media.
     Q("multimodal_avi_demux", "LLM",
       (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 60).map { m =>
-          val w = 9 + (m % 6).toInt
-          val h = 7 + (m % 5).toInt
-          val nf = 5 + (m % 4).toInt
-          val a = (m % 7).toInt + 3
-          Multimodal.MediaRecord(m, Multimodal.encodeAviMjpegPcm(w, h, nf,
-            f => (x, y) =>
-              (((m * 13 + (x / 8) * 57 + (y / 8) * 23 + f * 19) % 256).toInt,
-                ((m * 7 + (x / 8) * 31 + (y / 8) * 11 + f * 5) % 256).toInt,
-                ((m * 11 + (x / 8) * 17 + (y / 8) * 29 + f * 3) % 256).toInt),
-            sampleRate = 8000, samplesPerFrame = 400,
-            f => i => (((f * 400 + i).toLong * a + m * 17) % 2048 - 1024).toInt),
-            "video/x-msvideo")
-        }
+        val media = avClips(s)
         // every > max n_frames keeps exactly frame 0; n_frames still total
         val v = Multimodal.videoFrameStats(media, every = 1000).toDF()
           .select(col("media_id"), col("n_frames"), col("width"),
@@ -2715,37 +2704,25 @@ object LlmQueries {
           .select(col("media_id"), col("n_samples"), col("rms"))
         v.join(a, "media_id").orderBy("media_id")
       },
-      Some("""WITH m AS (SELECT unnest(range(0, 60)) AS id),
-             |par AS (SELECT id, 9 + id % 6 AS w, 7 + id % 5 AS h,
-             |          5 + id % 4 AS nf, id % 7 + 3 AS a FROM m),
-             |xs AS (SELECT id, w, h, nf, unnest(range(w)) AS x FROM par),
-             |pix AS (SELECT id, w, h, nf, x, unnest(range(h)) AS y FROM xs),
-             |src AS (SELECT id, w, h, nf,
-             |          (id * 13 + (x // 8) * 57 + (y // 8) * 23) % 256 AS r0,
-             |          (id * 7 + (x // 8) * 31 + (y // 8) * 11) % 256 AS g0,
-             |          (id * 11 + (x // 8) * 17 + (y // 8) * 29) % 256 AS b0
-             |        FROM pix),
-             |ycc AS (SELECT id, w, h, nf,
-             |          LEAST(255, GREATEST(0, (19595 * r0 + 38470 * g0 + 7471 * b0 + 32768) // 65536)) AS yy,
-             |          LEAST(255, GREATEST(0, 128 + (-11059 * r0 - 21709 * g0 + 32768 * b0 + 32768 + 16777216) // 65536 - 256)) AS cb,
-             |          LEAST(255, GREATEST(0, 128 + (32768 * r0 - 27439 * g0 - 5329 * b0 + 32768 + 16777216) // 65536 - 256)) AS cr
-             |        FROM src),
-             |rgb AS (SELECT id, w, h, nf,
-             |          LEAST(255, GREATEST(0, yy + (91881 * (cr - 128) + 32768 + 16777216) // 65536 - 256)) AS r
-             |        FROM ycc),
-             |vs AS (SELECT id, any_value(w) AS w, any_value(h) AS h,
-             |         any_value(nf) AS nf, sum(r) AS r_sum0 FROM rgb GROUP BY id),
-             |smp AS (SELECT id, nf * 400 AS n, a,
-             |          unnest(range(nf * 400)) AS i FROM par),
-             |s AS (SELECT id, n, (i * a + id * 17) % 2048 - 1024 AS v FROM smp),
-             |ast AS (SELECT id, any_value(n) AS n,
-             |          sum(CAST(v AS BIGINT) * v) AS sum_sq FROM s GROUP BY id)
-             |SELECT vs.id AS media_id, CAST(nf AS INTEGER) AS n_frames,
-             |  CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-             |  CAST(r_sum0 AS BIGINT) AS r_sum0,
-             |  CAST(n AS BIGINT) AS n_samples,
-             |  CAST(floor(sqrt(sum_sq // n)) AS BIGINT) AS rms
-             |FROM vs JOIN ast ON vs.id = ast.id ORDER BY media_id""".stripMargin)),
+      Some(s"""WITH m AS (SELECT unnest(range(0, 60)) AS id),
+              |par AS (SELECT id, 9 + id % 6 AS w, 7 + id % 5 AS h,
+              |          5 + id % 4 AS nf, id % 7 + 3 AS a FROM m),
+              |xs AS (SELECT id, w, h, nf, unnest(range(w)) AS x FROM par),
+              |pix AS (SELECT id, w, h, nf, x, unnest(range(h)) AS y FROM xs),
+              |${blockRgbChainSql("id, w, h, nf", 8, frames = false)},
+              |vs AS (SELECT id, any_value(w) AS w, any_value(h) AS h,
+              |         any_value(nf) AS nf, sum(r) AS r_sum0 FROM rgb GROUP BY id),
+              |smp AS (SELECT id, nf * 400 AS n, a,
+              |          unnest(range(nf * 400)) AS i FROM par),
+              |s AS (SELECT id, n, (i * a + id * 17) % 2048 - 1024 AS v FROM smp),
+              |ast AS (SELECT id, any_value(n) AS n,
+              |          sum(CAST(v AS BIGINT) * v) AS sum_sq FROM s GROUP BY id)
+              |SELECT vs.id AS media_id, CAST(nf AS INTEGER) AS n_frames,
+              |  CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
+              |  CAST(r_sum0 AS BIGINT) AS r_sum0,
+              |  CAST(n AS BIGINT) AS n_samples,
+              |  CAST(floor(sqrt(sum_sq // n)) AS BIGINT) AS rms
+              |FROM vs JOIN ast ON vs.id = ast.id ORDER BY media_id""".stripMargin)),
 
     // Indexed-color PNG (color type 3 — the most common web PNG flavor):
     // the decoder walks PLTE, defilters INDEX bytes through all five
@@ -2754,33 +2731,15 @@ object LlmQueries {
     // palette formula → channel sums). Green proves the palette path on
     // real compressed bytes, same contract as multimodal_decode_png.
     Q("multimodal_decode_png_palette", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val w = 9 + (m % 6).toInt
-          val h = 7 + (m % 5).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodePngPalette(w, h,
+      (s, d) => Multimodal.imageStats(mediaFixture(s, 200, "image/png") { m =>
+          Multimodal.encodePngPalette(9 + (m % 6).toInt, 7 + (m % 5).toInt,
             nEntries = 64,
             palColor = e => ((e * 5 + 7) % 256, (e * 11 + 3) % 256, (e * 17 + 29) % 256),
-            index = (x, y) => (x * 7 + y * 13 + m.toInt) % 64), "image/png")
-        }
-        Multimodal.imageStats(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |dims AS (SELECT id, 9 + id % 6 AS w, 7 + id % 5 AS h FROM m),
-             |xs AS (SELECT id, w, h, unnest(range(w)) AS x FROM dims),
-             |pix AS (SELECT id, w, h, x, unnest(range(h)) AS y FROM xs),
-             |idx AS (SELECT id, w, h, (x * 7 + y * 13 + id) % 64 AS e FROM pix),
-             |sums AS (SELECT id, w, h,
-             |           sum((e * 5 + 7) % 256) AS r_sum,
-             |           sum((e * 11 + 3) % 256) AS g_sum,
-             |           sum((e * 17 + 29) % 256) AS b_sum
-             |         FROM idx GROUP BY 1, 2, 3)
-             |SELECT id AS media_id, CAST(w AS INTEGER) AS width,
-             |  CAST(h AS INTEGER) AS height, CAST(3 AS INTEGER) AS channels,
-             |  CAST(r_sum AS BIGINT) AS r_sum, CAST(g_sum AS BIGINT) AS g_sum,
-             |  CAST(b_sum AS BIGINT) AS b_sum, CAST(w * h AS BIGINT) AS n_pixels
-             |FROM sums ORDER BY media_id""".stripMargin)),
+            index = (x, y) => (x * 7 + y * 13 + m.toInt) % 64)
+        }).toDF().orderBy("media_id"),
+      Some(s"""${pixelGridSql(200, "9 + id % 6 AS w, 7 + id % 5 AS h")},
+              |idx AS (SELECT id, w, h, (x * 7 + y * 13 + id) % 64 AS e FROM pix),
+              |${imageStatsSql("idx", "(e * 5 + 7) % 256", "(e * 11 + 3) % 256", "(e * 17 + 29) % 256")}""".stripMargin)),
 
     // Cross-format parity: the SAME pixel formulas as multimodal_ahash,
     // carried through the PNG container instead of BMP, must produce the
@@ -2789,66 +2748,26 @@ object LlmQueries {
     // the image-dedup guarantee a mixed-format corpus needs at 100 TB:
     // re-encoding a mirror site's images can't hide them from aHash.
     Q("multimodal_ahash_png", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val w = 8 + (m % 5).toInt
-          val h = 6 + (m % 4).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodePng(w, h, (x, y) =>
-            (((x * 7 + y * 13 + m) % 256).toInt,
-              ((x * 3 + y * 5) % 256).toInt,
-              ((x + y * 2 + m * 11) % 256).toInt)), "image/png")
-        }
-        Multimodal.aHash(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |dims AS (SELECT id, 8 + id % 5 AS w, 6 + id % 4 AS h FROM m),
-             |xs AS (SELECT id, w, h, unnest(range(8)) AS x FROM dims),
-             |pix AS (SELECT id, w, h, x, unnest(range(6)) AS y FROM xs),
-             |g AS (SELECT id, w, h, x, y,
-             |        ((x * 7 + y * 13 + id) % 256 + (x * 3 + y * 5) % 256
-             |         + (x + y * 2 + id * 11) % 256) // 3 AS gray
-             |      FROM pix),
-             |mn AS (SELECT id, sum(gray) // 48 AS mean FROM g GROUP BY 1),
-             |hb AS (SELECT g.id, g.w, g.h,
-             |         sum(CASE WHEN gray > mean
-             |             THEN (CAST(1 AS BIGINT) << (y * 8 + x)) ELSE 0 END) AS ahash,
-             |         sum(CASE WHEN gray > mean THEN 1 ELSE 0 END) AS n_set
-             |       FROM g JOIN mn USING (id) GROUP BY 1, 2, 3)
-             |SELECT id AS media_id, CAST(w AS INTEGER) AS width,
-             |  CAST(h AS INTEGER) AS height, CAST(ahash AS BIGINT) AS ahash,
-             |  CAST(n_set AS BIGINT) AS n_set
-             |FROM hb ORDER BY media_id""".stripMargin)),
+      (s, d) => Multimodal.aHash(gradientImages(s, Multimodal.encodePng, "image/png"))
+        .toDF().orderBy("media_id"),
+      Some(gradientAhashOracle)),
 
     // Real decoded-pixel downsample: 2x2 average pooling of the gray
     // window — the resize stage of an image feature pipeline on actual
     // pixels, truncating integer block means; the oracle replays the
     // generator algebra block by block.
     Q("multimodal_resize_pool", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val w = 8 + (m % 5).toInt
-          val h = 6 + (m % 4).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeBmp(w, h, (x, y) =>
-            (((x * 7 + y * 13 + m) % 256).toInt,
-              ((x * 3 + y * 5) % 256).toInt,
-              ((x + y * 2 + m * 11) % 256).toInt)), "image/bmp")
-        }
-        Multimodal.avgPool(media).toDF().orderBy("media_id", "by", "bx")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |xs AS (SELECT id, unnest(range(8)) AS x FROM m),
-             |pix AS (SELECT id, x, unnest(range(6)) AS y FROM xs),
-             |g AS (SELECT id, x, y,
-             |        ((x * 7 + y * 13 + id) % 256 + (x * 3 + y * 5) % 256
-             |         + (x + y * 2 + id * 11) % 256) // 3 AS gray
-             |      FROM pix),
-             |p AS (SELECT id, x // 2 AS bx, y // 2 AS by, sum(gray) // 4 AS g_mean
-             |      FROM g GROUP BY 1, 2, 3)
-             |SELECT id AS media_id, CAST(bx AS INTEGER) AS bx,
-             |  CAST(by AS INTEGER) AS by, CAST(g_mean AS BIGINT) AS g_mean
-             |FROM p ORDER BY media_id, by, bx""".stripMargin)),
+      (s, d) => Multimodal.avgPool(gradientImages(s, Multimodal.encodeBmp, "image/bmp"))
+        .toDF().orderBy("media_id", "by", "bx"),
+      Some(s"""WITH m AS (SELECT unnest(range(0, 200)) AS id),
+              |xs AS (SELECT id, unnest(range(8)) AS x FROM m),
+              |pix AS (SELECT id, x, unnest(range(6)) AS y FROM xs),
+              |g AS (SELECT id, x, y, $gradientGraySql AS gray FROM pix),
+              |p AS (SELECT id, x // 2 AS bx, y // 2 AS by, sum(gray) // 4 AS g_mean
+              |      FROM g GROUP BY 1, 2, 3)
+              |SELECT id AS media_id, CAST(bx AS INTEGER) AS bx,
+              |  CAST(by AS INTEGER) AS by, CAST(g_mean AS BIGINT) AS g_mean
+              |FROM p ORDER BY media_id, by, bx""".stripMargin)),
 
     // Image near-dup pairs: collapse identical aHash fingerprints to one
     // representative (the exact-dup flood never reaches the pair
@@ -2858,41 +2777,14 @@ object LlmQueries {
     // exists.
     Q("multimodal_near_dup", "LLM",
       (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val w = 8 + (m % 5).toInt
-          val h = 6 + (m % 4).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeBmp(w, h, (x, y) =>
-            (((x * 7 + y * 13 + m) % 256).toInt,
-              ((x * 3 + y * 5) % 256).toInt,
-              ((x + y * 2 + m * 11) % 256).toInt)), "image/bmp")
-        }
-        val reps = Multimodal.aHash(media).toDF()
+        val reps = Multimodal.aHash(gradientImages(s, Multimodal.encodeBmp, "image/bmp")).toDF()
           .groupBy(col("ahash")).agg(min(col("media_id")).as("rep_id"))
         Dedup.sigBandPairs(reps, "rep_id", "ahash",
             bits = 48, bands = 6, maxHamming = 5)
           .orderBy("id_a", "id_b")
       },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |dims AS (SELECT id, 8 + id % 5 AS w, 6 + id % 4 AS h FROM m),
-             |xs AS (SELECT id, unnest(range(8)) AS x FROM dims),
-             |pix AS (SELECT id, x, unnest(range(6)) AS y FROM xs),
-             |g AS (SELECT id, x, y,
-             |        ((x * 7 + y * 13 + id) % 256 + (x * 3 + y * 5) % 256
-             |         + (x + y * 2 + id * 11) % 256) // 3 AS gray
-             |      FROM pix),
-             |mn AS (SELECT id, sum(gray) // 48 AS mean FROM g GROUP BY 1),
-             |hb AS (SELECT g.id,
-             |         sum(CASE WHEN gray > mean
-             |             THEN (CAST(1 AS BIGINT) << (y * 8 + x)) ELSE 0 END) AS ahash
-             |       FROM g JOIN mn USING (id) GROUP BY 1),
-             |reps AS (SELECT CAST(min(id) AS BIGINT) AS rep_id, CAST(ahash AS BIGINT) AS ahash
-             |         FROM hb GROUP BY ahash)
-             |SELECT a.rep_id AS id_a, b.rep_id AS id_b,
-             |  CAST(bit_count(xor(a.ahash, b.ahash)) AS INTEGER) AS hamming
-             |FROM reps a JOIN reps b ON a.rep_id < b.rep_id
-             |WHERE bit_count(xor(a.ahash, b.ahash)) <= 5
-             |ORDER BY id_a, id_b""".stripMargin)),
+      Some(s"""$gradientAhashCte,
+              |${repPairsSql("hb", "ahash")}""".stripMargin)),
 
     // REAL baseline-JPEG decode (huffman + IDCT + fixed-point YCbCr<->RGB,
     // Multimodal.decodeJpeg): color payloads whose channels are CONSTANT
@@ -2902,44 +2794,10 @@ object LlmQueries {
     // multimodal_decode_png. Fixed-point floor semantics match: JVM
     // arithmetic >> 16 == DuckDB // 65536, negatives included.
     Q("multimodal_decode_jpeg", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val w = 9 + (m % 6).toInt
-          val h = 7 + (m % 5).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeJpeg(w, h, (x, y) =>
-            (((m * 13 + (x / 8) * 57 + (y / 8) * 23) % 256).toInt,
-              ((m * 7 + (x / 8) * 31 + (y / 8) * 11) % 256).toInt,
-              ((m * 11 + (x / 8) * 17 + (y / 8) * 29) % 256).toInt)), "image/jpeg")
-        }
-        Multimodal.imageStats(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |dims AS (SELECT id, 9 + id % 6 AS w, 7 + id % 5 AS h FROM m),
-             |xs AS (SELECT id, w, h, unnest(range(w)) AS x FROM dims),
-             |pix AS (SELECT id, w, h, x, unnest(range(h)) AS y FROM xs),
-             |src AS (SELECT id, w, h,
-             |          (id * 13 + (x // 8) * 57 + (y // 8) * 23) % 256 AS r0,
-             |          (id * 7 + (x // 8) * 31 + (y // 8) * 11) % 256 AS g0,
-             |          (id * 11 + (x // 8) * 17 + (y // 8) * 29) % 256 AS b0
-             |        FROM pix),
-             |ycc AS (SELECT id, w, h,
-             |          LEAST(255, GREATEST(0, (19595 * r0 + 38470 * g0 + 7471 * b0 + 32768) // 65536)) AS yy,
-             |          LEAST(255, GREATEST(0, 128 + (-11059 * r0 - 21709 * g0 + 32768 * b0 + 32768 + 16777216) // 65536 - 256)) AS cb,
-             |          LEAST(255, GREATEST(0, 128 + (32768 * r0 - 27439 * g0 - 5329 * b0 + 32768 + 16777216) // 65536 - 256)) AS cr
-             |        FROM src),
-             |rgb AS (SELECT id, w, h,
-             |          LEAST(255, GREATEST(0, yy + (91881 * (cr - 128) + 32768 + 16777216) // 65536 - 256)) AS r,
-             |          LEAST(255, GREATEST(0, yy - ((22554 * (cb - 128) + 46802 * (cr - 128) + 32768 + 16777216) // 65536 - 256))) AS g,
-             |          LEAST(255, GREATEST(0, yy + (116130 * (cb - 128) + 32768 + 16777216) // 65536 - 256)) AS b
-             |        FROM ycc),
-             |sums AS (SELECT id, w, h, sum(r) AS r_sum, sum(g) AS g_sum,
-             |           sum(b) AS b_sum FROM rgb GROUP BY 1, 2, 3)
-             |SELECT id AS media_id, CAST(w AS INTEGER) AS width,
-             |  CAST(h AS INTEGER) AS height, CAST(3 AS INTEGER) AS channels,
-             |  CAST(r_sum AS BIGINT) AS r_sum, CAST(g_sum AS BIGINT) AS g_sum,
-             |  CAST(b_sum AS BIGINT) AS b_sum, CAST(w * h AS BIGINT) AS n_pixels
-             |FROM sums ORDER BY media_id""".stripMargin)),
+      (s, d) => Multimodal.imageStats(blockColorImages(s, 8,
+          m => (9 + (m % 6).toInt, 7 + (m % 5).toInt), Multimodal.encodeJpeg))
+        .toDF().orderBy("media_id"),
+      Some(blockColorStatsOracle(8, "9 + id % 6 AS w, 7 + id % 5 AS h"))),
 
     // PROGRESSIVE (SOF2) decode — the second web JPEG flavor, previously
     // the decodeStub fallback: same block-constant analytic contract as
@@ -2949,44 +2807,10 @@ object LlmQueries {
     // are bit-identical to baseline and the oracle replays the same
     // integer color chain).
     Q("multimodal_decode_jpeg_prog", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val w = 9 + (m % 6).toInt
-          val h = 7 + (m % 5).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeJpegProgressive(w, h, (x, y) =>
-            (((m * 13 + (x / 8) * 57 + (y / 8) * 23) % 256).toInt,
-              ((m * 7 + (x / 8) * 31 + (y / 8) * 11) % 256).toInt,
-              ((m * 11 + (x / 8) * 17 + (y / 8) * 29) % 256).toInt)), "image/jpeg")
-        }
-        Multimodal.imageStats(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |dims AS (SELECT id, 9 + id % 6 AS w, 7 + id % 5 AS h FROM m),
-             |xs AS (SELECT id, w, h, unnest(range(w)) AS x FROM dims),
-             |pix AS (SELECT id, w, h, x, unnest(range(h)) AS y FROM xs),
-             |src AS (SELECT id, w, h,
-             |          (id * 13 + (x // 8) * 57 + (y // 8) * 23) % 256 AS r0,
-             |          (id * 7 + (x // 8) * 31 + (y // 8) * 11) % 256 AS g0,
-             |          (id * 11 + (x // 8) * 17 + (y // 8) * 29) % 256 AS b0
-             |        FROM pix),
-             |ycc AS (SELECT id, w, h,
-             |          LEAST(255, GREATEST(0, (19595 * r0 + 38470 * g0 + 7471 * b0 + 32768) // 65536)) AS yy,
-             |          LEAST(255, GREATEST(0, 128 + (-11059 * r0 - 21709 * g0 + 32768 * b0 + 32768 + 16777216) // 65536 - 256)) AS cb,
-             |          LEAST(255, GREATEST(0, 128 + (32768 * r0 - 27439 * g0 - 5329 * b0 + 32768 + 16777216) // 65536 - 256)) AS cr
-             |        FROM src),
-             |rgb AS (SELECT id, w, h,
-             |          LEAST(255, GREATEST(0, yy + (91881 * (cr - 128) + 32768 + 16777216) // 65536 - 256)) AS r,
-             |          LEAST(255, GREATEST(0, yy - ((22554 * (cb - 128) + 46802 * (cr - 128) + 32768 + 16777216) // 65536 - 256))) AS g,
-             |          LEAST(255, GREATEST(0, yy + (116130 * (cb - 128) + 32768 + 16777216) // 65536 - 256)) AS b
-             |        FROM ycc),
-             |sums AS (SELECT id, w, h, sum(r) AS r_sum, sum(g) AS g_sum,
-             |           sum(b) AS b_sum FROM rgb GROUP BY 1, 2, 3)
-             |SELECT id AS media_id, CAST(w AS INTEGER) AS width,
-             |  CAST(h AS INTEGER) AS height, CAST(3 AS INTEGER) AS channels,
-             |  CAST(r_sum AS BIGINT) AS r_sum, CAST(g_sum AS BIGINT) AS g_sum,
-             |  CAST(b_sum AS BIGINT) AS b_sum, CAST(w * h AS BIGINT) AS n_pixels
-             |FROM sums ORDER BY media_id""".stripMargin)),
+      (s, d) => Multimodal.imageStats(blockColorImages(s, 8,
+          m => (9 + (m % 6).toInt, 7 + (m % 5).toInt), Multimodal.encodeJpegProgressive))
+        .toDF().orderBy("media_id"),
+      Some(blockColorStatsOracle(8, "9 + id % 6 AS w, 7 + id % 5 AS h"))),
 
     // 4:2:0 chroma subsampling — the dominant web JPEG flavor: luma at
     // full resolution (sampling 2x2), chroma quarter-resolution, MCU =
@@ -2996,44 +2820,10 @@ object LlmQueries {
     // oracle replays the same integer conversion chain at MCU
     // granularity.
     Q("multimodal_decode_jpeg420", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val w = 18 + (m % 8).toInt
-          val h = 17 + (m % 5).toInt
-          Multimodal.MediaRecord(m, Multimodal.encodeJpeg420(w, h, (x, y) =>
-            (((m * 13 + (x / 16) * 57 + (y / 16) * 23) % 256).toInt,
-              ((m * 7 + (x / 16) * 31 + (y / 16) * 11) % 256).toInt,
-              ((m * 11 + (x / 16) * 17 + (y / 16) * 29) % 256).toInt)), "image/jpeg")
-        }
-        Multimodal.imageStats(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |dims AS (SELECT id, 18 + id % 8 AS w, 17 + id % 5 AS h FROM m),
-             |xs AS (SELECT id, w, h, unnest(range(w)) AS x FROM dims),
-             |pix AS (SELECT id, w, h, x, unnest(range(h)) AS y FROM xs),
-             |src AS (SELECT id, w, h,
-             |          (id * 13 + (x // 16) * 57 + (y // 16) * 23) % 256 AS r0,
-             |          (id * 7 + (x // 16) * 31 + (y // 16) * 11) % 256 AS g0,
-             |          (id * 11 + (x // 16) * 17 + (y // 16) * 29) % 256 AS b0
-             |        FROM pix),
-             |ycc AS (SELECT id, w, h,
-             |          LEAST(255, GREATEST(0, (19595 * r0 + 38470 * g0 + 7471 * b0 + 32768) // 65536)) AS yy,
-             |          LEAST(255, GREATEST(0, 128 + (-11059 * r0 - 21709 * g0 + 32768 * b0 + 32768 + 16777216) // 65536 - 256)) AS cb,
-             |          LEAST(255, GREATEST(0, 128 + (32768 * r0 - 27439 * g0 - 5329 * b0 + 32768 + 16777216) // 65536 - 256)) AS cr
-             |        FROM src),
-             |rgb AS (SELECT id, w, h,
-             |          LEAST(255, GREATEST(0, yy + (91881 * (cr - 128) + 32768 + 16777216) // 65536 - 256)) AS r,
-             |          LEAST(255, GREATEST(0, yy - ((22554 * (cb - 128) + 46802 * (cr - 128) + 32768 + 16777216) // 65536 - 256))) AS g,
-             |          LEAST(255, GREATEST(0, yy + (116130 * (cb - 128) + 32768 + 16777216) // 65536 - 256)) AS b
-             |        FROM ycc),
-             |sums AS (SELECT id, w, h, sum(r) AS r_sum, sum(g) AS g_sum,
-             |           sum(b) AS b_sum FROM rgb GROUP BY 1, 2, 3)
-             |SELECT id AS media_id, CAST(w AS INTEGER) AS width,
-             |  CAST(h AS INTEGER) AS height, CAST(3 AS INTEGER) AS channels,
-             |  CAST(r_sum AS BIGINT) AS r_sum, CAST(g_sum AS BIGINT) AS g_sum,
-             |  CAST(b_sum AS BIGINT) AS b_sum, CAST(w * h AS BIGINT) AS n_pixels
-             |FROM sums ORDER BY media_id""".stripMargin)),
+      (s, d) => Multimodal.imageStats(blockColorImages(s, 16,
+          m => (18 + (m % 8).toInt, 17 + (m % 5).toInt), Multimodal.encodeJpeg420))
+        .toDF().orderBy("media_id"),
+      Some(blockColorStatsOracle(16, "18 + id % 8 AS w, 17 + id % 5 AS h"))),
 
     // Cross-format near-dup with JPEG in the mix: ids 0..99 are BMPs of
     // 8x8 gray tiles, ids 100..199 the SAME tile patterns as real
@@ -3072,30 +2862,24 @@ object LlmQueries {
             bits = 48, bands = 6, maxHamming = 5)
           .orderBy("id_a", "id_b")
       },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |b AS (SELECT id, CASE WHEN id < 100 THEN id ELSE id - 100 END AS base FROM m),
-             |xs AS (SELECT id, base, unnest(range(8)) AS x FROM b),
-             |pix AS (SELECT id, base, x, unnest(range(6)) AS y FROM xs),
-             |g0 AS (SELECT id, x, y,
-             |         CASE WHEN ((base * 2654435761 + x * 40503 + y * 655) // 16) % 2 = 0
-             |              THEN 40 ELSE 216 END AS v
-             |       FROM pix),
-             |g AS (SELECT id, x, y,
-             |        CASE WHEN id >= 100 AND id % 10 = 0 AND x = 0 AND y = 0
-             |             THEN 256 - v ELSE v END AS gray
-             |      FROM g0),
-             |mn AS (SELECT id, sum(gray) // 48 AS mean FROM g GROUP BY 1),
-             |hb AS (SELECT g.id,
-             |         sum(CASE WHEN gray > mean
-             |             THEN (CAST(1 AS BIGINT) << (y * 8 + x)) ELSE 0 END) AS ahash
-             |       FROM g JOIN mn USING (id) GROUP BY 1),
-             |reps AS (SELECT CAST(min(id) AS BIGINT) AS rep_id, CAST(ahash AS BIGINT) AS ahash
-             |         FROM hb GROUP BY ahash)
-             |SELECT a.rep_id AS id_a, b.rep_id AS id_b,
-             |  CAST(bit_count(xor(a.ahash, b.ahash)) AS INTEGER) AS hamming
-             |FROM reps a JOIN reps b ON a.rep_id < b.rep_id
-             |WHERE bit_count(xor(a.ahash, b.ahash)) <= 5
-             |ORDER BY id_a, id_b""".stripMargin)),
+      Some(s"""WITH m AS (SELECT unnest(range(0, 200)) AS id),
+              |b AS (SELECT id, CASE WHEN id < 100 THEN id ELSE id - 100 END AS base FROM m),
+              |xs AS (SELECT id, base, unnest(range(8)) AS x FROM b),
+              |pix AS (SELECT id, base, x, unnest(range(6)) AS y FROM xs),
+              |g0 AS (SELECT id, x, y,
+              |         CASE WHEN ((base * 2654435761 + x * 40503 + y * 655) // 16) % 2 = 0
+              |              THEN 40 ELSE 216 END AS v
+              |       FROM pix),
+              |g AS (SELECT id, x, y,
+              |        CASE WHEN id >= 100 AND id % 10 = 0 AND x = 0 AND y = 0
+              |             THEN 256 - v ELSE v END AS gray
+              |      FROM g0),
+              |mn AS (SELECT id, sum(gray) // 48 AS mean FROM g GROUP BY 1),
+              |hb AS (SELECT g.id,
+              |         sum(CASE WHEN gray > mean
+              |             THEN (CAST(1 AS BIGINT) << (y * 8 + x)) ELSE 0 END) AS ahash
+              |       FROM g JOIN mn USING (id) GROUP BY 1),
+              |${repPairsSql("hb", "ahash")}""".stripMargin)),
 
     // AUDIO battery over a REAL pure-JVM WAV/PCM codec (RIFF chunk walk,
     // 16-bit mono). Same contract as the BMP/PPM image path: the media
@@ -3106,35 +2890,10 @@ object LlmQueries {
     // All-integer features (peak, floor-sqrt RMS, zero crossings, frame
     // energies) keep the comparison ulp-proof.
     Q("multimodal_wav_stats", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val n = 2000 + (m % 5).toInt * 400
-          val a = (m % 7).toInt + 3
-          val samples = Array.tabulate(n)(i =>
-            (((i.toLong * a + m * 17) % 2048) - 1024).toShort)
-          Multimodal.MediaRecord(m, Multimodal.encodeWavPcm16(8000, samples), "audio/wav")
-        }
-        Multimodal.audioStats(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |par AS (SELECT id, 2000 + (id % 5) * 400 AS n, id % 7 + 3 AS a FROM m),
-             |smp AS (SELECT id, n, a, unnest(range(n)) AS i FROM par),
-             |s AS (SELECT id, n, i, (i * a + id * 17) % 2048 - 1024 AS v FROM smp),
-             |sgn AS (SELECT id, n, i, v,
-             |          lag(v) OVER (PARTITION BY id ORDER BY i) AS pv FROM s),
-             |st AS (SELECT id, any_value(n) AS n, max(abs(v)) AS peak,
-             |         sum(CAST(v AS BIGINT) * v) AS sum_sq,
-             |         sum(CASE WHEN pv IS NOT NULL AND (pv < 0) <> (v < 0)
-             |             THEN 1 ELSE 0 END) AS zc
-             |       FROM sgn GROUP BY id)
-             |SELECT id AS media_id, CAST(8000 AS INTEGER) AS sample_rate,
-             |  CAST(n AS BIGINT) AS n_samples,
-             |  CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-             |  CAST(peak AS INTEGER) AS peak,
-             |  CAST(floor(sqrt(sum_sq // n)) AS BIGINT) AS rms,
-             |  CAST(zc AS BIGINT) AS zero_crossings
-             |FROM st ORDER BY media_id""".stripMargin)),
+      (s, d) => Multimodal.audioStats(rampWavs(s)).toDF().orderBy("media_id"),
+      Some(s"""$rampSamplesSql,
+              |s AS (SELECT id, n, i, (i * a + id * 17) % 2048 - 1024 AS v FROM smp),
+              |${pcmStatsSql(8000)}""".stripMargin)),
 
     // STEREO 16-bit PCM through the channel-aware decode: interleaved
     // L/R de-mux to per-channel rows under the same (rate, samples-per-
@@ -3142,65 +2901,36 @@ object LlmQueries {
     // samples alone (distinct per-channel generator terms prove the
     // de-mux, not a downmix). Map-only like every decode op.
     Q("multimodal_wav_stereo_stats", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 120).map { m =>
+      (s, d) => Multimodal.audioChannelStats(mediaFixture(s, 120, "audio/wav") { m =>
           val n = 1500 + (m % 4).toInt * 300
           val a = (m % 7).toInt + 3
-          val inter = Array.tabulate(2 * n) { j =>
+          Multimodal.encodeWavPcm16Multi(8000, 2, Array.tabulate(2 * n) { j =>
             val i = j / 2; val c = j % 2
             (((i.toLong * a + m * 17 + c * 911) % 2048) - 1024).toShort
-          }
-          Multimodal.MediaRecord(m,
-            Multimodal.encodeWavPcm16Multi(8000, 2, inter), "audio/wav")
-        }
-        Multimodal.audioChannelStats(media).toDF()
-          .orderBy("media_id", "channel")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 120)) AS id),
-             |par AS (SELECT id, 1500 + (id % 4) * 300 AS n, id % 7 + 3 AS a FROM m),
-             |ch AS (SELECT id, n, a, unnest(range(2)) AS c FROM par),
-             |smp AS (SELECT id, n, a, c, unnest(range(n)) AS i FROM ch),
-             |s AS (SELECT id, n, c, i,
-             |        (i * a + id * 17 + c * 911) % 2048 - 1024 AS v FROM smp),
-             |sgn AS (SELECT id, n, c, i, v,
-             |          lag(v) OVER (PARTITION BY id, c ORDER BY i) AS pv FROM s),
-             |st AS (SELECT id, c, any_value(n) AS n, max(abs(v)) AS peak,
-             |         sum(CAST(v AS BIGINT) * v) AS sum_sq,
-             |         sum(CASE WHEN pv IS NOT NULL AND (pv < 0) <> (v < 0)
-             |             THEN 1 ELSE 0 END) AS zc
-             |       FROM sgn GROUP BY id, c)
-             |SELECT id AS media_id, CAST(c AS INTEGER) AS channel,
-             |  CAST(2 AS INTEGER) AS n_channels,
-             |  CAST(8000 AS INTEGER) AS sample_rate,
-             |  CAST(n AS BIGINT) AS n_samples,
-             |  CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-             |  CAST(peak AS INTEGER) AS peak,
-             |  CAST(floor(sqrt(sum_sq // n)) AS BIGINT) AS rms,
-             |  CAST(zc AS BIGINT) AS zero_crossings
-             |FROM st ORDER BY media_id, channel""".stripMargin)),
+          })
+        }).toDF().orderBy("media_id", "channel"),
+      Some(s"""WITH m AS (SELECT unnest(range(0, 120)) AS id),
+              |par AS (SELECT id, 1500 + (id % 4) * 300 AS n, id % 7 + 3 AS a FROM m),
+              |ch AS (SELECT id, n, a, unnest(range(2)) AS c FROM par),
+              |smp AS (SELECT id, n, a, c, unnest(range(n)) AS i FROM ch),
+              |s AS (SELECT id, n, c, i,
+              |        (i * a + id * 17 + c * 911) % 2048 - 1024 AS v FROM smp),
+              |${pcmStatsSql(8000, nChannels = 2)}""".stripMargin)),
 
     // 8-bit unsigned PCM (the other dominant real-corpus flavor): codes
     // 0..255 normalize to 16-bit linear as (code−128)·256 — exact
     // integer algebra the oracle replays. The corpus mixes mono and
     // stereo records through the SAME op to pin the n_channels axis.
     Q("multimodal_wav_pcm8_stats", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 120).map { m =>
+      (s, d) => Multimodal.audioChannelStats(mediaFixture(s, 120, "audio/wav") { m =>
           val nc = 1 + (m % 2).toInt
           val n = 1200 + (m % 3).toInt * 400
           val a = (m % 5).toInt + 2
-          val codes = Array.tabulate(nc * n) { j =>
+          Multimodal.encodeWavPcm8(16000, nc, Array.tabulate(nc * n) { j =>
             val i = j / nc; val c = j % nc
             ((i.toLong * a + m * 29 + c * 577) % 256).toByte
-          }
-          Multimodal.MediaRecord(m,
-            Multimodal.encodeWavPcm8(16000, nc, codes), "audio/wav")
-        }
-        Multimodal.audioChannelStats(media).toDF()
-          .orderBy("media_id", "channel")
-      },
+          })
+        }).toDF().orderBy("media_id", "channel"),
       Some("""WITH m AS (SELECT unnest(range(0, 120)) AS id),
              |par AS (SELECT id, 1 + id % 2 AS nc, 1200 + (id % 3) * 400 AS n,
              |          id % 5 + 2 AS a FROM m),
@@ -3234,41 +2964,22 @@ object LlmQueries {
     // the file flows through the EXISTING mono battery (audioStats) —
     // companded audio is a decode detail, not a separate pipeline.
     Q("multimodal_wav_mulaw_stats", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 120).map { m =>
+      (s, d) => Multimodal.audioStats(mediaFixture(s, 120, "audio/wav") { m =>
           val n = 1600 + (m % 4).toInt * 200
           val a = (m % 7).toInt + 2
-          val codes = Array.tabulate(n)(i =>
-            ((i.toLong * a + m * 13) % 256).toByte)
-          Multimodal.MediaRecord(m,
-            Multimodal.encodeWavMulaw(8000, 1, codes), "audio/wav")
-        }
-        Multimodal.audioStats(media).toDF().orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 120)) AS id),
-             |par AS (SELECT id, 1600 + (id % 4) * 200 AS n, id % 7 + 2 AS a FROM m),
-             |smp AS (SELECT id, n, a, unnest(range(n)) AS i FROM par),
-             |cd AS (SELECT id, n, i, xor((i * a + id * 13) % 256, 255) AS u FROM smp),
-             |s AS (SELECT id, n, i,
-             |        CASE WHEN (u & 128) <> 0
-             |          THEN 132 - (((u & 15) * 8 + 132) * (1 << ((u & 112) // 16)))
-             |          ELSE (((u & 15) * 8 + 132) * (1 << ((u & 112) // 16))) - 132
-             |        END AS v FROM cd),
-             |sgn AS (SELECT id, n, i, v,
-             |          lag(v) OVER (PARTITION BY id ORDER BY i) AS pv FROM s),
-             |st AS (SELECT id, any_value(n) AS n, max(abs(v)) AS peak,
-             |         sum(CAST(v AS BIGINT) * v) AS sum_sq,
-             |         sum(CASE WHEN pv IS NOT NULL AND (pv < 0) <> (v < 0)
-             |             THEN 1 ELSE 0 END) AS zc
-             |       FROM sgn GROUP BY id)
-             |SELECT id AS media_id, CAST(8000 AS INTEGER) AS sample_rate,
-             |  CAST(n AS BIGINT) AS n_samples,
-             |  CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-             |  CAST(peak AS INTEGER) AS peak,
-             |  CAST(floor(sqrt(sum_sq // n)) AS BIGINT) AS rms,
-             |  CAST(zc AS BIGINT) AS zero_crossings
-             |FROM st ORDER BY media_id""".stripMargin)),
+          Multimodal.encodeWavMulaw(8000, 1, Array.tabulate(n)(i =>
+            ((i.toLong * a + m * 13) % 256).toByte))
+        }).toDF().orderBy("media_id"),
+      Some(s"""WITH m AS (SELECT unnest(range(0, 120)) AS id),
+              |par AS (SELECT id, 1600 + (id % 4) * 200 AS n, id % 7 + 2 AS a FROM m),
+              |smp AS (SELECT id, n, a, unnest(range(n)) AS i FROM par),
+              |cd AS (SELECT id, n, i, xor((i * a + id * 13) % 256, 255) AS u FROM smp),
+              |s AS (SELECT id, n, i,
+              |        CASE WHEN (u & 128) <> 0
+              |          THEN 132 - (((u & 15) * 8 + 132) * (1 << ((u & 112) // 16)))
+              |          ELSE (((u & 15) * 8 + 132) * (1 << ((u & 112) // 16))) - 132
+              |        END AS v FROM cd),
+              |${pcmStatsSql(8000)}""".stripMargin)),
 
     // G.711 A-law (wFormatTag 6 — mu-law's European-telephony sibling:
     // XOR-0x55 toggle, no bias), STEREO, so one row exercises both the
@@ -3278,107 +2989,61 @@ object LlmQueries {
     //   v = (u & 0x80) != 0 ? t : −t
     // replayed bit-for-bit by the oracle.
     Q("multimodal_wav_alaw_stats", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 120).map { m =>
+      (s, d) => Multimodal.audioChannelStats(mediaFixture(s, 120, "audio/wav") { m =>
           val n = 1400 + (m % 3).toInt * 300
           val a = (m % 5).toInt + 2
-          val codes = Array.tabulate(2 * n) { j =>
+          Multimodal.encodeWavAlaw(8000, 2, Array.tabulate(2 * n) { j =>
             val i = j / 2; val c = j % 2
             ((i.toLong * a + m * 19 + c * 433) % 256).toByte
-          }
-          Multimodal.MediaRecord(m,
-            Multimodal.encodeWavAlaw(8000, 2, codes), "audio/wav")
-        }
-        Multimodal.audioChannelStats(media).toDF()
-          .orderBy("media_id", "channel")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 120)) AS id),
-             |par AS (SELECT id, 1400 + (id % 3) * 300 AS n, id % 5 + 2 AS a FROM m),
-             |ch AS (SELECT id, n, a, unnest(range(2)) AS c FROM par),
-             |smp AS (SELECT id, n, a, c, unnest(range(n)) AS i FROM ch),
-             |cd AS (SELECT id, n, c, i,
-             |         xor((i * a + id * 19 + c * 433) % 256, 85) AS u FROM smp),
-             |tv AS (SELECT id, n, c, i, u,
-             |         CASE WHEN (u & 112) // 16 = 0 THEN (u & 15) * 16 + 8
-             |              ELSE ((u & 15) * 16 + 264) * (1 << ((u & 112) // 16 - 1))
-             |         END AS t FROM cd),
-             |s AS (SELECT id, n, c, i,
-             |        CASE WHEN (u & 128) <> 0 THEN t ELSE -t END AS v FROM tv),
-             |sgn AS (SELECT id, n, c, i, v,
-             |          lag(v) OVER (PARTITION BY id, c ORDER BY i) AS pv FROM s),
-             |st AS (SELECT id, c, any_value(n) AS n, max(abs(v)) AS peak,
-             |         sum(CAST(v AS BIGINT) * v) AS sum_sq,
-             |         sum(CASE WHEN pv IS NOT NULL AND (pv < 0) <> (v < 0)
-             |             THEN 1 ELSE 0 END) AS zc
-             |       FROM sgn GROUP BY id, c)
-             |SELECT id AS media_id, CAST(c AS INTEGER) AS channel,
-             |  CAST(2 AS INTEGER) AS n_channels,
-             |  CAST(8000 AS INTEGER) AS sample_rate,
-             |  CAST(n AS BIGINT) AS n_samples,
-             |  CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-             |  CAST(peak AS INTEGER) AS peak,
-             |  CAST(floor(sqrt(sum_sq // n)) AS BIGINT) AS rms,
-             |  CAST(zc AS BIGINT) AS zero_crossings
-             |FROM st ORDER BY media_id, channel""".stripMargin)),
+          })
+        }).toDF().orderBy("media_id", "channel"),
+      Some(s"""WITH m AS (SELECT unnest(range(0, 120)) AS id),
+              |par AS (SELECT id, 1400 + (id % 3) * 300 AS n, id % 5 + 2 AS a FROM m),
+              |ch AS (SELECT id, n, a, unnest(range(2)) AS c FROM par),
+              |smp AS (SELECT id, n, a, c, unnest(range(n)) AS i FROM ch),
+              |cd AS (SELECT id, n, c, i,
+              |         xor((i * a + id * 19 + c * 433) % 256, 85) AS u FROM smp),
+              |tv AS (SELECT id, n, c, i, u,
+              |         CASE WHEN (u & 112) // 16 = 0 THEN (u & 15) * 16 + 8
+              |              ELSE ((u & 15) * 16 + 264) * (1 << ((u & 112) // 16 - 1))
+              |         END AS t FROM cd),
+              |s AS (SELECT id, n, c, i,
+              |        CASE WHEN (u & 128) <> 0 THEN t ELSE -t END AS v FROM tv),
+              |${pcmStatsSql(8000, nChannels = 2)}""".stripMargin)),
 
     // Frame energies: the STFT-frame analogue without a transform —
     // fixed 160-sample frames, exact Σs² energy and frame-local zero
     // crossings. Map-only on the engine (frames are emitted from the
     // decode task; nothing shuffles until the final presentation sort).
     Q("multimodal_audio_frames", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val n = 2000 + (m % 5).toInt * 400
-          val a = (m % 7).toInt + 3
-          val samples = Array.tabulate(n)(i =>
-            (((i.toLong * a + m * 17) % 2048) - 1024).toShort)
-          Multimodal.MediaRecord(m, Multimodal.encodeWavPcm16(8000, samples), "audio/wav")
-        }
-        Multimodal.audioFrames(media, frameLen = 160).toDF()
-          .orderBy("media_id", "frame_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |par AS (SELECT id, 2000 + (id % 5) * 400 AS n, id % 7 + 3 AS a FROM m),
-             |smp AS (SELECT id, n, a, unnest(range(n)) AS i FROM par),
-             |s AS (SELECT id, i, i // 160 AS f, (i * a + id * 17) % 2048 - 1024 AS v FROM smp),
-             |sgn AS (SELECT id, f, i, v,
-             |          lag(v) OVER (PARTITION BY id, f ORDER BY i) AS pv FROM s)
-             |SELECT id AS media_id, CAST(f AS INTEGER) AS frame_id,
-             |  CAST(count(*) AS INTEGER) AS n,
-             |  CAST(sum(CAST(v AS BIGINT) * v) AS BIGINT) AS energy,
-             |  CAST(sum(CASE WHEN pv IS NOT NULL AND (pv < 0) <> (v < 0)
-             |      THEN 1 ELSE 0 END) AS INTEGER) AS zcr
-             |FROM sgn GROUP BY id, f ORDER BY media_id, frame_id""".stripMargin)),
+      (s, d) => Multimodal.audioFrames(rampWavs(s), frameLen = 160).toDF()
+        .orderBy("media_id", "frame_id"),
+      Some(s"""$rampSamplesSql,
+              |s AS (SELECT id, i, i // 160 AS f, (i * a + id * 17) % 2048 - 1024 AS v FROM smp),
+              |sgn AS (SELECT id, f, i, v,
+              |          lag(v) OVER (PARTITION BY id, f ORDER BY i) AS pv FROM s)
+              |SELECT id AS media_id, CAST(f AS INTEGER) AS frame_id,
+              |  CAST(count(*) AS INTEGER) AS n,
+              |  CAST(sum(CAST(v AS BIGINT) * v) AS BIGINT) AS energy,
+              |  CAST(sum(CASE WHEN pv IS NOT NULL AND (pv < 0) <> (v < 0)
+              |      THEN 1 ELSE 0 END) AS INTEGER) AS zcr
+              |FROM sgn GROUP BY id, f ORDER BY media_id, frame_id""".stripMargin)),
 
     // Haitsma–Kalker energy-delta fingerprint: bit f = [energy(f+1) >
     // energy(f)], packed into one BIGINT per media. ONE exchange on the
     // engine (lead() window partitioned by media_id feeding a partial
     // aggregate on the same key).
     Q("multimodal_audio_fingerprint", "LLM",
-      (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val n = 2000 + (m % 5).toInt * 400
-          val a = (m % 7).toInt + 3
-          val samples = Array.tabulate(n)(i =>
-            (((i.toLong * a + m * 17) % 2048) - 1024).toShort)
-          Multimodal.MediaRecord(m, Multimodal.encodeWavPcm16(8000, samples), "audio/wav")
-        }
-        Multimodal.audioFingerprint(Multimodal.audioFrames(media, 40), bits = 48)
-          .orderBy("media_id")
-      },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |par AS (SELECT id, 2000 + (id % 5) * 400 AS n, id % 7 + 3 AS a FROM m),
-             |smp AS (SELECT id, n, a, unnest(range(n)) AS i FROM par),
-             |s AS (SELECT id, i // 40 AS f, (i * a + id * 17) % 2048 - 1024 AS v FROM smp),
-             |en AS (SELECT id, f, sum(CAST(v AS BIGINT) * v) AS e FROM s GROUP BY 1, 2),
-             |nx AS (SELECT id, f, e, lead(e) OVER (PARTITION BY id ORDER BY f) AS en FROM en)
-             |SELECT id AS media_id,
-             |  CAST(sum(CASE WHEN en > e THEN CAST(1 AS BIGINT) << f ELSE 0 END) AS BIGINT) AS fp
-             |FROM nx WHERE f < 48 AND en IS NOT NULL
-             |GROUP BY id ORDER BY media_id""".stripMargin)),
+      (s, d) => Multimodal.audioFingerprint(Multimodal.audioFrames(rampWavs(s), 40), bits = 48)
+        .orderBy("media_id"),
+      Some(s"""$rampSamplesSql,
+              |s AS (SELECT id, i // 40 AS f, (i * a + id * 17) % 2048 - 1024 AS v FROM smp),
+              |en AS (SELECT id, f, sum(CAST(v AS BIGINT) * v) AS e FROM s GROUP BY 1, 2),
+              |nx AS (SELECT id, f, e, lead(e) OVER (PARTITION BY id ORDER BY f) AS en FROM en)
+              |SELECT id AS media_id,
+              |  CAST(sum(CASE WHEN en > e THEN CAST(1 AS BIGINT) << f ELSE 0 END) AS BIGINT) AS fp
+              |FROM nx WHERE f < 48 AND en IS NOT NULL
+              |GROUP BY id ORDER BY media_id""".stripMargin)),
 
     // Audio near-dup: ~30% of the corpus is replaced by ONE shared
     // waveform (the boilerplate-jingle shape), fingerprints collapse to
@@ -3386,36 +3051,23 @@ object LlmQueries {
     // pair machinery as SimHash / image aHash runs on the 48-bit fps.
     Q("multimodal_audio_near_dup", "LLM",
       (s, d) => {
-        import s.implicits._
-        val media = s.range(0, 200).map { m =>
-          val seed: Long = if (m % 10 < 3) 7L else m
-          val n = 2000 + (seed % 5).toInt * 400
-          val a = (seed % 7).toInt + 3
-          val samples = Array.tabulate(n)(i =>
-            (((i.toLong * a + seed * 17) % 2048) - 1024).toShort)
-          Multimodal.MediaRecord(m, Multimodal.encodeWavPcm16(8000, samples), "audio/wav")
-        }
+        val media = rampWavs(s, m => if (m % 10 < 3) 7L else m)
         val fps = Multimodal.audioFingerprint(Multimodal.audioFrames(media, 40), bits = 48)
         val reps = fps.groupBy(col("fp")).agg(min(col("media_id")).as("rep_id"))
         Dedup.sigBandPairs(reps, "rep_id", "fp", bits = 48, bands = 6, maxHamming = 5)
           .orderBy("id_a", "id_b")
       },
-      Some("""WITH m AS (SELECT unnest(range(0, 200)) AS id),
-             |sd AS (SELECT id, CASE WHEN id % 10 < 3 THEN 7 ELSE id END AS seed FROM m),
-             |par AS (SELECT id, seed, 2000 + (seed % 5) * 400 AS n, seed % 7 + 3 AS a FROM sd),
-             |smp AS (SELECT id, seed, n, a, unnest(range(n)) AS i FROM par),
-             |s AS (SELECT id, i // 40 AS f, (i * a + seed * 17) % 2048 - 1024 AS v FROM smp),
-             |en AS (SELECT id, f, sum(CAST(v AS BIGINT) * v) AS e FROM s GROUP BY 1, 2),
-             |nx AS (SELECT id, f, e, lead(e) OVER (PARTITION BY id ORDER BY f) AS en FROM en),
-             |fp AS (SELECT id,
-             |         CAST(sum(CASE WHEN en > e THEN CAST(1 AS BIGINT) << f ELSE 0 END) AS BIGINT) AS fp
-             |       FROM nx WHERE f < 48 AND en IS NOT NULL GROUP BY id),
-             |reps AS (SELECT CAST(min(id) AS BIGINT) AS rep_id, fp FROM fp GROUP BY fp)
-             |SELECT a.rep_id AS id_a, b.rep_id AS id_b,
-             |  CAST(bit_count(xor(a.fp, b.fp)) AS INTEGER) AS hamming
-             |FROM reps a JOIN reps b ON a.rep_id < b.rep_id
-             |WHERE bit_count(xor(a.fp, b.fp)) <= 5
-             |ORDER BY id_a, id_b""".stripMargin)),
+      Some(s"""WITH m AS (SELECT unnest(range(0, 200)) AS id),
+              |sd AS (SELECT id, CASE WHEN id % 10 < 3 THEN 7 ELSE id END AS seed FROM m),
+              |par AS (SELECT id, seed, 2000 + (seed % 5) * 400 AS n, seed % 7 + 3 AS a FROM sd),
+              |smp AS (SELECT id, seed, n, a, unnest(range(n)) AS i FROM par),
+              |s AS (SELECT id, i // 40 AS f, (i * a + seed * 17) % 2048 - 1024 AS v FROM smp),
+              |en AS (SELECT id, f, sum(CAST(v AS BIGINT) * v) AS e FROM s GROUP BY 1, 2),
+              |nx AS (SELECT id, f, e, lead(e) OVER (PARTITION BY id ORDER BY f) AS en FROM en),
+              |fp AS (SELECT id,
+              |         CAST(sum(CASE WHEN en > e THEN CAST(1 AS BIGINT) << f ELSE 0 END) AS BIGINT) AS fp
+              |       FROM nx WHERE f < 48 AND en IS NOT NULL GROUP BY id),
+              |${repPairsSql("fp", "fp")}""".stripMargin)),
 
     // Entity resolution, stage 1+2: multi-pass blocking (city+name-prefix
     // UNION exact-phone — a pair missed by one pass is caught by the
@@ -3877,7 +3529,7 @@ object LlmQueries {
               |       WHERE vec_id BETWEEN 1 AND 3),
               |cv AS (SELECT vec_id AS doc_id, embedding AS ce FROM embeddings WHERE vec_id >= 5),
               |ssc AS (SELECT query_id, doc_id,
-              |          CAST(round(($dotSql) * 1000000) AS BIGINT) AS score_micro
+              |          CAST(round((${dotSql("qe", "ce")}) * 1000000) AS BIGINT) AS score_micro
               |        FROM qv, cv),
               |sem AS (SELECT query_id, doc_id, CAST(rnk AS BIGINT) AS sem_rnk FROM (
               |          SELECT query_id, doc_id, score_micro,
@@ -3914,9 +3566,7 @@ object LlmQueries {
           .orderBy("doc_id")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-        val cosMicro = cosineMicroSql(dot("qe", "ce"), dot("qe", "qe"), dot("ce", "ce"))
+        val cosMicro = cosineMicroSql(dotSql("qe", "ce"), dotSql("qe", "qe"), dotSql("ce", "ce"))
         s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 20),
            |c AS (SELECT vec_id AS doc_id, embedding AS ce FROM embeddings WHERE vec_id >= 20),
            |sc AS (SELECT doc_id,
@@ -4348,13 +3998,11 @@ object LlmQueries {
           .orderBy("centroid_id", "cap_rank")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
         s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
            |ca AS (SELECT vec_id, cid FROM (
            |         SELECT v.vec_id, c.cid,
            |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dot("v.embedding", "c.cv")} DESC, c.cid) AS rn
+           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
            |         FROM embeddings v, cent c WHERE v.vec_id >= 16) WHERE rn = 1),
            |h AS (SELECT cid, vec_id,
            |        CAST('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS hh
@@ -4554,7 +4202,7 @@ object LlmQueries {
               |       FROM q, c),
               |s1 AS (SELECT *, row_number() OVER (PARTITION BY query_id
               |                   ORDER BY score_coarse_micro DESC, neighbor_id) AS r1 FROM sc),
-              |s2 AS (SELECT query_id, neighbor_id, score_coarse_micro, CAST(round(($dotSql) * 1000000) AS BIGINT) AS score_micro
+              |s2 AS (SELECT query_id, neighbor_id, score_coarse_micro, CAST(round((${dotSql("qe", "ce")}) * 1000000) AS BIGINT) AS score_micro
               |       FROM s1 WHERE r1 <= 20),
               |r AS (SELECT query_id, neighbor_id, score_micro, score_coarse_micro,
               |        CAST(row_number() OVER (PARTITION BY query_id
@@ -6750,11 +6398,7 @@ object LlmQueries {
           .orderBy("label")
       },
       Some(s"""$lpaLabelsCte,
-              |und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-              |        FROM ew WHERE src <> dst),
-              |dg AS (SELECT node, count(*) AS deg FROM
-              |         (SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-              |       GROUP BY 1),
+              |$undDegCte,
               |lb AS (SELECT lu.label AS la, lv.label AS lv2 FROM und
               |       JOIN l2 lu ON lu.node = und.u JOIN l2 lv ON lv.node = und.v),
               |cut AS (SELECT label, count(*) AS cut_edges FROM (
@@ -6794,11 +6438,7 @@ object LlmQueries {
             col("q_milli"))
       },
       Some(s"""$lpaLabelsCte,
-              |und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-              |        FROM ew WHERE src <> dst),
-              |dg AS (SELECT node, count(*) AS deg FROM
-              |         (SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-              |       GROUP BY 1),
+              |$undDegCte,
               |mm AS (SELECT count(*) AS m FROM und),
               |ein AS (SELECT la.label, count(*) AS e_c FROM und
               |        JOIN l2 la ON la.node = und.u
@@ -6860,11 +6500,7 @@ object LlmQueries {
       // whole chain per reference (the NMI lesson; this oracle ran 154 s
       // at sf1 and was the board's only timeout under load)
       Some(materializeCtes(s"""$louvainLabelsCte,
-              |und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-              |        FROM ew WHERE src <> dst),
-              |dg AS (SELECT node, count(*) AS deg FROM
-              |         (SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-              |       GROUP BY 1),
+              |$undDegCte,
               |mm AS (SELECT count(*) AS m FROM und),
               |ein AS (SELECT la.label, count(*) AS e_c FROM und
               |        JOIN g2 la ON la.node = und.u
@@ -7310,18 +6946,7 @@ object LlmQueries {
           .orderBy("split")
       },
       Some(s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-              |         FROM bands a JOIN bands b2 ON a.band = b2.band AND a.band_key = b2.band_key
-              |         WHERE a.doc_id < b2.doc_id),
-              |ds AS (SELECT doc_id, list_distinct(s) AS dsh FROM sh),
-              |edges AS (SELECT id_a, id_b FROM cand
-              |          JOIN ds x ON x.doc_id = id_a JOIN ds y ON y.doc_id = id_b
-              |          WHERE CAST(len(list_intersect(x.dsh, y.dsh)) AS DOUBLE)
-              |                / (len(x.dsh) + len(y.dsh) - len(list_intersect(x.dsh, y.dsh))) >= 0.8),
-              |e AS (SELECT id_a AS a, id_b AS b FROM edges UNION SELECT id_b, id_a FROM edges),
-              |reach(a, b) AS (SELECT a, b FROM e
-              |                UNION
-              |                SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+              |$nearDupReachCte,
               |comp AS (SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
               |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach) GROUP BY n),
               |g AS (SELECT d2.doc_id, COALESCE(c2.component, d2.doc_id) AS grp
@@ -7406,13 +7031,11 @@ object LlmQueries {
           .orderBy("centroid_id")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
         s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
            |a AS (SELECT vec_id, cid FROM (
            |        SELECT v.vec_id, c.cid,
            |               row_number() OVER (PARTITION BY v.vec_id
-           |                                  ORDER BY ${dot("v.embedding", "c.cv")} DESC, c.cid) AS rn
+           |                                  ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
            |        FROM embeddings v, cent c WHERE v.vec_id >= 16) WHERE rn = 1),
            |cells AS (SELECT cid AS centroid_id, count(*) AS n_members FROM a GROUP BY cid),
            |tot AS (SELECT sum(n_members) AS t, count(*) AS nc FROM cells)
@@ -7434,22 +7057,11 @@ object LlmQueries {
           .orderBy("query_id", "rnk")
       },
       Some {
-        def dot8(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 9), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-        s"""WITH sub AS (SELECT CAST(s AS BIGINT) AS s FROM (SELECT unnest(range(0, 8)) AS s)),
-           |v AS (SELECT vec_id, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS sv
-           |      FROM embeddings, sub s WHERE vec_id >= 21),
-           |c AS (SELECT vec_id AS code, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS cs
-           |      FROM embeddings, sub s WHERE vec_id < 16),
-           |codes AS (SELECT vec_id AS neighbor_id, subspace, code FROM (
-           |            SELECT v.vec_id, v.subspace, c.code,
-           |                   row_number() OVER (PARTITION BY v.vec_id, v.subspace
-           |                     ORDER BY CAST(round((${dot8("v.sv", "v.sv")} - 2 * ${dot8("v.sv", "c.cs")} + ${dot8("c.cs", "c.cs")}) * 1000000) AS BIGINT), c.code) AS rn
-           |            FROM v JOIN c ON v.subspace = c.subspace) WHERE rn = 1),
+        s"""WITH $pqCodesCte,
            |q AS (SELECT vec_id AS query_id, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS qs
            |      FROM embeddings, sub s WHERE vec_id BETWEEN 16 AND 20),
            |lut AS (SELECT q.query_id, q.subspace, c.code,
-           |          CAST(round(${dot8("q.qs", "c.cs")} * 1000000) AS BIGINT) AS l
+           |          CAST(round(${dotSql("q.qs", "c.cs", 8)} * 1000000) AS BIGINT) AS l
            |        FROM q JOIN c ON q.subspace = c.subspace),
            |sc AS (SELECT lut.query_id, codes.neighbor_id, CAST(sum(lut.l) AS BIGINT) AS score_micro
            |       FROM codes JOIN lut ON codes.subspace = lut.subspace AND codes.code = lut.code
@@ -7482,8 +7094,6 @@ object LlmQueries {
           .orderBy("query_id")
       },
       Some {
-        def dot8(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 9), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
         s"""WITH q64 AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id BETWEEN 16 AND 20),
            |c64 AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings WHERE vec_id >= 21),
            |bf AS (SELECT query_id, neighbor_id FROM (
@@ -7492,20 +7102,11 @@ object LlmQueries {
            |         FROM (SELECT q64.query_id, c64.neighbor_id,
            |                      CAST(round(list_sum(list_transform(range(1, 65), i -> CAST(q64.qe[i] AS DOUBLE) * CAST(c64.ce[i] AS DOUBLE))) * 1000000) AS BIGINT) AS score_micro
            |               FROM q64, c64)) WHERE rnk <= 5),
-           |sub AS (SELECT CAST(s AS BIGINT) AS s FROM (SELECT unnest(range(0, 8)) AS s)),
-           |v AS (SELECT vec_id, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS sv
-           |      FROM embeddings, sub s WHERE vec_id >= 21),
-           |c AS (SELECT vec_id AS code, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS cs
-           |      FROM embeddings, sub s WHERE vec_id < 16),
-           |codes AS (SELECT vec_id AS neighbor_id, subspace, code FROM (
-           |            SELECT v.vec_id, v.subspace, c.code,
-           |                   row_number() OVER (PARTITION BY v.vec_id, v.subspace
-           |                     ORDER BY CAST(round((${dot8("v.sv", "v.sv")} - 2 * ${dot8("v.sv", "c.cs")} + ${dot8("c.cs", "c.cs")}) * 1000000) AS BIGINT), c.code) AS rn
-           |            FROM v JOIN c ON v.subspace = c.subspace) WHERE rn = 1),
+           |$pqCodesCte,
            |qp AS (SELECT vec_id AS query_id, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS qs
            |       FROM embeddings, sub s WHERE vec_id BETWEEN 16 AND 20),
            |lut AS (SELECT qp.query_id, qp.subspace, c.code,
-           |          CAST(round(${dot8("qp.qs", "c.cs")} * 1000000) AS BIGINT) AS l
+           |          CAST(round(${dotSql("qp.qs", "c.cs", 8)} * 1000000) AS BIGINT) AS l
            |        FROM qp JOIN c ON qp.subspace = c.subspace),
            |psc AS (SELECT lut.query_id, codes.neighbor_id, CAST(sum(lut.l) AS BIGINT) AS score_micro
            |        FROM codes JOIN lut ON codes.subspace = lut.subspace AND codes.code = lut.code
@@ -7539,35 +7140,22 @@ object LlmQueries {
           .orderBy("query_id", "rnk")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-        def dot8(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 9), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
         s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
            |ca AS (SELECT vec_id, cid FROM (
            |         SELECT v.vec_id, c.cid,
            |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dot("v.embedding", "c.cv")} DESC, c.cid) AS rn
+           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
            |         FROM embeddings v, cent c WHERE v.vec_id >= 21) WHERE rn = 1),
            |qa AS (SELECT vec_id, cid FROM (
            |         SELECT v.vec_id, c.cid,
            |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dot("v.embedding", "c.cv")} DESC, c.cid) AS rn
+           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
            |         FROM embeddings v, cent c WHERE v.vec_id BETWEEN 16 AND 20) WHERE rn <= 2),
-           |sub AS (SELECT CAST(s AS BIGINT) AS s FROM (SELECT unnest(range(0, 8)) AS s)),
-           |v AS (SELECT vec_id, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS sv
-           |      FROM embeddings, sub s WHERE vec_id >= 21),
-           |c AS (SELECT vec_id AS code, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS cs
-           |      FROM embeddings, sub s WHERE vec_id < 16),
-           |codes AS (SELECT vec_id AS neighbor_id, subspace, code FROM (
-           |            SELECT v.vec_id, v.subspace, c.code,
-           |                   row_number() OVER (PARTITION BY v.vec_id, v.subspace
-           |                     ORDER BY CAST(round((${dot8("v.sv", "v.sv")} - 2 * ${dot8("v.sv", "c.cs")} + ${dot8("c.cs", "c.cs")}) * 1000000) AS BIGINT), c.code) AS rn
-           |            FROM v JOIN c ON v.subspace = c.subspace) WHERE rn = 1),
+           |$pqCodesCte,
            |q AS (SELECT vec_id AS query_id, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS qs
            |      FROM embeddings, sub s WHERE vec_id BETWEEN 16 AND 20),
            |lut AS (SELECT q.query_id, q.subspace, c.code,
-           |          CAST(round(${dot8("q.qs", "c.cs")} * 1000000) AS BIGINT) AS l
+           |          CAST(round(${dotSql("q.qs", "c.cs", 8)} * 1000000) AS BIGINT) AS l
            |        FROM q JOIN c ON q.subspace = c.subspace),
            |sc AS (SELECT qa.vec_id AS query_id, codes.neighbor_id, ca.cid AS centroid_id,
            |              CAST(sum(lut.l) AS BIGINT) AS score_micro
@@ -7595,29 +7183,15 @@ object LlmQueries {
           e.filter(col("vec_id") < 16), threshold = 0.3).orderBy("vec_id")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-        s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
-           |g AS (SELECT cid AS gid, cv AS gv FROM cent ORDER BY cid LIMIT 4),
-           |fc AS (SELECT cid, cv, gid FROM (
-           |         SELECT f.cid, f.cv, g.gid,
-           |                row_number() OVER (PARTITION BY f.cid
-           |                                   ORDER BY ${dot("f.cv", "g.gv")} DESC, g.gid) AS rn
-           |         FROM cent f, g) WHERE rn = 1),
-           |live AS (SELECT gid, gv FROM g WHERE gid IN (SELECT gid FROM fc)),
-           |va AS (SELECT vec_id, embedding, gid FROM (
-           |         SELECT v.vec_id, v.embedding, l.gid,
-           |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dot("v.embedding", "l.gv")} DESC, l.gid) AS rn
-           |         FROM embeddings v, live l WHERE v.vec_id >= 16) WHERE rn = 1),
+        s"""$ivfHierCte,
            |a AS (SELECT vec_id, embedding, cid FROM (
            |        SELECT va.vec_id, va.embedding, fc.cid,
            |               row_number() OVER (PARTITION BY va.vec_id
-           |                                  ORDER BY ${dot("va.embedding", "fc.cv")} DESC, fc.cid) AS rn
+           |                                  ORDER BY ${dotSql("va.embedding", "fc.cv")} DESC, fc.cid) AS rn
            |        FROM va JOIN fc ON va.gid = fc.gid) WHERE rn = 1),
            |drp AS (SELECT DISTINCT y.vec_id FROM a x JOIN a y ON x.cid = y.cid AND x.vec_id < y.vec_id
-           |        WHERE ${cosineMicroSql(dot("x.embedding", "y.embedding"),
-                      dot("x.embedding", "x.embedding"), dot("y.embedding", "y.embedding"))} >= 300000)
+           |        WHERE ${cosineMicroSql(dotSql("x.embedding", "y.embedding"),
+                      dotSql("x.embedding", "x.embedding"), dotSql("y.embedding", "y.embedding"))} >= 300000)
            |SELECT a.vec_id, a.cid AS centroid_id, d.vec_id IS NULL AS kept
            |FROM a LEFT JOIN drp d ON a.vec_id = d.vec_id ORDER BY a.vec_id""".stripMargin
       }),
@@ -7713,17 +7287,15 @@ object LlmQueries {
           .orderBy("vec_id", "subspace")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 9), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
         s"""WITH sub AS (SELECT CAST(s AS BIGINT) AS s FROM (SELECT unnest(range(0, 8)) AS s)),
            |v AS (SELECT vec_id, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS sv
            |      FROM embeddings, sub s WHERE vec_id >= 16),
            |c AS (SELECT vec_id AS code, s.s AS subspace, embedding[(s.s*8+1):(s.s*8+8)] AS cs
            |      FROM embeddings, sub s WHERE vec_id < 16),
            |sc AS (SELECT v.vec_id, v.subspace, c.code,
-           |         CAST(round((${dot("v.sv", "v.sv")} - 2 * ${dot("v.sv", "c.cs")} + ${dot("c.cs", "c.cs")}) * 1000000) AS BIGINT) AS d2,
+           |         CAST(round((${dotSql("v.sv", "v.sv", 8)} - 2 * ${dotSql("v.sv", "c.cs", 8)} + ${dotSql("c.cs", "c.cs", 8)}) * 1000000) AS BIGINT) AS d2,
            |         row_number() OVER (PARTITION BY v.vec_id, v.subspace
-           |                            ORDER BY CAST(round((${dot("v.sv", "v.sv")} - 2 * ${dot("v.sv", "c.cs")} + ${dot("c.cs", "c.cs")}) * 1000000) AS BIGINT), c.code) AS rn
+           |                            ORDER BY CAST(round((${dotSql("v.sv", "v.sv", 8)} - 2 * ${dotSql("v.sv", "c.cs", 8)} + ${dotSql("c.cs", "c.cs", 8)}) * 1000000) AS BIGINT), c.code) AS rn
            |       FROM v JOIN c ON v.subspace = c.subspace)
            |SELECT vec_id, subspace, code, d2 AS dist_micro
            |FROM sc WHERE rn = 1 ORDER BY vec_id, subspace""".stripMargin
@@ -7776,8 +7348,6 @@ object LlmQueries {
       Some {
         def dot(x: String, y: String) =
           s"list_sum(list_transform(range(1, 9), i -> $x[i] * $y[i]))"
-        def dot64(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
         s"""WITH sub AS (SELECT CAST(s AS BIGINT) AS s FROM (SELECT unnest(range(0, 8)) AS s)),
            |corpus AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
            |           FROM embeddings WHERE vec_id >= 16),
@@ -7788,7 +7358,7 @@ object LlmQueries {
            |asg AS (SELECT vec_id, centroid_id FROM (
            |          SELECT v.vec_id, c.vec_id AS centroid_id,
            |            row_number() OVER (PARTITION BY v.vec_id
-           |              ORDER BY ${dot64("v.e", "c.e")} DESC, c.vec_id) AS rn
+           |              ORDER BY ${dotSql("v.e", "c.e")} DESC, c.vec_id) AS rn
            |          FROM corpus v CROSS JOIN coarse c) WHERE rn = 1),
            |resid AS (SELECT v.vec_id, list_transform(range(1, 65),
            |            i -> v.e[i] - cc.e[i]) AS e
@@ -8313,9 +7883,7 @@ object LlmQueries {
           .orderBy("neighbor_id")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-        val cosMicro = cosineMicroSql(dot("qe", "ce"), dot("qe", "qe"), dot("ce", "ce"))
+        val cosMicro = cosineMicroSql(dotSql("qe", "ce"), dotSql("qe", "qe"), dotSql("ce", "ce"))
         s"""WITH c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings WHERE vec_id < 9
            |           UNION ALL
            |           SELECT CAST(-1 AS BIGINT) AS neighbor_id,
@@ -8337,9 +7905,7 @@ object LlmQueries {
           .orderBy("query_id", "neighbor_id")
       },
       Some {
-        def dot(x: String, y: String) =
-          s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-        val cosMicro = cosineMicroSql(dot("qe", "ce"), dot("qe", "qe"), dot("ce", "ce"))
+        val cosMicro = cosineMicroSql(dotSql("qe", "ce"), dotSql("qe", "qe"), dotSql("ce", "ce"))
         s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 6),
            |c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings)
            |SELECT query_id, neighbor_id,

@@ -3,10 +3,12 @@ package graft.queries
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** One named, oracle-checkable query: the unit of the driver's correctness
   * gate. `oracle` is equivalent ANSI SQL runnable by DuckDB over the same
@@ -39,12 +41,18 @@ object Tables {
     * TIMESTAMP(MICROS) (isAdjustedToUTC=false → TIMESTAMP_NTZ), depending
     * on the generator run. Normalize BOTH to a session-zone (UTC)
     * microsecond TIMESTAMP — exactly what DuckDB's `CAST(ts AS TIMESTAMP)`
-    * yields for either layout, so oracle comparisons agree. */
+    * yields for either layout, so oracle comparisons agree. The conf is
+    * set only when the footer already read shows `ts` as NANOS; it is
+    * session-wide and stays set, so after such a read every later parquet
+    * read in the session turns a NANOS column into a bare long instead of
+    * failing. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    if (name == "events")
+    val footer = readFooter(spark, path)
+    if (name == "events" && tsIsNanos(footer))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
+    val df = spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(path)
     if (name != "events") df
     else df.schema("ts").dataType match {
       case LongType => // integer div, not `/` (double loses bits on ~1.7e18 nanos)
@@ -54,7 +62,17 @@ object Tables {
     }
   }
 
-  private def footerSchema(spark: SparkSession, path: String): StructType = {
+  /** Whether the footer stores `ts` as parquet TIMESTAMP(NANOS). */
+  private def tsIsNanos(footer: Footer): Boolean = {
+    val schema = footer.getParquetMetadata.getFileMetaData.getSchema
+    schema.containsField("ts") &&
+      (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      })
+  }
+
+  private def readFooter(spark: SparkSession, path: String): Footer = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
@@ -71,8 +89,6 @@ object Tables {
           s"no parquet data file in $path"))
     }
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-    val footer = try reader.getFooter finally reader.close()
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    try new Footer(file.getPath, reader.getFooter) finally reader.close()
   }
 }

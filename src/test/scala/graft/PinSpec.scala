@@ -65,6 +65,15 @@ class PinSpec extends SparkSpec {
     assert(ranks.count() == 4L)
   }
 
+  test("Pin.rounds: eigencentrality over five rounds frees each round's inner pin") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L)).toDF("src", "dst")
+    var cm: DataFrame = null
+    // the two prologue pins (edges, nodes) plus the last round; each
+    // round's `sums` pin is freed once its round is materialized
+    assert(pinsAdded { cm = Graph.eigencentrality(edges, rounds = 5) } == 3)
+    assert(cm.count() == 4L)
+  }
+
   test("ConnectedComponents.run on a long chain keeps two pins, whatever the round count") {
     // a 12-node path labels its far end only after 11 rounds (plus one to
     // see the fixpoint)

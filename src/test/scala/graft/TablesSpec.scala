@@ -61,6 +61,14 @@ class TablesSpec extends SparkSpec {
       Seq(4950L, 100L, new java.math.BigDecimal("4950.00")))
   }
 
+  test("events with ts as TIMESTAMP(MICROS) leaves the session's nanosAsLong conf unset") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    val df = jobless(sf, "events")
+    assert(df.schema("ts").dataType == TimestampType)
+    assert(!spark.sessionState.conf.contains(key))
+  }
+
   test("events with ts as TIMESTAMP(NANOS): a session-zone timestamp truncated to micros") {
     val dir = Files.createTempDirectory("tables_nanos").toString
     val schema = MessageTypeParser.parseMessageType(
