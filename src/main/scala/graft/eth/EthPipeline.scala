@@ -35,8 +35,11 @@ object EthPipeline {
   final case class IngestReport(startBlock: Long, endBlock: Long,
                                 rowCounts: Map[String, Long])
 
-  private def readStream(spark: SparkSession, conf: SourceConf,
-                         stream: String, lo: Long, hi: Long): DataFrame =
+  /** One chain stream over blocks [lo, hi], read in batch from `conf`'s
+    * source. Every batch chain read under `eth/` and `queries/` goes
+    * through here (PipelineSpec's source lock). */
+  private[graft] def readStream(spark: SparkSession, conf: SourceConf,
+                                stream: String, lo: Long, hi: Long): DataFrame =
     conf.options.foldLeft(
       spark.read.format(conf.format)
         .option("stream", stream)

@@ -52,9 +52,8 @@ object Relations {
   def ingestRange(spark: SparkSession, path: String, lo: Long, hi: Long,
                   batchSize: Long = 500): Unit =
     Ingest.planRanges(lo, hi, batchSize).foreach { case (a, b) =>
-      def stream(name: String) = spark.read.format("graft-chain")
-        .option("stream", name).option("start", a).option("end", b)
-        .option("batchSize", 100).load()
+      def stream(name: String) =
+        EthPipeline.readStream(spark, EthPipeline.SourceConf(batchSize = 100), name, a, b)
       val delta = relationsDelta(stream("transaction"), stream("receipt"), a)
       Sinks.upsertBucketedParquet(delta, path,
         pkCols = Seq("from_address", "to_address", "batch_lo"),

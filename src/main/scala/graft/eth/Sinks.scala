@@ -299,12 +299,24 @@ object Sinks {
     * with base already bucketed, pair with [[mergeCdcBucketedParquet]]
     * which prunes the read to touched buckets first. */
   def applyCdc(base: DataFrame, changes: DataFrame, pkCols: Seq[String],
-               opCol: String = "op", seqCol: String = "seq"): DataFrame = {
+               opCol: String = "op", seqCol: String = "seq"): DataFrame =
+    cdcMerge(base, changes, pkCols, opCol, seqCol, bucketCol = None)
+
+  /** [[applyCdc]]'s one window pass. Given `bucketCol`, the base ∪ changes
+    * union is hash-clustered on the bucket first and the window is
+    * partitioned by (bucket, PK), so it reuses that exchange — the bucketed
+    * write's own — instead of adding a PK one, as [[mergeOverlap]]'s does. */
+  private def cdcMerge(base: DataFrame, changes: DataFrame, pkCols: Seq[String],
+                       opCol: String, seqCol: String,
+                       bucketCol: Option[String]): DataFrame = {
     val dataCols = base.columns.toIndexedSeq
     require(!dataCols.contains(opCol) && !dataCols.contains(seqCol),
       s"base must not carry the CDC bookkeeping columns ($opCol, $seqCol)")
+    // (bucket, PK) groups exactly the rows PK alone would only because the
+    // PK→bucket map is stable (mergeCdcBucketedParquet's contract): a PK's
+    // stored row and all its changes carry the same bucket
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pkCols.map(col).toIndexedSeq: _*)
+      .partitionBy((bucketCol.toSeq ++ pkCols).map(col).toIndexedSeq: _*)
       .orderBy(col("__pri").desc, col("__seq").desc)
     // op validation rides the merge itself (raise_error inside the one
     // pass — no eager extra job over the changeset; the Enrich lesson)
@@ -312,12 +324,13 @@ object Sinks {
       .otherwise(raise_error(concat(
         lit("applyCdc: unknown op '"), col(opCol),
         lit("' — expected U (upsert) / D (delete)"))))
-    changes.select(dataCols.map(col) :+ opChecked.as("__op") :+
+    val union = changes.select(dataCols.map(col) :+ opChecked.as("__op") :+
         col(seqCol).cast("long").as("__seq"): _*)
       .withColumn("__pri", lit(1))
       .unionByName(base.select(dataCols.map(col): _*)
         .withColumn("__op", lit("U")).withColumn("__seq", lit(Long.MinValue))
         .withColumn("__pri", lit(0)))
+    bucketCol.fold(union)(b => union.repartition(col(b)))
       .withColumn("__rn", row_number().over(w))
       // (pk, seq) uniqueness is ENFORCED, not assumed: duplicate-seq change
       // rows would make the row_number winner arbitrary (worst case a U and
@@ -344,7 +357,9 @@ object Sinks {
     * granular CDC apply. Touched buckets = the changeset's buckets (the
     * PK→bucket map must be stable, same contract as the upsert); only
     * those bucket directories are read back (with the changeset's data
-    * schema), merged through the one-window CDC pass, and rewritten by
+    * schema), merged through the one-window CDC pass — partitioned by
+    * (bucket, PK), so the write's bucket exchange is the merge's only
+    * shuffle — and rewritten by
     * [[rewriteBuckets]]'s dynamic partition overwrite — untouched buckets
     * keep their files byte-for-byte, and a bucket whose merge result is
     * EMPTY (everything deleted) is deleted after the write instead of
@@ -362,7 +377,7 @@ object Sinks {
     val data = changes.drop(opCol, seqCol)
     val base = readBuckets(changes.sparkSession, path, bucketCol, touched, Some(data.schema))
       .getOrElse(data.limit(0))
-    rewriteBuckets(applyCdc(base, changes, pkCols, opCol, seqCol).repartition(col(bucketCol)),
+    rewriteBuckets(cdcMerge(base, changes, pkCols, opCol, seqCol, Some(bucketCol)),
       path, bucketCol, sortCols.map(col), touched)
   }
 

@@ -85,10 +85,9 @@ object Classifier {
     require(lrMilli > 0, s"lrMilli must be > 0, got $lrMilli")
     // n as a 1-row broadcast — the gradient scale; never collected
     val n = lab.agg(count(lit(1)).as("__n"))
-    var w = Pin(feat.select(col("__f")).distinct()
+    val zero = Pin(feat.select(col("__f")).distinct()
       .withColumn("__w", lit(0L)))
-    var r = 0
-    while (r < rounds) {
+    val trained = Pin.rounds(zero, rounds) { (w, _) =>
       // exact integer margin per doc; docs with no features score 0
       val margins = feat.join(broadcast(w), "__f")
         .groupBy(col("__id")).agg(sum(col("__x") * col("__w")).as("__m"))
@@ -105,16 +104,17 @@ object Classifier {
         .agg(sum(col("__x").cast("decimal(38,0)") * col("__e")).as("__g"))
       // w ← w − (lr·g) div (1000·n), sign-split truncating div so Spark
       // `div` and DuckDB `//` agree on negative gradients
-      w = Pin(w.join(grad, Seq("__f"), "left")
+      w.join(grad, Seq("__f"), "left")
         .crossJoin(broadcast(n))
         .select(col("__f"), (col("__w") - expr(
           s"""CASE WHEN coalesce(__g, 0) < 0
              |     THEN -cast(((-__g) * $lrMilli) div (1000 * __n) as bigint)
              |     ELSE cast((coalesce(__g, 0) * $lrMilli) div (1000 * __n) as bigint)
-             |END""".stripMargin)).as("__w")))
-      r += 1
+             |END""".stripMargin)).as("__w"))
     }
-    w
+    // the zero weights are the first round's input only
+    Pin.release(zero)
+    trained
   }
 
   /** Score examples with a trained weight vector: the exact integer dot

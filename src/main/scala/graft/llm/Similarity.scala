@@ -479,27 +479,22 @@ object Similarity {
                   vecCol: String = "embedding"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val corpus = Pin(vectors.select(col(idCol), milliVec(vecCol).as("__vm"))) // reused every round
-    var cents = centroids.select(col(idCol).cast("long").as("cid"),
+    val seeds = centroids.select(col(idCol).cast("long").as("cid"),
       microVec(vecCol).as("__cm"))
-    var out: DataFrame = null
-    var r = 0
-    while (r < rounds) {
-      val assigned = quantizedAssign(corpus, cents)
-        .select(col("__vm"), col("cid"))
-      val means = Pin(assigned
+    // a round's state is its per-(cid, pos) means; the first round reads
+    // the seeds, every later one the previous round's means as centroids
+    Pin.rounds(seeds, rounds) { (prev, r) =>
+      val cents = if (r == 0) prev else prev.groupBy(col("cid"))
+        .agg(expr("transform(array_sort(collect_list(struct(pos, mean_micro)))," +
+          " s -> s.mean_micro)").as("__cm"))
+      quantizedAssign(corpus, cents)
         .select(col("cid"), posexplode(col("__vm")).as(Seq("__p0", "__v")))
         .select(col("cid"), (col("__p0") + 1).as("pos"), col("__v"))
         .groupBy(col("cid"), col("pos"))
         .agg(sum(col("__v")).as("__s"), count(lit(1)).as("n_members"))
         .select(col("cid"), col("pos"),
-          meanMicro("__s", "n_members").as("mean_micro"), col("n_members")))
-      out = means
-      cents = means.groupBy(col("cid"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, mean_micro)))," +
-          " s -> s.mean_micro)").as("__cm"))
-      r += 1
-    }
-    out.select(col("cid").as("centroid_id"), col("pos"),
+          meanMicro("__s", "n_members").as("mean_micro"), col("n_members"))
+    }.select(col("cid").as("centroid_id"), col("pos"),
       col("mean_micro"), col("n_members"))
   }
 

@@ -711,6 +711,11 @@ object TextAnalysis {
     * shuffle keys on the word (high-cardinality, even spread); lineage
     * truncated per round; no driver state beyond the loop counter.
     *
+    * The loop pins by hand, not through [[graft.Pin.rounds]], and frees
+    * nothing: the returned frame is a lazy union of one row per round, and
+    * each row reads that round's `kept` and `merged` pins, so every
+    * round's pins stay live as long as the result does.
+    *
     * Returns (round, pair, n_occurrences, n_words_affected,
     * n_merges_applied, n_symbols_after) — n_* weighted by corpus word
     * frequency. */
@@ -930,7 +935,7 @@ object TextAnalysis {
     require(merges.nonEmpty, "need at least one merge")
     val W = org.apache.spark.sql.expressions.Window
     val wnd = W.partitionBy(col("word")).orderBy(col("i"))
-    var syms = Pin(df.select(explode(tokens(col(textCol))).as("word"))
+    val chars = Pin(df.select(explode(tokens(col(textCol))).as("word"))
       .filter(length(col("word")) >= 1)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("word"), col("freq"), posexplode(expr(
@@ -938,7 +943,8 @@ object TextAnalysis {
         .as(Seq("__p0", "s")))
       .select(col("word"), col("freq"),
         (col("__p0") + 1).cast("long").as("i"), col("s")))
-    merges.foreach { case (left, right) =>
+    val encoded = Pin.rounds(chars, merges.size) { (syms, r) =>
+      val (left, right) = merges(r)
       val withNext = syms.withColumn("nxt", lead(col("s"), 1).over(wnd))
       val cand = withNext
         .filter(col("s") === lit(left) && col("nxt") === lit(right))
@@ -949,7 +955,7 @@ object TextAnalysis {
           .over(W.partitionBy(col("word"), col("grp")).orderBy(col("i"))))
         .filter(col("__rr") % 2 === 1)
         .select(col("word"), col("i"))
-      syms = Pin(withNext
+      withNext
         .join(kept.select(col("word"), col("i"), lit(1).as("__st")),
           Seq("word", "i"), "left")
         .join(kept.select(col("word"), (col("i") + 1).as("i"), lit(1).as("__cons")),
@@ -960,9 +966,11 @@ object TextAnalysis {
             .otherwise(col("s")).as("s"))
         .withColumn("i", row_number()
           .over(W.partitionBy(col("word")).orderBy(col("__oi"))).cast("long"))
-        .select(col("word"), col("freq"), col("i"), col("s")))
+        .select(col("word"), col("freq"), col("i"), col("s"))
     }
-    syms.groupBy(col("s")).agg(sum(col("freq")).as("n_occurrences"))
+    // the per-character table is the first merge's input only
+    Pin.release(chars)
+    encoded.groupBy(col("s")).agg(sum(col("freq")).as("n_occurrences"))
       .select(col("s").as("token"), col("n_occurrences"))
   }
 

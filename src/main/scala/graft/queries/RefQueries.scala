@@ -1,17 +1,191 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Pin
 import graft.eth.{Enrich, EthTransforms, Ingest, Sinks}
+import graft.eth.EthPipeline.{SourceConf, readStream}
 import graft.functions.ColumnFns._
 
 /** Reference-parity queries: one named, oracle-checked query per operator of
   * SURVEY.md §2 (S* sources, P* projections, J* joins, A* aggregations,
   * O* sorts/limits, Q* query shapes, T-/K- ingest+sink semantics), expressed
   * over the driver's TPC-H-ish testdata.
+  *
+  * Every chain stream is read through the engine's own reader,
+  * [[graft.eth.EthPipeline.readStream]], from one of the three sources
+  * below, and re-derived in DuckDB by that stream's twin over the same
+  * inclusive block range. The twins are written from the chain's stated
+  * formulas, not generated from the source's code: they are the reference
+  * the source is checked against.
   */
 object RefQueries {
+
+  // the synthetic chain at the reference's 50-block RPC batch and at 100,
+  // and the JSON-RPC connector against its in-process synthetic node
+  private val chain50 = SourceConf()
+  private val chain100 = SourceConf(batchSize = 100)
+  private val rpc50 = SourceConf("graft-rpc", 50, Map("transport" -> "synthetic"))
+
+  // The twins below are spliced into oracles that call stripMargin again,
+  // so no line of a twin may start with `|`: a leading `||` would lose a bar.
+
+  /** `SELECT b` for every block of [lo, hi]. */
+  private def blockRange(lo: Long, hi: Long): String =
+    s"SELECT unnest(range($lo, ${hi + 1})) AS b"
+
+  /** DuckDB twin of the `block` stream over [lo, hi]: `bl`, one row per
+    * block `b` with its `hash`, `miner` (five rotate), `difficulty`
+    * (HUGEINT), `gas_used`, timestamp `ts` and transaction count `tc`. */
+  private def chainBlocksCte(lo: Long, hi: Long): String =
+    s"""bl AS (SELECT b,
+       |         '0x' || md5('blk-' || CAST(b AS VARCHAR) || '-0') ||
+       |           md5('blk-' || CAST(b AS VARCHAR) || '-0-b') AS hash,
+       |         '0x' || substring(md5('miner-' || CAST(b % 5 AS VARCHAR)), 1, 40) AS miner,
+       |         CAST(262144 AS HUGEINT) + b AS difficulty,
+       |         b % 30000000 AS gas_used, 1438269988 + b * 13 AS ts, b % 3 + 1 AS tc
+       |       FROM (${blockRange(lo, hi)}))""".stripMargin
+
+  /** DuckDB twin of the `transaction` and `receipt` streams over [lo, hi]:
+    * `tx`, one row per (block `b`, index `i`) with the tx hash `h`,
+    * `from_address`, `to_address` (NULL on a contract creation), the value
+    * `v` (HUGEINT), `max_fee_per_gas` (NULL on a legacy tx), the receipt's
+    * `cumulative_gas_used`, `gas_used`, `contract_address` (set on a
+    * creation only) and `status` (NULL pre-Byzantium), and `ok`, the
+    * success gate value transfers pass: status 1, or NULL. */
+  private def chainTxCte(lo: Long, hi: Long): String =
+    s"""tx AS (SELECT b, i,
+       |         '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)) ||
+       |           md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR) || '-b') AS h,
+       |         '0x' || substring(md5('from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS from_address,
+       |         CASE WHEN (b + i) % 7 = 0 THEN NULL
+       |              ELSE '0x' || substring(md5('to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) END AS to_address,
+       |         CAST('100000000000000000000' AS HUGEINT) + b * 1000 + i AS v,
+       |         CASE WHEN (b + i) % 5 = 0 THEN NULL ELSE 30000000000 + b END AS max_fee_per_gas,
+       |         21000 * (i + 1) AS cumulative_gas_used, 21000 + i AS gas_used,
+       |         CASE WHEN (b + i) % 7 = 0
+       |              THEN '0x' || substring(md5('ca-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40)
+       |              END AS contract_address,
+       |         CASE WHEN (b + i) % 11 = 0 THEN NULL ELSE (b + i) % 2 END AS status,
+       |         ((b + i) % 11 = 0) OR ((b + i) % 2 = 1) AS ok
+       |       FROM (SELECT b, unnest(range(b % 3 + 1)) AS i FROM (${blockRange(lo, hi)})))""".stripMargin
+
+  /** DuckDB twin of the `log` stream over [lo, hi]: `lg`, one row per
+    * (block `b`, index `i`), two logs per tx, so log i carries tx i // 2's
+    * hash `h`; with its `address`, `topics` (VARCHAR[], empty every fifth
+    * log) and `data`. */
+  private def chainLogsCte(lo: Long, hi: Long): String =
+    s"""lg AS (SELECT b, i,
+       |         '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i // 2 AS VARCHAR)) ||
+       |           md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i // 2 AS VARCHAR) || '-b') AS h,
+       |         '0x' || substring(md5('addr-' || CAST((b + i) % 11 AS VARCHAR)), 1, 40) AS address,
+       |         CASE WHEN (b + i) % 5 = 0 THEN CAST([] AS VARCHAR[])
+       |              ELSE list_transform(range(0, (b + i) % 5),
+       |                     t -> '0x' || md5('topic-' || CAST(t AS VARCHAR) || '-' || CAST((b + i) % 3 AS VARCHAR))) END AS topics,
+       |         '0x' || md5('data-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)) AS data
+       |       FROM (SELECT b, unnest(range((b % 3 + 1) * 2)) AS i FROM (${blockRange(lo, hi)})))""".stripMargin
+
+  /** DuckDB twin of the `trace` stream over [lo, hi]: `tr`, one row per
+    * (block `b`, index `i`): one call per tx, then the block's reward
+    * trace (i = b % 3 + 1, NULL hash `h`); with `trace_type`,
+    * `trace_address` (a list, NULL on the reward and on i = 0) and `error`
+    * (every thirteenth call fails). */
+  private def chainTracesCte(lo: Long, hi: Long): String =
+    s"""tr AS (SELECT b, i,
+       |         CASE WHEN i = b % 3 + 1 THEN NULL
+       |              ELSE '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)) ||
+       |                     md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR) || '-b') END AS h,
+       |         CASE WHEN i = b % 3 + 1 THEN 'reward' ELSE 'call' END AS trace_type,
+       |         CASE WHEN i = b % 3 + 1 OR i = 0 THEN NULL
+       |              ELSE list_transform(range(0, i % 3 + 1), x -> (x * 2) % 3) END AS trace_address,
+       |         CASE WHEN i <> b % 3 + 1 AND (b + i) % 13 = 0 THEN 'out of gas' END AS error
+       |       FROM (SELECT b, unnest(range(b % 3 + 2)) AS i FROM (${blockRange(lo, hi)})))""".stripMargin
+
+  /** One stream check, run over the synthetic chain (`eth_source_<stream>s`)
+    * and over the JSON-RPC connector (`eth_rpc_source_<stream>s`) with the
+    * same range, projection, ordering and oracle: both must reconstruct
+    * the same rows. */
+  private def sourcePair(stream: String, section: String, hi: Long, oracle: String)
+                        (project: DataFrame => DataFrame): Seq[Q] =
+    Seq("eth_source_" -> chain50, "eth_rpc_source_" -> rpc50).map { case (prefix, conf) =>
+      Q(s"$prefix${stream}s", section,
+        (s, _) => project(readStream(s, conf, stream, 0, hi)), Some(oracle))
+    }
+
+  /** The AS-OF rows' inputs over `events`: the purchases (left) and the
+    * clicks (right, timestamp and payload renamed for the join). */
+  private def asofInputs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val ev = Tables(s, d, "events")
+    (ev.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts")),
+     ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("rts"),
+        col("event_id").as("click_id"), col("value").as("click_value")))
+  }
+
+  /** DuckDB twin of [[asofInputs]]: `l` the purchases, `r0` the clicks and
+    * `r` the clicks kept one per (user, ts), the highest click id — the
+    * operators' tie break. */
+  private val asofCte =
+    """l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+      |r0 AS (SELECT user_id, ts, event_id AS click_id, value FROM events WHERE event_type = 'click'),
+      |r AS (SELECT user_id, ts, click_id, value FROM (
+      |        SELECT r0.*, row_number() OVER (PARTITION BY user_id, ts ORDER BY click_id DESC) AS rn
+      |        FROM r0) WHERE rn = 1)""".stripMargin
+
+  /** The Versioned rows' base table: orders 1..2000, keyed by
+    * `o_orderkey`, 500 keys to a bucket `bkt`, priced in cents. */
+  private def ordersBase(s: SparkSession, d: String): DataFrame =
+    Tables(s, d, "orders")
+      .filter(col("o_orderkey") <= 2000)
+      .select(col("o_orderkey"),
+        expr("o_orderkey div 500").as("bkt"),
+        round(col("o_totalprice") * 100).cast("long").as("price_c"))
+
+  /** DuckDB twin of [[ordersBase]]: `base(o_orderkey, bkt, price_c)`. */
+  private val ordersBaseCte =
+    """base AS (SELECT o_orderkey, o_orderkey // 500 AS bkt,
+      |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
+      |       FROM orders WHERE o_orderkey <= 2000)""".stripMargin
+
+  /** The rate rows' day table: every day from the first to the last
+    * order date, with the known rate (`rate_cents`) on every day of the
+    * month ≡ 1 (mod 5) that has orders, null on the rest. */
+  private def rateDays(s: SparkSession, d: String): DataFrame = {
+    val days = Tables(s, d, "orders")
+      .agg(min(to_date(col("o_orderdate"))).as("lo"),
+        max(to_date(col("o_orderdate"))).as("hi"))
+      .select(explode(sequence(col("lo"), col("hi"))).as("d"))
+    val known = Tables(s, d, "orders")
+      .select(to_date(col("o_orderdate")).as("d")).distinct()
+      .filter(dayofmonth(col("d")) % 5 === 1)
+      .withColumn("rate_cents",
+        (lit(10000) + dayofmonth(col("d")) * 10).cast("long"))
+    days.join(known, Seq("d"), "left")
+  }
+
+  /** DuckDB twin of [[rateDays]]'s inputs: the spine `days(d)` and the
+    * known rates `known(d, rate_cents)`. */
+  private val rateDaysCte =
+    """mm AS (SELECT min(CAST(o_orderdate AS DATE)) AS lo,
+      |                   max(CAST(o_orderdate AS DATE)) AS hi FROM orders),
+      |days AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS d FROM mm),
+      |known AS (SELECT d, CAST(10000 + EXTRACT(day FROM d) * 10 AS BIGINT) AS rate_cents
+      |          FROM (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d FROM orders)
+      |          WHERE EXTRACT(day FROM d) % 5 = 1)""".stripMargin
+
+  /** Oracle of the address-relations edge table over blocks 0..999: per
+    * (from, to) pair the tx count, the wei that passed the success gate
+    * and the activity span; creations have no pair. */
+  private val addressRelationsSql =
+    s"""WITH ${chainTxCte(0, 999)}
+       |SELECT from_address, to_address,
+       |       CAST(count(*) AS BIGINT) AS n_txs,
+       |       CAST(sum(CASE WHEN ok THEN v ELSE 0 END) AS VARCHAR) AS wei_total,
+       |       CAST(min(b) AS INTEGER) AS first_block,
+       |       CAST(max(b) AS INTEGER) AS last_block
+       |FROM tx WHERE to_address IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -253,9 +427,7 @@ object RefQueries {
     // formulas (contract creation -> null to_address, legacy tx -> null
     // max_fee_per_gas).
     Q("audit_null_counts", "A",
-      (s, d) => s.read.format("graft-chain")
-        .option("stream", "transaction").option("start", 0).option("end", 499)
-        .option("batchSize", 50).load()
+      (s, d) => readStream(s, chain50, "transaction", 0, 499)
         .agg(
           sum(when(col("to_address").isNull, 1L).otherwise(0L)).as("to_address"),
           sum(when(col("max_fee_per_gas").isNull, 1L).otherwise(0L)).as("max_fee_per_gas"),
@@ -264,15 +436,14 @@ object RefQueries {
           Array(col("to_address"), col("max_fee_per_gas")), "column_name", "n_null")
         .select(col("column_name"), col("n_null"), col("__total").as("n_total"))
         .orderBy("column_name"),
-      Some("""WITH bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i
-             |            FROM (SELECT unnest(range(0, 500)) AS b))
-             |SELECT 'max_fee_per_gas' AS column_name,
-             |       CAST(count(*) FILTER ((b + i) % 5 = 0) AS BIGINT) AS n_null,
-             |       count(*) AS n_total FROM bt
-             |UNION ALL
-             |SELECT 'to_address',
-             |       CAST(count(*) FILTER ((b + i) % 7 = 0) AS BIGINT), count(*) FROM bt
-             |ORDER BY column_name""".stripMargin)),
+      Some(s"""WITH ${chainTxCte(0, 499)}
+              |SELECT 'max_fee_per_gas' AS column_name,
+              |       CAST(count(*) FILTER (max_fee_per_gas IS NULL) AS BIGINT) AS n_null,
+              |       count(*) AS n_total FROM tx
+              |UNION ALL
+              |SELECT 'to_address',
+              |       CAST(count(*) FILTER (to_address IS NULL) AS BIGINT), count(*) FROM tx
+              |ORDER BY column_name""".stripMargin)),
 
     // Declarative data-quality suite (Deequ / Great-Expectations shape):
     // six constraints over lineitem evaluated in ONE aggregation pass —
@@ -611,9 +782,7 @@ object RefQueries {
     // computes the gaps the naive way (one lag over everything).
     Q("t6_ingest_gaps", "T6",
       (s, d) => {
-        val present = s.read.format("graft-chain")
-          .option("stream", "block").option("start", 0).option("end", 999)
-          .option("batchSize", 100).load()
+        val present = readStream(s, chain100, "block", 0, 999)
           .select(col("number"))
           .filter(pmod(md5Long(concat(lit("gap-"), col("number").cast("string"))),
             lit(13L)) =!= 0)
@@ -621,9 +790,10 @@ object RefQueries {
         Ingest.ingestGaps(present, "number", bucketSize = 100)
           .orderBy("gap_start")
       },
-      Some("""WITH present AS (SELECT r.range AS b FROM range(0, 1000) r
-             |  WHERE CAST('0x' || substring(md5('gap-' || CAST(r.range AS VARCHAR)), 1, 15) AS BIGINT) % 13 <> 0
-             |    AND r.range NOT BETWEEN 150 AND 349),
+      Some(s"""WITH ${chainBlocksCte(0, 999)},
+             |present AS (SELECT b FROM bl
+             |  WHERE CAST('0x' || substring(md5('gap-' || CAST(b AS VARCHAR)), 1, 15) AS BIGINT) % 13 <> 0
+             |    AND b NOT BETWEEN 150 AND 349),
              |g AS (SELECT b, lag(b) OVER (ORDER BY b) AS prev FROM present)
              |SELECT prev + 1 AS gap_start, b - 1 AS gap_end, b - prev - 1 AS n_missing
              |FROM g WHERE prev IS NOT NULL AND b > prev + 1
@@ -696,14 +866,13 @@ object RefQueries {
             col("timestamp"), col("transaction_count"))
           .orderBy("block_id")
       },
-      Some("""SELECT CAST(b // 1000 AS INTEGER) AS block_id_group, CAST(b AS INTEGER) AS block_id,
-             |       '0x' || md5('blk-' || CAST(b AS VARCHAR) || '-0')
-             |            || md5('blk-' || CAST(b AS VARCHAR) || '-0-b') AS block_hash,
-             |       CAST(262144 + b AS BIGINT) AS difficulty_l,
-             |       CAST(b % 30000000 AS INTEGER) AS gas_used,
-             |       CAST(1438269988 + b * 13 AS INTEGER) AS "timestamp",
-             |       CAST(b % 3 + 1 AS SMALLINT) AS transaction_count
-             |FROM (SELECT unnest(range(0, 300)) AS b) ORDER BY block_id""".stripMargin)),
+      Some(s"""WITH ${chainBlocksCte(0, 299)}
+              |SELECT CAST(b // 1000 AS INTEGER) AS block_id_group, CAST(b AS INTEGER) AS block_id,
+              |       hash AS block_hash, CAST(difficulty AS BIGINT) AS difficulty_l,
+              |       CAST(gas_used AS INTEGER) AS gas_used,
+              |       CAST(ts AS INTEGER) AS "timestamp",
+              |       CAST(tc AS SMALLINT) AS transaction_count
+              |FROM bl ORDER BY block_id""".stripMargin)),
 
     // K2 byte-compatibility: the oracle literals below ARE the reference's
     // pinned per-table CSV headers (BLOCK_HEADER eth_csv_export.py:33-54,
@@ -733,183 +902,72 @@ object RefQueries {
              |  ('transaction', 'nonce,transaction_index,from_address,to_address,value,gas,gas_price,input,block_timestamp,block_hash,max_fee_per_gas,max_priority_fee_per_gas,transaction_type,receipt_cumulative_gas_used,receipt_gas_used,receipt_contract_address,receipt_root,receipt_status,receipt_effective_gas_price,tx_hash,tx_hash_prefix,block_id'),
              |  ('trace', 'transaction_index,from_address,to_address,value,input,output,trace_type,call_type,reward_type,gas,gas_used,subtraces,trace_address,error,status,trace_id,trace_index,tx_hash,block_id,block_id_group'),
              |  ('log', 'block_id_group|block_id|block_hash|address|data|topics|topic0|tx_hash|log_index|transaction_index')
-             |) AS t(table_name, header) ORDER BY table_name""".stripMargin)),
-
+             |) AS t(table_name, header) ORDER BY table_name""".stripMargin))) ++
     // S1-S3 as a real custom source: the DataSourceV2 synthetic chain is
     // deterministic md5 arithmetic, so DuckDB can reconstruct the stream
     // exactly — a full oracle check of the connector's planning + reading.
-    Q("eth_source_blocks", "S1",
-      (s, d) => s.read.format("graft-chain")
-        .option("stream", "block").option("start", 0).option("end", 1999)
-        .option("batchSize", 50).load()
-        .select(col("number"), col("hash"), col("gas_used"), col("timestamp"),
+    //
+    // Each pair also runs over the JSON-RPC connector: the same stream read
+    // through the full wire path — batched requests (eth_getBlockByNumber,
+    // eth_getBlockReceipts, ...) to the in-process synthetic node,
+    // responses decoded by RpcCodec — against the same DuckDB
+    // reconstruction that pins graft-chain. The oracle therefore checks the
+    // ENTIRE codec (hex quantities, field mapping, batch re-keying) at value
+    // level. RpcSourceSpec additionally asserts rpc ≡ chain for all five
+    // streams and drives the HTTP transport against a loopback server.
+    sourcePair("block", "S1", 1999,
+      s"""WITH ${chainBlocksCte(0, 1999)}
+         |SELECT CAST(b AS INTEGER) AS number, hash,
+         |       CAST(gas_used AS INTEGER) AS gas_used,
+         |       CAST(ts AS INTEGER) AS "timestamp",
+         |       CAST(tc AS SMALLINT) AS transaction_count
+         |FROM bl ORDER BY number""".stripMargin) { df =>
+      df.select(col("number"), col("hash"), col("gas_used"), col("timestamp"),
           col("transaction_count"))
-        .orderBy("number"),
-      Some("""SELECT CAST(b AS INTEGER) AS number,
-             |       '0x' || md5('blk-' || CAST(b AS VARCHAR) || '-0')
-             |            || md5('blk-' || CAST(b AS VARCHAR) || '-0-b') AS hash,
-             |       CAST(b % 30000000 AS INTEGER) AS gas_used,
-             |       CAST(1438269988 + b * 13 AS INTEGER) AS "timestamp",
-             |       CAST(b % 3 + 1 AS SMALLINT) AS transaction_count
-             |FROM (SELECT unnest(range(0, 2000)) AS b) ORDER BY number""".stripMargin)),
-
-    // S1 over the JSON-RPC connector: the same block stream read through
-    // the full wire path — batched eth_getBlockByNumber requests to the
-    // in-process synthetic node, responses decoded by RpcCodec — against
-    // the same DuckDB reconstruction that pins graft-chain. The oracle
-    // therefore checks the ENTIRE codec (hex quantities, field mapping,
-    // batch re-keying) at value level. RpcSourceSpec additionally asserts
-    // rpc ≡ chain for all five streams and drives the HTTP transport
-    // against a loopback server.
-    Q("eth_rpc_source_blocks", "S1",
-      (s, d) => s.read.format("graft-rpc")
-        .option("stream", "block").option("start", 0).option("end", 1999)
-        .option("batchSize", 50).option("transport", "synthetic").load()
-        .select(col("number"), col("hash"), col("gas_used"), col("timestamp"),
-          col("transaction_count"))
-        .orderBy("number"),
-      Some("""SELECT CAST(b AS INTEGER) AS number,
-             |       '0x' || md5('blk-' || CAST(b AS VARCHAR) || '-0')
-             |            || md5('blk-' || CAST(b AS VARCHAR) || '-0-b') AS hash,
-             |       CAST(b % 30000000 AS INTEGER) AS gas_used,
-             |       CAST(1438269988 + b * 13 AS INTEGER) AS "timestamp",
-             |       CAST(b % 3 + 1 AS SMALLINT) AS transaction_count
-             |FROM (SELECT unnest(range(0, 2000)) AS b) ORDER BY number""".stripMargin)),
-
-    // S2 over the JSON-RPC connector: receipts via batched
-    // eth_getBlockReceipts — exercises the nullable decode paths (absent
-    // status pre-Byzantium, null contractAddress) under the value oracle.
-    Q("eth_rpc_source_receipts", "S2",
-      (s, d) => s.read.format("graft-rpc")
-        .option("stream", "receipt").option("start", 0).option("end", 499)
-        .option("batchSize", 50).option("transport", "synthetic").load()
-        .select(col("transaction_hash"), col("cumulative_gas_used"),
+        .orderBy("number")
+    } ++
+    // S2: receipts — the nullable decode paths (absent status
+    // pre-Byzantium, null contractAddress) under the value oracle.
+    sourcePair("receipt", "S2", 499,
+      s"""WITH ${chainTxCte(0, 499)}
+         |SELECT h AS transaction_hash,
+         |       CAST(cumulative_gas_used AS BIGINT) AS cumulative_gas_used,
+         |       CAST(gas_used AS BIGINT) AS gas_used, contract_address,
+         |       CAST(status AS BIGINT) AS status
+         |FROM tx ORDER BY transaction_hash""".stripMargin) { df =>
+      df.select(col("transaction_hash"), col("cumulative_gas_used"),
           col("gas_used"), col("contract_address"), col("status"))
-        .orderBy("transaction_hash"),
-      Some("""WITH bl AS (SELECT unnest(range(0, 500)) AS b),
-             |ti AS (SELECT b, unnest(range(b % 3 + 1)) AS i FROM bl)
-             |SELECT '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR))
-             |            || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR) || '-b') AS transaction_hash,
-             |       CAST(21000 * (i + 1) AS BIGINT) AS cumulative_gas_used,
-             |       CAST(21000 + i AS BIGINT) AS gas_used,
-             |       CASE WHEN (b + i) % 7 = 0
-             |            THEN '0x' || substring(md5('ca-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40)
-             |            ELSE NULL END AS contract_address,
-             |       CASE WHEN (b + i) % 11 = 0 THEN NULL ELSE CAST((b + i) % 2 AS BIGINT) END AS status
-             |FROM ti ORDER BY transaction_hash""".stripMargin)),
-
-    // S2 as a direct oracle: the receipt+log export streams, reconstructed
-    // record-for-record by DuckDB from the same deterministic formulas.
-    Q("eth_source_logs", "S2",
-      (s, d) => s.read.format("graft-chain")
-        .option("stream", "log").option("start", 0).option("end", 499)
-        .option("batchSize", 50).load()
-        .select(col("block_number"), col("log_index"), col("transaction_hash"),
+        .orderBy("transaction_hash")
+    } ++
+    // S2: the log export stream, reconstructed record-for-record by DuckDB
+    // from the same deterministic formulas — log topics arrays (incl.
+    // empty) on the RPC decode path.
+    sourcePair("log", "S2", 499,
+      s"""WITH ${chainLogsCte(0, 499)}
+         |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS log_index,
+         |       h AS transaction_hash, address,
+         |       CAST(to_json(topics) AS VARCHAR) AS topics_json, data
+         |FROM lg ORDER BY block_number, log_index""".stripMargin) { df =>
+      df.select(col("block_number"), col("log_index"), col("transaction_hash"),
           col("address"), to_json(col("topics")).as("topics_json"), col("data"))
-        .orderBy("block_number", "log_index"),
-      Some("""WITH bl AS (SELECT unnest(range(0, 500)) AS b),
-             |li AS (SELECT b, unnest(range((b % 3 + 1) * 2)) AS i FROM bl)
-             |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS log_index,
-             |       '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i // 2 AS VARCHAR))
-             |            || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i // 2 AS VARCHAR) || '-b') AS transaction_hash,
-             |       '0x' || substring(md5('addr-' || CAST((b + i) % 11 AS VARCHAR)), 1, 40) AS address,
-             |       CAST(to_json(CASE WHEN (b + i) % 5 = 0 THEN CAST([] AS VARCHAR[])
-             |            ELSE list_transform(range(0, (b + i) % 5),
-             |                   t -> '0x' || md5('topic-' || CAST(t AS VARCHAR) || '-' || CAST((b + i) % 3 AS VARCHAR))) END)
-             |            AS VARCHAR) AS topics_json,
-             |       '0x' || md5('data-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)) AS data
-             |FROM li ORDER BY block_number, log_index""".stripMargin)),
-
-    Q("eth_source_receipts", "S2",
-      (s, d) => s.read.format("graft-chain")
-        .option("stream", "receipt").option("start", 0).option("end", 499)
-        .option("batchSize", 50).load()
-        .select(col("transaction_hash"), col("cumulative_gas_used"),
-          col("gas_used"), col("contract_address"), col("status"))
-        .orderBy("transaction_hash"),
-      Some("""WITH bl AS (SELECT unnest(range(0, 500)) AS b),
-             |ti AS (SELECT b, unnest(range(b % 3 + 1)) AS i FROM bl)
-             |SELECT '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR))
-             |            || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR) || '-b') AS transaction_hash,
-             |       CAST(21000 * (i + 1) AS BIGINT) AS cumulative_gas_used,
-             |       CAST(21000 + i AS BIGINT) AS gas_used,
-             |       CASE WHEN (b + i) % 7 = 0
-             |            THEN '0x' || substring(md5('ca-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40)
-             |            ELSE NULL END AS contract_address,
-             |       CASE WHEN (b + i) % 11 = 0 THEN NULL ELSE CAST((b + i) % 2 AS BIGINT) END AS status
-             |FROM ti ORDER BY transaction_hash""".stripMargin)),
-
-    // S2/S3 over the JSON-RPC connector: the remaining decode paths —
-    // log topics arrays (incl. empty) and trace nulls (reward tx hash,
-    // null-vs-array traceAddress, error member) — under the same value
-    // oracles as the direct source.
-    Q("eth_rpc_source_logs", "S2",
-      (s, d) => s.read.format("graft-rpc")
-        .option("stream", "log").option("start", 0).option("end", 499)
-        .option("batchSize", 50).option("transport", "synthetic").load()
-        .select(col("block_number"), col("log_index"), col("transaction_hash"),
-          col("address"), to_json(col("topics")).as("topics_json"), col("data"))
-        .orderBy("block_number", "log_index"),
-      Some("""WITH bl AS (SELECT unnest(range(0, 500)) AS b),
-             |li AS (SELECT b, unnest(range((b % 3 + 1) * 2)) AS i FROM bl)
-             |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS log_index,
-             |       '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i // 2 AS VARCHAR))
-             |            || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i // 2 AS VARCHAR) || '-b') AS transaction_hash,
-             |       '0x' || substring(md5('addr-' || CAST((b + i) % 11 AS VARCHAR)), 1, 40) AS address,
-             |       CAST(to_json(CASE WHEN (b + i) % 5 = 0 THEN CAST([] AS VARCHAR[])
-             |            ELSE list_transform(range(0, (b + i) % 5),
-             |                   t -> '0x' || md5('topic-' || CAST(t AS VARCHAR) || '-' || CAST((b + i) % 3 AS VARCHAR))) END)
-             |            AS VARCHAR) AS topics_json,
-             |       '0x' || md5('data-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)) AS data
-             |FROM li ORDER BY block_number, log_index""".stripMargin)),
-
-    Q("eth_rpc_source_traces", "S3",
-      (s, d) => s.read.format("graft-rpc")
-        .option("stream", "trace").option("start", 0).option("end", 499)
-        .option("batchSize", 50).option("transport", "synthetic").load()
-        .select(col("block_number"), col("trace_index"), col("transaction_hash"),
+        .orderBy("block_number", "log_index")
+    } ++
+    // S3: the trace stream incl. the synthesized reward trace per block
+    // (null tx hash), failed traces, and null-vs-array trace_address — the
+    // remaining RPC decode paths (reward tx hash, traceAddress, error
+    // member).
+    sourcePair("trace", "S3", 499,
+      s"""WITH ${chainTracesCte(0, 499)}
+         |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS trace_index,
+         |       h AS transaction_hash, trace_type,
+         |       array_to_string(trace_address, ',') AS trace_address, error
+         |FROM tr ORDER BY block_number, trace_index""".stripMargin) { df =>
+      df.select(col("block_number"), col("trace_index"), col("transaction_hash"),
           col("trace_type"),
           array_join(transform(col("trace_address"), _.cast("string")), ",").as("trace_address"),
           col("error"))
-        .orderBy("block_number", "trace_index"),
-      Some("""WITH bl AS (SELECT unnest(range(0, 500)) AS b),
-             |ti AS (SELECT b, unnest(range(b % 3 + 2)) AS i FROM bl)
-             |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS trace_index,
-             |       CASE WHEN i = b % 3 + 1 THEN NULL
-             |            ELSE '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR))
-             |                      || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR) || '-b') END AS transaction_hash,
-             |       CASE WHEN i = b % 3 + 1 THEN 'reward' ELSE 'call' END AS trace_type,
-             |       CASE WHEN i = b % 3 + 1 OR i = 0 THEN NULL
-             |            ELSE array_to_string(list_transform(range(0, i % 3 + 1),
-             |                   x -> CAST((x * 2) % 3 AS VARCHAR)), ',') END AS trace_address,
-             |       CASE WHEN i <> b % 3 + 1 AND (b + i) % 13 = 0 THEN 'out of gas' ELSE NULL END AS error
-             |FROM ti ORDER BY block_number, trace_index""".stripMargin)),
-
-    // S3 as a direct oracle: the trace stream incl. the synthesized reward
-    // trace per block (null tx hash), failed traces, and null-vs-array
-    // trace_address.
-    Q("eth_source_traces", "S3",
-      (s, d) => s.read.format("graft-chain")
-        .option("stream", "trace").option("start", 0).option("end", 499)
-        .option("batchSize", 50).load()
-        .select(col("block_number"), col("trace_index"), col("transaction_hash"),
-          col("trace_type"),
-          array_join(transform(col("trace_address"), _.cast("string")), ",").as("trace_address"),
-          col("error"))
-        .orderBy("block_number", "trace_index"),
-      Some("""WITH bl AS (SELECT unnest(range(0, 500)) AS b),
-             |ti AS (SELECT b, unnest(range(b % 3 + 2)) AS i FROM bl)
-             |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS trace_index,
-             |       CASE WHEN i = b % 3 + 1 THEN NULL
-             |            ELSE '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR))
-             |                      || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR) || '-b') END AS transaction_hash,
-             |       CASE WHEN i = b % 3 + 1 THEN 'reward' ELSE 'call' END AS trace_type,
-             |       CASE WHEN i = b % 3 + 1 OR i = 0 THEN NULL
-             |            ELSE array_to_string(list_transform(range(0, i % 3 + 1),
-             |                   x -> CAST((x * 2) % 3 AS VARCHAR)), ',') END AS trace_address,
-             |       CASE WHEN i <> b % 3 + 1 AND (b + i) % 13 = 0 THEN 'out of gas' ELSE NULL END AS error
-             |FROM ti ORDER BY block_number, trace_index""".stripMargin)),
-
+        .orderBy("block_number", "trace_index")
+    } ++ Seq(
     // Call-tree rollup over a constructed multi-trace fixture (the
     // synthetic chain emits one trace per tx, which would leave the
     // parent-link join untested): per-tx root + a depth chain + a branch
@@ -980,21 +1038,14 @@ object RefQueries {
             col("receipt_status"), col("block_timestamp"))
           .orderBy("block_id", "transaction_index")
       },
-      Some("""WITH bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i
-             |            FROM (SELECT unnest(range(0, 500)) AS b)),
-             |tx AS (SELECT b, i,
-             |         '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR))
-             |              || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR) || '-b') AS h
-             |       FROM bt)
-             |SELECT CAST(b // 1000 AS INTEGER) AS block_id_group, CAST(b AS INTEGER) AS block_id,
-             |       CAST(i AS SMALLINT) AS transaction_index,
-             |       substring(h, 3, 5) AS tx_hash_prefix, h AS tx_hash,
-             |       CASE WHEN (b + i) % 7 = 0 THEN NULL
-             |            ELSE '0x' || substring(md5('to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) END AS to_address,
-             |       CAST(21000 + i AS BIGINT) AS receipt_gas_used,
-             |       CASE WHEN (b + i) % 11 = 0 THEN NULL ELSE CAST((b + i) % 2 AS BIGINT) END AS receipt_status,
-             |       CAST(1438269988 + b * 13 AS INTEGER) AS block_timestamp
-             |FROM tx ORDER BY block_id, transaction_index""".stripMargin)),
+      Some(s"""WITH ${chainTxCte(0, 499)}
+              |SELECT CAST(b // 1000 AS INTEGER) AS block_id_group, CAST(b AS INTEGER) AS block_id,
+              |       CAST(i AS SMALLINT) AS transaction_index,
+              |       substring(h, 3, 5) AS tx_hash_prefix, h AS tx_hash, to_address,
+              |       CAST(gas_used AS BIGINT) AS receipt_gas_used,
+              |       CAST(status AS BIGINT) AS receipt_status,
+              |       CAST(1438269988 + b * 13 AS INTEGER) AS block_timestamp
+              |FROM tx ORDER BY block_id, transaction_index""".stripMargin)),
 
     // The STANDING ingest-path bench row (VERDICT r14 Next #6): the same
     // reference-parity pipeline at 10x the range (5,000 blocks, ~10k txs,
@@ -1017,16 +1068,14 @@ object RefQueries {
             max(col("block_id")).cast("long").as("max_block"))
           .orderBy("block_id_group")
       },
-      Some("""WITH bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i
-             |            FROM (SELECT unnest(range(0, 5000)) AS b))
-             |SELECT CAST(b // 1000 AS INTEGER) AS block_id_group,
-             |  CAST(count(*) AS BIGINT) AS n_txs,
-             |  CAST(sum(21000 + i) AS BIGINT) AS sum_gas,
-             |  CAST(sum(CASE WHEN (b + i) % 11 <> 0 AND (b + i) % 2 = 1
-             |       THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
-             |  CAST(min(b) AS BIGINT) AS min_block,
-             |  CAST(max(b) AS BIGINT) AS max_block
-             |FROM bt GROUP BY 1 ORDER BY 1""".stripMargin)),
+      Some(s"""WITH ${chainTxCte(0, 4999)}
+              |SELECT CAST(b // 1000 AS INTEGER) AS block_id_group,
+              |  CAST(count(*) AS BIGINT) AS n_txs,
+              |  CAST(sum(gas_used) AS BIGINT) AS sum_gas,
+              |  CAST(sum(CASE WHEN status = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
+              |  CAST(min(b) AS BIGINT) AS min_block,
+              |  CAST(max(b) AS BIGINT) AS max_block
+              |FROM tx GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Token-transfer decode (the ethereum-etl `extract_token_transfers`
     // shape, ref scripts/eth_cassandra_streaming.py log handling): filter
@@ -1040,9 +1089,7 @@ object RefQueries {
         val sig = "0x" + java.security.MessageDigest.getInstance("MD5")
           .digest("topic-0-0".getBytes("UTF-8"))
           .map("%02x".format(_)).mkString
-        s.read.format("graft-chain")
-          .option("stream", "log").option("start", 0).option("end", 999)
-          .option("batchSize", 100).load()
+        readStream(s, chain100, "log", 0, 999)
           .filter(size(col("topics")) >= 3
             && try_element_at(col("topics"), lit(1)) === lit(sig))
           .select(col("block_number"), col("log_index"),
@@ -1054,17 +1101,14 @@ object RefQueries {
             conv(substring(col("data"), 3, 15), 16, 10).cast("long").as("value_wei"))
           .orderBy("block_number", "log_index")
       },
-      Some("""WITH bl AS (SELECT unnest(range(0, 1000)) AS b),
-             |li AS (SELECT b, unnest(range((b % 3 + 1) * 2)) AS i FROM bl),
-             |tt AS (SELECT b, i FROM li WHERE (b + i) % 5 >= 3 AND (b + i) % 3 = 0)
-             |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS log_index,
-             |       '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i // 2 AS VARCHAR))
-             |            || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i // 2 AS VARCHAR) || '-b') AS transaction_hash,
-             |       '0x' || substring(md5('addr-' || CAST((b + i) % 11 AS VARCHAR)), 1, 40) AS token_address,
-             |       '0x' || substring(md5('topic-1-0'), 13, 20) AS from_address,
-             |       '0x' || substring(md5('topic-2-0'), 13, 20) AS to_address,
-             |       CAST(('0x' || substring(md5('data-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 15)) AS BIGINT) AS value_wei
-             |FROM tt ORDER BY block_number, log_index""".stripMargin)),
+      Some(s"""WITH ${chainLogsCte(0, 999)},
+              |tt AS (SELECT * FROM lg WHERE (b + i) % 5 >= 3 AND (b + i) % 3 = 0)
+              |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS log_index,
+              |       h AS transaction_hash, address AS token_address,
+              |       '0x' || substring(md5('topic-1-0'), 13, 20) AS from_address,
+              |       '0x' || substring(md5('topic-2-0'), 13, 20) AS to_address,
+              |       CAST('0x' || substring(data, 3, 15) AS BIGINT) AS value_wei
+              |FROM tt ORDER BY block_number, log_index""".stripMargin)),
 
     // Address statistics (the graphsense downstream "address" table shape:
     // per-address degree, flow, and activity span). One explode of each tx
@@ -1073,9 +1117,7 @@ object RefQueries {
     // decimal(38,0) path and compare as strings (HUGEINT on the DuckDB
     // side).
     Q("eth_address_stats", "A",
-      (s, d) => s.read.format("graft-chain")
-        .option("stream", "transaction").option("start", 0).option("end", 999)
-        .option("batchSize", 100).load()
+      (s, d) => readStream(s, chain100, "transaction", 0, 999)
         .select(col("block_number"), col("value"), explode(array(
           struct(col("from_address").as("address"), lit(1).as("is_out"),
             col("to_address").as("peer")),
@@ -1093,14 +1135,7 @@ object RefQueries {
           min(col("block_number")).as("first_block"),
           max(col("block_number")).as("last_block"))
         .orderBy("address"),
-      Some("""WITH bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i
-             |            FROM (SELECT unnest(range(0, 1000)) AS b)),
-             |tx AS (SELECT b, i,
-             |         '0x' || substring(md5('from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS from_address,
-             |         CASE WHEN (b + i) % 7 = 0 THEN NULL
-             |              ELSE '0x' || substring(md5('to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) END AS to_address,
-             |         CAST('100000000000000000000' AS HUGEINT) + b * 1000 + i AS v
-             |       FROM bt),
+      Some(s"""WITH ${chainTxCte(0, 999)},
              |e AS (SELECT b, v, from_address AS address, 1 AS is_out, to_address AS peer FROM tx
              |      UNION ALL
              |      SELECT b, v, to_address, 0, from_address FROM tx WHERE to_address IS NOT NULL)
@@ -1123,9 +1158,7 @@ object RefQueries {
     // join — the join inputs are |blocks| rows, never raw fan-out rows.
     Q("eth_block_stats", "A",
       (s, d) => {
-        def stream(name: String) = s.read.format("graft-chain")
-          .option("stream", name).option("start", 0).option("end", 499)
-          .option("batchSize", 100).load()
+        def stream(name: String) = readStream(s, chain100, name, 0, 499)
         val blocks = stream("block").select(col("number"), col("gas_used"))
         val txs = stream("transaction").groupBy(col("block_number"))
           .agg(count(lit(1)).as("n_txs"), sum(col("value")).as("__wei"))
@@ -1147,20 +1180,17 @@ object RefQueries {
             coalesce(col("n_failed"), lit(0L)).as("n_failed"))
           .orderBy("block_number")
       },
-      Some("""WITH bl AS (SELECT unnest(range(0, 500)) AS b),
-             |bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i FROM bl),
-             |txa AS (SELECT b, count(*) AS n_txs,
-             |          sum(CAST('100000000000000000000' AS HUGEINT) + b * 1000 + i) AS wei
-             |        FROM bt GROUP BY 1),
-             |lg AS (SELECT b, unnest(range((b % 3 + 1) * 2)) AS i FROM bl),
+      Some(s"""WITH ${chainBlocksCte(0, 499)},
+             |${chainTxCte(0, 499)},
+             |${chainLogsCte(0, 499)},
+             |${chainTracesCte(0, 499)},
+             |txa AS (SELECT b, count(*) AS n_txs, sum(v) AS wei FROM tx GROUP BY 1),
              |lga AS (SELECT b, count(*) AS n_logs FROM lg GROUP BY 1),
-             |tr AS (SELECT b, unnest(range(b % 3 + 2)) AS i FROM bl),
              |tra AS (SELECT b, count(*) AS n_traces,
-             |          sum(CASE WHEN i <> b % 3 + 1 AND (b + i) % 13 = 0
-             |                   THEN 1 ELSE 0 END) AS n_failed
+             |          sum(CASE WHEN error IS NOT NULL THEN 1 ELSE 0 END) AS n_failed
              |        FROM tr GROUP BY 1)
              |SELECT CAST(bl.b AS INTEGER) AS block_number,
-             |       CAST(bl.b % 30000000 AS INTEGER) AS gas_used,
+             |       CAST(bl.gas_used AS INTEGER) AS gas_used,
              |       CAST(coalesce(n_txs, 0) AS BIGINT) AS n_txs,
              |       CAST(coalesce(wei, 0) AS VARCHAR) AS wei_total,
              |       CAST(coalesce(n_logs, 0) AS BIGINT) AS n_logs,
@@ -1176,9 +1206,7 @@ object RefQueries {
     // the header stream (5 synthetic miners), with decimal difficulty
     // sums riding the exact decimal(38,0) path.
     Q("eth_miner_stats", "A",
-      (s, d) => s.read.format("graft-chain")
-        .option("stream", "block").option("start", 0).option("end", 1999)
-        .option("batchSize", 100).load()
+      (s, d) => readStream(s, chain100, "block", 0, 1999)
         .groupBy(col("miner"))
         .agg(count(lit(1)).as("n_blocks"),
           sum(col("gas_used").cast("long")).as("gas_total"),
@@ -1187,18 +1215,14 @@ object RefQueries {
           min(col("number")).as("first_block"),
           max(col("number")).as("last_block"))
         .orderBy("miner"),
-      Some("""WITH bl AS (SELECT unnest(range(0, 2000)) AS b),
-             |h AS (SELECT b, '0x' || substring(md5('miner-' || CAST(b % 5 AS VARCHAR)), 1, 40) AS miner,
-             |        CAST(262144 AS HUGEINT) + b AS difficulty,
-             |        b % 30000000 AS gas_used, b % 3 + 1 AS tc
-             |      FROM bl)
+      Some(s"""WITH ${chainBlocksCte(0, 1999)}
              |SELECT miner, CAST(count(*) AS BIGINT) AS n_blocks,
              |       CAST(sum(gas_used) AS BIGINT) AS gas_total,
              |       CAST(sum(difficulty) AS VARCHAR) AS difficulty_total,
              |       CAST(sum(tc) AS BIGINT) AS n_txs,
              |       CAST(min(b) AS INTEGER) AS first_block,
              |       CAST(max(b) AS INTEGER) AS last_block
-             |FROM h GROUP BY 1 ORDER BY 1""".stripMargin)),
+             |FROM bl GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Balance deltas (the graphsense downstream "balance" table, computed
     // here from the tx+receipt streams): per address, wei received (value
@@ -1213,12 +1237,8 @@ object RefQueries {
     // strings against DuckDB HUGEINT.
     Q("eth_balance_deltas", "A",
       (s, d) => {
-        val tx = s.read.format("graft-chain")
-          .option("stream", "transaction").option("start", 0).option("end", 999)
-          .option("batchSize", 100).load()
-        val rc = s.read.format("graft-chain")
-          .option("stream", "receipt").option("start", 0).option("end", 999)
-          .option("batchSize", 100).load()
+        val tx = readStream(s, chain100, "transaction", 0, 999)
+        val rc = readStream(s, chain100, "receipt", 0, 999)
         val zero = lit(0).cast("decimal(38,0)")
         tx.join(rc, tx("hash") === rc("transaction_hash"))
           .select(col("from_address"), col("to_address"), col("value"),
@@ -1249,19 +1269,12 @@ object RefQueries {
             sum(col("n_out")).as("n_tx_out"), sum(col("n_in")).as("n_tx_in"))
           .orderBy("address")
       },
-      Some("""WITH bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i
-             |            FROM (SELECT unnest(range(0, 1000)) AS b)),
-             |tx AS (SELECT b, i,
-             |         '0x' || substring(md5('from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS from_address,
-             |         CASE WHEN (b + i) % 7 = 0 THEN NULL
-             |              ELSE '0x' || substring(md5('to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) END AS to_address,
-             |         CAST('100000000000000000000' AS HUGEINT) + b * 1000 + i AS v,
-             |         CAST(21000 + i AS HUGEINT) * (CASE WHEN (b + i) % 5 = 0 THEN 0 ELSE 30000000000 + b END) AS fee,
-             |         ((b + i) % 11 = 0) OR ((b + i) % 2 = 1) AS ok
-             |       FROM bt),
+      Some(s"""WITH ${chainTxCte(0, 999)},
              |c AS (SELECT from_address AS address,
              |             CASE WHEN ok THEN v ELSE 0 END AS wout,
-             |             CAST(0 AS HUGEINT) AS win, fee, 1 AS n_out, 0 AS n_in FROM tx
+             |             CAST(0 AS HUGEINT) AS win,
+             |             CAST(gas_used AS HUGEINT) * coalesce(max_fee_per_gas, 0) AS fee,
+             |             1 AS n_out, 0 AS n_in FROM tx
              |      UNION ALL
              |      SELECT to_address, CAST(0 AS HUGEINT),
              |             CASE WHEN ok THEN v ELSE 0 END,
@@ -1283,12 +1296,8 @@ object RefQueries {
     // tracing read, and it shuffles once on the pair.
     Q("eth_address_relations", "J1",
       (s, d) => {
-        val tx = s.read.format("graft-chain")
-          .option("stream", "transaction").option("start", 0).option("end", 999)
-          .option("batchSize", 100).load()
-        val rc = s.read.format("graft-chain")
-          .option("stream", "receipt").option("start", 0).option("end", 999)
-          .option("batchSize", 100).load()
+        val tx = readStream(s, chain100, "transaction", 0, 999)
+        val rc = readStream(s, chain100, "receipt", 0, 999)
         tx.join(rc, tx("hash") === rc("transaction_hash"))
           .filter(col("to_address").isNotNull)
           .select(col("from_address"), col("to_address"), col("block_number"),
@@ -1301,21 +1310,7 @@ object RefQueries {
             max(col("block_number")).as("last_block"))
           .orderBy("from_address", "to_address")
       },
-      Some("""WITH bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i
-             |            FROM (SELECT unnest(range(0, 1000)) AS b)),
-             |tx AS (SELECT b, i,
-             |         '0x' || substring(md5('from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS from_address,
-             |         '0x' || substring(md5('to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS to_address,
-             |         CASE WHEN ((b + i) % 11 = 0) OR ((b + i) % 2 = 1)
-             |              THEN CAST('100000000000000000000' AS HUGEINT) + b * 1000 + i
-             |              ELSE 0 END AS ok_value
-             |       FROM bt WHERE (b + i) % 7 <> 0)
-             |SELECT from_address, to_address,
-             |       CAST(count(*) AS BIGINT) AS n_txs,
-             |       CAST(sum(ok_value) AS VARCHAR) AS wei_total,
-             |       CAST(min(b) AS INTEGER) AS first_block,
-             |       CAST(max(b) AS INTEGER) AS last_block
-             |FROM tx GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+      Some(addressRelationsSql)),
 
     // Incremental relations maintenance (T4-style "data is the
     // checkpoint" for a DERIVED table): ingest the relations edge table
@@ -1334,21 +1329,7 @@ object RefQueries {
             col("first_block"), col("last_block"))
           .orderBy("from_address", "to_address")
       },
-      Some("""WITH bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i
-             |            FROM (SELECT unnest(range(0, 1000)) AS b)),
-             |tx AS (SELECT b, i,
-             |         '0x' || substring(md5('from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS from_address,
-             |         '0x' || substring(md5('to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS to_address,
-             |         CASE WHEN ((b + i) % 11 = 0) OR ((b + i) % 2 = 1)
-             |              THEN CAST('100000000000000000000' AS HUGEINT) + b * 1000 + i
-             |              ELSE 0 END AS ok_value
-             |       FROM bt WHERE (b + i) % 7 <> 0)
-             |SELECT from_address, to_address,
-             |       CAST(count(*) AS BIGINT) AS n_txs,
-             |       CAST(sum(ok_value) AS VARCHAR) AS wei_total,
-             |       CAST(min(b) AS INTEGER) AS first_block,
-             |       CAST(max(b) AS INTEGER) AS last_block
-             |FROM tx GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+      Some(addressRelationsSql)),
 
     // Dense address-ID assignment (the graphsense address dictionary:
     // every address gets a compact BIGINT id in FIRST-APPEARANCE order —
@@ -1362,9 +1343,7 @@ object RefQueries {
     // distributed).
     Q("eth_address_ids", "P4",
       (s, d) => {
-        val tx = s.read.format("graft-chain")
-          .option("stream", "transaction").option("start", 0).option("end", 999)
-          .option("batchSize", 100).load()
+        val tx = readStream(s, chain100, "transaction", 0, 999)
         val firsts = tx.select(col("block_number"), col("transaction_index"),
             explode(array(
               struct(col("from_address").as("address"), lit(0).as("side")),
@@ -1383,13 +1362,10 @@ object RefQueries {
             col("first_tx_index"))
           .orderBy("address_id")
       },
-      Some("""WITH bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i
-             |            FROM (SELECT unnest(range(0, 1000)) AS b)),
-             |app AS (SELECT '0x' || substring(md5('from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS address,
-             |               b, i, 0 AS side FROM bt
+      Some(s"""WITH ${chainTxCte(0, 999)},
+             |app AS (SELECT from_address AS address, b, i, 0 AS side FROM tx
              |        UNION ALL
-             |        SELECT '0x' || substring(md5('to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40),
-             |               b, i, 1 FROM bt WHERE (b + i) % 7 <> 0),
+             |        SELECT to_address, b, i, 1 FROM tx WHERE to_address IS NOT NULL),
              |f AS (SELECT address, min(struct_pack(b := b, i := i, side := side)) AS fk
              |      FROM app GROUP BY 1)
              |SELECT CAST(row_number() OVER (ORDER BY fk.b, fk.i, fk.side, address) AS BIGINT) AS address_id,
@@ -1410,12 +1386,8 @@ object RefQueries {
     // tables the exchanges vanish (j_bucketed_colocated's layout).
     Q("eth_contract_creations", "J1",
       (s, d) => {
-        val tx = s.read.format("graft-chain")
-          .option("stream", "transaction").option("start", 0).option("end", 999)
-          .option("batchSize", 100).load()
-        val rc = s.read.format("graft-chain")
-          .option("stream", "receipt").option("start", 0).option("end", 999)
-          .option("batchSize", 100).load()
+        val tx = readStream(s, chain100, "transaction", 0, 999)
+        val rc = readStream(s, chain100, "receipt", 0, 999)
         tx.filter(col("to_address").isNull)
           .join(rc, tx("hash") === rc("transaction_hash"))
           .filter(coalesce(rc("status") =!= 0, lit(true)))
@@ -1426,17 +1398,12 @@ object RefQueries {
             col("contract_address"), col("gas_used"))
           .orderBy("block_number", "transaction_index")
       },
-      Some("""WITH bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i
-             |            FROM (SELECT unnest(range(0, 1000)) AS b)),
-             |cr AS (SELECT b, i FROM bt
-             |       WHERE (b + i) % 7 = 0 AND ((b + i) % 11 = 0 OR (b + i) % 2 = 1))
-             |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS transaction_index,
-             |       '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR))
-             |            || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR) || '-b') AS transaction_hash,
-             |       '0x' || substring(md5('from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS creator_address,
-             |       '0x' || substring(md5('ca-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS contract_address,
-             |       CAST(21000 + i AS BIGINT) AS gas_used
-             |FROM cr ORDER BY block_number, transaction_index""".stripMargin)),
+      Some(s"""WITH ${chainTxCte(0, 999)}
+              |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS transaction_index,
+              |       h AS transaction_hash, from_address AS creator_address, contract_address,
+              |       CAST(gas_used AS BIGINT) AS gas_used
+              |FROM tx WHERE to_address IS NULL AND ok
+              |ORDER BY block_number, transaction_index""".stripMargin)),
 
     // Address-transactions edge list (the graphsense "address_transactions"
     // table: one row per (address, tx, direction), the index that answers
@@ -1446,9 +1413,7 @@ object RefQueries {
     // 100 TB the sink is bucketed by address so the per-address read is
     // partition-pruned.
     Q("eth_address_txs", "A",
-      (s, d) => s.read.format("graft-chain")
-        .option("stream", "transaction").option("start", 0).option("end", 499)
-        .option("batchSize", 100).load()
+      (s, d) => readStream(s, chain100, "transaction", 0, 499)
         .select(col("hash"), col("block_number"),
           col("transaction_index").cast("int").as("tx_index"), col("value"),
           explode(array(
@@ -1461,16 +1426,7 @@ object RefQueries {
           col("value").cast("string").as("value_wei"))
         .filter(col("address").isNotNull)
         .orderBy("address", "block_number", "tx_index", "is_outgoing"),
-      Some("""WITH bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i
-             |            FROM (SELECT unnest(range(0, 500)) AS b)),
-             |tx AS (SELECT b, i,
-             |         '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR))
-             |              || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR) || '-b') AS h,
-             |         '0x' || substring(md5('from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS from_address,
-             |         CASE WHEN (b + i) % 7 = 0 THEN NULL
-             |              ELSE '0x' || substring(md5('to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) END AS to_address,
-             |         CAST('100000000000000000000' AS HUGEINT) + b * 1000 + i AS v
-             |       FROM bt),
+      Some(s"""WITH ${chainTxCte(0, 499)},
              |e AS (SELECT from_address AS address, b, i, 1 AS is_outgoing, h, v FROM tx
              |      UNION ALL
              |      SELECT to_address, b, i, 0, h, v FROM tx WHERE to_address IS NOT NULL)
@@ -1486,9 +1442,7 @@ object RefQueries {
     // independent linear scans at any scale.
     Q("eth_summary_stats", "A",
       (s, d) => {
-        def stream(name: String) = s.read.format("graft-chain")
-          .option("stream", name).option("start", 0).option("end", 499)
-          .option("batchSize", 100).load()
+        def stream(name: String) = readStream(s, chain100, name, 0, 499)
         val blocks = stream("block")
           .agg(count(lit(1)).as("no_blocks"), max(col("number")).as("tip_block"),
             max(col("timestamp")).as("tip_timestamp"))
@@ -1503,18 +1457,18 @@ object RefQueries {
             col("no_traces"), col("tip_block"), col("tip_timestamp"),
             col("wei_total"))
       },
-      Some("""WITH bl AS (SELECT unnest(range(0, 500)) AS b),
-             |bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i FROM bl),
-             |lg AS (SELECT b, unnest(range((b % 3 + 1) * 2)) AS i FROM bl),
-             |tr AS (SELECT b, unnest(range(b % 3 + 2)) AS i FROM bl)
-             |SELECT 'eth' AS id,
-             |       (SELECT count(*) FROM bl) AS no_blocks,
-             |       (SELECT count(*) FROM bt) AS no_txs,
-             |       (SELECT count(*) FROM lg) AS no_logs,
-             |       (SELECT count(*) FROM tr) AS no_traces,
-             |       CAST(499 AS INTEGER) AS tip_block,
-             |       CAST(1438269988 + 499 * 13 AS INTEGER) AS tip_timestamp,
-             |       (SELECT CAST(sum(CAST('100000000000000000000' AS HUGEINT) + b * 1000 + i) AS VARCHAR) FROM bt) AS wei_total""".stripMargin)),
+      Some(s"""WITH ${chainBlocksCte(0, 499)},
+              |${chainTxCte(0, 499)},
+              |${chainLogsCte(0, 499)},
+              |${chainTracesCte(0, 499)}
+              |SELECT 'eth' AS id,
+              |       (SELECT count(*) FROM bl) AS no_blocks,
+              |       (SELECT count(*) FROM tx) AS no_txs,
+              |       (SELECT count(*) FROM lg) AS no_logs,
+              |       (SELECT count(*) FROM tr) AS no_traces,
+              |       CAST(499 AS INTEGER) AS tip_block,
+              |       CAST(1438269988 + 499 * 13 AS INTEGER) AS tip_timestamp,
+              |       (SELECT CAST(sum(v) AS VARCHAR) FROM tx) AS wei_total""".stripMargin)),
 
     // Q5c: exchange-rate forward-fill — the reference ingests one rate row
     // per day that HAS one (scripts/schema.cql:79-82) and downstream
@@ -1529,27 +1483,13 @@ object RefQueries {
     Q("q5_rate_ffill", "Q5",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val days = Tables(s, d, "orders")
-          .agg(min(to_date(col("o_orderdate"))).as("lo"),
-            max(to_date(col("o_orderdate"))).as("hi"))
-          .select(explode(sequence(col("lo"), col("hi"))).as("d"))
-        val known = Tables(s, d, "orders")
-          .select(to_date(col("o_orderdate")).as("d")).distinct()
-          .filter(dayofmonth(col("d")) % 5 === 1)
-          .withColumn("rate_cents",
-            (lit(10000) + dayofmonth(col("d")) * 10).cast("long"))
-        days.join(known, Seq("d"), "left")
+        rateDays(s, d)
           .withColumn("rate_ffill", last(col("rate_cents"), ignoreNulls = true)
             .over(Window.orderBy(col("d"))
               .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .orderBy("d")
       },
-      Some("""WITH mm AS (SELECT min(CAST(o_orderdate AS DATE)) AS lo,
-             |                   max(CAST(o_orderdate AS DATE)) AS hi FROM orders),
-             |days AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS d FROM mm),
-             |known AS (SELECT d, CAST(10000 + EXTRACT(day FROM d) * 10 AS BIGINT) AS rate_cents
-             |          FROM (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d FROM orders)
-             |          WHERE EXTRACT(day FROM d) % 5 = 1)
+      Some(s"""WITH $rateDaysCte
              |SELECT d, rate_cents,
              |       last_value(rate_cents IGNORE NULLS) OVER
              |         (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rate_ffill
@@ -1564,19 +1504,10 @@ object RefQueries {
     Q("q5_rate_interp", "Q5",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val days = Tables(s, d, "orders")
-          .agg(min(to_date(col("o_orderdate"))).as("lo"),
-            max(to_date(col("o_orderdate"))).as("hi"))
-          .select(explode(sequence(col("lo"), col("hi"))).as("d"))
-        val known = Tables(s, d, "orders")
-          .select(to_date(col("o_orderdate")).as("d")).distinct()
-          .filter(dayofmonth(col("d")) % 5 === 1)
-          .withColumn("rate_cents",
-            (lit(10000) + dayofmonth(col("d")) * 10).cast("long"))
         val byD = Window.orderBy(col("d"))
         val back = byD.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val fwd = byD.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        days.join(known, Seq("d"), "left")
+        rateDays(s, d)
           .withColumn("d0", last(when(col("rate_cents").isNotNull, col("d")),
             ignoreNulls = true).over(back))
           .withColumn("v0", last(col("rate_cents"), ignoreNulls = true).over(back))
@@ -1594,12 +1525,7 @@ object RefQueries {
           .select(col("d"), col("rate_cents"), col("rate_interp"))
           .orderBy("d")
       },
-      Some("""WITH mm AS (SELECT min(CAST(o_orderdate AS DATE)) AS lo,
-             |                   max(CAST(o_orderdate AS DATE)) AS hi FROM orders),
-             |days AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS d FROM mm),
-             |known AS (SELECT d, CAST(10000 + EXTRACT(day FROM d) * 10 AS BIGINT) AS rate_cents
-             |          FROM (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d FROM orders)
-             |          WHERE EXTRACT(day FROM d) % 5 = 1),
+      Some(s"""WITH $rateDaysCte,
              |j AS (SELECT days.d, known.rate_cents FROM days LEFT JOIN known USING (d)),
              |w AS (SELECT d, rate_cents,
              |        last_value(CASE WHEN rate_cents IS NOT NULL THEN d END IGNORE NULLS)
@@ -1637,9 +1563,7 @@ object RefQueries {
     Q("eth_relations_usd", "Q5",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        def stream(name: String) = s.read.format("graft-chain")
-          .option("stream", name).option("start", 0).option("end", 999)
-          .option("batchSize", 100).load()
+        def stream(name: String) = readStream(s, chain100, name, 0, 999)
         val blocks = stream("block")
           .select(col("number").as("block_id"), col("timestamp"))
         val periods = blocks.select(expr("timestamp div 600").as("p"))
@@ -1670,8 +1594,8 @@ object RefQueries {
             max(col("block_id")).as("last_block"))
           .orderBy("from_address", "to_address")
       },
-      Some("""WITH bl AS (SELECT unnest(range(0, 1000)) AS b),
-             |hb AS (SELECT b, (1438269988 + b * 13) // 600 AS p FROM bl),
+      Some(s"""WITH ${chainBlocksCte(0, 999)},
+             |hb AS (SELECT b, ts // 600 AS p FROM bl),
              |spine AS (SELECT unnest(range((SELECT min(p) FROM hb),
              |                              (SELECT max(p) FROM hb) + 1)) AS p),
              |kr AS (SELECT p, CAST(10000 + p % 100 AS BIGINT) AS rate_cents
@@ -1679,16 +1603,10 @@ object RefQueries {
              |rf AS (SELECT spine.p, last_value(rate_cents IGNORE NULLS) OVER
              |         (ORDER BY spine.p ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rate_cents
              |       FROM spine LEFT JOIN kr USING (p)),
-             |bt AS (SELECT b, unnest(range(b % 3 + 1)) AS i FROM bl),
-             |tx AS (SELECT b, i,
-             |         '0x' || substring(md5('from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS from_address,
-             |         '0x' || substring(md5('to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS to_address,
-             |         CAST('100000000000000000000' AS HUGEINT) + b * 1000 + i AS v,
-             |         ((b + i) % 11 = 0) OR ((b + i) % 2 = 1) AS ok,
-             |         (1438269988 + b * 13) // 600 AS p
-             |       FROM bt WHERE (b + i) % 7 <> 0),
-             |j AS (SELECT tx.*, rf.rate_cents FROM tx
-             |      JOIN rf USING (p) WHERE rf.rate_cents IS NOT NULL)
+             |${chainTxCte(0, 999)},
+             |j AS (SELECT tx.b, from_address, to_address, v, ok, rf.rate_cents
+             |      FROM tx JOIN hb USING (b) JOIN rf USING (p)
+             |      WHERE to_address IS NOT NULL AND rf.rate_cents IS NOT NULL)
              |SELECT from_address, to_address, CAST(count(*) AS BIGINT) AS n_txs,
              |       CAST(sum(CASE WHEN ok THEN CAST(v // 1000000000000 AS BIGINT) * rate_cents
              |                     ELSE 0 END) AS BIGINT) AS usd_micro_cents,
@@ -1759,22 +1677,17 @@ object RefQueries {
     // audit's failure path is what the oracle checks.
     Q("eth_audit_referential", "A",
       (s, d) => {
-        val txs = s.read.format("graft-chain")
-          .option("stream", "transaction").option("start", 0).option("end", 399)
-          .option("batchSize", 100).load()
+        val txs = readStream(s, chain100, "transaction", 0, 399)
           .select(col("hash"))
-        s.read.format("graft-chain")
-          .option("stream", "log").option("start", 0).option("end", 499)
-          .option("batchSize", 100).load()
+        readStream(s, chain100, "log", 0, 499)
           .join(txs, col("transaction_hash") === col("hash"), "left_anti")
           .groupBy((col("block_number") / 100).cast("int").as("block_group"))
           .agg(count(lit(1)).as("n_orphans"))
           .orderBy("block_group")
       },
-      Some("""WITH li AS (SELECT b, unnest(range((b % 3 + 1) * 2)) AS i
-             |            FROM (SELECT unnest(range(400, 500)) AS b))
-             |SELECT CAST(b // 100 AS INTEGER) AS block_group, count(*) AS n_orphans
-             |FROM li GROUP BY 1 ORDER BY 1""".stripMargin)),
+      Some(s"""WITH ${chainLogsCte(400, 499)}
+              |SELECT CAST(b // 100 AS INTEGER) AS block_group, count(*) AS n_orphans
+              |FROM lg GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // K6 (engine-beyond-reference): file-level data-skipping manifest —
     // the Delta/Iceberg min/max-per-file statistics table for plain
@@ -1869,12 +1782,7 @@ object RefQueries {
     // native ASOF LEFT JOIN.
     Q("j_asof_backward", "S5",
       (s, d) => {
-        val ev = Tables(s, d, "events")
-        val left = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val right = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("rts"),
-            col("event_id").as("click_id"), col("value").as("click_value"))
+        val (left, right) = asofInputs(s, d)
         graft.operators.AsofJoin.backward(left, right, Seq("user_id"),
             leftTs = "ts", rightTs = "rts",
             valueCols = Seq("click_id", "click_value"), tieBreak = "click_id")
@@ -1882,11 +1790,7 @@ object RefQueries {
             round(col("asof_click_value") * 100).cast("long").as("asof_click_cents"))
           .orderBy("event_id")
       },
-      Some("""WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-             |r0 AS (SELECT user_id, ts, event_id AS click_id, value FROM events WHERE event_type = 'click'),
-             |r AS (SELECT user_id, ts, click_id, value FROM (
-             |        SELECT r0.*, row_number() OVER (PARTITION BY user_id, ts ORDER BY click_id DESC) AS rn
-             |        FROM r0) WHERE rn = 1)
+      Some(s"""WITH $asofCte
              |SELECT l.event_id, l.user_id, r.click_id AS asof_click_id,
              |       CAST(round(r.value * 100) AS BIGINT) AS asof_click_cents
              |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
@@ -1898,12 +1802,7 @@ object RefQueries {
     // native forward ASOF (l.ts <= r.ts).
     Q("j_asof_forward", "S5",
       (s, d) => {
-        val ev = Tables(s, d, "events")
-        val left = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val right = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("rts"),
-            col("event_id").as("click_id"), col("value").as("click_value"))
+        val (left, right) = asofInputs(s, d)
         graft.operators.AsofJoin.forward(left, right, Seq("user_id"),
             leftTs = "ts", rightTs = "rts",
             valueCols = Seq("click_id", "click_value"), tieBreak = "click_id")
@@ -1911,11 +1810,7 @@ object RefQueries {
             round(col("asof_click_value") * 100).cast("long").as("asof_click_cents"))
           .orderBy("event_id")
       },
-      Some("""WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-             |r0 AS (SELECT user_id, ts, event_id AS click_id, value FROM events WHERE event_type = 'click'),
-             |r AS (SELECT user_id, ts, click_id, value FROM (
-             |        SELECT r0.*, row_number() OVER (PARTITION BY user_id, ts ORDER BY click_id DESC) AS rn
-             |        FROM r0) WHERE rn = 1)
+      Some(s"""WITH $asofCte
              |SELECT l.event_id, l.user_id, r.click_id AS asof_click_id,
              |       CAST(round(r.value * 100) AS BIGINT) AS asof_click_cents
              |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
@@ -1928,12 +1823,7 @@ object RefQueries {
     // per-pair argmin — proving the window form equals the definition.
     Q("j_asof_nearest", "S5",
       (s, d) => {
-        val ev = Tables(s, d, "events")
-        val left = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val right = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("rts"),
-            col("event_id").as("click_id"), col("value").as("click_value"))
+        val (left, right) = asofInputs(s, d)
         graft.operators.AsofJoin.nearest(left, right, Seq("user_id"),
             leftTs = "ts", rightTs = "rts",
             valueCols = Seq("click_id", "click_value"), tieBreak = "click_id")
@@ -1942,11 +1832,7 @@ object RefQueries {
             col("asof_direction"))
           .orderBy("event_id")
       },
-      Some("""WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-             |r0 AS (SELECT user_id, ts, event_id AS click_id, value FROM events WHERE event_type = 'click'),
-             |r AS (SELECT user_id, ts, click_id, value FROM (
-             |        SELECT r0.*, row_number() OVER (PARTITION BY user_id, ts ORDER BY click_id DESC) AS rn
-             |        FROM r0) WHERE rn = 1),
+      Some(s"""WITH $asofCte,
              |j AS (SELECT l.event_id, r.click_id, r.value,
              |        CASE WHEN r.ts <= l.ts THEN 'backward' ELSE 'forward' END AS dir,
              |        row_number() OVER (PARTITION BY l.event_id
@@ -1959,12 +1845,6 @@ object RefQueries {
              |FROM l LEFT JOIN j ON j.event_id = l.event_id AND j.rn = 1
              |ORDER BY l.event_id""".stripMargin)),
 
-    // K9: multi-version time travel on the bucketed sink (Delta-lite
-    // manifest log): commit v1, then a correction commit touching only
-    // half the buckets; read BOTH versions back and prove v1 still
-    // answers with pre-correction numbers while untouched buckets share
-    // physical files. Oracle recomputes both versions' stats from the
-    // base table.
     // K13: incremental maintenance of a JOIN view (delta-join IVM):
     // the materialized orders⋈customers view updates under BOTH fact
     // inserts and dimension upserts WITHOUT a full re-join —
@@ -2070,11 +1950,7 @@ object RefQueries {
       (s, d) => {
         import graft.eth.Versioned
         val dir = java.nio.file.Files.createTempDirectory("graft_cdf").toString + "/t"
-        val base = Tables(s, d, "orders")
-          .filter(col("o_orderkey") <= 2000)
-          .select(col("o_orderkey"),
-            expr("o_orderkey div 500").as("bkt"),
-            round(col("o_totalprice") * 100).cast("long").as("price_c"))
+        val base = ordersBase(s, d)
         Versioned.commit(base, dir, Seq("o_orderkey"), "bkt")
         val upd = base.filter(col("o_orderkey") % 7 === 0)
           .withColumn("price_c", col("price_c") + 500L)
@@ -2086,9 +1962,7 @@ object RefQueries {
         Versioned.diff(s, dir, 1L, 2L, Seq("o_orderkey"))
           .orderBy("change_type", "o_orderkey")
       },
-      Some("""WITH base AS (SELECT o_orderkey, o_orderkey // 500 AS bkt,
-             |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
-             |       FROM orders WHERE o_orderkey <= 2000),
+      Some(s"""WITH $ordersBaseCte,
              |v2 AS (SELECT o_orderkey, bkt,
              |         CASE WHEN o_orderkey % 7 = 0 THEN price_c + 500 ELSE price_c END AS price_c
              |       FROM base WHERE o_orderkey % 13 <> 0
@@ -2122,12 +1996,7 @@ object RefQueries {
       (s, d) => {
         import graft.eth.Versioned
         val dir = java.nio.file.Files.createTempDirectory("graft_evoq").toString + "/t"
-        val base = Tables(s, d, "orders")
-          .filter(col("o_orderkey") <= 2000)
-          .select(col("o_orderkey"),
-            expr("o_orderkey div 500").as("bkt"),
-            round(col("o_totalprice") * 100).cast("long").as("price_c"),
-            (col("o_orderkey") % 2 === 0).as("flag"))
+        val base = ordersBase(s, d).withColumn("flag", col("o_orderkey") % 2 === 0)
         Versioned.commit(base, dir, Seq("o_orderkey"), "bkt")   // v1
         Versioned.renameColumn(dir, "price_c", "amount_c")      // v2
         val upd = Versioned.readAt(s, dir)
@@ -2146,12 +2015,10 @@ object RefQueries {
         era(1L, "price_c").unionAll(era(3L, "amount_c"))
           .unionAll(era(4L, "amount_c")).orderBy("version")
       },
-      Some("""WITH base AS (SELECT o_orderkey,
-             |         CAST(round(o_totalprice * 100) AS BIGINT) AS p
-             |       FROM orders WHERE o_orderkey <= 2000),
-             |s1 AS (SELECT count(*) AS n, sum(p) AS s FROM base),
+      Some(s"""WITH $ordersBaseCte,
+             |s1 AS (SELECT count(*) AS n, sum(price_c) AS s FROM base),
              |s3 AS (SELECT count(*) AS n,
-             |         sum(CASE WHEN o_orderkey <= 300 THEN p + 900 ELSE p END) AS s
+             |         sum(CASE WHEN o_orderkey <= 300 THEN price_c + 900 ELSE price_c END) AS s
              |       FROM base)
              |SELECT * FROM (
              |  SELECT CAST(1 AS BIGINT) AS version, CAST(n AS BIGINT) AS n_rows,
@@ -2165,15 +2032,17 @@ object RefQueries {
              |    CAST(3 AS BIGINT), false, true FROM s3)
              |ORDER BY version""".stripMargin)),
 
+    // K9: multi-version time travel on the bucketed sink (Delta-lite
+    // manifest log): commit v1, then a correction commit touching only
+    // half the buckets; read BOTH versions back and prove v1 still
+    // answers with pre-correction numbers while untouched buckets share
+    // physical files. Oracle recomputes both versions' stats from the
+    // base table.
     Q("k9_time_travel", "K",
       (s, d) => {
         import graft.eth.Versioned
         val dir = java.nio.file.Files.createTempDirectory("graft_tt").toString + "/t"
-        val base = Tables(s, d, "orders")
-          .filter(col("o_orderkey") <= 2000)
-          .select(col("o_orderkey"),
-            expr("o_orderkey div 500").as("bkt"),
-            round(col("o_totalprice") * 100).cast("long").as("price_c"))
+        val base = ordersBase(s, d)
         Versioned.commit(base, dir, Seq("o_orderkey"), "bkt")
         val correction = base
           .filter(col("o_orderkey") > 1000)
@@ -2184,11 +2053,10 @@ object RefQueries {
           .select(lit(v).as("version"), col("n_rows"), col("sum_price_cents"))
         stats(1L).unionAll(stats(2L)).orderBy("version")
       },
-      Some("""WITH base AS (SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS p
-             |       FROM orders WHERE o_orderkey <= 2000),
-             |v1 AS (SELECT CAST(1 AS BIGINT) AS version, count(*) AS n, sum(p) AS s FROM base),
+      Some(s"""WITH $ordersBaseCte,
+             |v1 AS (SELECT CAST(1 AS BIGINT) AS version, count(*) AS n, sum(price_c) AS s FROM base),
              |v2 AS (SELECT CAST(2 AS BIGINT), count(*),
-             |         sum(CASE WHEN o_orderkey > 1000 THEN p + 100000 ELSE p END)
+             |         sum(CASE WHEN o_orderkey > 1000 THEN price_c + 100000 ELSE price_c END)
              |       FROM base)
              |SELECT version, CAST(n AS BIGINT) AS n_rows, CAST(s AS BIGINT) AS sum_price_cents
              |FROM (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
@@ -2205,11 +2073,7 @@ object RefQueries {
         import s.implicits._
         import graft.eth.Sinks
         val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toString + "/t"
-        val base = Tables(s, d, "orders")
-          .filter(col("o_orderkey") <= 2000)
-          .select(col("o_orderkey"),
-            expr("o_orderkey div 500").as("bkt"),
-            round(col("o_totalprice") * 100).cast("long").as("price_c"))
+        val base = ordersBase(s, d)
         Sinks.writeBucketedParquet(base, dir, "bkt", Seq("o_orderkey"))
         val upd = base
           .filter(col("o_orderkey") > 500 && col("o_orderkey") <= 1000)
@@ -2237,9 +2101,7 @@ object RefQueries {
             col("price_c"))
           .orderBy("o_orderkey")
       },
-      Some("""WITH base AS (SELECT o_orderkey, o_orderkey // 500 AS bkt,
-             |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
-             |       FROM orders WHERE o_orderkey <= 2000),
+      Some(s"""WITH $ordersBaseCte,
              |changes(o_orderkey, bkt, price_c, op, seq) AS (
              |  SELECT o_orderkey, bkt, price_c + 777, 'U', 1 FROM base
              |  WHERE o_orderkey > 500 AND o_orderkey <= 1000

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+import graft.llm.Classifier
 import graft.operators.{ConnectedComponents, Graph}
 import graft.streaming.StreamingOps
 
@@ -72,6 +73,17 @@ class PinSpec extends SparkSpec {
     // round's `sums` pin is freed once its round is materialized
     assert(pinsAdded { cm = Graph.eigencentrality(edges, rounds = 5) } == 3)
     assert(cm.count() == 4L)
+  }
+
+  test("Pin.rounds: logisticTrain over five rounds keeps its two prologue pins plus the last round") {
+    val features = Seq((1L, 0L, 1L), (1L, 1L, 2L), (2L, 1L, 1L), (3L, 2L, 3L))
+      .toDF("doc_id", "feature_idx", "x")
+    val labels = Seq((1L, 1L), (2L, 0L), (3L, 1L)).toDF("doc_id", "y")
+    var w: DataFrame = null
+    // the feature and label projections plus the last round's weights;
+    // the zero weights and every earlier round are freed
+    assert(pinsAdded { w = Classifier.logisticTrain(features, labels, rounds = 5) } == 3)
+    assert(w.count() == 3L)
   }
 
   test("ConnectedComponents.run on a long chain keeps two pins, whatever the round count") {

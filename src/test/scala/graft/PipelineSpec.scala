@@ -14,6 +14,24 @@ class PipelineSpec extends SparkSpec {
   private def expectedTxs(lo: Long, hi: Long): Long =
     (lo to hi).map(SyntheticChain.txCount(_).toLong).sum
 
+  test("source lock: queries and eth read a chain stream only through EthPipeline.readStream") {
+    val roots = Seq("src/main/scala/graft/queries", "src/main/scala/graft/eth").map(new java.io.File(_))
+    roots.foreach(r => assert(r.isDirectory, s"run from the project root (no ${r.getAbsolutePath})"))
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val offenders = roots.flatMap(files).filter(_.getName.endsWith(".scala"))
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().zipWithIndex.collect {
+          case (line, i) if line.contains("format(\"graft-chain\")") ||
+              line.contains("format(\"graft-rpc\")") => s"${f.getPath}:${i + 1}"
+        }.toList
+        finally src.close()
+      }
+    assert(offenders.isEmpty,
+      s"read through EthPipeline.readStream instead: ${offenders.mkString(", ")}")
+  }
+
   test("DSv2 source plans one partition per RPC-batch slice, deterministic re-read") {
     val df = spark.read.format("graft-chain")
       .option("stream", "block").option("start", 0).option("end", 999)

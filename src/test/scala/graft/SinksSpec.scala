@@ -660,6 +660,16 @@ class SinksSpec extends SparkSpec {
     }
     assert(execs.size == 2 && pinsIn(execs).isEmpty,
       s"${execs.size} executions, pins ${pinsIn(execs)}")
+    // the write's bucket exchange is the merge's only shuffle: the CDC
+    // window is partitioned by (bucket, PK) and reuses it
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val write = execs.map(_.executedPlan).find(p => helper.find(p)(
+      _.isInstanceOf[org.apache.spark.sql.execution.command.DataWritingCommandExec]).isDefined)
+    assert(write.isDefined, "no write among the merge's executions")
+    val exchanges = helper.collect(write.get) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(exchanges.size == 1, s"expected one exchange:\n${write.get}")
     def state() = spark.read.parquet(dir)
       .select(col("id"), col("v")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
