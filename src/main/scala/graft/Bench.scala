@@ -31,7 +31,9 @@ import graft.streaming.{IndexSoak, StreamingOps}
   *
   * Other modes:
   *  - `plans <outDir> [suffix]`: `.explain("formatted")` of each query on
-  *    SPARK_GRAFT_SF_DIR to `<outDir>/<name><suffix>.txt`.
+  *    SPARK_GRAFT_SF_DIR to `<outDir>/<name><suffix>.txt`, with run-dependent
+  *    names renumbered ([[stablePlan]]), so two runs of the same code
+  *    write identical files and `diff -r` compares two commits.
   *  - `soak <workDir> <nBatches> [base op]` and
   *    `mediaSoak <workDir> image|video <nBatches> [base op]`: the
   *    mutable-index soaks ([[IndexSoak.runSoak]],
@@ -339,15 +341,16 @@ object Bench {
   }
 
   /** Writes `.explain("formatted")` of each selected query to
-    * `<outDir>/<name><suffix>.txt`. A query that throws while its plan is
-    * built is reported on stderr and skipped. */
+    * `<outDir>/<name><suffix>.txt` through [[stablePlan]]. A query that
+    * throws while its plan is built is reported on stderr and skipped. */
   def writePlans(spark: SparkSession, sfDir: String, outDir: String,
                  suffix: String, only: Option[Set[String]]): Unit = {
     Files.createDirectories(Paths.get(outDir))
     selected(only).foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        val txt = stablePlan(
+          df.queryExecution.explainString(ExplainMode.fromString("formatted")))
         Files.writeString(Paths.get(s"$outDir/$name$suffix.txt"), txt)
         System.err.println(s"[plans] wrote $name")
       } catch { case e: Throwable =>
@@ -355,6 +358,30 @@ object Bench {
       }
     }
   }
+
+  /** Run-dependent names in a plan, each with the token its values are
+    * renumbered to: UUIDs (part files, `Observation` names, Spark temp
+    * dirs), the random suffix of a temp dir made under java.io.tmpdir,
+    * the RDD ids of pinned scans, `plan_id=` exchange ids and `#n`
+    * expression ids. Group 1 is kept, group 2 is the varying part. */
+  private val runDependent: Seq[(scala.util.matching.Regex, String)] = Seq(
+    "()([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})".r -> "uuid-",
+    ("(" + java.util.regex.Pattern.quote(
+      Paths.get(System.getProperty("java.io.tmpdir")).toString) +
+      "/[\\w.-]*?)(\\d{8,})(?![\\w.-])").r -> "tmp-",
+    "(RDD\\[)(\\d+)".r -> "",
+    "(plan_id=)(\\d+)".r -> "",
+    "(#)(\\d+)".r -> "")
+
+  /** `plan` with every run-dependent name renumbered in first-appearance
+    * order, one count per kind: the text then depends only on the plan,
+    * not on the session's counters, random names or what ran before. */
+  private[graft] def stablePlan(plan: String): String =
+    runDependent.foldLeft(plan) { case (txt, (re, token)) =>
+      val seen = scala.collection.mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(txt, m => scala.util.matching.Regex.quoteReplacement(
+        m.group(1) + token + seen.getOrElseUpdate(m.group(2), seen.size)))
+    }
 
   private def median(xs: Seq[Double]): Double =
     if (xs.isEmpty) 0.0 else xs.sorted.apply(xs.size / 2)

@@ -254,31 +254,30 @@ object EthPipeline {
 
   /** Streaming ingest of the block stream (the reference's primary mode):
     * `readStream` on the chain source, per-micro-batch format + bucketed
-    * sink via foreachBatch, offsets checkpointed. With
-    * `Trigger.AvailableNow` this drains the backlog and stops — restart
-    * with the same checkpoint resumes exactly where it left off (the
-    * streaming-native T2, complementing the data-derived resume below). */
+    * sink through [[graft.streaming.MicroBatch]], offsets checkpointed.
+    * With `Trigger.AvailableNow` this drains the backlog and stops —
+    * restart with the same checkpoint resumes exactly where it left off
+    * (the streaming-native T2, complementing the data-derived resume
+    * below).
+    *
+    * Test-only: backs COVERAGE.md's "micro-batch range loop" (T1) row. */
   def streamBlocks(spark: SparkSession, sinkDir: String, checkpoint: String,
                    chainTip: Long, source: SourceConf = SourceConf(),
                    dialect: Dialect = CsvDialect):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    val raw = spark.readStream.format(source.format)
-      .option("stream", "block")
-      .option("start", 0).option("end", chainTip)
-      .option("batchSize", source.batchSize)
-      .load()
-    raw.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          // upsert, not overwrite: a micro-batch boundary can fall mid-bucket
-          Sinks.upsertBucketedParquet(
-            EthTransforms.formatBlocks(batch, dialect), s"$sinkDir/block",
-            pkCols = Seq("block_id"))
-      }
-      .start()
-  }
+      org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.MicroBatch.start(
+      spark.readStream.format(source.format)
+        .option("stream", "block")
+        .option("start", 0).option("end", chainTip)
+        .option("batchSize", source.batchSize)
+        .load(),
+      checkpoint, org.apache.spark.sql.streaming.Trigger.AvailableNow()) { (batch, _) =>
+      if (!batch.isEmpty)
+        // upsert, not overwrite: a micro-batch boundary can fall mid-bucket
+        Sinks.upsertBucketedParquet(
+          EthTransforms.formatBlocks(batch, dialect), s"$sinkDir/block",
+          pkCols = Seq("block_id"))
+    }
 
   /** Incremental run: resume from the sink's own max block (T2 — "the data
     * is the checkpoint"; [[Ingest.maxStoredBlock]]'s top-bucket probe), cap at `chainTip` or the completeness watermark.

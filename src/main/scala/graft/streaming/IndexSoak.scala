@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Pin
 
@@ -23,58 +24,59 @@ import graft.Pin
   */
 object IndexSoak {
 
-  /** Content-bucket derivation — MUST match maintainWinnowIndexAndFlag. */
-  private def kbCol(keyBuckets: Int) =
-    pmod(graft.functions.ColumnFns.md5Long(col("fp_hash").cast("string")),
-      lit(keyBuckets.toLong))
-
-  /** Id-bucket derivation — MUST match upsertMutableIndex's side map. */
-  private def pkbCol(idCol: String, keyBuckets: Int) =
-    pmod(graft.functions.ColumnFns.md5Long(col(idCol).cast("string")),
-      lit(keyBuckets.toLong))
+  import StreamingOps.{IndexLayout, mediaBands, mediaLayout, pkb, winnowLayout}
 
   /** Expected (id, fp_hash, kb) index rows for a corpus state. */
-  def expectedIndex(docs: DataFrame, idCol: String, textCol: String,
-                    keyBuckets: Int): DataFrame =
+  private def expectedIndex(docs: DataFrame, idCol: String, textCol: String,
+                            keyBuckets: Int): DataFrame =
     graft.llm.TextAnalysis.winnowFingerprints(docs, idCol, textCol)
       .select(col(idCol), col("fp_hash")).distinct()
-      .withColumn("kb", kbCol(keyBuckets))
+      .withColumn("kb", winnowLayout(idCol, keyBuckets).kb)
 
-  /** Seed the winnow index + pk map in ONE batch write, layout-identical
-    * to what the streaming maintainer produces (same pkCols / bucket /
-    * sort / sink), so subsequent micro-batches upsert into a
-    * corpus-scale index without paying a corpus-length stream replay. */
-  def seedWinnowIndex(docs: DataFrame, indexDir: String,
-                      idCol: String = "doc_id", textCol: String = "text",
-                      keyBuckets: Int = 64): Unit = {
-    val fps = Pin(expectedIndex(docs, idCol, textCol, keyBuckets))
-    graft.eth.Sinks.upsertBucketedParquet(fps, indexDir,
-      pkCols = Seq(idCol, "fp_hash"), bucketCol = "kb",
-      sortCols = Seq("fp_hash", idCol))
-    val mapRows = fps.select(col(idCol), col("kb")).distinct()
-      .withColumn("pkb", pkbCol(idCol, keyBuckets))
-    graft.eth.Sinks.upsertBucketedParquet(mapRows, s"${indexDir}_pk",
-      pkCols = Seq(idCol, "kb"), bucketCol = "pkb", sortCols = Seq(idCol))
+  /** The pk side map of index rows: one (id, kb, pkb) row per bucket an
+    * id's rows live in. */
+  private def pkMap(rows: DataFrame, idCol: String, keyBuckets: Int): DataFrame =
+    rows.select(col(idCol), col("kb")).distinct()
+      .withColumn("pkb", pkb(idCol, keyBuckets))
+
+  /** Seed an index + pk map from its expected rows in ONE batch write
+    * each, layout-identical to what the streaming maintainer produces
+    * (same pkCols / bucket / sort / sink), so subsequent micro-batches
+    * upsert into a corpus-scale index without paying a corpus-length
+    * stream replay. */
+  private def seedIndex(expected: DataFrame, indexDir: String, idCol: String,
+                        layout: IndexLayout, keyBuckets: Int): Unit = {
+    val rows = Pin(expected)
+    graft.eth.Sinks.upsertBucketedParquet(rows, indexDir,
+      pkCols = layout.pkCols, bucketCol = "kb", sortCols = layout.sortCols)
+    graft.eth.Sinks.upsertBucketedParquet(pkMap(rows, idCol, keyBuckets),
+      s"${indexDir}_pk", pkCols = Seq(idCol, "kb"), bucketCol = "pkb",
+      sortCols = Seq(idCol))
   }
 
-  /** Row-exact equivalence of the maintained index + side map against a
-    * from-scratch rebuild of `finalDocs` — the soak's closing assert.
-    * Returns (indexDiff, mapDiff): both must be 0. */
-  def rebuildDiff(spark: SparkSession, indexDir: String, finalDocs: DataFrame,
-                  idCol: String = "doc_id", textCol: String = "text",
-                  keyBuckets: Int = 64): (Long, Long) = {
-    val want = Pin(expectedIndex(finalDocs, idCol, textCol, keyBuckets))
-    val got = spark.read.parquet(indexDir)
-      .select(col(idCol), col("fp_hash"), col("kb").cast("long").as("kb"))
-    val idxDiff = got.exceptAll(want).count() + want.exceptAll(got).count()
-    val wantMap = want.select(col(idCol), col("kb")).distinct()
-      .withColumn("pkb", pkbCol(idCol, keyBuckets))
+  /** Row-exact equivalence of the maintained index (its `cols` and `kb`)
+    * and pk side map against a from-scratch rebuild `expected` of the
+    * final corpus — the soak's closing assert. Returns (indexDiff,
+    * mapDiff): both must be 0. */
+  private def rebuildDiff(spark: SparkSession, indexDir: String,
+                          expected: DataFrame, idCol: String, cols: Seq[String],
+                          keyBuckets: Int): (Long, Long) = {
+    def diff(a: DataFrame, b: DataFrame) = a.exceptAll(b).count() + b.exceptAll(a).count()
+    val want = Pin(expected)
+    val sel = cols.map(col) :+ col("kb").cast("long").as("kb")
     val gotMap = spark.read.parquet(s"${indexDir}_pk")
       .select(col(idCol), col("kb").cast("long").as("kb"),
         col("pkb").cast("long").as("pkb"))
-    val mapDiff = gotMap.exceptAll(wantMap).count() + wantMap.exceptAll(gotMap).count()
-    (idxDiff, mapDiff)
+    (diff(spark.read.parquet(indexDir).select(sel: _*), want.select(sel: _*)),
+      diff(gotMap, pkMap(want, idCol, keyBuckets)))
   }
+
+  /** Seed the winnow index + pk map from a corpus in one batch write. */
+  def seedWinnowIndex(docs: DataFrame, indexDir: String,
+                      idCol: String = "doc_id", textCol: String = "text",
+                      keyBuckets: Int = 64): Unit =
+    seedIndex(expectedIndex(docs, idCol, textCol, keyBuckets), indexDir, idCol,
+      winnowLayout(idCol, keyBuckets), keyBuckets)
 
   /** Parquet data-file count under a bucketed dir (creep detector). */
   def dataFileCount(spark: SparkSession, dir: String): Int = {
@@ -102,66 +104,42 @@ object IndexSoak {
     (sc.getPersistentRDDs.size, sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum)
   }
 
-  /** Deterministic soak: `nBatches` micro-batches against one live
-    * maintainer. Schedule (k docs per op, ids arithmetic — no RNG):
-    * first `seedBatches` batches ingest the base corpus in slices; then
-    * cycle edit / shrink-to-below-window / restore+grow / add-new /
-    * byte-identical-replay. Tracks the expected corpus in a driver map
-    * (the soak's oracle) and closes with [[rebuildDiff]]. */
-  def runSoak(spark: SparkSession, workDir: String, nBatches: Int,
-              baseDocs: Int = 300, opDocs: Int = 20,
-              keyBuckets: Int = 64): SoakReport = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def baseText(id: Long) =
-      (0 until (12 + (id % 9)).toInt).map(j => s"w${(id * 7 + j * 13) % 97}")
-        .mkString(s"doc $id opens with ", " ", s" and closes at ${id % 31}")
-    val state = scala.collection.mutable.LinkedHashMap.empty[Long, String]
-    val originals = scala.collection.mutable.Map.empty[Long, String]
-    var nextNewId = 1000000L
-
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = StreamingOps.maintainWinnowIndexAndFlag(
-      input.toDF().toDF("doc_id", "text"),
-      s"$workDir/index", s"$workDir/flags", s"$workDir/ckpt",
-      minShared = 2, keyBuckets = keyBuckets)
+  /** The loop both soaks run (ids arithmetic, no RNG): `nBatches`
+    * micro-batches against the live maintainer `start` runs on a
+    * MemoryStream of `T` named `columns`. The first batches ingest the
+    * base corpus `0 until base` in `seed` slices; then the schedule
+    * cycles `op(b, 0..3)` — edit / erase / restore / add new — and a
+    * byte-identical replay of the previous batch. `record` folds each
+    * batch into the caller's expected corpus (the soak's oracle) and
+    * returns its stream rows; after the last batch `close` returns the
+    * rebuild diffs (index, map) and the final corpus size. */
+  private def soak[B, T: Encoder](spark: SparkSession, workDir: String,
+                                  nBatches: Int, base: Int, opSize: Int,
+                                  columns: Seq[String],
+                                  start: DataFrame => StreamingQuery)(
+      seed: Range => Seq[B], op: (Int, Int) => Seq[B], record: Seq[B] => Seq[T])(
+      close: => (Long, Long, Long)): SoakReport = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
+    val q = start(input.toDF().toDF(columns: _*))
     val walls = scala.collection.mutable.ArrayBuffer.empty[Double]
     var filesMid = 0
-    var lastBatch: Seq[(Long, String)] = Seq.empty
-    val seedBatches = math.max(1, math.min(nBatches / 5, baseDocs / opDocs / 2))
-    val seedSlice = (baseDocs + seedBatches - 1) / seedBatches
+    var lastBatch: Seq[B] = Seq.empty
+    val seedBatches = math.max(1, math.min(nBatches / 5, base / opSize / 2))
+    val seedSlice = (base + seedBatches - 1) / seedBatches
     try {
       for (b <- 0 until nBatches) {
-        val batch: Seq[(Long, String)] =
-          if (b < seedBatches) {
-            val ids = (b * seedSlice) until math.min((b + 1) * seedSlice, baseDocs)
-            ids.map { i => val id = i.toLong; (id, baseText(id)) }
-          } else (b - seedBatches) % 5 match {
-            case 0 => // edit: rewrite k docs with batch-stamped tails
-              pick(state.keys, b, opDocs).map(id =>
-                (id, state(id) + s" edited in batch $b tail ${id % 13}"))
-            case 1 => // shrink below the winnow window: full erase
-              pick(state.keys, b, opDocs).map(id => (id, "tiny"))
-            case 2 => // restore + grow from the original
-              pick(state.keys, b, opDocs).map(id =>
-                (id, originals.getOrElse(id, baseText(id)) + s" regrown at $b"))
-            case 3 => // brand-new docs
-              (0 until opDocs).map { j =>
-                val id = nextNewId; nextNewId += 1
-                (id, baseText(id) + s" born in batch $b slot $j")
-              }
-            case 4 => // byte-identical replay of the previous batch
-              lastBatch
+        val batch =
+          if (b < seedBatches) seed((b * seedSlice) until math.min((b + 1) * seedSlice, base))
+          else (b - seedBatches) % 5 match {
+            case 4 => lastBatch
+            case k => op(b, k)
           }
         if (batch.nonEmpty) {
-          batch.foreach { case (id, text) =>
-            state(id) = text
-            if (!originals.contains(id)) originals(id) = text
-          }
           lastBatch = batch
+          val rows = record(batch)
           val t0 = System.nanoTime()
-          input.addData(batch: _*)
+          input.addData(rows: _*)
           q.processAllAvailable()
           walls += (System.nanoTime() - t0) / 1e9
         }
@@ -170,12 +148,53 @@ object IndexSoak {
     } finally q.stop()
     val (persistentRdds, storageBytes) = heldBlocks(spark)
     val filesEnd = dataFileCount(spark, s"$workDir/index")
-    val finalDocs = state.toSeq.toDF("doc_id", "text")
-    val (idxDiff, mapDiff) = rebuildDiff(spark, s"$workDir/index", finalDocs,
-      keyBuckets = keyBuckets)
-    SoakReport(walls.toSeq, idxDiff, mapDiff, filesMid, filesEnd,
-      state.size.toLong,
+    val (idxDiff, mapDiff, finalN) = close
+    SoakReport(walls.toSeq, idxDiff, mapDiff, filesMid, filesEnd, finalN,
       spark.read.parquet(s"$workDir/index").count(), persistentRdds, storageBytes)
+  }
+
+  /** Deterministic text soak of the winnow maintainer, `opDocs` docs per
+    * op: edit (batch-stamped tails) / shrink below the winnow window
+    * (full erase) / restore + grow from the original / new docs / replay.
+    * Closes with [[rebuildDiff]]. */
+  def runSoak(spark: SparkSession, workDir: String, nBatches: Int,
+              baseDocs: Int = 300, opDocs: Int = 20,
+              keyBuckets: Int = 64): SoakReport = {
+    import spark.implicits._
+    def baseText(id: Long) =
+      (0 until (12 + (id % 9)).toInt).map(j => s"w${(id * 7 + j * 13) % 97}")
+        .mkString(s"doc $id opens with ", " ", s" and closes at ${id % 31}")
+    val state = scala.collection.mutable.LinkedHashMap.empty[Long, String]
+    val originals = scala.collection.mutable.Map.empty[Long, String]
+    var nextNewId = 1000000L
+    soak[(Long, String), (Long, String)](spark, workDir, nBatches, baseDocs, opDocs,
+      Seq("doc_id", "text"),
+      StreamingOps.maintainWinnowIndexAndFlag(_, s"$workDir/index",
+        s"$workDir/flags", s"$workDir/ckpt", minShared = 2, keyBuckets = keyBuckets))(
+      _.map { i => val id = i.toLong; (id, baseText(id)) },
+      {
+        case (b, 0) => pick(state.keys, b, opDocs).map(id =>
+          (id, state(id) + s" edited in batch $b tail ${id % 13}"))
+        case (b, 1) => pick(state.keys, b, opDocs).map(id => (id, "tiny"))
+        case (b, 2) => pick(state.keys, b, opDocs).map(id =>
+          (id, originals.getOrElse(id, baseText(id)) + s" regrown at $b"))
+        case (b, _) => (0 until opDocs).map { j =>
+          val id = nextNewId; nextNewId += 1
+          (id, baseText(id) + s" born in batch $b slot $j")
+        }
+      },
+      batch => {
+        batch.foreach { case (id, text) =>
+          state(id) = text
+          if (!originals.contains(id)) originals(id) = text
+        }
+        batch
+      }) {
+      val (idxDiff, mapDiff) = rebuildDiff(spark, s"$workDir/index",
+        expectedIndex(state.toSeq.toDF("doc_id", "text"), "doc_id", "text", keyBuckets),
+        "doc_id", Seq("doc_id", "fp_hash"), keyBuckets)
+      (idxDiff, mapDiff, state.size.toLong)
+    }
   }
 
   /** Deterministic doc pick: k ids from the live set, rotated by batch. */
@@ -227,7 +246,7 @@ object IndexSoak {
   /** The image or video-frame maintainer over a `(media_id, payload, mime)`
     * stream, writing under `workDir`. */
   def mediaMaintainer(stream: DataFrame, workDir: String, keyBuckets: Int,
-                      video: Boolean): org.apache.spark.sql.streaming.StreamingQuery =
+                      video: Boolean): StreamingQuery =
     if (video) StreamingOps.maintainVideoFrameIndexAndFlag(stream,
       s"$workDir/index", s"$workDir/flags", s"$workDir/ckpt",
       keyBuckets = keyBuckets)
@@ -235,141 +254,68 @@ object IndexSoak {
       s"$workDir/index", s"$workDir/flags", s"$workDir/ckpt",
       keyBuckets = keyBuckets)
 
-  /** Expected index rows for a corpus state — MUST replicate the
-    * maintainers' derivations (aHash / videoFrameHashes with the
-    * maintainer defaults, 6 byte-bands, and the r15 ID-SHARDED bucket
-    * key kb = md5(band | band_key | md5(id) % idShards) % keyBuckets). */
-  def expectedMediaIndex(media: org.apache.spark.sql.Dataset[MediaRecord],
-                         keyBuckets: Int, video: Boolean,
-                         idShards: Int = 16): DataFrame = {
+  /** Expected index rows for a corpus state: a from-scratch decode with
+    * the maintainer defaults (aHash / videoFrameHashes), laid out by the
+    * maintainers' own band split and media layout. */
+  private def expectedMediaIndex(media: org.apache.spark.sql.Dataset[MediaRecord],
+                                 keyBuckets: Int, video: Boolean): DataFrame = {
     val hashes =
       if (video)
         Multimodal.videoFrameHashes(media, every = 1, strideX = 8,
             strideY = 8, fallbackStride1 = true).toDF()
           .select(col("media_id"), col("frame_idx"), col("ahash"))
       else Multimodal.aHash(media).toDF().select(col("media_id"), col("ahash"))
-    hashes
-      .withColumn("band", explode(sequence(lit(0), lit(5))))
-      .withColumn("band_key",
-        expr("shiftrightunsigned(ahash, band * 8) & 255"))
-      .withColumn("kb", pmod(graft.functions.ColumnFns.md5Long(
-        concat_ws("|", col("band"), col("band_key"),
-          pmod(graft.functions.ColumnFns.md5Long(
-            col("media_id").cast("string")), lit(idShards.toLong)))),
-        lit(keyBuckets.toLong)))
+    mediaBands(hashes).withColumn("kb", mediaLayout(video, keyBuckets).kb)
   }
-
-  private def mediaPk(video: Boolean): Seq[String] =
-    if (video) Seq("media_id", "frame_idx", "band") else Seq("media_id", "band")
 
   /** Batch-seed the media index + pk map, layout-identical to the
     * streaming maintainer's writes (the media twin of
     * [[seedWinnowIndex]]). */
   def seedMediaIndex(media: org.apache.spark.sql.Dataset[MediaRecord],
-                     indexDir: String, keyBuckets: Int,
-                     video: Boolean): Unit = {
-    val rows = Pin(expectedMediaIndex(media, keyBuckets, video))
-    graft.eth.Sinks.upsertBucketedParquet(rows, indexDir,
-      pkCols = mediaPk(video), bucketCol = "kb",
-      sortCols = if (video) Seq("band_key", "media_id", "frame_idx")
-                 else Seq("band_key", "media_id"))
-    val mapRows = rows.select(col("media_id"), col("kb")).distinct()
-      .withColumn("pkb", pkbCol("media_id", keyBuckets))
-    graft.eth.Sinks.upsertBucketedParquet(mapRows, s"${indexDir}_pk",
-      pkCols = Seq("media_id", "kb"), bucketCol = "pkb",
-      sortCols = Seq("media_id"))
-  }
-
-  /** Rebuild-equivalence for a media index: maintained index + side map
-    * vs a from-scratch hash of the final corpus state. (0, 0) = exact. */
-  def mediaRebuildDiff(spark: SparkSession, indexDir: String,
-                       finalMedia: org.apache.spark.sql.Dataset[MediaRecord],
-                       keyBuckets: Int, video: Boolean): (Long, Long) = {
-    val want = Pin(expectedMediaIndex(finalMedia, keyBuckets, video))
-    val cols = (mediaPk(video) :+ "band_key" :+ "ahash").map(col) :+
-      col("kb").cast("long").as("kb")
-    val got = spark.read.parquet(indexDir).select(cols: _*)
-    val wantSel = want.select(cols: _*)
-    val idxDiff = got.exceptAll(wantSel).count() + wantSel.exceptAll(got).count()
-    val wantMap = want.select(col("media_id"), col("kb")).distinct()
-      .withColumn("pkb", pkbCol("media_id", keyBuckets))
-    val gotMap = spark.read.parquet(s"${indexDir}_pk")
-      .select(col("media_id"), col("kb").cast("long").as("kb"),
-        col("pkb").cast("long").as("pkb"))
-    val mapDiff = gotMap.exceptAll(wantMap).count() +
-      wantMap.exceptAll(gotMap).count()
-    (idxDiff, mapDiff)
-  }
+                     indexDir: String, keyBuckets: Int, video: Boolean): Unit =
+    seedIndex(expectedMediaIndex(media, keyBuckets, video), indexDir, "media_id",
+      mediaLayout(video, keyBuckets), keyBuckets)
 
   /** Media soak — the [[runSoak]] schedule lifted to payload mutations:
-    * seed slices, then cycle re-encode (changed pixels) / erase
-    * (undecodable for images; alternating SHORTER re-ingest and
-    * undecodable for videos — the frame-tail erase case) / restore
-    * (byte-identical original) / new media / byte-identical replay.
-    * Closes with [[mediaRebuildDiff]] on BOTH the index and the map. */
+    * re-encode (changed pixels) / erase (undecodable for images;
+    * alternating SHORTER re-ingest and undecodable for videos — the
+    * frame-tail erase case) / restore (byte-identical original) / new
+    * media / replay. Closes with [[rebuildDiff]] on BOTH the index and
+    * the map. */
   def runMediaSoak(spark: SparkSession, workDir: String, nBatches: Int,
                    video: Boolean, baseMedia: Int = 120, opMedia: Int = 10,
                    keyBuckets: Int = 64): SoakReport = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     // state: id -> (version, nFrames); version < 0 = undecodable
     val state = scala.collection.mutable.LinkedHashMap.empty[Long, (Int, Int)]
     var nextNewId = 1000000L
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Array[Byte], String)]
-    val q = mediaMaintainer(input.toDF().toDF("media_id", "payload", "mime"),
-      workDir, keyBuckets, video)
-    val walls = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var filesMid = 0
-    var lastBatch: Seq[(Long, (Int, Int))] = Seq.empty
-    val seedBatches = math.max(1, math.min(nBatches / 5, baseMedia / opMedia / 2))
-    val seedSlice = (baseMedia + seedBatches - 1) / seedBatches
-    try {
-      for (b <- 0 until nBatches) {
-        val batch: Seq[(Long, (Int, Int))] =
-          if (b < seedBatches) {
-            val ids = (b * seedSlice) until math.min((b + 1) * seedSlice, baseMedia)
-            ids.map(i => (i.toLong, (0, 6)))
-          } else (b - seedBatches) % 5 match {
-            case 0 => // re-encode with changed pixels
-              pick(state.keys, b, opMedia).map(id => (id, (b, 6)))
-            case 1 => // erase: undecodable; for video alternate with a
-              // SHORTER re-ingest (tail frame rows must vanish)
-              pick(state.keys, b, opMedia).map(id =>
-                if (video && id % 2 == 0) (id, (b, 3)) else (id, (-b, 6)))
-            case 2 => // restore the original encoding
-              pick(state.keys, b, opMedia).map(id => (id, (0, 6)))
-            case 3 => // brand-new media
-              (0 until opMedia).map { _ =>
-                val id = nextNewId; nextNewId += 1
-                (id, (0, 6))
-              }
-            case 4 => // byte-identical replay of the previous batch
-              lastBatch
-          }
-        if (batch.nonEmpty) {
-          batch.foreach { case (id, v) => state(id) = v }
-          lastBatch = batch
-          val rows = batch.map { case (id, (ver, nf)) =>
-            (id, mediaPayload(id, ver, video, nf), mediaMime(video))
-          }
-          val t0 = System.nanoTime()
-          input.addData(rows: _*)
-          q.processAllAvailable()
-          walls += (System.nanoTime() - t0) / 1e9
+    soak[(Long, (Int, Int)), (Long, Array[Byte], String)](spark, workDir, nBatches,
+      baseMedia, opMedia, Seq("media_id", "payload", "mime"),
+      mediaMaintainer(_, workDir, keyBuckets, video))(
+      _.map(i => (i.toLong, (0, 6))),
+      {
+        case (b, 0) => pick(state.keys, b, opMedia).map(id => (id, (b, 6)))
+        case (b, 1) => pick(state.keys, b, opMedia).map(id =>
+          if (video && id % 2 == 0) (id, (b, 3)) else (id, (-b, 6)))
+        case (b, 2) => pick(state.keys, b, opMedia).map(id => (id, (0, 6)))
+        case _ => (0 until opMedia).map { _ =>
+          val id = nextNewId; nextNewId += 1
+          (id, (0, 6))
         }
-        if (b == nBatches / 2) filesMid = dataFileCount(spark, s"$workDir/index")
-      }
-    } finally q.stop()
-    val (persistentRdds, storageBytes) = heldBlocks(spark)
-    val filesEnd = dataFileCount(spark, s"$workDir/index")
-    val finalMedia = state.toSeq.map { case (id, (ver, nf)) =>
-      MediaRecord(id, mediaPayload(id, ver, video, nf), mediaMime(video))
-    }.toDS()
-    val (idxDiff, mapDiff) = mediaRebuildDiff(spark, s"$workDir/index",
-      finalMedia, keyBuckets, video)
-    SoakReport(walls.toSeq, idxDiff, mapDiff, filesMid, filesEnd,
-      state.size.toLong, spark.read.parquet(s"$workDir/index").count(),
-      persistentRdds, storageBytes)
+      },
+      batch => {
+        batch.foreach { case (id, v) => state(id) = v }
+        batch.map { case (id, (ver, nf)) =>
+          (id, mediaPayload(id, ver, video, nf), mediaMime(video))
+        }
+      }) {
+      val finalMedia = state.toSeq.map { case (id, (ver, nf)) =>
+        MediaRecord(id, mediaPayload(id, ver, video, nf), mediaMime(video))
+      }.toDS()
+      val (idxDiff, mapDiff) = rebuildDiff(spark, s"$workDir/index",
+        expectedMediaIndex(finalMedia, keyBuckets, video), "media_id",
+        mediaLayout(video, keyBuckets).pkCols :+ "band_key" :+ "ahash", keyBuckets)
+      (idxDiff, mapDiff, state.size.toLong)
+    }
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import java.sql.Timestamp
 
 import graft.Pin
@@ -12,6 +12,7 @@ import graft.Pin
   * form. Each transform is written against a plain DataFrame so the *same
   * function* runs in batch (oracle-checkable) and on `readStream` inputs —
   * the Spark-idiomatic unification of the reference's micro-batch loop.
+  * Every maintainer below runs its batches through [[MicroBatch]].
   */
 object StreamingOps {
 
@@ -103,7 +104,9 @@ object StreamingOps {
     * ("purchases with no preceding click must still be counted"), and
     * the watermark is what bounds state at 100 TB-stream scale: without
     * it a left-outer stream join would hold every row forever. Both
-    * inputs must carry event-time watermarks. */
+    * inputs must carry event-time watermarks.
+    *
+    * Test-only: backs COVERAGE.md's "Left-outer stream-stream interval join" row. */
   def intervalJoinLeftOuter(left: DataFrame, right: DataFrame,
                             keyCol: String = "user_id", leftTs: String = "ts",
                             rightTs: String = "rts",
@@ -124,7 +127,9 @@ object StreamingOps {
     * and the broadcast hint keeps the dimension off the shuffle path, so
     * the stream side never exchanges. Left join: events with no dimension
     * row pass through with nulls (an inner join would silently drop
-    * them). The same function is the batch enrichment operator. */
+    * them). The same function is the batch enrichment operator.
+    *
+    * Test-only: backs COVERAGE.md's "Stream-static dimension enrichment" row. */
   def enrichWithStatic(stream: DataFrame, dim: DataFrame,
                        keyCol: String): DataFrame =
     stream.join(broadcast(dim), Seq(keyCol), "left")
@@ -133,7 +138,9 @@ object StreamingOps {
     * whose PK was already seen, with state bounded by the event-time
     * watermark — `dropDuplicatesWithinWatermark`, so a replayed micro-batch
     * (at-least-once source) cannot double-insert, and state does not grow
-    * with the full history. */
+    * with the full history.
+    *
+    * Test-only: backs COVERAGE.md's "Streaming: watermark-bounded dedup" row. */
   def dedupeStreamByPk(events: DataFrame, pkCols: Seq[String],
                        tsCol: String = "ts",
                        delay: String = "10 minutes"): DataFrame =
@@ -170,15 +177,69 @@ object StreamingOps {
       .select(col(idCol), col("band"), col("matched_id"))
   }
 
+  // ---- the mutable-corpus indexes (winnow, band, exact, image, video
+  // frame): one layout per kind, one micro-batch core for all five ----
+
+  /** Where one kind of mutable index keeps its rows: primary key, sort
+    * order and the content-derived bucket `kb` of a row. Defined once per
+    * kind below and read by its maintainer and by
+    * [[IndexSoak]]'s seeds and rebuild references. */
+  private[streaming] case class IndexLayout(pkCols: Seq[String],
+                                            sortCols: Seq[String], kb: Column)
+
+  private def hashBucket(c: Column, n: Int): Column =
+    pmod(graft.functions.ColumnFns.md5Long(c), lit(n.toLong))
+
+  /** Winnow postings (id, fp_hash), bucketed by the fingerprint. */
+  private[streaming] def winnowLayout(idCol: String, keyBuckets: Int) =
+    IndexLayout(Seq(idCol, "fp_hash"), Seq("fp_hash", idCol),
+      hashBucket(col("fp_hash").cast("string"), keyBuckets))
+
+  /** MinHash bands (id, band, band_key), bucketed by (band, band_key). */
+  private def bandLayout(idCol: String, keyBuckets: Int) =
+    IndexLayout(Seq(idCol, "band"), Seq("band_key", idCol),
+      hashBucket(concat_ws("|", col("band"), col("band_key")), keyBuckets))
+
+  /** Exact-dup postings (id, content_key), bucketed by the content key. */
+  private def exactLayout(idCol: String, keyBuckets: Int) =
+    IndexLayout(Seq(idCol), Seq("content_key", idCol),
+      pmod(col("content_key"), lit(keyBuckets.toLong)))
+
+  /** The six byte-bands of an image's or a video frame's aHash, bucketed
+    * by (band, band_key) and the media id's shard (see
+    * [[maintainImageIndexAndFlag]] for why the id shard). */
+  private[streaming] def mediaLayout(perFrame: Boolean, keyBuckets: Int,
+                                     idShards: Int = mediaIdShards) = {
+    val frame = if (perFrame) Seq("frame_idx") else Nil
+    IndexLayout(("media_id" +: frame) :+ "band", "band_key" +: "media_id" +: frame,
+      mediaKb(keyBuckets, hashBucket(col("media_id").cast("string"), idShards)))
+  }
+
+  /** The media maintainers' default id-shard count. */
+  private[streaming] val mediaIdShards = 16
+
+  /** The media bucket key for id shard `sb`: md5(band | band_key | sb) %
+    * keyBuckets. */
+  private def mediaKb(keyBuckets: Int, sb: Column): Column =
+    hashBucket(concat_ws("|", col("band"), col("band_key"), sb), keyBuckets)
+
+  /** Split each row's 48-bit `ahash` into its six byte-bands. */
+  private[streaming] def mediaBands(hashes: DataFrame): DataFrame =
+    hashes.withColumn("band", explode(sequence(lit(0), lit(5))))
+      .withColumn("band_key", expr("shiftrightunsigned(ahash, band * 8) & 255"))
+
+  /** The pk side map's bucket of an id (see [[upsertMutableIndex]]). */
+  private[streaming] def pkb(idCol: String, keyBuckets: Int): Column =
+    hashBucket(col(idCol).cast("string"), keyBuckets)
+
   /** One micro-batch of MUTABLE-CORPUS index maintenance — the shared
-    * engine of the exact/band/winnow/image maintainers (r13). Inputs:
+    * engine of all five index maintainers (r13). Inputs:
     * `rows` = the batch's CURRENT index rows, already carrying the
     * content-derived partition bucket `kb`; `batchIds` = the distinct
     * re-ingested ids from the RAW batch — passed separately because an
     * id whose new row set is EMPTY (a doc shrunk below the winnow
     * window, an image re-ingested as an undecodable payload) must still
-    * erase its old rows. Returns the batch's content buckets for the
-    * caller's partition-pruned flag read.
+    * erase its old rows.
     *
     * Why a side map: the index is bucketed by CONTENT-derived keys so
     * the flag read can prune to the batch's buckets (cost ∝ batch,
@@ -208,21 +269,17 @@ object StreamingOps {
     * the returned frames instead of re-running the derivation
     * (shingling / MinHash / image decode) or re-reading the buckets just
     * written. The returned frames are pins (the upsert's included) that
-    * live for one micro-batch: every caller runs inside a
-    * [[graft.Pin.scope]], which frees them once the flags are written. */
+    * live for one micro-batch: the [[MicroBatch]] driver's
+    * [[graft.Pin.scope]] frees them once the flags are written. */
   private def upsertMutableIndex(rows: DataFrame, batchIds: DataFrame,
-                                 idCol: String, pkCols: Seq[String],
-                                 sortCols: Seq[String], indexDir: String,
-                                 keyBuckets: Int)
+                                 idCol: String, layout: IndexLayout,
+                                 indexDir: String, keyBuckets: Int)
       : (IndexedSeq[Long], DataFrame, DataFrame) = {
     val spark = rows.sparkSession
     val pkMapDir = s"${indexDir}_pk"
-    def pkb(c: org.apache.spark.sql.Column) =
-      pmod(graft.functions.ColumnFns.md5Long(c.cast("string")),
-        lit(keyBuckets.toLong))
-    val pinned = Pin(rows.withColumn("pkb", pkb(col(idCol)))) // ≤ batch-rows; read 4x below
+    val pinned = Pin(rows.withColumn("pkb", pkb(idCol, keyBuckets))) // ≤ batch-rows; read 4x below
     val ids = Pin(batchIds.select(col(idCol)).distinct()
-      .withColumn("pkb", pkb(col(idCol))))
+      .withColumn("pkb", pkb(idCol, keyBuckets)))
     // bounded metadata (≤ keyBuckets longs each), ONE job for both
     // bucket sets (r15: was two collect jobs — the fixed per-batch
     // constant is scheduler overhead × job count, so fold)
@@ -256,7 +313,8 @@ object StreamingOps {
     // replaced three scoped disk reads + two collects per batch with zero.
     val (writtenIdx, _) =
       graft.eth.Sinks.upsertBucketedParquetReturning(pinned.drop("pkb"),
-        indexDir, pkCols = pkCols, bucketCol = "kb", sortCols = sortCols,
+        indexDir, pkCols = layout.pkCols, bucketCol = "kb",
+        sortCols = layout.sortCols,
         newBuckets = Some(touched), dropOldKeys = Some(ids.select(col(idCol))))
     // side map AFTER the index (the crash-replay ordering above): one
     // (id, kb) row per bucket the id now lives in, replaced wholesale
@@ -273,6 +331,34 @@ object StreamingOps {
     (newTouched, pinned.drop("pkb"), flagIdx)
   }
 
+  /** The five index maintainers' one loop. Per micro-batch: derive the
+    * batch's index rows (`rowsOf`; `layout.kb` adds their bucket), fold
+    * them in with [[upsertMutableIndex]] — upsert BEFORE flag, so two
+    * near-duplicates arriving in the SAME batch still flag each other —
+    * then write `flag(batch rows, candidate index rows)` to
+    * `flagsDir/batch=<id>` (overwrite: a replayed batch rewrites its own
+    * dir). The candidates are the post-upsert rows of the batch's own
+    * content buckets unless `candidates` reads them elsewhere. A batch
+    * that indexes nothing (every doc below the winnow window, every
+    * payload undecodable) still erased its ids' stale rows; it flags
+    * against an empty index, so its flags are empty but typed and
+    * replay stays shape-consistent. */
+  private def maintainIndex(stream: DataFrame, indexDir: String,
+                            flagsDir: String, checkpointDir: String,
+                            idCol: String, layout: IndexLayout,
+                            keyBuckets: Int)(
+      rowsOf: DataFrame => DataFrame,
+      flag: (DataFrame, DataFrame) => DataFrame,
+      candidates: (DataFrame, DataFrame) => DataFrame = (_, own) => own)
+      : StreamingQuery =
+    MicroBatch.start(stream, checkpointDir) { (batch, batchId) =>
+      val (touched, pinned, own) = upsertMutableIndex(
+        rowsOf(batch).withColumn("kb", layout.kb), batch, idCol, layout,
+        indexDir, keyBuckets)
+      flag(pinned, if (touched.isEmpty) own else candidates(pinned, own))
+        .write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+    }
+
   /** Streaming PARTIAL-OVERLAP ingest — [[maintainBandIndexAndFlag]]'s
     * loop over winnowing fingerprints instead of MinHash bands: per
     * micro-batch, winnow the batch ([[graft.llm.TextAnalysis
@@ -285,60 +371,28 @@ object StreamingOps {
     * whose pruned-index posting exceeds `maxDf` are dropped before
     * pairing, so a license-header fingerprint every doc carries can
     * never pay df² pair work at flag time. Index IO prunes to the
-    * batch's touched key buckets on both the upsert and the flag read. */
+    * batch's touched key buckets on both the upsert and the flag read.
+    * MUTABLE-CORPUS SAFE (r13): a changed text can DROP fingerprints, and
+    * a doc that shrinks below the winnow window erases its rows entirely
+    * — the wholesale id-replace of [[upsertMutableIndex]]. */
   def maintainWinnowIndexAndFlag(docs: DataFrame, indexDir: String,
                                  flagsDir: String, checkpointDir: String,
                                  idCol: String = "doc_id",
                                  textCol: String = "text",
                                  minShared: Int = 2, maxDf: Int = 50,
-                                 keyBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        Pin.scope {
-          val spark = batch.sparkSession
-          // MUTABLE-CORPUS SAFE (r13): a changed text can DROP fingerprints
-          // whose (doc, fp_hash) pks then collide with nothing — exactly
-          // the wholesale-replace case [[upsertMutableIndex]] exists for
-          // (a doc that shrinks below the winnow window erases its rows
-          // entirely: `batchIds` comes from the RAW batch, not from fps).
-          val fps = graft.llm.TextAnalysis.winnowFingerprints(
-              batch.toDF(), idCol, textCol)
-            .select(col(idCol), col("fp_hash")).distinct()
-            .withColumn("kb", pmod(graft.functions.ColumnFns.md5Long(
-              col("fp_hash").cast("string")), lit(keyBuckets.toLong)))
-          val (newTouched, pinnedFps, flagIdx) = upsertMutableIndex(fps,
-            batch.toDF().select(col(idCol)), idCol,
-            pkCols = Seq(idCol, "fp_hash"), sortCols = Seq("fp_hash", idCol),
-            indexDir, keyBuckets)
-          val flags =
-            if (newTouched.isEmpty) {
-              // every batch doc was shorter than the winnow window: the
-              // batch indexes nothing and can overlap nothing (any STALE
-              // rows of these docs were just erased) — write the empty
-              // (typed) flags so replay stays shape-consistent
-              fps.limit(0).select(col(idCol),
-                col(idCol).as("matched_id"), lit(0L).as("n_shared"))
-            } else {
-              val wFp = org.apache.spark.sql.expressions.Window
-                .partitionBy(col("fp_hash"))
-              // the post-upsert bucket content, served from the upsert's
-              // returned frame — no re-listing, no re-read (r15)
-              val idx = flagIdx
-                .withColumn("__df", count(lit(1)).over(wFp))
-                .filter(col("__df") <= maxDf) // MOSS boilerplate rule
-                .select(col("fp_hash"), col(idCol).as("matched_id"))
-              pinnedFps.join(idx, "fp_hash")
-                .filter(col(idCol) =!= col("matched_id"))
-                .groupBy(col(idCol), col("matched_id"))
-                .agg(count(lit(1)).as("n_shared"))
-                .filter(col("n_shared") >= minShared)
-            }
-          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                                 keyBuckets: Int = 64): StreamingQuery =
+    maintainIndex(docs, indexDir, flagsDir, checkpointDir, idCol,
+        winnowLayout(idCol, keyBuckets), keyBuckets)(
+      batch => graft.llm.TextAnalysis.winnowFingerprints(batch, idCol, textCol)
+        .select(col(idCol), col("fp_hash")).distinct(),
+      (fps, idx) => fps
+        .join(idx.withColumn("__df", count(lit(1)).over(Window.partitionBy(col("fp_hash"))))
+          .filter(col("__df") <= maxDf) // MOSS boilerplate rule
+          .select(col("fp_hash"), col(idCol).as("matched_id")), "fp_hash")
+        .filter(col(idCol) =!= col("matched_id"))
+        .groupBy(col(idCol), col("matched_id"))
+        .agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= minShared))
 
   /** The full incremental-dedup ingest loop in streaming form: per
     * micro-batch, (1) fold the batch's bands into the index via the
@@ -354,54 +408,23 @@ object StreamingOps {
     * (not the 4 raw band ids): per-batch index IO — the upsert's
     * read-merge-write AND the flag join's read — is proportional to the
     * touched fraction, not the whole corpus, and write parallelism is not
-    * capped at the band count. The batch's touched-bucket list (bounded
-    * by `keyBuckets`) is computed once and drives both sides: it is
-    * passed to the upsert as `newBuckets` (skipping its fallback
-    * derivation) and filters the flag read down to the touched partitions
-    * — kb is a pure function of (band, band_key), so pruning the read to
-    * the batch's kb values loses no candidate match. Index read errors
-    * surface loudly — only the very first batch (no index yet) skips the
-    * pre-existence check, by writing before flagging.
-    */
+    * capped at the band count. kb is a pure function of (band, band_key),
+    * so pruning the flag read to the batch's kb values loses no candidate
+    * match. A re-ingested doc's band rows are replaced wholesale via the
+    * pk→bucket side map, whatever the new band keys (r13). */
   def maintainBandIndexAndFlag(docs: DataFrame, indexDir: String,
                                flagsDir: String, checkpointDir: String,
                                idCol: String = "doc_id",
                                textCol: String = "text",
-                               keyBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        Pin.scope {
-          val spark = batch.sparkSession
-          // MUTABLE-CORPUS SAFE (r13): [[upsertMutableIndex]] replaces a
-          // re-ingested doc's band rows wholesale via the pk→bucket side
-          // map, whatever the new band keys.
-          val bands = graft.llm.Dedup.minhashBands(batch.toDF(), idCol, textCol)
-            .withColumn("kb", pmod(graft.functions.ColumnFns.md5Long(
-              concat_ws("|", col("band"), col("band_key"))), lit(keyBuckets.toLong)))
-          val (newTouched, pinnedBands, flagIdx) = upsertMutableIndex(bands,
-            batch.toDF().select(col(idCol)), idCol,
-            pkCols = Seq(idCol, "band"), sortCols = Seq("band_key", idCol),
-            indexDir, keyBuckets)
-          val flags =
-            if (newTouched.isEmpty) {
-              // empty batch: nothing indexed, nothing to flag — typed
-              // empty so replay stays shape-consistent
-              bands.limit(0)
-                .select(col(idCol), col("band"), col(idCol).as("matched_id"))
-            } else {
-              // post-upsert bucket content from the upsert's returned frame
-              val idx = flagIdx
-                .select(col("band"), col("band_key"), col(idCol).as("matched_id"))
-              pinnedBands.join(idx, Seq("band", "band_key"))
-                .filter(col(idCol) =!= col("matched_id"))
-                .select(col(idCol), col("band"), col("matched_id"))
-            }
-          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                               keyBuckets: Int = 64): StreamingQuery =
+    maintainIndex(docs, indexDir, flagsDir, checkpointDir, idCol,
+        bandLayout(idCol, keyBuckets), keyBuckets)(
+      batch => graft.llm.Dedup.minhashBands(batch, idCol, textCol),
+      (bands, idx) => bands
+        .join(idx.select(col("band"), col("band_key"), col(idCol).as("matched_id")),
+          Seq("band", "band_key"))
+        .filter(col(idCol) =!= col("matched_id"))
+        .select(col(idCol), col("band"), col("matched_id")))
 
   /** Streaming EXACT-dup ingest — the [[maintainBandIndexAndFlag]] loop
     * with the content-hash identity in place of MinHash bands: per
@@ -415,49 +438,30 @@ object StreamingOps {
     * buckets on both the upsert and the flag read — per-batch cost ∝
     * batch, never corpus.
     *
-    * MUTABLE-CORPUS SAFE (r13, like ALL FOUR index maintainers — exact,
-    * band, winnow, image — via [[upsertMutableIndex]]): the index is
-    * bucketed by `content_key` — derived from the TEXT — so re-ingesting
-    * an existing `doc_id` with CHANGED text lands in a different bucket,
-    * and a purely content-bucket-pruned upsert would never see the stale
-    * (doc_id, old content_key) row; the shared pk→bucket side map
-    * supplies the old buckets and the wholesale id-replace erases them
-    * (full mechanics + crash-replay analysis on the helper). */
+    * MUTABLE-CORPUS SAFE (r13, like all five index maintainers — exact,
+    * band, winnow, image, video frame — via [[upsertMutableIndex]]): the
+    * index is bucketed by `content_key` — derived from the TEXT — so
+    * re-ingesting an existing `doc_id` with CHANGED text lands in a
+    * different bucket, and a purely content-bucket-pruned upsert would
+    * never see the stale (doc_id, old content_key) row; the shared
+    * pk→bucket side map supplies the old buckets and the wholesale
+    * id-replace erases them (full mechanics + crash-replay analysis on
+    * the helper).
+    *
+    * Test-only: backs COVERAGE.md's "Streaming EXACT-dup index maintenance" row. */
   def maintainExactDupIndexAndFlag(docs: DataFrame, indexDir: String,
                                    flagsDir: String, checkpointDir: String,
                                    idCol: String = "doc_id",
                                    textCol: String = "text",
-                                   keyBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        Pin.scope {
-          val spark = batch.sparkSession
-          val keyed = batch.toDF().select(col(idCol),
-              graft.functions.ColumnFns.md5Long(col(textCol)).as("content_key"))
-            .withColumn("kb", pmod(col("content_key"), lit(keyBuckets.toLong)))
-          val (newTouched, pinnedKeyed, flagIdx) = upsertMutableIndex(keyed,
-            batch.toDF().select(col(idCol)), idCol,
-            pkCols = Seq(idCol), sortCols = Seq("content_key", idCol),
-            indexDir, keyBuckets)
-          val flags =
-            if (newTouched.isEmpty) {
-              // empty batch: typed empty flags, shape-consistent on replay
-              keyed.limit(0)
-                .select(col(idCol), col("content_key"), col(idCol).as("matched_id"))
-            } else {
-              // post-upsert bucket content from the upsert's returned frame
-              val idx = flagIdx
-                .select(col("content_key"), col(idCol).as("matched_id"))
-              pinnedKeyed.join(idx, "content_key")
-                .filter(col(idCol) =!= col("matched_id"))
-                .select(col(idCol), col("content_key"), col("matched_id"))
-            }
-          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                                   keyBuckets: Int = 64): StreamingQuery =
+    maintainIndex(docs, indexDir, flagsDir, checkpointDir, idCol,
+        exactLayout(idCol, keyBuckets), keyBuckets)(
+      batch => batch.select(col(idCol),
+        graft.functions.ColumnFns.md5Long(col(textCol)).as("content_key")),
+      (keyed, idx) => keyed
+        .join(idx.select(col("content_key"), col(idCol).as("matched_id")), "content_key")
+        .filter(col(idCol) =!= col("matched_id"))
+        .select(col(idCol), col("content_key"), col("matched_id")))
 
   /** Streaming image-dedup ingest — [[maintainBandIndexAndFlag]]'s loop
     * with the REAL image path: per micro-batch, decode the BMP payloads
@@ -468,8 +472,10 @@ object StreamingOps {
     * maxHamming < 6 by pigeonhole, the streaming twin of
     * [[graft.llm.Dedup.sigBandPairs]]. Upsert-before-flag keeps
     * same-batch twins visible to each other; undecodable payloads drop
-    * at the codec boundary. Index IO prunes to the batch's touched key
-    * buckets on both the upsert and the flag read.
+    * at the codec boundary, and one re-ingested as an UNDECODABLE payload
+    * (no aHash rows at all) erases its id's bands (r13). Index IO prunes
+    * to the batch's touched key buckets on both the upsert and the flag
+    * read.
     *
     * ID-SHARDED bucket key (r15 — the media scale gate's finding): the
     * raw (band, band_key) domain is only 6 × 256 = 1,536 values, so a
@@ -488,85 +494,58 @@ object StreamingOps {
   def maintainImageIndexAndFlag(media: DataFrame, indexDir: String,
                                 flagsDir: String, checkpointDir: String,
                                 maxHamming: Int = 5, keyBuckets: Int = 64,
-                                idShards: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        Pin.scope {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val hashes = graft.llm.Multimodal.aHash(batch.toDF()
-              .select(col("media_id").cast("long").as("media_id"),
-                col("payload"), col("mime").cast("string").as("mime"))
-              .as[graft.llm.Multimodal.MediaRecord]).toDF()
-          val banded = hashes
-            .select(col("media_id"), col("ahash"),
-              explode(sequence(lit(0), lit(5))).as("band"))
-            .withColumn("band_key",
-              expr("shiftrightunsigned(ahash, band * 8) & 255"))
-            .withColumn("kb", mediaKb(keyBuckets, idShards,
-              pmod(graft.functions.ColumnFns.md5Long(
-                col("media_id").cast("string")), lit(idShards.toLong))))
-          // MUTABLE-CORPUS SAFE (r13): batchIds come from the RAW batch —
-          // a media id re-ingested with changed bytes replaces its six
-          // band rows wholesale, and one re-ingested as an UNDECODABLE
-          // payload (which yields no aHash rows at all) erases them.
-          val (touched, pinnedBanded, _) = upsertMutableIndex(banded,
-            batch.toDF().select(col("media_id").cast("long").as("media_id")),
-            "media_id",
-            pkCols = Seq("media_id", "band"), sortCols = Seq("band_key", "media_id"),
-            indexDir, keyBuckets)
-          val flags =
-            if (touched.isEmpty) {
-              // nothing decodable this batch (stale rows of its ids were
-              // still erased): typed empty flags, shape-consistent
-              banded.limit(0)
-                .select(col("media_id"), col("media_id").as("matched_id"),
-                  lit(0).cast("int").as("hamming"))
-            } else {
-              // candidate fetch across ALL id shards of the batch's combos
-              // (scoped read; bounded by keyBuckets after the modulus)
-              val idx = mediaCandidates(spark, indexDir, pinnedBanded,
-                  keyBuckets, idShards)
-                .select(col("band"), col("band_key"),
-                  col("media_id").as("matched_id"), col("ahash").as("matched_hash"))
-              pinnedBanded.join(idx, Seq("band", "band_key"))
-                .filter(col("media_id") =!= col("matched_id"))
-                .withColumn("hamming",
-                  bit_count(col("ahash").bitwiseXOR(col("matched_hash"))))
-                .filter(col("hamming") <= maxHamming)
-                .select(col("media_id"), col("matched_id"), col("hamming"))
-                .distinct()
-            }
-          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                                idShards: Int = mediaIdShards): StreamingQuery =
+    maintainMediaIndex(media, indexDir, flagsDir, checkpointDir,
+      perFrame = false, maxHamming, keyBuckets, idShards)(
+      graft.llm.Multimodal.aHash(_).toDF())
 
-  /** The media maintainers' id-sharded bucket key:
-    * md5(band | band_key | sb) % keyBuckets. */
-  private def mediaKb(keyBuckets: Int, idShards: Int,
-                      sb: org.apache.spark.sql.Column) =
-    pmod(graft.functions.ColumnFns.md5Long(
-      concat_ws("|", col("band"), col("band_key"), sb)),
-      lit(keyBuckets.toLong))
+  /** The image and video-frame maintainers' shared loop over a
+    * `(media_id, payload, mime)` stream: `hashes` decodes a batch's
+    * records to aHash rows (per frame when `perFrame`), whose six
+    * byte-bands go into the id-sharded media layout; flags are the
+    * Hamming ≤ `maxHamming` matches against OTHER media ids among the
+    * candidates [[mediaCandidates]] fetches. */
+  private def maintainMediaIndex(media: DataFrame, indexDir: String,
+                                 flagsDir: String, checkpointDir: String,
+                                 perFrame: Boolean, maxHamming: Int,
+                                 keyBuckets: Int, idShards: Int)(
+      hashes: Dataset[graft.llm.Multimodal.MediaRecord] => DataFrame)
+      : StreamingQuery = {
+    val frame = if (perFrame) Seq("frame_idx") else Nil
+    val matchedFrame = if (perFrame) Seq("matched_frame") else Nil
+    maintainIndex(
+      media.select(col("media_id").cast("long").as("media_id"),
+        col("payload"), col("mime").cast("string").as("mime")),
+      indexDir, flagsDir, checkpointDir, "media_id",
+      mediaLayout(perFrame, keyBuckets, idShards), keyBuckets)(
+      batch => mediaBands(hashes(batch.as(
+          org.apache.spark.sql.Encoders.product[graft.llm.Multimodal.MediaRecord]))
+        .select(("media_id" +: frame :+ "ahash").map(col): _*)),
+      (banded, idx) => banded
+        .join(idx.select(Seq(col("band"), col("band_key"), col("media_id").as("matched_id")) ++
+            frame.map(col(_).as("matched_frame")) :+ col("ahash").as("matched_hash"): _*),
+          Seq("band", "band_key"))
+        .filter(col("media_id") =!= col("matched_id")) // cross-media only
+        .withColumn("hamming", bit_count(col("ahash").bitwiseXOR(col("matched_hash"))))
+        .filter(col("hamming") <= maxHamming)
+        .select((("media_id" +: frame :+ "matched_id") ++ matchedFrame :+ "hamming").map(col): _*)
+        .distinct(),
+      (banded, _) => mediaCandidates(indexDir, banded, keyBuckets, idShards))
+  }
 
   /** Read the full Hamming-candidate posting for a batch: the batch's
     * distinct (band, band_key) combos × every id shard, collapsed
     * through the kb modulus (≤ keyBuckets values — one bounded collect),
     * then a scoped bucket read. Same-batch twins are visible because
     * the upsert ran first. */
-  private def mediaCandidates(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String,
-                              pinnedBanded: DataFrame, keyBuckets: Int,
-                              idShards: Int): DataFrame = {
+  private def mediaCandidates(indexDir: String, pinnedBanded: DataFrame,
+                              keyBuckets: Int, idShards: Int): DataFrame = {
     val candKb = pinnedBanded
       .select(col("band"), col("band_key")).distinct()
       .withColumn("__sb", explode(sequence(lit(0), lit(idShards - 1))))
-      .select(mediaKb(keyBuckets, idShards, col("__sb")).as("kb"))
+      .select(mediaKb(keyBuckets, col("__sb")).as("kb"))
       .distinct().collect().map(_.getLong(0)).toIndexedSeq
-    graft.eth.Sinks.readBuckets(spark, indexDir, "kb", candKb)
+    graft.eth.Sinks.readBuckets(pinnedBanded.sparkSession, indexDir, "kb", candKb)
       .getOrElse(pinnedBanded.limit(0))
   }
 
@@ -575,14 +554,14 @@ object StreamingOps {
     * payloads (Y4M or MJPEG-AVI — [[graft.llm.Multimodal.videoFrameHashes]]
     * is container-sniffed) decode to every-`every`-th-frame aHashes,
     * whose 6 byte-bands fold into a hash-bucketed index keyed
-    * (media_id, frame_idx, band); the batch then flags its frames
-    * against OTHER videos' frames at Hamming ≤ `maxHamming` (within-
-    * video matches are expected — a static scene — and excluded). The
-    * stride pair samples the hash window across the frame exactly like
-    * the still path (stride 8 = one sample per JPEG block, the
-    * MJPEG-correct setting). Videos whose frames are smaller than the
-    * strided window (≤56×40 px at the defaults) fall back to a dense
-    * stride-1 hash instead of silently dropping from the index
+    * (media_id, frame_idx, band) with the same id-sharded bucket key; the
+    * batch then flags its frames against OTHER videos' frames at Hamming
+    * ≤ `maxHamming` (within-video matches are expected — a static scene
+    * — and excluded). The stride pair samples the hash window across the
+    * frame exactly like the still path (stride 8 = one sample per JPEG
+    * block, the MJPEG-correct setting). Videos whose frames are smaller
+    * than the strided window (≤56×40 px at the defaults) fall back to a
+    * dense stride-1 hash instead of silently dropping from the index
     * (`fallbackStride1` on the decode call) — the fallback is per-video
     * deterministic, so the maintained index stays rebuild-equivalent.
     *
@@ -598,99 +577,56 @@ object StreamingOps {
                                      every: Int = 1, maxHamming: Int = 5,
                                      keyBuckets: Int = 64,
                                      strideX: Int = 8, strideY: Int = 8,
-                                     idShards: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        Pin.scope {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val hashes = graft.llm.Multimodal.videoFrameHashes(batch.toDF()
-              .select(col("media_id").cast("long").as("media_id"),
-                col("payload"), col("mime").cast("string").as("mime"))
-              .as[graft.llm.Multimodal.MediaRecord],
-            every = every, strideX = strideX, strideY = strideY,
-            fallbackStride1 = true).toDF()
-          // id-sharded kb (see maintainImageIndexAndFlag): the raw
-          // (band, band_key) domain caps at 1,536 values — without the
-          // shard, bucket size grows with the corpus and small-batch
-          // merges rewrite a constant fraction of the index
-          val banded = hashes
-            .select(col("media_id"), col("frame_idx"), col("ahash"),
-              explode(sequence(lit(0), lit(5))).as("band"))
-            .withColumn("band_key",
-              expr("shiftrightunsigned(ahash, band * 8) & 255"))
-            .withColumn("kb", mediaKb(keyBuckets, idShards,
-              pmod(graft.functions.ColumnFns.md5Long(
-                col("media_id").cast("string")), lit(idShards.toLong))))
-          val (touched, pinnedBanded, _) = upsertMutableIndex(banded,
-            batch.toDF().select(col("media_id").cast("long").as("media_id")),
-            "media_id",
-            pkCols = Seq("media_id", "frame_idx", "band"),
-            sortCols = Seq("band_key", "media_id", "frame_idx"),
-            indexDir, keyBuckets)
-          val flags =
-            if (touched.isEmpty) {
-              banded.limit(0)
-                .select(col("media_id"), col("frame_idx"),
-                  col("media_id").as("matched_id"),
-                  col("frame_idx").as("matched_frame"),
-                  lit(0).cast("int").as("hamming"))
-            } else {
-              val idx = mediaCandidates(spark, indexDir, pinnedBanded,
-                  keyBuckets, idShards)
-                .select(col("band"), col("band_key"),
-                  col("media_id").as("matched_id"),
-                  col("frame_idx").as("matched_frame"),
-                  col("ahash").as("matched_hash"))
-              pinnedBanded.join(idx, Seq("band", "band_key"))
-                .filter(col("media_id") =!= col("matched_id")) // cross-video only
-                .withColumn("hamming",
-                  bit_count(col("ahash").bitwiseXOR(col("matched_hash"))))
-                .filter(col("hamming") <= maxHamming)
-                .select(col("media_id"), col("frame_idx"),
-                  col("matched_id"), col("matched_frame"), col("hamming"))
-                .distinct()
-            }
-          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                                     idShards: Int = mediaIdShards): StreamingQuery =
+    maintainMediaIndex(media, indexDir, flagsDir, checkpointDir,
+      perFrame = true, maxHamming, keyBuckets, idShards)(
+      graft.llm.Multimodal.videoFrameHashes(_, every = every,
+        strideX = strideX, strideY = strideY, fallbackStride1 = true).toDF())
+
+  // ---- batch-keyed partials: relations, CMS, KMV, centroids ----
+
+  /** Upsert one micro-batch's `partials` into bucket `batchId %
+    * keyBuckets`, stamped `batchCol = batchId` (part of `pkCols`).
+    * `foreachBatch` batch ids are STABLE across retries (the documented
+    * Structured Streaming exactly-once recipe), so a replayed batch
+    * overwrites its own partials — no double counting, no external dedup
+    * state — and the queryable table is a merge-on-read over batches. */
+  private def upsertBatchPartials(partials: DataFrame, tableDir: String,
+                                  batchId: Long, keyBuckets: Int,
+                                  pkCols: Seq[String], sortCols: Seq[String],
+                                  batchCol: String = "batch_id",
+                                  bucketCol: String = "bk",
+                                  dropOldWhere: Option[Column] = None): Unit = {
+    val bucket = batchId % keyBuckets.toLong
+    graft.eth.Sinks.upsertBucketedParquet(
+      partials.withColumn(batchCol, lit(batchId)).withColumn(bucketCol, lit(bucket)),
+      tableDir, pkCols = pkCols, bucketCol = bucketCol, sortCols = sortCols,
+      newBuckets = Some(Seq(bucket)), dropOldWhere = dropOldWhere)
+  }
 
   /** Streaming maintenance of the address-relations table
     * ([[graft.eth.Relations]]'s contract driven by a stream): each
     * micro-batch of transfer rows (from_address, to_address, value,
     * block_number, ok) collapses to a per-batch partial aggregate keyed
-    * by the micro-batch id and lands through the idempotent PK upsert.
-    * `foreachBatch` batchIds are STABLE across retries (the documented
-    * Structured Streaming exactly-once recipe), so a replayed batch
-    * overwrites its own partials — no double counting, no external
-    * dedup state. Read the queryable table with
+    * by the micro-batch id and lands through the idempotent PK upsert
+    * ([[upsertBatchPartials]]). Read the queryable table with
     * [[graft.eth.Relations.readRelations]]. */
   def maintainRelations(transfers: DataFrame, tableDir: String,
-                        checkpointDir: String, keyBuckets: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    transfers.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val delta = batch.toDF()
-          .filter(col("to_address").isNotNull)
-          .groupBy(col("from_address"), col("to_address"))
-          .agg(count(lit(1)).as("n_txs"),
-            sum(when(col("ok"), col("value").cast("decimal(38,0)"))
-              .otherwise(lit(0).cast("decimal(38,0)"))).as("wei_total"),
-            min(col("block_number")).as("first_block"),
-            max(col("block_number")).as("last_block"))
-          .withColumn("batch_lo", lit(batchId))
-          .withColumn("block_id_group", lit(batchId % keyBuckets.toLong))
-        graft.eth.Sinks.upsertBucketedParquet(delta, tableDir,
-          pkCols = Seq("from_address", "to_address", "batch_lo"),
-          bucketCol = "block_id_group",
-          sortCols = Seq("from_address", "to_address"),
-          newBuckets = Some(Seq(batchId % keyBuckets.toLong)))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                        checkpointDir: String, keyBuckets: Int = 16): StreamingQuery =
+    MicroBatch.start(transfers, checkpointDir) { (batch, batchId) =>
+      val delta = batch
+        .filter(col("to_address").isNotNull)
+        .groupBy(col("from_address"), col("to_address"))
+        .agg(count(lit(1)).as("n_txs"),
+          sum(when(col("ok"), col("value").cast("decimal(38,0)"))
+            .otherwise(lit(0).cast("decimal(38,0)"))).as("wei_total"),
+          min(col("block_number")).as("first_block"),
+          max(col("block_number")).as("last_block"))
+      upsertBatchPartials(delta, tableDir, batchId, keyBuckets,
+        pkCols = Seq("from_address", "to_address", "batch_lo"),
+        sortCols = Seq("from_address", "to_address"),
+        batchCol = "batch_lo", bucketCol = "block_id_group")
+    }
 
   /** Exactly-once streaming maintenance of a [[graft.eth.Versioned]]
     * table — the foreachBatch contract done right: each micro-batch
@@ -701,19 +637,16 @@ object StreamingOps {
     * data written by a crash BEFORE the manifest rename is invisible and
     * rewritten by the replay. This is the missing half of checkpoint
     * recovery: Spark's checkpoint guarantees a batch is not SKIPPED, the
-    * txn marker guarantees it is not APPLIED TWICE. */
+    * txn marker guarantees it is not APPLIED TWICE.
+    *
+    * Test-only: backs COVERAGE.md's "Exactly-once streaming table maintenance" row. */
   def maintainVersioned(stream: DataFrame, tableDir: String,
                         checkpointDir: String, queryName: String,
-                        pkCols: Seq[String], bucketCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.eth.Versioned.commitTxn(batch.toDF(), tableDir, pkCols,
-          bucketCol, s"$queryName-$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                        pkCols: Seq[String], bucketCol: String): StreamingQuery =
+    MicroBatch.start(stream, checkpointDir) { (batch, batchId) =>
+      graft.eth.Versioned.commitTxn(batch, tableDir, pkCols,
+        bucketCol, s"$queryName-$batchId")
+    }
 
   /** Streaming SCD2 dimension maintenance: keep a versioned
     * valid_from/valid_to dimension ([[graft.operators.Scd2]]) current
@@ -734,75 +667,62 @@ object StreamingOps {
     * adjacent-difference boundaries never decrease under insertion — so
     * upserting by (key, version) always overwrites every previously
     * stored version of a touched key. Per-batch IO is proportional to
-    * the touched buckets, not the dimension. */
+    * the touched buckets, not the dimension.
+    *
+    * Test-only: backs COVERAGE.md's "Streaming SCD2 dimension maintenance" row. */
   def maintainScd2(changes: DataFrame, logDir: String, dimDir: String,
                    checkpointDir: String,
                    keyCol: String = "user_id", attrCol: String = "event_type",
                    tsCol: String = "ts", ordCol: String = "event_id",
-                   keyBuckets: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val kb = pmod(graft.functions.ColumnFns.md5Long(
-          col(keyCol).cast("string")), lit(keyBuckets.toLong))
-        val rows = batch.toDF()
-          .select(col(keyCol), col(attrCol), col(tsCol), col(ordCol))
-          .withColumn("kb", kb)
-        // bounded metadata: ≤ keyBuckets longs + the touched key frame
-        val touched = rows.select(col("kb")).distinct()
-          .collect().map(_.getLong(0)).toIndexedSeq
-        graft.eth.Sinks.upsertBucketedParquet(rows, logDir,
-          pkCols = Seq(keyCol, tsCol, ordCol), bucketCol = "kb",
-          sortCols = Seq(keyCol, tsCol), newBuckets = Some(touched))
-        val touchedKeys = rows.select(col(keyCol)).distinct()
-        val history = spark.read.parquet(logDir)
-          .filter(col("kb").isin(touched: _*)) // partition-pruned read
-          .join(touchedKeys, Seq(keyCol), "left_semi")
-        val dim = graft.operators.Scd2
-          .buildIntervals(history, keyCol, attrCol, tsCol, ordCol)
-          .withColumn("kb", kb)
-        graft.eth.Sinks.upsertBucketedParquet(dim, dimDir,
-          pkCols = Seq(keyCol, "version"), bucketCol = "kb",
-          sortCols = Seq(keyCol, "version"), newBuckets = Some(touched))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                   keyBuckets: Int = 16): StreamingQuery =
+    MicroBatch.start(changes, checkpointDir) { (batch, _) =>
+      val spark = batch.sparkSession
+      val kb = hashBucket(col(keyCol).cast("string"), keyBuckets)
+      val rows = batch
+        .select(col(keyCol), col(attrCol), col(tsCol), col(ordCol))
+        .withColumn("kb", kb)
+      // bounded metadata: ≤ keyBuckets longs + the touched key frame
+      val touched = rows.select(col("kb")).distinct()
+        .collect().map(_.getLong(0)).toIndexedSeq
+      graft.eth.Sinks.upsertBucketedParquet(rows, logDir,
+        pkCols = Seq(keyCol, tsCol, ordCol), bucketCol = "kb",
+        sortCols = Seq(keyCol, tsCol), newBuckets = Some(touched))
+      val touchedKeys = rows.select(col(keyCol)).distinct()
+      val history = spark.read.parquet(logDir)
+        .filter(col("kb").isin(touched: _*)) // partition-pruned read
+        .join(touchedKeys, Seq(keyCol), "left_semi")
+      val dim = graft.operators.Scd2
+        .buildIntervals(history, keyCol, attrCol, tsCol, ordCol)
+        .withColumn("kb", kb)
+      graft.eth.Sinks.upsertBucketedParquet(dim, dimDir,
+        pkCols = Seq(keyCol, "version"), bucketCol = "kb",
+        sortCols = Seq(keyCol, "version"), newBuckets = Some(touched))
+    }
 
   /** Streaming count-min sketch maintenance — bounded-state heavy-hitter
     * tracking over an unbounded stream: per micro-batch, build the batch's
     * d×w cell counts ([[graft.operators.Sketches.cmsBuild]] — pure column
-    * work, shuffle cardinality d×w) and land them keyed by batchId via the
-    * idempotent PK upsert: a replayed batch overwrites ITS OWN partial
-    * cells (the [[maintainRelations]] exactly-once recipe), and the
-    * queryable sketch is the cell-wise SUM over batches
+    * work, shuffle cardinality d×w) and land them keyed by batchId via
+    * [[upsertBatchPartials]]: a replayed batch overwrites ITS OWN partial
+    * cells, and the queryable sketch is the cell-wise SUM over batches
     * ([[readCmsSketch]]) — CMS merge is exactly addition, so the
     * merge-on-read view equals the sketch of the whole history. Total
     * state: d×w rows per batch, independent of key cardinality — the
     * reason to sketch a stream instead of counting it. */
   def maintainCms(stream: DataFrame, tableDir: String, checkpointDir: String,
                   keyCol: String, d: Int = 3, w: Int = 64,
-                  keyBuckets: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val cells = graft.operators.Sketches
-          .cmsBuild(batch.toDF(), keyCol, d, w)
-          .withColumn("batch_id", lit(batchId))
-          .withColumn("bk", lit(batchId % keyBuckets.toLong))
-        graft.eth.Sinks.upsertBucketedParquet(cells, tableDir,
-          pkCols = Seq("row_id", "cell_id", "batch_id"), bucketCol = "bk",
-          sortCols = Seq("row_id", "cell_id"),
-          newBuckets = Some(Seq(batchId % keyBuckets.toLong)))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                  keyBuckets: Int = 16): StreamingQuery =
+    MicroBatch.start(stream, checkpointDir) { (batch, batchId) =>
+      upsertBatchPartials(graft.operators.Sketches.cmsBuild(batch, keyCol, d, w),
+        tableDir, batchId, keyBuckets,
+        pkCols = Seq("row_id", "cell_id", "batch_id"), sortCols = Seq("row_id", "cell_id"))
+    }
 
   /** Streaming KMV (bottom-k / theta) distinct-count maintenance — the
     * cardinality companion to [[maintainCms]]'s frequency tracking: per
     * micro-batch, the batch's bottom-k md5 value set
     * ([[graft.operators.Sketches.kmvValues]] — ≤ k rows) lands keyed by
-    * batchId through the idempotent PK upsert (a replayed batch rewrites
+    * batchId through [[upsertBatchPartials]] (a replayed batch rewrites
     * ITS OWN values — kmvValues is deterministic in the batch content,
     * so replay is exact), and the queryable sketch is the re-merged
     * bottom-k over all batches ([[readKmvSketch]]): bottom-k of a union
@@ -811,21 +731,13 @@ object StreamingOps {
     * the whole history. Total state: ≤ k rows per batch, independent of
     * key cardinality. */
   def maintainKmv(stream: DataFrame, tableDir: String, checkpointDir: String,
-                  keyCol: String, k: Int = 256, keyBuckets: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val vals = graft.operators.Sketches.kmvValues(batch.toDF(), keyCol, k)
-          .withColumn("batch_id", lit(batchId))
-          .withColumn("bk", lit(batchId % keyBuckets.toLong))
-        if (!vals.isEmpty)
-          graft.eth.Sinks.upsertBucketedParquet(vals, tableDir,
-            pkCols = Seq("batch_id", "__h"), bucketCol = "bk",
-            sortCols = Seq("__h"),
-            newBuckets = Some(Seq(batchId % keyBuckets.toLong)))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                  keyCol: String, k: Int = 256, keyBuckets: Int = 16): StreamingQuery =
+    MicroBatch.start(stream, checkpointDir) { (batch, batchId) =>
+      val vals = graft.operators.Sketches.kmvValues(batch, keyCol, k)
+      if (!vals.isEmpty)
+        upsertBatchPartials(vals, tableDir, batchId, keyBuckets,
+          pkCols = Seq("batch_id", "__h"), sortCols = Seq("__h"))
+    }
 
   /** Merge-on-read of [[maintainKmv]]'s per-batch value sets: re-take the
     * bottom k of the union → the 1-row KMV estimate of every key ingested
@@ -868,38 +780,30 @@ object StreamingOps {
     *
     * Scale shape per batch: one bounded centroid-state read (k×dim
     * rows), the per-row argmax fold (no batch shuffle), one k×dim
-    * partial aggregate, one single-bucket upsert. */
+    * partial aggregate, one single-bucket upsert ([[upsertBatchPartials]]). */
   def maintainCentroids(vectors: DataFrame, tableDir: String,
                         checkpointDir: String, initCentroids: DataFrame,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding", keyBuckets: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val hPath = new org.apache.hadoop.fs.Path(tableDir)
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val cents =
-          if (fs.exists(hPath)) readCentroidVectors(spark, tableDir)
-          else initCentroids.select(col(idCol).cast("long").as("cid"),
-            graft.llm.Similarity.microVec(vecCol).as("__cm"))
-        val corpus = batch.toDF().select(col(idCol),
-          graft.llm.Similarity.milliVec(vecCol).as("__vm"))
-        val partials = graft.llm.Similarity.quantizedAssign(corpus, cents)
-          .select(col("cid"), posexplode(col("__vm")).as(Seq("__p0", "__v")))
-          .select(col("cid"), (col("__p0") + 1).as("pos"), col("__v"))
-          .groupBy(col("cid"), col("pos"))
-          .agg(sum(col("__v")).as("sum_milli"), count(lit(1)).as("n_members"))
-          .withColumn("batch_id", lit(batchId))
-          .withColumn("bk", lit(batchId % keyBuckets.toLong))
-        graft.eth.Sinks.upsertBucketedParquet(partials, tableDir,
-          pkCols = Seq("batch_id", "cid", "pos"), bucketCol = "bk",
-          sortCols = Seq("cid", "pos"),
-          newBuckets = Some(Seq(batchId % keyBuckets.toLong)),
-          dropOldWhere = Some(col("batch_id") === batchId))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+                        vecCol: String = "embedding", keyBuckets: Int = 16): StreamingQuery =
+    MicroBatch.start(vectors, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val hPath = new org.apache.hadoop.fs.Path(tableDir)
+      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val cents =
+        if (fs.exists(hPath)) readCentroidVectors(spark, tableDir)
+        else initCentroids.select(col(idCol).cast("long").as("cid"),
+          graft.llm.Similarity.microVec(vecCol).as("__cm"))
+      val corpus = batch.select(col(idCol),
+        graft.llm.Similarity.milliVec(vecCol).as("__vm"))
+      val partials = graft.llm.Similarity.quantizedAssign(corpus, cents)
+        .select(col("cid"), posexplode(col("__vm")).as(Seq("__p0", "__v")))
+        .select(col("cid"), (col("__p0") + 1).as("pos"), col("__v"))
+        .groupBy(col("cid"), col("pos"))
+        .agg(sum(col("__v")).as("sum_milli"), count(lit(1)).as("n_members"))
+      upsertBatchPartials(partials, tableDir, batchId, keyBuckets,
+        pkCols = Seq("batch_id", "cid", "pos"), sortCols = Seq("cid", "pos"),
+        dropOldWhere = Some(col("batch_id") === batchId))
+    }
 
   /** Live-chain reorg DETECTION on ingest (the watch half of T6;
     * [[graft.eth.Ingest.resumeWithReorgCheck]] is the repair half, and
@@ -918,48 +822,44 @@ object StreamingOps {
     *
     * Scale shape per batch: one 1-row pruned predecessor read, the
     * bucket-partitioned continuity windows over the BATCH (not the
-    * store), two bounded upserts. */
+    * store), two bounded upserts.
+    *
+    * Test-only: backs COVERAGE.md's "parent-hash reorg DETECTION on ingest" (T6) row. */
   def watchParentHash(blocks: DataFrame, logDir: String, signalDir: String,
-                      checkpointDir: String, bucketSize: Long = 1000)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    blocks.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        Pin.scope {
-          val spark = batch.sparkSession
-          val hPath = new org.apache.hadoop.fs.Path(logDir)
-          val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // consumed three times below; bounded (one batch)
-          val bdf = Pin(batch.toDF()
-            .select(col("block_id").cast("long").as("block_id"),
-              col("block_hash"), col("parent_hash"))
-            .withColumn("block_id_group", expr(s"block_id div $bucketSize")))
-          val loRow = bdf.agg(min(col("block_id"))).collect()(0)
-          if (!loRow.isNullAt(0)) {
-            val lo = loRow.getLong(0)
-            val pred = if (fs.exists(hPath))
-              spark.read.parquet(logDir) // pruned to ONE bucket, ONE block
-                .filter(col("block_id_group") === (lo - 1) / bucketSize
-                  && col("block_id") === lo - 1)
-                .select(col("block_id"), col("block_hash"), col("parent_hash"),
-                  col("block_id_group"))
-            else bdf.limit(0)
-            val signals = graft.eth.Ingest
-              .detectReorgs(pred.unionByName(bdf), bucketSize = bucketSize)
-              .withColumn("block_id_group", expr(s"block_id div $bucketSize"))
-            // clean batches are the common case — don't leave an empty
-            // signal table behind (consumers poll for the dir's existence)
-            if (!signals.isEmpty)
-              graft.eth.Sinks.upsertBucketedParquet(signals, signalDir,
-                pkCols = Seq("block_id"), bucketCol = "block_id_group",
-                sortCols = Seq("block_id"))
-            graft.eth.Sinks.upsertBucketedParquet(bdf, logDir,
-              pkCols = Seq("block_id"), bucketCol = "block_id_group",
-              sortCols = Seq("block_id"))
-          }
-        }
+                      checkpointDir: String, bucketSize: Long = 1000): StreamingQuery =
+    MicroBatch.start(blocks, checkpointDir) { (batch, _) =>
+      val spark = batch.sparkSession
+      val hPath = new org.apache.hadoop.fs.Path(logDir)
+      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // consumed three times below; bounded (one batch)
+      val bdf = Pin(batch
+        .select(col("block_id").cast("long").as("block_id"),
+          col("block_hash"), col("parent_hash"))
+        .withColumn("block_id_group", expr(s"block_id div $bucketSize")))
+      val loRow = bdf.agg(min(col("block_id"))).collect()(0)
+      if (!loRow.isNullAt(0)) {
+        val lo = loRow.getLong(0)
+        val pred = if (fs.exists(hPath))
+          spark.read.parquet(logDir) // pruned to ONE bucket, ONE block
+            .filter(col("block_id_group") === (lo - 1) / bucketSize
+              && col("block_id") === lo - 1)
+            .select(col("block_id"), col("block_hash"), col("parent_hash"),
+              col("block_id_group"))
+          else bdf.limit(0)
+        val signals = graft.eth.Ingest
+          .detectReorgs(pred.unionByName(bdf), bucketSize = bucketSize)
+          .withColumn("block_id_group", expr(s"block_id div $bucketSize"))
+        // clean batches are the common case — don't leave an empty
+        // signal table behind (consumers poll for the dir's existence)
+        if (!signals.isEmpty)
+          graft.eth.Sinks.upsertBucketedParquet(signals, signalDir,
+            pkCols = Seq("block_id"), bucketCol = "block_id_group",
+            sortCols = Seq("block_id"))
+        graft.eth.Sinks.upsertBucketedParquet(bdf, logDir,
+          pkCols = Seq("block_id"), bucketCol = "block_id_group",
+          sortCols = Seq("block_id"))
       }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    }
 
   /** Merge-on-read of [[maintainCentroids]]'s partials: exact running
     * means per (cid, pos) — same schema as
@@ -987,19 +887,6 @@ object StreamingOps {
   case class SessionState(start: Long, last: Long, n: Long)
   case class Session(user_id: Long, session_start: Timestamp, n_events: Long)
 
-  /** Streaming sessionization with custom state (T1/T4's stateful analogue):
-    * `flatMapGroupsWithState` emits a session when a later event arrives
-    * past the inactivity gap, OR when the *event-time* timeout fires for an
-    * idle user — the timeout is keyed to the watermark, so slow/lagging
-    * sources never split a session that event time says is contiguous (a
-    * processing-time timer would). The timeout path both flushes the user's
-    * final session and removes the state entry, so state-store size tracks
-    * *active* users, not all users ever seen. The streaming-native form of
-    * [[sessionizeBatch]].
-    *
-    * @param watermarkDelay how much event-time disorder to tolerate before
-    *                       the watermark (and therefore session finalization)
-    *                       advances. */
   /** One key's running EWMA state: the milli-grid estimate and the
     * count of observations folded in. */
   case class EwmaState(ewma_milli: Long, n: Long)
@@ -1016,7 +903,9 @@ object StreamingOps {
     * order reproduces the same state, and state size is exactly one
     * (long, long) per ACTIVE key), then emits one read-out row. Update
     * output mode; ordering inside a batch is pinned by (ts, event_id) so
-    * retries are deterministic. */
+    * retries are deterministic.
+    *
+    * Test-only: backs COVERAGE.md's "Stateful streaming EWMA per key" row. */
   def ewmaStreaming(events: Dataset[Event]): Dataset[EwmaReadout] = {
     import events.sparkSession.implicits._
     events
@@ -1037,6 +926,21 @@ object StreamingOps {
       }
   }
 
+  /** Streaming sessionization with custom state (T1/T4's stateful analogue):
+    * `flatMapGroupsWithState` emits a session when a later event arrives
+    * past the inactivity gap, OR when the *event-time* timeout fires for an
+    * idle user — the timeout is keyed to the watermark, so slow/lagging
+    * sources never split a session that event time says is contiguous (a
+    * processing-time timer would). The timeout path both flushes the user's
+    * final session and removes the state entry, so state-store size tracks
+    * *active* users, not all users ever seen. The streaming-native form of
+    * [[sessionizeBatch]].
+    *
+    * @param watermarkDelay how much event-time disorder to tolerate before
+    *                       the watermark (and therefore session finalization)
+    *                       advances.
+    *
+    * Test-only: backs COVERAGE.md's "Streaming: custom state" row. */
   def sessionizeStreaming(events: Dataset[Event],
                           gapSeconds: Long = 600L,
                           watermarkDelay: String = "10 minutes"): Dataset[Session] = {

@@ -35,4 +35,41 @@ class BenchSpec extends SparkSpec {
     val plan = Files.readString(out.resolve("tpch_q21_waiting_after.txt"))
     assert(plan.contains("== Physical Plan =="), plan)
   }
+
+  test("plans mode writes run-stable text: two runs give byte-identical files") {
+    // rows whose plans carry every run-dependent name: exchange plan ids
+    // and expression ids (all), an Observation (j1_enrich_receipts), a
+    // temp dir made while the frame is built (k6_manifest_prune,
+    // k7_bloom_point_lookup), the part files a manifest lists and pinned
+    // scans (graph_pagerank)
+    val rows = Set("j1_enrich_receipts", "k6_manifest_prune", "k7_bloom_point_lookup",
+      "graph_pagerank")
+    val root = Files.createTempDirectory("bench_stable")
+    def run(name: String): Map[String, String] = {
+      Bench.writePlans(spark, "/root/testdata/sf0.001", root.resolve(name).toString,
+        "", Some(rows))
+      Files.list(root.resolve(name)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => p.getFileName.toString -> Files.readString(p)).toMap
+    }
+    val (a, b) = (run("a"), run("b"))
+    assert(a.keySet == rows.map(_ + ".txt"))
+    assert(a == b)
+    val all = a.values.mkString
+    Seq("#0", "plan_id=0", "uuid-0", "tmp-0", "part-", "RDD[0]")
+      .foreach(t => assert(all.contains(t), t))
+  }
+
+  test("stablePlan renumbers each run-dependent name in first-appearance order") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")).toString
+    val plan =
+      s"""x#17L, y#4, x#17L [plan_id=905] [plan_id=3] MapPartitionsRDD[5502] at localCheckpoint
+         |Location: [file:$tmp/graft_pipe5k8231911123401239912/block, $tmp/keep/00000000-00000999]
+         |part-00001-0b5e7c1a-3a9d-4d0e-9d4c-5f1e2a3b4c5d-c000.snappy.parquet
+         |CollectMetrics 9f1c2d3e-1a2b-4c3d-8e4f-0a1b2c3d4e5f, 0b5e7c1a-3a9d-4d0e-9d4c-5f1e2a3b4c5d""".stripMargin
+    assert(Bench.stablePlan(plan) ==
+      s"""x#0L, y#1, x#0L [plan_id=0] [plan_id=1] MapPartitionsRDD[0] at localCheckpoint
+         |Location: [file:$tmp/graft_pipe5ktmp-0/block, $tmp/keep/00000000-00000999]
+         |part-00001-uuid-0-c000.snappy.parquet
+         |CollectMetrics uuid-1, uuid-0""".stripMargin)
+  }
 }

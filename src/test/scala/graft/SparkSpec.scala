@@ -23,6 +23,20 @@ trait SparkSpec extends AnyFunSuite {
     bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
   }
 
+  /** Spark jobs started while `body` runs. */
+  protected def jobsStartedBy(body: => Any): Int = {
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    flushListenerBus()
+    spark.sparkContext.addSparkListener(listener)
+    try { body; flushListenerBus() }
+    finally spark.sparkContext.removeSparkListener(listener)
+    started.get
+  }
+
   /** The SQL executions `body` runs, in order. Listener events arrive
     * asynchronously but in posting order, so a marker action run before
     * and after `body` brackets exactly its executions. */

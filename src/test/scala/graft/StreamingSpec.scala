@@ -1152,4 +1152,68 @@ class StreamingSpec extends SparkSpec {
     assert(Versioned.latestVersion(dir) == 2L)
     assert(Versioned.readAt(spark, dir).count() == 3)
   }
+
+  test("source lock: only MicroBatch starts a stream sink") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root (no ${root.getAbsolutePath})")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val driver = new java.io.File("src/main/scala/graft/streaming/MicroBatch.scala")
+    assert(driver.isFile)
+    val offenders = files(root).filter(_.getName.endsWith(".scala"))
+      .filter(_.getPath != driver.getPath)
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().zipWithIndex.collect {
+          case (line, i) if line.contains("writeStream") => s"${f.getPath}:${i + 1}"
+        }.toList
+        finally src.close()
+      }
+    assert(offenders.isEmpty,
+      s"start micro-batches through graft.streaming.MicroBatch: ${offenders.mkString(", ")}")
+  }
+
+  /** Spark jobs each batch of `batches` starts through a maintainer over a
+    * MemoryStream of `T`, named `columns`, in batch order. The two
+    * jobs-per-batch tests below lock the counts: a change that adds a job
+    * to every batch (an unfolded bucket collect, say) fails them. */
+  private def jobsPerBatch[T: org.apache.spark.sql.Encoder](columns: String*)(
+      batches: Seq[T]*)(
+      start: org.apache.spark.sql.DataFrame => org.apache.spark.sql.streaming.StreamingQuery)
+      : Seq[Int] = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[T]
+    val q = start(input.toDF().toDF(columns: _*))
+    try batches.map { b =>
+      jobsStartedBy { input.addData(b: _*); q.processAllAvailable() }
+    } finally q.stop()
+  }
+
+  test("jobs per batch: the winnow maintainer starts a fixed job count for each of two batches") {
+    val root = java.nio.file.Files.createTempDirectory("graft_winjobs").toString
+    val run = "alpha beta gamma delta epsilon zeta eta theta"
+    val jobs = jobsPerBatch[(Long, String)]("doc_id", "text")(
+      Seq((1L, s"one two $run three four five six seven eight nine"),
+        (2L, "totally unrelated content with none of those words here at all")),
+      Seq((10L, s"prefix words then $run and a different tail entirely"),
+        (1L, "one two three edited away from the shared run entirely now"),
+        (30L, "tiny")))(
+      StreamingOps.maintainWinnowIndexAndFlag(_,
+        s"$root/index", s"$root/flags", s"$root/ckpt", minShared = 1))
+    assert(jobs == Seq(16, 29))
+  }
+
+  test("jobs per batch: the image maintainer starts a fixed job count for each of two batches") {
+    val root = java.nio.file.Files.createTempDirectory("graft_imjobs").toString
+    def bmp(seed: Int) = graft.llm.Multimodal.encodeBmp(16, 12, (x, y) =>
+      (((x * 7 + y * 13 + seed) % 256), ((x * 3 + y * 5 + seed) % 256),
+        ((x + y * 2 + seed * 11) % 256)))
+    val jobs = jobsPerBatch[(Long, Array[Byte], String)]("media_id", "payload", "mime")(
+      Seq((1L, bmp(0), "image/bmp"), (2L, bmp(77), "image/bmp")),
+      Seq((1L, bmp(200), "image/bmp"), (3L, bmp(0), "image/bmp"),
+        (4L, "not an image at all".getBytes, "image/bmp")))(
+      StreamingOps.maintainImageIndexAndFlag(_,
+        s"$root/index", s"$root/flags", s"$root/ckpt"))
+    assert(jobs == Seq(17, 30))
+  }
 }

@@ -8,7 +8,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
@@ -18,19 +17,6 @@ import graft.queries.Tables
   * Spark job, and the schema Spark's inference job would have found. */
 class TablesSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsStartedBy(body: => Any): Int = {
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    flushListenerBus()
-    spark.sparkContext.addSparkListener(listener)
-    try { body; flushListenerBus() }
-    finally spark.sparkContext.removeSparkListener(listener)
-    started.get
-  }
 
   /** Reads `<dir>/<name>.parquet` through `Tables`: asserts that building
     * it started no job and that its scan has the inferred schema. */
