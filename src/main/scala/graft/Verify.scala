@@ -21,7 +21,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try {
+      // build and write in one pin scope: the query's pins (an operator's
+      // prologue pins too) are freed before the next query starts
+      try Pin.scope {
         val df = fn(spark, sfDir)
         schemas(name) = df.schema.fields
           .map(f => s"${f.name}:${f.dataType.sql}").mkString(",")

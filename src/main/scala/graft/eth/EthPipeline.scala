@@ -40,13 +40,19 @@ object EthPipeline {
     * through here (PipelineSpec's source lock). */
   private[graft] def readStream(spark: SparkSession, conf: SourceConf,
                                 stream: String, lo: Long, hi: Long): DataFrame =
-    conf.options.foldLeft(
-      spark.read.format(conf.format)
-        .option("stream", stream)
-        .option("start", lo).option("end", hi)
-        .option("batchSize", conf.batchSize)) {
-      case (r, (k, v)) => r.option(k, v)
-    }.load()
+    chainRead(spark, conf, stream, lo, hi, streaming = false)
+
+  /** The one builder of a chain read, batch or streaming: the stream, the
+    * block range and the slice size, then `conf`'s own options verbatim
+    * (they win on a clash). PipelineSpec's source lock keeps every other
+    * chain `read`/`readStream` out of `eth/` and `queries/`. */
+  private def chainRead(spark: SparkSession, conf: SourceConf, stream: String,
+                        lo: Long, hi: Long, streaming: Boolean): DataFrame = {
+    val options = Map("stream" -> stream, "start" -> lo.toString, "end" -> hi.toString,
+      "batchSize" -> conf.batchSize.toString) ++ conf.options
+    if (streaming) spark.readStream.format(conf.format).options(options).load()
+    else spark.read.format(conf.format).options(options).load()
+  }
 
   /** Receipt columns landed on transactions under `receipt_*` names
     * (ref: scripts/schema.cql:46-51). */
@@ -207,10 +213,10 @@ object EthPipeline {
     // the reference rounds to FULL file windows and exits when none fit
     // ("No blocks to export", ref: eth_csv_export.py:506-511) — mirror that
     // here, also avoiding a J1 observation that no action would ever evaluate
-    val roundedStart = startBlock / fileBatchSize * fileBatchSize
-    val roundedEnd = (endBlock + 1) / fileBatchSize * fileBatchSize - 1
-    if (roundedStart > roundedEnd)
+    val window = Ingest.roundToBuckets(startBlock, endBlock, fileBatchSize)
+    if (window.isEmpty)
       return Map("transaction" -> 0L, "block" -> 0L, "log" -> 0L, "trace" -> 0L)
+    val (roundedStart, roundedEnd) = window.get
     // the reference exports from rounded_start_block (eth_csv_export.py:505,
     // 538), so its first window file is always COMPLETE — read the streams
     // over the rounded range, not the caller's possibly-unaligned start,
@@ -253,8 +259,12 @@ object EthPipeline {
   }
 
   /** Streaming ingest of the block stream (the reference's primary mode):
-    * `readStream` on the chain source, per-micro-batch format + bucketed
-    * sink through [[graft.streaming.MicroBatch]], offsets checkpointed.
+    * a streaming read of `source` built by the same option fold as
+    * [[readStream]] (so a `graft-rpc` source keeps its transport and url),
+    * per-micro-batch format + bucketed sink through
+    * [[graft.streaming.MicroBatch]], offsets checkpointed. Who renders
+    * what: the source's scan plans the micro-batches' block slices, this
+    * method only formats and writes them.
     * With `Trigger.AvailableNow` this drains the backlog and stops —
     * restart with the same checkpoint resumes exactly where it left off
     * (the streaming-native T2, complementing the data-derived resume
@@ -266,11 +276,7 @@ object EthPipeline {
                    dialect: Dialect = CsvDialect):
       org.apache.spark.sql.streaming.StreamingQuery =
     graft.streaming.MicroBatch.start(
-      spark.readStream.format(source.format)
-        .option("stream", "block")
-        .option("start", 0).option("end", chainTip)
-        .option("batchSize", source.batchSize)
-        .load(),
+      chainRead(spark, source, "block", 0, chainTip, streaming = true),
       checkpoint, org.apache.spark.sql.streaming.Trigger.AvailableNow()) { (batch, _) =>
       if (!batch.isEmpty)
         // upsert, not overwrite: a micro-batch boundary can fall mid-bucket

@@ -21,11 +21,12 @@ object Ingest {
       .map(lo => (lo, math.min(lo + batchSize - 1, endBlock)))
   }
 
-  /** Round a range outward/inward to whole buckets, mirroring the CSV
-    * export's rounding (ref: scripts/eth_csv_export.py:501-511): start is
-    * rounded *down* to a bucket boundary, end is rounded so the range covers
-    * whole buckets ending at `bucketSize*k - 1`. Returns None if no whole
-    * bucket fits. */
+  /** Round a range outward/inward to whole buckets — the CSV export's
+    * window rounding (ref: scripts/eth_csv_export.py:501-511), used by
+    * `EthPipeline.exportCsvRange` and `Sinks.writeReferenceCsvLayout`:
+    * start is rounded *down* to a bucket boundary, end is rounded so the
+    * range covers whole buckets ending at `bucketSize*k - 1`. Returns None
+    * if no whole bucket fits. */
   def roundToBuckets(startBlock: Long, endBlock: Long, bucketSize: Long): Option[(Long, Long)] = {
     val lo = (startBlock / bucketSize) * bucketSize
     val hi = ((endBlock + 1) / bucketSize) * bucketSize - 1

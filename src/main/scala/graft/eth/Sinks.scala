@@ -693,9 +693,9 @@ object Sinks {
     require(fileBatchSize > 0 && partitionBatchSize % fileBatchSize == 0,
       s"partitionBatchSize ($partitionBatchSize) must be a multiple of" +
         s" fileBatchSize ($fileBatchSize)") // ref: eth_csv_export.py:497-501
-    val roundedStart = startBlock / fileBatchSize * fileBatchSize
-    val roundedEnd = (endBlock + 1) / fileBatchSize * fileBatchSize - 1
-    if (roundedStart > roundedEnd) return // no full window: nothing to export
+    val window = Ingest.roundToBuckets(startBlock, endBlock, fileBatchSize)
+    if (window.isEmpty) return // no full window: nothing to export
+    val (roundedStart, roundedEnd) = window.get
     val spark = df.sparkSession
     val prefix = csvFilePrefix(table)
     val tmp = s"$outDir/_tmp_$prefix"

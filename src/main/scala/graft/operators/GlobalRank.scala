@@ -74,7 +74,8 @@ object GlobalRank {
   /** Trustworthy UPPER bound on the in-memory bytes of `p`'s output, or
     * None when no such bound exists — join-derived (output can explode
     * past any product of the inputs the planner guesses), generator
-    * fan-out, array/map-producing projections, unknown operators. The
+    * fan-out, projections computing a variable-width (string, binary,
+    * array, map) column, unknown operators. The
     * r15 dispatch trusted `optimizedPlan.stats.sizeInBytes` for every
     * non-pinned input; a single UNDER-estimate routes corpus-scale data
     * through the native partition-less window — the exact single-task
@@ -89,8 +90,18 @@ object GlobalRank {
       p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[BigInt] = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
     import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
     import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
-    import org.apache.spark.sql.types.{ArrayType, MapType}
+    import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType,
+      StringType, StructType, UserDefinedType, VariantType}
+    // a value with a static width bound: atomic types except the
+    // variable-length string and binary, and structs of such types
+    def fixedWidth(t: DataType): Boolean = t match {
+      case _: StringType | BinaryType | _: ArrayType | _: MapType | _: VariantType => false
+      case st: StructType => st.fields.forall(f => fixedWidth(f.dataType))
+      case u: UserDefinedType[_] => fixedWidth(u.sqlType)
+      case _ => true
+    }
     def bound(p: LogicalPlan): Option[BigInt] = p match {
       // a pinned (localCheckpoint) input is already materialized: its
       // ACTUAL block-manager footprint is available driver-side at no job
@@ -122,31 +133,33 @@ object GlobalRank {
       case d: Deduplicate => bound(d.child)
       case a: SubqueryAlias => bound(a.child)
       case h: ResolvedHint => bound(h.child)
-      // aggregation: output rows <= child rows; fixed-width aggregate
-      // values add <= one small column per group and collect_* payloads
-      // are redistributions of child bytes — x2 covers the group keys
-      // riding alongside
-      case a: Aggregate => bound(a.child).map(_ * 2)
+      // aggregation: output rows <= child rows; the group keys ride in at
+      // most one child row-copy and each aggregate adds at most one more
+      // (a fixed-width value, or a collect_* redistribution of child
+      // bytes), so scale by (1 + number of aggregates)
+      case a: Aggregate =>
+        val aggregates =
+          a.aggregateExpressions.count(_.exists(_.isInstanceOf[AggregateExpression]))
+        bound(a.child).map(_ * (1 + aggregates))
       // projection: row count unchanged. Attribute passthroughs cannot
       // grow a row; each computed FIXED-WIDTH column adds at most one
       // row-copy's worth of bytes (8-16 B against a >= 8 B/field child
-      // row), so scale by (1 + k). A computed array/map column has no
-      // static width bound (sequence/split can dwarf the input row) —
-      // no bound, fail toward two-phase.
+      // row), so scale by (1 + k). A computed string, binary, array or map
+      // column (or a struct holding one) has no static width bound
+      // (repeat/concat/sequence/split can dwarf the input row) — no bound,
+      // fail toward two-phase.
       case pr: Project =>
         val computed = pr.projectList.filter {
           case _: Attribute => false
           case Alias(_: Attribute, _) => false
           case _ => true
         }
-        if (computed.exists(e => e.dataType.isInstanceOf[ArrayType]
-            || e.dataType.isInstanceOf[MapType])) None
+        if (!computed.forall(e => fixedWidth(e.dataType))) None
         else bound(pr.child).map(_ * (1 + computed.size))
       // window: like a computed projection — adds one column per window
       // expression over unchanged rows
       case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
-        if (w.windowExpressions.exists(e => e.dataType.isInstanceOf[ArrayType]
-            || e.dataType.isInstanceOf[MapType])) None
+        if (!w.windowExpressions.forall(e => fixedWidth(e.dataType))) None
         else bound(w.child).map(_ * (1 + w.windowExpressions.size))
       case e: Expand => bound(e.child).map(_ * math.max(1, e.projections.size))
       case u: Union =>
@@ -154,19 +167,17 @@ object GlobalRank {
         if (bs.forall(_.isDefined)) Some(bs.flatten.sum) else None
       // semi/anti join output is a subset of the LEFT side; every other
       // join type can explode past any static bound — EXCEPT a join whose
-      // other side provably holds at most ONE row (a keyless aggregate:
-      // the broadcast-a-scalar-threshold idiom), where output rows equal
-      // the data side's and each row gains at most the 1-row side's
-      // fixed-width columns (x2 covers a full row-copy's worth)
+      // other side provably holds at most ONE row of fixed-width columns
+      // (a keyless aggregate: the broadcast-a-scalar-threshold idiom),
+      // where output rows equal the data side's and each row gains at most
+      // a full row-copy's worth (x2)
       case j: Join if j.joinType == LeftSemi || j.joinType == LeftAnti =>
         bound(j.left)
       case j: Join =>
-        def fixedWidth(p: LogicalPlan): Boolean = p.output.forall(a =>
-          !a.dataType.isInstanceOf[ArrayType] && !a.dataType.isInstanceOf[MapType])
-        if (j.right.maxRows.contains(1L) && fixedWidth(j.right))
-          bound(j.left).map(_ * 2)
-        else if (j.left.maxRows.contains(1L) && fixedWidth(j.left))
-          bound(j.right).map(_ * 2)
+        def oneFixedRow(p: LogicalPlan): Boolean =
+          p.maxRows.contains(1L) && p.output.forall(a => fixedWidth(a.dataType))
+        if (oneFixedRow(j.right)) bound(j.left).map(_ * 2)
+        else if (oneFixedRow(j.left)) bound(j.right).map(_ * 2)
         else None
       case _ => None
     }

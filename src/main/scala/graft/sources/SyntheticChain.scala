@@ -1,13 +1,7 @@
 package graft.sources
 
-import java.util
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,10 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * chain, the engine's stand-in for the reference's batched JSON-RPC export
   * jobs (ref: scripts/eth_cassandra_streaming.py:107-180 — ExportBlocksJob /
   * ExportReceiptsJob / ExportTracesJob). Zero-egress: rows are generated,
-  * not fetched, but the *planning* is the real thing — one Spark input
-  * partition per `batchSize` block slice, exactly the reference's
-  * micro-batch window (50 blocks/RPC batch, ref: :586), so extraction
-  * parallelism is cluster-wide instead of `max_workers=5` threads.
+  * not fetched, but the *planning* is the real thing ([[BlockRangeSource]]:
+  * one input partition per `batchSize` block slice, batch or micro-batch).
   *
   * Usage:
   * {{{
@@ -30,22 +22,30 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .load()
   * }}}
   *
-  * Determinism: every value derives from the block id / record index via
-  * md5 ([[graft.llm.Similarity.md5LongJvm]]-style), so any range re-read is
-  * byte-identical — the property the reference's resume logic (T2) relies on.
-  */
-class SyntheticChain extends TableProvider with DataSourceRegister {
+  * Who renders what: the companion object holds the chain's formulas, once;
+  * [[ChainReader]] turns them into rows here, and
+  * [[graft.sources.rpc.SyntheticRpcServer]] renders the same values as
+  * JSON-RPC responses for `graft-rpc` to decode. */
+class SyntheticChain extends BlockRangeSource {
   override def shortName(): String = "graft-chain"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SyntheticChain.schemaFor(options.getOrDefault("stream", "block"))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new SyntheticChainTable(new CaseInsensitiveStringMap(properties))
+  override protected def node(options: CaseInsensitiveStringMap): ChainNode =
+    ChainReader
 }
 
+/** The synthetic chain: its stream schemas and its formulas. Every value is
+  * a pure function of (block, index) via md5, so any range re-read is
+  * byte-identical — the property the reference's resume logic (T2) relies
+  * on. Edge cases from FIXTURES.md §2 are woven in deterministically:
+  * contract creations (every 7th tx), legacy txs (every 5th), pre-Byzantium
+  * receipts (every 11th), empty to four-topic logs, failed traces (every
+  * 13th) and one reward trace per block. Nullable values are `null` exactly
+  * where the stream's column is. The DuckDB twins in RefQueries
+  * (`chainTxCte` and the others) re-derive these formulas independently. */
 object SyntheticChain {
   val Streams: Seq[String] = Seq("block", "transaction", "receipt", "log", "trace")
+
+  /** The chain's height: what a read without `end` reaches. */
+  val Tip = 999L
 
   /** Raw-extract schemas (pre-rename, hex-string flavor — FIXTURES.md §1). */
   def schemaFor(stream: String): StructType = stream match {
@@ -96,162 +96,110 @@ object SyntheticChain {
       s"unknown stream '$other' (expected one of ${Streams.mkString(", ")})")
   }
 
-  private[sources] def md5Hex(s: String): String =
+  private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Deterministic tx count per block: 1..3. */
-  def txCount(block: Long): Int = (block % 3).toInt + 1
-}
+  private def hash(kind: String, b: Long, i: Int): String =
+    "0x" + md5Hex(s"$kind-$b-$i") + md5Hex(s"$kind-$b-$i-b")
+  private def address(seed: String): String = "0x" + md5Hex(seed).take(40)
+  private val TwoPow18 = BigInt(2).pow(18)
+  private val TenPow20 = BigInt(10).pow(20)
 
-private class SyntheticChainTable(options: CaseInsensitiveStringMap)
-  extends Table with SupportsRead {
-  private val stream = options.getOrDefault("stream", "block")
-  override def name(): String = s"graft-chain/$stream"
-  override def schema(): StructType = SyntheticChain.schemaFor(stream)
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    () => new SyntheticChainScan(stream,
-      options.getLong("start", 0L),
-      options.getLong("end", 999L),
-      options.getLong("batchSize", 50L))
-}
+  /** Transactions per block: 1..3. */
+  def txCount(b: Long): Int = (b % 3).toInt + 1
+  /** Logs per transaction: log `li` belongs to transaction `li / LogsPerTx`. */
+  val LogsPerTx = 2
 
-private class SyntheticChainScan(stream: String, start: Long, end: Long,
-                                 batchSize: Long) extends Scan with Batch {
-  override def readSchema(): StructType = SyntheticChain.schemaFor(stream)
-  override def toBatch: Batch = this
-
-  /** One input partition per block slice — the reference's RPC batch window
-    * becomes Spark's unit of parallelism. */
-  override def planInputPartitions(): Array[InputPartition] =
-    graft.eth.Ingest.planRanges(start, end, batchSize)
-      .map { case (lo, hi) => BlockSlice(lo, hi): InputPartition }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ChainReaderFactory(stream)
-
-  /** Streaming form (the reference's primary mode — continuous ingest with
-    * resume, ref: scripts/eth_cassandra_streaming.py T1/T2): offsets are
-    * block numbers; `end` plays the chain tip. Checkpointed offsets give
-    * exactly-once progress tracking on top of the source's determinism. */
-  override def toMicroBatchStream(checkpointLocation: String):
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ChainMicroBatchStream(stream, start, end, batchSize)
-}
-
-/** Offset = next block to read, serialized as its decimal string. */
-private case class BlockOffset(next: Long)
-  extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = next.toString
-}
-
-private class ChainMicroBatchStream(stream: String, start: Long, tip: Long,
-                                    batchSize: Long)
-  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  override def initialOffset(): Offset = BlockOffset(start)
-  override def latestOffset(): Offset = BlockOffset(tip + 1)
-  override def deserializeOffset(json: String): Offset = BlockOffset(json.toLong)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(startOff: Offset, endOff: Offset): Array[InputPartition] = {
-    val lo = startOff.asInstanceOf[BlockOffset].next
-    val hi = endOff.asInstanceOf[BlockOffset].next - 1
-    if (hi < lo) Array.empty
-    else graft.eth.Ingest.planRanges(lo, hi, batchSize)
-      .map { case (a, b) => BlockSlice(a, b): InputPartition }.toArray
+  /** Records of `stream` in block `b`: one trace per transaction plus the
+    * block reward. */
+  def records(stream: String, b: Long): Int = stream match {
+    case "block" => 1
+    case "transaction" | "receipt" => txCount(b)
+    case "log" => txCount(b) * LogsPerTx
+    case "trace" => txCount(b) + 1
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ChainReaderFactory(stream)
+  // block b
+  def blockHash(b: Long): String = hash("blk", b, 0)
+  def miner(b: Long): String = address(s"miner-${b % 5}")
+  def difficulty(b: Long): BigInt = TwoPow18 + b
+  def blockGasUsed(b: Long): Long = b % 30000000
+  def timestamp(b: Long): Long = 1438269988L + b * 13
+
+  // transaction and receipt i of block b
+  private def creation(b: Long, i: Int): Boolean = (b + i) % 7 == 0
+  def txHash(b: Long, i: Int): String = hash("tx", b, i)
+  def from(b: Long, i: Int): String = address(s"from-$b-$i")
+  /** null = contract creation. */
+  def to(b: Long, i: Int): String = if (creation(b, i)) null else address(s"to-$b-$i")
+  def value(b: Long, i: Int): BigInt = TenPow20 + b * 1000 + i
+  def gas(b: Long, i: Int): Int = 21000 + i
+  /** null = legacy transaction. */
+  def maxFeePerGas(b: Long, i: Int): java.lang.Long =
+    if ((b + i) % 5 == 0) null else java.lang.Long.valueOf(30000000000L + b)
+  def cumulativeGasUsed(b: Long, i: Int): Long = 21000L * (i + 1)
+  def gasUsed(b: Long, i: Int): Long = 21000L + i
+  /** Set on a contract creation only. */
+  def contractAddress(b: Long, i: Int): String =
+    if (creation(b, i)) address(s"ca-$b-$i") else null
+  /** null = pre-Byzantium receipt, which carries [[root]] instead. */
+  def status(b: Long, i: Int): java.lang.Long =
+    if ((b + i) % 11 == 0) null else java.lang.Long.valueOf((b + i) % 2)
+  def root(b: Long, i: Int): String = hash("rt", b, i)
+
+  // log li of block b
+  def logTxHash(b: Long, li: Int): String = txHash(b, li / LogsPerTx)
+  def logAddress(b: Long, li: Int): String = address(s"addr-${(b + li) % 11}")
+  /** 0..4 topics. */
+  def topicCount(b: Long, li: Int): Int = ((b + li) % 5).toInt
+  def topic(b: Long, li: Int, t: Int): String = "0x" + md5Hex(s"topic-$t-${(b + li) % 3}")
+  def logData(b: Long, li: Int): String = "0x" + md5Hex(s"data-$b-$li")
+
+  // trace i of block b: one per transaction, then the block reward
+  private def reward(b: Long, i: Int): Boolean = i == txCount(b)
+  /** null = the reward trace. */
+  def traceTxHash(b: Long, i: Int): String = if (reward(b, i)) null else txHash(b, i)
+  def traceType(b: Long, i: Int): String = if (reward(b, i)) "reward" else "call"
+  /** null for the reward trace and each block's first trace. */
+  def traceAddress(b: Long, i: Int): Array[Int] =
+    if (reward(b, i) || i == 0) null else Array.tabulate(i % 3 + 1)(x => (x * 2) % 3)
+  /** null = the trace succeeded. */
+  def traceError(b: Long, i: Int): String =
+    if (!reward(b, i) && (b + i) % 13 == 0) "out of gas" else null
 }
 
-private case class BlockSlice(lo: Long, hi: Long) extends InputPartition
+/** `graft-chain`'s node: the tip is the chain's height, and a slice is
+  * generated where it is read, one `InternalRow` per record from the
+  * chain's formulas. */
+private[sources] object ChainReader extends ChainNode {
+  import SyntheticChain._
 
-private class ChainReaderFactory(stream: String) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val s = p.asInstanceOf[BlockSlice]
-    new ChainReader(stream, s.lo, s.hi)
-  }
-}
-
-/** Generates the slice's rows. All derivations are pure functions of
-  * (block, index) so re-reads are identical. Edge cases from FIXTURES.md §2
-  * are woven in deterministically: contract creations (to_address null every
-  * 7th tx), legacy txs (null max_fee every 5th), pre-Byzantium receipts
-  * (null status every 11th), reward traces (null tx_hash + trace_address),
-  * empty/multi topics, failed traces. */
-private class ChainReader(stream: String, lo: Long, hi: Long)
-  extends PartitionReader[InternalRow] {
-  import SyntheticChain.{md5Hex, txCount}
-
-  private var block = lo
-  private var idx = 0
-  private var current: InternalRow = _
+  override def tip(): Long = Tip
+  override def slice(stream: String, lo: Long, hi: Long): Iterator[InternalRow] =
+    (lo to hi).iterator.flatMap(b => Iterator.tabulate(records(stream, b))(i => row(stream, b, i)))
 
   private def utf8(s: String): UTF8String = UTF8String.fromString(s)
-  private def hash(kind: String, block: Long, i: Int): String =
-    "0x" + md5Hex(s"$kind-$block-$i") + md5Hex(s"$kind-$block-$i-b")
 
-  private def recordsInBlock: Int = stream match {
-    case "block" => 1
-    case "transaction" | "receipt" => txCount(block)
-    case "log" => txCount(block) * 2 // 2 logs per tx
-    case "trace" => txCount(block) + 1 // +1 reward trace
-  }
-
-  override def next(): Boolean = {
-    while (block <= hi && idx >= recordsInBlock) { block += 1; idx = 0 }
-    if (block > hi) return false
-    current = make(block, idx)
-    idx += 1
-    true
-  }
-
-  private def make(b: Long, i: Int): InternalRow = stream match {
+  private def row(stream: String, b: Long, i: Int): InternalRow = stream match {
     case "block" =>
-      InternalRow(utf8("block"), b.toInt, utf8(hash("blk", b, 0)),
-        utf8(hash("blk", b - 1, 0)), utf8("0x" + md5Hex(s"miner-${b % 5}").take(40)),
-        org.apache.spark.sql.types.Decimal(BigDecimal(2).pow(18) + b, 38, 0),
-        (b % 30000000).toInt, (1438269988 + b * 13).toInt, txCount(b).toShort)
+      InternalRow(utf8("block"), b.toInt, utf8(blockHash(b)), utf8(blockHash(b - 1)),
+        utf8(miner(b)), Decimal(BigDecimal(difficulty(b)), 38, 0),
+        blockGasUsed(b).toInt, timestamp(b).toInt, txCount(b).toShort)
     case "transaction" =>
-      val creation = (b + i) % 7 == 0
-      val legacy = (b + i) % 5 == 0
-      InternalRow(utf8("transaction"), utf8(hash("tx", b, i)), b.toInt, i.toShort,
-        utf8("0x" + md5Hex(s"from-$b-$i").take(40)),
-        if (creation) null else utf8("0x" + md5Hex(s"to-$b-$i").take(40)),
-        org.apache.spark.sql.types.Decimal(BigDecimal(10).pow(20) + b * 1000 + i, 38, 0),
-        21000 + i, if (legacy) null else java.lang.Long.valueOf(30000000000L + b))
+      InternalRow(utf8("transaction"), utf8(txHash(b, i)), b.toInt, i.toShort,
+        utf8(from(b, i)), utf8(to(b, i)), Decimal(BigDecimal(value(b, i)), 38, 0),
+        gas(b, i), maxFeePerGas(b, i))
     case "receipt" =>
-      val creation = (b + i) % 7 == 0
-      val preByzantium = (b + i) % 11 == 0
-      InternalRow(utf8("receipt"), utf8(hash("tx", b, i)),
-        21000L * (i + 1), 21000L + i,
-        if (creation) utf8("0x" + md5Hex(s"ca-$b-$i").take(40)) else null,
-        if (preByzantium) null else java.lang.Long.valueOf((b + i) % 2))
+      InternalRow(utf8("receipt"), utf8(txHash(b, i)), cumulativeGasUsed(b, i),
+        gasUsed(b, i), utf8(contractAddress(b, i)), status(b, i))
     case "log" =>
-      val nTopics = ((b + i) % 5).toInt // 0..4 topics, incl. empty
-      val topics = if (nTopics == 0) new GenericArrayData(Array.empty[Any])
-        else new GenericArrayData(
-          (0 until nTopics).map(t => utf8("0x" + md5Hex(s"topic-$t-${(b + i) % 3}")): Any).toArray)
-      InternalRow(utf8("log"), b.toInt, i, utf8(hash("tx", b, i / 2)),
-        utf8("0x" + md5Hex(s"addr-${(b + i) % 11}").take(40)), topics,
-        utf8("0x" + md5Hex(s"data-$b-$i")))
+      InternalRow(utf8("log"), b.toInt, i, utf8(logTxHash(b, i)), utf8(logAddress(b, i)),
+        new GenericArrayData(Array.tabulate[Any](topicCount(b, i))(t => utf8(topic(b, i, t)))),
+        utf8(logData(b, i)))
     case "trace" =>
-      val reward = i == txCount(b) // last trace of each block is the reward
-      val failed = !reward && (b + i) % 13 == 0
-      val addr = if (reward || i == 0) null
-        else new GenericArrayData((0 until (i % 3 + 1)).map(x => (x * 2) % 3: Any).toArray)
-      InternalRow(utf8("trace"), b.toInt, i,
-        if (reward) null else utf8(hash("tx", b, i)),
-        utf8(if (reward) "reward" else "call"), addr,
-        if (failed) utf8("out of gas") else null)
+      val addr = traceAddress(b, i)
+      InternalRow(utf8("trace"), b.toInt, i, utf8(traceTxHash(b, i)), utf8(traceType(b, i)),
+        if (addr == null) null else new GenericArrayData(addr), utf8(traceError(b, i)))
   }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }

@@ -1,26 +1,22 @@
 package graft.sources.rpc
 
-import java.util
-
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.SyntheticChain
+import graft.sources.{BlockRangeSource, ChainNode, SyntheticChain}
 
 /** DataSourceV2 source `graft-rpc`: the live-node JSON-RPC connector —
   * the reference's batched extraction jobs
   * (ref: scripts/eth_cassandra_streaming.py:107-180, batched providers at
-  * :97-105) re-expressed as a Spark source. Emits the SAME raw stream
-  * schemas as `graft-chain` ([[SyntheticChain.schemaFor]]), so everything
-  * downstream (formats, enrichment, sinks, resume) is source-agnostic.
+  * :97-105) re-expressed as a Spark source. It shares `graft-chain`'s
+  * table, scan and stream schemas ([[BlockRangeSource]]), so everything
+  * downstream (formats, enrichment, sinks, resume) is source-agnostic;
+  * what it adds is the transport (`url`, or `transport=synthetic` with its
+  * `tip`, and `retries`) and the wire decode ([[RpcNode]]).
   *
   * Usage:
   * {{{
@@ -33,43 +29,29 @@ import graft.sources.SyntheticChain
   *     .load()
   * }}}
   *
-  * Scale shape: one input partition per `batchSize` block slice — each
-  * partition posts ONE batched JSON-RPC request from its executor, so
-  * fetch parallelism is cluster-wide (the reference caps at
-  * `max_workers=5` driver threads). Retries ride
-  * [[RetryingTransport]] under Spark's own task retry. Per-stream RPC
-  * choice mirrors ethereum-etl: blocks/transactions from
+  * Without `end`, a batch read plans up to one `eth_blockNumber` poll and
+  * a stream polls once per micro-batch. Each slice posts ONE batched
+  * JSON-RPC request from its executor, so fetch parallelism is
+  * cluster-wide (the reference caps at `max_workers=5` driver threads).
+  * Retries ride [[RetryingTransport]] under Spark's own task retry.
+  * Per-stream RPC choice mirrors ethereum-etl: blocks/transactions from
   * `eth_getBlockByNumber` (tx objects inline — no per-tx round trip),
   * receipts AND logs from `eth_getBlockReceipts` (one call per block, not
   * per tx), traces from `trace_block`.
   *
-  * Zero-egress note: the HTTP path ([[HttpRpcTransport]]) is exercised in
-  * RpcSourceSpec against a loopback JDK HttpServer running
-  * [[SyntheticRpcServer]]; `transport=synthetic` serves the same node
+  * Who renders what: [[SyntheticRpcServer]] renders the synthetic chain's
+  * formulas as JSON; this source only decodes the wire. The HTTP path
+  * ([[HttpRpcTransport]]) is exercised in RpcSourceSpec against a loopback
+  * JDK HttpServer running that node; `transport=synthetic` serves it
   * in-process. Equivalence with `graft-chain` is CI-asserted stream by
   * stream, which puts the whole wire codec under the existing DuckDB
   * stream oracles.
   */
-class RpcChain extends TableProvider with DataSourceRegister {
+class RpcChain extends BlockRangeSource {
   override def shortName(): String = "graft-rpc"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SyntheticChain.schemaFor(options.getOrDefault("stream", "block"))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new RpcChainTable(new CaseInsensitiveStringMap(properties))
-}
-
-private class RpcChainTable(options: CaseInsensitiveStringMap)
-  extends Table with SupportsRead {
-  private val stream = options.getOrDefault("stream", "block")
-  override def name(): String = s"graft-rpc/$stream"
-  override def schema(): StructType = SyntheticChain.schemaFor(stream)
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
+  override protected def node(options: CaseInsensitiveStringMap): ChainNode = {
     val transport: RpcTransport = options.getOrDefault("transport", "http") match {
-      case "synthetic" => SyntheticRpcTransport(options.getLong("tip", 999L))
+      case "synthetic" => SyntheticRpcTransport(options.getLong("tip", SyntheticChain.Tip))
       case "http" =>
         val url = options.get("url")
         require(url != null, "graft-rpc requires option url (or transport=synthetic)")
@@ -77,181 +59,70 @@ private class RpcChainTable(options: CaseInsensitiveStringMap)
       case other => throw new IllegalArgumentException(
         s"unknown transport '$other' (expected http or synthetic)")
     }
-    val retries = options.getInt("retries", 3)
-    val endOpt = Option(options.get("end")).map(_.toLong)
-    () => new RpcChainScan(stream,
-      options.getLong("start", 0L),
-      endOpt,
-      options.getLong("batchSize", 50L),
-      RetryingTransport(transport, attempts = retries))
+    RpcNode(RetryingTransport(transport, attempts = options.getInt("retries", 3)))
   }
 }
 
-private class RpcChainScan(stream: String, start: Long, endOpt: Option[Long],
-                           batchSize: Long, transport: RpcTransport)
-  extends Scan with Batch {
-  override def readSchema(): StructType = SyntheticChain.schemaFor(stream)
-  override def toBatch: Batch = this
-
-  /** Upper bound of the scan: the `end` option when given, else the live
-    * chain tip from ONE `eth_blockNumber` poll (driver-side, bounded
-    * metadata — exactly the reference's tip check before planning its
-    * range, ref: scripts/eth_cassandra_streaming.py:588-593). */
-  private def tip(): Long = endOpt.getOrElse(
-    RpcCodec.parseBlockNumber(transport.post(RpcCodec.blockNumberRequest())))
-
-  override def planInputPartitions(): Array[InputPartition] =
-    graft.eth.Ingest.planRanges(start, tip(), batchSize)
-      .map { case (lo, hi) => RpcSlice(lo, hi): InputPartition }.toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new RpcReaderFactory(stream, transport)
-
-  /** Streaming form — the reference's PRIMARY mode (continuous ingest
-    * with checkpointed resume, ref: scripts/eth_cassandra_streaming.py
-    * main loop at :619-636). Offsets are block numbers; the tip is the
-    * `end` option when given (bounded replay) or a live
-    * `eth_blockNumber` poll per micro-batch (follow the chain). Each
-    * micro-batch plans the same batched-POST slices as the batch path,
-    * so the wire behavior is identical. */
-  override def toMicroBatchStream(checkpointLocation: String):
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new RpcMicroBatchStream(stream, start, endOpt, batchSize, transport)
-}
-
-private class RpcMicroBatchStream(stream: String, start: Long,
-                                  endOpt: Option[Long], batchSize: Long,
-                                  transport: RpcTransport)
-  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private case class BlockOffset(next: Long) extends Offset {
-    override def json(): String = next.toString
-  }
-
-  override def initialOffset(): Offset = BlockOffset(start)
-  override def latestOffset(): Offset = BlockOffset(endOpt.getOrElse(
-    RpcCodec.parseBlockNumber(transport.post(RpcCodec.blockNumberRequest()))) + 1)
-  override def deserializeOffset(json: String): Offset = BlockOffset(json.toLong)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(startOff: Offset, endOff: Offset): Array[InputPartition] = {
-    val lo = startOff.asInstanceOf[BlockOffset].next
-    val hi = endOff.asInstanceOf[BlockOffset].next - 1
-    if (hi < lo) Array.empty
-    else graft.eth.Ingest.planRanges(lo, hi, batchSize)
-      .map { case (a, b) => RpcSlice(a, b): InputPartition }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new RpcReaderFactory(stream, transport)
-}
-
-private case class RpcSlice(lo: Long, hi: Long) extends InputPartition
-
-private class RpcReaderFactory(stream: String, transport: RpcTransport)
-  extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val s = p.asInstanceOf[RpcSlice]
-    new RpcReader(stream, s.lo, s.hi, transport)
-  }
-}
-
-/** Executor-side reader: ONE batched POST for the slice, then decode the
-  * per-block results into rows. Row order within the slice is
-  * deterministic (ascending block, then intra-block record order)
-  * regardless of the order the node answered the batch in. */
-private class RpcReader(stream: String, lo: Long, hi: Long,
-                        transport: RpcTransport)
-  extends PartitionReader[InternalRow] {
+/** A JSON-RPC node: the tip is one `eth_blockNumber` poll, and a slice is
+  * ONE batched POST from the executor, decoded into rows in ascending
+  * block, then intra-block record order, whatever order the node answered
+  * the batch in. */
+private final case class RpcNode(transport: RpcTransport) extends ChainNode {
   import RpcCodec._
 
-  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
-  private def utf8Opt(o: Option[String]): Any = o.map(utf8).orNull
+  override def tip(): Long = parseBlockNumber(transport.post(blockNumberRequest()))
 
-  private lazy val rows: Iterator[InternalRow] = {
-    val ids = 0 until (hi - lo + 1).toInt
-    def fetch(body: String): IndexedSeq[JsonNode] =
-      parseBatchResponse(transport.post(body), ids)
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+  private def nullableUtf8(n: JsonNode, field: String): UTF8String =
+    optText(n, field).map(utf8).orNull
+  private def nullableLong(n: JsonNode, field: String): java.lang.Long =
+    optQty(n, field).map(v => java.lang.Long.valueOf(v.toLong)).orNull
+  private def elements(n: JsonNode): Iterator[JsonNode] = (0 until n.size()).iterator.map(n.get)
+
+  override def slice(stream: String, lo: Long, hi: Long): Iterator[InternalRow] = {
+    def fetch(body: String): Iterator[JsonNode] =
+      parseBatchResponse(transport.post(body), 0 until (hi - lo + 1).toInt).iterator
+    def receipts = fetch(receiptsRequest(lo, hi)).flatMap(elements)
     stream match {
       case "block" =>
-        fetch(blocksRequest(lo, hi, fullTxs = false)).iterator.map { blk =>
-          InternalRow(utf8("block"),
-            qty(blk, "number").toInt,
-            utf8(text(blk, "hash")),
-            utf8(text(blk, "parentHash")),
-            utf8(text(blk, "miner")),
-            Decimal(BigDecimal(qty(blk, "difficulty")), 38, 0),
-            qty(blk, "gasUsed").toInt,
-            qty(blk, "timestamp").toInt,
-            arr(blk, "transactions").size.toShort)
+        fetch(blocksRequest(lo, hi, fullTxs = false)).map { blk =>
+          InternalRow(utf8("block"), qty(blk, "number").toInt,
+            utf8(text(blk, "hash")), utf8(text(blk, "parentHash")), utf8(text(blk, "miner")),
+            Decimal(BigDecimal(qty(blk, "difficulty")), 38, 0), qty(blk, "gasUsed").toInt,
+            qty(blk, "timestamp").toInt, arr(blk, "transactions").size.toShort)
         }
       case "transaction" =>
-        fetch(blocksRequest(lo, hi, fullTxs = true)).iterator.flatMap { blk =>
-          arr(blk, "transactions").map { tx =>
-            InternalRow(utf8("transaction"),
-              utf8(text(tx, "hash")),
-              qty(tx, "blockNumber").toInt,
-              qty(tx, "transactionIndex").toShort,
-              utf8(text(tx, "from")),
-              utf8Opt(optText(tx, "to")),
-              Decimal(BigDecimal(qty(tx, "value")), 38, 0),
-              qty(tx, "gas").toInt,
-              optQty(tx, "maxFeePerGas")
-                .map(v => java.lang.Long.valueOf(v.toLong)).orNull)
-          }
+        fetch(blocksRequest(lo, hi, fullTxs = true)).flatMap(arr(_, "transactions")).map { tx =>
+          InternalRow(utf8("transaction"), utf8(text(tx, "hash")),
+            qty(tx, "blockNumber").toInt, qty(tx, "transactionIndex").toShort,
+            utf8(text(tx, "from")), nullableUtf8(tx, "to"),
+            Decimal(BigDecimal(qty(tx, "value")), 38, 0), qty(tx, "gas").toInt,
+            nullableLong(tx, "maxFeePerGas"))
         }
       case "receipt" =>
-        fetch(receiptsRequest(lo, hi)).iterator.flatMap { blockReceipts =>
-          (0 until blockReceipts.size()).map(blockReceipts.get).map { r =>
-            InternalRow(utf8("receipt"),
-              utf8(text(r, "transactionHash")),
-              qty(r, "cumulativeGasUsed").toLong,
-              qty(r, "gasUsed").toLong,
-              utf8Opt(optText(r, "contractAddress")),
-              // pre-Byzantium receipts carry `root` instead of `status`
-              optQty(r, "status")
-                .map(v => java.lang.Long.valueOf(v.toLong)).orNull)
-          }
+        receipts.map { r =>
+          InternalRow(utf8("receipt"), utf8(text(r, "transactionHash")),
+            qty(r, "cumulativeGasUsed").toLong, qty(r, "gasUsed").toLong,
+            nullableUtf8(r, "contractAddress"),
+            nullableLong(r, "status")) // pre-Byzantium receipts carry `root` instead
         }
       case "log" =>
-        fetch(receiptsRequest(lo, hi)).iterator.flatMap { blockReceipts =>
-          (0 until blockReceipts.size()).map(blockReceipts.get).flatMap { r =>
-            arr(r, "logs").map { lg =>
-              InternalRow(utf8("log"),
-                qty(lg, "blockNumber").toInt,
-                qty(lg, "logIndex").toInt,
-                utf8(text(lg, "transactionHash")),
-                utf8(text(lg, "address")),
-                new GenericArrayData(
-                  arr(lg, "topics").map(t => utf8(t.asText()): Any).toArray),
-                utf8(text(lg, "data")))
-            }
-          }
+        receipts.flatMap(arr(_, "logs")).map { lg =>
+          InternalRow(utf8("log"), qty(lg, "blockNumber").toInt, qty(lg, "logIndex").toInt,
+            utf8(text(lg, "transactionHash")), utf8(text(lg, "address")),
+            new GenericArrayData(arr(lg, "topics").map(t => utf8(t.asText()): Any).toArray),
+            utf8(text(lg, "data")))
         }
       case "trace" =>
-        fetch(tracesRequest(lo, hi)).iterator.flatMap { blockTraces =>
-          (0 until blockTraces.size()).map(blockTraces.get).zipWithIndex.map {
-            case (t, i) =>
-              val addr = t.get("traceAddress")
-              InternalRow(utf8("trace"),
-                qty(t, "blockNumber").toInt,
-                i,
-                utf8Opt(optText(t, "transactionHash")),
-                utf8(text(t, "type")),
-                if (addr == null || addr.isNull) null
-                else new GenericArrayData(
-                  (0 until addr.size()).map(k => addr.get(k).asInt(): Any).toArray),
-                utf8Opt(optText(t, "error")))
-          }
+        fetch(tracesRequest(lo, hi)).flatMap(elements(_).zipWithIndex).map { case (t, i) =>
+          val addr = t.get("traceAddress")
+          InternalRow(utf8("trace"), qty(t, "blockNumber").toInt, i,
+            nullableUtf8(t, "transactionHash"), utf8(text(t, "type")),
+            if (addr == null || addr.isNull) null
+            else new GenericArrayData(elements(addr).map(_.asInt(): Any).toArray),
+            nullableUtf8(t, "error"))
         }
       case other => throw new IllegalArgumentException(s"unknown stream '$other'")
     }
   }
-
-  private var current: InternalRow = _
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }

@@ -44,7 +44,8 @@ final case class HttpRpcTransport(url: String,
 /** In-process transport serving the deterministic synthetic chain — the
   * zero-egress stand-in for a node (see [[SyntheticRpcServer]]). `tip` is
   * the height its `eth_blockNumber` reports. */
-final case class SyntheticRpcTransport(tip: Long = 999L) extends RpcTransport {
+final case class SyntheticRpcTransport(tip: Long = graft.sources.SyntheticChain.Tip)
+  extends RpcTransport {
   override def post(body: String): String = SyntheticRpcServer.handle(body, tip)
 }
 

@@ -3,15 +3,15 @@ package graft.sources.rpc
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-import graft.sources.SyntheticChain.{md5Hex, txCount}
+import graft.sources.SyntheticChain._
 
-/** Deterministic JSON-RPC "node": serves `eth_getBlockByNumber`,
-  * `eth_getBlockReceipts`, and `trace_block` for the SAME synthetic chain
-  * [[graft.sources.SyntheticChain]] generates directly — every value
-  * derives from the identical md5 formulas, so
-  * `graft-rpc` (wire decode) ≡ `graft-chain` (direct generate) is an
-  * assertable equivalence (RpcSourceSpec) and the existing DuckDB stream
-  * oracles cover the RPC path too.
+/** Deterministic JSON-RPC "node": serves `eth_blockNumber`,
+  * `eth_getBlockByNumber`, `eth_getBlockReceipts` and `trace_block` for
+  * the synthetic chain. It renders only: every value comes from
+  * [[graft.sources.SyntheticChain]]'s formulas, the same ones `graft-chain`
+  * turns into rows, so `graft-rpc` (wire decode) ≡ `graft-chain` (direct
+  * generation) is an assertable equivalence (RpcSourceSpec) and the
+  * existing DuckDB stream oracles cover the RPC path too.
   *
   * Wire fidelity notes (public Ethereum JSON-RPC conventions):
   *   - quantities are minimal 0x-hex;
@@ -28,38 +28,35 @@ import graft.sources.SyntheticChain.{md5Hex, txCount}
   */
 object SyntheticRpcServer {
 
-  private def hash(kind: String, block: Long, i: Int): String =
-    "0x" + md5Hex(s"$kind-$block-$i") + md5Hex(s"$kind-$block-$i-b")
   private def q(n: BigInt): String = RpcCodec.hexQty(n)
   private def q(n: Long): String = RpcCodec.hexQty(BigInt(n))
 
   private def txObject(b: Long, i: Int): ObjectNode = {
-    val creation = (b + i) % 7 == 0
-    val legacy = (b + i) % 5 == 0
     val o = RpcCodec.newObject()
-    o.put("hash", hash("tx", b, i))
+    o.put("hash", txHash(b, i))
     o.put("blockNumber", q(b))
     o.put("transactionIndex", q(i.toLong))
-    o.put("from", "0x" + md5Hex(s"from-$b-$i").take(40))
-    if (creation) o.putNull("to") else o.put("to", "0x" + md5Hex(s"to-$b-$i").take(40))
-    o.put("value", q(BigInt(10).pow(20) + b * 1000 + i))
-    o.put("gas", q(21000L + i))
-    if (!legacy) o.put("maxFeePerGas", q(30000000000L + b))
+    o.put("from", from(b, i))
+    o.put("to", to(b, i)) // JSON null on a contract creation
+    o.put("value", q(value(b, i)))
+    o.put("gas", q(gas(b, i).toLong))
+    val fee = maxFeePerGas(b, i)
+    if (fee != null) o.put("maxFeePerGas", q(fee.longValue))
     o
   }
 
   private def block(b: Long, fullTxs: Boolean): ObjectNode = {
     val o = RpcCodec.newObject()
     o.put("number", q(b))
-    o.put("hash", hash("blk", b, 0))
-    o.put("parentHash", hash("blk", b - 1, 0))
-    o.put("miner", "0x" + md5Hex(s"miner-${b % 5}").take(40))
-    o.put("difficulty", q(BigInt(2).pow(18) + b))
-    o.put("gasUsed", q(b % 30000000))
-    o.put("timestamp", q(1438269988L + b * 13))
+    o.put("hash", blockHash(b))
+    o.put("parentHash", blockHash(b - 1))
+    o.put("miner", miner(b))
+    o.put("difficulty", q(difficulty(b)))
+    o.put("gasUsed", q(blockGasUsed(b)))
+    o.put("timestamp", q(timestamp(b)))
     val txs = o.putArray("transactions")
     (0 until txCount(b)).foreach { i =>
-      if (fullTxs) txs.add(txObject(b, i)) else txs.add(hash("tx", b, i))
+      if (fullTxs) txs.add(txObject(b, i)) else txs.add(txHash(b, i))
     }
     o
   }
@@ -68,31 +65,26 @@ object SyntheticRpcServer {
     val o = RpcCodec.newObject()
     o.put("blockNumber", q(b))
     o.put("logIndex", q(li.toLong))
-    o.put("transactionHash", hash("tx", b, li / 2))
-    o.put("address", "0x" + md5Hex(s"addr-${(b + li) % 11}").take(40))
+    o.put("transactionHash", logTxHash(b, li))
+    o.put("address", logAddress(b, li))
     val topics = o.putArray("topics")
-    (0 until ((b + li) % 5).toInt).foreach { t =>
-      topics.add("0x" + md5Hex(s"topic-$t-${(b + li) % 3}"))
-    }
-    o.put("data", "0x" + md5Hex(s"data-$b-$li"))
+    (0 until topicCount(b, li)).foreach(t => topics.add(topic(b, li, t)))
+    o.put("data", logData(b, li))
     o
   }
 
   private def receipts(b: Long): JsonNode = {
     val arr = RpcCodec.newArray()
     (0 until txCount(b)).foreach { i =>
-      val creation = (b + i) % 7 == 0
-      val preByzantium = (b + i) % 11 == 0
       val o = RpcCodec.newObject()
-      o.put("transactionHash", hash("tx", b, i))
-      o.put("cumulativeGasUsed", q(21000L * (i + 1)))
-      o.put("gasUsed", q(21000L + i))
-      if (creation) o.put("contractAddress", "0x" + md5Hex(s"ca-$b-$i").take(40))
-      else o.putNull("contractAddress")
-      if (preByzantium) o.put("root", hash("rt", b, i))
-      else o.put("status", q((b + i) % 2))
+      o.put("transactionHash", txHash(b, i))
+      o.put("cumulativeGasUsed", q(cumulativeGasUsed(b, i)))
+      o.put("gasUsed", q(gasUsed(b, i)))
+      o.put("contractAddress", contractAddress(b, i)) // JSON null unless a creation
+      val st = status(b, i)
+      if (st == null) o.put("root", root(b, i)) else o.put("status", q(st.longValue))
       val logs = o.putArray("logs")
-      Seq(2 * i, 2 * i + 1).foreach(li => logs.add(logObject(b, li)))
+      (i * LogsPerTx until (i + 1) * LogsPerTx).foreach(li => logs.add(logObject(b, li)))
       arr.add(o)
     }
     arr
@@ -100,19 +92,20 @@ object SyntheticRpcServer {
 
   private def traces(b: Long): JsonNode = {
     val arr = RpcCodec.newArray()
-    (0 to txCount(b)).foreach { i =>
-      val reward = i == txCount(b)
-      val failed = !reward && (b + i) % 13 == 0
+    (0 until records("trace", b)).foreach { i =>
       val o = RpcCodec.newObject()
       o.put("blockNumber", q(b))
-      o.put("type", if (reward) "reward" else "call")
-      if (!reward) o.put("transactionHash", hash("tx", b, i))
-      if (reward || i == 0) o.putNull("traceAddress")
+      o.put("type", traceType(b, i))
+      val tx = traceTxHash(b, i)
+      if (tx != null) o.put("transactionHash", tx)
+      val addr = traceAddress(b, i)
+      if (addr == null) o.putNull("traceAddress")
       else {
         val ta = o.putArray("traceAddress")
-        (0 until (i % 3 + 1)).foreach(x => ta.add((x * 2) % 3))
+        addr.foreach(x => ta.add(x))
       }
-      if (failed) o.put("error", "out of gas")
+      val err = traceError(b, i)
+      if (err != null) o.put("error", err)
       arr.add(o)
     }
     arr
@@ -121,7 +114,7 @@ object SyntheticRpcServer {
   /** Handle one batch request body, returning the batch response body.
     * `tip` is the chain height `eth_blockNumber` reports — the streaming
     * tests' stand-in for a growing chain. */
-  def handle(requestBody: String, tip: Long = 999L): String = {
+  def handle(requestBody: String, tip: Long = Tip): String = {
     val req = RpcCodec.read(requestBody)
     require(req.isArray, "synthetic node only accepts batch requests")
     val out = RpcCodec.newArray()

@@ -116,6 +116,17 @@ class PinSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/index").count() == 4L)
   }
 
+  test("Pin.scope: pagerank's frame, written inside a scope, leaves no persistent RDD") {
+    // Verify's per-query shape: build and write inside one scope, which
+    // also frees the operator's prologue pins (edges and nodes)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L)).toDF("src", "dst")
+    val out = java.nio.file.Files.createTempDirectory("graft_pin_write").toString
+    assert(pinsAdded {
+      Pin.scope(Graph.pagerank(edges, iters = 5).write.mode("overwrite").parquet(out))
+    } == 0)
+    assert(spark.read.parquet(out).count() == 4L)
+  }
+
   test("Pin.scope frees pins made on its own thread only, also when its body throws") {
     var mine: DataFrame = null
     var other: DataFrame = null

@@ -892,6 +892,60 @@ class PlanSpec extends SparkSpec {
       s"bound above expanded scan bytes must take the native window:\n$above")
   }
 
+  test("size dispatch: variable-width computed columns have no size bound") {
+    // A computed string, binary or array-holding column can dwarf the row
+    // it is computed from (repeat, concat, sequence), so a projection,
+    // window or 1-row join side carrying one has no static size bound:
+    // each frame below is tiny by estimate and must still fail toward the
+    // two-phase plan. The same shape with a fixed-width column in its
+    // place stays native.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def twoPhase(df: DataFrame): Boolean = graft.operators.GlobalRank
+      .globalRowNumber(df, Seq(col("id")), "__rn")
+      .queryExecution.executedPlan.toString.contains("__gr_pid")
+    val ids = spark.range(100).toDF("id")
+    val named = (0 until 100).map(i => (i.toLong, s"n$i")).toDF("id", "s")
+    def byId = Window.partitionBy(col("id")).orderBy(col("id"))
+    def oneRow(c: org.apache.spark.sql.Column) = spark.range(10).agg(max(c).as("m"))
+    val unbounded = Seq(
+      "project string" -> ids.withColumn("x", repeat(col("id").cast("string"), 1000)),
+      "project binary" -> ids.withColumn("x", unhex(repeat(lit("ab"), 1000))),
+      "project struct holding an array" ->
+        ids.withColumn("x", struct(sequence(lit(0L), col("id")))),
+      "window string" -> named.withColumn("x", lag(col("s"), 1).over(byId)),
+      "1-row join side string" -> ids.crossJoin(oneRow(col("id").cast("string"))))
+    unbounded.foreach { case (what, df) =>
+      assert(twoPhase(df), s"$what: a variable-width column must fail toward two-phase")
+    }
+    val bounded = Seq(
+      "project long" -> ids.withColumn("x", col("id") * 2),
+      "window long" -> named.withColumn("x", lag(col("id"), 1).over(byId)),
+      "1-row join side long" -> ids.crossJoin(oneRow(col("id"))))
+    bounded.foreach { case (what, df) =>
+      assert(!twoPhase(df), s"$what: a fixed-width column keeps the native window")
+    }
+  }
+
+  test("size dispatch: an aggregate's bound scales by one plus its aggregate count") {
+    // four aggregates over unique keys can exceed twice the child's bytes:
+    // the bound is (1 + 4) x the child's, so a byte bound of 3x must keep
+    // two-phase and 5x is the first to take the native window
+    import org.apache.spark.sql.functions._
+    val ids = spark.range(100).toDF("id")
+    val child = ids.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    val agg = ids.groupBy("id").agg(sum("id"), max("id"), min("id"), count("id"))
+    def plan(bytes: Long) = graft.operators.GlobalRank
+      .globalRowNumber(agg, Seq(col("id")), "__rn", smallInputBytes = bytes)
+      .queryExecution.executedPlan.toString
+    assert(plan(3 * child).contains("__gr_pid"),
+      s"a 4-aggregate frame under a 3x byte bound must keep two-phase:\n${plan(3 * child)}")
+    assert(!plan(5 * child).contains("__gr_pid"),
+      s"a 4-aggregate frame under a 5x byte bound takes the native window:\n${plan(5 * child)}")
+  }
+
   test("semantic decontamination broadcasts the benchmark side; RRF fuses bounded lists") {
     // the benchmark embeddings must ride a broadcast into the corpus scan
     // (rangeSearch's contract) — a shuffle join here would move the corpus
