@@ -360,11 +360,14 @@ object Bench {
   }
 
   /** Run-dependent names in a plan, each with the token its values are
-    * renumbered to: UUIDs (part files, `Observation` names, Spark temp
-    * dirs), the random suffix of a temp dir made under java.io.tmpdir,
-    * the RDD ids of pinned scans, `plan_id=` exchange ids and `#n`
-    * expression ids. Group 1 is kept, group 2 is the varying part. */
+    * renumbered to: lambda instances of typed Dataset operators
+    * (`$$Lambda$7617/0x...@54250da2`, class number, address and hash),
+    * UUIDs (part files, `Observation` names, Spark temp dirs), the random
+    * suffix of a temp dir made under java.io.tmpdir, the RDD ids of pinned
+    * scans, `plan_id=` exchange ids and `#n` expression ids. Group 1 is
+    * kept, group 2 is the varying part. */
   private val runDependent: Seq[(scala.util.matching.Regex, String)] = Seq(
+    "(\\$\\$Lambda)(\\$?\\d*/0x[0-9a-f]+@[0-9a-f]+)".r -> "-",
     "()([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})".r -> "uuid-",
     ("(" + java.util.regex.Pattern.quote(
       Paths.get(System.getProperty("java.io.tmpdir")).toString) +

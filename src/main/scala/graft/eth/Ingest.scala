@@ -100,7 +100,8 @@ object Ingest {
     * 1M-block-subdir layout (ref: scripts/eth_csv_export.py:474-479) — and
     * return the NEXT block to export (last covered block + 1), or None for
     * an absent/empty tree. Driver-side metadata listing only, the same
-    * O(files) walk the reference performs. */
+    * O(files) walk the reference performs.
+    * Test-only: backs COVERAGE.md's "resume scan from file names" (S7) row. */
   def resumeCsvExport(spark: SparkSession, dir: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -117,7 +118,8 @@ object Ingest {
   /** S5/T3: completeness watermark — the last block strictly before `cutoff`
     * (unix seconds), the engine form of `--previous_day`
     * (ref: scripts/eth_cassandra_streaming.py:199-216: "exchange rates might
-    * not be available for the current day"). */
+    * not be available for the current day").
+    * Test-only: backs COVERAGE.md's "timestamp→block as-of lookup" (S5) row. */
   def lastBlockBefore(blocks: DataFrame, cutoffUnixSeconds: Long,
                       blockIdCol: String = "block_id",
                       tsCol: String = "timestamp"): Option[Long] =

@@ -418,7 +418,8 @@ object Multimodal {
     }
   }
 
-  /** Write a binary PPM (P6, maxval 255). */
+  /** Write a binary PPM (P6, maxval 255).
+    * Test-only: backs COVERAGE.md's "Multimodal REAL codecs" row (the PPM encode). */
   def encodePpm(width: Int, height: Int,
                 pixel: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
     require(width > 0 && height > 0, s"need positive dims, got $width x $height")
@@ -739,7 +740,8 @@ object Multimodal {
   /** Write a non-interlaced 8-bit GRAYSCALE PNG (color type 0,
     * 1 byte/pixel) — the bpp=1 sibling of [[encodePng]], same per-row
     * filter rotation so round-trips prove the defilter suite at the
-    * other byte width too. `pixel(x, y)` returns the gray value mod 256. */
+    * other byte width too. `pixel(x, y)` returns the gray value mod 256.
+    * Test-only: backs COVERAGE.md's "Multimodal REAL PNG codec" row. */
   def encodePngGray(width: Int, height: Int,
                     pixel: (Int, Int) => Int): Array[Byte] = {
     require(width > 0 && height > 0, s"need positive dims, got $width x $height")
@@ -1511,7 +1513,8 @@ object Multimodal {
 
   /** Compress a 16-bit linear sample to its mu-law code: bias, find the
     * segment (exponent), keep 4 mantissa bits, complement. Left inverse
-    * of [[muLawDecode]] on the decode image (modulo the two zeros). */
+    * of [[muLawDecode]] on the decode image (modulo the two zeros).
+    * Test-only: backs COVERAGE.md's "G.711 mu-law WAV" row. */
   def muLawEncode(sample: Int): Int = {
     val neg = sample < 0
     val mag = math.min(if (neg) -sample.toLong else sample.toLong, 32635L).toInt
@@ -1542,7 +1545,8 @@ object Multimodal {
   }
 
   /** Compress a 16-bit linear sample to its A-law code — left inverse
-    * of [[aLawDecode]] on the decode image. */
+    * of [[aLawDecode]] on the decode image.
+    * Test-only: backs COVERAGE.md's "G.711 A-law WAV" row. */
   def aLawEncode(sample: Int): Int = {
     val pos = sample >= 0
     var mag = math.min(if (pos) sample.toLong else -sample.toLong, 32767L).toInt

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Pin
 import graft.functions.ColumnFns._
 import graft.llm.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
+import graft.queries.Md5._
 import graft.streaming.StreamingOps
 
 /** LLM training-data pipeline operators: dedup (exact / MinHash-LSH /
@@ -35,21 +36,29 @@ object LlmQueries {
       s"ELSE CAST(round($cos * 1000000) AS BIGINT) END"
   }
 
+  /** DuckDB word 3-shingles of the token list `t`, one string per
+    * shingle (a list shorter than three tokens is one shingle) — the twin of
+    * `shingles(tokens(text), 3)`. */
+  private val wordShinglesSql =
+    "CASE WHEN len(t) >= 3 THEN list_transform(range(0, len(t) - 2), " +
+      "i -> array_to_string(t[(i+1):(i+3)], ' ')) ELSE [array_to_string(t, ' ')] END"
+
+  /** `toks(doc_id, t)`, the space-split text of `docs(doc_id, text)`, and
+    * its [[wordShinglesSql]] lists `sh(doc_id, s)`. */
+  private def shinglesCte(docs: String): String =
+    s"""toks AS (SELECT doc_id, str_split(text, ' ') AS t FROM $docs),
+       |sh AS (SELECT doc_id, $wordShinglesSql AS s FROM toks)""".stripMargin
+
   /** Shared DuckDB CTEs: word 3-shingles and the 8-hash MinHash signature
     * (4 bands x 2 rows), mirroring [[graft.llm.Dedup.minhashSignatureFromBases]]
     * exactly: ONE 30-bit md5-derived base per shingle, then affine
     * permutations (a_h*base + b_h) mod 2^31-1 with Knuth-constant
     * coefficients — all int64-exact in both engines. */
   private val minhashSigCte =
-    """WITH toks AS (SELECT doc_id, str_split(text, ' ') AS t FROM documents),
-      |sh AS (SELECT doc_id,
-      |         CASE WHEN len(t) >= 3
-      |              THEN list_transform(range(0, len(t) - 2), i -> array_to_string(t[(i+1):(i+3)], ' '))
-      |              ELSE [array_to_string(t, ' ')] END AS s
-      |       FROM toks),
+    s"""WITH ${shinglesCte("documents")},
       |bs AS (SELECT doc_id,
       |         list_transform(s, x ->
-      |           CAST('0x' || substring(md5(x), 1, 15) AS BIGINT) % 1073741824) AS bl
+      |           ${md5LongSql("x")} % 1073741824) AS bl
       |       FROM sh),
       |sig AS (SELECT doc_id,
       |          list_transform(PERMS, ab ->
@@ -62,6 +71,155 @@ object LlmQueries {
         (0 until 8).map(h => s"[${Dedup.minhashA(h)}, ${Dedup.minhashB(h)}]")
           .mkString("[", ", ", "]"))
 
+  /** DuckDB twin of `TextAnalysis.winnowFingerprints`' selection over
+    * `docs(doc_id, text)`: [[shinglesCte]], each shingle's key — its 30-bit
+    * md5 base times 2^20 plus the reversed position, so one numeric min
+    * also breaks ties rightmost — `keys(doc_id, ks)`, and the distinct
+    * minima of every 4-key window `sel(doc_id, fps)`. */
+  private def winnowSelCte(docs: String): String =
+    s"""${shinglesCte(docs)},
+       |keys AS (SELECT doc_id,
+       |           list_transform(range(0, len(s)),
+       |             i -> (${md5LongSql("s[i+1]")} % 1073741824)
+       |                  * 1048576 + (1048575 - i)) AS ks
+       |         FROM sh),
+       |sel AS (SELECT doc_id,
+       |          list_distinct(list_transform(range(0, len(ks) - 3),
+       |            j -> list_min(ks[(j+1):(j+4)]))) AS fps
+       |        FROM keys WHERE len(ks) >= 4)""".stripMargin
+
+  /** One row per distinct word 3-shingle of the text column `t`: the
+    * benchmark and corpus gram streams of the decontamination rows. */
+  private def distinctGrams(t: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    explode(array_distinct(shingles(tokens(t), 3)))
+
+  /** DuckDB twin of the decontamination rows over [[distinctGrams]]: per
+    * document with `doc_id` >= 10, how many of its distinct shingles occur
+    * in the benchmark documents (`doc_id` < 10). */
+  private val decontaminateOracle =
+    s"""WITH ${shinglesCte("documents")},
+       |bench AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id < 10),
+       |tr AS (SELECT doc_id, unnest(list_distinct(s)) AS g FROM sh WHERE doc_id >= 10)
+       |SELECT doc_id, count(*) AS n_contaminated
+       |FROM tr JOIN bench USING (g) GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** The three probe queries of the BM25 rows, `(query_id, query_text)`. */
+  private def bm25Probes(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    Seq(
+      (1, "spark join shuffle window"),
+      (2, "customer order line value"),
+      (3, "vector hash merge nosuchterm")).toDF("query_id", "query_text")
+  }
+
+  /** The non-empty space-split terms of every document,
+    * `tk(doc_id, term)`. Opens the WITH. */
+  private val termsCte =
+    """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+      |tk AS (SELECT doc_id, term FROM t WHERE term <> '')""".stripMargin
+
+  /** DuckDB twin of `TextAnalysis.featureHash(numFeatures = 64)` before its
+    * aggregate: each term's md5 bucket and ±1 sign,
+    * `h(doc_id, feature_idx, sgn)`, over [[termsCte]]. */
+  private val featureHashCte =
+    s"""$termsCte,
+       |h AS (SELECT doc_id,
+       |        ${md5LongSql("term")} % 64 AS feature_idx,
+       |        CASE WHEN ${md5LongSql("'sign|' || term")} % 2 = 1
+       |             THEN 1 ELSE -1 END AS sgn
+       |      FROM tk)""".stripMargin
+
+  /** DuckDB twin of `TextAnalysis.bm25Search`'s scoring over
+    * [[bm25Probes]] (k1 = 1.2, b = 0.75, integer micro-units): `tf`, `dl`,
+    * the probe terms `qt(query_id, term)`, `idf`, and every (query, doc,
+    * matching term)'s score `sc(query_id, doc_id, s_micro)`. Opens the WITH. */
+  private val bm25ScoreCte =
+    s"""$termsCte,
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM tk GROUP BY 1, 2),
+       |dl AS (SELECT doc_id, count(*) AS dl FROM tk GROUP BY 1),
+       |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+       |stats AS (SELECT count(*) AS n_docs, sum(dl) * 1000 // count(*) AS avgdl_milli FROM dl),
+       |q(query_id, query_text) AS (VALUES
+       |  (1, 'spark join shuffle window'),
+       |  (2, 'customer order line value'),
+       |  (3, 'vector hash merge nosuchterm')),
+       |qt AS (SELECT DISTINCT query_id, unnest(string_split(query_text, ' ')) AS term FROM q),
+       |idf AS (SELECT term,
+       |          CAST(round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * 1e6) AS BIGINT) AS idf_micro,
+       |          avgdl_milli
+       |        FROM dfq, stats),
+       |sc AS (SELECT qt.query_id, tf.doc_id,
+       |         idf.idf_micro * tf.tf * 2200
+       |           // (tf.tf * 1000
+       |              + (1200 * (250 + (750 * dl.dl * 1000) // idf.avgdl_milli)) // 1000)
+       |           AS s_micro
+       |       FROM tf JOIN qt USING (term) JOIN idf USING (term)
+       |            JOIN dl USING (doc_id))""".stripMargin
+
+  /** DuckDB twin of a per-key bottom-`k` sketch over the distinct
+    * `(key, hv)` rows of `from`: `rk`, each hash's rank within its key, and
+    * `name(key, n_kept, kth)`, how many of the `k` smallest hashes a key
+    * kept and the largest of them. */
+  private def bottomKCte(name: String, from: String, key: String, hv: String, k: Int): String =
+    s"""rk AS (SELECT $key, $hv,
+       |         row_number() OVER (PARTITION BY $key ORDER BY $hv) AS rn FROM $from),
+       |$name AS (SELECT $key, count(*) AS n_kept, max($hv) AS kth
+       |       FROM rk WHERE rn <= $k GROUP BY 1)""".stripMargin
+
+  /** DuckDB twin of the KMV read-out (`Sketches.kmvDistinct` and
+    * `kmvPerKeyReadOut`) over `n_kept` and `kth` in scope: the columns `k`,
+    * `n_kept`, `kth_min_hash` and `est_distinct` — `n_kept` below `k`
+    * hashes, else (k - 1)·2^60 div kth. */
+  private def kmvReadOutSql(k: Int): String =
+    s"""CAST($k AS INTEGER) AS k, CAST(n_kept AS BIGINT) AS n_kept, kth AS kth_min_hash,
+       |  CAST(CASE WHEN n_kept < $k THEN n_kept
+       |       ELSE (CAST(n_kept AS HUGEINT) - 1) * 1152921504606846976 // kth
+       |       END AS BIGINT) AS est_distinct""".stripMargin
+
+  /** DuckDB twin of `Dedup.duplicateSpans(k = 5)`' position runs over the
+    * token lists `toks(doc_id, <t>)`: each 5-token window's md5
+    * `win(doc_id, pos, h)`, the windows found in two or more documents
+    * (`dups`, their positions `dd(doc_id, pos)`) and the runs of adjacent
+    * duplicated positions `runs(doc_id, pos, run_id)`. */
+  private def dupSpanRunsCte(toks: String, t: String): String =
+    s"""big AS (SELECT doc_id, $t FROM $toks WHERE len($t) >= 5),
+       |win AS (SELECT doc_id, CAST(i AS INTEGER) AS pos,
+       |          ${md5LongSql(s"array_to_string($t[(i+1):(i+5)], ' ')")} AS h
+       |        FROM big, UNNEST(range(0, len($t) - 4)) AS u(i)),
+       |dups AS (SELECT h FROM win GROUP BY h HAVING min(doc_id) <> max(doc_id)),
+       |dd AS (SELECT doc_id, pos FROM win WHERE h IN (SELECT h FROM dups)),
+       |lagged AS (SELECT doc_id, pos,
+       |             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 1
+       |                  THEN 1 ELSE 0 END AS brk
+       |           FROM dd),
+       |runs AS (SELECT doc_id, pos,
+       |           sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
+       |                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
+       |         FROM lagged)""".stripMargin
+
+  /** Every document's adjacent word pairs: `toks(doc_id, ts)` and
+    * `big(doc_id, w1, w2)`. */
+  private val bigramsCte =
+    """toks AS (SELECT doc_id, str_split(text, ' ') AS ts FROM documents),
+      |big AS (SELECT doc_id, unnest(ts[:len(ts)-1]) AS w1, unnest(ts[2:]) AS w2
+      |        FROM toks WHERE len(ts) >= 2)""".stripMargin
+
+  /** DuckDB twin of the Jelinek-Mercer bigram model (λ = 0.8) of the
+    * bigram log-prob rows over [[bigramsCte]]: unigram counts `cu`, the
+    * token total `nn`, bigram and history counts `cb`/`cx`, and each
+    * bigram's micro-quantized log-probability `model(w1, w2, lp)`. */
+  private val bigramJmModelCte =
+    s"""$bigramsCte,
+       |uni AS (SELECT unnest(str_split(text, ' ')) AS w2 FROM documents),
+       |cu AS (SELECT w2, count(*) AS cnt2 FROM uni GROUP BY 1),
+       |nn AS (SELECT CAST(sum(cnt2) AS BIGINT) AS n FROM cu),
+       |cb AS (SELECT w1, w2, count(*) AS cnt12 FROM big GROUP BY 1, 2),
+       |cx AS (SELECT w1, CAST(sum(cnt12) AS BIGINT) AS cnt1 FROM cb GROUP BY 1),
+       |model AS (SELECT cb.w1, cb.w2,
+       |    CAST(round(ln(CAST(800 * cnt12 * n + 200 * cnt2 * cnt1 AS DOUBLE)
+       |                  / CAST(1000 * cnt1 * n AS DOUBLE)) * 1000000) AS BIGINT) AS lp
+       |  FROM cb JOIN cx USING (w1) JOIN cu USING (w2) CROSS JOIN nn)""".stripMargin
+
   /** LSH candidates over [[minhashSigCte]]'s bands — `cand(id_a, id_b)`,
     * distinct, id_a < id_b — and each doc's distinct shingles
     * `ds(doc_id, dsh)`. */
@@ -72,11 +230,12 @@ object LlmQueries {
       |ds AS (SELECT doc_id, list_distinct(s) AS dsh FROM sh)""".stripMargin
 
   /** DuckDB twin of `Dedup.nearDupEdges` and the closure its connected
-    * components replay: [[lshCandCte]] kept at exact Jaccard >= 0.8
-    * (`edges`), symmetrized (`e`) and transitively closed
-    * (`reach(a, b)`, so the enclosing WITH must be RECURSIVE). */
+    * components replay: [[minhashSigCte]] opening a WITH RECURSIVE, then
+    * [[lshCandCte]] kept at exact Jaccard >= 0.8 (`edges`), symmetrized
+    * (`e`) and transitively closed (`reach(a, b)`). */
   private val nearDupReachCte =
-    s"""$lshCandCte,
+    s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
+       |$lshCandCte,
        |edges AS (SELECT id_a, id_b FROM cand
        |          JOIN ds x ON x.doc_id = id_a JOIN ds y ON y.doc_id = id_b
        |          WHERE CAST(len(list_intersect(x.dsh, y.dsh)) AS DOUBLE)
@@ -86,6 +245,20 @@ object LlmQueries {
        |                UNION
        |                SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)""".stripMargin
 
+  /** [[nearDupReachCte]] plus each document's near-dup component, its
+    * smallest reachable id: `comp(node, component)`. */
+  private val nearDupCompCte =
+    s"""$nearDupReachCte,
+       |comp AS (SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
+       |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach) GROUP BY n)""".stripMargin
+
+  /** DuckDB twin of [[graft.llm.TextAnalysis.normalizeText]] over the SQL
+    * expression `x`: lower-case, every non-alphanumeric to a space, runs of
+    * whitespace to one space, trimmed. */
+  private def normalizeTextSql(x: String): String =
+    "trim(regexp_replace(regexp_replace(lower(" + x +
+      """), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))"""
+
   /** User-transition edge list for the graph operators: A → B when B's
     * event directly follows A's within the same event-type stream
     * (deterministic order: ts, event_id), self-loops dropped. The same
@@ -93,6 +266,13 @@ object LlmQueries {
     * dictionary would plug in here at 100 TB. */
   private def transitionEdges(s: org.apache.spark.sql.SparkSession,
                               d: String): org.apache.spark.sql.DataFrame =
+    transitionLag(s, d).select(col("src"), col("user_id").as("dst"))
+
+  /** Each event with the previous user of its event-type stream `src`
+    * (order: ts, event_id), self-transitions and stream starts dropped —
+    * the lag behind [[transitionEdges]] and [[transitionEdgesTs]]. */
+  private def transitionLag(s: org.apache.spark.sql.SparkSession,
+                            d: String): org.apache.spark.sql.DataFrame =
     // grouped two-phase lag, NOT lag().over(partitionBy(event_type)): the
     // event-type domain is 5 values, so the plain window is five tasks
     // each sorting corpus/5 rows AT ANY SCALE — the r12 graph-family
@@ -105,30 +285,57 @@ object LlmQueries {
           .select(col("event_type"), col("ts"), col("event_id"), col("user_id")),
         Seq("event_type"), Seq(col("ts"), col("event_id")), "user_id", "src")
       .filter(col("src").isNotNull && col("src") =!= col("user_id"))
-      .select(col("src"), col("user_id").as("dst"))
+
+  /** The DuckDB lag of [[transitionLag]], before its filter:
+    * `ev(event_type, user_id, src)`. */
+  private val transitionLagCte =
+    """ev AS (SELECT event_type, user_id,
+      |         lag(user_id) OVER (PARTITION BY event_type
+      |                            ORDER BY CAST(ts AS TIMESTAMP), event_id) AS src
+      |       FROM events)""".stripMargin
 
   /** DuckDB twin of [[transitionEdges]], collapsed to weighted edges
     * (`ew(src, dst, w)`). */
   private val transitionEdgesCte =
-    """WITH ev AS (SELECT event_type, user_id,
-      |         lag(user_id) OVER (PARTITION BY event_type
-      |                            ORDER BY CAST(ts AS TIMESTAMP), event_id) AS src
-      |       FROM events),
-      |ew AS (SELECT src, user_id AS dst, count(*) AS w FROM ev
-      |       WHERE src IS NOT NULL AND src <> user_id GROUP BY 1, 2)""".stripMargin
+    s"""WITH $transitionLagCte,
+       |ew AS (SELECT src, user_id AS dst, count(*) AS w FROM ev
+       |       WHERE src IS NOT NULL AND src <> user_id GROUP BY 1, 2)""".stripMargin
+
+  /** [[transitionEdgesCte]] plus `e(src, dst, w, ow)`: each edge with its
+    * source's total out-weight — the prologue of the weighted push oracles
+    * (pagerank, haircut taint, personalized pagerank). */
+  private val transitionPushCte =
+    s"""$transitionEdgesCte,
+       |outw AS (SELECT src, sum(w) AS ow FROM ew GROUP BY 1),
+       |e AS (SELECT ew.src, ew.dst, ew.w, outw.ow FROM ew JOIN outw USING (src))""".stripMargin
+
+  /** Weighted push round `i` over [[transitionPushCte]]'s `e`: every node
+    * of `from` (key column `key`, mass column `mass`) sends mass·w div ow
+    * along each out-edge; `s<i>(dst, m)` sums what each node receives. The
+    * one step of every weighted push oracle; integer, truncating. */
+  private def pushSql(i: Int, from: String, key: String, mass: String): String =
+    s"""s$i AS (SELECT e.dst, sum(($from.$mass * e.w) // e.ow) AS m
+       |       FROM $from JOIN e ON e.src = $from.$key GROUP BY 1)""".stripMargin
+
+  /** The seed set of the flow rows (k-hop taint, haircut taint,
+    * personalized pagerank): the nodes of the edge list `ew` ≡ 0 mod 37. */
+  private def mod37Seeds(ew: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ew.select(col("src").as("node"))
+      .union(ew.select(col("dst").as("node"))).distinct()
+      .filter(col("node") % 37 === 0)
+
+  /** DuckDB twin of [[mod37Seeds]] over the `ew(src, dst, ...)` in scope:
+    * `sd(node)`. */
+  private val mod37SeedsCte =
+    """sd AS (SELECT node FROM (SELECT src AS node FROM ew UNION SELECT dst FROM ew)
+      |       WHERE node % 37 = 0)""".stripMargin
 
   /** [[transitionEdges]] with the transition's own timestamp (the dst
     * event's ts) — the edge list for TIME-RESPECTING path motifs, where
     * hop order matters and collapsing to weights would erase it. */
   private def transitionEdgesTs(s: org.apache.spark.sql.SparkSession,
                                 d: String): org.apache.spark.sql.DataFrame =
-    // same two-phase lag as [[transitionEdges]] (see rationale there)
-    graft.operators.GlobalRank.groupedLag(
-        Tables(s, d, "events")
-          .select(col("event_type"), col("ts"), col("event_id"), col("user_id")),
-        Seq("event_type"), Seq(col("ts"), col("event_id")), "user_id", "src")
-      .filter(col("src").isNotNull && col("src") =!= col("user_id"))
-      .select(col("src"), col("user_id").as("dst"), col("ts"))
+    transitionLag(s, d).select(col("src"), col("user_id").as("dst"), col("ts"))
 
   /** DuckDB twin of [[transitionEdgesTs]]: `et(src, dst, t)`. */
   private val transitionEdgesTsCte =
@@ -160,13 +367,10 @@ object LlmQueries {
 
   /** DuckDB twin of [[backboneEdges]] (`ew(src, dst, w)`, w >= 2). */
   private val backboneEdgesCte =
-    """WITH ev AS (SELECT event_type, user_id,
-      |         lag(user_id) OVER (PARTITION BY event_type
-      |                            ORDER BY CAST(ts AS TIMESTAMP), event_id) AS src
-      |       FROM events),
-      |ew AS (SELECT src, user_id AS dst, count(*) AS w FROM ev
-      |       WHERE src IS NOT NULL AND src <> user_id GROUP BY 1, 2
-      |       HAVING count(*) >= 2)""".stripMargin
+    s"""WITH $transitionLagCte,
+       |ew AS (SELECT src, user_id AS dst, count(*) AS w FROM ev
+       |       WHERE src IS NOT NULL AND src <> user_id GROUP BY 1, 2
+       |       HAVING count(*) >= 2)""".stripMargin
 
   /** `und(u, v)` and `dg(node, deg)` over any `ew(src, dst, ...)` in
     * scope — the DuckDB twin of `Graph.undirected` + `Graph.degrees`. */
@@ -183,15 +387,75 @@ object LlmQueries {
     * ONE definition so the engines can never desynchronize per query. */
   private val backboneUndirectedCte = s"$backboneEdgesCte,\n$undDegCte"
 
+  /** The 4 highest-degree nodes of the simple undirected `ew` (ties to the
+    * smaller id): the pivots of the harmonic and betweenness rows. */
+  private def degreePivots(ew: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val und = ew.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v")).distinct()
+    val deg = und.select(col("u").as("node"))
+      .unionAll(und.select(col("v").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("deg"))
+    deg.orderBy(col("deg").desc, col("node").asc).limit(4).select("node")
+  }
+
+  /** DuckDB twin of [[degreePivots]] over [[backboneEdges]]:
+    * [[backboneUndirectedCte]], the adjacency `adj(a, b)` in both directions
+    * and the pivots `piv(node)`. */
+  private val degreePivotsCte =
+    s"""$backboneUndirectedCte,
+       |adj AS (SELECT u AS a, v AS b FROM und UNION ALL SELECT v, u FROM und),
+       |piv AS (SELECT node FROM dg ORDER BY deg DESC, node ASC LIMIT 4)""".stripMargin
+
+  /** The landmark rows' graph: [[backboneEdges]] (pinned) in both
+    * directions, `sym(src, dst)`. */
+  private def landmarkSym(s: org.apache.spark.sql.SparkSession,
+                          d: String): org.apache.spark.sql.DataFrame = {
+    val ew = Pin(backboneEdges(s, d))
+    ew.select(col("src"), col("dst"))
+      .unionByName(ew.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  /** The 3 smallest nodes of [[landmarkSym]]: the landmarks. */
+  private def landmarks(sym: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    sym.select(col("src").as("node")).distinct().orderBy("node").limit(3)
+
+  /** DuckDB twin of `Graph.landmarkDistances(rounds = 3)` from
+    * [[landmarks]] over [[landmarkSym]]: `sym(src, dst)`, `lm(node)` and
+    * each relax round's `(node, landmark, hops)` state `d0`..`d3`. */
+  private val landmarkDistCte = {
+    def round(r: Int) =
+      s"""d${r + 1} AS (SELECT node, landmark, min(hops) AS hops FROM (
+         |    SELECT node, landmark, hops FROM d$r
+         |    UNION ALL
+         |    SELECT e.dst, d.landmark, d.hops + 1 FROM d$r d JOIN sym e ON e.src = d.node)
+         |  GROUP BY 1, 2)""".stripMargin
+    s"""$backboneEdgesCte,
+       |sym AS (SELECT src, dst FROM ew UNION SELECT dst, src FROM ew),
+       |lm AS (SELECT DISTINCT src AS node FROM sym ORDER BY 1 LIMIT 3),
+       |d0 AS (SELECT node, node AS landmark, CAST(0 AS INTEGER) AS hops FROM lm),
+       |${(0 until 3).map(round).mkString(",\n")}""".stripMargin
+  }
+
+  /** `Graph.labelPropagation(rounds = 2, weighted)` over an edge list with
+    * weight `w`; its DuckDB twin is [[lpaLabelsCte]]. */
+  private def lpaLabels(ew: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    graft.operators.Graph.labelPropagation(ew, rounds = 2, weightCol = Some("w"))
+
+  /** [[backboneEdgesCte]] plus `sym(a, b, w)`: each edge in both
+    * directions, weights of antiparallel edges summed. */
+  private val backboneSymCte =
+    s"""$backboneEdgesCte,
+       |sym AS (SELECT a, b, CAST(sum(w) AS BIGINT) AS w FROM (
+       |          SELECT src AS a, dst AS b, w FROM ew
+       |          UNION ALL SELECT dst, src, w FROM ew) GROUP BY 1, 2)""".stripMargin
+
   /** DuckDB twin of `Graph.labelPropagation(rounds = 2, weighted)` over
     * [[backboneEdges]]: `l2(node, label)`. Shared by the community query
     * and the super-graph coarsening so the two oracles can never
     * disagree on what the communities ARE. */
   private val lpaLabelsCte =
-    s"""$backboneEdgesCte,
-       |sym AS (SELECT a, b, CAST(sum(w) AS BIGINT) AS w FROM (
-       |          SELECT src AS a, dst AS b, w FROM ew
-       |          UNION ALL SELECT dst, src, w FROM ew) GROUP BY 1, 2),
+    s"""$backboneSymCte,
        |$lpaChainCte""".stripMargin
 
   /** The LPA rounds alone (needs `sym(a, b, w)` in scope) — shared by
@@ -246,16 +510,82 @@ object LlmQueries {
          |            (PARTITION BY a ORDER BY gain DESC, label ASC) AS rn
          |          FROM sc$i) WHERE rn = 1)""".stripMargin
     }
-    s"""$backboneEdgesCte,
-       |sym AS (SELECT a, b, CAST(sum(w) AS BIGINT) AS w FROM (
-       |          SELECT src AS a, dst AS b, w FROM ew
-       |          UNION ALL SELECT dst, src, w FROM ew) GROUP BY 1, 2),
+    s"""$backboneSymCte,
        |dgv AS (SELECT a, sum(w) AS k FROM sym GROUP BY 1),
        |m2 AS (SELECT sum(k) AS s FROM dgv),
        |g0 AS (SELECT a AS node, a AS label FROM dgv),
-       |${round(1)},
-       |${round(2)}""".stripMargin
+       |${(1 to 2).map(round).mkString(",\n")}""".stripMargin
   }
+
+  /** The association rows' baskets — per user, the items
+    * `<event_type>#<props.k div 25>` — through `Associations.rules` with
+    * pairs seen in at least 20 baskets. */
+  private def itemPairRules(s: org.apache.spark.sql.SparkSession,
+                            d: String): org.apache.spark.sql.DataFrame = {
+    val items = Tables(s, d, "events").select(
+      col("user_id"),
+      concat(col("event_type"), lit("#"),
+        expr("CAST(get_json_object(props, '$.k') AS BIGINT) div 25")
+          .cast("string")).as("item"))
+    graft.operators.Associations.rules(items, "user_id", "item", minPairCount = 20)
+  }
+
+  /** DuckDB twin of [[itemPairRules]]' counts: the distinct basket items
+    * `itn(k, i)`, item counts `ic(i, c)` and the pair counts
+    * `pc(item_a, item_b, c_ab)` of at least 20. */
+  private val itemPairCountsCte =
+    """it AS (SELECT DISTINCT user_id AS k,
+      |         event_type || '#' || CAST(CAST(json_extract_string(props, '$.k') AS BIGINT) // 25 AS VARCHAR) AS i
+      |       FROM events),
+      |itn AS (SELECT * FROM it WHERE i IS NOT NULL),
+      |ic AS (SELECT i, count(*) AS c FROM itn GROUP BY 1),
+      |pc AS (SELECT a.i AS item_a, b.i AS item_b, count(*) AS c_ab
+      |       FROM itn a JOIN itn b ON a.k = b.k AND a.i <> b.i
+      |       GROUP BY 1, 2 HAVING count(*) >= 20)""".stripMargin
+
+  /** DuckDB twin of `Graph.modularity` over the labels `labels(node, label)`
+    * and the `ew` in scope: [[undDegCte]], then the exact integer Newman Q
+    * over the simple undirected graph — m, the community count, Σ e_c, and
+    * q_num / q_den as decimal strings with the milli read-out. */
+  private def modularitySql(labels: String): String =
+    s"""$undDegCte,
+       |mm AS (SELECT count(*) AS m FROM und),
+       |ein AS (SELECT la.label, count(*) AS e_c FROM und
+       |        JOIN $labels la ON la.node = und.u
+       |        JOIN $labels lb ON lb.node = und.v
+       |        WHERE la.label = lb.label GROUP BY 1),
+       |dcm AS (SELECT $labels.label, sum(dg.deg) AS d_c FROM dg
+       |        JOIN $labels ON $labels.node = dg.node GROUP BY 1),
+       |comm AS (SELECT dcm.label, coalesce(ein.e_c, 0) AS e_c, dcm.d_c
+       |         FROM dcm LEFT JOIN ein USING (label)),
+       |agg AS (SELECT max(mm.m) AS m, count(*) AS n_comm,
+       |          sum(e_c) AS sum_e_in,
+       |          sum(4 * CAST(mm.m AS HUGEINT) * e_c
+       |              - CAST(d_c AS HUGEINT) * d_c) AS q_num,
+       |          max(4 * CAST(mm.m AS HUGEINT) * mm.m) AS q_den
+       |        FROM comm, mm)
+       |SELECT CAST(m AS BIGINT) AS m, CAST(n_comm AS BIGINT) AS n_comm,
+       |  CAST(sum_e_in AS BIGINT) AS sum_e_in,
+       |  CAST(q_num AS VARCHAR) AS q_num,
+       |  CAST(q_den AS VARCHAR) AS q_den,
+       |  CAST(CASE WHEN q_den IS NULL OR q_den = 0 THEN 0
+       |       WHEN q_num < 0 THEN -((-q_num) * 1000 // q_den)
+       |       ELSE q_num * 1000 // q_den END AS BIGINT) AS q_milli
+       |FROM agg""".stripMargin
+
+  /** The quality classifier rows' labels: y = 1 for an English document. */
+  private def enLabels(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs.select(col("doc_id"), when(col("lang") === "en", 1L).otherwise(0L).as("y"))
+
+  /** `Classifier.trainAndScore` of the quality model (2 rounds, lr 0.5)
+    * over the 64-dim hashed features of `docs`: one pinned feature
+    * projection feeds train and score. Its DuckDB twin is
+    * [[logitMarginCte]]. */
+  private def qualityScores(docs: org.apache.spark.sql.DataFrame,
+                            labels: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    graft.llm.Classifier.trainAndScore(
+      TextAnalysis.featureHash(docs, "doc_id", "text", numFeatures = 64),
+      labels, rounds = 2, lrMilli = 500L, xCol = "weight")
 
   /** Force every plain CTE in an oracle to MATERIALIZED. DuckDB inlines
     * a CTE once per reference, so an oracle whose final tables reference
@@ -288,6 +618,13 @@ object LlmQueries {
        |hy AS (SELECT sum(nj * CAST(round(-ln(CAST(nj AS DOUBLE) / n) * 1000000) AS BIGINT)) AS hy_u
        |       FROM njy, nn)""".stripMargin
 
+  /** [[logitTrainCte]] plus each document's exact margin under the
+    * trained weights, `mgs(doc_id, m)`. */
+  private lazy val logitMarginCte =
+    s"""$logitTrainCte,
+       |mgs AS (SELECT f.doc_id, sum(f.x * w.w) AS m
+       |        FROM feat f JOIN w2 w USING (feature_idx) GROUP BY 1)""".stripMargin
+
   /** DuckDB twin of `Classifier.logisticTrain(rounds = 2, lr = 0.5)` over
     * the 64-dim hashed features of `documents` with y = (lang = 'en'):
     * `w2(feature_idx, w)`. Replays both fixed-point gradient rounds —
@@ -314,21 +651,14 @@ object LlmQueries {
          |                END AS w
          |        FROM $prev w LEFT JOIN gr$i g USING (feature_idx))""".stripMargin
     }
-    s"""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-       |tk AS (SELECT doc_id, term FROM t WHERE term <> ''),
-       |h AS (SELECT doc_id,
-       |        CAST('0x' || substring(md5(term), 1, 15) AS BIGINT) % 64 AS feature_idx,
-       |        CASE WHEN CAST('0x' || substring(md5('sign|' || term), 1, 15) AS BIGINT) % 2 = 1
-       |             THEN 1 ELSE -1 END AS sgn
-       |      FROM tk),
+    s"""$featureHashCte,
        |feat AS (SELECT doc_id, feature_idx, CAST(sum(sgn) AS BIGINT) AS x
        |         FROM h GROUP BY 1, 2 HAVING sum(sgn) <> 0),
        |lab AS (SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
        |        FROM documents),
        |nn AS (SELECT count(*) AS n FROM lab),
        |w0 AS (SELECT DISTINCT feature_idx, CAST(0 AS BIGINT) AS w FROM feat),
-       |${round(1)},
-       |${round(2)}""".stripMargin
+       |${(1 to 2).map(round).mkString(",\n")}""".stripMargin
   }
 
   /** DuckDB twin of `Graph.orient` (degree-ordered orientation over
@@ -347,7 +677,7 @@ object LlmQueries {
     s"""CAST(list_sum(list_transform(range(0, 8), p ->
        |  CASE WHEN list_sum(list_transform(range(1, 65), i ->
        |         CAST($e[i] AS DOUBLE) *
-       |         (CASE WHEN CAST('0x' || substring(md5(CAST(p AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 15) AS BIGINT) % 2 = 1
+       |         (CASE WHEN ${md5LongSql("CAST(p AS VARCHAR) || '_' || CAST(i AS VARCHAR)")} % 2 = 1
        |               THEN 1.0 ELSE -1.0 END))) > 0
        |       THEN CAST(2**p AS BIGINT) ELSE 0 END)) AS BIGINT)""".stripMargin
 
@@ -380,6 +710,37 @@ object LlmQueries {
       |      FROM sc)
       |SELECT query_id, neighbor_id, centroid_id, rnk, score_micro FROM r WHERE rnk <= 5
       |ORDER BY query_id, rnk""".stripMargin
+
+  /** `Similarity.ivfTopK(k = 5)` with the 16 centroids `vec_id` < 16,
+    * queries 16..20 and the corpus from 21. */
+  private def ivfTop5(s: org.apache.spark.sql.SparkSession, d: String,
+                      nprobe: Int): org.apache.spark.sql.DataFrame = {
+    val e = Tables(s, d, "embeddings")
+    Similarity.ivfTopK(
+      e.filter(col("vec_id") >= 21),
+      e.filter(col("vec_id").between(16, 20)),
+      e.filter(col("vec_id") < 16), k = 5, nprobe = nprobe)
+  }
+
+  /** DuckDB twin of [[ivfTop5]]: each query's `nprobe` nearest cells `qa`,
+    * each corpus vector's cell `ca`, the in-cell scores `sc` and
+    * [[ivfTop5Sql]]. */
+  private def ivfOracle(nprobe: Int): String =
+    s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
+       |qa AS (SELECT vec_id, embedding, cid FROM (
+       |         SELECT v.vec_id, v.embedding, c.cid,
+       |                row_number() OVER (PARTITION BY v.vec_id
+       |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
+       |         FROM embeddings v, cent c WHERE v.vec_id BETWEEN 16 AND 20) WHERE rn <= $nprobe),
+       |ca AS (SELECT vec_id, embedding, cid FROM (
+       |         SELECT v.vec_id, v.embedding, c.cid,
+       |                row_number() OVER (PARTITION BY v.vec_id
+       |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
+       |         FROM embeddings v, cent c WHERE v.vec_id >= 21) WHERE rn = 1),
+       |sc AS (SELECT qa.vec_id AS query_id, ca.vec_id AS neighbor_id, ca.cid AS centroid_id,
+       |              CAST(round((${dotSql("qa.embedding", "ca.embedding")}) * 1000000) AS BIGINT) AS score_micro
+       |       FROM qa JOIN ca ON qa.cid = ca.cid),
+       |$ivfTop5Sql""".stripMargin
 
   /** DuckDB twin of the hierarchical IVF coarse stage (16 centroids
     * vec_id < 16, the first 4 as coarse cells): `fc(cid, cv, gid)` each
@@ -805,6 +1166,51 @@ object LlmQueries {
       Multimodal.encodeY4m(8 + (m % 5).toInt, 6 + (m % 4).toInt, nf(m), f => gray(m, f))
     }
 
+  /** Gray level of sample (x, y) of frame f of the shot fixtures' clip m:
+    * a gradient whose structure changes every 4 frames. Its DuckDB twin is
+    * [[videoShotsOracle]]'s `g`. */
+  private def shotGray(m: Long, f: Int, x: Int, y: Int): Int =
+    (x * (3 + ((f / 4) % 5) * 2) + y * (7 + ((f / 4) % 3) * 4) + m.toInt) % 256
+
+  /** Shot boundaries of a frame-hash stream `(media_id, frame_idx, ahash)`:
+    * each frame whose hash differs from its clip's previous frame, with
+    * the Hamming distance. */
+  private def shotBoundaries(frames: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val wm = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("media_id")).orderBy(col("frame_idx"))
+    frames
+      .withColumn("prev", lag(col("ahash"), 1).over(wm))
+      .filter(col("prev").isNotNull)
+      .withColumn("hamming", expr("bit_count(ahash ^ prev)").cast("long"))
+      .filter(col("hamming") > 0)
+      .select(col("media_id"), col("frame_idx"), col("hamming"))
+      .orderBy("media_id", "frame_idx")
+  }
+
+  /** DuckDB twin of the shot rows: 60 clips of 8 + id % 5 frames of
+    * [[shotGray]] over an 8x6 sample grid, each frame's packed aHash
+    * `hb(id, f, ahash)`, and [[shotBoundaries]] over it. */
+  private val videoShotsOracle =
+    """WITH m AS (SELECT unnest(range(0, 60)) AS id),
+      |v AS (SELECT id, 8 + id % 5 AS nf FROM m),
+      |fr AS (SELECT id, nf, unnest(range(nf)) AS f FROM v),
+      |xs AS (SELECT id, f, unnest(range(8)) AS x FROM fr),
+      |pix AS (SELECT id, f, x, unnest(range(6)) AS y FROM xs),
+      |g AS (SELECT id, f, x, y,
+      |        (x * (3 + ((f // 4) % 5) * 2)
+      |         + y * (7 + ((f // 4) % 3) * 4) + id) % 256 AS gray FROM pix),
+      |mn AS (SELECT id, f, sum(gray) // 48 AS mean FROM g GROUP BY 1, 2),
+      |hb AS (SELECT g.id, g.f,
+      |         CAST(sum(CASE WHEN gray > mean
+      |             THEN (CAST(1 AS BIGINT) << (y * 8 + x)) ELSE 0 END) AS BIGINT) AS ahash
+      |       FROM g JOIN mn USING (id, f) GROUP BY 1, 2),
+      |lg AS (SELECT id, f, ahash,
+      |         lag(ahash) OVER (PARTITION BY id ORDER BY f) AS prev FROM hb)
+      |SELECT id AS media_id, CAST(f AS INTEGER) AS frame_idx,
+      |  CAST(bit_count(xor(ahash, prev)) AS BIGINT) AS hamming
+      |FROM lg WHERE prev IS NOT NULL AND bit_count(xor(ahash, prev)) > 0
+      |ORDER BY media_id, frame_idx""".stripMargin
+
   /** The PCM ramp: 200 mono 16-bit 8 kHz WAVs, media m playing the ramp
     * of `seed(m)` — (2000 + seed % 5 * 400) samples of
     * (i*a + seed*17) mod 2048 - 1024, a = seed % 7 + 3. */
@@ -980,8 +1386,7 @@ object LlmQueries {
           Dedup.nearDupEdges(Tables(s, d, "documents"), "doc_id", "text"),
           "id_a", "id_b")
         .orderBy("node"),
-      Some(s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              |$nearDupReachCte
+      Some(s"""$nearDupReachCte
               |SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
               |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach)
               |GROUP BY n ORDER BY node""".stripMargin)),
@@ -994,8 +1399,7 @@ object LlmQueries {
           Dedup.nearDupEdges(Tables(s, d, "documents"), "doc_id", "text"),
           "id_a", "id_b")
         .orderBy("node"),
-      Some(s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              |$nearDupReachCte
+      Some(s"""$nearDupReachCte
               |SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
               |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach)
               |GROUP BY n ORDER BY node""".stripMargin)),
@@ -1025,16 +1429,15 @@ object LlmQueries {
             Dedup.nearDupEdges(hot, "doc_id", "text"), "id_a", "id_b")
           .orderBy("node")
       },
-      Some(s"""${minhashSigCte
+      Some(s"""${nearDupReachCte
                 .replace("FROM documents", "FROM repdocs")
-                .replaceFirst("WITH ", "WITH RECURSIVE hotdocs AS (SELECT doc_id,\n" +
+                .replaceFirst("WITH RECURSIVE ", "WITH RECURSIVE hotdocs AS (SELECT doc_id,\n" +
                   "  CASE WHEN doc_id % 10 < 3\n" +
                   "       THEN 'mirror boilerplate page shared across the whole corpus again and again'\n" +
                   "       ELSE text END AS text FROM documents),\n" +
                   "dd AS (SELECT text, min(doc_id) AS rep FROM hotdocs GROUP BY text),\n" +
                   "grp AS (SELECT h.doc_id, r.rep FROM hotdocs h JOIN dd r USING (text)),\n" +
                   "repdocs AS (SELECT rep AS doc_id, text FROM dd),\n")},
-              |$nearDupReachCte,
               |repcomp AS (SELECT n AS rep, CAST(min(m) AS BIGINT) AS component FROM (
               |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach) GROUP BY n),
               |gsz AS (SELECT rep, count(*) AS sz FROM grp GROUP BY rep)
@@ -1066,10 +1469,7 @@ object LlmQueries {
           .select(col("component"), col("doc_id").as("survivor_id"), col("n_chars"))
           .orderBy("component")
       },
-      Some(s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              |$nearDupReachCte,
-              |comp AS (SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
-              |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach) GROUP BY n),
+      Some(s"""$nearDupCompCte,
               |grp AS (SELECT d.doc_id, d.n_chars, coalesce(c.component, d.doc_id) AS component
               |        FROM documents d LEFT JOIN comp c ON c.node = d.doc_id),
               |rk AS (SELECT component, doc_id, n_chars,
@@ -1097,10 +1497,7 @@ object LlmQueries {
             sum(when(keep, col("doc_id")).otherwise(0L)).as("kept_id_sum"))
           .orderBy("source")
       },
-      Some(s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              |$nearDupReachCte,
-              |comp AS (SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
-              |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach) GROUP BY n)
+      Some(s"""$nearDupCompCte
               |SELECT d.source, count(*) AS n_docs,
               |       CAST(sum(CASE WHEN c.component IS NULL OR c.component = d.doc_id
               |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
@@ -1117,10 +1514,10 @@ object LlmQueries {
           transform(tokens(col("text")), t => md5Long(t)).as("__tb"))
         .select(col("doc_id"), Dedup.simhashFromBases(col("__tb"), 16).as("simhash16"))
         .orderBy("doc_id"),
-      Some("""SELECT doc_id,
+      Some(s"""SELECT doc_id,
              |  CAST(list_sum(list_transform(range(0, 16), j ->
              |    CASE WHEN list_sum(list_transform(str_split(text, ' '), tok ->
-             |           CASE WHEN (CAST('0x' || substring(md5(tok), 1, 15) AS BIGINT) >> j) & 1 = 1
+             |           CASE WHEN (${md5LongSql("tok")} >> j) & 1 = 1
              |                THEN 1 ELSE -1 END)) > 0
              |         THEN CAST(2**j AS BIGINT) ELSE 0 END)) AS BIGINT) AS simhash16
              |FROM documents ORDER BY doc_id""".stripMargin)),
@@ -1162,10 +1559,10 @@ object LlmQueries {
       (s, d) => Dedup.simhashBandPairs(Tables(s, d, "documents"),
           "doc_id", "text", bits = 32, bands = 4, maxHamming = 3)
         .orderBy("id_a", "id_b"),
-      Some("""WITH sg AS (SELECT doc_id,
+      Some(s"""WITH sg AS (SELECT doc_id,
              |  CAST(list_sum(list_transform(range(0, 32), j ->
              |    CASE WHEN list_sum(list_transform(str_split(text, ' '), tok ->
-             |           CASE WHEN (CAST('0x' || substring(md5(tok), 1, 15) AS BIGINT) >> j) & 1 = 1
+             |           CASE WHEN (${md5LongSql("tok")} >> j) & 1 = 1
              |                THEN 1 ELSE -1 END)) > 0
              |         THEN CAST(2**j AS BIGINT) ELSE 0 END)) AS BIGINT) AS sig
              |FROM documents),
@@ -1188,11 +1585,9 @@ object LlmQueries {
         "doc_id", "text", Seq("source", "lang"), shingleLen = 3,
         maxBucketSize = 8)
         .orderBy("id_a", "id_b"),
-      Some("""WITH tk AS (SELECT doc_id, source, lang, str_split(text, ' ') AS t FROM documents),
+      Some(s"""WITH tk AS (SELECT doc_id, source, lang, str_split(text, ' ') AS t FROM documents),
              |d AS (SELECT doc_id, source, lang,
-             |        list_distinct(CASE WHEN len(t) >= 3
-             |          THEN list_transform(range(0, len(t) - 2), i -> array_to_string(t[(i+1):(i+3)], ' '))
-             |          ELSE [array_to_string(t, ' ')] END) AS sh
+             |        list_distinct($wordShinglesSql) AS sh
              |      FROM tk),
              |r AS (SELECT *, row_number() OVER (PARTITION BY source, lang ORDER BY doc_id) AS rn,
              |        count(*) OVER (PARTITION BY source, lang) AS cnt FROM d),
@@ -1217,13 +1612,13 @@ object LlmQueries {
       (s, d) => Dedup.cdcChunks(Tables(s, d, "documents").filter(col("doc_id") < 200),
           "doc_id", "text", window = 3, modulus = 8)
         .orderBy("doc_id", "chunk_id"),
-      Some("""WITH tk AS (SELECT doc_id, str_split(text, ' ') AS w
+      Some(s"""WITH tk AS (SELECT doc_id, str_split(text, ' ') AS w
              |       FROM documents WHERE doc_id < 200),
              |pos AS (SELECT doc_id, w, unnest(range(len(w))) AS i FROM tk),
              |sh AS (SELECT doc_id, i, w,
              |        CASE WHEN i = 0 THEN 1
              |             WHEN i + 3 <= len(w) AND
-             |               CAST('0x' || substring(md5(array_to_string(w[(i+1):(i+3)], ' ')), 1, 15) AS BIGINT) % 8 = 0
+             |               ${md5LongSql("array_to_string(w[(i+1):(i+3)], ' ')")} % 8 = 0
              |             THEN 1 ELSE 0 END AS b
              |      FROM pos),
              |ck AS (SELECT doc_id, i, w,
@@ -1231,7 +1626,7 @@ object LlmQueries {
              |       FROM sh)
              |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
              |  CAST(count(*) AS BIGINT) AS n_words,
-             |  CAST('0x' || substring(md5(string_agg(w[i + 1], ' ' ORDER BY i)), 1, 15) AS BIGINT) AS chunk_fp
+             |  ${md5LongSql("string_agg(w[i + 1], ' ' ORDER BY i)")} AS chunk_fp
              |FROM ck GROUP BY doc_id, chunk_id
              |ORDER BY doc_id, chunk_id""".stripMargin)),
 
@@ -1279,13 +1674,11 @@ object LlmQueries {
       (s, d) => Dedup.prefixFilterJaccardPairs(Tables(s, d, "documents"),
           "doc_id", "text", shingleLen = 3, thresholdMilli = 800)
         .orderBy("id_a", "id_b"),
-      Some("""WITH dd AS (SELECT text, min(doc_id) AS rep FROM documents GROUP BY text),
+      Some(s"""WITH dd AS (SELECT text, min(doc_id) AS rep FROM documents GROUP BY text),
              |grp AS (SELECT d.doc_id, r.rep FROM documents d JOIN dd r USING (text)),
              |tk AS (SELECT rep AS doc_id, str_split(text, ' ') AS t FROM dd),
              |ds AS (SELECT doc_id,
-             |        list_distinct(CASE WHEN len(t) >= 3
-             |          THEN list_transform(range(0, len(t) - 2), i -> array_to_string(t[(i+1):(i+3)], ' '))
-             |          ELSE [array_to_string(t, ' ')] END) AS sh
+             |        list_distinct($wordShinglesSql) AS sh
              |      FROM tk),
              |sc AS (SELECT a.doc_id AS ra, b.doc_id AS rb,
              |         CAST(len(list_intersect(a.sh, b.sh)) AS INTEGER) AS n_intersect,
@@ -1467,7 +1860,7 @@ object LlmQueries {
               |c AS (SELECT bucket, vec_id AS neighbor_id, embedding AS ce FROM b WHERE vec_id >= 5),
               |qm AS (SELECT query_id, p, list_sum(list_transform(range(1, 65), i ->
               |         CAST(qe[i] AS DOUBLE) *
-              |         (CASE WHEN CAST('0x' || substring(md5(CAST(p AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 15) AS BIGINT) % 2 = 1
+              |         (CASE WHEN ${md5LongSql("CAST(p AS VARCHAR) || '_' || CAST(i AS VARCHAR)")} % 2 = 1
               |               THEN 1.0 ELSE -1.0 END))) AS dp
               |       FROM q, range(0, 8) t(p)),
               |qr AS (SELECT query_id, p,
@@ -1549,61 +1942,15 @@ object LlmQueries {
     // IVF ANN (nprobe=1): centroid assignment by broadcast argmax, search
     // within the query's cell only.
     Q("ann_ivf", "LLM",
-      (s, d) => {
-        val e = Tables(s, d, "embeddings")
-        Similarity.ivfTopK(
-          e.filter(col("vec_id") >= 21),
-          e.filter(col("vec_id").between(16, 20)),
-          e.filter(col("vec_id") < 16), k = 5)
-          .orderBy("query_id", "rnk")
-      },
-      Some {
-        s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
-           |qa AS (SELECT vec_id, embedding, cid FROM (
-           |         SELECT v.vec_id, v.embedding, c.cid,
-           |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
-           |         FROM embeddings v, cent c WHERE v.vec_id BETWEEN 16 AND 20) WHERE rn = 1),
-           |ca AS (SELECT vec_id, embedding, cid FROM (
-           |         SELECT v.vec_id, v.embedding, c.cid,
-           |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
-           |         FROM embeddings v, cent c WHERE v.vec_id >= 21) WHERE rn = 1),
-           |sc AS (SELECT qa.vec_id AS query_id, ca.vec_id AS neighbor_id, qa.cid AS centroid_id,
-           |              CAST(round((${dotSql("qa.embedding", "ca.embedding")}) * 1000000) AS BIGINT) AS score_micro
-           |       FROM qa JOIN ca ON qa.cid = ca.cid),
-           |$ivfTop5Sql""".stripMargin
-      }),
+      (s, d) => ivfTop5(s, d, nprobe = 1).orderBy("query_id", "rnk"),
+      Some(ivfOracle(nprobe = 1))),
 
     // IVF with multi-cell probing (nprobe=2): the recall/cost knob — each
     // query searches its 2 nearest cells; candidates live in exactly one
     // cell, so probed cells are disjoint and cost is linear in nprobe.
     Q("ann_ivf_nprobe", "LLM",
-      (s, d) => {
-        val e = Tables(s, d, "embeddings")
-        Similarity.ivfTopK(
-          e.filter(col("vec_id") >= 21),
-          e.filter(col("vec_id").between(16, 20)),
-          e.filter(col("vec_id") < 16), k = 5, nprobe = 2)
-          .orderBy("query_id", "rnk")
-      },
-      Some {
-        s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
-           |qa AS (SELECT vec_id, embedding, cid FROM (
-           |         SELECT v.vec_id, v.embedding, c.cid,
-           |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
-           |         FROM embeddings v, cent c WHERE v.vec_id BETWEEN 16 AND 20) WHERE rn <= 2),
-           |ca AS (SELECT vec_id, embedding, cid FROM (
-           |         SELECT v.vec_id, v.embedding, c.cid,
-           |                row_number() OVER (PARTITION BY v.vec_id
-           |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
-           |         FROM embeddings v, cent c WHERE v.vec_id >= 21) WHERE rn = 1),
-           |sc AS (SELECT qa.vec_id AS query_id, ca.vec_id AS neighbor_id, ca.cid AS centroid_id,
-           |              CAST(round((${dotSql("qa.embedding", "ca.embedding")}) * 1000000) AS BIGINT) AS score_micro
-           |       FROM qa JOIN ca ON qa.cid = ca.cid),
-           |$ivfTop5Sql""".stripMargin
-      }),
+      (s, d) => ivfTop5(s, d, nprobe = 2).orderBy("query_id", "rnk"),
+      Some(ivfOracle(nprobe = 2))),
 
     // Hierarchical IVF assignment (coarse quantizer -> within-cell argmax):
     // the k ∝ n scale path — √k coarse centroids broadcast, fine centroids
@@ -1751,12 +2098,8 @@ object LlmQueries {
     Q("text_ngram_freq", "LLM",
       (s, d) => TextAnalysis.topNgrams(Tables(s, d, "documents"), "lang", "text",
         n = 3, k = 5).orderBy("lang", "rnk"),
-      Some("""WITH t AS (SELECT lang,
-             |         unnest(CASE WHEN len(str_split(text, ' ')) >= 3
-             |           THEN list_transform(range(0, len(str_split(text, ' ')) - 2),
-             |                i -> array_to_string((str_split(text, ' '))[(i+1):(i+3)], ' '))
-             |           ELSE [array_to_string(str_split(text, ' '), ' ')] END) AS ngram
-             |       FROM documents),
+      Some(s"""WITH tk AS (SELECT lang, str_split(text, ' ') AS t FROM documents),
+             |t AS (SELECT lang, unnest($wordShinglesSql) AS ngram FROM tk),
              |c AS (SELECT lang, ngram, count(*) AS n FROM t GROUP BY 1, 2)
              |SELECT lang, CAST(rn AS INTEGER) AS rnk, ngram, n FROM (
              |  SELECT lang, ngram, n,
@@ -1940,16 +2283,14 @@ object LlmQueries {
           .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok_sum"))
           .orderBy("split_name", "source")
       },
-      Some("""WITH nm AS (SELECT doc_id, source,
-             |         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'),
-             |                             '\s+', ' ', 'g')) AS t
+      Some(s"""WITH nm AS (SELECT doc_id, source, ${normalizeTextSql("text")} AS t
              |       FROM documents),
              |g AS (SELECT * FROM nm WHERE len(str_split(t, ' ')) >= 10),
              |sv AS (SELECT min(doc_id) AS doc_id FROM g GROUP BY md5(t)),
              |k AS (SELECT g.* FROM g JOIN sv USING (doc_id)),
              |sp AS (SELECT source,
-             |         CASE WHEN CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100 < 80 THEN 'train'
-             |              WHEN CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100 < 90 THEN 'val'
+             |         CASE WHEN ${md5LongSql("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
+             |              WHEN ${md5LongSql("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
              |              ELSE 'test' END AS split_name,
              |         CAST(len(str_split(t, ' ')) AS BIGINT) AS n_tok
              |       FROM k)
@@ -1990,9 +2331,7 @@ object LlmQueries {
             sum(col("tok_in")).as("tok_in"), sum(col("tok_out")).as("tok_out"))
           .orderBy("source")
       },
-      Some("""WITH nm AS (SELECT doc_id, source,
-             |         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'),
-             |                             '\s+', ' ', 'g')) AS t
+      Some(s"""WITH nm AS (SELECT doc_id, source, ${normalizeTextSql("text")} AS t
              |       FROM documents),
              |m AS (SELECT doc_id,
              |        (CAST(len(list_filter(str_split(t, ' '),
@@ -2004,20 +2343,7 @@ object LlmQueries {
              |sv AS (SELECT min(doc_id) AS doc_id FROM g GROUP BY md5(t)),
              |k AS (SELECT g.* FROM g JOIN sv USING (doc_id)),
              |tk AS (SELECT doc_id, str_split(t, ' ') AS tw FROM k),
-             |big AS (SELECT doc_id, tw FROM tk WHERE len(tw) >= 5),
-             |win AS (SELECT doc_id, CAST(i AS INTEGER) AS pos,
-             |          CAST('0x' || substring(md5(array_to_string(tw[(i+1):(i+5)], ' ')), 1, 15) AS BIGINT) AS h
-             |        FROM big, UNNEST(range(0, len(tw) - 4)) AS u(i)),
-             |dups AS (SELECT h FROM win GROUP BY h HAVING min(doc_id) <> max(doc_id)),
-             |dd AS (SELECT doc_id, pos FROM win WHERE h IN (SELECT h FROM dups)),
-             |lagged AS (SELECT doc_id, pos,
-             |             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 1
-             |                  THEN 1 ELSE 0 END AS brk
-             |           FROM dd),
-             |runs AS (SELECT doc_id, pos,
-             |           sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-             |                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-             |         FROM lagged),
+             |${dupSpanRunsCte("tk", "tw")},
              |spans AS (SELECT doc_id, min(pos) AS s, max(pos) + 4 AS e
              |          FROM runs GROUP BY doc_id, run_id),
              |pos AS (SELECT doc_id, i AS pos, tw[i+1] AS tok
@@ -2249,9 +2575,9 @@ object LlmQueries {
     Q("text_fingerprint", "LLM",
       (s, d) => TextAnalysis.fingerprints(Tables(s, d, "documents"), "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""SELECT doc_id,
+      Some(s"""SELECT doc_id,
              |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |         list_transform(str_split(text, ' '), t -> CAST('0x' || substring(md5(t), 1, 15) AS BIGINT))),
+             |         list_transform(str_split(text, ' '), t -> ${md5LongSql("t")})),
              |       (a, b) -> (a * 31 + b) % 1000000007) AS BIGINT) AS fingerprint
              |FROM documents ORDER BY doc_id""".stripMargin)),
 
@@ -2348,21 +2674,7 @@ object LlmQueries {
       (s, d) => TextAnalysis.winnowFingerprints(
           Tables(s, d, "documents"), "doc_id", "text")
         .orderBy("doc_id", "fp_pos"),
-      Some("""WITH toks AS (SELECT doc_id, str_split(text, ' ') AS t FROM documents),
-             |sh AS (SELECT doc_id,
-             |         CASE WHEN len(t) >= 3
-             |              THEN list_transform(range(0, len(t) - 2), i -> array_to_string(t[(i+1):(i+3)], ' '))
-             |              ELSE [array_to_string(t, ' ')] END AS s
-             |       FROM toks),
-             |keys AS (SELECT doc_id,
-             |           list_transform(range(0, len(s)),
-             |             i -> (CAST('0x' || substring(md5(s[i+1]), 1, 15) AS BIGINT) % 1073741824)
-             |                  * 1048576 + (1048575 - i)) AS ks
-             |         FROM sh),
-             |sel AS (SELECT doc_id,
-             |          list_distinct(list_transform(range(0, len(ks) - 3),
-             |            j -> list_min(ks[(j+1):(j+4)]))) AS fps
-             |        FROM keys WHERE len(ks) >= 4),
+      Some(s"""WITH ${winnowSelCte("documents")},
              |f AS (SELECT doc_id, unnest(fps) AS k FROM sel)
              |SELECT doc_id, k // 1048576 AS fp_hash,
              |       CAST(1048575 - (k % 1048576) AS BIGINT) AS fp_pos
@@ -2379,22 +2691,8 @@ object LlmQueries {
       (s, d) => TextAnalysis.winnowOverlapPairs(
           Tables(s, d, "documents"), "doc_id", "text")
         .orderBy("id_a", "id_b"),
-      Some("""WITH dd AS (SELECT text, min(doc_id) AS doc_id FROM documents GROUP BY text),
-             |toks AS (SELECT doc_id, str_split(text, ' ') AS t FROM dd),
-             |sh AS (SELECT doc_id,
-             |         CASE WHEN len(t) >= 3
-             |              THEN list_transform(range(0, len(t) - 2), i -> array_to_string(t[(i+1):(i+3)], ' '))
-             |              ELSE [array_to_string(t, ' ')] END AS s
-             |       FROM toks),
-             |keys AS (SELECT doc_id,
-             |           list_transform(range(0, len(s)),
-             |             i -> (CAST('0x' || substring(md5(s[i+1]), 1, 15) AS BIGINT) % 1073741824)
-             |                  * 1048576 + (1048575 - i)) AS ks
-             |         FROM sh),
-             |sel AS (SELECT doc_id,
-             |          list_distinct(list_transform(range(0, len(ks) - 3),
-             |            j -> list_min(ks[(j+1):(j+4)]))) AS fps
-             |        FROM keys WHERE len(ks) >= 4),
+      Some(s"""WITH dd AS (SELECT text, min(doc_id) AS doc_id FROM documents GROUP BY text),
+             |${winnowSelCte("dd")},
              |posts AS (SELECT DISTINCT doc_id, unnest(fps) // 1048576 AS fp FROM sel),
              |kept AS (SELECT doc_id, fp FROM posts
              |         QUALIFY count(*) OVER (PARTITION BY fp) <= 50),
@@ -2561,37 +2859,10 @@ object LlmQueries {
     // hashes + lag + xor/bit_count arithmetically.
     Q("multimodal_video_shots", "LLM",
       (s, d) => {
-        val media = y4mClips(s, m => 8 + (m % 5).toInt, (m, f) => (x, y) =>
-          (x * (3 + ((f / 4) % 5) * 2) + y * (7 + ((f / 4) % 3) * 4) + m.toInt) % 256)
-        val wm = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("media_id")).orderBy(col("frame_idx"))
-        Multimodal.videoFrameHashes(media, every = 1).toDF()
-          .withColumn("prev", lag(col("ahash"), 1).over(wm))
-          .filter(col("prev").isNotNull)
-          .withColumn("hamming", expr("bit_count(ahash ^ prev)").cast("long"))
-          .filter(col("hamming") > 0)
-          .select(col("media_id"), col("frame_idx"), col("hamming"))
-          .orderBy("media_id", "frame_idx")
+        val media = y4mClips(s, m => 8 + (m % 5).toInt, (m, f) => (x, y) => shotGray(m, f, x, y))
+        shotBoundaries(Multimodal.videoFrameHashes(media, every = 1).toDF())
       },
-      Some("""WITH m AS (SELECT unnest(range(0, 60)) AS id),
-             |v AS (SELECT id, 8 + id % 5 AS nf FROM m),
-             |fr AS (SELECT id, nf, unnest(range(nf)) AS f FROM v),
-             |xs AS (SELECT id, f, unnest(range(8)) AS x FROM fr),
-             |pix AS (SELECT id, f, x, unnest(range(6)) AS y FROM xs),
-             |g AS (SELECT id, f, x, y,
-             |        (x * (3 + ((f // 4) % 5) * 2)
-             |         + y * (7 + ((f // 4) % 3) * 4) + id) % 256 AS gray FROM pix),
-             |mn AS (SELECT id, f, sum(gray) // 48 AS mean FROM g GROUP BY 1, 2),
-             |hb AS (SELECT g.id, g.f,
-             |         CAST(sum(CASE WHEN gray > mean
-             |             THEN (CAST(1 AS BIGINT) << (y * 8 + x)) ELSE 0 END) AS BIGINT) AS ahash
-             |       FROM g JOIN mn USING (id, f) GROUP BY 1, 2),
-             |lg AS (SELECT id, f, ahash,
-             |         lag(ahash) OVER (PARTITION BY id ORDER BY f) AS prev FROM hb)
-             |SELECT id AS media_id, CAST(f AS INTEGER) AS frame_idx,
-             |  CAST(bit_count(xor(ahash, prev)) AS BIGINT) AS hamming
-             |FROM lg WHERE prev IS NOT NULL AND bit_count(xor(ahash, prev)) > 0
-             |ORDER BY media_id, frame_idx""".stripMargin)),
+      Some(videoShotsOracle)),
 
     // COMPRESSED video decode — MJPEG inside an AVI (RIFF) container,
     // each '00dc' chunk a standalone JFIF frame through the full
@@ -2637,41 +2908,14 @@ object LlmQueries {
         val media = mediaFixture(s, 60, "video/x-msvideo") { m =>
           Multimodal.encodeAviMjpeg(64, 48, 8 + (m % 5).toInt,
             f => (x, y) => {
-              val v = ((x / 8) * (3 + ((f / 4) % 5) * 2)
-                + (y / 8) * (7 + ((f / 4) % 3) * 4) + m.toInt) % 256
+              val v = shotGray(m, f, x / 8, y / 8)
               (v, v, v)
             })
         }
-        val wm = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("media_id")).orderBy(col("frame_idx"))
-        Multimodal.videoFrameHashes(media, every = 1, strideX = 8, strideY = 8)
-          .toDF()
-          .withColumn("prev", lag(col("ahash"), 1).over(wm))
-          .filter(col("prev").isNotNull)
-          .withColumn("hamming", expr("bit_count(ahash ^ prev)").cast("long"))
-          .filter(col("hamming") > 0)
-          .select(col("media_id"), col("frame_idx"), col("hamming"))
-          .orderBy("media_id", "frame_idx")
+        shotBoundaries(
+          Multimodal.videoFrameHashes(media, every = 1, strideX = 8, strideY = 8).toDF())
       },
-      Some("""WITH m AS (SELECT unnest(range(0, 60)) AS id),
-             |v AS (SELECT id, 8 + id % 5 AS nf FROM m),
-             |fr AS (SELECT id, nf, unnest(range(nf)) AS f FROM v),
-             |xs AS (SELECT id, f, unnest(range(8)) AS bx FROM fr),
-             |pix AS (SELECT id, f, bx, unnest(range(6)) AS byy FROM xs),
-             |g AS (SELECT id, f, bx, byy,
-             |        (bx * (3 + ((f // 4) % 5) * 2)
-             |         + byy * (7 + ((f // 4) % 3) * 4) + id) % 256 AS gray FROM pix),
-             |mn AS (SELECT id, f, sum(gray) // 48 AS mean FROM g GROUP BY 1, 2),
-             |hb AS (SELECT g.id, g.f,
-             |         CAST(sum(CASE WHEN gray > mean
-             |             THEN (CAST(1 AS BIGINT) << (byy * 8 + bx)) ELSE 0 END) AS BIGINT) AS ahash
-             |       FROM g JOIN mn USING (id, f) GROUP BY 1, 2),
-             |lg AS (SELECT id, f, ahash,
-             |         lag(ahash) OVER (PARTITION BY id ORDER BY f) AS prev FROM hb)
-             |SELECT id AS media_id, CAST(f AS INTEGER) AS frame_idx,
-             |  CAST(bit_count(xor(ahash, prev)) AS BIGINT) AS hamming
-             |FROM lg WHERE prev IS NOT NULL AND bit_count(xor(ahash, prev)) > 0
-             |ORDER BY media_id, frame_idx""".stripMargin)),
+      Some(videoShotsOracle)),
 
     // PCM audio EMBEDDED in an interleaved MJPEG+PCM AVI (the classic
     // DV/webcam capture layout: '00dc' JFIF frame then its '01wb' audio
@@ -3242,12 +3486,7 @@ object LlmQueries {
         .withColumn("rep_ratio_micro",
           expr("(cast(n_shingles as bigint) - n_distinct) * 1000000 div n_shingles"))
         .orderBy("doc_id"),
-      Some("""WITH sh AS (SELECT doc_id,
-             |         CASE WHEN len(str_split(text, ' ')) >= 3
-             |              THEN list_transform(range(0, len(str_split(text, ' ')) - 2),
-             |                     i -> array_to_string((str_split(text, ' '))[(i+1):(i+3)], ' '))
-             |              ELSE [array_to_string(str_split(text, ' '), ' ')] END AS s
-             |       FROM documents)
+      Some(s"""WITH ${shinglesCte("documents")}
              |SELECT doc_id, CAST(len(s) AS INTEGER) AS n_shingles,
              |       CAST(len(list_distinct(s)) AS INTEGER) AS n_distinct,
              |       CAST((CAST(len(s) AS BIGINT) - len(list_distinct(s))) * 1000000 // len(s) AS BIGINT) AS rep_ratio_micro
@@ -3265,13 +3504,7 @@ object LlmQueries {
       (s, d) => TextAnalysis.featureHash(Tables(s, d, "documents"),
           "doc_id", "text", numFeatures = 64)
         .orderBy("doc_id", "feature_idx"),
-      Some("""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-             |tk AS (SELECT doc_id, term FROM t WHERE term <> ''),
-             |h AS (SELECT doc_id,
-             |        CAST('0x' || substring(md5(term), 1, 15) AS BIGINT) % 64 AS feature_idx,
-             |        CASE WHEN CAST('0x' || substring(md5('sign|' || term), 1, 15) AS BIGINT) % 2 = 1
-             |             THEN 1 ELSE -1 END AS sgn
-             |      FROM tk)
+      Some(s"""$featureHashCte
              |SELECT doc_id, feature_idx, CAST(sum(sgn) AS BIGINT) AS weight
              |FROM h GROUP BY 1, 2 HAVING sum(sgn) <> 0
              |ORDER BY doc_id, feature_idx""".stripMargin)),
@@ -3290,9 +3523,7 @@ object LlmQueries {
         val docs = Tables(s, d, "documents")
         graft.llm.Classifier.logisticTrain(
           TextAnalysis.featureHash(docs, "doc_id", "text", numFeatures = 64),
-          docs.select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("y")),
-          rounds = 2, lrMilli = 500L, xCol = "weight")
+          enLabels(docs), rounds = 2, lrMilli = 500L, xCol = "weight")
           .orderBy("feature_idx")
       },
       Some(s"""$logitTrainCte
@@ -3307,19 +3538,10 @@ object LlmQueries {
     Q("text_quality_score_trained", "LLM",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        // r16: train + score over ONE pinned feature projection — the
-        // un-pinned form ran the featureHash tokenize+hash explode twice
-        // per query (once inside train, once for the scoring pass)
-        graft.llm.Classifier.trainAndScore(
-          TextAnalysis.featureHash(docs, "doc_id", "text", numFeatures = 64),
-          docs.select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("y")),
-          rounds = 2, lrMilli = 500L, xCol = "weight")
+        qualityScores(docs, enLabels(docs))
           .orderBy("doc_id")
       },
-      Some(s"""$logitTrainCte,
-              |mgs AS (SELECT f.doc_id, sum(f.x * w.w) AS m
-              |        FROM feat f JOIN w2 w USING (feature_idx) GROUP BY 1)
+      Some(s"""$logitMarginCte
               |SELECT doc_id, CAST(m AS BIGINT) AS margin_micro,
               |  CAST(round(1000000.0 /
               |    (1.0 + exp(-(CAST(m AS DOUBLE) / 1000000.0)))) AS BIGINT) AS p_micro
@@ -3333,12 +3555,8 @@ object LlmQueries {
     Q("text_classifier_eval", "LLM",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val labels = docs.select(col("doc_id"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-        // r16: one pinned feature projection feeds train AND score
-        graft.llm.Classifier.trainAndScore(
-          TextAnalysis.featureHash(docs, "doc_id", "text", numFeatures = 64),
-          labels, rounds = 2, lrMilli = 500L, xCol = "weight")
+        val labels = enLabels(docs)
+        qualityScores(docs, labels)
           .join(labels, "doc_id")
           .withColumn("pred", when(col("p_micro") >= 500000L, 1L).otherwise(0L))
           .agg(
@@ -3354,9 +3572,7 @@ object LlmQueries {
             """CASE WHEN 2 * tp + fp + fn = 0 THEN 0L
               |ELSE 2 * tp * 1000 div (2 * tp + fp + fn) END""".stripMargin))
       },
-      Some(s"""$logitTrainCte,
-              |mgs AS (SELECT f.doc_id, sum(f.x * w.w) AS m
-              |        FROM feat f JOIN w2 w USING (feature_idx) GROUP BY 1),
+      Some(s"""$logitMarginCte,
               |sc AS (SELECT m.doc_id,
               |         CASE WHEN round(1000000.0 /
               |           (1.0 + exp(-(CAST(m AS DOUBLE) / 1000000.0)))) >= 500000
@@ -3386,12 +3602,8 @@ object LlmQueries {
     Q("text_calibration_bins", "LLM",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val labels = docs.select(col("doc_id"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-        // r16: one pinned feature projection feeds train AND score
-        graft.llm.Classifier.trainAndScore(
-          TextAnalysis.featureHash(docs, "doc_id", "text", numFeatures = 64),
-          labels, rounds = 2, lrMilli = 500L, xCol = "weight")
+        val labels = enLabels(docs)
+        qualityScores(docs, labels)
           .join(labels, "doc_id")
           .withColumn("bin", least(expr("p_micro div 100000"), lit(9L)))
           .groupBy(col("bin"))
@@ -3400,9 +3612,7 @@ object LlmQueries {
             expr("sum(y) * 1000 div count(1)").as("actual_rate_milli"))
           .orderBy("bin")
       },
-      Some(s"""$logitTrainCte,
-              |mgs AS (SELECT f.doc_id, sum(f.x * w.w) AS m
-              |        FROM feat f JOIN w2 w USING (feature_idx) GROUP BY 1),
+      Some(s"""$logitMarginCte,
               |sc AS (SELECT m.doc_id,
               |         CAST(round(1000000.0 /
               |           (1.0 + exp(-(CAST(m AS DOUBLE) / 1000000.0)))) AS BIGINT) AS p,
@@ -3420,36 +3630,10 @@ object LlmQueries {
     // ann_* dense family; the retrieval primitive in front of a reranker.
     Q("text_bm25_search", "LLM",
       (s, d) => {
-        import s.implicits._
-        val probes = Seq(
-          (1, "spark join shuffle window"),
-          (2, "customer order line value"),
-          (3, "vector hash merge nosuchterm")).toDF("query_id", "query_text")
-        TextAnalysis.bm25Search(Tables(s, d, "documents"), probes, k = 10)
+        TextAnalysis.bm25Search(Tables(s, d, "documents"), bm25Probes(s), k = 10)
           .orderBy("query_id", "rnk")
       },
-      Some("""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-             |tk AS (SELECT doc_id, term FROM t WHERE term <> ''),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM tk GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, count(*) AS dl FROM tk GROUP BY 1),
-             |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |stats AS (SELECT count(*) AS n_docs, sum(dl) * 1000 // count(*) AS avgdl_milli FROM dl),
-             |q(query_id, query_text) AS (VALUES
-             |  (1, 'spark join shuffle window'),
-             |  (2, 'customer order line value'),
-             |  (3, 'vector hash merge nosuchterm')),
-             |qt AS (SELECT DISTINCT query_id, unnest(string_split(query_text, ' ')) AS term FROM q),
-             |idf AS (SELECT term,
-             |          CAST(round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * 1e6) AS BIGINT) AS idf_micro,
-             |          avgdl_milli
-             |        FROM dfq, stats),
-             |sc AS (SELECT qt.query_id, tf.doc_id,
-             |         idf.idf_micro * tf.tf * 2200
-             |           // (tf.tf * 1000
-             |              + (1200 * (250 + (750 * dl.dl * 1000) // idf.avgdl_milli)) // 1000)
-             |           AS s_micro
-             |       FROM tf JOIN qt USING (term) JOIN idf USING (term)
-             |            JOIN dl USING (doc_id)),
+      Some(s"""$bm25ScoreCte,
              |ag AS (SELECT query_id, doc_id, count(*) AS n_hit_terms,
              |         sum(s_micro) AS score_micro FROM sc GROUP BY 1, 2),
              |r AS (SELECT query_id, doc_id, n_hit_terms, score_micro,
@@ -3470,13 +3654,8 @@ object LlmQueries {
     // ANN broadcast scan).
     Q("text_hybrid_rrf", "LLM",
       (s, d) => {
-        import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        val probes = Seq(
-          (1, "spark join shuffle window"),
-          (2, "customer order line value"),
-          (3, "vector hash merge nosuchterm")).toDF("query_id", "query_text")
-        val lex = TextAnalysis.bm25Search(Tables(s, d, "documents"), probes, k = 20)
+        val lex = TextAnalysis.bm25Search(Tables(s, d, "documents"), bm25Probes(s), k = 20)
           .select(col("query_id").cast("long").as("query_id"),
             col("doc_id"), col("rnk").cast("long").as("lex_rnk"))
         val e = Tables(s, d, "embeddings")
@@ -3496,28 +3675,7 @@ object LlmQueries {
             col("sem_rnk"), col("rrf_micro"), col("rnk"))
           .orderBy("query_id", "rnk")
       },
-      Some(s"""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-              |tk AS (SELECT doc_id, term FROM t WHERE term <> ''),
-              |tf AS (SELECT doc_id, term, count(*) AS tf FROM tk GROUP BY 1, 2),
-              |dl AS (SELECT doc_id, count(*) AS dl FROM tk GROUP BY 1),
-              |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-              |stats AS (SELECT count(*) AS n_docs, sum(dl) * 1000 // count(*) AS avgdl_milli FROM dl),
-              |q(query_id, query_text) AS (VALUES
-              |  (1, 'spark join shuffle window'),
-              |  (2, 'customer order line value'),
-              |  (3, 'vector hash merge nosuchterm')),
-              |qt AS (SELECT DISTINCT query_id, unnest(string_split(query_text, ' ')) AS term FROM q),
-              |idf AS (SELECT term,
-              |          CAST(round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * 1e6) AS BIGINT) AS idf_micro,
-              |          avgdl_milli
-              |        FROM dfq, stats),
-              |sc AS (SELECT qt.query_id, tf.doc_id,
-              |         idf.idf_micro * tf.tf * 2200
-              |           // (tf.tf * 1000
-              |              + (1200 * (250 + (750 * dl.dl * 1000) // idf.avgdl_milli)) // 1000)
-              |           AS s_micro
-              |       FROM tf JOIN qt USING (term) JOIN idf USING (term)
-              |            JOIN dl USING (doc_id)),
+      Some(s"""$bm25ScoreCte,
               |lag_ AS (SELECT query_id, doc_id, sum(s_micro) AS score_micro FROM sc GROUP BY 1, 2),
               |lex AS (SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
               |          CAST(rnk AS BIGINT) AS lex_rnk FROM (
@@ -3581,8 +3739,6 @@ object LlmQueries {
     Q("text_decontaminate", "LLM",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val grams = (t: org.apache.spark.sql.Column) =>
-          explode(array_distinct(shingles(tokens(t), 3)))
         // benchmark side: tiny by construction (a fixed handful of docs at
         // ANY scale factor) — filter FIRST, then shingle, then collect to a
         // local relation. The benchmark set is exactly the bounded-metadata
@@ -3594,27 +3750,18 @@ object LlmQueries {
         val bench = {
           import s.implicits._
           docs.filter(col("doc_id") < 10)
-            .select(grams(col("text")).as("g")).distinct()
+            .select(distinctGrams(col("text")).as("g")).distinct()
             .as[String].collect().toSeq.toDF("g")
         }
         // train side streams through one shingle pass + broadcast join —
         // never materialized, no shuffle of the corpus
         docs.filter(col("doc_id") >= 10)
-          .select(col("doc_id"), grams(col("text")).as("g"))
+          .select(col("doc_id"), distinctGrams(col("text")).as("g"))
           .join(broadcast(bench), "g")
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n_contaminated"))
           .orderBy("doc_id")
       },
-      Some("""WITH sh AS (SELECT doc_id, list_distinct(
-             |         CASE WHEN len(str_split(text, ' ')) >= 3
-             |              THEN list_transform(range(0, len(str_split(text, ' ')) - 2),
-             |                     i -> array_to_string((str_split(text, ' '))[(i+1):(i+3)], ' '))
-             |              ELSE [array_to_string(str_split(text, ' '), ' ')] END) AS s
-             |       FROM documents),
-             |bench AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id < 10),
-             |tr AS (SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id >= 10)
-             |SELECT doc_id, count(*) AS n_contaminated
-             |FROM tr JOIN bench USING (g) GROUP BY 1 ORDER BY 1""".stripMargin)),
+      Some(decontaminateOracle)),
 
     // Bloom-prefiltered decontamination — the shape that survives when the
     // BENCHMARK side outgrows a raw-gram broadcast (dozens of held-out sets
@@ -3630,10 +3777,8 @@ object LlmQueries {
     Q("text_decontaminate_bloom", "LLM",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val grams = (t: org.apache.spark.sql.Column) =>
-          explode(array_distinct(shingles(tokens(t), 3)))
         val benchGrams = docs.filter(col("doc_id") < 10)
-          .select(grams(col("text")).as("g")).distinct()
+          .select(distinctGrams(col("text")).as("g")).distinct()
         // 2^16 bits / 4 hashes: ~1% fp at the synthetic bench size; the
         // 1 KiB word array rides the plan as a literal
         val bloom = TextAnalysis.bloomBuild(benchGrams, "g", bits = 1 << 16)
@@ -3642,22 +3787,13 @@ object LlmQueries {
           benchGrams.as[String].collect().toSeq.toDF("g")
         }
         docs.filter(col("doc_id") >= 10)
-          .select(col("doc_id"), grams(col("text")).as("g"))
+          .select(col("doc_id"), distinctGrams(col("text")).as("g"))
           .filter(TextAnalysis.bloomMightContain(bloom, 1 << 16, 4, col("g")))
           .join(broadcast(bench), "g")
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n_contaminated"))
           .orderBy("doc_id")
       },
-      Some("""WITH sh AS (SELECT doc_id, list_distinct(
-             |         CASE WHEN len(str_split(text, ' ')) >= 3
-             |              THEN list_transform(range(0, len(str_split(text, ' ')) - 2),
-             |                     i -> array_to_string((str_split(text, ' '))[(i+1):(i+3)], ' '))
-             |              ELSE [array_to_string(str_split(text, ' '), ' ')] END) AS s
-             |       FROM documents),
-             |bench AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id < 10),
-             |tr AS (SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id >= 10)
-             |SELECT doc_id, count(*) AS n_contaminated
-             |FROM tr JOIN bench USING (g) GROUP BY 1 ORDER BY 1""".stripMargin)),
+      Some(decontaminateOracle)),
 
     // Stratified deterministic sampling: the data-mixing knob — keep 50% of
     // src0, 25% of src1, 10% of everything else, decided by id hash alone
@@ -3706,7 +3842,7 @@ object LlmQueries {
           .select(col("source"), col("pick_rank"), col("doc_id"), col("len"))
           .orderBy("source", "pick_rank")
       },
-      Some("""WITH gated AS (SELECT doc_id, source, text FROM documents
+      Some(s"""WITH gated AS (SELECT doc_id, source, text FROM documents
              |       WHERE lang IN ('en', 'de') AND length(text) >= 50),
              |dd AS (SELECT doc_id, source, CAST(length(text) AS BIGINT) AS len,
              |         row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
@@ -3731,7 +3867,7 @@ object LlmQueries {
              |       FROM rk, e),
              |pick AS (SELECT d.source, d.doc_id, d.len,
              |           CAST(row_number() OVER (PARTITION BY d.source
-             |             ORDER BY CAST('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT),
+             |             ORDER BY ${md5LongSql("CAST(d.doc_id AS VARCHAR)")},
              |                      d.doc_id) AS INTEGER) AS pick_rank,
              |           a.n_alloc
              |         FROM ded d JOIN al a USING (source))
@@ -3778,8 +3914,8 @@ object LlmQueries {
           .agg(count(lit(1)).as("n_sampled"), sum(col("doc_id")).as("id_sum"))
           .orderBy("source")
       },
-      Some("""WITH h AS (SELECT doc_id, source,
-             |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 1000000 AS hv
+      Some(s"""WITH h AS (SELECT doc_id, source,
+             |         ${md5LongSql("CAST(doc_id AS VARCHAR)")} % 1000000 AS hv
              |       FROM documents),
              |k AS (SELECT * FROM h WHERE hv < CASE source WHEN 'src0' THEN 500000
              |                                            WHEN 'src1' THEN 250000
@@ -3794,8 +3930,8 @@ object LlmQueries {
       (s, d) => Sampling.weighted(Tables(s, d, "documents"), "doc_id",
           least(col("n_chars"), lit(400L)) / 400.0)
         .select(col("doc_id"), col("n_chars")).orderBy("doc_id"),
-      Some("""SELECT doc_id, n_chars FROM documents
-             |WHERE CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 1000000
+      Some(s"""SELECT doc_id, n_chars FROM documents
+             |WHERE ${md5LongSql("CAST(doc_id AS VARCHAR)")} % 1000000
              |      < CAST(round(least(n_chars, 400) / 400.0 * 1000000) AS BIGINT)
              |ORDER BY doc_id""".stripMargin)),
 
@@ -3879,8 +4015,8 @@ object LlmQueries {
       (s, d) => Sampling.weightedSampleNoReplacement(
           Tables(s, d, "documents"), "doc_id", col("n_chars"), k = 50)
         .orderBy("es_key", "doc_id"),
-      Some("""WITH h AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
-             |         greatest(CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT), 1) AS hh
+      Some(s"""WITH h AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
+             |         greatest(${md5LongSql("CAST(doc_id AS VARCHAR)")}, 1) AS hh
              |       FROM documents WHERE n_chars > 0),
              |key AS (SELECT doc_id, w,
              |          (CAST(-round(ln(CAST(hh AS DOUBLE) / 1152921504606846976.0) * 1e6) AS BIGINT)
@@ -3898,8 +4034,8 @@ object LlmQueries {
       (s, d) => Sampling.weightedSamplePerStratum(
           Tables(s, d, "documents"), "doc_id", "source", col("n_chars"), k = 5)
         .orderBy("source", "rank"),
-      Some("""WITH h AS (SELECT source, doc_id, CAST(n_chars AS BIGINT) AS w,
-             |         greatest(CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT), 1) AS hh
+      Some(s"""WITH h AS (SELECT source, doc_id, CAST(n_chars AS BIGINT) AS w,
+             |         greatest(${md5LongSql("CAST(doc_id AS VARCHAR)")}, 1) AS hh
              |       FROM documents WHERE n_chars > 0),
              |key AS (SELECT source, doc_id, w,
              |          (CAST(-round(ln(CAST(hh AS DOUBLE) / 1152921504606846976.0) * 1e6) AS BIGINT)
@@ -3923,8 +4059,8 @@ object LlmQueries {
         .select(col("source"), col("rank").cast("long").as("cap_rank"),
           col("doc_id"))
         .orderBy("source", "cap_rank"),
-      Some("""WITH h AS (SELECT source, doc_id,
-             |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS hh
+      Some(s"""WITH h AS (SELECT source, doc_id,
+             |         ${md5LongSql("CAST(doc_id AS VARCHAR)")} AS hh
              |       FROM documents),
              |r AS (SELECT source, doc_id,
              |        row_number() OVER (PARTITION BY source ORDER BY hh, doc_id) AS rn
@@ -3974,9 +4110,9 @@ object LlmQueries {
     Q("emb_random_projection", "LLM",
       (s, d) => Similarity.randomProjection(Tables(s, d, "embeddings"), 64, 8)
         .orderBy("vec_id", "p"),
-      Some("""SELECT vec_id, p, CAST(round(list_sum(list_transform(range(1, 65), i ->
+      Some(s"""SELECT vec_id, p, CAST(round(list_sum(list_transform(range(1, 65), i ->
              |         CAST(embedding[i] AS DOUBLE) *
-             |         (CASE WHEN CAST('0x' || substring(md5(CAST(p AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 15) AS BIGINT) % 2 = 1
+             |         (CASE WHEN ${md5LongSql("CAST(p AS VARCHAR) || '_' || CAST(i AS VARCHAR)")} % 2 = 1
              |               THEN 1.0 ELSE -1.0 END))) * 1000000) AS BIGINT) AS comp_micro
              |FROM embeddings, (SELECT unnest(range(0, 8)) AS p) ORDER BY vec_id, p""".stripMargin)),
 
@@ -4005,7 +4141,7 @@ object LlmQueries {
            |                                   ORDER BY ${dotSql("v.embedding", "c.cv")} DESC, c.cid) AS rn
            |         FROM embeddings v, cent c WHERE v.vec_id >= 16) WHERE rn = 1),
            |h AS (SELECT cid, vec_id,
-           |        CAST('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS hh
+           |        ${md5LongSql("CAST(vec_id AS VARCHAR)")} AS hh
            |      FROM ca),
            |r AS (SELECT cid, vec_id,
            |        row_number() OVER (PARTITION BY cid ORDER BY hh, vec_id) AS rn FROM h)
@@ -4144,7 +4280,7 @@ object LlmQueries {
              |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
              |      FROM $prevD),
              |t$r AS (SELECT sum(dd) AS tw FROM $prevD),
-             |p$r AS (SELECT (CAST('0x' || substring(md5('kmeanspp:$r'), 1, 15) AS BIGINT) % tw) + 1 AS p
+             |p$r AS (SELECT (${md5LongSql(s"'kmeanspp:$r'")} % tw) + 1 AS p
              |       FROM t$r),
              |c$r AS (SELECT vec_id, m, dd FROM s$r, p$r WHERE cum - dd < p AND p <= cum)""".stripMargin
         s"""WITH m AS (SELECT vec_id,
@@ -4315,23 +4451,14 @@ object LlmQueries {
       (s, d) => graft.operators.Graph.pagerank(transitionEdges(s, d), iters = 3)
         .orderBy("node"),
       Some {
-        s"""$transitionEdgesCte,
-           |outw AS (SELECT src, sum(w) AS ow FROM ew GROUP BY 1),
-           |e AS (SELECT ew.src, ew.dst, ew.w, outw.ow FROM ew JOIN outw USING (src)),
+        def round(i: Int) =
+          s"""${pushSql(i, s"r${i - 1}", "id", "rm")},
+             |r$i AS (SELECT n.id, CAST(150000 + (COALESCE(s$i.m, 0) * 850) // 1000 AS BIGINT) AS rm
+             |       FROM nodes n LEFT JOIN s$i ON n.id = s$i.dst)""".stripMargin
+        s"""$transitionPushCte,
            |nodes AS (SELECT DISTINCT src AS id FROM ew UNION SELECT DISTINCT dst FROM ew),
            |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rm FROM nodes),
-           |s1 AS (SELECT e.dst, sum((r0.rm * e.w) // e.ow) AS m
-           |       FROM r0 JOIN e ON e.src = r0.id GROUP BY 1),
-           |r1 AS (SELECT n.id, CAST(150000 + (COALESCE(s1.m, 0) * 850) // 1000 AS BIGINT) AS rm
-           |       FROM nodes n LEFT JOIN s1 ON n.id = s1.dst),
-           |s2 AS (SELECT e.dst, sum((r1.rm * e.w) // e.ow) AS m
-           |       FROM r1 JOIN e ON e.src = r1.id GROUP BY 1),
-           |r2 AS (SELECT n.id, CAST(150000 + (COALESCE(s2.m, 0) * 850) // 1000 AS BIGINT) AS rm
-           |       FROM nodes n LEFT JOIN s2 ON n.id = s2.dst),
-           |s3 AS (SELECT e.dst, sum((r2.rm * e.w) // e.ow) AS m
-           |       FROM r2 JOIN e ON e.src = r2.id GROUP BY 1),
-           |r3 AS (SELECT n.id, CAST(150000 + (COALESCE(s3.m, 0) * 850) // 1000 AS BIGINT) AS rm
-           |       FROM nodes n LEFT JOIN s3 ON n.id = s3.dst)
+           |${(1 to 3).map(round).mkString(",\n")}
            |SELECT id AS node, rm AS rank_micro FROM r3 ORDER BY 1""".stripMargin
       }),
 
@@ -4433,9 +4560,9 @@ object LlmQueries {
       Some {
         def pick(prev: String, t: Int) =
           s"""w$t AS (SELECT walker, dst AS cur FROM $prev JOIN ec ON ec.src = $prev.cur
-             |  WHERE (CAST('0x' || substring(md5(CAST(walker AS VARCHAR) || ':$t'), 1, 15) AS BIGINT)
+             |  WHERE (${md5LongSql(s"CAST(walker AS VARCHAR) || ':$t'")}
              |         % ow) + 1 > cw - w
-             |    AND (CAST('0x' || substring(md5(CAST(walker AS VARCHAR) || ':$t'), 1, 15) AS BIGINT)
+             |    AND (${md5LongSql(s"CAST(walker AS VARCHAR) || ':$t'")}
              |         % ow) + 1 <= cw)""".stripMargin
         s"""$transitionEdgesCte,
            |ec AS (SELECT src, dst, w,
@@ -4580,19 +4707,11 @@ object LlmQueries {
            |p AS (SELECT a.src AS s0, b.dst AS node, a.w AS w1, b.w AS w2
            |      FROM ew a JOIN ew b ON a.dst = b.src),
            |dh AS (SELECT DISTINCT node,
-           |         CAST('0x' || substring(md5(CAST(s0 AS VARCHAR)), 1, 15) AS BIGINT) AS h
+           |         ${md5LongSql("CAST(s0 AS VARCHAR)")} AS h
            |       FROM p),
-           |rk AS (SELECT node, h,
-           |         row_number() OVER (PARTITION BY node ORDER BY h) AS rn FROM dh),
-           |kept AS (SELECT node, count(*) AS n_kept, max(h) AS kth
-           |         FROM rk WHERE rn <= 32 GROUP BY 1),
+           |${bottomKCte("kept", "dh", "node", "h", 32)},
            |paths AS (SELECT node, sum(w1 * w2) AS n_paths FROM p GROUP BY 1)
-           |SELECT kept.node, CAST(paths.n_paths AS BIGINT) AS n_paths,
-           |  CAST(32 AS INTEGER) AS k, CAST(n_kept AS BIGINT) AS n_kept,
-           |  kth AS kth_min_hash,
-           |  CAST(CASE WHEN n_kept < 32 THEN n_kept
-           |       ELSE (CAST(n_kept AS HUGEINT) - 1) * 1152921504606846976 // kth
-           |       END AS BIGINT) AS est_distinct
+           |SELECT kept.node, CAST(paths.n_paths AS BIGINT) AS n_paths, ${kmvReadOutSql(32)}
            |FROM kept JOIN paths USING (node) ORDER BY node""".stripMargin
       }),
 
@@ -4664,30 +4783,23 @@ object LlmQueries {
     Q("graph_khop_taint", "GRAPH",
       (s, d) => {
         val ew = Pin(backboneEdges(s, d))
-        val nodes = ew.select(col("src").as("node"))
-          .union(ew.select(col("dst").as("node"))).distinct()
-        graft.operators.Graph.khopReach(ew,
-            nodes.filter(col("node") % 37 === 0), maxHops = 3)
+        graft.operators.Graph.khopReach(ew, mod37Seeds(ew), maxHops = 3)
           .orderBy("node")
       },
       Some {
+        def round(i: Int) = {
+          val frontier = if (i == 1) "r0" else s"f${i - 1}"
+          s"""f$i AS (SELECT DISTINCT e.dst AS node FROM e JOIN $frontier ON e.src = $frontier.node
+             |       WHERE e.dst NOT IN (SELECT node FROM r${i - 1})),
+             |r$i AS (SELECT node, hops FROM r${i - 1}
+             |       UNION ALL SELECT node, CAST($i AS INTEGER) FROM f$i)""".stripMargin
+        }
         s"""$backboneEdgesCte,
            |e AS (SELECT DISTINCT src, dst FROM ew),
-           |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-           |r0 AS (SELECT node, CAST(0 AS INTEGER) AS hops FROM n WHERE node % 37 = 0),
-           |f1 AS (SELECT DISTINCT e.dst AS node FROM e JOIN r0 ON e.src = r0.node
-           |       WHERE e.dst NOT IN (SELECT node FROM r0)),
-           |r1 AS (SELECT node, hops FROM r0
-           |       UNION ALL SELECT node, CAST(1 AS INTEGER) FROM f1),
-           |f2 AS (SELECT DISTINCT e.dst AS node FROM e JOIN f1 ON e.src = f1.node
-           |       WHERE e.dst NOT IN (SELECT node FROM r1)),
-           |r2 AS (SELECT node, hops FROM r1
-           |       UNION ALL SELECT node, CAST(2 AS INTEGER) FROM f2),
-           |f3 AS (SELECT DISTINCT e.dst AS node FROM e JOIN f2 ON e.src = f2.node
-           |       WHERE e.dst NOT IN (SELECT node FROM r2))
-           |SELECT * FROM (SELECT node, hops FROM r2
-           |               UNION ALL SELECT node, CAST(3 AS INTEGER) FROM f3)
-           |ORDER BY node""".stripMargin
+           |$mod37SeedsCte,
+           |r0 AS (SELECT node, CAST(0 AS INTEGER) AS hops FROM sd),
+           |${(1 to 3).map(round).mkString(",\n")}
+           |SELECT node, hops FROM r3 ORDER BY node""".stripMargin
       }),
 
     // Haircut taint propagation (how MUCH seed value plausibly reached
@@ -4698,32 +4810,22 @@ object LlmQueries {
     Q("graph_taint_haircut", "GRAPH",
       (s, d) => {
         val ew = transitionEdges(s, d)
-        val nodes = ew.select(col("src").as("node"))
-          .union(ew.select(col("dst").as("node"))).distinct()
-        graft.operators.Graph.haircutTaint(ew,
-            nodes.filter(col("node") % 37 === 0), iters = 2)
+        graft.operators.Graph.haircutTaint(ew, mod37Seeds(ew), iters = 2)
           .orderBy("node")
       },
       Some {
-        s"""$transitionEdgesCte,
-           |outw AS (SELECT src, sum(w) AS ow FROM ew GROUP BY 1),
-           |e AS (SELECT ew.src, ew.dst, ew.w, outw.ow FROM ew JOIN outw USING (src)),
-           |n AS (SELECT src AS node FROM ew UNION SELECT dst FROM ew),
-           |t0 AS (SELECT node, CAST(1000000 AS BIGINT) AS tm FROM n WHERE node % 37 = 0),
-           |p1 AS (SELECT e.dst AS node, sum((t.tm * e.w) // e.ow) AS tm
-           |       FROM t0 t JOIN e ON e.src = t.node GROUP BY 1),
-           |a1 AS (SELECT node, tm FROM t0
-           |       WHERE node NOT IN (SELECT src FROM ew)),
-           |t1 AS (SELECT node, CAST(sum(tm) AS BIGINT) AS tm FROM
-           |        (SELECT node, tm FROM p1 UNION ALL SELECT node, tm FROM a1)
-           |       GROUP BY 1),
-           |p2 AS (SELECT e.dst AS node, sum((t.tm * e.w) // e.ow) AS tm
-           |       FROM t1 t JOIN e ON e.src = t.node GROUP BY 1),
-           |a2 AS (SELECT node, tm FROM t1
-           |       WHERE node NOT IN (SELECT src FROM ew)),
-           |t2 AS (SELECT node, CAST(sum(tm) AS BIGINT) AS tm FROM
-           |        (SELECT node, tm FROM p2 UNION ALL SELECT node, tm FROM a2)
-           |       GROUP BY 1)
+        // a sink (no out-edge) keeps its mass: `a<i>`
+        def round(i: Int) =
+          s"""${pushSql(i, s"t${i - 1}", "node", "tm")},
+             |a$i AS (SELECT node, tm FROM t${i - 1}
+             |       WHERE node NOT IN (SELECT src FROM ew)),
+             |t$i AS (SELECT node, CAST(sum(tm) AS BIGINT) AS tm FROM
+             |        (SELECT node, tm FROM a$i UNION ALL SELECT dst, m FROM s$i)
+             |       GROUP BY 1)""".stripMargin
+        s"""$transitionPushCte,
+           |$mod37SeedsCte,
+           |t0 AS (SELECT node, CAST(1000000 AS BIGINT) AS tm FROM sd),
+           |${(1 to 2).map(round).mkString(",\n")}
            |SELECT node, tm AS taint_micro FROM t2 WHERE tm > 0
            |ORDER BY node""".stripMargin
       }),
@@ -4737,23 +4839,18 @@ object LlmQueries {
           k = 16, rounds = 3)
         .orderBy("node"),
       Some {
+        // peel round i keeps the edges between nodes of degree >= 16 after
+        // round i - 1 (`k<i-1>`) and recounts the degrees `d<i>`
+        def round(i: Int) =
+          s"""e$i AS (SELECT u, v FROM ${if (i == 1) "und" else s"e${i - 1}"}
+             |       WHERE u IN (SELECT node FROM k${i - 1}) AND v IN (SELECT node FROM k${i - 1})),
+             |d$i AS (SELECT node, count(*) AS deg FROM
+             |         (SELECT u AS node FROM e$i UNION ALL SELECT v FROM e$i) GROUP BY 1),
+             |k$i AS (SELECT node FROM d$i WHERE deg >= 16)""".stripMargin
         s"""$backboneUndirectedCte,
            |k0 AS (SELECT node FROM dg WHERE deg >= 16),
-           |e1 AS (SELECT u, v FROM und WHERE u IN (SELECT node FROM k0)
-           |                               AND v IN (SELECT node FROM k0)),
-           |d1 AS (SELECT node, count(*) AS deg FROM
-           |         (SELECT u AS node FROM e1 UNION ALL SELECT v FROM e1) GROUP BY 1),
-           |k1 AS (SELECT node FROM d1 WHERE deg >= 16),
-           |e2 AS (SELECT u, v FROM e1 WHERE u IN (SELECT node FROM k1)
-           |                              AND v IN (SELECT node FROM k1)),
-           |d2 AS (SELECT node, count(*) AS deg FROM
-           |         (SELECT u AS node FROM e2 UNION ALL SELECT v FROM e2) GROUP BY 1),
-           |k2 AS (SELECT node FROM d2 WHERE deg >= 16),
-           |e3 AS (SELECT u, v FROM e2 WHERE u IN (SELECT node FROM k2)
-           |                              AND v IN (SELECT node FROM k2))
-           |SELECT node, CAST(count(*) AS BIGINT) AS deg FROM
-           |  (SELECT u AS node FROM e3 UNION ALL SELECT v FROM e3)
-           |GROUP BY 1 ORDER BY 1""".stripMargin
+           |${(1 to 3).map(round).mkString(",\n")}
+           |SELECT node, CAST(deg AS BIGINT) AS deg FROM d3 ORDER BY 1""".stripMargin
       }),
 
     // Seeded shortest paths (Bellman–Ford, 3 fixed relaxation rounds,
@@ -4775,9 +4872,7 @@ object LlmQueries {
         s"""$backboneEdgesCte,
            |s0 AS (SELECT min(src) AS n FROM ew),
            |d0 AS (SELECT n AS node, CAST(0 AS BIGINT) AS dist FROM s0),
-           |${round(0)},
-           |${round(1)},
-           |${round(2)}
+           |${(0 until 3).map(round).mkString(",\n")}
            |SELECT node, dist FROM d3 ORDER BY node""".stripMargin
       }),
 
@@ -4787,28 +4882,12 @@ object LlmQueries {
     // unrolls the same relax rounds keyed on (node, landmark).
     Q("graph_landmark_dist", "GRAPH",
       (s, d) => {
-        val ew = Pin(backboneEdges(s, d))
-        val sym = ew.select(col("src"), col("dst"))
-          .unionByName(ew.select(col("dst").as("src"), col("src").as("dst")))
-        val lms = sym.select(col("src").as("node")).distinct()
-          .orderBy("node").limit(3)
-        graft.operators.Graph.landmarkDistances(sym, lms, rounds = 3)
+        val sym = landmarkSym(s, d)
+        graft.operators.Graph.landmarkDistances(sym, landmarks(sym), rounds = 3)
           .orderBy("node", "landmark")
       },
       Some {
-        def round(r: Int) =
-          s"""d${r + 1} AS (SELECT node, landmark, min(hops) AS hops FROM (
-             |    SELECT node, landmark, hops FROM d$r
-             |    UNION ALL
-             |    SELECT e.dst, d.landmark, d.hops + 1 FROM d$r d JOIN sym e ON e.src = d.node)
-             |  GROUP BY 1, 2)""".stripMargin
-        s"""$backboneEdgesCte,
-           |sym AS (SELECT src, dst FROM ew UNION SELECT dst, src FROM ew),
-           |lm AS (SELECT DISTINCT src AS node FROM sym ORDER BY 1 LIMIT 3),
-           |d0 AS (SELECT node, node AS landmark, CAST(0 AS INTEGER) AS hops FROM lm),
-           |${round(0)},
-           |${round(1)},
-           |${round(2)}
+        s"""$landmarkDistCte
            |SELECT node, landmark, CAST(hops AS INTEGER) AS hops
            |FROM d3 ORDER BY node, landmark""".stripMargin
       }),
@@ -4820,12 +4899,9 @@ object LlmQueries {
     // L linear BFS passes once, then O(L) per query forever.
     Q("graph_landmark_estimate", "GRAPH",
       (s, d) => {
-        val ew = Pin(backboneEdges(s, d))
-        val sym = ew.select(col("src"), col("dst"))
-          .unionByName(ew.select(col("dst").as("src"), col("src").as("dst")))
+        val sym = landmarkSym(s, d)
         val nodes = sym.select(col("src").as("node")).distinct()
-        val lms = nodes.orderBy("node").limit(3)
-        val sketch = graft.operators.Graph.landmarkDistances(sym, lms, rounds = 3)
+        val sketch = graft.operators.Graph.landmarkDistances(sym, landmarks(sym), rounds = 3)
         val lo = nodes.orderBy("node").limit(8)
         val hi = nodes.orderBy(col("node").desc).limit(8)
         val pairs = lo.select(col("node").as("u"))
@@ -4835,19 +4911,7 @@ object LlmQueries {
           .orderBy("u", "v")
       },
       Some {
-        def round(r: Int) =
-          s"""d${r + 1} AS (SELECT node, landmark, min(hops) AS hops FROM (
-             |    SELECT node, landmark, hops FROM d$r
-             |    UNION ALL
-             |    SELECT e.dst, d.landmark, d.hops + 1 FROM d$r d JOIN sym e ON e.src = d.node)
-             |  GROUP BY 1, 2)""".stripMargin
-        s"""$backboneEdgesCte,
-           |sym AS (SELECT src, dst FROM ew UNION SELECT dst, src FROM ew),
-           |lm AS (SELECT DISTINCT src AS node FROM sym ORDER BY 1 LIMIT 3),
-           |d0 AS (SELECT node, node AS landmark, CAST(0 AS INTEGER) AS hops FROM lm),
-           |${round(0)},
-           |${round(1)},
-           |${round(2)},
+        s"""$landmarkDistCte,
            |nodes AS (SELECT DISTINCT src AS node FROM sym),
            |lo AS (SELECT node FROM nodes ORDER BY node LIMIT 8),
            |hi AS (SELECT node FROM nodes ORDER BY node DESC LIMIT 8),
@@ -4900,9 +4964,7 @@ object LlmQueries {
     // exactly. Per round: one equi-join + two map-side-combined
     // aggregates; the argmax is min-of-struct, never a window sort.
     Q("graph_lpa_communities", "GRAPH",
-      (s, d) => graft.operators.Graph.labelPropagation(
-          backboneEdges(s, d), rounds = 2, weightCol = Some("w"))
-        .orderBy("node"),
+      (s, d) => lpaLabels(backboneEdges(s, d)).orderBy("node"),
       Some(s"""$lpaLabelsCte
               |SELECT node, CAST(label AS BIGINT) AS label FROM l2 ORDER BY node""".stripMargin)),
 
@@ -4919,8 +4981,7 @@ object LlmQueries {
     Q("graph_supergraph", "GRAPH",
       (s, d) => {
         val ew = Pin(backboneEdges(s, d))
-        val labels = graft.operators.Graph.labelPropagation(
-          ew, rounds = 2, weightCol = Some("w"))
+        val labels = lpaLabels(ew)
         graft.operators.Graph.coarsen(ew, labels, weightCol = Some("w"))
           .orderBy("src_comm", "dst_comm")
       },
@@ -5521,7 +5582,7 @@ object LlmQueries {
         s"""WITH v AS (SELECT event_id, CAST(round(value * 1000000) AS BIGINT) AS v FROM events),
            |r AS (SELECT event_id, v, unnest(range(0, 8)) AS rep FROM v),
            |u AS (SELECT rep, v,
-           |        CAST('0x' || substring(md5(CAST(event_id AS VARCHAR) || ':' || CAST(rep AS VARCHAR)), 1, 15) AS BIGINT) % 1000000 AS u
+           |        ${md5LongSql("CAST(event_id AS VARCHAR) || ':' || CAST(rep AS VARCHAR)")} % 1000000 AS u
            |      FROM r),
            |k AS (SELECT rep, v, $kCase AS k FROM u),
            |a AS (SELECT rep, sum(k) AS n_drawn, sum(CAST(k AS HUGEINT) * v) AS s
@@ -5722,25 +5783,9 @@ object LlmQueries {
     // (basket, item) reduction first, one self-equi-join on the basket
     // key, map-side-combined counts, 1-row basket-total broadcast.
     Q("event_assoc_rules", "EVENT",
-      (s, d) => {
-        val items = Tables(s, d, "events").select(
-          col("user_id"),
-          concat(col("event_type"), lit("#"),
-            expr("CAST(get_json_object(props, '$.k') AS BIGINT) div 25")
-              .cast("string")).as("item"))
-        graft.operators.Associations.rules(items, "user_id", "item",
-            minPairCount = 20)
-          .orderBy("item_a", "item_b")
-      },
-      Some("""WITH it AS (SELECT DISTINCT user_id AS k,
-             |         event_type || '#' || CAST(CAST(json_extract_string(props, '$.k') AS BIGINT) // 25 AS VARCHAR) AS i
-             |       FROM events),
-             |itn AS (SELECT * FROM it WHERE i IS NOT NULL),
-             |ic AS (SELECT i, count(*) AS c FROM itn GROUP BY 1),
-             |nb AS (SELECT count(DISTINCT k) AS n FROM itn),
-             |pc AS (SELECT a.i AS item_a, b.i AS item_b, count(*) AS c_ab
-             |       FROM itn a JOIN itn b ON a.k = b.k AND a.i <> b.i
-             |       GROUP BY 1, 2 HAVING count(*) >= 20)
+      (s, d) => itemPairRules(s, d).orderBy("item_a", "item_b"),
+      Some(s"""WITH $itemPairCountsCte,
+             |nb AS (SELECT count(DISTINCT k) AS n FROM itn)
              |SELECT item_a, item_b, CAST(c_ab AS BIGINT) AS c_ab,
              |  CAST(ca.c AS BIGINT) AS c_a, CAST(cb.c AS BIGINT) AS c_b,
              |  CAST(n AS BIGINT) AS n_baskets,
@@ -5829,29 +5874,14 @@ object LlmQueries {
     // recommendation readout rides the SAME pinned pair machinery.
     // Integer milli with the engines' shared floor-sqrt discipline.
     Q("rec_item_cosine", "EVENT",
-      (s, d) => {
-        val items = Tables(s, d, "events").select(
-          col("user_id"),
-          concat(col("event_type"), lit("#"),
-            expr("CAST(get_json_object(props, '$.k') AS BIGINT) div 25")
-              .cast("string")).as("item"))
-        graft.operators.Associations.rules(items, "user_id", "item",
-            minPairCount = 20)
-          .withColumn("cosine_milli", expr(
-            """cast(c_ab as bigint) * 1000
-              | div cast(floor(sqrt(cast(c_a as double) * cast(c_b as double))) as bigint)""".stripMargin))
-          .select(col("item_a"), col("item_b"), col("c_ab"), col("c_a"),
-            col("c_b"), col("cosine_milli"))
-          .orderBy("item_a", "item_b")
-      },
-      Some("""WITH it AS (SELECT DISTINCT user_id AS k,
-             |         event_type || '#' || CAST(CAST(json_extract_string(props, '$.k') AS BIGINT) // 25 AS VARCHAR) AS i
-             |       FROM events),
-             |itn AS (SELECT * FROM it WHERE i IS NOT NULL),
-             |ic AS (SELECT i, count(*) AS c FROM itn GROUP BY 1),
-             |pc AS (SELECT a.i AS item_a, b.i AS item_b, count(*) AS c_ab
-             |       FROM itn a JOIN itn b ON a.k = b.k AND a.i <> b.i
-             |       GROUP BY 1, 2 HAVING count(*) >= 20)
+      (s, d) => itemPairRules(s, d)
+        .withColumn("cosine_milli", expr(
+          """cast(c_ab as bigint) * 1000
+            | div cast(floor(sqrt(cast(c_a as double) * cast(c_b as double))) as bigint)""".stripMargin))
+        .select(col("item_a"), col("item_b"), col("c_ab"), col("c_a"),
+          col("c_b"), col("cosine_milli"))
+        .orderBy("item_a", "item_b"),
+      Some(s"""WITH $itemPairCountsCte
              |SELECT item_a, item_b, CAST(c_ab AS BIGINT) AS c_ab,
              |  CAST(ca.c AS BIGINT) AS c_a, CAST(cb.c AS BIGINT) AS c_b,
              |  CAST(c_ab * 1000 // CAST(floor(sqrt(CAST(ca.c AS DOUBLE) * cb.c)) AS BIGINT) AS BIGINT)
@@ -6391,8 +6421,7 @@ object LlmQueries {
     Q("graph_conductance", "GRAPH",
       (s, d) => {
         val ew = Pin(backboneEdges(s, d))
-        val labels = graft.operators.Graph.labelPropagation(
-          ew, rounds = 2, weightCol = Some("w"))
+        val labels = lpaLabels(ew)
         graft.operators.Graph.conductance(ew, labels)
           .select(col("label"), col("vol"), col("cut_edges"), col("phi_milli"))
           .orderBy("label")
@@ -6429,39 +6458,14 @@ object LlmQueries {
     Q("graph_modularity", "GRAPH",
       (s, d) => {
         val ew = Pin(backboneEdges(s, d))
-        val labels = graft.operators.Graph.labelPropagation(
-          ew, rounds = 2, weightCol = Some("w"))
+        val labels = lpaLabels(ew)
         graft.operators.Graph.modularity(ew, labels)
           .select(col("m"), col("n_comm"), col("sum_e_in"),
             col("q_num").cast("string").as("q_num"),
             col("q_den").cast("string").as("q_den"),
             col("q_milli"))
       },
-      Some(s"""$lpaLabelsCte,
-              |$undDegCte,
-              |mm AS (SELECT count(*) AS m FROM und),
-              |ein AS (SELECT la.label, count(*) AS e_c FROM und
-              |        JOIN l2 la ON la.node = und.u
-              |        JOIN l2 lb ON lb.node = und.v
-              |        WHERE la.label = lb.label GROUP BY 1),
-              |dcm AS (SELECT l2.label, sum(dg.deg) AS d_c FROM dg
-              |        JOIN l2 ON l2.node = dg.node GROUP BY 1),
-              |comm AS (SELECT dcm.label, coalesce(ein.e_c, 0) AS e_c, dcm.d_c
-              |         FROM dcm LEFT JOIN ein USING (label)),
-              |agg AS (SELECT max(mm.m) AS m, count(*) AS n_comm,
-              |          sum(e_c) AS sum_e_in,
-              |          sum(4 * CAST(mm.m AS HUGEINT) * e_c
-              |              - CAST(d_c AS HUGEINT) * d_c) AS q_num,
-              |          max(4 * CAST(mm.m AS HUGEINT) * mm.m) AS q_den
-              |        FROM comm, mm)
-              |SELECT CAST(m AS BIGINT) AS m, CAST(n_comm AS BIGINT) AS n_comm,
-              |  CAST(sum_e_in AS BIGINT) AS sum_e_in,
-              |  CAST(q_num AS VARCHAR) AS q_num,
-              |  CAST(q_den AS VARCHAR) AS q_den,
-              |  CAST(CASE WHEN q_den IS NULL OR q_den = 0 THEN 0
-              |       WHEN q_num < 0 THEN -((-q_num) * 1000 // q_den)
-              |       ELSE q_num * 1000 // q_den END AS BIGINT) AS q_milli
-              |FROM agg""".stripMargin)),
+      Some(s"$lpaLabelsCte,\n${modularitySql("l2")}")),
 
     // Modularity-OPTIMIZING communities (the Louvain local-move phase,
     // Blondel et al. 2008, synchronous fixed-round distributed form):
@@ -6499,31 +6503,7 @@ object LlmQueries {
       // below (ein ×2, dcm) — un-materialized, DuckDB re-inlines the
       // whole chain per reference (the NMI lesson; this oracle ran 154 s
       // at sf1 and was the board's only timeout under load)
-      Some(materializeCtes(s"""$louvainLabelsCte,
-              |$undDegCte,
-              |mm AS (SELECT count(*) AS m FROM und),
-              |ein AS (SELECT la.label, count(*) AS e_c FROM und
-              |        JOIN g2 la ON la.node = und.u
-              |        JOIN g2 lb ON lb.node = und.v
-              |        WHERE la.label = lb.label GROUP BY 1),
-              |dcm AS (SELECT g2.label, sum(dg.deg) AS d_c FROM dg
-              |        JOIN g2 ON g2.node = dg.node GROUP BY 1),
-              |comm AS (SELECT dcm.label, coalesce(ein.e_c, 0) AS e_c, dcm.d_c
-              |         FROM dcm LEFT JOIN ein USING (label)),
-              |agg AS (SELECT max(mm.m) AS m, count(*) AS n_comm,
-              |          sum(e_c) AS sum_e_in,
-              |          sum(4 * CAST(mm.m AS HUGEINT) * e_c
-              |              - CAST(d_c AS HUGEINT) * d_c) AS q_num,
-              |          max(4 * CAST(mm.m AS HUGEINT) * mm.m) AS q_den
-              |        FROM comm, mm)
-              |SELECT CAST(m AS BIGINT) AS m, CAST(n_comm AS BIGINT) AS n_comm,
-              |  CAST(sum_e_in AS BIGINT) AS sum_e_in,
-              |  CAST(q_num AS VARCHAR) AS q_num,
-              |  CAST(q_den AS VARCHAR) AS q_den,
-              |  CAST(CASE WHEN q_den IS NULL OR q_den = 0 THEN 0
-              |       WHEN q_num < 0 THEN -((-q_num) * 1000 // q_den)
-              |       ELSE q_num * 1000 // q_den END AS BIGINT) AS q_milli
-              |FROM agg""".stripMargin))),
+      Some(materializeCtes(s"$louvainLabelsCte,\n${modularitySql("g2")}"))),
 
     // Pivot-sampled harmonic centrality (Boldi–Vigna 2014 axioms;
     // Eppstein–Wang sampling): Σ 1e6 div d(p,v) over the 4 highest-degree
@@ -6534,14 +6514,7 @@ object LlmQueries {
     Q("graph_harmonic", "GRAPH",
       (s, d) => {
         val ew = Pin(backboneEdges(s, d))
-        val und = ew.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v")).distinct()
-        val deg = und.select(col("u").as("node"))
-          .unionAll(und.select(col("v").as("node")))
-          .groupBy("node").agg(count(lit(1)).as("deg"))
-        val pivots = deg.orderBy(col("deg").desc, col("node").asc)
-          .limit(4).select("node")
+        val pivots = degreePivots(ew)
         graft.operators.Graph.harmonicCentrality(ew, pivots, hops = 3)
           .orderBy("node")
       },
@@ -6552,13 +6525,9 @@ object LlmQueries {
              |    UNION ALL
              |    SELECT t.p, a.b AS v, t.d + 1 FROM d${i - 1} t JOIN adj a ON a.a = t.v)
              |  GROUP BY 1, 2)""".stripMargin
-        s"""$backboneUndirectedCte,
-           |adj AS (SELECT u AS a, v AS b FROM und UNION ALL SELECT v, u FROM und),
-           |piv AS (SELECT node FROM dg ORDER BY deg DESC, node ASC LIMIT 4),
+        s"""$degreePivotsCte,
            |d0 AS (SELECT node AS p, node AS v, CAST(0 AS BIGINT) AS d FROM piv),
-           |${bfs(1)},
-           |${bfs(2)},
-           |${bfs(3)}
+           |${(1 to 3).map(bfs).mkString(",\n")}
            |SELECT v AS node, CAST(sum(1000000 // d) AS BIGINT) AS harmonic_micro,
            |       CAST(count(*) AS BIGINT) AS n_reached
            |FROM d3 WHERE d > 0 GROUP BY 1 ORDER BY 1""".stripMargin
@@ -6574,14 +6543,7 @@ object LlmQueries {
     Q("graph_betweenness", "GRAPH",
       (s, d) => {
         val ew = Pin(backboneEdges(s, d))
-        val und = ew.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v")).distinct()
-        val deg = und.select(col("u").as("node"))
-          .unionAll(und.select(col("v").as("node")))
-          .groupBy("node").agg(count(lit(1)).as("deg"))
-        val pivots = deg.orderBy(col("deg").desc, col("node").asc)
-          .limit(4).select("node")
+        val pivots = degreePivots(ew)
         graft.operators.Graph.betweennessPivot(ew, pivots, hops = 3)
           .orderBy("node")
       },
@@ -6603,14 +6565,10 @@ object LlmQueries {
              |    JOIN adj a ON a.a = w.v
              |    JOIN l$h cur ON cur.p = w.p AND cur.v = a.b
              |    GROUP BY 1, 2) g ON g.p = c.p AND g.v = c.v)""".stripMargin
-        s"""$backboneUndirectedCte,
-           |adj AS (SELECT u AS a, v AS b FROM und UNION ALL SELECT v, u FROM und),
-           |piv AS (SELECT node FROM dg ORDER BY deg DESC, node ASC LIMIT 4),
+        s"""$degreePivotsCte,
            |l0 AS (SELECT node AS p, node AS v, CAST(1 AS BIGINT) AS sigma FROM piv),
            |s0 AS (SELECT p, v FROM l0),
-           |${fwd(1)},
-           |${fwd(2)},
-           |${fwd(3)},
+           |${(1 to 3).map(fwd).mkString(",\n")},
            |${bwd(2, "(SELECT p, v, sigma, CAST(0 AS BIGINT) AS dm FROM l3)")},
            |${bwd(1, "(SELECT l2.p, l2.v, l2.sigma, dl2.dm FROM l2 JOIN dl2 ON dl2.p = l2.p AND dl2.v = l2.v)")}
            |SELECT v AS node, CAST(sum(dm) AS BIGINT) AS bc_micro FROM (
@@ -6807,35 +6765,19 @@ object LlmQueries {
     Q("graph_ppr", "GRAPH",
       (s, d) => {
         val ew = transitionEdges(s, d)
-        val nodes = ew.select(col("src").as("node"))
-          .union(ew.select(col("dst").as("node"))).distinct()
-        graft.operators.Graph.personalizedPagerank(ew,
-            nodes.filter(col("node") % 37 === 0), iters = 3)
+        graft.operators.Graph.personalizedPagerank(ew, mod37Seeds(ew), iters = 3)
           .orderBy("node")
       },
       Some {
-        s"""$transitionEdgesCte,
-           |outw AS (SELECT src, sum(w) AS ow FROM ew GROUP BY 1),
-           |e AS (SELECT ew.src, ew.dst, ew.w, outw.ow FROM ew JOIN outw USING (src)),
-           |sd AS (SELECT DISTINCT node FROM
-           |         (SELECT src AS node FROM ew UNION SELECT dst FROM ew)
-           |       WHERE node % 37 = 0),
+        def round(i: Int) =
+          s"""${pushSql(i, s"r${i - 1}", "node", "rm")},
+             |r$i AS (SELECT node, CAST(sum(v) AS BIGINT) AS rm FROM (
+             |         SELECT node, 150000 AS v FROM sd
+             |         UNION ALL SELECT dst, (m * 850) // 1000 FROM s$i) GROUP BY 1)""".stripMargin
+        s"""$transitionPushCte,
+           |$mod37SeedsCte,
            |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rm FROM sd),
-           |s1 AS (SELECT e.dst, sum((r0.rm * e.w) // e.ow) AS m
-           |       FROM r0 JOIN e ON e.src = r0.node GROUP BY 1),
-           |r1 AS (SELECT node, CAST(sum(v) AS BIGINT) AS rm FROM (
-           |         SELECT node, 150000 AS v FROM sd
-           |         UNION ALL SELECT dst, (m * 850) // 1000 FROM s1) GROUP BY 1),
-           |s2 AS (SELECT e.dst, sum((r1.rm * e.w) // e.ow) AS m
-           |       FROM r1 JOIN e ON e.src = r1.node GROUP BY 1),
-           |r2 AS (SELECT node, CAST(sum(v) AS BIGINT) AS rm FROM (
-           |         SELECT node, 150000 AS v FROM sd
-           |         UNION ALL SELECT dst, (m * 850) // 1000 FROM s2) GROUP BY 1),
-           |s3 AS (SELECT e.dst, sum((r2.rm * e.w) // e.ow) AS m
-           |       FROM r2 JOIN e ON e.src = r2.node GROUP BY 1),
-           |r3 AS (SELECT node, CAST(sum(v) AS BIGINT) AS rm FROM (
-           |         SELECT node, 150000 AS v FROM sd
-           |         UNION ALL SELECT dst, (m * 850) // 1000 FROM s3) GROUP BY 1)
+           |${(1 to 3).map(round).mkString(",\n")}
            |SELECT node, rm AS rank_micro FROM r3 WHERE rm > 0 ORDER BY 1""".stripMargin
       }),
 
@@ -6851,9 +6793,9 @@ object LlmQueries {
         .select(col("doc_id"), col("shard"), col("tokens_before"),
           col("pack_idx"), col("pack_offset"))
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id,
+      Some(s"""WITH t AS (SELECT doc_id,
              |         CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tok,
-             |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 8 AS shard
+             |         ${md5LongSql("CAST(doc_id AS VARCHAR)")} % 8 AS shard
              |       FROM documents),
              |c AS (SELECT doc_id, shard,
              |        CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
@@ -6877,8 +6819,8 @@ object LlmQueries {
         .agg(count(lit(1)).as("n"), min(col("doc_id")).as("min_id"),
           sum(col("doc_id")).as("id_sum"))
         .orderBy("split"),
-      Some("""WITH b AS (SELECT doc_id,
-             |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100 AS bucket
+      Some(s"""WITH b AS (SELECT doc_id,
+             |         ${md5LongSql("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
              |       FROM documents)
              |SELECT CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
              |       count(*) AS n, min(doc_id) AS min_id, CAST(sum(doc_id) AS BIGINT) AS id_sum
@@ -6893,10 +6835,8 @@ object LlmQueries {
           TextAnalysis.normalizeText(
             concat(lit("  <P> "), upper(col("text")), lit("!! \t"))).as("clean"))
         .orderBy("doc_id"),
-      Some("""SELECT doc_id,
-             |  trim(regexp_replace(regexp_replace(
-             |    lower('  <P> ' || upper(text) || '!! ' || chr(9)),
-             |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS clean
+      Some(s"""SELECT doc_id,
+             |  ${normalizeTextSql("'  <P> ' || upper(text) || '!! ' || chr(9)")} AS clean
              |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // Boilerplate chunk removal (CCNet-style line dedup adapted to this
@@ -6912,7 +6852,7 @@ object LlmQueries {
     Q("text_chunk_dedup", "LLM",
       (s, d) => Dedup.chunkDedup(Tables(s, d, "documents"), "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+      Some(s"""WITH t AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
              |c0 AS (SELECT doc_id,
              |         list_transform(range(0, CAST(ceil(len(ws) / 8.0) AS BIGINT)),
              |           i -> array_to_string(ws[(i*8+1):(i*8+8)], ' ')) AS chunks
@@ -6920,7 +6860,7 @@ object LlmQueries {
              |c AS (SELECT doc_id, unnest(range(0, len(chunks))) AS cpos,
              |             unnest(chunks) AS ctext FROM c0),
              |h AS (SELECT doc_id, cpos, ctext,
-             |             CAST('0x' || substring(md5(ctext), 1, 15) AS BIGINT) AS ch FROM c),
+             |             ${md5LongSql("ctext")} AS ch FROM c),
              |dup AS (SELECT ch FROM h GROUP BY ch HAVING count(DISTINCT doc_id) >= 2)
              |SELECT doc_id, count(*) AS n_kept,
              |       string_agg(ctext, ' ' ORDER BY cpos) AS cleaned
@@ -6945,14 +6885,11 @@ object LlmQueries {
             sum(col("doc_id")).as("id_sum"))
           .orderBy("split")
       },
-      Some(s"""${minhashSigCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              |$nearDupReachCte,
-              |comp AS (SELECT n AS node, CAST(min(m) AS BIGINT) AS component FROM (
-              |  SELECT a AS n, a AS m FROM e UNION ALL SELECT a, b FROM reach) GROUP BY n),
+      Some(s"""$nearDupCompCte,
               |g AS (SELECT d2.doc_id, COALESCE(c2.component, d2.doc_id) AS grp
               |      FROM documents d2 LEFT JOIN comp c2 ON d2.doc_id = c2.node),
               |bk AS (SELECT doc_id, grp,
-              |         CAST('0x' || substring(md5(CAST(grp AS VARCHAR)), 1, 15) AS BIGINT) % 100 AS bucket
+              |         ${md5LongSql("CAST(grp AS VARCHAR)")} % 100 AS bucket
               |       FROM g)
               |SELECT CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
               |       count(*) AS n, CAST(count(DISTINCT grp) AS BIGINT) AS n_groups,
@@ -7201,21 +7138,8 @@ object LlmQueries {
     Q("text_dup_spans", "LLM",
       (s, d) => Dedup.duplicateSpans(Tables(s, d, "documents"), "doc_id", "text", k = 5)
         .orderBy("doc_id", "span_start"),
-      Some("""WITH toks AS (SELECT doc_id, str_split(text, ' ') AS t FROM documents),
-             |big AS (SELECT doc_id, t FROM toks WHERE len(t) >= 5),
-             |win AS (SELECT doc_id, CAST(i AS INTEGER) AS pos,
-             |          CAST('0x' || substring(md5(array_to_string(t[(i+1):(i+5)], ' ')), 1, 15) AS BIGINT) AS h
-             |        FROM big, UNNEST(range(0, len(t) - 4)) AS u(i)),
-             |dups AS (SELECT h FROM win GROUP BY h HAVING min(doc_id) <> max(doc_id)),
-             |d AS (SELECT doc_id, pos FROM win WHERE h IN (SELECT h FROM dups)),
-             |lagged AS (SELECT doc_id, pos,
-             |             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 1
-             |                  THEN 1 ELSE 0 END AS brk
-             |           FROM d),
-             |runs AS (SELECT doc_id, pos,
-             |           sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-             |                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-             |         FROM lagged)
+      Some(s"""WITH toks AS (SELECT doc_id, str_split(text, ' ') AS t FROM documents),
+             |${dupSpanRunsCte("toks", "t")}
              |SELECT doc_id, min(pos) AS span_start,
              |       CAST(max(pos) + 4 AS INTEGER) AS span_end, count(*) AS n_windows
              |FROM runs GROUP BY doc_id, run_id ORDER BY doc_id, span_start""".stripMargin)),
@@ -7225,21 +7149,8 @@ object LlmQueries {
     Q("text_dup_span_removal", "LLM",
       (s, d) => Dedup.removeDuplicateSpans(Tables(s, d, "documents"), "doc_id", "text", k = 5)
         .orderBy("doc_id"),
-      Some("""WITH toks AS (SELECT doc_id, str_split(text, ' ') AS t FROM documents),
-             |big AS (SELECT doc_id, t FROM toks WHERE len(t) >= 5),
-             |win AS (SELECT doc_id, CAST(i AS INTEGER) AS pos,
-             |          CAST('0x' || substring(md5(array_to_string(t[(i+1):(i+5)], ' ')), 1, 15) AS BIGINT) AS h
-             |        FROM big, UNNEST(range(0, len(t) - 4)) AS u(i)),
-             |dups AS (SELECT h FROM win GROUP BY h HAVING min(doc_id) <> max(doc_id)),
-             |dd AS (SELECT doc_id, pos FROM win WHERE h IN (SELECT h FROM dups)),
-             |lagged AS (SELECT doc_id, pos,
-             |             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 1
-             |                  THEN 1 ELSE 0 END AS brk
-             |           FROM dd),
-             |runs AS (SELECT doc_id, pos,
-             |           sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-             |                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-             |         FROM lagged),
+      Some(s"""WITH toks AS (SELECT doc_id, str_split(text, ' ') AS t FROM documents),
+             |${dupSpanRunsCte("toks", "t")},
              |spans AS (SELECT doc_id, min(pos) AS s, max(pos) + 4 AS e
              |          FROM runs GROUP BY doc_id, run_id),
              |pos AS (SELECT doc_id, i AS pos, t[i+1] AS tok
@@ -7260,10 +7171,10 @@ object LlmQueries {
     Q("sample_importance", "LLM",
       (s, d) => Sampling.importanceWeights(Tables(s, d, "documents"), "doc_id", "text",
         isTarget = col("lang") === "en").orderBy("doc_id"),
-      Some("""WITH toks AS (SELECT doc_id, lang = 'en' AS t, unnest(str_split(text, ' ')) AS term
+      Some(s"""WITH toks AS (SELECT doc_id, lang = 'en' AS t, unnest(str_split(text, ' ')) AS term
              |              FROM documents),
              |b AS (SELECT doc_id, t,
-             |        CAST('0x' || substring(md5(term), 1, 15) AS BIGINT) % 256 AS bucket FROM toks),
+             |        ${md5LongSql("term")} % 256 AS bucket FROM toks),
              |counts AS (SELECT bucket, sum(CASE WHEN t THEN 1 ELSE 0 END) AS ct,
              |             sum(CASE WHEN t THEN 0 ELSE 1 END) AS cr
              |           FROM b GROUP BY bucket),
@@ -7508,15 +7419,11 @@ object LlmQueries {
           .crossJoin(broadcast(
             ev.agg(countDistinct(col("user_key")).as("exact_distinct"))))
       },
-      Some("""WITH h AS (SELECT DISTINCT CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) AS hh FROM events),
+      Some(s"""WITH h AS (SELECT DISTINCT ${md5LongSql("CAST(user_id AS VARCHAR)")} AS hh FROM events),
              |b AS (SELECT hh FROM h ORDER BY hh LIMIT 64),
              |a AS (SELECT count(*) AS n_kept, max(hh) AS kth FROM b),
              |x AS (SELECT count(DISTINCT user_id) AS exact_distinct FROM events)
-             |SELECT CAST(64 AS INTEGER) AS k, CAST(n_kept AS BIGINT) AS n_kept,
-             |  kth AS kth_min_hash,
-             |  CAST(CASE WHEN n_kept < 64 THEN n_kept
-             |       ELSE (CAST(n_kept AS HUGEINT) - 1) * 1152921504606846976 // kth
-             |       END AS BIGINT) AS est_distinct,
+             |SELECT ${kmvReadOutSql(64)},
              |  CAST(exact_distinct AS BIGINT) AS exact_distinct
              |FROM a CROSS JOIN x""".stripMargin)),
 
@@ -7538,9 +7445,9 @@ object LlmQueries {
         graft.operators.Sketches.kmvIntersect(a, b, k = 64)
           .crossJoin(broadcast(exact))
       },
-      Some("""WITH ha AS (SELECT DISTINCT CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) AS __h FROM events WHERE event_type = 'click'),
+      Some(s"""WITH ha AS (SELECT DISTINCT ${md5LongSql("CAST(user_id AS VARCHAR)")} AS __h FROM events WHERE event_type = 'click'),
              |a AS (SELECT __h FROM ha ORDER BY __h LIMIT 64),
-             |hb AS (SELECT DISTINCT CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) AS __h FROM events WHERE event_type = 'purchase'),
+             |hb AS (SELECT DISTINCT ${md5LongSql("CAST(user_id AS VARCHAR)")} AS __h FROM events WHERE event_type = 'purchase'),
              |b AS (SELECT __h FROM hb ORDER BY __h LIMIT 64),
              |ta AS (SELECT CASE WHEN count(*) >= 64 THEN max(__h) ELSE 1152921504606846976 END AS th FROM a),
              |tb AS (SELECT CASE WHEN count(*) >= 64 THEN max(__h) ELSE 1152921504606846976 END AS th FROM b),
@@ -7568,20 +7475,13 @@ object LlmQueries {
             .agg(countDistinct(col("uk")).as("exact_distinct")), "event_type")
           .orderBy("event_type")
       },
-      Some("""WITH h AS (SELECT DISTINCT event_type,
-             |         CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) AS hv
+      Some(s"""WITH h AS (SELECT DISTINCT event_type,
+             |         ${md5LongSql("CAST(user_id AS VARCHAR)")} AS hv
              |       FROM events),
-             |rk AS (SELECT event_type, hv,
-             |         row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn FROM h),
-             |ag AS (SELECT event_type, count(*) AS n_kept, max(hv) AS kth
-             |       FROM rk WHERE rn <= 64 GROUP BY 1),
+             |${bottomKCte("ag", "h", "event_type", "hv", 64)},
              |ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_distinct
              |       FROM events GROUP BY 1)
-             |SELECT event_type, CAST(64 AS INTEGER) AS k,
-             |  CAST(n_kept AS BIGINT) AS n_kept, kth AS kth_min_hash,
-             |  CAST(CASE WHEN n_kept < 64 THEN n_kept
-             |       ELSE (CAST(n_kept AS HUGEINT) - 1) * 1152921504606846976 // kth
-             |       END AS BIGINT) AS est_distinct,
+             |SELECT event_type, ${kmvReadOutSql(64)},
              |  CAST(exact_distinct AS BIGINT) AS exact_distinct
              |FROM ag JOIN ex USING (event_type) ORDER BY event_type""".stripMargin)),
 
@@ -7605,23 +7505,16 @@ object LlmQueries {
           .groupBy("win_end").agg(countDistinct(col("uk")).as("exact_distinct"))
         est.join(exact, "win_end").orderBy("win_end")
       },
-      Some("""WITH ev AS (SELECT CAST(floor(epoch(CAST(ts AS TIMESTAMP)) / 3600) AS BIGINT) AS h,
+      Some(s"""WITH ev AS (SELECT CAST(floor(epoch(CAST(ts AS TIMESTAMP)) / 3600) AS BIGINT) AS h,
              |              CAST(user_id AS VARCHAR) AS uk FROM events),
              |bkt AS (SELECT DISTINCT h FROM ev),
-             |hh AS (SELECT DISTINCT h, CAST('0x' || substring(md5(uk), 1, 15) AS BIGINT) AS hv FROM ev),
+             |hh AS (SELECT DISTINCT h, ${md5LongSql("uk")} AS hv FROM ev),
              |mem AS (SELECT DISTINCT w.h AS win_end, x.hv
              |        FROM bkt w JOIN hh x ON x.h > w.h - 6 AND x.h <= w.h),
-             |rk AS (SELECT win_end, hv,
-             |         row_number() OVER (PARTITION BY win_end ORDER BY hv) AS rn FROM mem),
-             |ag AS (SELECT win_end, count(*) AS n_kept, max(hv) AS kth
-             |       FROM rk WHERE rn <= 64 GROUP BY 1),
+             |${bottomKCte("ag", "mem", "win_end", "hv", 64)},
              |ex AS (SELECT w.h AS win_end, count(DISTINCT e.uk) AS exact_distinct
              |       FROM bkt w JOIN ev e ON e.h > w.h - 6 AND e.h <= w.h GROUP BY 1)
-             |SELECT ag.win_end, CAST(64 AS INTEGER) AS k,
-             |  CAST(n_kept AS BIGINT) AS n_kept, kth AS kth_min_hash,
-             |  CAST(CASE WHEN n_kept < 64 THEN n_kept
-             |       ELSE (CAST(n_kept AS HUGEINT) - 1) * 1152921504606846976 // kth
-             |       END AS BIGINT) AS est_distinct,
+             |SELECT ag.win_end, ${kmvReadOutSql(64)},
              |  CAST(exact_distinct AS BIGINT) AS exact_distinct
              |FROM ag JOIN ex USING (win_end) ORDER BY win_end""".stripMargin)),
 
@@ -7641,13 +7534,13 @@ object LlmQueries {
           .orderBy(col("est_count").desc, col("exact_count").desc, col("user_key"))
           .limit(10)
       },
-      Some("""WITH ev AS (SELECT CAST(user_id AS VARCHAR) AS user_key FROM events),
+      Some(s"""WITH ev AS (SELECT CAST(user_id AS VARCHAR) AS user_key FROM events),
              |rs AS (SELECT unnest([0, 1, 2]) AS r),
-             |cells AS (SELECT r, CAST('0x' || substring(md5('cms' || r || '|' || user_key), 1, 15) AS BIGINT) % 64 AS cell,
+             |cells AS (SELECT r, ${md5LongSql("'cms' || r || '|' || user_key")} % 64 AS cell,
              |            count(*) AS cell_count
              |          FROM ev CROSS JOIN rs GROUP BY 1, 2),
              |cand AS (SELECT DISTINCT user_key FROM ev),
-             |probe AS (SELECT user_key, r, CAST('0x' || substring(md5('cms' || r || '|' || user_key), 1, 15) AS BIGINT) % 64 AS cell
+             |probe AS (SELECT user_key, r, ${md5LongSql("'cms' || r || '|' || user_key")} % 64 AS cell
              |          FROM cand CROSS JOIN rs),
              |est AS (SELECT p.user_key, min(cells.cell_count) AS est_count FROM probe p
              |        JOIN cells ON cells.r = p.r AND cells.cell = p.cell GROUP BY 1),
@@ -7735,18 +7628,7 @@ object LlmQueries {
       (s, d) => TextAnalysis.bigramLogProbScores(
           Tables(s, d, "documents"), "doc_id", "text", lambdaMilli = 800)
         .orderBy("doc_id"),
-      Some("""WITH toks AS (SELECT doc_id, str_split(text, ' ') AS ts FROM documents),
-             |big AS (SELECT doc_id, unnest(ts[:len(ts)-1]) AS w1, unnest(ts[2:]) AS w2
-             |        FROM toks WHERE len(ts) >= 2),
-             |uni AS (SELECT unnest(str_split(text, ' ')) AS w2 FROM documents),
-             |cu AS (SELECT w2, count(*) AS cnt2 FROM uni GROUP BY 1),
-             |nn AS (SELECT CAST(sum(cnt2) AS BIGINT) AS n FROM cu),
-             |cb AS (SELECT w1, w2, count(*) AS cnt12 FROM big GROUP BY 1, 2),
-             |cx AS (SELECT w1, CAST(sum(cnt12) AS BIGINT) AS cnt1 FROM cb GROUP BY 1),
-             |model AS (SELECT cb.w1, cb.w2,
-             |    CAST(round(ln(CAST(800 * cnt12 * n + 200 * cnt2 * cnt1 AS DOUBLE)
-             |                  / CAST(1000 * cnt1 * n AS DOUBLE)) * 1000000) AS BIGINT) AS lp
-             |  FROM cb JOIN cx USING (w1) JOIN cu USING (w2) CROSS JOIN nn)
+      Some(s"""WITH $bigramJmModelCte
              |SELECT doc_id, count(*) AS n_bigrams, CAST(sum(lp) AS BIGINT) AS logprob_bi,
              |       CAST(round(CAST(sum(lp) AS DOUBLE) / count(*)) AS BIGINT) AS avg_logprob_bi_micro
              |FROM big JOIN model USING (w1, w2) GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
@@ -7777,8 +7659,8 @@ object LlmQueries {
           .withColumn("coverage_milli", expr("n_seen * 1000 div n_bigrams"))
           .orderBy("doc_id")
       },
-      Some("""WITH b AS (SELECT doc_id,
-             |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100 AS bkt,
+      Some(s"""WITH b AS (SELECT doc_id,
+             |         ${md5LongSql("CAST(doc_id AS VARCHAR)")} % 100 AS bkt,
              |         str_split(text, ' ') AS ts
              |       FROM documents),
              |big AS (SELECT doc_id, bkt,
@@ -7801,9 +7683,7 @@ object LlmQueries {
       (s, d) => TextAnalysis.knBigramLogProbScores(
           Tables(s, d, "documents"), "doc_id", "text")
         .orderBy("doc_id"),
-      Some("""WITH toks AS (SELECT doc_id, str_split(text, ' ') AS ts FROM documents),
-             |big AS (SELECT doc_id, unnest(ts[:len(ts)-1]) AS w1, unnest(ts[2:]) AS w2
-             |        FROM toks WHERE len(ts) >= 2),
+      Some(s"""WITH $bigramsCte,
              |cb AS (SELECT w1, w2, count(*) AS c12 FROM big GROUP BY 1, 2),
              |cx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1, count(*) AS n1f
              |       FROM cb GROUP BY 1),
@@ -7843,18 +7723,7 @@ object LlmQueries {
           Tables(s, d, "documents"), "doc_id", "text",
           lambdaMilli = 800, pct = 0.5)
         .orderBy("doc_id"),
-      Some("""WITH toks AS (SELECT doc_id, str_split(text, ' ') AS ts FROM documents),
-             |big AS (SELECT doc_id, unnest(ts[:len(ts)-1]) AS w1, unnest(ts[2:]) AS w2
-             |        FROM toks WHERE len(ts) >= 2),
-             |uni AS (SELECT unnest(str_split(text, ' ')) AS w2 FROM documents),
-             |cu AS (SELECT w2, count(*) AS cnt2 FROM uni GROUP BY 1),
-             |nn AS (SELECT CAST(sum(cnt2) AS BIGINT) AS n FROM cu),
-             |cb AS (SELECT w1, w2, count(*) AS cnt12 FROM big GROUP BY 1, 2),
-             |cx AS (SELECT w1, CAST(sum(cnt12) AS BIGINT) AS cnt1 FROM cb GROUP BY 1),
-             |model AS (SELECT cb.w1, cb.w2,
-             |    CAST(round(ln(CAST(800 * cnt12 * n + 200 * cnt2 * cnt1 AS DOUBLE)
-             |                  / CAST(1000 * cnt1 * n AS DOUBLE)) * 1000000) AS BIGINT) AS lp
-             |  FROM cb JOIN cx USING (w1) JOIN cu USING (w2) CROSS JOIN nn),
+      Some(s"""WITH $bigramJmModelCte,
              |sc AS (SELECT doc_id, count(*) AS n_bigrams, CAST(sum(lp) AS BIGINT) AS lb
              |       FROM big JOIN model USING (w1, w2) GROUP BY doc_id),
              |g AS (SELECT doc_id, n_bigrams, (-lb) // n_bigrams AS nll_micro FROM sc),

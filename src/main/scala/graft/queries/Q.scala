@@ -5,9 +5,9 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.functions.{col, expr, md5, substring, timestamp_micros}
 import org.apache.spark.sql.types.LongType
 
 /** One named, oracle-checkable query: the unit of the driver's correctness
@@ -91,4 +91,19 @@ object Tables {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
     try new Footer(file.getPath, reader.getFooter) finally reader.close()
   }
+}
+
+/** md5 digests in the query layer, each engine form with its DuckDB twin
+  * beside it. Every `substring(md5(...))` of the board goes through here. */
+object Md5 {
+  /** `len` hex digits of md5(`c`) from the 1-based digit `from`. */
+  def md5Hex(c: Column, from: Int, len: Int): Column = substring(md5(c), from, len)
+
+  /** DuckDB twin of [[md5Hex]] over the SQL expression `x`. */
+  def md5HexSql(x: String, from: Int, len: Int): String =
+    s"substring(md5($x), $from, $len)"
+
+  /** DuckDB twin of [[graft.functions.ColumnFns.md5Long]]: the first 15
+    * hex digits of md5(`x`) as a BIGINT in [0, 2^60). */
+  def md5LongSql(x: String): String = s"CAST('0x' || ${md5HexSql(x, 1, 15)} AS BIGINT)"
 }

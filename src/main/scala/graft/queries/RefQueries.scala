@@ -7,6 +7,7 @@ import graft.Pin
 import graft.eth.{Enrich, EthTransforms, Ingest, Sinks}
 import graft.eth.EthPipeline.{SourceConf, readStream}
 import graft.functions.ColumnFns._
+import graft.queries.Md5._
 
 /** Reference-parity queries: one named, oracle-checked query per operator of
   * SURVEY.md §2 (S* sources, P* projections, J* joins, A* aggregations,
@@ -42,7 +43,7 @@ object RefQueries {
     s"""bl AS (SELECT b,
        |         '0x' || md5('blk-' || CAST(b AS VARCHAR) || '-0') ||
        |           md5('blk-' || CAST(b AS VARCHAR) || '-0-b') AS hash,
-       |         '0x' || substring(md5('miner-' || CAST(b % 5 AS VARCHAR)), 1, 40) AS miner,
+       |         '0x' || ${md5HexSql("'miner-' || CAST(b % 5 AS VARCHAR)", 1, 40)} AS miner,
        |         CAST(262144 AS HUGEINT) + b AS difficulty,
        |         b % 30000000 AS gas_used, 1438269988 + b * 13 AS ts, b % 3 + 1 AS tc
        |       FROM (${blockRange(lo, hi)}))""".stripMargin
@@ -58,14 +59,14 @@ object RefQueries {
     s"""tx AS (SELECT b, i,
        |         '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)) ||
        |           md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR) || '-b') AS h,
-       |         '0x' || substring(md5('from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) AS from_address,
+       |         '0x' || ${md5HexSql("'from-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)", 1, 40)} AS from_address,
        |         CASE WHEN (b + i) % 7 = 0 THEN NULL
-       |              ELSE '0x' || substring(md5('to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40) END AS to_address,
+       |              ELSE '0x' || ${md5HexSql("'to-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)", 1, 40)} END AS to_address,
        |         CAST('100000000000000000000' AS HUGEINT) + b * 1000 + i AS v,
        |         CASE WHEN (b + i) % 5 = 0 THEN NULL ELSE 30000000000 + b END AS max_fee_per_gas,
        |         21000 * (i + 1) AS cumulative_gas_used, 21000 + i AS gas_used,
        |         CASE WHEN (b + i) % 7 = 0
-       |              THEN '0x' || substring(md5('ca-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 40)
+       |              THEN '0x' || ${md5HexSql("'ca-' || CAST(b AS VARCHAR) || '-' || CAST(i AS VARCHAR)", 1, 40)}
        |              END AS contract_address,
        |         CASE WHEN (b + i) % 11 = 0 THEN NULL ELSE (b + i) % 2 END AS status,
        |         ((b + i) % 11 = 0) OR ((b + i) % 2 = 1) AS ok
@@ -79,7 +80,7 @@ object RefQueries {
     s"""lg AS (SELECT b, i,
        |         '0x' || md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i // 2 AS VARCHAR)) ||
        |           md5('tx-' || CAST(b AS VARCHAR) || '-' || CAST(i // 2 AS VARCHAR) || '-b') AS h,
-       |         '0x' || substring(md5('addr-' || CAST((b + i) % 11 AS VARCHAR)), 1, 40) AS address,
+       |         '0x' || ${md5HexSql("'addr-' || CAST((b + i) % 11 AS VARCHAR)", 1, 40)} AS address,
        |         CASE WHEN (b + i) % 5 = 0 THEN CAST([] AS VARCHAR[])
        |              ELSE list_transform(range(0, (b + i) % 5),
        |                     t -> '0x' || md5('topic-' || CAST(t AS VARCHAR) || '-' || CAST((b + i) % 3 AS VARCHAR))) END AS topics,
@@ -792,7 +793,7 @@ object RefQueries {
       },
       Some(s"""WITH ${chainBlocksCte(0, 999)},
              |present AS (SELECT b FROM bl
-             |  WHERE CAST('0x' || substring(md5('gap-' || CAST(b AS VARCHAR)), 1, 15) AS BIGINT) % 13 <> 0
+             |  WHERE ${md5LongSql("'gap-' || CAST(b AS VARCHAR)")} % 13 <> 0
              |    AND b NOT BETWEEN 150 AND 349),
              |g AS (SELECT b, lag(b) OVER (ORDER BY b) AS prev FROM present)
              |SELECT prev + 1 AS gap_start, b - 1 AS gap_end, b - prev - 1 AS n_missing
@@ -1105,8 +1106,8 @@ object RefQueries {
               |tt AS (SELECT * FROM lg WHERE (b + i) % 5 >= 3 AND (b + i) % 3 = 0)
               |SELECT CAST(b AS INTEGER) AS block_number, CAST(i AS INTEGER) AS log_index,
               |       h AS transaction_hash, address AS token_address,
-              |       '0x' || substring(md5('topic-1-0'), 13, 20) AS from_address,
-              |       '0x' || substring(md5('topic-2-0'), 13, 20) AS to_address,
+              |       '0x' || ${md5HexSql("'topic-1-0'", 13, 20)} AS from_address,
+              |       '0x' || ${md5HexSql("'topic-2-0'", 13, 20)} AS to_address,
               |       CAST('0x' || substring(data, 3, 15) AS BIGINT) AS value_wei
               |FROM tt ORDER BY block_number, log_index""".stripMargin)),
 
@@ -1762,7 +1763,7 @@ object RefQueries {
           .crossJoin(broadcast(Tables(s, d, "customer")
             .agg(countDistinct(col("c_name")).as("exact_distinct"))))
       },
-      Some("""WITH h AS (SELECT DISTINCT CAST('0x' || substring(md5(c_name), 1, 15) AS BIGINT) AS hh FROM customer),
+      Some(s"""WITH h AS (SELECT DISTINCT ${md5LongSql("c_name")} AS hh FROM customer),
              |b AS (SELECT hh FROM h ORDER BY hh LIMIT 256),
              |a AS (SELECT count(*) AS n_kept, max(hh) AS kth FROM b),
              |x AS (SELECT count(DISTINCT c_name) AS exact_distinct FROM customer)

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.queries.Md5._
+
 /** Relational surface beyond the reference (SURVEY §2.9 "absent in the
   * reference — engine supplies via Spark built-ins"): window functions,
   * grouping sets, distinct aggregation, semi/anti/range joins, set ops,
@@ -1618,15 +1620,15 @@ object RelationalQueries {
         graft.functions.GraftFunctions.register(s)
         Tables(s, d, "customer")
           .select(col("c_nationkey"),
-            unhex(substring(md5(col("c_name")), 1, 24)).as("wei"))
+            unhex(md5Hex(col("c_name"), 1, 24)).as("wei"))
           .groupBy("c_nationkey")
           .agg(expr("graft_uint256_sum(wei)").as("total_wei"))
           .orderBy("c_nationkey")
       },
-      Some("""SELECT c_nationkey,
-             |       CAST(sum(CAST(CAST('0x' || substring(md5(c_name), 1, 9) AS BIGINT) AS HUGEINT)
+      Some(s"""SELECT c_nationkey,
+             |       CAST(sum(CAST(CAST('0x' || ${md5HexSql("c_name", 1, 9)} AS BIGINT) AS HUGEINT)
              |                * 1152921504606846976
-             |                + CAST('0x' || substring(md5(c_name), 10, 15) AS BIGINT)) AS VARCHAR) AS total_wei
+             |                + CAST('0x' || ${md5HexSql("c_name", 10, 15)} AS BIGINT)) AS VARCHAR) AS total_wei
              |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Z-order (Morton) clustering key: interleaving two range dimensions
@@ -1654,11 +1656,11 @@ object RelationalQueries {
     Q("agg_uint256_max", "A",
       (s, d) => Tables(s, d, "customer")
         .select(col("c_nationkey"),
-          unhex(substring(md5(col("c_name")), 1, 24)).as("wei"))
+          unhex(md5Hex(col("c_name"), 1, 24)).as("wei"))
         .groupBy("c_nationkey")
         .agg(graft.functions.ColumnFns.binaryToHex(max(col("wei"))).as("max_wei_hex"))
         .orderBy("c_nationkey"),
-      Some("""SELECT c_nationkey, '0x' || max(substring(md5(c_name), 1, 24)) AS max_wei_hex
+      Some(s"""SELECT c_nationkey, '0x' || max(${md5HexSql("c_name", 1, 24)}) AS max_wei_hex
              |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // uint256 BEYOND Decimal(38), proven end-to-end (SURVEY §1.2/§7.4

@@ -65,11 +65,16 @@ class BenchSpec extends SparkSpec {
       s"""x#17L, y#4, x#17L [plan_id=905] [plan_id=3] MapPartitionsRDD[5502] at localCheckpoint
          |Location: [file:$tmp/graft_pipe5k8231911123401239912/block, $tmp/keep/00000000-00000999]
          |part-00001-0b5e7c1a-3a9d-4d0e-9d4c-5f1e2a3b4c5d-c000.snappy.parquet
-         |CollectMetrics 9f1c2d3e-1a2b-4c3d-8e4f-0a1b2c3d4e5f, 0b5e7c1a-3a9d-4d0e-9d4c-5f1e2a3b4c5d""".stripMargin
+         |CollectMetrics 9f1c2d3e-1a2b-4c3d-8e4f-0a1b2c3d4e5f, 0b5e7c1a-3a9d-4d0e-9d4c-5f1e2a3b4c5d""".stripMargin +
+      "\nMapElements graft.llm.Multimodal$$$Lambda$7596/0x00007fc5bdb53478@2e19d196, " +
+      "graft.queries.LlmQueries$$$Lambda/0x00007fc5bdb4dcb0@1403b7b4, " +
+      "graft.llm.Multimodal$$$Lambda$7596/0x00007fc5bdb53478@2e19d196"
     assert(Bench.stablePlan(plan) ==
       s"""x#0L, y#1, x#0L [plan_id=0] [plan_id=1] MapPartitionsRDD[0] at localCheckpoint
          |Location: [file:$tmp/graft_pipe5ktmp-0/block, $tmp/keep/00000000-00000999]
          |part-00001-uuid-0-c000.snappy.parquet
-         |CollectMetrics uuid-1, uuid-0""".stripMargin)
+         |CollectMetrics uuid-1, uuid-0""".stripMargin +
+      "\nMapElements graft.llm.Multimodal$$$Lambda-0, " +
+      "graft.queries.LlmQueries$$$Lambda-1, graft.llm.Multimodal$$$Lambda-0")
   }
 }

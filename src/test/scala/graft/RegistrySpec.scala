@@ -117,4 +117,26 @@ class RegistrySpec extends SparkSpec {
       "round(double, n) survives to a DOUBLE output column (convert to " +
         s"integer micro-units or whitelist with a grid argument): ${offenders.mkString("; ")}")
   }
+
+  test("source lock: md5 digests go through queries.Md5, the word-shingle list has one definition") {
+    val root = new java.io.File("src/main/scala/graft/queries")
+    assert(root.isDirectory, s"run from the project root (no ${root.getAbsolutePath})")
+    def text(f: java.io.File): String = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.mkString finally src.close()
+    }
+    val md5Offenders = root.listFiles().toSeq
+      .filter(f => f.getName.endsWith(".scala") && f.getName != "Q.scala")
+      .flatMap(f => text(f).linesIterator.zipWithIndex.collect {
+        case (line, i) if line.contains("substring(md5(") => s"${f.getName}:${i + 1}"
+      })
+    assert(md5Offenders.isEmpty,
+      s"use Md5.md5LongSql / md5HexSql / md5Hex: ${md5Offenders.mkString(", ")}")
+    val q = text(new java.io.File(root, "Q.scala"))
+    assert(q.contains("def md5LongSql("), "Q.scala must define Md5.md5LongSql")
+    val shingleLists = java.util.regex.Pattern.quote("range(0, len(t) - 2)").r
+      .findAllIn(text(new java.io.File(root, "LlmQueries.scala"))).size
+    assert(shingleLists == 1,
+      s"the word-shingle list is written $shingleLists times in LlmQueries.scala; use wordShinglesSql")
+  }
 }
