@@ -157,6 +157,29 @@ object Bench {
     case c => c.toString
   }
 
+  /** One timed pass of a query: build it and run its FULL physical plan
+    * inside one pin scope (Verify's per-query shape), so the pins it makes,
+    * an operator's prologue pins included, are freed when the pass ends.
+    * The clock stops before the scope releases them. A plain df.count()
+    * would wrap the plan in a count aggregate, letting Catalyst prune
+    * every projected column and drop the deterministic global sort;
+    * queryExecution.toRdd executes the optimized plan as written, and
+    * counting its rows only adds a per-row iterator step. Left holds a
+    * failed pass's message. */
+  private[graft] def timedPass(spark: SparkSession, sfDir: String,
+                               fn: (SparkSession, String) => DataFrame): Either[String, Double] =
+    try {
+      var t = 0.0
+      Pin.scope {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).queryExecution.toRdd.count()
+        t = (System.nanoTime() - t0) / 1e9
+      }
+      Right(t)
+    } catch { case e: Throwable =>
+      Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+    }
+
   /** Times the selected queries and returns the board's JSON line, after
     * writing it to BENCH_LOCAL.json (and the metrics side file, if asked). */
   private def board(spark: SparkSession, sfDir: String): String = {
@@ -229,26 +252,14 @@ object Bench {
       System.err.println(s"[bench] running $name")
       val fn = SparkEntry.queries(name)
       def onePass(): Either[String, Double] = {
-        val t0 = System.nanoTime()
-        // Time the FULL physical plan of the query as written. A plain
-        // df.count() wraps the plan in a count aggregate, letting Catalyst
-        // prune every projected column and eliminate the deterministic
-        // global sort — projection-heavy queries would be timing a bare
-        // scan. queryExecution.toRdd executes the original optimized plan
-        // (projections, sorts and all); counting the resulting rows only
-        // adds a per-row iterator step.
-        val out = try { fn(spark, sfDir).queryExecution.toRdd.count(); Right(()) }
-        catch { case e: Throwable =>
-          Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        // untimed: release localCheckpoint blocks the iterative operators
-        // pinned (components, incremental dedup) — leaked storage from query
-        // i must not squeeze execution memory under queries i+1..n. BLOCKING
+        val out = timedPass(spark, sfDir, fn)
+        // untimed guard: the pass's pin scope has already freed what the
+        // query pinned; a pin made off the scope's thread would still
+        // squeeze execution memory under queries i+1..n. BLOCKING
         // removal, so the cleanup cannot bleed into the next timed window
         try spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
         catch { case _: Throwable => }
-        out.map(_ => t)
+        out
       }
       // metrics snapshot brackets pass 1 (pass 2 would measure the same
       // deterministic plan; one bracket keeps the harness simple)

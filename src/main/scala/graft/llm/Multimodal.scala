@@ -9,13 +9,15 @@ import org.apache.spark.sql.functions._
   * The Spark-side design is real — schema, partition-preserving
   * `mapPartitions`, batch-shaped processing — and the decode stage now
   * splits by format: 24-bit BMP, binary PPM, AND non-interlaced 8-bit
-  * truecolor PNG (zlib via the public JDK) are decoded FOR REAL by the
-  * pure-JVM codecs at the bottom of this file
-  * ([[encodeBmp]]/[[decodeBmp]]/[[decodePpm]]/[[decodePng]] →
-  * [[imageStats]], oracle-checked value-exactly), and JPEG decodes for
-  * real too ([[decodeJpeg]] — baseline SOF0 AND progressive SOF2:
-  * huffman + IDCT + fixed-point YCbCr→RGB, cross-checked against
-  * javax.imageio in both directions). Video decodes for real in two
+  * PNG (zlib via the public JDK) are decoded FOR REAL by the pure-JVM
+  * codecs below, and JPEG decodes for real too ([[decodeJpegRgb]] —
+  * baseline SOF0 AND progressive SOF2: huffman + IDCT + fixed-point
+  * YCbCr→RGB, cross-checked against javax.imageio in both directions).
+  * Each container has one decoder returning one pixel layout, the packed
+  * 0xRRGGBB plane; [[decodeImageRgb]] dispatches over them, and every
+  * image op reduces that plane with [[rgbSums]] or [[grayPlane]]
+  * ([[imageStats]], [[aHash]], [[avgPool]], oracle-checked
+  * value-exactly). Video decodes for real in two
   * containers — uncompressed Y4M and COMPRESSED MJPEG-in-AVI
   * ([[decodeAviMjpegFrames]], per-frame JFIF through the full JPEG
   * path). Only inter-frame codecs (H.264/VP9/AV1), which need an
@@ -141,7 +143,7 @@ object Multimodal {
   // two honest image formats bit-exactly: 24-bit uncompressed BMP and
   // binary PPM (P6). These are not stubs — encodeBmp writes a
   // spec-conformant file (BITMAPFILEHEADER + BITMAPINFOHEADER, BGR
-  // pixel order, bottom-up rows, 4-byte row padding) and decodeBmp
+  // pixel order, bottom-up rows, 4-byte row padding) and decodeBmpRgb
   // parses arbitrary conformant payloads back (including top-down
   // negative-height files), so the decode stage of the pipeline runs a
   // real parse over real bytes. PNG (compressed, zlib through the
@@ -187,100 +189,62 @@ object Multimodal {
     b.array()
   }
 
-  /** Parse a 24-bit uncompressed BMP: (width, height, [rSum, gSum,
-    * bSum]). None for anything that is not a conformant 24bpp BMP
-    * (wrong magic, compressed, truncated) — callers fall back. Handles
-    * both bottom-up (positive height) and top-down (negative height)
-    * files and arbitrary pixel-data offsets. */
-  def decodeBmp(payload: Array[Byte]): Option[(Int, Int, Array[Long])] = {
-    if (payload.length < 54 || payload(0) != 'B' || payload(1) != 'M') return None
-    val b = java.nio.ByteBuffer.wrap(payload).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val off = b.getInt(10)
-    val hdrSize = b.getInt(14)
-    val width = b.getInt(18)
-    val rawHeight = b.getInt(22)
-    val planes = b.getShort(26)
-    val bpp = b.getShort(28)
-    val compression = b.getInt(30)
-    if (hdrSize < 40 || planes != 1 || bpp != 24 || compression != 0) return None
-    if (width <= 0 || rawHeight == 0 || off < 54) return None
-    val height = math.abs(rawHeight)
-    val rowSize = (width * 3 + 3) / 4 * 4
-    if (off.toLong + rowSize.toLong * height > payload.length) return None
-    var rSum = 0L; var gSum = 0L; var bSum = 0L
-    var row = 0 // channel sums are row-order invariant: scan in file order
-    while (row < height) {
-      var p = off + row * rowSize
-      var x = 0
-      while (x < width) {
-        bSum += payload(p) & 0xff
-        gSum += payload(p + 1) & 0xff
-        rSum += payload(p + 2) & 0xff
-        p += 3; x += 1
-      }
-      row += 1
-    }
-    Some((width, height, Array(rSum, gSum, bSum)))
-  }
+  /** One packed pixel: 0xRRGGBB from three channel values (bytes
+    * included; each is taken mod 256). */
+  private def packRgb(r: Int, g: Int, b: Int): Int =
+    ((r & 0xff) << 16) | ((g & 0xff) << 8) | (b & 0xff)
 
-  /** Parse a 24-bit BMP to the full grayscale image in IMAGE coordinates
-    * (row-major, y=0 at the top): gray = (r+g+b)/3 truncating. Undoes the
-    * file's bottom-up row order (positive height) so hashes are
-    * orientation-independent; top-down (negative height) reads straight
-    * through. None on non-conformant payloads, like [[decodeBmp]]. */
-  def decodeBmpGray(payload: Array[Byte]): Option[(Int, Int, Array[Int])] = {
+  /** Parse a 24-bit uncompressed BMP to its packed 0xRRGGBB plane in
+    * IMAGE coordinates (row-major, y = 0 at the top). None for anything
+    * that is not a conformant 24bpp BMP (wrong magic, compressed,
+    * truncated) — callers fall back. Undoes the file's bottom-up row
+    * order (positive height), so planes are orientation-independent;
+    * top-down (negative height) files read straight through; any
+    * pixel-data offset is honoured. */
+  private def decodeBmpRgb(payload: Array[Byte]): Option[(Int, Int, Array[Int])] = {
     if (payload.length < 54 || payload(0) != 'B' || payload(1) != 'M') return None
     val b = java.nio.ByteBuffer.wrap(payload).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     val off = b.getInt(10)
-    val hdrSize = b.getInt(14)
     val width = b.getInt(18)
     val rawHeight = b.getInt(22)
-    if (hdrSize < 40 || b.getShort(26) != 1 || b.getShort(28) != 24 ||
+    if (b.getInt(14) < 40 || b.getShort(26) != 1 || b.getShort(28) != 24 ||
       b.getInt(30) != 0) return None
     if (width <= 0 || rawHeight == 0 || off < 54) return None
-    val height = math.abs(rawHeight)
-    val rowSize = (width * 3 + 3) / 4 * 4
-    if (off.toLong + rowSize.toLong * height > payload.length) return None
-    val gray = new Array[Int](width * height)
+    // LONG geometry: width * 3 wraps Int for a header claiming a width
+    // past 715 M, and abs(Int.MinValue) stays negative — either would
+    // slip past the size guard into a crash instead of the None fallback
+    val heightL = math.abs(rawHeight.toLong)
+    val rowSizeL = (width * 3L + 3) / 4 * 4
+    if (off + rowSizeL * heightL > payload.length) return None
+    val height = heightL.toInt
+    val rowSize = rowSizeL.toInt
+    val rgb = new Array[Int](width * height)
     var row = 0
     while (row < height) {
       val y = if (rawHeight > 0) height - 1 - row else row
       var p = off + row * rowSize
       var x = 0
       while (x < width) {
-        gray(y * width + x) = ((payload(p) & 0xff) + (payload(p + 1) & 0xff) +
-          (payload(p + 2) & 0xff)) / 3
+        rgb(y * width + x) = packRgb(payload(p + 2), payload(p + 1), payload(p)) // BGR
         p += 3; x += 1
       }
       row += 1
     }
-    Some((width, height, gray))
+    Some((width, height, rgb))
   }
 
-  /** Parse a binary PPM to the full grayscale image (row-major, already
-    * top-down in the file). Same conformance rules as [[decodePpm]]. */
-  def decodePpmGray(payload: Array[Byte]): Option[(Int, Int, Array[Int])] =
-    decodePpmWith(payload) { (w, h, at) =>
-      val gray = new Array[Int](w * h)
-      var i = 0
-      while (i < w * h) {
-        gray(i) = (at(3 * i) + at(3 * i + 1) + at(3 * i + 2)) / 3
-        i += 1
-      }
-      gray
-    }
-
-  /** Shared PPM header walk: parses P6 dims/maxval, hands the body reader
-    * `(w, h, byteAt)` to the continuation. */
-  private def decodePpmWith[A](payload: Array[Byte])(
-      body: (Int, Int, Int => Int) => A): Option[(Int, Int, A)] = {
+  /** Parse a binary PPM (P6, maxval ≤ 255; whitespace + '#' comments per
+    * the netpbm spec) to its packed plane (row-major, already top-down in
+    * the file). */
+  private def decodePpmRgb(payload: Array[Byte]): Option[(Int, Int, Array[Int])] = {
     if (payload.length < 9 || payload(0) != 'P' || payload(1) != '6') return None
     var p = 2
+    // read 3 whitespace/comment-separated ASCII ints, then ONE whitespace
     def nextInt(): Option[Int] = {
       while (p < payload.length &&
         (payload(p) == ' ' || payload(p) == '\n' || payload(p) == '\r'
           || payload(p) == '\t' || payload(p) == '#')) {
-        if (payload(p) == '#')
+        if (payload(p) == '#') // comment runs to end of line
           while (p < payload.length && payload(p) != '\n') p += 1
         else p += 1
       }
@@ -294,14 +258,51 @@ object Multimodal {
     val dims = for (w <- nextInt(); h <- nextInt(); mx <- nextInt()) yield (w, h, mx)
     dims match {
       case Some((w, h, mx)) if w > 0 && h > 0 && mx > 0 && mx <= 255 =>
-        p += 1
-        if (p.toLong + 3L * w * h > payload.length) None
-        else {
-          val off = p
-          Some((w, h, body(w, h, i => payload(off + i) & 0xff)))
+        p += 1 // the single whitespace after maxval
+        if (p.toLong + 3L * w * h > payload.length) return None
+        val rgb = new Array[Int](w * h)
+        var i = 0
+        while (i < rgb.length) {
+          rgb(i) = packRgb(payload(p), payload(p + 1), payload(p + 2))
+          p += 3; i += 1
         }
+        Some((w, h, rgb))
       case _ => None
     }
+  }
+
+  /** The one image dispatch: magic-byte sniff over every still-image
+    * container, each decoder returning the same packed 0xRRGGBB plane —
+    * so a pixel's reductions never depend on its container. */
+  private[graft] def decodeImageRgb(payload: Array[Byte]): Option[(Int, Int, Array[Int])] =
+    decodeBmpRgb(payload).orElse(decodePpmRgb(payload))
+      .orElse(decodePngRgb(payload)).orElse(decodeJpegRgb(payload))
+
+  /** Exact per-channel sums of a packed plane: [rSum, gSum, bSum]
+    * (integer — engine- and order-invariant). */
+  private[graft] def rgbSums(rgb: Array[Int]): Array[Long] = {
+    var r = 0L; var g = 0L; var b = 0L
+    var i = 0
+    while (i < rgb.length) {
+      val p = rgb(i)
+      r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff
+      i += 1
+    }
+    Array(r, g, b)
+  }
+
+  /** The gray rule of every image and video fingerprint: gray =
+    * (r+g+b)/3 truncating, over a packed plane. Gray pixels (v, v, v)
+    * map to v, so gray and color containers of one image agree. */
+  private[graft] def grayPlane(rgb: Array[Int]): Array[Int] = {
+    val gray = new Array[Int](rgb.length)
+    var i = 0
+    while (i < rgb.length) {
+      val p = rgb(i)
+      gray(i) = (((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)) / 3
+      i += 1
+    }
+    gray
   }
 
   /** Perceptual average-hash (aHash) over the REAL decoded pixels: gray
@@ -360,16 +361,14 @@ object Multimodal {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
       it.flatMap { r =>
-        decodeBmpGray(r.payload).orElse(decodePpmGray(r.payload))
-          .orElse(decodePngGray(r.payload))
-          .orElse(decodeJpegGray(r.payload)).collect {
+        decodeImageRgb(r.payload).collect {
           // strided sampling (pixel (x·sx, y·sy)): lets the 62-bit
           // window span an image region wider than 8 px — e.g. one
           // sample per 8x8 JPEG block, so block-quantized payloads
           // still hash on real inter-block structure
-          case (w, h, gray) if w.toLong > (winW - 1).toLong * strideX
+          case (w, h, rgb) if w.toLong > (winW - 1).toLong * strideX
               && h.toLong > (winH - 1).toLong * strideY =>
-            val (hash, nSet) = grayWindowHash(w, gray, winW, winH,
+            val (hash, nSet) = grayWindowHash(w, grayPlane(rgb), winW, winH,
               strideX, strideY)
             ImageHash(r.media_id, w, h, hash, nSet)
         }
@@ -393,10 +392,9 @@ object Multimodal {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
       it.flatMap { r =>
-        decodeBmpGray(r.payload).orElse(decodePpmGray(r.payload))
-          .orElse(decodePngGray(r.payload))
-          .orElse(decodeJpegGray(r.payload)).toSeq.collect {
-          case (w, h, gray) if w >= winW && h >= winH =>
+        decodeImageRgb(r.payload).toSeq.collect {
+          case (w, h, rgb) if w >= winW && h >= winH =>
+            val gray = grayPlane(rgb)
             for {
               by <- 0 until winH / bh
               bx <- 0 until winW / bw
@@ -440,60 +438,20 @@ object Multimodal {
     out
   }
 
-  /** Parse a binary PPM (P6, maxval ≤ 255; whitespace + '#' comments per
-    * the netpbm spec): (width, height, [rSum, gSum, bSum]). */
-  def decodePpm(payload: Array[Byte]): Option[(Int, Int, Array[Long])] = {
-    if (payload.length < 9 || payload(0) != 'P' || payload(1) != '6') return None
-    var p = 2
-    // read 3 whitespace/comment-separated ASCII ints, then ONE whitespace
-    def nextInt(): Option[Int] = {
-      while (p < payload.length &&
-        (payload(p) == ' ' || payload(p) == '\n' || payload(p) == '\r'
-          || payload(p) == '\t' || payload(p) == '#')) {
-        if (payload(p) == '#') // comment runs to end of line
-          while (p < payload.length && payload(p) != '\n') p += 1
-        else p += 1
-      }
-      var v = 0L; var any = false
-      while (p < payload.length && payload(p) >= '0' && payload(p) <= '9') {
-        v = v * 10 + (payload(p) - '0'); any = true; p += 1
-        if (v > Int.MaxValue) return None
-      }
-      if (any) Some(v.toInt) else None
-    }
-    val dims = for (w <- nextInt(); h <- nextInt(); mx <- nextInt()) yield (w, h, mx)
-    dims match {
-      case Some((w, h, mx)) if w > 0 && h > 0 && mx > 0 && mx <= 255 =>
-        p += 1 // the single whitespace after maxval
-        if (p.toLong + 3L * w * h > payload.length) return None
-        var rSum = 0L; var gSum = 0L; var bSum = 0L
-        var i = 0
-        val n = w * h
-        while (i < n) {
-          rSum += payload(p) & 0xff
-          gSum += payload(p + 1) & 0xff
-          bSum += payload(p + 2) & 0xff
-          p += 3; i += 1
-        }
-        Some((w, h, Array(rSum, gSum, bSum)))
-      case _ => None
-    }
-  }
-
-  /** Per-partition REAL decode over a media table: BMP and PPM parse for
-    * real (magic-byte dispatch); payloads in neither format are dropped
-    * (the stub pipeline [[extractFeatures]] remains the lossy-format
-    * path). Same `mapPartitions` shape as the stub pipeline — the codec
-    * body changed, the plan did not. */
+  /** Per-partition REAL decode over a media table: every still-image
+    * container ([[decodeImageRgb]]'s magic-byte dispatch) parses for
+    * real and reduces to exact channel sums; payloads in none of them are
+    * dropped (the stub pipeline [[extractFeatures]] remains the path for
+    * formats without a JVM codec). Same `mapPartitions` shape as the stub
+    * pipeline — the codec body changed, the plan did not. */
   def imageStats(media: Dataset[MediaRecord]): Dataset[ImageStats] = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
       it.flatMap { r =>
-        decodeBmp(r.payload).orElse(decodePpm(r.payload))
-          .orElse(decodePng(r.payload)).orElse(decodeJpeg(r.payload)).map {
-          case (w, h, sums) =>
-            ImageStats(r.media_id, w, h, 3, sums(0), sums(1), sums(2),
-              w.toLong * h)
+        decodeImageRgb(r.payload).map { case (w, h, rgb) =>
+          val sums = rgbSums(rgb)
+          ImageStats(r.media_id, w, h, 3, sums(0), sums(1), sums(2),
+            w.toLong * h)
         }
       }
     }
@@ -522,7 +480,7 @@ object Multimodal {
   /** Shared encoder core, part 1: filter a `bpp`-byte-per-pixel plane
     * row by row with the `y % 5` filter rotation (the rotation
     * DELIBERATELY emits every filter the spec defines, so round-tripping
-    * through [[decodePng]] proves the whole defilter suite, not just the
+    * through [[decodePngRgb]] proves the whole defilter suite, not just the
     * inverse of one encoder habit). `sample(x, y, channel)` supplies the
     * byte at channel `c < bpp`. */
   private def pngFilterPlane(width: Int, height: Int, bpp: Int,
@@ -607,12 +565,15 @@ object Multimodal {
     ((p(off) & 0xff) << 24) | ((p(off + 1) & 0xff) << 16) |
       ((p(off + 2) & 0xff) << 8) | (p(off + 3) & 0xff)
 
-  /** Parse a non-interlaced 8-bit truecolor PNG to row-major RGB bytes.
+  /** Parse a non-interlaced 8-bit PNG — truecolor, grayscale or indexed
+    * — to its packed 0xRRGGBB plane (row-major, top-down like the file).
     * Real decoding: chunk walk with CRC verification, ancillary chunks
     * skipped, multiple IDATs concatenated, zlib inflate, and the full
-    * five-filter reconstruction. None for anything non-conformant
-    * (wrong magic/depth/color type, interlaced, bad CRC, truncated
-    * stream) — callers fall back, same contract as [[decodeBmp]]. */
+    * five-filter reconstruction. Grayscale surfaces as (v, v, v); an
+    * indexed pixel resolves through PLTE. None for anything
+    * non-conformant (wrong magic/depth/color type, interlaced, bad CRC,
+    * truncated stream, an index past the palette) — callers fall back,
+    * same contract as [[decodeBmpRgb]]. */
   private def decodePngRgb(payload: Array[Byte]): Option[(Int, Int, Array[Int])] = {
     if (payload.length < 8 + 25) return None
     var i = 0
@@ -621,7 +582,7 @@ object Multimodal {
     var width = 0; var height = 0; var seenIhdr = false
     var colorType = 2
     var bpp = 3 // bytes per pixel: 3 (truecolor) or 1 (grayscale/indexed)
-    var palette: Array[Byte] = null
+    var palette: Array[Int] = null // packed PLTE entries
     val idat = new java.io.ByteArrayOutputStream()
     var done = false
     while (!done) {
@@ -648,7 +609,10 @@ object Multimodal {
           // indexed-color lookup table: 1..256 RGB triples, before IDAT
           if (!seenIhdr || palette != null || idat.size() > 0) return None
           if (len == 0 || len % 3 != 0 || len > 768) return None
-          palette = java.util.Arrays.copyOfRange(payload, pos + 8, pos + 8 + len)
+          palette = Array.tabulate(len / 3) { e =>
+            val at = pos + 8 + 3 * e
+            packRgb(payload(at), payload(at + 1), payload(at + 2))
+          }
         case "IDAT" => if (!seenIhdr) return None else idat.write(payload, pos + 8, len)
         case "IEND" => done = true
         case _ => // ancillary chunk: skip
@@ -685,17 +649,21 @@ object Multimodal {
     } catch {
       case _: java.util.zip.DataFormatException => return None
     } finally inf.end()
-    val out = new Array[Int](stride * height)
+    // defilter in place: a row's left neighbours and the row above are
+    // already reconstructed when a byte is read
+    val rowLen = stride + 1
     var y = 0
     while (y < height) {
-      val ft = raw(y * (stride + 1)) & 0xff
+      val row = y * rowLen
+      val ft = raw(row) & 0xff
       if (ft > 4) return None
       var k = 0
       while (k < stride) {
-        val v = raw(y * (stride + 1) + 1 + k) & 0xff
-        val a = if (k >= bpp) out(y * stride + k - bpp) else 0
-        val b = if (y > 0) out((y - 1) * stride + k) else 0
-        val c = if (y > 0 && k >= bpp) out((y - 1) * stride + k - bpp) else 0
+        val p = row + 1 + k
+        val v = raw(p) & 0xff
+        val a = if (k >= bpp) raw(p - bpp) & 0xff else 0
+        val b = if (y > 0) raw(p - rowLen) & 0xff else 0
+        val c = if (y > 0 && k >= bpp) raw(p - rowLen - bpp) & 0xff else 0
         val rec = ft match {
           case 0 => v
           case 1 => v + a
@@ -703,38 +671,30 @@ object Multimodal {
           case 3 => v + ((a + b) >> 1)
           case _ => v + paeth(a, b, c)
         }
-        out(y * stride + k) = rec & 0xff
+        raw(p) = rec.toByte
         k += 1
       }
       y += 1
     }
-    if (bpp == 3) Some((width, height, out))
-    else {
-      // the rawLen guard above only bounds (width+1)*height (bpp=1), so a
-      // conformant huge grayscale/indexed PNG can still overflow the ×3
-      // expansion — decline it like any other unrepresentable payload
-      if (width.toLong * height * 3 > Int.MaxValue - 8) return None
-      val rgb = new Array[Int](width * height * 3)
-      if (colorType == 3) { // indexed: defiltered bytes are PLTE indices
-        val nEntries = palette.length / 3
-        var i2 = 0
-        while (i2 < width * height) {
-          val idx = out(i2)
-          if (idx >= nEntries) return None // out-of-palette index: invalid
-          rgb(3 * i2) = palette(3 * idx) & 0xff
-          rgb(3 * i2 + 1) = palette(3 * idx + 1) & 0xff
-          rgb(3 * i2 + 2) = palette(3 * idx + 2) & 0xff
-          i2 += 1
+    val rgb = new Array[Int](width * height)
+    y = 0
+    while (y < height) {
+      var at = y * rowLen + 1
+      var x = 0
+      while (x < width) {
+        rgb(y * width + x) = colorType match {
+          case 2 => packRgb(raw(at), raw(at + 1), raw(at + 2))
+          case 0 => packRgb(raw(at), raw(at), raw(at))
+          case _ =>
+            val idx = raw(at) & 0xff
+            if (idx >= palette.length) return None // out-of-palette index: invalid
+            palette(idx)
         }
-      } else { // grayscale surfaces through the RGB interface by replication
-        var i2 = 0
-        while (i2 < width * height) {
-          rgb(3 * i2) = out(i2); rgb(3 * i2 + 1) = out(i2); rgb(3 * i2 + 2) = out(i2)
-          i2 += 1
-        }
+        at += bpp; x += 1
       }
-      Some((width, height, rgb))
+      y += 1
     }
+    Some((width, height, rgb))
   }
 
   /** Write a non-interlaced 8-bit GRAYSCALE PNG (color type 0,
@@ -775,33 +735,6 @@ object Multimodal {
     })
     pngAssemble(width, height, colorType = 3, Seq("PLTE" -> plte), raw)
   }
-
-  /** Parse a PNG: (width, height, [rSum, gSum, bSum]) — the decodeBmp
-    * shape, so the stats pipeline treats PNG/BMP/PPM uniformly. */
-  def decodePng(payload: Array[Byte]): Option[(Int, Int, Array[Long])] =
-    decodePngRgb(payload).map { case (w, h, px) =>
-      var rSum = 0L; var gSum = 0L; var bSum = 0L
-      var i = 0
-      while (i < w * h) {
-        rSum += px(3 * i); gSum += px(3 * i + 1); bSum += px(3 * i + 2)
-        i += 1
-      }
-      (w, h, Array(rSum, gSum, bSum))
-    }
-
-  /** Parse a PNG to grayscale (row-major, top-down like the file):
-    * gray = (r+g+b)/3 truncating — the decodeBmpGray shape for aHash
-    * / pooling parity across formats. */
-  def decodePngGray(payload: Array[Byte]): Option[(Int, Int, Array[Int])] =
-    decodePngRgb(payload).map { case (w, h, px) =>
-      val gray = new Array[Int](w * h)
-      var i = 0
-      while (i < w * h) {
-        gray(i) = (px(3 * i) + px(3 * i + 1) + px(3 * i + 2)) / 3
-        i += 1
-      }
-      (w, h, gray)
-    }
 
   // ------------------------------------------------------------------
   // VIDEO: a REAL pure-JVM Y4M (YUV4MPEG2) codec — the uncompressed
@@ -914,24 +847,15 @@ object Multimodal {
   /** Container-dispatched frame decode to GRAY planes — the shared entry
     * for every per-frame video op: Y4M parses its raw luma plane
     * directly; AVI/MJPEG decodes each sampled JFIF frame through the
-    * full JPEG path and collapses to the SAME (r+g+b)/3 gray convention
-    * as the still-image codecs, so a frame's fingerprint depends on its
+    * full JPEG path and collapses it with the stills' [[grayPlane]], so
+    * a frame's fingerprint depends on its
     * pixels, never on its container (the cross-container parity the
     * image path already guarantees between BMP/PNG/JPEG stills). */
   private def decodeVideoGrayFrames(payload: Array[Byte], every: Int)
       : Option[(Int, Int, Int, Seq[(Int, Array[Int])])] =
     decodeY4mFrames(payload, every).orElse(
       decodeAviMjpegFrames(payload, every).map { case (w, h, n, frames) =>
-        (w, h, n, frames.map { case (idx, rgb) =>
-          val gray = new Array[Int](rgb.length)
-          var i = 0
-          while (i < gray.length) {
-            gray(i) = (((rgb(i) >> 16) & 0xff) + ((rgb(i) >> 8) & 0xff) +
-              (rgb(i) & 0xff)) / 3
-            i += 1
-          }
-          (idx, gray)
-        })
+        (w, h, n, frames.map { case (idx, rgb) => (idx, grayPlane(rgb)) })
       })
 
   /** Frame-sample + fingerprint: decode the video payload (Y4M or
@@ -1370,7 +1294,7 @@ object Multimodal {
 
   /** Per-sampled-frame channel sums — [[imageStats]] with a frame axis,
     * through either real video container: AVI/MJPEG sums the decoded
-    * RGB; Y4M (mono) reports its luma sum in all three channels (gray
+    * plane with [[rgbSums]]; Y4M (mono) reports its luma sum in all three channels (gray
     * pixels ARE (v,v,v)). Map-only, same decode boundary as every other
     * codec op. */
   case class VideoFrameStats(media_id: Long, n_frames: Int, frame_idx: Int,
@@ -1383,14 +1307,8 @@ object Multimodal {
       it.flatMap { r =>
         decodeAviMjpegFrames(r.payload, every).map { case (w, h, n, frames) =>
           frames.map { case (idx, rgb) =>
-            var rs = 0L; var gs = 0L; var bs = 0L
-            var i = 0
-            while (i < rgb.length) {
-              rs += (rgb(i) >> 16) & 0xff; gs += (rgb(i) >> 8) & 0xff
-              bs += rgb(i) & 0xff
-              i += 1
-            }
-            VideoFrameStats(r.media_id, n, idx, w, h, rs, gs, bs)
+            val sums = rgbSums(rgb)
+            VideoFrameStats(r.media_id, n, idx, w, h, sums(0), sums(1), sums(2))
           }
         }.orElse(decodeY4mFrames(r.payload, every).map { case (w, h, n, frames) =>
           frames.map { case (idx, gray) =>
@@ -1457,7 +1375,8 @@ object Multimodal {
     * None for anything else (wrong magic, compressed, multi-channel,
     * truncated). Walks the chunk list — `fmt ` and `data` may appear in
     * any order with unknown chunks (LIST, fact, ...) between them, and
-    * odd-sized chunks carry a pad byte, both per the RIFF spec. */
+    * odd-sized chunks carry a pad byte, both per the RIFF spec.
+    * Test-only: backs COVERAGE.md's "Real WAV/PCM16 audio codec" row. */
   def decodeWavPcm16(payload: Array[Byte]): Option[(Int, Array[Short])] = {
     if (payload.length < 44) return None
     val b = java.nio.ByteBuffer.wrap(payload).order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -1565,8 +1484,9 @@ object Multimodal {
     * (WAVEFORMATEX, public Microsoft/IBM spec): PCM 16-bit signed,
     * PCM 8-bit unsigned (normalized `(v−128)·256`), mu-law
     * (wFormatTag 7, 8-bit, G.711 expand), and A-law (wFormatTag 6,
-    * 8-bit) — each at 1..8 interleaved channels. Everything else (float, 24-bit, A-law, bad block align,
-    * partial final frame, truncation) returns None, same conformance
+    * 8-bit) — each at 1..8 interleaved channels. Everything else (float,
+    * 24-bit, any other wFormatTag, bad block align, partial final frame,
+    * truncation) returns None, same conformance
     * posture as the rest of the codec layer. The de-mux keeps the
     * per-channel (rate, samples-per-channel) contract so every channel
     * runs through the audio battery exactly like a mono WAV. */
@@ -1946,6 +1866,10 @@ object Multimodal {
     }
     codes
   }
+  private val jpegDcLumaCodes = jpegCodes(jpegDcLumaBits, jpegDcLumaVals)
+  private val jpegAcLumaCodes = jpegCodes(jpegAcLumaBits, jpegAcLumaVals)
+  private val jpegDcChromaCodes = jpegCodes(jpegDcChromaBits, jpegDcChromaVals)
+  private val jpegAcChromaCodes = jpegCodes(jpegAcChromaBits, jpegAcChromaVals)
 
   private def jpegCategory(v: Int): Int = {
     var a = math.abs(v); var s = 0
@@ -2013,30 +1937,58 @@ object Multimodal {
     out
   }
 
-  /** Encode one quantized block (zig-zag coefficients) with the given DC
-    * and AC code tables; returns the new DC predictor. */
-  private def jpegEncodeBlock(w: JpegBitWriter, zz: Array[Int], dcPred: Int,
-                              dc: Array[(Int, Int)], ac: Array[(Int, Int)]): Int = {
-    val diff = zz(0) - dcPred
+  /** Huffman-code one DC difference: its category symbol from `dc`,
+    * then its magnitude bits. */
+  private def jpegPutDc(w: JpegBitWriter, diff: Int, dc: Array[(Int, Int)]): Unit = {
     val s = jpegCategory(diff)
-    val (dcode, dlen) = dc(s)
-    w.put(dcode, dlen)
+    val (code, len) = dc(s)
+    w.put(code, len)
     if (s > 0) w.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-    var k = 1; var run = 0
-    while (k < 64) {
+  }
+
+  /** Huffman-code the zig-zag band [ss, se] of one quantized block:
+    * (run, size) symbols from `ac` with their magnitude bits, ZRL per 16
+    * zeros before a nonzero, EOB after a trailing zero run — the AC coding
+    * of the baseline scan (band 1..63) and of every progressive AC-first
+    * scan alike. */
+  private def jpegPutAc(w: JpegBitWriter, zz: Array[Int], ss: Int, se: Int,
+                        ac: Array[(Int, Int)]): Unit = {
+    var k = ss; var run = 0
+    while (k <= se) {
       if (zz(k) == 0) run += 1
       else {
         while (run >= 16) { val (zc, zl) = ac(0xf0); w.put(zc, zl); run -= 16 }
-        val sz = jpegCategory(zz(k))
-        val (c, l) = ac((run << 4) | sz)
-        w.put(c, l)
-        w.put(if (zz(k) < 0) zz(k) + (1 << sz) - 1 else zz(k), sz)
+        val s = jpegCategory(zz(k))
+        val (code, len) = ac((run << 4) | s)
+        w.put(code, len)
+        w.put(if (zz(k) < 0) zz(k) + (1 << s) - 1 else zz(k), s)
         run = 0
       }
       k += 1
     }
     if (run > 0) { val (ec, el) = ac(0x00); w.put(ec, el) } // EOB
-    zz(0)
+  }
+
+  /** `pixel(x, y)` with each channel taken mod 256 (negatives wrap like a
+    * byte) — the input rule of every RGB JFIF writer. */
+  private def rgbMod256(pixel: (Int, Int) => (Int, Int, Int))(x: Int, y: Int): (Int, Int, Int) = {
+    val (r, g, b) = pixel(x, y)
+    (r & 0xff, g & 0xff, b & 0xff)
+  }
+
+  /** The byte sink of every JFIF writer: big-endian u16s, two-byte
+    * markers and scan headers. */
+  private final class JfifOut extends java.io.ByteArrayOutputStream {
+    def u16(v: Int): Unit = { write((v >> 8) & 0xff); write(v & 0xff) }
+    def marker(m: Int): Unit = { write(0xff); write(m) }
+    /** SOS over `comps` (component 0 on table 0, chroma on table 1),
+      * spectral band [ss, se], successive approximation `ah`/`al`. */
+    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
+      marker(0xda); u16(6 + 2 * comps.length)
+      write(comps.length)
+      comps.foreach { c => write(c + 1); write(if (c == 0) 0x00 else 0x11) }
+      write(ss); write(se); write((ah << 4) | al)
+    }
   }
 
   /** Write a baseline JFIF file: 8-bit, `pixel(x, y)` -> (r, g, b) taken
@@ -2048,9 +2000,7 @@ object Multimodal {
   def encodeJpeg(width: Int, height: Int,
                  pixel: (Int, Int) => (Int, Int, Int)): Array[Byte] =
     encodeJpegPlanes(width, height, 3, (x, y) => {
-      val (r0, g0, b0) = pixel(x, y)
-      val (r, g, b) = (((r0 % 256) + 256) % 256, ((g0 % 256) + 256) % 256,
-        ((b0 % 256) + 256) % 256)
+      val (r, g, b) = rgbMod256(pixel)(x, y)
       Array(jpegRgbToY(r, g, b), jpegRgbToCb(r, g, b), jpegRgbToCr(r, g, b))
     })
 
@@ -2058,19 +2008,18 @@ object Multimodal {
   def encodeJpegGray(width: Int, height: Int,
                      gray: (Int, Int) => Int): Array[Byte] =
     encodeJpegPlanes(width, height, 1,
-      (x, y) => Array(((gray(x, y) % 256) + 256) % 256))
+      (x, y) => Array(gray(x, y) & 0xff))
 
   /** JFIF prologue shared by EVERY writer (baseline 4:4:4 / 4:2:0 via
     * [[JpegEncoder]], progressive via [[encodeJpegProgressive]]):
     * SOI/APP0/DQT/SOF(`sofMarker`)/DHTs — one definition, so a quant- or
     * Huffman-table change can never diverge the encoders (the r12 lesson
     * that created the shared core, extended to the SOF2 writer). */
-  private def jpegWriteJfifPrologue(out: java.io.ByteArrayOutputStream,
+  private def jpegWriteJfifPrologue(out: JfifOut,
                                     width: Int, height: Int, nComp: Int,
                                     sampling: Array[Int],
                                     sofMarker: Int): Unit = {
-    def u16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
+    import out.{marker, u16}
     marker(0xd8) // SOI
     marker(0xe0); u16(16) // APP0 JFIF
     out.write(Array('J', 'F', 'I', 'F', 0).map(_.toByte)); out.write(1); out.write(1)
@@ -2114,23 +2063,11 @@ object Multimodal {
     * diverged). */
   private final class JpegEncoder(width: Int, height: Int, nComp: Int,
                                   sampling: Array[Int]) {
-    private val out = new java.io.ByteArrayOutputStream()
-    private def u16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    private def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
+    private val out = new JfifOut
     locally {
       jpegWriteJfifPrologue(out, width, height, nComp, sampling, 0xc0)
-      marker(0xda); u16(6 + 2 * nComp) // SOS: baseline single full scan
-      out.write(nComp)
-      for (c <- 0 until nComp) {
-        out.write(c + 1)
-        out.write(if (c == 0) 0x00 else 0x11)
-      }
-      out.write(0); out.write(63); out.write(0)
+      out.sos(0 until nComp, 0, 63, 0, 0) // baseline: one full scan
     }
-    private val dcLuma = jpegCodes(jpegDcLumaBits, jpegDcLumaVals)
-    private val acLuma = jpegCodes(jpegAcLumaBits, jpegAcLumaVals)
-    private val dcChroma = jpegCodes(jpegDcChromaBits, jpegDcChromaVals)
-    private val acChroma = jpegCodes(jpegAcChromaBits, jpegAcChromaVals)
     private val bw = new JpegBitWriter(out)
     private val dcPred = new Array[Int](nComp)
     private val block = new Array[Double](64)
@@ -2148,12 +2085,13 @@ object Multimodal {
         yy += 1
       }
       jpegQuantizedZigzag(block, zz)
-      dcPred(c) = jpegEncodeBlock(bw, zz, dcPred(c),
-        if (c == 0) dcLuma else dcChroma, if (c == 0) acLuma else acChroma)
+      jpegPutDc(bw, zz(0) - dcPred(c), if (c == 0) jpegDcLumaCodes else jpegDcChromaCodes)
+      jpegPutAc(bw, zz, 1, 63, if (c == 0) jpegAcLumaCodes else jpegAcChromaCodes)
+      dcPred(c) = zz(0)
     }
     def finish(): Array[Byte] = {
       bw.flush()
-      marker(0xd9) // EOI
+      out.marker(0xd9) // EOI
       out.toByteArray
     }
   }
@@ -2205,10 +2143,8 @@ object Multimodal {
   def encodeJpeg420(width: Int, height: Int,
                     pixel: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
     require(width > 0 && height > 0, s"need positive dims, got $width x $height")
-    def rgbAt(x: Int, y: Int): (Int, Int, Int) = {
-      val (r0, g0, b0) = pixel(math.min(x, width - 1), math.min(y, height - 1))
-      (((r0 % 256) + 256) % 256, ((g0 % 256) + 256) % 256, ((b0 % 256) + 256) % 256)
-    }
+    def rgbAt(x: Int, y: Int): (Int, Int, Int) =
+      rgbMod256(pixel)(math.min(x, width - 1), math.min(y, height - 1))
     def yAt(x: Int, y: Int): Int = {
       val (r, g, b) = rgbAt(x, y); jpegRgbToY(r, g, b)
     }
@@ -2282,9 +2218,7 @@ object Multimodal {
         while (i < 64) {
           val sx = math.min(bx * 8 + i % 8, width - 1)
           val sy = math.min(by * 8 + i / 8, height - 1)
-          val (r0, g0, b0) = pixel(sx, sy)
-          val (r, g, bl) = (((r0 % 256) + 256) % 256, ((g0 % 256) + 256) % 256,
-            ((b0 % 256) + 256) % 256)
+          val (r, g, bl) = rgbMod256(pixel)(sx, sy)
           block(i) = (c match {
             case 0 => jpegRgbToY(r, g, bl)
             case 1 => jpegRgbToCb(r, g, bl)
@@ -2297,25 +2231,10 @@ object Multimodal {
       }
       b += 1
     }
-    val out = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
+    val out = new JfifOut
     jpegWriteJfifPrologue(out, width, height, 3, Array.fill(3)(0x11), 0xc2)
-    val dcLuma = jpegCodes(jpegDcLumaBits, jpegDcLumaVals)
-    val acLuma = jpegCodes(jpegAcLumaBits, jpegAcLumaVals)
-    val dcChroma = jpegCodes(jpegDcChromaBits, jpegDcChromaVals)
-    val acChroma = jpegCodes(jpegAcChromaBits, jpegAcChromaVals)
-    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      marker(0xda); u16(6 + 2 * comps.length)
-      out.write(comps.length)
-      comps.foreach { c =>
-        out.write(c + 1)
-        out.write(if (c == 0) 0x00 else 0x11)
-      }
-      out.write(ss); out.write(se); out.write((ah << 4) | al)
-    }
     // scan 1: DC first, interleaved, Al=1 (point-transformed diffs)
-    sos(Seq(0, 1, 2), 0, 0, 0, 1)
+    out.sos(Seq(0, 1, 2), 0, 0, 0, 1)
     locally {
       val bw = new JpegBitWriter(out)
       val pred = new Array[Int](3)
@@ -2324,11 +2243,8 @@ object Multimodal {
         var c = 0
         while (c < 3) {
           val v = zz(c)(blk)(0) >> 1 // DC point transform: arithmetic shift
-          val diff = v - pred(c); pred(c) = v
-          val s = jpegCategory(diff)
-          val (code, clen) = (if (c == 0) dcLuma else dcChroma)(s)
-          bw.put(code, clen)
-          if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
+          jpegPutDc(bw, v - pred(c), if (c == 0) jpegDcLumaCodes else jpegDcChromaCodes)
+          pred(c) = v
           c += 1
         }
         blk += 1
@@ -2337,28 +2253,11 @@ object Multimodal {
     }
     // AC spectral-selection scans, Al=0 (exact coefficients)
     def acScan(c: Int, ss: Int, se: Int): Unit = {
-      sos(Seq(c), ss, se, 0, 0)
+      out.sos(Seq(c), ss, se, 0, 0)
       val bw = new JpegBitWriter(out)
-      val ac = if (c == 0) acLuma else acChroma
+      val ac = if (c == 0) jpegAcLumaCodes else jpegAcChromaCodes
       var blk = 0
-      while (blk < nB) {
-        val z = zz(c)(blk)
-        var k = ss; var run = 0
-        while (k <= se) {
-          if (z(k) == 0) run += 1
-          else {
-            while (run >= 16) { val (zc, zl) = ac(0xf0); bw.put(zc, zl); run -= 16 }
-            val s = jpegCategory(z(k))
-            val (code, clen) = ac((run << 4) | s)
-            bw.put(code, clen)
-            bw.put(if (z(k) < 0) z(k) + (1 << s) - 1 else z(k), s)
-            run = 0
-          }
-          k += 1
-        }
-        if (run > 0) { val (ec, el) = ac(0x00); bw.put(ec, el) } // EOB
-        blk += 1
-      }
+      while (blk < nB) { jpegPutAc(bw, zz(c)(blk), ss, se, ac); blk += 1 }
       bw.flush()
     }
     acScan(0, 1, 5)
@@ -2366,7 +2265,7 @@ object Multimodal {
     acScan(2, 1, 63)
     acScan(0, 6, 63)
     // DC refinement: the Al=1 bit, raw (no Huffman), interleaved
-    sos(Seq(0, 1, 2), 0, 0, 1, 0)
+    out.sos(Seq(0, 1, 2), 0, 0, 1, 0)
     locally {
       val bw = new JpegBitWriter(out)
       var blk = 0
@@ -2377,7 +2276,7 @@ object Multimodal {
       }
       bw.flush()
     }
-    marker(0xd9) // EOI
+    out.marker(0xd9) // EOI
     out.toByteArray
   }
 
@@ -2787,17 +2686,16 @@ object Multimodal {
     while (y < height) {
       var x = 0
       while (x < width) {
-        val (r, g, b) =
-          if (nComp == 1) { val v = planes(0)(y * planeW(0) + x) & 0xff; (v, v, v) }
+        rgb(y * width + x) =
+          if (nComp == 1) { val v = planes(0)(y * planeW(0) + x); packRgb(v, v, v) }
           else {
             val yv = planes(0)(y * planeW(0) + x) & 0xff
             val cbx = x * compH(1) / hMax; val cby = y * compV(1) / vMax
             val crx = x * compH(2) / hMax; val cry = y * compV(2) / vMax
             val cb = planes(1)(cby * planeW(1) + cbx) & 0xff
             val cr = planes(2)(cry * planeW(2) + crx) & 0xff
-            (jpegYccToR(yv, cr), jpegYccToG(yv, cb, cr), jpegYccToB(yv, cb))
+            packRgb(jpegYccToR(yv, cr), jpegYccToG(yv, cb, cr), jpegYccToB(yv, cb))
           }
-        rgb(y * width + x) = (r << 16) | (g << 8) | b
         x += 1
       }
       y += 1
@@ -3067,31 +2965,4 @@ object Multimodal {
     jpegComposeRgb(width, height, nComp, planes, planeW, compH, compV,
       hMax, vMax)
   }
-
-  /** Per-channel pixel sums of a baseline JPEG (the [[imageStats]]
-    * contract shared with BMP/PPM/PNG). */
-  def decodeJpeg(payload: Array[Byte]): Option[(Int, Int, Array[Long])] =
-    decodeJpegRgb(payload).map { case (w, h, rgb) =>
-      var r = 0L; var g = 0L; var b = 0L
-      var i = 0
-      while (i < rgb.length) {
-        r += (rgb(i) >> 16) & 0xff; g += (rgb(i) >> 8) & 0xff; b += rgb(i) & 0xff
-        i += 1
-      }
-      (w, h, Array(r, g, b))
-    }
-
-  /** Grayscale plane of a baseline JPEG — same (r+g+b)/3 convention as
-    * [[decodeBmpGray]]/[[decodePpmGray]]/[[decodePngGray]]. */
-  def decodeJpegGray(payload: Array[Byte]): Option[(Int, Int, Array[Int])] =
-    decodeJpegRgb(payload).map { case (w, h, rgb) =>
-      val gray = new Array[Int](w * h)
-      var i = 0
-      while (i < gray.length) {
-        gray(i) = (((rgb(i) >> 16) & 0xff) + ((rgb(i) >> 8) & 0xff) +
-          (rgb(i) & 0xff)) / 3
-        i += 1
-      }
-      (w, h, gray)
-    }
 }

@@ -2780,7 +2780,7 @@ object LlmQueries {
     // Multimodal REAL decode: payloads are spec-conformant 24-bit BMPs
     // synthesized from pixel FORMULAS (encodeBmp writes real headers,
     // BGR bottom-up rows, 4-byte padding), parsed back by the pure-JVM
-    // decodeBmp, and the oracle verifies the decoded dimensions and
+    // decodeBmpRgb, and the oracle verifies the decoded dimensions and
     // EXACT per-channel pixel sums by evaluating the same formulas
     // arithmetically — byte-level encode→decode round-trips through a
     // real file format, value-checked cross-engine without the oracle
@@ -2805,7 +2805,7 @@ object LlmQueries {
     // through a COMPRESSED container — encodePng writes spec-conformant
     // non-interlaced 8-bit truecolor files (zlib IDAT, CRC-checked
     // chunks, and a per-row rotation through ALL FIVE scanline filters:
-    // None/Sub/Up/Average/Paeth), decodePng inflates and runs the full
+    // None/Sub/Up/Average/Paeth), decodePngRgb inflates and runs the full
     // defilter reconstruction, and the oracle replays the pixel algebra
     // arithmetically. Green here means a real compressed image format
     // round-trips byte→pixels in-engine with values proven cross-engine.
@@ -3031,7 +3031,7 @@ object LlmQueries {
               |${repPairsSql("hb", "ahash")}""".stripMargin)),
 
     // REAL baseline-JPEG decode (huffman + IDCT + fixed-point YCbCr<->RGB,
-    // Multimodal.decodeJpeg): color payloads whose channels are CONSTANT
+    // Multimodal.decodeJpegRgb): color payloads whose channels are CONSTANT
     // per 8x8 block, so the DCT path round-trips bit-exactly (AC = 0,
     // DC quant 1) and the oracle replays the exact integer color
     // conversions in SQL — same analytic-oracle contract as

@@ -704,6 +704,13 @@ class LlmSpec extends SparkSpec {
     assert(packed == packed2)
   }
 
+  // Per-format reductions composed from the one image dispatch: the
+  // decoded plane's channel sums and its gray plane.
+  private def sumsOf(bytes: Array[Byte]): Option[(Int, Int, Array[Long])] =
+    Multimodal.decodeImageRgb(bytes).map { case (w, h, rgb) => (w, h, Multimodal.rgbSums(rgb)) }
+  private def grayOf(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
+    Multimodal.decodeImageRgb(bytes).map { case (w, h, rgb) => (w, h, Multimodal.grayPlane(rgb)) }
+
   test("multimodal BMP codec: encode/decode round-trips exactly, incl. row padding") {
     // w=9 → 27-byte rows padded to 28: the padding path must not leak
     // pad bytes into the channel sums
@@ -711,7 +718,7 @@ class LlmSpec extends SparkSpec {
     val bytes = Multimodal.encodeBmp(9, 4, px)
     assert(bytes(0) == 'B'.toByte && bytes(1) == 'M'.toByte)
     assert(bytes.length == 54 + 28 * 4)
-    val Some((w, h, sums)) = Multimodal.decodeBmp(bytes)
+    val Some((w, h, sums)) = sumsOf(bytes)
     assert(w == 9 && h == 4)
     val expect = for (x <- 0 until 9; y <- 0 until 4) yield px(x, y)
     assert(sums(0) == expect.map(_._1 % 256).sum.toLong)
@@ -724,23 +731,23 @@ class LlmSpec extends SparkSpec {
     // flip to top-down: height field at offset 22, little-endian
     val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb.putInt(22, -3)
-    val Some((w, h, sums)) = Multimodal.decodeBmp(bytes)
+    val Some((w, h, sums)) = sumsOf(bytes)
     assert(w == 5 && h == 3 && sums(0) == 30L) // Σx over 5x3 grid = 10*3
-    assert(Multimodal.decodeBmp("not a bitmap at all, sorry".getBytes).isEmpty)
-    assert(Multimodal.decodeBmp(bytes.take(40)).isEmpty) // truncated header
-    assert(Multimodal.decodeBmp(bytes.take(60)).isEmpty) // truncated pixels
+    assert(sumsOf("not a bitmap at all, sorry".getBytes).isEmpty)
+    assert(sumsOf(bytes.take(40)).isEmpty) // truncated header
+    assert(sumsOf(bytes.take(60)).isEmpty) // truncated pixels
   }
 
   test("multimodal PPM codec: round-trip with comment header; imageStats dispatches by magic") {
     val px = (x: Int, y: Int) => (x + 1, y + 2, 7)
     val ppm = Multimodal.encodePpm(4, 2, px)
-    val Some((w, h, sums)) = Multimodal.decodePpm(ppm)
+    val Some((w, h, sums)) = sumsOf(ppm)
     assert(w == 4 && h == 2 && sums(2) == 7L * 8)
     // netpbm comments between header tokens must be skipped
     val commented = ("P6\n# a comment\n4 2\n# another\n255\n").getBytes("US-ASCII") ++
       ppm.drop("P6\n4 2\n255\n".getBytes("US-ASCII").length)
-    assert(Multimodal.decodePpm(commented).contains((4, 2, sums)) ||
-      Multimodal.decodePpm(commented).exists(t => t._1 == 4 && t._2 == 2
+    assert(sumsOf(commented).contains((4, 2, sums)) ||
+      sumsOf(commented).exists(t => t._1 == 4 && t._2 == 2
         && t._3.sameElements(sums)))
     // mixed table: one BMP, one PPM, one garbage — stats keeps the two real ones
     val media = Seq(
@@ -760,29 +767,29 @@ class LlmSpec extends SparkSpec {
     val png = Multimodal.encodePng(9, 11, px)
     assert(png.take(8).map(_ & 0xff).toSeq ==
       Seq(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a))
-    val Some((w, h, sums)) = Multimodal.decodePng(png)
+    val Some((w, h, sums)) = sumsOf(png)
     assert(w == 9 && h == 11)
     val expect = for (x <- 0 until 9; y <- 0 until 11) yield px(x, y)
     assert(sums(0) == expect.map(_._1).sum.toLong)
     assert(sums(1) == expect.map(_._2).sum.toLong)
     assert(sums(2) == expect.map(_._3).sum.toLong)
     // grayscale path: exact pixel-by-pixel reconstruction, top-down
-    val Some((gw, gh, gray)) = Multimodal.decodePngGray(png)
+    val Some((gw, gh, gray)) = grayOf(png)
     assert(gw == 9 && gh == 11)
     for (x <- 0 until 9; y <- 0 until 11) {
       val (r, g, b) = px(x, y)
       assert(gray(y * 9 + x) == (r + g + b) / 3, s"pixel ($x,$y)")
     }
     // conformance: junk, truncation, and a flipped payload byte (CRC) reject
-    assert(Multimodal.decodePng("definitely not a png".getBytes).isEmpty)
-    assert(Multimodal.decodePng(png.take(30)).isEmpty)
+    assert(sumsOf("definitely not a png".getBytes).isEmpty)
+    assert(sumsOf(png.take(30)).isEmpty)
     val corrupt = png.clone()
     corrupt(50) = (corrupt(50) ^ 0x5a).toByte // inside IDAT payload
-    assert(Multimodal.decodePng(corrupt).isEmpty, "CRC mismatch must reject")
+    assert(sumsOf(corrupt).isEmpty, "CRC mismatch must reject")
     // 1x1 edge case
     val tiny = Multimodal.encodePng(1, 1, (_, _) => (200, 100, 50))
-    assert(Multimodal.decodePng(tiny).contains((1, 1, Array(200L, 100L, 50L))) ||
-      Multimodal.decodePng(tiny).exists(t => t._3.toSeq == Seq(200L, 100L, 50L)))
+    assert(sumsOf(tiny).contains((1, 1, Array(200L, 100L, 50L))) ||
+      sumsOf(tiny).exists(t => t._3.toSeq == Seq(200L, 100L, 50L)))
   }
 
   test("multimodal JPEG codec: block-constant round-trips bit-exactly; ImageIO agrees; conformance rejects") {
@@ -813,7 +820,7 @@ class LlmSpec extends SparkSpec {
     // (v, 128, 128) with zero chroma error — the cross-format dup basis)
     def tile(x: Int, y: Int): Int =
       if (((x / 8) * 3 + (y / 8) * 5) % 2 == 0) 40 else 216
-    val Some((_, _, gray)) = decodeJpegGray(encodeJpegGray(64, 48, tile)): @unchecked
+    val Some((_, _, gray)) = grayOf(encodeJpegGray(64, 48, tile)): @unchecked
     for (y <- 0 until 48; x <- 0 until 64)
       assert(gray(y * 64 + x) == tile(x, y), s"gray pixel ($x,$y)")
     // independent-decoder cross-check on a NON-constant image: the JDK's
@@ -1007,12 +1014,12 @@ class LlmSpec extends SparkSpec {
   test("multimodal PNG grayscale (color type 0): bpp=1 defilter round-trips; surfaces as replicated RGB") {
     val px = (x: Int, y: Int) => (x * 13 + y * 7) % 256
     val png = Multimodal.encodePngGray(7, 11, px) // 11 rows -> all 5 filters
-    val Some((w, h, sums)) = Multimodal.decodePng(png)
+    val Some((w, h, sums)) = sumsOf(png)
     assert(w == 7 && h == 11)
     val expect = (for (x <- 0 until 7; y <- 0 until 11) yield px(x, y)).sum.toLong
     assert(sums(0) == expect && sums(1) == expect && sums(2) == expect,
       "grayscale must replicate into all three channels")
-    val Some((_, _, gray)) = Multimodal.decodePngGray(png)
+    val Some((_, _, gray)) = grayOf(png)
     for (x <- 0 until 7; y <- 0 until 11)
       assert(gray(y * 7 + x) == px(x, y), s"pixel ($x,$y)")
     // a grayscale PNG and a truecolor PNG of the same gray image hash equal
@@ -1031,7 +1038,7 @@ class LlmSpec extends SparkSpec {
     val pal = (e: Int) => ((e * 3 + 1) % 256, (e * 7 + 2) % 256, (e * 11 + 5) % 256)
     val idx = (x: Int, y: Int) => (x * 5 + y * 9) % 16
     val png = Multimodal.encodePngPalette(7, 11, 16, pal, idx) // all 5 filters
-    val Some((w, h, sums)) = Multimodal.decodePng(png)
+    val Some((w, h, sums)) = sumsOf(png)
     assert(w == 7 && h == 11)
     val expect = for (x <- 0 until 7; y <- 0 until 11) yield pal(idx(x, y))
     assert(sums(0) == expect.map(_._1).sum.toLong)
@@ -1039,7 +1046,7 @@ class LlmSpec extends SparkSpec {
     assert(sums(2) == expect.map(_._3).sum.toLong)
     // an indexed PNG and the truecolor PNG of the SAME image decode equal
     val rgbTwin = Multimodal.encodePng(7, 11, (x, y) => pal(idx(x, y)))
-    assert(Multimodal.decodePng(rgbTwin).map(_._3.toSeq) == Some(sums.toSeq))
+    assert(sumsOf(rgbTwin).map(_._3.toSeq) == Some(sums.toSeq))
     // out-of-palette index must reject, not crash or wrap: palette of 8
     // entries but index bytes up to 15
     val narrow = Multimodal.encodePngPalette(4, 4, 16, pal, (x, y) => 8 + (x + y) % 8)
@@ -1058,11 +1065,105 @@ class LlmSpec extends SparkSpec {
     val crcBytes = java.nio.ByteBuffer.allocate(4).putInt(crc.getValue.toInt).array()
     val truncated = before ++ lenBytes ++ "PLTE".getBytes("US-ASCII") ++
       plteData ++ crcBytes ++ after
-    assert(Multimodal.decodePng(truncated).isEmpty,
+    assert(sumsOf(truncated).isEmpty,
       "indices beyond the palette must reject")
     // missing PLTE entirely must reject
     val noPlte = before ++ after
-    assert(Multimodal.decodePng(noPlte).isEmpty, "color type 3 without PLTE must reject")
+    assert(sumsOf(noPlte).isEmpty, "color type 3 without PLTE must reject")
+  }
+
+  test("multimodal image plane: every container decodes the same pixels to the identical plane") {
+    import Multimodal._
+    val (w, h) = (13, 11) // BMP rows pad 39 -> 40 bytes; JPEG pads to 16x16
+    def packed(px: (Int, Int) => (Int, Int, Int)): Seq[Int] =
+      for (y <- 0 until h; x <- 0 until w) yield {
+        val (r, g, b) = px(x, y); (r << 16) | (g << 8) | b
+      }
+    /** `encodeBmp`'s bottom-up file rewritten top-down: rows reversed,
+      * height negated. */
+    def topDownBmp(px: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
+      val up = encodeBmp(w, h, px)
+      val rowSize = (w * 3 + 3) / 4 * 4
+      val down = up.take(54) ++ (h - 1 to 0 by -1).flatMap(r =>
+        up.slice(54 + r * rowSize, 54 + (r + 1) * rowSize))
+      java.nio.ByteBuffer.wrap(down).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(22, -h)
+      down
+    }
+    def planes(files: Seq[(String, Array[Byte])]): Map[String, Option[(Int, Int, Seq[Int])]] =
+      files.map { case (k, bytes) =>
+        k -> decodeImageRgb(bytes).map { case (dw, dh, rgb) => (dw, dh, rgb.toSeq) }
+      }.toMap
+    // color pixels, 16 distinct colors: channel order and row order show
+    val pal = (e: Int) => ((e * 37 + 5) % 256, (e * 91 + 17) % 256, (e * 53 + 200) % 256)
+    val idx = (x: Int, y: Int) => (x * 3 + y * 5) % 16
+    val color = (x: Int, y: Int) => pal(idx(x, y))
+    val colorPlanes = planes(Seq(
+      "bmp" -> encodeBmp(w, h, color), "bmp top-down" -> topDownBmp(color),
+      "ppm" -> encodePpm(w, h, color), "png" -> encodePng(w, h, color),
+      "png palette" -> encodePngPalette(w, h, 16, pal, idx)))
+    colorPlanes.foreach { case (k, p) =>
+      assert(p.contains((w, h, packed(color))), s"color plane through $k")
+    }
+    // gray pixels constant per 8x8 block: the JPEG paths are exact too
+    val v = (x: Int, y: Int) => ((x / 8) * 97 + (y / 8) * 61 + 20) % 256
+    val gray = (x: Int, y: Int) => (v(x, y), v(x, y), v(x, y))
+    val grayPlanes = planes(Seq(
+      "bmp" -> encodeBmp(w, h, gray), "bmp top-down" -> topDownBmp(gray),
+      "ppm" -> encodePpm(w, h, gray), "png" -> encodePng(w, h, gray),
+      "png gray" -> encodePngGray(w, h, v),
+      "png palette" -> encodePngPalette(w, h, 256, e => (e, e, e), v),
+      "jpeg" -> encodeJpeg(w, h, gray), "jpeg gray" -> encodeJpegGray(w, h, v),
+      "jpeg 4:2:0" -> encodeJpeg420(w, h, gray),
+      "jpeg progressive" -> encodeJpegProgressive(w, h, gray)))
+    grayPlanes.foreach { case (k, p) =>
+      assert(p.contains((w, h, packed(gray))), s"gray plane through $k")
+    }
+    // the reductions over that one plane
+    val one = packed(color).toArray
+    assert(rgbSums(one).toSeq == Seq(0, 1, 2).map(c =>
+      (for (y <- 0 until h; x <- 0 until w) yield color(x, y).productElement(c)
+        .asInstanceOf[Int].toLong).sum))
+    assert(grayPlane(one).toSeq == (for (y <- 0 until h; x <- 0 until w)
+      yield { val (r, g, b) = color(x, y); (r + g + b) / 3 }))
+  }
+
+  test("multimodal BMP codec: a header whose geometry wraps Int declines to None") {
+    val bmp = Multimodal.encodeBmp(5, 3, (x, y) => (x, y, x + y))
+    def withHeader(width: Int, height: Int): Array[Byte] = {
+      val b = bmp.clone()
+      java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(18, width).putInt(22, height)
+      b
+    }
+    // width * 3 wraps negative: the Int row size slipped past the size guard
+    assert(Multimodal.decodeImageRgb(withHeader(0x2aaaaaab, 1)).isEmpty)
+    // abs(Int.MinValue) stays negative: the Int height slipped past it too
+    assert(Multimodal.decodeImageRgb(withHeader(5, Int.MinValue)).isEmpty)
+    val media = Seq(Multimodal.MediaRecord(1L, withHeader(1, Int.MinValue), "image/bmp")).toDS()
+    assert(Multimodal.imageStats(media).collect().isEmpty)
+  }
+
+  test("source lock: Multimodal.scala has one BMP parse, one P6 header walk, one gray rule and one image dispatch") {
+    val file = new java.io.File("src/main/scala/graft/llm/Multimodal.scala")
+    assert(file.isFile, s"run from the project root (no ${file.getAbsolutePath})")
+    val src = { val s = scala.io.Source.fromFile(file, "UTF-8"); try s.mkString finally s.close() }
+    def count(regex: String): Int = regex.r.findAllIn(src).size
+    val once = Seq(
+      "BMP 'B' 'M' magic check" -> """payload\(0\) != 'B'""",
+      "P6 header walk" -> """payload\(1\) != '6'""",
+      "P6 header token reader" -> """def nextInt\(""",
+      "gray rule over a pixel triple" -> """\) / 3\b""",
+      "per-channel sum" -> """\w+ \+= \(\w+(?:\(\w+\))? >> 16\) & 0xff""",
+      "image dispatch chain" -> """decodeBmpRgb\(payload\)\.orElse""")
+    once.foreach { case (what, regex) =>
+      assert(count(regex) == 1, s"$what is written ${count(regex)} times; go through the one definition")
+    }
+    // each container's decoder is defined once and called only by the dispatch
+    Seq("decodeBmpRgb", "decodePpmRgb", "decodePngRgb").foreach { d =>
+      assert(count(d + """\(""") == 2, s"$d: one definition, one call (the dispatch)")
+    }
+    val removed = """def decode(?:Bmp|Ppm|Png|Jpeg)(?:Gray)?\("""
+    assert(count(removed) == 0, "per-format sum/gray decoders are folded into decodeImageRgb")
   }
 
   test("multimodal Y4M video: round-trip, every-k sampling, frame/still hash parity, conformance rejects") {

@@ -127,6 +127,19 @@ class PinSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 4L)
   }
 
+  test("Bench: one timed pass of a pin-heavy row leaves no persistent RDD before the guard runs") {
+    val sf = "/root/testdata/sf0.001"
+    val fn = SparkEntry.queries("graph_pagerank")
+    // the row pins: built and run outside a scope, its pins stay
+    val before = persisted()
+    assert(pinsAdded(fn(spark, sf).queryExecution.toRdd.count()) > 0)
+    (persisted() -- before).foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(true))
+    // Bench's pass frees them itself; only a timed Right comes back
+    var pass: Either[String, Double] = Left("not run")
+    assert(pinsAdded { pass = Bench.timedPass(spark, sf, fn) } == 0)
+    assert(pass.exists(_ > 0.0), pass)
+  }
+
   test("Pin.scope frees pins made on its own thread only, also when its body throws") {
     var mine: DataFrame = null
     var other: DataFrame = null
