@@ -160,9 +160,10 @@ object Bench {
   /** One timed pass of a query: build it and run its FULL physical plan
     * inside one pin scope (Verify's per-query shape), so the pins it makes,
     * an operator's prologue pins included, are freed when the pass ends.
-    * The clock stops before the scope releases them. A plain df.count()
-    * would wrap the plan in a count aggregate, letting Catalyst prune
-    * every projected column and drop the deterministic global sort;
+    * The clock stops before the scope releases them, and the release is
+    * blocking: no block removal runs into the next timed window. A plain
+    * df.count() would wrap the plan in a count aggregate, letting Catalyst
+    * prune every projected column and drop the deterministic global sort;
     * queryExecution.toRdd executes the optimized plan as written, and
     * counting its rows only adds a per-row iterator step. Left holds a
     * failed pass's message. */
@@ -170,7 +171,7 @@ object Bench {
                                fn: (SparkSession, String) => DataFrame): Either[String, Double] =
     try {
       var t = 0.0
-      Pin.scope {
+      Pin.blockingScope {
         val t0 = System.nanoTime()
         fn(spark, sfDir).queryExecution.toRdd.count()
         t = (System.nanoTime() - t0) / 1e9
@@ -253,12 +254,15 @@ object Bench {
       val fn = SparkEntry.queries(name)
       def onePass(): Either[String, Double] = {
         val out = timedPass(spark, sfDir, fn)
-        // untimed guard: the pass's pin scope has already freed what the
-        // query pinned; a pin made off the scope's thread would still
-        // squeeze execution memory under queries i+1..n. BLOCKING
-        // removal, so the cleanup cannot bleed into the next timed window
-        try spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        catch { case _: Throwable => }
+        // untimed guard: the pass's scope has already removed what the
+        // query pinned on this thread; a pin made off it would squeeze
+        // execution memory under queries i+1..n, so it is named and removed
+        // (BLOCKING, like the scope's own release)
+        val strays = spark.sparkContext.getPersistentRDDs.values
+        if (strays.nonEmpty) {
+          System.err.println(s"[bench] $name left ${strays.size} persisted RDD(s) outside its pin scope")
+          try strays.foreach(_.unpersist(true)) catch { case _: Throwable => }
+        }
         out
       }
       // metrics snapshot brackets pass 1 (pass 2 would measure the same

@@ -14,7 +14,8 @@ import org.apache.spark.sql.DataFrame
   *  - [[rounds]]: a fixed-round loop frees each round once the next one is
   *    materialized, and the pins a round's step made once that round is;
   *  - inside [[scope]]: everything pinned on the thread is freed when the
-  *    scope's body exits.
+  *    scope's body exits ([[blockingScope]]: and the blocks are gone
+  *    before it returns).
   * Convergence loops whose round count is data-dependent call [[release]]
   * on their own previous state. */
 object Pin {
@@ -36,8 +37,12 @@ object Pin {
 
   /** Drop the blocks of a frame [[apply]] returned. A frame that is not a
     * pin (a lazy plan over one, say) is left alone. */
-  def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+  def release(df: DataFrame): Unit = unpin(df, blocking = false)
+
+  /** [[release]]; `blocking` waits until every executor has removed the
+    * blocks. */
+  private def unpin(df: DataFrame, blocking: Boolean): Unit = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking)
     case _ =>
   }
 
@@ -51,7 +56,7 @@ object Pin {
     * it. */
   def rounds(init: DataFrame, n: Int)(step: (DataFrame, Int) => DataFrame): DataFrame =
     (0 until n).foldLeft(init) { (prev, r) =>
-      val next = releasing(step(prev, r))(apply)
+      val next = releasing(step(prev, r), blocking = false)(apply)
       if (r > 0) release(prev)
       next
     }
@@ -59,16 +64,21 @@ object Pin {
   /** Run `body`, then release every pin this thread made inside it, also
     * when it throws. For bodies whose results leave as side effects (a
     * micro-batch's sink writes), never for ones returning a frame. */
-  def scope(body: => Unit): Unit = releasing(body)(identity)
+  def scope(body: => Unit): Unit = releasing(body, blocking = false)(identity)
+
+  /** [[scope]] whose release waits for the block removals, so none of
+    * them runs into whatever the caller does next (the next timed pass of
+    * a benchmark, say). */
+  def blockingScope(body: => Unit): Unit = releasing(body, blocking = true)(identity)
 
   /** Run `body` with this thread's pins collected, then `finish` on its
     * result outside the collection (its pins go to the enclosing scope),
     * then release the collected pins — also when either throws. */
-  private def releasing[A, B](body: => A)(finish: A => B): B = {
+  private def releasing[A, B](body: => A, blocking: Boolean)(finish: A => B): B = {
     val outer = open.get
     val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     open.set(mine)
     try finish(try body finally open.set(outer))
-    finally mine.foreach(release)
+    finally mine.foreach(unpin(_, blocking))
   }
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * YCbCr→RGB, cross-checked against javax.imageio in both directions).
   * Each container has one decoder returning one pixel layout, the packed
   * 0xRRGGBB plane; [[decodeImageRgb]] dispatches over them, and every
-  * image op reduces that plane with [[rgbSums]] or [[grayPlane]]
-  * ([[imageStats]], [[aHash]], [[avgPool]], oracle-checked
+  * image op reduces that plane with [[rgbSums]] or the gray rule
+  * [[grayOf]] ([[imageStats]], [[aHash]], [[avgPool]], oracle-checked
   * value-exactly). Video decodes for real in two
   * containers — uncompressed Y4M and COMPRESSED MJPEG-in-AVI
   * ([[decodeAviMjpegFrames]], per-frame JFIF through the full JPEG
@@ -292,18 +292,12 @@ object Multimodal {
   }
 
   /** The gray rule of every image and video fingerprint: gray =
-    * (r+g+b)/3 truncating, over a packed plane. Gray pixels (v, v, v)
-    * map to v, so gray and color containers of one image agree. */
-  private[graft] def grayPlane(rgb: Array[Int]): Array[Int] = {
-    val gray = new Array[Int](rgb.length)
-    var i = 0
-    while (i < rgb.length) {
-      val p = rgb(i)
-      gray(i) = (((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)) / 3
-      i += 1
-    }
-    gray
-  }
+    * (r+g+b)/3 truncating, of one packed pixel. Gray pixels (v, v, v)
+    * map to v, so gray and color containers of one image agree. The
+    * fingerprints read it at their window's samples only, never over a
+    * whole plane. */
+  private[graft] def grayOf(p: Int): Int =
+    (((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)) / 3
 
   /** Perceptual average-hash (aHash) over the REAL decoded pixels: gray
     * values of the fixed top-left `winW`×`winH` window, thresholded
@@ -321,11 +315,13 @@ object Multimodal {
   case class ImageHash(media_id: Long, width: Int, height: Int,
                        ahash: Long, n_set: Long)
 
-  /** The aHash window math on a row-major gray plane: threshold the
-    * top-left `winW`×`winH` window against its truncating-integer mean,
-    * pack row-major into (hash, n_set). Shared by the image and video
-    * paths so a frame hashes exactly like the equivalent still. */
-  private def grayWindowHash(w: Int, gray: Array[Int],
+  /** The aHash window math on a row-major plane of width `w`, read
+    * through `gray` (flat pixel index → gray value) at the window's
+    * samples only: threshold the top-left `winW`×`winH` window against
+    * its truncating-integer mean, pack row-major into (hash, n_set).
+    * Shared by the image and video paths so a frame hashes exactly like
+    * the equivalent still. */
+  private def grayWindowHash(w: Int, gray: Int => Int,
                              winW: Int, winH: Int,
                              strideX: Int = 1, strideY: Int = 1): (Long, Long) = {
     var sum = 0L
@@ -368,7 +364,7 @@ object Multimodal {
           // still hash on real inter-block structure
           case (w, h, rgb) if w.toLong > (winW - 1).toLong * strideX
               && h.toLong > (winH - 1).toLong * strideY =>
-            val (hash, nSet) = grayWindowHash(w, grayPlane(rgb), winW, winH,
+            val (hash, nSet) = grayWindowHash(w, i => grayOf(rgb(i)), winW, winH,
               strideX, strideY)
             ImageHash(r.media_id, w, h, hash, nSet)
         }
@@ -394,7 +390,6 @@ object Multimodal {
       it.flatMap { r =>
         decodeImageRgb(r.payload).toSeq.collect {
           case (w, h, rgb) if w >= winW && h >= winH =>
-            val gray = grayPlane(rgb)
             for {
               by <- 0 until winH / bh
               bx <- 0 until winW / bw
@@ -404,7 +399,7 @@ object Multimodal {
               while (dy < bh) {
                 var dx = 0
                 while (dx < bw) {
-                  s += gray((by * bh + dy) * w + (bx * bw + dx))
+                  s += grayOf(rgb((by * bh + dy) * w + (bx * bw + dx)))
                   dx += 1
                 }
                 dy += 1
@@ -844,18 +839,20 @@ object Multimodal {
   case class VideoFrameHash(media_id: Long, n_frames: Int, frame_idx: Int,
                             ahash: Long, n_set: Long)
 
-  /** Container-dispatched frame decode to GRAY planes — the shared entry
-    * for every per-frame video op: Y4M parses its raw luma plane
-    * directly; AVI/MJPEG decodes each sampled JFIF frame through the
-    * full JPEG path and collapses it with the stills' [[grayPlane]], so
-    * a frame's fingerprint depends on its
-    * pixels, never on its container (the cross-container parity the
-    * image path already guarantees between BMP/PNG/JPEG stills). */
+  /** Container-dispatched frame decode to GRAY readers (flat pixel index
+    * → gray) — the shared entry for every per-frame video hash: Y4M reads
+    * its raw luma plane directly; AVI/MJPEG decodes each sampled JFIF
+    * frame through the full JPEG path and reads it through the stills'
+    * [[grayOf]], so a frame's fingerprint depends on its pixels, never
+    * on its container (the cross-container parity the image path already
+    * guarantees between BMP/PNG/JPEG stills). */
   private def decodeVideoGrayFrames(payload: Array[Byte], every: Int)
-      : Option[(Int, Int, Int, Seq[(Int, Array[Int])])] =
-    decodeY4mFrames(payload, every).orElse(
+      : Option[(Int, Int, Int, Seq[(Int, Int => Int)])] =
+    decodeY4mFrames(payload, every).map { case (w, h, n, frames) =>
+      (w, h, n, frames.map { case (idx, luma) => (idx, (i: Int) => luma(i)) })
+    }.orElse(
       decodeAviMjpegFrames(payload, every).map { case (w, h, n, frames) =>
-        (w, h, n, frames.map { case (idx, rgb) => (idx, grayPlane(rgb)) })
+        (w, h, n, frames.map { case (idx, rgb) => (idx, (i: Int) => grayOf(rgb(i))) })
       })
 
   /** Frame-sample + fingerprint: decode the video payload (Y4M or

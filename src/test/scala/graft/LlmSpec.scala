@@ -705,11 +705,11 @@ class LlmSpec extends SparkSpec {
   }
 
   // Per-format reductions composed from the one image dispatch: the
-  // decoded plane's channel sums and its gray plane.
+  // decoded plane's channel sums and its gray plane (the gray rule per pixel).
   private def sumsOf(bytes: Array[Byte]): Option[(Int, Int, Array[Long])] =
     Multimodal.decodeImageRgb(bytes).map { case (w, h, rgb) => (w, h, Multimodal.rgbSums(rgb)) }
-  private def grayOf(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-    Multimodal.decodeImageRgb(bytes).map { case (w, h, rgb) => (w, h, Multimodal.grayPlane(rgb)) }
+  private def grayPlaneOf(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
+    Multimodal.decodeImageRgb(bytes).map { case (w, h, rgb) => (w, h, rgb.map(Multimodal.grayOf)) }
 
   test("multimodal BMP codec: encode/decode round-trips exactly, incl. row padding") {
     // w=9 → 27-byte rows padded to 28: the padding path must not leak
@@ -774,7 +774,7 @@ class LlmSpec extends SparkSpec {
     assert(sums(1) == expect.map(_._2).sum.toLong)
     assert(sums(2) == expect.map(_._3).sum.toLong)
     // grayscale path: exact pixel-by-pixel reconstruction, top-down
-    val Some((gw, gh, gray)) = grayOf(png)
+    val Some((gw, gh, gray)) = grayPlaneOf(png)
     assert(gw == 9 && gh == 11)
     for (x <- 0 until 9; y <- 0 until 11) {
       val (r, g, b) = px(x, y)
@@ -820,7 +820,7 @@ class LlmSpec extends SparkSpec {
     // (v, 128, 128) with zero chroma error — the cross-format dup basis)
     def tile(x: Int, y: Int): Int =
       if (((x / 8) * 3 + (y / 8) * 5) % 2 == 0) 40 else 216
-    val Some((_, _, gray)) = grayOf(encodeJpegGray(64, 48, tile)): @unchecked
+    val Some((_, _, gray)) = grayPlaneOf(encodeJpegGray(64, 48, tile)): @unchecked
     for (y <- 0 until 48; x <- 0 until 64)
       assert(gray(y * 64 + x) == tile(x, y), s"gray pixel ($x,$y)")
     // independent-decoder cross-check on a NON-constant image: the JDK's
@@ -1019,7 +1019,7 @@ class LlmSpec extends SparkSpec {
     val expect = (for (x <- 0 until 7; y <- 0 until 11) yield px(x, y)).sum.toLong
     assert(sums(0) == expect && sums(1) == expect && sums(2) == expect,
       "grayscale must replicate into all three channels")
-    val Some((_, _, gray)) = grayOf(png)
+    val Some((_, _, gray)) = grayPlaneOf(png)
     for (x <- 0 until 7; y <- 0 until 11)
       assert(gray(y * 7 + x) == px(x, y), s"pixel ($x,$y)")
     // a grayscale PNG and a truecolor PNG of the same gray image hash equal
@@ -1123,7 +1123,7 @@ class LlmSpec extends SparkSpec {
     assert(rgbSums(one).toSeq == Seq(0, 1, 2).map(c =>
       (for (y <- 0 until h; x <- 0 until w) yield color(x, y).productElement(c)
         .asInstanceOf[Int].toLong).sum))
-    assert(grayPlane(one).toSeq == (for (y <- 0 until h; x <- 0 until w)
+    assert(one.map(grayOf).toSeq == (for (y <- 0 until h; x <- 0 until w)
       yield { val (r, g, b) = color(x, y); (r + g + b) / 3 }))
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.LocalBlocks
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -127,17 +128,37 @@ class PinSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 4L)
   }
 
-  test("Bench: one timed pass of a pin-heavy row leaves no persistent RDD before the guard runs") {
+  test("Bench: one timed pass of a pin-heavy row leaves no persistent RDD and no pinned block before the guard runs") {
+    val sc = spark.sparkContext
     val sf = "/root/testdata/sf0.001"
     val fn = SparkEntry.queries("graph_pagerank")
-    // the row pins: built and run outside a scope, its pins stay
+    // the row pins: built and run outside a scope, its pins and their
+    // blocks stay
+    val outside = sc.emptyRDD[Int].id
     val before = persisted()
     assert(pinsAdded(fn(spark, sf).queryExecution.toRdd.count()) > 0)
-    (persisted() -- before).foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(true))
-    // Bench's pass frees them itself; only a timed Right comes back
+    assert(LocalBlocks.rddIdsAbove(outside).nonEmpty)
+    (persisted() -- before).foreach(id => sc.getPersistentRDDs(id).unpersist(true))
+    // Bench's pass frees them itself, and its blocks are out of the store
+    // the moment it returns (an unpersist that is only issued leaves their
+    // removal to run during the next timed pass); a timed Right comes back
+    val mark = sc.emptyRDD[Int].id
     var pass: Either[String, Double] = Left("not run")
-    assert(pinsAdded { pass = Bench.timedPass(spark, sf, fn) } == 0)
+    var left = Set.empty[Int]
+    assert(pinsAdded { pass = Bench.timedPass(spark, sf, fn); left = LocalBlocks.rddIdsAbove(mark) } == 0)
+    assert(left.isEmpty, s"blocks of RDDs $left outlive the pass")
     assert(pass.exists(_ > 0.0), pass)
+  }
+
+  test("Pin.blockingScope: a pin's blocks are out of the store when the scope returns") {
+    val mark = spark.sparkContext.emptyRDD[Int].id
+    var pin: DataFrame = null
+    // many partitions, many blocks: an unpersist that is only issued is
+    // still removing them when the scope returns
+    Pin.blockingScope { pin = Pin(spark.range(0, 20000, 1, 400).toDF()) }
+    val left = LocalBlocks.rddIdsAbove(mark)
+    assert(left.isEmpty, s"blocks of RDDs $left outlive the scope")
+    assert(!persisted().contains(rddId(pin)))
   }
 
   test("Pin.scope frees pins made on its own thread only, also when its body throws") {
